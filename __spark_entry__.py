@@ -19,18 +19,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from blueprint_oss_spark.fixtures import ALL_CORPORA
 from blueprint_oss_spark.spark.pipeline import (
-    SPANS_SCHEMA, extract_documents, spans_from_documents,
+    extract_documents, spans_frame, spans_from_documents,
 )
 
 
 def _fixture_spans_df(spark: SparkSession, corpus: str, n_docs: int):
   corpus_fn, bp_fn = ALL_CORPORA[corpus]
-  docs = corpus_fn(n_docs)
-  rows = [(doc_id,
-           [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-            for (k, t, m, o) in spans])
-          for doc_id, spans in docs]
-  return spark.createDataFrame(rows, SPANS_SCHEMA), bp_fn()
+  return spans_frame(spark, corpus_fn(n_docs)), bp_fn()
 
 
 def _n_docs_for(sf_dir: str, base: int = 400) -> int:
@@ -80,42 +75,24 @@ def entry(spark: SparkSession) -> DataFrame:
                   'score', 'n_entities', 'n_words', 'error'))
 
 
-def _bp_extract_paystubs(spark: SparkSession, sf_dir: str) -> DataFrame:
-  """Flagship model (5 vendor templates + long tail + business rules)
-  over the paystub fixture corpus."""
-  from blueprint_oss_spark.bp_examples.paystub_fixtures import \
-      paystub_corpus
-  from blueprint_oss_spark.bp_examples.paystubs import root
-  docs = paystub_corpus(max(30, _n_docs_for(sf_dir, base=120)))
-  rows = [(doc_id,
-           [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-            for (k, t, m, o) in spans])
-          for doc_id, spans in docs]
-  df = spark.createDataFrame(rows, SPANS_SCHEMA)
-  out = extract_documents(df, root)
-  return out.select(
-      'doc_id', F.to_json('fields').alias('fields_json'),
-      F.round('score', 9).alias('score'), 'n_entities', 'n_words') \
-      .orderBy('doc_id')
-
-
-def _bp_extract_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-  """The checks example model (custom-predicate showcase: pixel page
-  regions, empty-line-above impingement, string disjointness) over the
-  synthesized check corpus."""
-  from blueprint_oss_spark.bp_examples.check_fixtures import check_corpus
-  from blueprint_oss_spark.bp_examples.checks import root
-  docs = check_corpus(max(30, _n_docs_for(sf_dir, base=120)))
-  rows = [(doc_id,
-           [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-            for (k, t, m, o) in spans])
-          for doc_id, spans in docs]
-  df = spark.createDataFrame(rows, SPANS_SCHEMA)
-  out = extract_documents(df, root)
-  return out.select(
-      'doc_id', F.to_json('fields').alias('fields_json'),
-      F.round('score', 9).alias('score'), 'n_entities', 'n_words') \
-      .orderBy('doc_id')
+def _bp_extract_example(fixtures: str, corpus: str, model: str):
+  """An example model (`root` of bp_examples/<model>.py) over its
+  synthesized corpus (bp_examples/<fixtures>.py `<corpus>`): the
+  flagship paystubs model (5 vendor templates + long tail + business
+  rules) or the checks model (custom-predicate showcase: pixel page
+  regions, empty-line-above impingement, string disjointness)."""
+  def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from importlib import import_module
+    pkg = 'blueprint_oss_spark.bp_examples.'
+    corpus_fn = getattr(import_module(pkg + fixtures), corpus)
+    root = import_module(pkg + model).root
+    docs = corpus_fn(max(30, _n_docs_for(sf_dir, base=120)))
+    out = extract_documents(spans_frame(spark, docs), root)
+    return out.select(
+        'doc_id', F.to_json('fields').alias('fields_json'),
+        F.round('score', 9).alias('score'), 'n_entities', 'n_words') \
+        .orderBy('doc_id')
+  return run
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -157,8 +134,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       'bp_extract_table': _bp_extract('table'),
       'bp_extract_multipage': _bp_extract('multipage'),
       'bp_extract_adversarial': _bp_extract('adversarial'),
-      'bp_extract_paystubs': _bp_extract_paystubs,
-      'bp_extract_checks': _bp_extract_checks,
+      'bp_extract_paystubs': _bp_extract_example(
+          'paystub_fixtures', 'paystub_corpus', 'paystubs'),
+      'bp_extract_checks': _bp_extract_example(
+          'check_fixtures', 'check_corpus', 'checks'),
       # --- labeled-accuracy scoring over extraction output (targets
       # format; snapshot verified by independent python recomputation,
       # see scripts/build_oracles.py) ---

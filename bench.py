@@ -58,7 +58,7 @@ def main() -> None:
 
   from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
   from blueprint_oss_spark.spark.pipeline import (
-      SPANS_SCHEMA, extract_documents)
+      extract_documents, spans_frame)
   from blueprint_oss_spark.ops import curation as C
   from blueprint_oss_spark.ops import graph as G
   from blueprint_oss_spark.ops import relational as R
@@ -86,65 +86,31 @@ def main() -> None:
     medians[name] = round(samples[len(samples) // 2], 4)
     return samples[0]
 
-  # --- extraction benchmark -------------------------------------------
-  n_docs = max(400, int(40000 * sf))
-  docs = readme_corpus(n_docs, seed=4242)
-  rows = [(doc_id,
-           [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-            for (k, t, m, o) in spans])
-          for doc_id, spans in docs]
-  df = spark.createDataFrame(rows, SPANS_SCHEMA) \
-      .repartition(int(cpus)).cache()
-  df.count()  # materialize input outside the timed section
-  root = readme_blueprint()
-
-  # Warmup: fork + import python workers, JIT whole-stage codegen.
-  n_out = extract_documents(df, root).count()
-
-  extract_sec = timed('extraction',
-                      lambda: extract_documents(df, root).count())
-  docs_per_sec = n_out / extract_sec if extract_sec > 0 else 0.0
-  df.unpersist()
-
-  # Flagship-model benchmark: the full paystubs blueprint (5 vendor
-  # templates + long tail + business rules) over paystub-style docs.
-  from blueprint_oss_spark.bp_examples.paystub_fixtures import \
-      paystub_corpus
-  from blueprint_oss_spark.bp_examples.paystubs import root as stub_root
-  n_stubs = max(100, int(10000 * sf))
-  stub_docs = paystub_corpus(n_stubs, seed=77)
-  stub_rows = [(doc_id,
-                [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                 for (k, t, m, o) in spans])
-               for doc_id, spans in stub_docs]
-  sdf = spark.createDataFrame(stub_rows, SPANS_SCHEMA) \
-      .repartition(int(cpus)).cache()
-  sdf.count()
-  n_stub_out = extract_documents(sdf, stub_root).count()  # warmup
-  stub_sec = timed('extraction_paystubs',
-                   lambda: extract_documents(sdf, stub_root).count())
-  stub_docs_per_sec = n_stub_out / stub_sec if stub_sec > 0 else 0.0
-  sdf.unpersist()
-
-  # Checks-model benchmark: the custom-predicate showcase (pixel page
-  # regions, empty-line-above impingement, string disjointness) over
-  # synthesized check documents.
-  from blueprint_oss_spark.bp_examples.check_fixtures import check_corpus
-  from blueprint_oss_spark.bp_examples.checks import root as checks_root
-  n_checks = max(100, int(5000 * sf))
-  chk_docs = check_corpus(n_checks, seed=91)
-  chk_rows = [(doc_id,
-               [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                for (k, t, m, o) in spans])
-              for doc_id, spans in chk_docs]
-  cdf = spark.createDataFrame(chk_rows, SPANS_SCHEMA) \
-      .repartition(int(cpus)).cache()
-  cdf.count()
-  n_chk_out = extract_documents(cdf, checks_root).count()  # warmup
-  chk_sec = timed('extraction_checks',
-                  lambda: extract_documents(cdf, checks_root).count())
-  chk_docs_per_sec = n_chk_out / chk_sec if chk_sec > 0 else 0.0
-  cdf.unpersist()
+  # --- extraction benchmarks -----------------------------------------
+  # readme; the flagship paystubs model (5 vendor templates + long tail
+  # + business rules); the checks model (custom-predicate showcase:
+  # pixel page regions, empty-line-above impingement, string
+  # disjointness) — each over its synthesized interleaved-spans corpus.
+  from blueprint_oss_spark.bp_examples import (
+      check_fixtures, checks, paystub_fixtures, paystubs)
+  extraction_stats: dict = {}
+  for name, key, corpus, n_docs, seed, root in (
+      ('extraction', 'extraction', readme_corpus,
+       max(400, int(40000 * sf)), 4242, readme_blueprint()),
+      ('extraction_paystubs', 'paystubs', paystub_fixtures.paystub_corpus,
+       max(100, int(10000 * sf)), 77, paystubs.root),
+      ('extraction_checks', 'checks', check_fixtures.check_corpus,
+       max(100, int(5000 * sf)), 91, checks.root)):
+    df = spans_frame(spark, corpus(n_docs, seed=seed)) \
+        .repartition(int(cpus)).cache()
+    df.count()  # materialize input outside the timed section
+    # Warmup: fork + import python workers, JIT whole-stage codegen.
+    n_out = extract_documents(df, root).count()
+    sec = timed(name, lambda: extract_documents(df, root).count())
+    extraction_stats[f'{key}_docs_per_sec'] = \
+        round(n_out / sec if sec > 0 else 0.0, 2)
+    extraction_stats[f'{key}_docs'] = n_out
+    df.unpersist()
 
   # Main-content pipeline benchmark (the north rule's own workload):
   # interleaved HTML+PDF+media spans -> boilerplate strip / layout
@@ -348,12 +314,7 @@ def main() -> None:
       'steady_range_sec': STEADY_RANGES,
       'timing_semantics': TIMING_SEMANTICS,
       'sf': sf,
-      'extraction_docs_per_sec': round(docs_per_sec, 2),
-      'extraction_docs': n_out,
-      'paystubs_docs_per_sec': round(stub_docs_per_sec, 2),
-      'paystubs_docs': n_stub_out,
-      'checks_docs_per_sec': round(chk_docs_per_sec, 2),
-      'checks_docs': n_chk_out,
+      **extraction_stats,
       'main_content_docs_per_sec': round(mc_docs_per_sec, 2),
       'main_content_docs': n_mc,
       'cpus': int(cpus),

@@ -1,8 +1,11 @@
 """CLI: run blueprint extraction jobs from the command line.
 
 Mirrors the reference CLI surface (bp/cli/cli_main.py run_model) but
-Spark-first: the document set is a spans parquet table or a directory of
-OCR files, and execution is the bulk pipeline.
+Spark-first: the document set is a spans parquet table or a glob of
+OCR / PDF / doc-JSON files, and execution is the bulk pipeline.  Both
+inputs run the same resumable job: part_bucket-partitioned output,
+per-group lineage under <output>/_lineage, and the --timeout
+per-document budget.
 
 Examples:
   python -m blueprint_oss_spark run_model \
@@ -191,38 +194,23 @@ def main(argv=None) -> int:
 
   if args.cmd == 'run_main_content':
     from .ops.html_extract import main_content_from_spans
-    lineage = run_extraction_job(
-        spark, spark.read.parquet(args.input), args.output,
-        transform=main_content_from_spans,
-        buckets=args.buckets, groups=args.groups,
-        resume=not args.no_resume)
-    print(json.dumps({'groups_processed': len(lineage),
-                      'output': args.output}))
-    spark.stop()
-    return 0
-
-  from .model.json_io import load_model
-  from .spark.sources import (
-      extract_from_doc_json_files, extract_from_ocr_files)
-
-  root = load_model(args.model)
-
-  if args.ocr_format:
-    if args.ocr_format == 'docjson':
-      out = extract_from_doc_json_files(spark, args.input, root)
-    else:
-      out = extract_from_ocr_files(spark, args.input, root,
-                                   ocr_format=args.ocr_format)
-    out.write.mode('overwrite').parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(json.dumps({'docs': n, 'output': args.output}))
+    input_df, root = spark.read.parquet(args.input), None
+    job_kwargs = {'transform': main_content_from_spans}
   else:
-    lineage = run_extraction_job(
-        spark, spark.read.parquet(args.input), args.output, root,
-        buckets=args.buckets, groups=args.groups,
-        resume=not args.no_resume, doc_time_budget_s=args.timeout)
-    print(json.dumps({'groups_processed': len(lineage),
-                      'output': args.output}))
+    from .model.json_io import load_model
+    from .spark.sources import read_files
+    input_df = (read_files(spark, args.input) if args.ocr_format
+                else spark.read.parquet(args.input))
+    root = load_model(args.model)
+    job_kwargs = {'ocr_format': args.ocr_format,
+                  'doc_time_budget_s': args.timeout}
+
+  lineage = run_extraction_job(
+      spark, input_df, args.output, root,
+      buckets=args.buckets, groups=args.groups,
+      resume=not args.no_resume, **job_kwargs)
+  print(json.dumps({'groups_processed': len(lineage),
+                    'output': args.output}))
   spark.stop()
   return 0
 

@@ -203,13 +203,6 @@ def edit_distance(s1: str, s2: str) -> int:
   return prev[len(s2)]
 
 
-def relative_edit_distance(s1: str, s2: str) -> float:
-  """reference: bp/string_algos.py:44-54."""
-  if not s1 and not s2:
-    return 0.0
-  return edit_distance(s1, s2) / max(len(s1), len(s2))
-
-
 def edit_distance_capped(s1: str, s2: str, cap: int) -> int:
   """min(edit_distance(s1, s2), cap) — EXACT below the cap.
 

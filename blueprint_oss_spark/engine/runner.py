@@ -118,10 +118,17 @@ def run_doc(doc_id: str,
             root: Node, pre_optimized: bool = False) -> dict:
   """Run one document end-to-end: spans → entity pool → solve → canonical
   output rows."""
-  pages = spans_to_pages(spans)
-  pool = build_doc_pool(doc_id, pages)
-  assign, field_scores, score = best_extraction(root, pool,
-                                                pre_optimized)
+  pool = build_doc_pool(doc_id, spans_to_pages(spans))
+  return extract_pool(doc_id, pool, spans, root, pre_optimized)
+
+
+def extract_pool(doc_id: str, pool: DocPool,
+                 spans: Sequence[Tuple[str, str, str, int]],
+                 root: Node, pre_optimized: bool = False) -> dict:
+  """Solve a built entity pool and assemble the canonical output rows.
+  `spans` supplies the media spans that pass through (empty for
+  documents loaded from OCR / PDF / doc-JSON files)."""
+  assign, _, score = best_extraction(root, pool, pre_optimized)
   fields_to_text = {f: pool.etext[e] for f, e in assign.items()}
   return {
       'doc_id': doc_id,

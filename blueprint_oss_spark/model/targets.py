@@ -107,10 +107,6 @@ def schema_type_map(schema: Tuple[Entry, ...]) -> Dict[str, str]:
   return {e.field: e.type for e in schema}
 
 
-def get_labels_from_schema(schema: Tuple[Entry, ...]) -> Tuple[str, ...]:
-  return tuple(e.field for e in schema if e.is_label)
-
-
 # ---------------------------------------------------------------------------
 # JSON (reference bp/targets.py format — bbox as {ix:{a,b},iy:{a,b}})
 # ---------------------------------------------------------------------------
@@ -224,11 +220,6 @@ def validate(targets: Targets, silent: bool = True) -> Targets:
             f'unrecognized doc tag {tag} in output config slice '
             f'{slice_name}')
   return targets
-
-
-def load_targets(path: str, silent: bool = True) -> Targets:
-  with open(path) as f:
-    return load_targets_from_json(json.load(f), silent)
 
 
 def save_targets(targets: Targets, path: str) -> None:

@@ -665,20 +665,6 @@ def extract_media_features(media: DataFrame, *,
   return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def join_media_features_to_spans(spans_df: DataFrame,
-                                 features: DataFrame) -> DataFrame:
-  """Attach media features to the media spans of an interleaved document
-  table (explode → broadcast/bucketed join → regroup)."""
-  exploded = (spans_df
-              .select('doc_id', F.explode('spans').alias('s'))
-              .where(F.col('s.kind') == 'media'))
-  return (exploded
-          .join(features, exploded['s.media_ref'] == features.media_ref,
-                'left')
-          .select('doc_id', F.col('s.media_ref').alias('media_ref'),
-                  'feature', 'decode_status'))
-
-
 def interleaved_near_dup(spark: SparkSession, sf_dir: str, *,
                          jaccard_threshold: float = 0.8,
                          shingle: int = 3,

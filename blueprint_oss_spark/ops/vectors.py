@@ -91,19 +91,6 @@ def _banded_bucket_cols(vec, n_planes: int, bands: int):
   return cols
 
 
-def ann_lsh_buckets(spark: SparkSession, sf_dir: str, *,
-                    n_planes: int = 8) -> DataFrame:
-  """Sign-LSH bucketing: deterministic pseudo-random hyperplanes from
-  xxhash64(dim, seed) weights; bucket = sign bits packed to a long.
-  Neighbour candidates = same-bucket vectors; at scale the bucket id is
-  the shuffle/bucketing key and queries only probe matching buckets."""
-  e = _emb(spark, sf_dir)
-  vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
-  (bucket,) = _banded_bucket_cols(vec, n_planes, 1)
-  return (e.select('vec_id', 'label', bucket.alias('bucket'))
-          .orderBy('vec_id'))
-
-
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
                              threshold: float = 0.9,
                              n_planes: int = 12, bands: int = 3,

@@ -1,5 +1,4 @@
-"""The Spark pipeline: bulk blueprint extraction over interleaved-span
-document tables.
+"""The Spark pipeline: bulk blueprint extraction over document tables.
 
 Shape of the job (SURVEY.md §7):
 
@@ -16,6 +15,17 @@ size-bucketed repartition for pathological span-count distributions,
 (c) per-document time/size budgets mirroring the reference's 45 s CLI
 timeout (bp/cli/run_model.py:32) — a doc over budget produces an `error`
 row instead of stalling an executor core.
+
+One per-document kernel (`_extraction_kernel`) owns the broadcast tree,
+the deadline, the error classes and `elapsed_ms` for every input; two
+thin adapters turn an input row into an engine/runner result:
+  * `_solve_spans` — (doc_id, spans) rows: per-span validation, then
+    runner.run_doc;
+  * `_solve_file` — (doc_id, content) rows from sources.read_files
+    (`ocr_format=` google / ibocr / hocr / pdf / docjson): the format's
+    entity pool (sources.POOL_BUILDERS), then runner.extract_pool.
+Both run through `run_extraction_job`, so file inputs get the same
+lineage, resume and time budget as spans input.
 """
 
 from __future__ import annotations
@@ -33,8 +43,9 @@ from pyspark.sql.types import (
 )
 
 from ..model.nodes import Node, optimize_rule_distribution
-from ..engine.runner import run_doc
+from ..engine.runner import extract_pool, run_doc
 from ..engine import solver as solver_mod
+from .sources import POOL_BUILDERS
 
 SPAN_STRUCT = StructType([
     StructField('kind', StringType()),
@@ -47,6 +58,16 @@ SPANS_SCHEMA = StructType([
     StructField('doc_id', StringType()),
     StructField('spans', ArrayType(SPAN_STRUCT)),
 ])
+
+
+def spans_frame(spark: SparkSession, docs) -> DataFrame:
+  """(doc_id, [(kind, text, media_ref, offset), ...]) pairs — the
+  fixture corpora's shape — as a SPANS_SCHEMA DataFrame."""
+  return spark.createDataFrame(
+      [(doc_id, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
+                 for (k, t, m, o) in spans])
+       for doc_id, spans in docs], SPANS_SCHEMA)
+
 
 OUT_SPAN_STRUCT = StructType([
     StructField('kind', StringType()),
@@ -101,41 +122,60 @@ def tree_from_payload(payload: bytes) -> Node:
   return tree
 
 
-def extract_documents(df: DataFrame, root: Node, *,
-                      doc_time_budget_s: float = 45.0,
-                      max_spans_per_doc: int = 200_000,
-                      size_bucketed_repartition: bool = False,
-                      num_partitions: Optional[int] = None) -> DataFrame:
-  """Bulk extraction: (doc_id, spans) → OUTPUT_SCHEMA rows.
+def _solve_spans(max_spans_per_doc: int):
+  """Spans adapter: a (doc_id, spans) row → runner.run_doc."""
+  def solve(doc_id: str, spans, tree: Node) -> dict:
+    # Malformed-row containment: at 10^12 docs a single null spans
+    # array / null struct field must yield an error ROW, never an
+    # executor task failure that kills the whole job.
+    if spans is None or isinstance(spans, float):
+      raise _MalformedDoc('null spans array')
+    if len(spans) > max_spans_per_doc:
+      raise solver_mod.SolverBudgetError(
+          f'{len(spans)} spans exceeds max_spans_per_doc')
+    span_rows = []
+    for s in spans:
+      if s is None or s['kind'] is None or s['offset'] is None:
+        raise _MalformedDoc(f'null span struct/kind/offset: {s}')
+      # null text / media_ref are normal at scale (media spans carry
+      # no text; text spans no media) — normalize to ''
+      span_rows.append((s['kind'], s['text'] or '',
+                        s['media_ref'] or '', int(s['offset'])))
+    return run_doc(doc_id, span_rows, tree, pre_optimized=True)
+  return solve
 
-  Args:
-    df: DataFrame with SPANS_SCHEMA columns.
-    root: blueprint tree (un-optimized; compiled here and broadcast).
-    doc_time_budget_s: per-document wall budget (reference default 45 s).
-    max_spans_per_doc: guard against pathological documents.
-    size_bucketed_repartition: opt-in shuffle that spreads documents by
-      (log2 span count, random salt) so heavy-tailed corpora don't
-      straggle single partitions.  Costs one shuffle — leave off unless
-      the input layout is known-skewed.
-  """
-  spark = df.sparkSession
-  payload = compile_blueprint(root)
-  bc = spark.sparkContext.broadcast(payload)
 
-  if size_bucketed_repartition:
-    n = num_partitions or spark.sparkContext.defaultParallelism * 4
-    df = (df
-          .withColumn('_sz', F.log2(F.size('spans') + F.lit(2)).cast('int'))
-          .withColumn('_salt', (F.rand(seed=42) * 1024).cast('int'))
-          .repartition(n, F.col('_sz'), F.col('_salt'))
-          .drop('_sz', '_salt'))
+def _solve_file(ocr_format: str):
+  """File adapter: a (doc_id, content) row → format's entity pool →
+  runner.extract_pool.  A file the format's loader cannot read is a
+  malformed document."""
+  build_pool = POOL_BUILDERS[ocr_format]
+
+  def solve(doc_id: str, content, tree: Node) -> dict:
+    try:
+      pool = build_pool(doc_id, bytes(content))
+    except Exception as e:  # noqa: BLE001 — any loader failure
+      raise _MalformedDoc(f'{type(e).__name__}: {e}') from e
+    return extract_pool(doc_id, pool, (), tree, pre_optimized=True)
+  return solve
+
+
+def _extraction_kernel(bc, value_col: str, solve,
+                       doc_time_budget_s: float):
+  """The per-document kernel behind every extraction input: one
+  OUTPUT_SCHEMA row per (doc_id, value_col) input row, under a
+  per-document deadline, with failures contained as error rows of
+  four classes (`budget: …` / `timeout` / `malformed: …` /
+  `error: <Type>: …`).  `solve(doc_id, value, tree)` is the input
+  adapter; it returns the engine/runner result dict."""
+  columns = [f.name for f in OUTPUT_SCHEMA]
 
   def run_batches(batches: Iterator[pd.DataFrame]) \
       -> Iterator[pd.DataFrame]:
     tree = tree_from_payload(bc.value)
     for pdf in batches:
       out: List[dict] = []
-      for doc_id, spans in zip(pdf['doc_id'], pdf['spans']):
+      for doc_id, value in zip(pdf['doc_id'], pdf[value_col]):
         t0 = time.monotonic()
         row = {
             'doc_id': doc_id, 'out_spans': [], 'fields': {},
@@ -143,26 +183,10 @@ def extract_documents(df: DataFrame, root: Node, *,
             'elapsed_ms': 0.0,
         }
         try:
-          # Malformed-row containment: at 10^12 docs a single null
-          # spans array / null struct field must yield an error ROW,
-          # never an executor task failure that kills the whole job.
           if doc_id is None:
             raise _MalformedDoc('null doc_id')
-          if spans is None or isinstance(spans, float):
-            raise _MalformedDoc('null spans array')
-          if len(spans) > max_spans_per_doc:
-            raise solver_mod.SolverBudgetError(
-                f'{len(spans)} spans exceeds max_spans_per_doc')
           solver_mod.set_deadline(t0 + doc_time_budget_s)
-          span_rows = []
-          for s in spans:
-            if s is None or s['kind'] is None or s['offset'] is None:
-              raise _MalformedDoc(f'null span struct/kind/offset: {s}')
-            # null text / media_ref are normal at scale (media spans
-            # carry no text; text spans no media) — normalize to ''
-            span_rows.append((s['kind'], s['text'] or '',
-                              s['media_ref'] or '', int(s['offset'])))
-          r = run_doc(str(doc_id), span_rows, tree, pre_optimized=True)
+          r = solve(str(doc_id), value, tree)
           row.update(
               out_spans=[{'kind': k, 'text': t, 'media_ref': m,
                           'order': o} for (k, t, m, o) in r['out_spans']],
@@ -183,9 +207,53 @@ def extract_documents(df: DataFrame, root: Node, *,
           solver_mod.set_deadline(None)
         row['elapsed_ms'] = (time.monotonic() - t0) * 1000.0
         out.append(row)
-      yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA])
+      yield pd.DataFrame(out, columns=columns)
+  return run_batches
 
-  return df.mapInPandas(run_batches, OUTPUT_SCHEMA)
+
+def extract_documents(df: DataFrame, root: Node, *,
+                      ocr_format: Optional[str] = None,
+                      doc_time_budget_s: float = 45.0,
+                      max_spans_per_doc: int = 200_000,
+                      size_bucketed_repartition: bool = False,
+                      num_partitions: Optional[int] = None) -> DataFrame:
+  """Bulk extraction: one OUTPUT_SCHEMA row per input document.
+
+  Args:
+    df: DataFrame with SPANS_SCHEMA columns, or with (doc_id, content)
+      file rows (sources.read_files) when `ocr_format` is set.
+    root: blueprint tree (un-optimized; compiled here and broadcast).
+    ocr_format: None for spans input; else the files' format, one of
+      sources.POOL_BUILDERS (google / ibocr / hocr / pdf / docjson).
+    doc_time_budget_s: per-document wall budget (reference default 45 s).
+    max_spans_per_doc: guard against pathological span documents.
+    size_bucketed_repartition: opt-in shuffle that spreads documents by
+      (log2 span count or file bytes, random salt) so heavy-tailed
+      corpora don't straggle single partitions.  Costs one shuffle —
+      leave off unless the input layout is known-skewed.
+  """
+  spark = df.sparkSession
+  payload = compile_blueprint(root)
+  bc = spark.sparkContext.broadcast(payload)
+
+  if ocr_format is None:
+    value_col, size = 'spans', F.size('spans')
+    solve = _solve_spans(max_spans_per_doc)
+  else:
+    value_col, size = 'content', F.length('content')
+    solve = _solve_file(ocr_format)
+
+  if size_bucketed_repartition:
+    n = num_partitions or spark.sparkContext.defaultParallelism * 4
+    df = (df
+          .withColumn('_sz', F.log2(size + F.lit(2)).cast('int'))
+          .withColumn('_salt', (F.rand(seed=42) * 1024).cast('int'))
+          .repartition(n, F.col('_sz'), F.col('_salt'))
+          .drop('_sz', '_salt'))
+
+  return df.mapInPandas(
+      _extraction_kernel(bc, value_col, solve, doc_time_budget_s),
+      OUTPUT_SCHEMA)
 
 
 def spans_from_documents(docs: DataFrame, words_per_line: int = 8,

@@ -1,6 +1,7 @@
 """OCR source loaders: Google Cloud Vision JSON, IBOCR JSON, hOCR → the
-engine's page/word structure, plus Spark readers that fan extraction out
-over OCR file collections.
+engine's page/word structure, the file format → entity pool table
+(`POOL_BUILDERS`, adding PDF and reference doc JSON), and the
+binaryFile reader that turns a file collection into extraction input.
 
 Semantics mirror the reference loaders:
   Google Vision  bp/google_ocr_file.py:16-59 (blocks→paragraphs→words,
@@ -19,9 +20,11 @@ from __future__ import annotations
 import json
 import re
 from itertools import chain
-from typing import Any, Dict, Iterator, List, Optional
+from typing import Any, Dict, List, Optional
 
-import pandas as pd
+from ..engine.doc_json import pool_from_doc_json
+from ..engine.docmodel import DocPool
+from ..engine.entity_gen import build_doc_pool
 
 
 def parse_google_ocr(raw: Dict[str, Any]) -> List[dict]:
@@ -170,73 +173,29 @@ PARSERS = {
 }
 
 
-def extract_from_ocr_files(spark, path_glob: str, root, *,
-                           ocr_format: str = 'google'):
-  """Bulk extraction over a collection of OCR files: binaryFile scan →
-  mapInPandas(parse + solve).  Same zero-shuffle shape as the spans
-  pipeline; the `content` column stays inside Arrow buffers until the
-  parse call."""
-  parser = PARSERS[ocr_format]
-
-  def pool_builder(doc_id: str, content: bytes):
-    from ..engine.entity_gen import build_doc_pool
-    return build_doc_pool(doc_id, parser(content))
-
-  return _extract_files(spark, path_glob, root, pool_builder)
+def _pool_from_pages(parse):
+  def build(doc_id: str, content: bytes) -> DocPool:
+    return build_doc_pool(doc_id, parse(content))
+  return build
 
 
-def extract_from_doc_json_files(spark, path_glob: str, root):
-  """Bulk extraction over reference-format Document JSON files
-  (bp/document.py:188-207 round-trip format): binaryFile scan →
-  mapInPandas(load pool + solve), zero-shuffle."""
-
-  def pool_builder(doc_id: str, content: bytes):
-    from ..engine.doc_json import pool_from_doc_json
-    pool = pool_from_doc_json(json.loads(content.decode('utf-8')))
-    pool.name = doc_id
-    return pool
-
-  return _extract_files(spark, path_glob, root, pool_builder)
+def _pool_from_doc_json(doc_id: str, content: bytes) -> DocPool:
+  pool = pool_from_doc_json(json.loads(content.decode('utf-8')))
+  pool.name = doc_id
+  return pool
 
 
-def _extract_files(spark, path_glob: str, root, pool_builder):
-  import pickle
+# file format → (doc_id, file bytes) → entity pool
+POOL_BUILDERS = {fmt: _pool_from_pages(parse)
+                 for fmt, parse in PARSERS.items()}
+POOL_BUILDERS['docjson'] = _pool_from_doc_json
 
-  from .pipeline import OUTPUT_SCHEMA, compile_blueprint
 
-  payload = compile_blueprint(root)
-  bc = spark.sparkContext.broadcast(payload)
-
-  df = (spark.read.format('binaryFile').load(path_glob)
-        .select('path', 'content'))
-
-  def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..engine.solver import best_extraction
-    from .pipeline import tree_from_payload
-    tree = tree_from_payload(bc.value)
-    for pdf in batches:
-      rows = []
-      for path, content in zip(pdf['path'], pdf['content']):
-        import time as _time
-        t0 = _time.monotonic()
-        doc_id = path.rsplit('/', 1)[-1]
-        row = {'doc_id': doc_id, 'out_spans': [], 'fields': {},
-               'score': 0.0, 'n_entities': 0, 'n_words': 0,
-               'error': None, 'elapsed_ms': 0.0}
-        try:
-          pool = pool_builder(doc_id, bytes(content))
-          assign, _, score = best_extraction(tree, pool)
-          fields = {f: pool.etext[e] for f, e in assign.items()}
-          row.update(
-              out_spans=[{'kind': 'text', 'text': fields[f],
-                          'media_ref': '', 'order': i}
-                         for i, f in enumerate(sorted(fields))],
-              fields=fields, score=float(score),
-              n_entities=pool.n_entities, n_words=pool.n_words)
-        except Exception as e:  # noqa: BLE001 — per-doc isolation
-          row['error'] = f'{type(e).__name__}: {e}'
-        row['elapsed_ms'] = (_time.monotonic() - t0) * 1000.0
-        rows.append(row)
-      yield pd.DataFrame(rows, columns=[f.name for f in OUTPUT_SCHEMA])
-
-  return df.mapInPandas(run, OUTPUT_SCHEMA)
+def read_files(spark, path_glob: str):
+  """binaryFile scan → (doc_id, content) rows, one per file; doc_id is
+  the file name.  Feed it to extract_documents / run_extraction_job
+  with the matching ocr_format."""
+  from pyspark.sql import functions as F
+  return (spark.read.format('binaryFile').load(path_glob)
+          .select(F.substring_index('path', '/', -1).alias('doc_id'),
+                  'content'))

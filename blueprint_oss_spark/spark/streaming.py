@@ -51,20 +51,13 @@ def read_span_stream(spark: SparkSession, input_dir: str,
           .parquet(input_dir))
 
 
-def extract_documents_stream(stream_df: DataFrame, root: Node,
-                             **kwargs) -> DataFrame:
-  """Streaming extraction — identical semantics to the batch pipeline;
-  mapInPandas is stateless so it is streaming-safe."""
-  return extract_documents(stream_df, root, **kwargs)
-
-
 def start_extraction_stream(spark: SparkSession, input_dir: str,
                             output_dir: str, checkpoint_dir: str,
                             root: Node, *,
                             trigger_once: bool = False) -> StreamingQuery:
   """readStream → extract → writeStream(parquet) with checkpointing.
   Restarting with the same checkpoint resumes exactly-once."""
-  out = extract_documents_stream(read_span_stream(spark, input_dir), root)
+  out = extract_documents(read_span_stream(spark, input_dir), root)
   writer = (out.writeStream
             .format('parquet')
             .option('path', output_dir)
@@ -424,28 +417,6 @@ def sessionized_doc_activity(out_stream: DataFrame, *,
                .alias('errors')))
 
 
-def start_main_content_stream(spark: SparkSession, input_dir: str,
-                              output_dir: str, checkpoint_dir: str, *,
-                              trigger_once: bool = False
-                              ) -> StreamingQuery:
-  """Streaming main-content extraction (north-rule pipeline as a
-  continuous job): readStream over interleaved spans files →
-  main_content_from_spans (stateless mapInPandas, streaming-safe) →
-  checkpointed parquet sink.  Restarting with the same checkpoint
-  resumes exactly-once, the streaming twin of run_extraction_job's
-  batch lineage."""
-  from ..ops.html_extract import main_content_from_spans
-  out = main_content_from_spans(read_span_stream(spark, input_dir))
-  writer = (out.writeStream
-            .format('parquet')
-            .option('path', output_dir)
-            .option('checkpointLocation', checkpoint_dir)
-            .outputMode('append'))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
-
-
 def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
                                    corpus: DataFrame, output_dir: str,
                                    checkpoint_dir: str, *,
@@ -511,12 +482,9 @@ def start_main_content_stream(spark: SparkSession, input_dir: str,
 
   `trigger_once` (availableNow) drains the current backlog and stops
   — the batch-job-with-streaming-checkpoints operating mode."""
-  from blueprint_oss_spark.ops.html_extract import main_content_from_spans
-  src = (spark.readStream
-         .schema(SPANS_SCHEMA)
-         .option('maxFilesPerTrigger', max_files_per_trigger)
-         .parquet(input_dir))
-  out = main_content_from_spans(src)
+  from ..ops.html_extract import main_content_from_spans
+  out = main_content_from_spans(
+      read_span_stream(spark, input_dir, max_files_per_trigger))
   writer = (out.writeStream
             .format('parquet')
             .option('path', output_dir)
@@ -548,10 +516,7 @@ def start_validation_stream(spark: SparkSession, input_dir: str,
   two consumers and unpersisted after both writes (each batch is
   file-sized, not corpus-sized)."""
   from ..ops.ingest import validation_reason_expr
-  src = (spark.readStream
-         .schema(SPANS_SCHEMA)
-         .option('maxFilesPerTrigger', max_files_per_trigger)
-         .parquet(input_dir))
+  src = read_span_stream(spark, input_dir, max_files_per_trigger)
 
   def _split(batch_df: DataFrame, batch_id: int) -> None:
     judged = batch_df.withColumn('reason', validation_reason_expr()) \

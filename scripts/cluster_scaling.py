@@ -55,8 +55,8 @@ for _ in range(120):
         break
     time.sleep(0.5)
 cores = spark.sparkContext.defaultParallelism
-from blueprint_oss_spark.spark.pipeline import SPANS_SCHEMA, \
-    extract_documents
+from blueprint_oss_spark.spark.pipeline import extract_documents, \
+    spans_frame
 # Fixed fine-grained partition count at BOTH cluster sizes (not
 # cores*2): with only 2 waves of coarse tasks, cached-block locality
 # pins tasks to whichever executor won more blocks during
@@ -492,10 +492,7 @@ else:
             readme_corpus
         docs = readme_corpus(n_docs, seed=999)
         root = readme_blueprint()
-    rows = [(d, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                 for (k, t, m, o) in spans]) for d, spans in docs]
-    df = spark.createDataFrame(rows, SPANS_SCHEMA) \
-        .repartition(n_parts).cache()
+    df = spans_frame(spark, docs).repartition(n_parts).cache()
     df.count()
     def run_pass():
         return extract_documents(df, root).agg(

@@ -16,13 +16,10 @@ def main() -> None:
   spark.sparkContext.setLogLevel('ERROR')
   from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
   from blueprint_oss_spark.spark.pipeline import (
-      SPANS_SCHEMA, extract_documents)
+      extract_documents, spans_frame)
   from blueprint_oss_spark.ops import relational as R, textops as T
 
-  docs = readme_corpus(8, seed=1)
-  rows = [(d, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-               for (k, t, m, o) in s]) for d, s in docs]
-  df = spark.createDataFrame(rows, SPANS_SCHEMA)
+  df = spans_frame(spark, readme_corpus(8, seed=1))
   print('=== EXTRACTION PIPELINE ===')
   extract_documents(df, readme_blueprint()).explain('formatted')
   print('=== MAIN-CONTENT SPANS PIPELINE ===')

@@ -30,12 +30,9 @@ spark = (SparkSession.builder.master(f'local[{cpus}]')
          .config('spark.ui.enabled', 'false').getOrCreate())
 spark.sparkContext.setLogLevel('ERROR')
 from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
-from blueprint_oss_spark.spark.pipeline import SPANS_SCHEMA, \
-    extract_documents
-docs = readme_corpus(n_docs, seed=999)
-rows = [(d, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-             for (k, t, m, o) in spans]) for d, spans in docs]
-df = spark.createDataFrame(rows, SPANS_SCHEMA) \
+from blueprint_oss_spark.spark.pipeline import extract_documents, \
+    spans_frame
+df = spans_frame(spark, readme_corpus(n_docs, seed=999)) \
     .repartition(int(cpus) * 2).cache()
 df.count()
 root = readme_blueprint()

@@ -130,7 +130,7 @@ def test_exact_round_trip_ours():
 def test_spark_doc_json_source(spark, tmp_path):
   from blueprint_oss_spark.spark.pipeline import (
       SPANS_SCHEMA, extract_documents)
-  from blueprint_oss_spark.spark.sources import extract_from_doc_json_files
+  from blueprint_oss_spark.spark.sources import read_files
 
   docs = readme_corpus(6, seed=561)
   for doc_id, spans in docs:
@@ -139,8 +139,9 @@ def test_spark_doc_json_source(spark, tmp_path):
         json.dumps(doc_json_from_pool(pool)))
 
   root = readme_blueprint()
-  out = extract_from_doc_json_files(
-      spark, str(tmp_path / '*.json'), root).collect()
+  out = extract_documents(
+      read_files(spark, str(tmp_path / '*.json')), root,
+      ocr_format='docjson').collect()
   got = {r['doc_id'].removesuffix('.json'): (r['fields'], round(r['score'], 9))
          for r in out}
   assert all(r['error'] is None for r in out)

@@ -1,13 +1,28 @@
 """Per-document robustness guards: a pathological document degrades to
 an `error` row; healthy documents in the same batch are unaffected
 (reference analogue: the 45 s SIGALRM per doc, bp/cli/run_model.py:32 —
-executors cannot use signals, so the pipeline polls a deadline)."""
+executors cannot use signals, so the pipeline polls a deadline).  File
+inputs (OCR / PDF / doc JSON) run through the same per-document kernel
+and the same resumable CLI job."""
 
-from blueprint_oss_spark.engine.runner import pack_offset, unpack_offset
+import json
+import os
+import pathlib
+import subprocess
+import sys
+
+from blueprint_oss_spark.engine.doc_json import doc_json_from_pool
+from blueprint_oss_spark.engine.entity_gen import build_doc_pool
+from blueprint_oss_spark.engine.runner import (
+    pack_offset, run_doc, spans_to_pages, unpack_offset,
+)
 from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
 from blueprint_oss_spark.spark.pipeline import (
-    SPANS_SCHEMA, extract_documents,
+    SPANS_SCHEMA, compile_blueprint, extract_documents, tree_from_payload,
 )
+from blueprint_oss_spark.spark.sources import read_files
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _df(spark, docs):
@@ -98,3 +113,105 @@ def test_malformed_rows_become_error_rows(spark):
   assert nt['error'] is None
   assert [s['kind'] for s in nt['out_spans']] == ['media']
   assert nt['out_spans'][0]['media_ref'] == 'm://1'
+
+
+def _write_doc_json(path, doc_id, spans):
+  pool = build_doc_pool(doc_id, spans_to_pages(spans))
+  path.write_text(json.dumps(doc_json_from_pool(pool)))
+
+
+def test_file_input_time_budget_isolates_slow_doc(spark, tmp_path):
+  """A doc-JSON file over doc_time_budget_s is a `timeout` row; the
+  small files beside it solve exactly as the in-process engine does."""
+  docs = readme_corpus(4, seed=787)
+  for doc_id, spans in docs:
+    _write_doc_json(tmp_path / f'{doc_id}.json', doc_id, spans)
+  # many label x amount candidates: a x120 copy of this doc already
+  # takes ~0.9 s to solve unbounded; the small docs take milliseconds,
+  # far inside the 0.5 s budget
+  _write_doc_json(tmp_path / 'whale.json', 'whale',
+                  _inflate(docs[2][1], 400))
+  df = read_files(spark, str(tmp_path / '*.json')).coalesce(1)
+  out = {r['doc_id']: r
+         for r in extract_documents(df, readme_blueprint(),
+                                    ocr_format='docjson',
+                                    doc_time_budget_s=0.5).collect()}
+  assert len(out) == 5
+  assert out['whale.json']['error'] == 'timeout'
+  assert out['whale.json']['score'] == 0.0
+  tree = tree_from_payload(compile_blueprint(readme_blueprint()))
+  for doc_id, spans in docs:
+    got = out[f'{doc_id}.json']
+    want = run_doc(doc_id, spans, tree, pre_optimized=True)
+    assert got['error'] is None
+    assert (dict(got['fields']), got['score']) == \
+        (want['fields'], want['score'])
+
+
+def test_unparseable_file_is_malformed_row(spark, tmp_path):
+  docs = readme_corpus(2, seed=797)
+  for doc_id, spans in docs:
+    _write_doc_json(tmp_path / f'{doc_id}.json', doc_id, spans)
+  (tmp_path / 'truncated.json').write_text('{"type": "Document", "ent')
+  (tmp_path / 'wrong-shape.json').write_text('[1, 2, 3]')
+  df = read_files(spark, str(tmp_path / '*.json')).coalesce(1)
+  out = {r['doc_id']: r
+         for r in extract_documents(df, readme_blueprint(),
+                                    ocr_format='docjson').collect()}
+  assert len(out) == 4
+  assert out['truncated.json']['error'].startswith(
+      'malformed: JSONDecodeError: ')
+  assert out['wrong-shape.json']['error'].startswith('malformed: ')
+  for doc_id, _ in docs:
+    assert out[f'{doc_id}.json']['error'] is None
+
+
+def test_cli_pdf_input_is_resumable_with_lineage(spark, tmp_path):
+  """run_model over PDF files runs the resumable job: part_bucket
+  output plus one lineage file per checkpoint group; a resumed run
+  processes no group and leaves the rows as they were."""
+  from blueprint_oss_spark.model.json_io import save_model
+  from blueprint_oss_spark.spark.pdf import CHAR_ADVANCE, write_simple_pdf
+
+  inp = tmp_path / 'pdfs'
+  inp.mkdir()
+  docs = readme_corpus(6, seed=314, with_media=False)
+  for doc_id, spans in docs:
+    # mock-grid words → PDF-representable widths (Courier advance)
+    pages = [{'width': pg['width'] * CHAR_ADVANCE, 'height': pg['height'],
+              'words': [(t, x0 * CHAR_ADVANCE,
+                         (x0 + len(t)) * CHAR_ADVANCE, y0, y1)
+                        for (t, x0, _, y0, y1) in pg['words']]}
+             for pg in spans_to_pages(spans)]
+    (inp / f'{doc_id}.pdf').write_bytes(write_simple_pdf(pages))
+  save_model(readme_blueprint(), str(tmp_path / 'model.json'))
+  out = tmp_path / 'out'
+
+  def run_model():
+    r = subprocess.run(
+        [sys.executable, '-m', 'blueprint_oss_spark', 'run_model',
+         '--model', str(tmp_path / 'model.json'),
+         '--input', str(inp / '*.pdf'), '--output', str(out),
+         '--ocr-format', 'pdf', '--timeout', '30',
+         '--master', 'local[2]', '--buckets', '4', '--groups', '2'],
+        capture_output=True, text=True, cwd=str(REPO), timeout=300,
+        env={**os.environ, 'PYTHONPATH': str(REPO)})
+    assert r.returncode == 0, r.stderr
+    return json.loads(r.stdout.strip().splitlines()[-1])
+
+  def rows():
+    return sorted((r['doc_id'], json.dumps(r['fields'], sort_keys=True),
+                   r['score'], r['error'], r['part_bucket'])
+                  for r in spark.read.parquet(str(out)).collect())
+
+  assert run_model()['groups_processed'] == 2
+  lineage = sorted(p.name for p in (out / '_lineage').glob('group-*.json'))
+  assert lineage == ['group-0.json', 'group-1.json']
+  first = rows()
+  assert len(first) == len(docs)
+  assert all(r[3] is None for r in first)
+  assert sum(json.loads((out / '_lineage' / f).read_text())
+             ['metrics']['docs'] for f in lineage) == len(docs)
+
+  assert run_model()['groups_processed'] == 0
+  assert rows() == first

@@ -106,14 +106,15 @@ def test_pdf_extraction_matches_reference_on_same_layout():
 
 def test_pdf_cli_source(spark, tmp_path):
   from blueprint_oss_spark.fixtures import readme_blueprint
-  from blueprint_oss_spark.spark.sources import extract_from_ocr_files
+  from blueprint_oss_spark.spark.pipeline import extract_documents
+  from blueprint_oss_spark.spark.sources import read_files
 
   docs = readme_corpus(4, seed=314, with_media=False)
   for doc_id, spans in docs:
     (tmp_path / f'{doc_id}.pdf').write_bytes(
         write_simple_pdf(_pdf_pages_from_spans(spans)))
-  out = extract_from_ocr_files(
-      spark, str(tmp_path / '*.pdf'), readme_blueprint(),
+  out = extract_documents(
+      read_files(spark, str(tmp_path / '*.pdf')), readme_blueprint(),
       ocr_format='pdf').collect()
   assert len(out) == 4
   assert all(r['error'] is None for r in out)
