@@ -3,9 +3,9 @@
 Mirrors the reference CLI surface (bp/cli/cli_main.py run_model) but
 Spark-first: the document set is a spans parquet table or a glob of
 OCR / PDF / doc-JSON files, and execution is the bulk pipeline.  Both
-inputs run the same resumable job: part_bucket-partitioned output,
-per-group lineage under <output>/_lineage, and the --timeout
-per-document budget.
+inputs run the same resumable job: one part_bucket=<g> output
+partition per checkpoint group (--groups), per-group lineage under
+<output>/_lineage, and the --timeout per-document budget.
 
 Examples:
   python -m blueprint_oss_spark run_model \
@@ -45,7 +45,6 @@ def main(argv=None) -> int:
   rm.add_argument('--timeout', type=float, default=45.0,
                   help='per-document budget in seconds (reference '
                        'default 45, bp/cli/run_model.py:32)')
-  rm.add_argument('--buckets', type=int, default=64)
   rm.add_argument('--groups', type=int, default=4)
   rm.add_argument('--no-resume', action='store_true')
 
@@ -75,7 +74,6 @@ def main(argv=None) -> int:
                        'struct<kind,text,media_ref,offset>>)')
   mc.add_argument('--output', required=True, help='output parquet path')
   mc.add_argument('--master', default='local[*]')
-  mc.add_argument('--buckets', type=int, default=64)
   mc.add_argument('--groups', type=int, default=4)
   mc.add_argument('--no-resume', action='store_true')
 
@@ -207,8 +205,7 @@ def main(argv=None) -> int:
 
   lineage = run_extraction_job(
       spark, input_df, args.output, root,
-      buckets=args.buckets, groups=args.groups,
-      resume=not args.no_resume, **job_kwargs)
+      groups=args.groups, resume=not args.no_resume, **job_kwargs)
   print(json.dumps({'groups_processed': len(lineage),
                     'output': args.output}))
   spark.stop()

@@ -324,7 +324,7 @@ def main_content_from_spans(df: DataFrame) -> DataFrame:
   parallel over doc_id like the blueprint extraction path (pinned by
   tests/test_html_extract.py); at 10^12 docs the only lever is
   executor count.  Arrow-batched; no per-row Python."""
-  from ..spark.pipeline import OUT_SPAN_STRUCT
+  from ..spark.pipeline import OUT_SPAN_STRUCT, pin_spark_zip_importers
 
   out_schema = StructType([
       StructField('doc_id', df.schema['doc_id'].dataType),
@@ -333,6 +333,7 @@ def main_content_from_spans(df: DataFrame) -> DataFrame:
   ])
 
   def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    pin_spark_zip_importers()
     for pdf in batches:
       ids, outs, n_htmls = [], [], []
       for doc_id, spans in zip(pdf['doc_id'], pdf['spans']):

@@ -5,7 +5,7 @@ Shape of the job (SURVEY.md §7):
     scan (doc_id, spans)            -- Iceberg/parquet; one row per doc
       → [optional salted repartition by size bucket]   -- only for skew
       → mapInPandas(extract)        -- Arrow batches; entity-gen + CSP
-      → write, partitioned by bucket, with lineage     -- resumable
+      → write, one partition per group, with lineage   -- resumable
 
 Because the input is already one-row-per-document, the happy path has
 ZERO shuffles: Spark pipelines scan → Arrow batch → Python → write.
@@ -31,6 +31,7 @@ lineage, resume and time budget as spans input.
 from __future__ import annotations
 
 import pickle
+import sys
 import time
 from typing import Iterable, Iterator, List, Optional
 
@@ -122,6 +123,35 @@ def tree_from_payload(payload: bytes) -> Node:
   return tree
 
 
+def pin_spark_zip_importers() -> None:
+  """Worker-side: make `importlib.invalidate_caches()` skip the zip
+  archives `pyspark` and `py4j` were imported from.
+
+  PySpark's worker calls `importlib.invalidate_caches()` at the start of
+  every task (pyspark/worker_util.py setup_spark_files).  Before
+  CPython 3.13 each `zipimporter` then re-reads its whole archive
+  directory at once, and a worker holds one per package path inside
+  pyspark.zip (~14 over 1,328 entries): ~0.13 s of CPU per task.  Those
+  archives do not change while a worker lives, and 3.13 made the call
+  lazy, so there this does nothing.  Call it once per task: importers
+  created since the last call are pinned by the next one."""
+  if sys.version_info >= (3, 13):
+    return
+  import zipimport
+  loaders = (getattr(sys.modules.get(name), '__loader__', None)
+             for name in ('pyspark', 'py4j'))
+  archives = {loader.archive for loader in loaders
+              if isinstance(loader, zipimport.zipimporter)}
+  for finder in list(sys.path_importer_cache.values()):
+    if isinstance(finder, zipimport.zipimporter) \
+        and finder.archive in archives:
+      finder.invalidate_caches = _keep_zip_directory
+
+
+def _keep_zip_directory() -> None:
+  """invalidate_caches of a pinned zipimporter: the archive is fixed."""
+
+
 def _solve_spans(max_spans_per_doc: int):
   """Spans adapter: a (doc_id, spans) row → runner.run_doc."""
   def solve(doc_id: str, spans, tree: Node) -> dict:
@@ -172,6 +202,7 @@ def _extraction_kernel(bc, value_col: str, solve,
 
   def run_batches(batches: Iterator[pd.DataFrame]) \
       -> Iterator[pd.DataFrame]:
+    pin_spark_zip_importers()
     tree = tree_from_payload(bc.value)
     for pdf in batches:
       out: List[dict] = []
@@ -350,18 +381,23 @@ def dedup_spans(df: DataFrame) -> DataFrame:
 
 def run_extraction_job(spark: SparkSession, input_df: DataFrame,
                        output_path: str, root: Optional[Node] = None, *,
-                       buckets: int = 64, groups: int = 4,
+                       groups: int = 4,
                        resume: bool = True,
                        table_format: str = 'parquet',
                        iceberg_table: Optional[str] = None,
                        transform=None,
                        **extract_kwargs) -> List[dict]:
-  """Resumable bulk job with per-partition lineage + metrics.
+  """Resumable bulk job with per-group lineage + metrics.
 
-  Documents hash into `buckets`; buckets are processed in `groups`
-  checkpoint groups.  Each completed group writes its output under
-  part_bucket=... plus a lineage row; on resume, completed groups are
-  skipped (per-partition checkpointing per the north rule).
+  Documents hash into `groups` checkpoint groups, part_bucket =
+  pmod(xxhash64(doc_id), groups), and group g is exactly the output
+  partition part_bucket=g: each task of a group writes one file, so a
+  group holds as many files as the input has splits.  Each completed
+  group writes its partition plus a lineage row recording `groups`; on
+  resume, completed groups are skipped (per-partition checkpointing per
+  the north rule).  An output whose lineage records a different
+  `groups` (or none: the older bucket_lo/bucket_hi layout) raises
+  ValueError instead of skipping groups by index.
   Returns the lineage rows (one per group processed this run).
 
   Sinks: `table_format='parquet'` (default) writes dynamic-overwrite
@@ -381,10 +417,10 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   `transform` generalizes the per-group computation: any
   DataFrame → DataFrame doc-level pipeline (e.g. the main-content
   spans pipeline, ops/html_extract.main_content_from_spans) rides the
-  same bucketing / checkpoint groups / lineage / atomic-overwrite
-  machinery as blueprint extraction; the default is
-  extract_documents(part, root).  Group metrics adapt to the output
-  schema (docs always; errors/score_sum/elapsed_ms when present).
+  same checkpoint groups / lineage / atomic-overwrite machinery as
+  blueprint extraction; the default is extract_documents(part, root).
+  Group metrics adapt to the output schema (docs always;
+  errors/score_sum/elapsed_ms when present).
   """
   import json
 
@@ -407,26 +443,37 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   fs = _hpath(lineage_dir).getFileSystem(hconf)
   fs.mkdirs(_hpath(lineage_dir))
   done_groups = set()
-  if resume:
-    for status in fs.listStatus(_hpath(lineage_dir)):
-      fn = status.getPath().getName()
-      if fn.startswith('group-') and fn.endswith('.json'):
-        done_groups.add(int(fn[len('group-'):-len('.json')]))
+  for status in fs.listStatus(_hpath(lineage_dir)):
+    fn = status.getPath().getName()
+    if not (fn.startswith('group-') and fn.endswith('.json')):
+      continue
+    # A group index only names the same documents under the same
+    # `groups`: skipping (or overwriting) by index across layouts
+    # would drop documents or write them twice.
+    stream = fs.open(status.getPath())
+    try:
+      written = json.loads(jvm.org.apache.commons.io.IOUtils.toString(
+          stream, 'UTF-8')).get('groups')
+    finally:
+      stream.close()
+    if written != groups:
+      raise ValueError(
+          f'{status.getPath().toString()} was written with '
+          f'groups={written} but this run has groups={groups}; rerun '
+          f'with groups={written} or write to a new output path')
+    if resume:
+      done_groups.add(int(fn[len('group-'):-len('.json')]))
 
   df = input_df.withColumn(
-      'part_bucket', F.pmod(F.xxhash64('doc_id'), F.lit(buckets)))
+      'part_bucket', F.pmod(F.xxhash64('doc_id'), F.lit(groups)))
 
   lineage_rows = []
-  per_group = (buckets + groups - 1) // groups
   for g in range(groups):
     if g in done_groups:
       continue
-    lo, hi = g * per_group, min((g + 1) * per_group, buckets)
-    part = df.where((F.col('part_bucket') >= lo)
-                    & (F.col('part_bucket') < hi))
+    part = df.where(F.col('part_bucket') == g)
     out = transform(part.drop('part_bucket'))
-    out = out.withColumn(
-        'part_bucket', F.pmod(F.xxhash64('doc_id'), F.lit(buckets)))
+    out = out.withColumn('part_bucket', F.lit(g).cast('long'))
     from pyspark.sql import Observation
     obs = Observation(f'bp_group_{g}')
     cols = set(out.columns)
@@ -454,7 +501,7 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
           .cast('long').alias('doc_set_checksum'))
     observed = out.observe(obs, *metrics_exprs)
     # Dynamic partition overwrite: a re-run of this group replaces
-    # exactly its own part_bucket partitions, so resuming after a
+    # exactly its own part_bucket partition, so resuming after a
     # partially-written group (crash between data write and lineage
     # write) cannot leave duplicate rows behind.
     if table_format == 'iceberg':
@@ -469,8 +516,8 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
     metrics = {k: (None if v is None
                    else int(v) if isinstance(v, int) else float(v))
                for k, v in obs.get.items()}
-    row = {'group': g, 'bucket_lo': lo, 'bucket_hi': hi,
-           'ts': time.time(), 'metrics': metrics}
+    row = {'group': g, 'groups': groups, 'ts': time.time(),
+           'metrics': metrics}
     out_stream = fs.create(_hpath(f'{lineage_dir}/group-{g}.json'), True)
     out_stream.write(bytearray(json.dumps(row).encode('utf-8')))
     out_stream.close()

@@ -193,7 +193,7 @@ def test_cli_pdf_input_is_resumable_with_lineage(spark, tmp_path):
          '--model', str(tmp_path / 'model.json'),
          '--input', str(inp / '*.pdf'), '--output', str(out),
          '--ocr-format', 'pdf', '--timeout', '30',
-         '--master', 'local[2]', '--buckets', '4', '--groups', '2'],
+         '--master', 'local[2]', '--groups', '2'],
         capture_output=True, text=True, cwd=str(REPO), timeout=300,
         env={**os.environ, 'PYTHONPATH': str(REPO)})
     assert r.returncode == 0, r.stderr

@@ -156,7 +156,7 @@ def test_cli_run_main_content(spark, tmp_path):
   r = subprocess.run(
       [sys.executable, '-m', 'blueprint_oss_spark', 'run_main_content',
        '--input', inp, '--output', out, '--master', 'local[2]',
-       '--buckets', '4', '--groups', '2'],
+       '--groups', '2'],
       capture_output=True, text=True, cwd='/root/repo', timeout=300,
       env={**__import__('os').environ, 'PYTHONPATH': '/root/repo'})
   assert r.returncode == 0, r.stderr

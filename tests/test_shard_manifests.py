@@ -110,10 +110,8 @@ def test_pipeline_doc_set_checksum(spark, tmp_path):
   df = spark.createDataFrame(rows, SPANS_SCHEMA)
   root = readme_blueprint()
 
-  l1 = run_extraction_job(spark, df, str(tmp_path / 'a'), root,
-                          buckets=8, groups=2)
-  l2 = run_extraction_job(spark, df, str(tmp_path / 'b'), root,
-                          buckets=8, groups=2)
+  l1 = run_extraction_job(spark, df, str(tmp_path / 'a'), root, groups=2)
+  l2 = run_extraction_job(spark, df, str(tmp_path / 'b'), root, groups=2)
   for r1, r2 in zip(l1, l2):
     c1, c2 = (r1['metrics']['doc_set_checksum'],
               r2['metrics']['doc_set_checksum'])
@@ -130,12 +128,12 @@ def test_pipeline_doc_set_checksum(spark, tmp_path):
       [r['metrics']['doc_set_checksum'] for r in l1]
   # and the checksum is the modular doc_id fingerprint sum it claims
   ids = [doc_id for doc_id, _ in docs]
-  bucket_rows = spark.createDataFrame(
+  group_rows = spark.createDataFrame(
       [(i,) for i in ids], 'doc_id string').selectExpr(
-      'doc_id', 'pmod(xxhash64(doc_id), 8) AS b').collect()
+      'doc_id', 'pmod(xxhash64(doc_id), 2) AS g').collect()
   per_group = {}
-  for r in bucket_rows:
-    g = 0 if r['b'] < 4 else 1  # buckets=8, groups=2
+  for r in group_rows:
+    g = r['g']  # groups=2: group g is part_bucket g
     per_group[g] = (per_group.get(g, 0)
                     + _md5_prefix_int(r['doc_id'], 15)) % CHECKSUM_MOD
   got = {r['group']: r['metrics']['doc_set_checksum'] for r in l1}

@@ -87,16 +87,14 @@ def test_run_extraction_job_resume(spark, tmp_path):
   df = _spans_df(spark, docs)
   out_path = str(tmp_path / 'out')
 
-  lineage = run_extraction_job(spark, df, out_path, root,
-                               buckets=8, groups=2)
+  lineage = run_extraction_job(spark, df, out_path, root, groups=2)
   assert len(lineage) == 2
   assert sum(r['metrics']['docs'] for r in lineage) == 16
   n1 = spark.read.parquet(out_path).count()
   assert n1 == 16
 
   # Resume: nothing left to do.
-  lineage2 = run_extraction_job(spark, df, out_path, root,
-                                buckets=8, groups=2)
+  lineage2 = run_extraction_job(spark, df, out_path, root, groups=2)
   assert lineage2 == []
   assert spark.read.parquet(out_path).count() == 16
 
@@ -107,12 +105,137 @@ def test_run_extraction_job_resume(spark, tmp_path):
   os.remove(str(tmp_path / 'out' / '_lineage' / 'group-1.json'))
   before = {r['doc_id']: r['score']
             for r in spark.read.parquet(out_path).collect()}
-  lineage3 = run_extraction_job(spark, df, out_path, root,
-                                buckets=8, groups=2)
+  lineage3 = run_extraction_job(spark, df, out_path, root, groups=2)
   assert [r['group'] for r in lineage3] == [1]
   after_rows = spark.read.parquet(out_path).collect()
   assert len(after_rows) == 16  # no duplicates
   assert {r['doc_id']: r['score'] for r in after_rows} == before
+
+
+def test_run_extraction_job_one_partition_per_group(spark, tmp_path):
+  """Group g is exactly the output partition part_bucket=g =
+  pmod(xxhash64(doc_id), groups): each input split writes at most one
+  file per group, and every row equals the in-process engine's."""
+  docs = readme_corpus(12, seed=81)
+  root = readme_blueprint()
+  inp = str(tmp_path / 'in')
+  _spans_df(spark, docs).repartition(2).write.parquet(inp)
+  assert len([f for f in os.listdir(inp) if f.endswith('.parquet')]) == 2
+  out_path = tmp_path / 'out'
+
+  run_extraction_job(spark, spark.read.parquet(inp), str(out_path), root,
+                     groups=2)
+  dirs = sorted(d for d in os.listdir(out_path)
+                if (out_path / d).is_dir() and d != '_lineage')
+  assert dirs == ['part_bucket=0', 'part_bucket=1']
+  for d in dirs:
+    files = [f for f in os.listdir(out_path / d) if f.endswith('.parquet')]
+    assert 1 <= len(files) <= 2, (d, files)
+
+  rows = (spark.read.parquet(str(out_path))
+          .withColumn('want', F.pmod(F.xxhash64('doc_id'), F.lit(2)))
+          .collect())
+  assert sorted(r['doc_id'] for r in rows) == sorted(d for d, _ in docs)
+  assert all(r['part_bucket'] == r['want'] for r in rows)
+  got = {r['doc_id']: r for r in rows}
+  for doc_id, spans in docs:
+    local = run_doc(doc_id, spans, root)
+    r = got[doc_id]
+    assert r['error'] is None
+    assert r['fields'] == local['fields']
+    assert [(s['kind'], s['text'], s['media_ref'], s['order'])
+            for s in r['out_spans']] == local['out_spans']
+    assert r['score'] == local['score']
+    assert (r['n_entities'], r['n_words']) == \
+        (local['n_entities'], local['n_words'])
+
+
+def test_run_extraction_job_resume_refuses_other_layout(spark, tmp_path):
+  """A group index names the same documents only under the same
+  `groups`: resuming with another value must raise, not skip groups
+  by index (which would drop documents or write them twice)."""
+  df = _spans_df(spark, readme_corpus(8, seed=82))
+  root = readme_blueprint()
+  out_path = str(tmp_path / 'out')
+  lineage = run_extraction_job(spark, df, out_path, root, groups=2)
+  assert [r['groups'] for r in lineage] == [2, 2]
+  lineage_dir = tmp_path / 'out' / '_lineage'
+  os.remove(str(lineage_dir / 'group-1.json'))
+  with pytest.raises(ValueError) as e:
+    run_extraction_job(spark, df, out_path, root, groups=4)
+  msg = str(e.value)
+  assert 'group-0.json' in msg and 'groups=2' in msg and 'groups=4' in msg
+
+  # lineage without `groups` is the older bucket-range layout (the
+  # rewrite drops the local FS's checksum file with the old bytes)
+  os.remove(str(lineage_dir / '.group-0.json.crc'))
+  (lineage_dir / 'group-0.json').write_text(
+      '{"group": 0, "bucket_lo": 0, "bucket_hi": 32, "metrics": {}}')
+  with pytest.raises(ValueError, match='groups=None'):
+    run_extraction_job(spark, df, out_path, root, groups=2)
+
+
+_ZIP_PROBE = r"""
+import importlib, sys, zipimport
+from blueprint_oss_spark.spark.pipeline import pin_spark_zip_importers
+import py4j, pyspark
+zips = {m.__loader__.archive for m in (pyspark, py4j)
+        if isinstance(m.__loader__, zipimport.zipimporter)}
+assert zips, 'pyspark/py4j not imported from a zip'
+reads = []
+read_directory = zipimport._read_directory
+def counting(archive):
+  reads.append(archive)
+  return read_directory(archive)
+zipimport._read_directory = counting
+importlib.invalidate_caches()
+before = len(reads)
+pin_spark_zip_importers()
+pin_spark_zip_importers()
+del reads[:]
+importlib.invalidate_caches()
+assert 'pyspark.streaming.util' not in sys.modules
+import pyspark.streaming.util as late
+pinned = sum('invalidate_caches' in vars(f)
+             for f in sys.path_importer_cache.values()
+             if isinstance(f, zipimport.zipimporter))
+print(before, len(reads), 'pyspark.zip' in late.__file__, pinned)
+"""
+
+
+def test_pin_spark_zip_importers(tmp_path):
+  """After the worker-side helper, importlib.invalidate_caches() no
+  longer re-reads the pyspark/py4j archive directories, and a
+  not-yet-imported pyspark module still imports from the zip.  On
+  CPython >= 3.13 (lazy invalidation) the helper changes nothing."""
+  import glob
+  import subprocess
+  import sys
+
+  import pyspark
+  lib_dirs = [os.path.join(os.path.dirname(pyspark.__file__),
+                           'python', 'lib')]
+  if os.environ.get('SPARK_HOME'):
+    lib_dirs.append(os.path.join(os.environ['SPARK_HOME'], 'python', 'lib'))
+  for lib in lib_dirs:
+    zips = (glob.glob(os.path.join(lib, 'pyspark.zip'))
+            + glob.glob(os.path.join(lib, 'py4j-*-src.zip')))
+    if len(zips) == 2:
+      break
+  else:
+    pytest.skip("no pyspark.zip + py4j zip in Spark's python/lib")
+  repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+  r = subprocess.run(
+      [sys.executable, '-c', _ZIP_PROBE], capture_output=True, text=True,
+      cwd=str(tmp_path), timeout=120,
+      env={**os.environ, 'PYTHONPATH': os.pathsep.join(zips + [repo])})
+  assert r.returncode == 0, r.stderr
+  before, after, from_zip, pinned = r.stdout.split()
+  assert from_zip == 'True'
+  if sys.version_info >= (3, 13):
+    assert pinned == '0'
+  else:
+    assert int(before) > 0 and int(after) == 0 and int(pinned) > 0
 
 
 def test_run_extraction_job_iceberg_contract(spark, tmp_path):
@@ -132,11 +255,11 @@ def test_run_extraction_job_iceberg_contract(spark, tmp_path):
 
   with pytest.raises(ValueError, match='iceberg_table'):
     run_extraction_job(spark, df, str(tmp_path / 'o1'), root,
-                       buckets=4, groups=1, table_format='iceberg')
+                       groups=1, table_format='iceberg')
 
   with pytest.raises(RuntimeError, match='Iceberg catalog'):
     run_extraction_job(spark, df, str(tmp_path / 'o2'), root,
-                       buckets=4, groups=1, table_format='iceberg',
+                       groups=1, table_format='iceberg',
                        iceberg_table='nosuchcat.db.extractions')
 
 
@@ -191,7 +314,7 @@ def test_run_job_with_main_content_transform(spark, tmp_path):
 
   lineage = run_extraction_job(
       spark, src, out_path, transform=main_content_from_spans,
-      buckets=8, groups=2)
+      groups=2)
   assert len(lineage) == 2
   assert sum(r['metrics']['docs'] for r in lineage) == 120
   assert all('errors' not in r['metrics'] for r in lineage)
@@ -207,7 +330,7 @@ def test_run_job_with_main_content_transform(spark, tmp_path):
   # resume: everything checkpointed, nothing re-runs
   assert run_extraction_job(
       spark, src, out_path, transform=main_content_from_spans,
-      buckets=8, groups=2) == []
+      groups=2) == []
 
   # crash recovery: drop one group's lineage -> only it re-runs,
   # and the dynamic partition overwrite leaves no duplicates
@@ -215,7 +338,7 @@ def test_run_job_with_main_content_transform(spark, tmp_path):
   os.remove(f'{out_path}/_lineage/group-1.json')
   redo = run_extraction_job(
       spark, src, out_path, transform=main_content_from_spans,
-      buckets=8, groups=2)
+      groups=2)
   assert [r['group'] for r in redo] == [1]
   assert spark.read.parquet(out_path).count() == 120
 
