@@ -7,13 +7,22 @@ Re-implements the semantics of blueprint-oss's scan-side compute:
                              type_scoring.py:53-125)
   - document assembly       (bp/build_document.py:46-170)
 
-The implementation is array-based (no object DAG, no quadtree): per-doc
-candidate sets are small, so brute-force vectorizable interval checks
-replace the reference's EZBox spatial index.
+The pool is array-based (no object DAG, no quadtree): per-doc candidate
+sets are small, so brute-force interval checks replace the reference's
+EZBox spatial index.  Building it is scalar Python over list copies of
+the word geometry: a phrase tuple touches 1-6 words, where numpy's
+fancy indexing costs more than it saves.  Every float sum runs left to
+right, the order numpy uses for arrays that short, so scores are
+bit-identical to the array formulation.  Edit distance, in the date
+typer and the solver's text rules alike, is bit-parallel (Myers 1999 /
+Hyyrö 2001): a DP column is a dozen Python-int operations.  The date
+typer matches against masks of the six date patterns built once at
+import, and memoizes its score on the canonical text.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -44,45 +53,52 @@ def _score_consistency(vals: Sequence[float], tolerance: float,
 
 
 class _Words:
-  """Word arrays for one page (absolute document coordinates)."""
+  """Word geometry for one page as Python lists (absolute document
+  coordinates).  Scoring reads 1–6 words per phrase tuple, where scalar
+  Python is cheaper than numpy's fancy indexing."""
 
-  def __init__(self, texts: List[str], x0, x1, y0, y1):
+  def __init__(self, texts: List[str], x0: List[float], x1: List[float],
+               y0: List[float], y1: List[float]):
     self.texts = texts
-    self.x0 = np.asarray(x0, dtype=np.float64)
-    self.x1 = np.asarray(x1, dtype=np.float64)
-    self.y0 = np.asarray(y0, dtype=np.float64)
-    self.y1 = np.asarray(y1, dtype=np.float64)
-    self.height = self.y1 - self.y0
-    self.lens = np.asarray([len(t) for t in texts], dtype=np.float64)
+    self.x0 = x0
+    self.x1 = x1
+    self.y0 = y0
+    self.y1 = y1
+    self.height = [b - a for a, b in zip(y0, y1)]
+    self.lens = [float(len(t)) for t in texts]
 
 
 def compute_ocr_score(w: _Words, tup: Tuple[int, ...]) -> float:
   """Phrase plausibility score (reference: clustering.py:255-329)."""
   if len(tup) == 1:
     return 1.0
-  idx = list(tup)
-  lens = w.lens[idx]
-  heights = w.height[idx]
-  baselines = w.y1[idx]
+  heights = [w.height[i] for i in tup]
+  baselines = [w.y1[i] for i in tup]
 
-  total_len = lens.sum()
+  # length-weighted sums, accumulated left to right (the order numpy
+  # sums arrays this short in, so the scores stay bit-identical)
+  total_len = weighted_h = weighted_b = 0.0
+  for i, h, b in zip(tup, heights, baselines):
+    n = w.lens[i]
+    total_len += n
+    weighted_h += n * h
+    weighted_b += n * b
   # weighted average char height (clustering.py:277-284)
-  mu = float((lens * heights).sum() / total_len)
+  mu = weighted_h / total_len
   # entity baseline: length-weighted mean of word baselines
   # (clustering.py:399-408)
-  baseline = float((lens * baselines).sum() / total_len)
+  baseline = weighted_b / total_len
 
-  interword = [float(w.x0[idx[i + 1]] - w.x1[idx[i]])
-               for i in range(len(idx) - 1)]
-  baseline_devs = [abs(float(b) - baseline) for b in baselines]
+  interword = [w.x0[tup[i + 1]] - w.x1[tup[i]]
+               for i in range(len(tup) - 1)]
+  baseline_devs = [abs(b - baseline) for b in baselines]
 
   min_iw = 0.0 * mu
   dev_from_min = [max(0.0, min_iw - d) for d in interword]
   max_iw = 0.8 * mu
   dev_from_max = [max(0.0, d - max_iw) for d in interword]
 
-  s_height = _score_consistency([float(h) for h in heights],
-                                0.3 * mu, 0.5 * mu)
+  s_height = _score_consistency(heights, 0.3 * mu, 0.5 * mu)
   s_baseline = _score_deviation(max(baseline_devs), 0.1 * mu, 0.3 * mu)
   s_iw_consistency = _score_consistency(interword, 0.3 * mu, 0.8 * mu)
   s_iw_min = _score_deviation(max(dev_from_min), 0.0 * mu, 1.0 * mu)
@@ -109,14 +125,12 @@ def build_phrases(w: _Words) -> List[Tuple[Tuple[int, ...], float, float]]:
   of every longer tuple.
   """
   n = len(w.texts)
-  order = sorted(range(n), key=lambda i: w.x0[i])  # stable
+  order = sorted(range(n), key=w.x0.__getitem__)  # stable
 
   tups: List[Tuple[int, ...]] = []
-  # cached per-tuple bbox
-  tx0: List[float] = []
-  tx1: List[float] = []
-  ty0: List[float] = []
-  ty1: List[float] = []
+  # per-tuple bbox (x0, x1, y0, y1): a tuple extended by word e has the
+  # union of its bbox and e's, so each new bbox is O(1)
+  boxes: List[Tuple[float, float, float, float]] = []
 
   score_cache: Dict[Tuple[int, ...], float] = {}
 
@@ -128,16 +142,18 @@ def build_phrases(w: _Words) -> List[Tuple[Tuple[int, ...], float, float]]:
     return s
 
   for e in order:
-    ex0 = float(w.x0[e])
-    ey0, ey1 = float(w.y0[e]), float(w.y1[e])
-    h = float(w.height[e])
+    ex0, ex1 = w.x0[e], w.x1[e]
+    ey0, ey1 = w.y0[e], w.y1[e]
+    h = w.height[e]
     # phrase bounder: x ∈ [x - 6h, x], y = word's iy (clustering.py:232-237)
     bx0, bx1 = ex0 - 6.0 * h, ex0
 
     new_tups: List[Tuple[int, ...]] = [(e,)]
+    new_boxes = [(ex0, ex1, ey0, ey1)]
     for t in range(len(tups)):
       # bbox intersect test (closed intervals, geometry.py:42-43)
-      if tx1[t] < bx0 or bx1 < tx0[t] or ty1[t] < ey0 or ey1 < ty0[t]:
+      tx0, tx1, ty0, ty1 = boxes[t]
+      if tx1 < bx0 or bx1 < tx0 or ty1 < ey0 or ey1 < ty0:
         continue
       tup = tups[t]
       if len(tup) + 1 > MAX_WORDS_PER_PHRASE:
@@ -149,14 +165,10 @@ def build_phrases(w: _Words) -> List[Tuple[Tuple[int, ...], float, float]]:
           break
       if ok:
         new_tups.append(tup + (e,))
-
-    for tup in new_tups:
-      tups.append(tup)
-      idx = list(tup)
-      tx0.append(float(w.x0[idx].min()))
-      tx1.append(float(w.x1[idx].max()))
-      ty0.append(float(w.y0[idx].min()))
-      ty1.append(float(w.y1[idx].max()))
+        new_boxes.append((min(tx0, ex0), max(tx1, ex1),
+                          min(ty0, ey0), max(ty1, ey1)))
+    tups.extend(new_tups)
+    boxes.extend(new_boxes)
 
   # Maximality marking (clustering.py:189-204).
   ordered = sorted(tups, key=len)  # stable
@@ -203,33 +215,60 @@ def edit_distance(s1: str, s2: str) -> int:
   return prev[len(s2)]
 
 
+def _match_masks(s: str) -> Dict[str, int]:
+  """Character → bit mask of its positions in s (bit i set iff s[i] is
+  that character): the pattern side of the bit-parallel distance."""
+  masks: Dict[str, int] = {}
+  bit = 1
+  for c in s:
+    masks[c] = masks.get(c, 0) | bit
+    bit <<= 1
+  return masks
+
+
+def _bit_parallel_distance(masks: Dict[str, int], m: int, t: str) -> int:
+  """Levenshtein distance between t and the m-char string whose match
+  masks are `masks` (m >= 1).  Myers' (1999) bit-vector algorithm in
+  Hyyrö's (2001) edit-distance form: one DP column of t is the pair of
+  m-bit vertical delta vectors (vp, vn) in a Python int, so a column
+  costs a dozen word operations instead of m cell updates."""
+  full = (1 << m) - 1
+  last = 1 << (m - 1)
+  vp, vn, d = full, 0, m
+  for c in t:
+    eq = masks.get(c, 0)
+    xv = eq | vn
+    xh = (((eq & vp) + vp) ^ vp) | eq
+    hp = vn | (~(xh | vp) & full)
+    hn = vp & xh
+    if hp & last:
+      d += 1
+    elif hn & last:
+      d -= 1
+    # row 0 of the DP grows by one per column: shift a 1 into hp
+    hp = ((hp << 1) | 1) & full
+    hn = (hn << 1) & full
+    vp = hn | (~(xv | hp) & full)
+    vn = hp & xv
+  return d
+
+
 def edit_distance_capped(s1: str, s2: str, cap: int) -> int:
   """min(edit_distance(s1, s2), cap) — EXACT below the cap.
 
-  Same DP as edit_distance, aborting as soon as a whole row is >= cap
-  (distances are non-decreasing down the rows' minimum), which makes
-  far-apart strings O(cap·m) instead of O(n·m).  Callers use it where
+  Bit-parallel over the longer string (any length: Python ints have no
+  word size), one loop step per character of the shorter.  Strings
+  whose lengths differ by >= cap skip the scan.  Callers use it where
   every distance >= cap maps to the same score (taper hits 0), so the
   cap is lossless."""
   if abs(len(s1) - len(s2)) >= cap:
     return cap
-  if not s1 or not s2:
-    return min(max(len(s1), len(s2)), cap)
-  prev = list(range(len(s2) + 1))
-  for i in range(1, len(s1) + 1):
-    cur = [i] + [0] * len(s2)
-    c1 = s1[i - 1]
-    row_min = i
-    for j in range(1, len(s2) + 1):
-      cost = 0 if c1 == s2[j - 1] else 1
-      v = min(1 + prev[j], 1 + cur[j - 1], cost + prev[j - 1])
-      cur[j] = v
-      if v < row_min:
-        row_min = v
-    if row_min >= cap:
-      return cap
-    prev = cur
-  return min(prev[len(s2)], cap)
+  if len(s1) < len(s2):
+    s1, s2 = s2, s1
+  if not s2:
+    return len(s1)
+  d = _bit_parallel_distance(_match_masks(s1), len(s1), s2)
+  return d if d < cap else cap
 
 
 def date_likeness(text: str) -> float:
@@ -251,23 +290,38 @@ def date_likeness(text: str) -> float:
   text = text.replace(',', ' ')
   text = '99'.join(text.rsplit('9999', 1))
   text = '-'.join(text.split())
-  # Capped distances are lossless here: a pattern capped at
-  # cap > 0.3·maxlen contributes likeness 1 - cap/maxlen < 0.7, which
-  # can neither cross the DATE_MIN_SCORE=0.7 keep-floor nor beat an
-  # exact >= 0.7 max — kept entities get the bit-exact reference value
-  # (asserted by tests/test_entity_gen.py's pool bit-equality).
-  best = 0.0
-  first = True
-  for p in _DATE_PATTERNS:
-    m = max(len(p), len(text))
-    if m == 0:
-      v = 1.0
+  return _canonical_date_likeness(text)
+
+
+# (length, match masks) of each date pattern, built once
+_DATE_PATTERN_MASKS = tuple((len(p), _match_masks(p))
+                            for p in _DATE_PATTERNS)
+
+
+@lru_cache(maxsize=1 << 16)
+def _canonical_date_likeness(text: str) -> float:
+  """date_likeness of an already canonical text.  Canonical texts repeat
+  heavily (every digit is '9', every month 'JAN'), hence the memo.
+
+  Capped distances are lossless here: a pattern capped at
+  cap > 0.3·maxlen contributes likeness 1 - cap/maxlen < 0.7, which can
+  neither cross the DATE_MIN_SCORE=0.7 keep-floor nor beat an exact
+  >= 0.7 max — kept entities get the bit-exact reference value
+  (asserted by tests/test_entity_gen.py's pool bit-equality), and the
+  cap keeps every value equal to the scalar DP's
+  (tests/test_entity_gen_kernels.py)."""
+  n = len(text)
+  best = 0.0  # every pattern scores > 0: cap <= 0.3·m + 2 < m (m >= 7)
+  for lp, masks in _DATE_PATTERN_MASKS:
+    m = max(lp, n)
+    cap = int(0.3 * m) + 2
+    if abs(lp - n) >= cap:
+      d = cap
     else:
-      cap = int(0.3 * m) + 2
-      v = 1 - edit_distance_capped(p, text, cap) / m
-    if first or v > best:
+      d = min(_bit_parallel_distance(masks, lp, text), cap)
+    v = 1 - d / m
+    if v > best:
       best = v
-      first = False
   return best
 
 
@@ -340,19 +394,22 @@ def dollar_amount_likeness(text: str) -> float:
   return abs(1.0 - min(1.0, err / taper))
 
 
-def dollar_score(full_text: str, sub_texts: List[str],
-                 n_words: int) -> float:
-  """reference: dollar_amounts.py:26-47."""
-  score = dollar_amount_likeness(full_text)
-  score = min(1.0, max(0.0, score - 0.01 + 0.01 * n_words / 10))
+def dollar_score(words: Sequence[str]) -> float:
+  """reference: dollar_amounts.py:26-47, over a phrase's word texts.
+  The children are the contiguous word subsequences
+  (dollar_amounts.py:12-23), joined only once the phrase scores."""
+  n = len(words)
+  score = dollar_amount_likeness(' '.join(words))
+  score = min(1.0, max(0.0, score - 0.01 + 0.01 * n / 10))
   if score == 0:
     return 0.0
   best = 0.0
-  for child_text in sub_texts:
-    cs = dollar_amount_likeness(child_text)
-    v = cs + (1 - cs) * score
-    if v > best:
-      best = v
+  for i in range(n):
+    for j in range(i + 1, n + 1):
+      cs = dollar_amount_likeness(' '.join(words[i:j]))
+      v = cs + (1 - cs) * score
+      if v > best:
+        best = v
   return best
 
 
@@ -427,12 +484,11 @@ def build_doc_pool(
     etype.append(t)
     etext.append(text)
     ewords.append(words)
-    idx = list(words)
-    if idx:
-      ex0.append(float(pool.wx0[idx].min()))
-      ex1.append(float(pool.wx1[idx].max()))
-      ey0.append(float(pool.wy0[idx].min()))
-      ey1.append(float(pool.wy1[idx].max()))
+    if words:
+      ex0.append(min(awx0[i] for i in words))
+      ex1.append(max(awx1[i] for i in words))
+      ey0.append(min(awy0[i] for i in words))
+      ey1.append(max(awy1[i] for i in words))
     else:
       ex0.append(0.0); ex1.append(0.0); ey0.append(0.0); ey1.append(0.0)
     emax.append(maximality)
@@ -443,9 +499,9 @@ def build_doc_pool(
   text_entity_ids: List[int] = []
   for (pstart, pend) in page_word_ranges:
     rng = list(range(pstart, pend))
-    w = _Words([all_word_text[i] for i in rng],
-               pool.wx0[pstart:pend], pool.wx1[pstart:pend],
-               pool.wy0[pstart:pend], pool.wy1[pstart:pend])
+    w = _Words(all_word_text[pstart:pend],
+               awx0[pstart:pend], awx1[pstart:pend],
+               awy0[pstart:pend], awy1[pstart:pend])
     for (tup, maximality, ocr) in build_phrases(w):
       gtup = tuple(rng[i] for i in tup)
       # phrase text = ' '.join of words in tuple (x-sorted) order
@@ -458,12 +514,7 @@ def build_doc_pool(
   # (reference: build_document.py:160-165).
   for eid in text_entity_ids:
     gtup = ewords[eid]
-    # contiguous word subsequences' texts (dollar_amounts.py:12-23)
-    sub_texts = []
-    for i in range(len(gtup)):
-      for j in range(i + 1, len(gtup) + 1):
-        sub_texts.append(' '.join(all_word_text[k] for k in gtup[i:j]))
-    s = dollar_score(etext[eid], sub_texts, len(gtup))
+    s = dollar_score([all_word_text[k] for k in gtup])
     if s >= DOLLAR_MIN_SCORE:
       add_entity(TYPE_DOLLAR, gtup, etext[eid], float('nan'), float('nan'), s)
 
@@ -488,10 +539,8 @@ def build_doc_pool(
   # entity's word list (reference: bp/document.py:58-78 — entity_words are
   # chained across ALL entities, so a word is counted once per containing
   # entity).
-  heights: List[float] = []
-  for tup in ewords:
-    for wi in tup:
-      heights.append(float(pool.wy1[wi] - pool.wy0[wi]))
+  word_heights = [b - a for a, b in zip(awy0, awy1)]
+  heights = [word_heights[wi] for tup in ewords for wi in tup]
   pool.median_line_height = median_word_height(heights)
 
   # Document bbox = union over pages and entities.

@@ -25,13 +25,11 @@ import numpy as np
 
 from ..model.rules import Predicate
 from .docmodel import DocPool, TYPE_DATE, TYPE_DOLLAR, TYPE_TEXT
-from .entity_gen import edit_distance as _edit_distance_raw
 from .entity_gen import edit_distance_capped as _edit_distance_capped_raw
 
-# Hot kernels memoized: blueprints compare fixed label vocabularies
+# Hot kernel memoized: blueprints compare fixed label vocabularies
 # against recurring entity texts, so (s1, s2) pairs repeat heavily both
 # within and across documents in a worker.
-edit_distance = lru_cache(maxsize=200_000)(_edit_distance_raw)
 edit_distance_capped = lru_cache(maxsize=200_000)(
     _edit_distance_capped_raw)
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Dict, List, Sequence, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 # (text, x0, x1, y0, y1) in page coordinates, y down — the same word
 # tuple the OCR parsers in spark/sources.py emit.
@@ -121,7 +121,9 @@ def write_simple_pdf(pages: Sequence[Dict], *,
 _OBJ_RE = re.compile(rb'(\d+) 0 obj(.*?)endobj', re.S)
 _STREAM_HEAD_RE = re.compile(rb'<<(.*?)>>\s*stream\r?\n', re.S)
 _STREAM_TAIL_RE = re.compile(rb'(.*?)\r?\nendstream', re.S)
-_LENGTH_RE = re.compile(rb'/Length\s+(\d+)\b')
+# /Length N, or an indirect /Length N G R (group 2 = generation)
+_LENGTH_RE = re.compile(rb'/Length\s+(\d+)(?:\s+(\d+)\s+R)?\b')
+_INT_OBJ_RE = re.compile(rb'\s*(\d+)\s*')
 _MEDIABOX_RE = re.compile(
     rb'/MediaBox\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)'
     rb'\s+([\d.+-]+)\s*\]')
@@ -216,20 +218,35 @@ def _words_from_content(text: str, h: float) -> List[Word]:
   return words
 
 
+def _stream_length(lm, objs: Dict[int, bytes]) -> Optional[int]:
+  """The byte count a `_LENGTH_RE` match names: the number itself, or
+  for an indirect reference the integer body of that (generation-0)
+  object; None when there is no /Length or the reference does not
+  resolve to an integer."""
+  if lm is None:
+    return None
+  if lm.group(2) is None:
+    return int(lm.group(1))
+  im = (_INT_OBJ_RE.fullmatch(objs.get(int(lm.group(1)), b''))
+        if lm.group(2) == b'0' else None)
+  return int(im.group(1)) if im else None
+
+
 def parse_pdf(payload: bytes) -> List[dict]:
   """PDF bytes → the OCR-parser page format
   [{'page_number', 'width', 'height', 'words': [(t,x0,x1,y0,y1)]}].
 
   Stream extraction honors the dict's /Length (the spec-authoritative
   byte count) and only falls back to the `...\\r?\\nendstream` scan
-  when /Length is absent or inconsistent.  The round-5 sf1 stress
-  found why this matters: FlateDecode data ending in byte 0x0D (\\r —
-  ~1/256 of real compressed streams; first hit at 8-digit doc ids)
-  had its last byte eaten by the terminator's optional \\r, producing
-  'incomplete or truncated stream' on an entirely valid PDF.  The
-  /Length slice is also taken from the RAW payload at the object's
-  absolute offset, so compressed bytes that happen to contain
-  'endobj' cannot truncate the object body either."""
+  when /Length is absent or inconsistent.  An indirect /Length
+  (`/Length 7 0 R`) is resolved to object 7's integer.  The round-5
+  sf1 stress found why this matters: FlateDecode data ending in byte
+  0x0D (\\r — ~1/256 of real compressed streams; first hit at 8-digit
+  doc ids) had its last byte eaten by the terminator's optional \\r,
+  producing 'incomplete or truncated stream' on an entirely valid PDF.
+  The /Length slice is also taken from the RAW payload at the object's
+  absolute offset, so compressed bytes that happen to contain 'endobj'
+  cannot truncate the object body either."""
   spans: Dict[int, Tuple[int, int]] = {
       int(m.group(1)): (m.start(2), m.end(2))
       for m in _OBJ_RE.finditer(payload)}
@@ -268,9 +285,8 @@ def parse_pdf(payload: bytes) -> List[dict]:
         head = hm.group(1)
         dstart = hm.end()
         data = None
-        lm = _LENGTH_RE.search(head)
-        if lm:
-          n_bytes = int(lm.group(1))
+        n_bytes = _stream_length(_LENGTH_RE.search(head), objs)
+        if n_bytes is not None:
           tail = payload[dstart + n_bytes:dstart + n_bytes + 12]
           # trust /Length only when the slice is actually followed by
           # the endstream keyword (malformed writers lie about Length;

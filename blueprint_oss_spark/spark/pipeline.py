@@ -124,28 +124,36 @@ def tree_from_payload(payload: bytes) -> Node:
 
 
 def pin_spark_zip_importers() -> None:
-  """Worker-side: make `importlib.invalidate_caches()` skip the zip
-  archives `pyspark` and `py4j` were imported from.
+  """Worker-side: make `importlib.invalidate_caches()` skip every zip
+  archive outside the SparkFiles root directory.
 
   PySpark's worker calls `importlib.invalidate_caches()` at the start of
   every task (pyspark/worker_util.py setup_spark_files).  Before
   CPython 3.13 each `zipimporter` then re-reads its whole archive
-  directory at once, and a worker holds one per package path inside
-  pyspark.zip (~14 over 1,328 entries): ~0.13 s of CPU per task.  Those
-  archives do not change while a worker lives, and 3.13 made the call
-  lazy, so there this does nothing.  Call it once per task: importers
-  created since the last call are pinned by the next one."""
+  directory at once.  A worker holds one per package path inside
+  pyspark.zip (~14 over 1,328 entries: ~0.13 s of CPU per task), one
+  over py4j's zip, and two over the spark-core jar Spark also puts on
+  the path (its root and `/org`, 10,718 entries: ~0.1 s per task).
+  Archives the launcher put on the path do not change while a worker
+  lives, so their importers are pinned.  Archives under the SparkFiles
+  root (`addPyFile` / `addArchive` files, which can change between
+  tasks) keep the stock behaviour; with no root set (outside a worker)
+  every importer is pinned.  3.13 made the call lazy, so there this
+  does nothing.  Call it once per task: importers created since the
+  last call are pinned by the next one."""
   if sys.version_info >= (3, 13):
     return
+  import os
   import zipimport
-  loaders = (getattr(sys.modules.get(name), '__loader__', None)
-             for name in ('pyspark', 'py4j'))
-  archives = {loader.archive for loader in loaders
-              if isinstance(loader, zipimport.zipimporter)}
+  from pyspark.core.files import SparkFiles
+  root = SparkFiles._root_directory
+  user_dir = os.path.join(os.path.abspath(root), '') if root else None
   for finder in list(sys.path_importer_cache.values()):
-    if isinstance(finder, zipimport.zipimporter) \
-        and finder.archive in archives:
-      finder.invalidate_caches = _keep_zip_directory
+    if not isinstance(finder, zipimport.zipimporter):
+      continue
+    if user_dir and os.path.abspath(finder.archive).startswith(user_dir):
+      continue  # an addPyFile / addArchive archive
+    finder.invalidate_caches = _keep_zip_directory
 
 
 def _keep_zip_directory() -> None:
@@ -479,9 +487,18 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
     cols = set(out.columns)
     metrics_exprs = [F.count(F.lit(1)).alias('docs')]
     if 'error' in cols:
+      # errors, and its split by the kernel's four error classes
+      err = F.col('error')
+      error_class = (F.when(err.startswith('budget:'), 'budget')
+                     .when(err == 'timeout', 'timeout')
+                     .when(err.startswith('malformed:'), 'malformed')
+                     .when(err.isNotNull(), 'other'))
       metrics_exprs.append(
-          F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
-          .alias('errors'))
+          F.sum(F.when(err.isNotNull(), 1).otherwise(0)).alias('errors'))
+      for c in ('budget', 'timeout', 'malformed', 'other'):
+        metrics_exprs.append(
+            F.sum(F.when(error_class == c, 1).otherwise(0))
+            .alias(f'errors_{c}'))
     if 'score' in cols:
       metrics_exprs.append(F.sum('score').alias('score_sum'))
     if 'elapsed_ms' in cols:

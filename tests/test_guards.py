@@ -166,6 +166,43 @@ def test_unparseable_file_is_malformed_row(spark, tmp_path):
     assert out[f'{doc_id}.json']['error'] is None
 
 
+def test_lineage_counts_errors_per_class(spark, tmp_path):
+  """run_extraction_job's lineage splits `errors` by the kernel's error
+  classes (the four counts sum to it): the doc-JSON whale over its
+  budget is a timeout and the unreadable files are malformed; over
+  spans, the span-count guard is a budget trip and a null spans array
+  is malformed."""
+  from blueprint_oss_spark.spark.pipeline import run_extraction_job
+
+  files = tmp_path / 'files'
+  files.mkdir()
+  docs = readme_corpus(4, seed=787)
+  for doc_id, spans in docs:
+    _write_doc_json(files / f'{doc_id}.json', doc_id, spans)
+  _write_doc_json(files / 'whale.json', 'whale', _inflate(docs[2][1], 400))
+  (files / 'truncated.json').write_text('{"type": "Document", "ent')
+  (files / 'wrong-shape.json').write_text('[1, 2, 3]')
+  spans_df = _df(spark, docs + [('whale', _inflate(docs[0][1], 30))]) \
+      .unionAll(spark.createDataFrame([('null-spans', None)], SPANS_SCHEMA))
+
+  runs = [
+      (read_files(spark, str(files / '*.json')),
+       dict(ocr_format='docjson', doc_time_budget_s=0.5),
+       dict(errors=3, errors_budget=0, errors_timeout=1,
+            errors_malformed=2, errors_other=0)),
+      (spans_df, dict(max_spans_per_doc=100),
+       dict(errors=2, errors_budget=1, errors_timeout=0,
+            errors_malformed=1, errors_other=0)),
+  ]
+  for i, (df, kwargs, want) in enumerate(runs):
+    [row] = run_extraction_job(spark, df.coalesce(1),
+                               str(tmp_path / f'out{i}'),
+                               readme_blueprint(), groups=1, **kwargs)
+    got = {k: row['metrics'][k] for k in want}
+    assert got == want
+    assert got['errors'] == sum(v for k, v in got.items() if k != 'errors')
+
+
 def test_cli_pdf_input_is_resumable_with_lineage(spark, tmp_path):
   """run_model over PDF files runs the resumable job: part_bucket
   output plus one lineage file per checkpoint group; a resumed run

@@ -2,6 +2,7 @@
 single-doc engine produces, and the resumable job must checkpoint."""
 
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -176,12 +177,21 @@ def test_run_extraction_job_resume_refuses_other_layout(spark, tmp_path):
 
 
 _ZIP_PROBE = r"""
-import importlib, sys, zipimport
+import importlib, json, os, sys, zipfile, zipimport
 from blueprint_oss_spark.spark.pipeline import pin_spark_zip_importers
 import py4j, pyspark
+from pyspark.core.files import SparkFiles
 zips = {m.__loader__.archive for m in (pyspark, py4j)
         if isinstance(m.__loader__, zipimport.zipimporter)}
 assert zips, 'pyspark/py4j not imported from a zip'
+# a stand-in SparkFiles root holding an addPyFile-style archive
+SparkFiles._root_directory = os.path.abspath(sys.argv[1])
+user_zip = os.path.join(SparkFiles._root_directory, 'user_dep.zip')
+with zipfile.ZipFile(user_zip, 'w') as z:
+  z.writestr('user_dep.py', 'VALUE = 1\n')
+sys.path.append(user_zip)
+import user_dep
+assert user_dep.__loader__.archive == user_zip
 reads = []
 read_directory = zipimport._read_directory
 def counting(archive):
@@ -189,53 +199,118 @@ def counting(archive):
   return read_directory(archive)
 zipimport._read_directory = counting
 importlib.invalidate_caches()
-before = len(reads)
+before = sorted(set(reads))
 pin_spark_zip_importers()
 pin_spark_zip_importers()
 del reads[:]
 importlib.invalidate_caches()
+after = list(reads)
 assert 'pyspark.streaming.util' not in sys.modules
 import pyspark.streaming.util as late
-pinned = sum('invalidate_caches' in vars(f)
-             for f in sys.path_importer_cache.values()
-             if isinstance(f, zipimport.zipimporter))
-print(before, len(reads), 'pyspark.zip' in late.__file__, pinned)
+pinned = sorted({f.archive for f in sys.path_importer_cache.values()
+                 if isinstance(f, zipimport.zipimporter)
+                 and 'invalidate_caches' in vars(f)})
+print(json.dumps({'before': before, 'after': after, 'pinned': pinned,
+                  'from_zip': 'pyspark.zip' in late.__file__,
+                  'user_zip': user_zip}))
 """
+
+
+def _spark_archives():
+  """Spark's pyspark.zip, py4j zip and spark-core jar — the archives a
+  Python worker's path holds — or a skip when they are not installed."""
+  import glob
+
+  import pyspark
+  homes = [os.path.dirname(pyspark.__file__)]
+  if os.environ.get('SPARK_HOME'):
+    homes.append(os.environ['SPARK_HOME'])
+  for home in homes:
+    lib = os.path.join(home, 'python', 'lib')
+    zips = (glob.glob(os.path.join(lib, 'pyspark.zip'))
+            + glob.glob(os.path.join(lib, 'py4j-*-src.zip')))
+    jars = glob.glob(os.path.join(home, 'jars', 'spark-core_*.jar'))
+    if len(zips) == 2 and jars:
+      return zips + jars[:1]
+  pytest.skip("no pyspark.zip + py4j zip + spark-core jar under Spark's "
+              "home")
 
 
 def test_pin_spark_zip_importers(tmp_path):
   """After the worker-side helper, importlib.invalidate_caches() no
-  longer re-reads the pyspark/py4j archive directories, and a
-  not-yet-imported pyspark module still imports from the zip.  On
+  longer re-reads the pyspark/py4j/spark-core archive directories, and a
+  not-yet-imported pyspark module still imports from the zip.  An
+  archive under the SparkFiles root stays unpinned and is re-read.  On
   CPython >= 3.13 (lazy invalidation) the helper changes nothing."""
-  import glob
+  import json
   import subprocess
-  import sys
 
-  import pyspark
-  lib_dirs = [os.path.join(os.path.dirname(pyspark.__file__),
-                           'python', 'lib')]
-  if os.environ.get('SPARK_HOME'):
-    lib_dirs.append(os.path.join(os.environ['SPARK_HOME'], 'python', 'lib'))
-  for lib in lib_dirs:
-    zips = (glob.glob(os.path.join(lib, 'pyspark.zip'))
-            + glob.glob(os.path.join(lib, 'py4j-*-src.zip')))
-    if len(zips) == 2:
-      break
-  else:
-    pytest.skip("no pyspark.zip + py4j zip in Spark's python/lib")
+  archives = _spark_archives()
   repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+  user_root = tmp_path / 'userFiles'
+  user_root.mkdir()
   r = subprocess.run(
-      [sys.executable, '-c', _ZIP_PROBE], capture_output=True, text=True,
-      cwd=str(tmp_path), timeout=120,
-      env={**os.environ, 'PYTHONPATH': os.pathsep.join(zips + [repo])})
+      [sys.executable, '-c', _ZIP_PROBE, str(user_root)],
+      capture_output=True, text=True, cwd=str(tmp_path), timeout=120,
+      env={**os.environ,
+           'PYTHONPATH': os.pathsep.join(archives + [repo])})
   assert r.returncode == 0, r.stderr
-  before, after, from_zip, pinned = r.stdout.split()
-  assert from_zip == 'True'
+  got = json.loads(r.stdout.splitlines()[-1])
+  assert got['from_zip']
   if sys.version_info >= (3, 13):
-    assert pinned == '0'
-  else:
-    assert int(before) > 0 and int(after) == 0 and int(pinned) > 0
+    assert got['pinned'] == []
+    return
+  # every Spark archive on the path was read before and is pinned now
+  assert set(archives) <= set(got['before'])
+  assert set(archives) <= set(got['pinned'])
+  assert got['user_zip'] in got['before']
+  assert got['user_zip'] not in got['pinned']
+  assert got['after'] == [got['user_zip']]
+
+
+def _zip_reads_in_task(batches):
+  """mapInPandas probe: zip directory reads of one
+  importlib.invalidate_caches() after the helper, inside a real task."""
+  import importlib
+  import zipimport
+
+  import pandas as pd
+
+  from blueprint_oss_spark.spark.pipeline import pin_spark_zip_importers
+
+  for _ in batches:
+    pass
+  pin_spark_zip_importers()
+  reads = []
+  read_directory = zipimport._read_directory
+
+  def counting(archive):
+    reads.append(archive)
+    return read_directory(archive)
+
+  zipimport._read_directory = counting
+  try:
+    importlib.invalidate_caches()
+  finally:
+    zipimport._read_directory = read_directory
+  unpinned = sorted({f.archive for f in sys.path_importer_cache.values()
+                     if isinstance(f, zipimport.zipimporter)
+                     and 'invalidate_caches' not in vars(f)})
+  yield pd.DataFrame({'reads': [len(reads)],
+                      'unpinned': [','.join(unpinned)]})
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason='invalidate_caches is lazy on CPython >= 3.13')
+def test_pin_spark_zip_importers_in_spark_task(spark):
+  """In a real Python worker, after the helper, the per-task
+  importlib.invalidate_caches() reads no zip directory: the spark-core
+  jar Spark puts on the worker's path is pinned along with pyspark.zip
+  and py4j."""
+  rows = (spark.range(1, numPartitions=1)
+          .mapInPandas(_zip_reads_in_task, 'reads long, unpinned string')
+          .collect())
+  assert [(r['reads'], r['unpinned']) for r in rows] == [(0, '')]
 
 
 def test_run_extraction_job_iceberg_contract(spark, tmp_path):
