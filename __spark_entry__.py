@@ -281,9 +281,11 @@ def _streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
   so the driver gate certifies the streaming maintenance end-to-end
   (state independence from micro-batch boundaries is the merge ≡ full
   property the events_cube row already certifies for the batch
-  split).  localCheckpoint pins the result so the temp state dir's
-  lifetime cannot matter to a later collect."""
+  split).  localCheckpoint pins the result, so the temp dir is removed
+  before returning; a stream that does not drain in 600 s, or drains
+  without committing state, raises instead."""
   import os
+  import shutil
   import tempfile
   from blueprint_oss_spark.ops import relational as RR
   from blueprint_oss_spark.spark.streaming import (
@@ -297,13 +299,20 @@ def _streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
   q = start_rollup_stream(spark, in_dir, os.path.join(td, 'state'),
                           os.path.join(td, 'ckpt'),
                           trigger_once=True, max_files_per_trigger=1)
-  q.awaitTermination(600)
+  if not q.awaitTermination(600):
+    q.stop()
+    raise RuntimeError('streaming_rollup: the rollup stream did not '
+                       'drain its four input files within 600 s')
   final = read_rollup_state(spark, os.path.join(td, 'state'))
-  return (RR.rollup_report(final)
-          .select('event_type', 'day', 'n_events', 'value_micro',
-                  'n_zero_regs', 'reg_checksum', 'hll_est')
-          .localCheckpoint(eager=True)
-          .orderBy('event_type', 'day'))
+  if final is None:
+    raise RuntimeError(f'streaming_rollup: the stream finished but '
+                       f'committed no rollup state under {td}/state')
+  pinned = (RR.rollup_report(final)
+            .select('event_type', 'day', 'n_events', 'value_micro',
+                    'n_zero_regs', 'reg_checksum', 'hll_est')
+            .localCheckpoint(eager=True))
+  shutil.rmtree(td)
+  return pinned.orderBy('event_type', 'day')
 
 
 def _ann_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:

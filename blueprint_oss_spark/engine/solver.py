@@ -46,6 +46,12 @@ _ORDERED_TREE_CACHE: Dict = {}
 # per-doc SIGALRM instead, bp/cli/run_model.py:32).
 MAX_PAIRS_PER_COMBINE = 4_000_000
 
+# Matches the message of either pair-budget trip (_bind_combine's product
+# over MAX_PAIRS_PER_COMBINE, or a component with no pairable edges), so
+# the job lineage can count them apart from the other budget errors.
+PAIR_BUDGET_MESSAGE = (r'(combine product \d+x\d+ exceeds budget'
+                       r'|component .* has no pairable edges)')
+
 
 class SolverBudgetError(RuntimeError):
   pass

@@ -26,22 +26,34 @@ thin adapters turn an input row into an engine/runner result:
     entity pool (sources.POOL_BUILDERS), then runner.extract_pool.
 Both run through `run_extraction_job`, so file inputs get the same
 lineage, resume and time budget as spans input.
+
+`run_extraction_job` runs its checkpoint groups as concurrent Spark
+jobs (at most defaultParallelism in flight, from driver threads), each
+over the input coalesced to ceil(n / groups) tasks: a run of n input
+splits has about n tasks, and no slot waits at one group's barrier
+while another group has work.  A failed group cancels the groups in
+flight and re-raises; the finished groups' lineage stands for resume.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import pickle
 import sys
 import time
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Iterable, Iterator, List, Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, LongType, MapType, StringType,
     StructField, StructType,
 )
+from pyspark.util import inheritable_thread_target
 
 from ..model.nodes import Node, optimize_rule_distribution
 from ..engine.runner import extract_pool, run_doc
@@ -341,22 +353,12 @@ def spans_from_documents(docs: DataFrame, words_per_line: int = 8,
                   .alias('spans')))
 
 
-def _write_group_iceberg(spark: SparkSession, observed: DataFrame,
-                         iceberg_table: Optional[str]) -> None:
-  """One checkpoint group → one atomic Iceberg snapshot commit via the
-  DataFrameWriterV2.  Create-on-first-write (partitioned by
-  part_bucket for pruned reads + idempotent group replays), then
-  `overwritePartitions()` — Iceberg's dynamic overwrite."""
-  if not iceberg_table:
-    raise ValueError("table_format='iceberg' requires iceberg_table "
-                     "(e.g. 'catalog.db.extractions')")
+@contextlib.contextmanager
+def _iceberg_errors(iceberg_table: str):
+  """Re-raise an Iceberg call's missing-catalog failure as a
+  RuntimeError naming the session setup it needs."""
   try:
-    table_exists = spark.catalog.tableExists(iceberg_table)
-    writer = observed.writeTo(iceberg_table)
-    if table_exists:
-      writer.overwritePartitions()
-    else:
-      writer.partitionedBy(F.col('part_bucket')).createOrReplace()
+    yield
   except Exception as e:  # surface the missing-catalog case clearly
     msg = str(e)
     if 'not found' in msg.lower() or 'catalog' in msg.lower() \
@@ -369,6 +371,20 @@ def _write_group_iceberg(spark: SparkSession, observed: DataFrame,
           f'--conf spark.sql.catalog.<name>=org.apache.iceberg.spark.'
           f'SparkCatalog (original error: {msg[:300]})') from e
     raise
+
+
+def _write_group_iceberg(observed: DataFrame, iceberg_table: str,
+                         create: bool) -> None:
+  """One checkpoint group → one atomic Iceberg snapshot commit via the
+  DataFrameWriterV2: `create` makes the table (partitioned by
+  part_bucket for pruned reads + idempotent group replays), otherwise
+  `overwritePartitions()` — Iceberg's dynamic overwrite."""
+  with _iceberg_errors(iceberg_table):
+    writer = observed.writeTo(iceberg_table)
+    if create:
+      writer.partitionedBy(F.col('part_bucket')).createOrReplace()
+    else:
+      writer.overwritePartitions()
 
 
 def dedup_spans(df: DataFrame) -> DataFrame:
@@ -387,6 +403,59 @@ def dedup_spans(df: DataFrame) -> DataFrame:
           .drop('_h', '_rn'))
 
 
+def _split_count(df: DataFrame) -> Optional[int]:
+  """`df`'s partition count, read from its physical plan without running
+  a Spark job; None for a plan with an exchange or a subquery (or one
+  AQE wraps), whose RDD runs stages just to be built — under AQE, a
+  `groupBy` input's whole shuffle."""
+  qe = df._jdf.queryExecution()
+  plan = qe.executedPlan().toString()
+  if any(k in plan for k in ('AdaptiveSparkPlan', 'Exchange', 'Subquery')):
+    return None
+  return qe.toRdd().getNumPartitions()
+
+
+def _run_groups(spark: SparkSession, run_group,
+                pending: List[int]) -> List[dict]:
+  """run_group(g) for every pending group, from at most
+  defaultParallelism driver threads: a slot one group's job frees takes
+  another group's task instead of idling at that job's barrier.  The
+  threads inherit the caller's job group, tags and description.  When a
+  group fails, the groups still in flight are cancelled and the first
+  error is re-raised; groups that finished keep their lineage, so a
+  resume skips them.  Returns run_group's rows in `pending` order."""
+  if not pending:
+    return []
+  sc = spark.sparkContext
+  tag = f'bp-extract-{uuid.uuid4().hex}'  # names this run's jobs only
+  sc.addJobTag(tag)
+  try:
+    # One wrap per group: a wrap clones the caller's local properties,
+    # and a clone shared by concurrent threads mixes up their SQL
+    # execution ids (a group's write would nest under another's).
+    wraps = [inheritable_thread_target(spark) for _ in pending]
+  finally:
+    sc.removeJobTag(tag)
+  # With py4j's pinned-thread mode off, pyspark hands back the session
+  # itself: no thread has local properties of its own to inherit.
+  targets = [run_group if w is spark else w(run_group) for w in wraps]
+  with ThreadPoolExecutor(min(len(pending), sc.defaultParallelism)) as pool:
+    futures = [pool.submit(t, g) for t, g in zip(targets, pending)]
+    done, running = wait(futures, return_when=FIRST_EXCEPTION)
+    errors = [f.exception() for f in futures
+              if f in done and f.exception() is not None]
+    if errors:
+      for f in running:
+        f.cancel()  # a group not started yet never starts
+      while running:
+        # again each round: a group that was still planning when the
+        # last cancel ran submits its job after it
+        sc.cancelJobsWithTag(tag)
+        _, running = wait(running, timeout=0.5)
+      raise errors[0]
+  return [f.result() for f in futures]
+
+
 def run_extraction_job(spark: SparkSession, input_df: DataFrame,
                        output_path: str, root: Optional[Node] = None, *,
                        groups: int = 4,
@@ -399,28 +468,41 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
 
   Documents hash into `groups` checkpoint groups, part_bucket =
   pmod(xxhash64(doc_id), groups), and group g is exactly the output
-  partition part_bucket=g: each task of a group writes one file, so a
-  group holds as many files as the input has splits.  Each completed
-  group writes its partition plus a lineage row recording `groups`; on
-  resume, completed groups are skipped (per-partition checkpointing per
-  the north rule).  An output whose lineage records a different
-  `groups` (or none: the older bucket_lo/bucket_hi layout) raises
-  ValueError instead of skipping groups by index.
-  Returns the lineage rows (one per group processed this run).
+  partition part_bucket=g.  Each group is one Spark job whose input is
+  coalesced to ceil(n / groups) tasks, n the input's partition count:
+  every task reads `groups` splits and keeps about one split's worth of
+  documents, so a run has about n tasks rather than groups × n, and
+  each group writes ceil(n / groups) files.  (An input whose plan
+  already has a shuffle keeps its partitions: counting them would run
+  it.)  The pending groups run concurrently, at most
+  defaultParallelism at a time, from driver threads that inherit the
+  caller's job group, tags and description.
+
+  Each completed group writes its partition plus a lineage row
+  recording `groups`; on resume, completed groups are skipped
+  (per-partition checkpointing per the north rule).  If a group fails,
+  the groups still in flight are cancelled and the first error is
+  re-raised; the groups that finished have their lineage, so a rerun
+  processes only the rest.  An output whose lineage records a
+  different `groups` (or none: the older bucket_lo/bucket_hi layout)
+  raises ValueError instead of skipping groups by index.
+  Returns the lineage rows (one per group processed this run), in
+  group order.
 
   Sinks: `table_format='parquet'` (default) writes dynamic-overwrite
   partitioned parquet under `output_path`.  `table_format='iceberg'`
   writes each checkpoint group to `iceberg_table` through the
-  DataFrameWriterV2 (`writeTo`): the first group creates the table
-  partitioned by part_bucket, later groups `overwritePartitions()` —
-  each group is one ATOMIC Iceberg snapshot commit, so a crashed group
-  re-runs cleanly on resume exactly like the parquet path's dynamic
-  partition overwrite.  Requires an Iceberg catalog on the session
-  (spark-submit --packages org.apache.iceberg:iceberg-spark-runtime +
-  spark.sql.catalog.* conf); absent that, the write raises a clear
-  RuntimeError naming the missing setup (this container ships no
-  Iceberg jars, so the branch is exercised for its failure contract
-  and the parquet path for the full behavior).
+  DataFrameWriterV2 (`writeTo`): if the table does not exist, the first
+  group runs alone and creates it partitioned by part_bucket, then the
+  rest `overwritePartitions()` concurrently — each group is one ATOMIC
+  Iceberg snapshot commit, so a crashed group re-runs cleanly on resume
+  exactly like the parquet path's dynamic partition overwrite.
+  Requires an Iceberg catalog on the session (spark-submit --packages
+  org.apache.iceberg:iceberg-spark-runtime + spark.sql.catalog.*
+  conf); absent that, the job raises a clear RuntimeError naming the
+  missing setup (this container ships no Iceberg jars, so the branch
+  is exercised for its failure contract and the parquet path for the
+  full behavior).
 
   `transform` generalizes the per-group computation: any
   DataFrame → DataFrame doc-level pipeline (e.g. the main-content
@@ -430,13 +512,14 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   Group metrics adapt to the output schema (docs always;
   errors/score_sum/elapsed_ms when present).
   """
-  import json
-
   if transform is None:
     if root is None:
       raise ValueError('run_extraction_job needs root= or transform=')
     def transform(part):  # noqa: E306 - default blueprint pipeline
       return extract_documents(part, root, **extract_kwargs)
+  if table_format == 'iceberg' and not iceberg_table:
+    raise ValueError("table_format='iceberg' requires iceberg_table "
+                     "(e.g. 'catalog.db.extractions')")
 
   # Lineage I/O goes through the Hadoop FileSystem API (via the JVM),
   # not the local os module, so checkpoint/resume works unchanged when
@@ -474,20 +557,22 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
 
   df = input_df.withColumn(
       'part_bucket', F.pmod(F.xxhash64('doc_id'), F.lit(groups)))
+  n_splits = _split_count(input_df)
+  group_tasks = (None if n_splits is None
+                 else -(-n_splits // groups))  # ceil(n_splits / groups)
 
-  lineage_rows = []
-  for g in range(groups):
-    if g in done_groups:
-      continue
-    part = df.where(F.col('part_bucket') == g)
-    out = transform(part.drop('part_bucket'))
+  def run_group(g: int, create: bool = False) -> dict:
+    part = df.where(F.col('part_bucket') == g).drop('part_bucket')
+    if group_tasks is not None and group_tasks < n_splits:
+      part = part.coalesce(group_tasks)
+    out = transform(part)
     out = out.withColumn('part_bucket', F.lit(g).cast('long'))
-    from pyspark.sql import Observation
     obs = Observation(f'bp_group_{g}')
     cols = set(out.columns)
     metrics_exprs = [F.count(F.lit(1)).alias('docs')]
     if 'error' in cols:
-      # errors, and its split by the kernel's four error classes
+      # errors, and its split by the kernel's four error classes; the
+      # solver's pair-budget trips are also counted within `budget`
       err = F.col('error')
       error_class = (F.when(err.startswith('budget:'), 'budget')
                      .when(err == 'timeout', 'timeout')
@@ -499,6 +584,10 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
         metrics_exprs.append(
             F.sum(F.when(error_class == c, 1).otherwise(0))
             .alias(f'errors_{c}'))
+      pair_trip = err.rlike(f'^budget: {solver_mod.PAIR_BUDGET_MESSAGE}$')
+      metrics_exprs.append(
+          F.sum(F.when(pair_trip, 1).otherwise(0))
+          .alias('errors_budget_pairs'))
     if 'score' in cols:
       metrics_exprs.append(F.sum('score').alias('score_sum'))
     if 'elapsed_ms' in cols:
@@ -520,9 +609,10 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
     # Dynamic partition overwrite: a re-run of this group replaces
     # exactly its own part_bucket partition, so resuming after a
     # partially-written group (crash between data write and lineage
-    # write) cannot leave duplicate rows behind.
+    # write) cannot leave duplicate rows behind.  Each write stages
+    # under its own directory, so concurrent groups do not collide.
     if table_format == 'iceberg':
-      _write_group_iceberg(spark, observed, iceberg_table)
+      _write_group_iceberg(observed, iceberg_table, create)
     else:
       (observed.write.mode('overwrite')
        .option('partitionOverwriteMode', 'dynamic')
@@ -538,5 +628,13 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
     out_stream = fs.create(_hpath(f'{lineage_dir}/group-{g}.json'), True)
     out_stream.write(bytearray(json.dumps(row).encode('utf-8')))
     out_stream.close()
-    lineage_rows.append(row)
-  return lineage_rows
+    return row
+
+  pending = [g for g in range(groups) if g not in done_groups]
+  lineage_rows = []
+  if pending and table_format == 'iceberg':
+    with _iceberg_errors(iceberg_table):
+      exists = spark.catalog.tableExists(iceberg_table)
+    if not exists:  # the creating commit runs before any overwrite
+      lineage_rows.append(run_group(pending.pop(0), create=True))
+  return lineage_rows + _run_groups(spark, run_group, pending)

@@ -203,6 +203,28 @@ def test_lineage_counts_errors_per_class(spark, tmp_path):
     assert got['errors'] == sum(v for k, v in got.items() if k != 'errors')
 
 
+def test_lineage_counts_pair_budget_trips(spark, tmp_path):
+  """`errors_budget_pairs` counts the `budget:` rows whose message is
+  one of the solver's two pair-budget trips; other budget trips, and a
+  pair-budget message outside the budget class, are not counted."""
+  from blueprint_oss_spark.spark.pipeline import run_extraction_job
+
+  errors = [
+      'budget: combine product 2001x2001 exceeds budget',
+      "budget: component ['date', 'total'] has no pairable edges",
+      'budget: 300001 spans exceeds max_spans_per_doc',
+      'error: SolverBudgetError: combine product 9x9 exceeds budget',
+      'timeout', None,
+  ]
+  df = spark.createDataFrame([(f'd{i}', e) for i, e in enumerate(errors)],
+                             'doc_id string, error string')
+  [row] = run_extraction_job(spark, df, str(tmp_path / 'out'), groups=1,
+                             transform=lambda part: part)
+  got = {k: row['metrics'][k]
+         for k in ('errors', 'errors_budget', 'errors_budget_pairs')}
+  assert got == dict(errors=5, errors_budget=3, errors_budget_pairs=2)
+
+
 def test_cli_pdf_input_is_resumable_with_lineage(spark, tmp_path):
   """run_model over PDF files runs the resumable job: part_bucket
   output plus one lineage file per checkpoint group; a resumed run

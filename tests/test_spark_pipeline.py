@@ -1,14 +1,17 @@
 """Spark-shell tests: the bulk pipeline must produce exactly what the
 single-doc engine produces, and the resumable job must checkpoint."""
 
+import json
 import os
 import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.engine.runner import run_doc
 from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
+from blueprint_oss_spark.spark import pipeline
 from blueprint_oss_spark.spark.pipeline import (
     SPANS_SCHEMA, extract_documents, run_extraction_job,
     spans_from_documents,
@@ -115,8 +118,9 @@ def test_run_extraction_job_resume(spark, tmp_path):
 
 def test_run_extraction_job_one_partition_per_group(spark, tmp_path):
   """Group g is exactly the output partition part_bucket=g =
-  pmod(xxhash64(doc_id), groups): each input split writes at most one
-  file per group, and every row equals the in-process engine's."""
+  pmod(xxhash64(doc_id), groups): a group writes one file per task,
+  ceil(splits / groups) of them, and every row equals the in-process
+  engine's."""
   docs = readme_corpus(12, seed=81)
   root = readme_blueprint()
   inp = str(tmp_path / 'in')
@@ -131,7 +135,7 @@ def test_run_extraction_job_one_partition_per_group(spark, tmp_path):
   assert dirs == ['part_bucket=0', 'part_bucket=1']
   for d in dirs:
     files = [f for f in os.listdir(out_path / d) if f.endswith('.parquet')]
-    assert 1 <= len(files) <= 2, (d, files)
+    assert len(files) == 1, (d, files)
 
   rows = (spark.read.parquet(str(out_path))
           .withColumn('want', F.pmod(F.xxhash64('doc_id'), F.lit(2)))
@@ -174,6 +178,183 @@ def test_run_extraction_job_resume_refuses_other_layout(spark, tmp_path):
       '{"group": 0, "bucket_lo": 0, "bucket_hi": 32, "metrics": {}}')
   with pytest.raises(ValueError, match='groups=None'):
     run_extraction_job(spark, df, out_path, root, groups=2)
+
+
+def _group_of(part, groups):
+  """The checkpoint group whose documents the non-empty `part` holds."""
+  [row] = (part.select(F.pmod(F.xxhash64('doc_id'), F.lit(groups))
+                       .alias('g')).limit(1).collect())
+  return row['g']
+
+
+def _job_output(spark, out):
+  """(rows, {group: doc_set_checksum}) of a finished job's output."""
+  rows = sorted(
+      (r['doc_id'], r['part_bucket'], r['score'], r['error'],
+       sorted(r['fields'].items()), [tuple(s) for s in r['out_spans']])
+      for r in spark.read.parquet(str(out)).collect())
+  lineage = [json.loads(p.read_text())
+             for p in (out / '_lineage').glob('group-*.json')]
+  return rows, {d['group']: d['metrics']['doc_set_checksum']
+                for d in lineage}
+
+
+def test_run_extraction_job_failed_group_resumes(spark, tmp_path):
+  """One group fails while the others run concurrently: the job raises,
+  the finished groups keep their partitions and lineage, and a rerun
+  processes only the failed group, ending at the rows and per-group
+  doc_set_checksums of an uninterrupted run."""
+  df = _spans_df(spark, readme_corpus(24, seed=83))
+  root = readme_blueprint()
+  out = tmp_path / 'out'
+  others = [out / '_lineage' / f'group-{g}.json' for g in (0, 1, 3)]
+
+  def transform(part):
+    g = _group_of(part, 4)
+    if g == 2:
+      # fail once the other groups are done, so the failure cancels
+      # none of them
+      deadline = time.monotonic() + 120
+      while (not all(p.exists() for p in others)
+             and time.monotonic() < deadline):
+        time.sleep(0.1)
+      raise RuntimeError(f'planted failure in group {g}')
+    return extract_documents(part, root)
+
+  with pytest.raises(RuntimeError, match='planted failure in group 2'):
+    run_extraction_job(spark, df, str(out), transform=transform, groups=4)
+  assert sorted(p.name for p in (out / '_lineage').glob('group-*.json')) \
+      == ['group-0.json', 'group-1.json', 'group-3.json']
+  assert sorted(d for d in os.listdir(out) if d.startswith('part_')) == \
+      ['part_bucket=0', 'part_bucket=1', 'part_bucket=3']
+
+  redo = run_extraction_job(spark, df, str(out), root, groups=4)
+  assert [r['group'] for r in redo] == [2]
+  clean = tmp_path / 'clean'
+  run_extraction_job(spark, df, str(clean), root, groups=4)
+  rows, checksums = _job_output(spark, out)
+  assert len(rows) == 24 and sorted(checksums) == [0, 1, 2, 3]
+  assert (rows, checksums) == _job_output(spark, clean)
+
+
+def _stall(doc_id):
+  time.sleep(30)
+  return doc_id
+
+
+def test_run_extraction_job_failure_cancels_groups_in_flight(spark,
+                                                             tmp_path):
+  """A failing group cancels the group still in flight instead of
+  waiting it out, and the cancelled group leaves no lineage."""
+  df = _spans_df(spark, readme_corpus(8, seed=84))
+  out = tmp_path / 'out'
+  stall = F.udf(_stall, 'string')
+
+  def transform(part):
+    if _group_of(part, 2) == 0:
+      return part.select(stall('doc_id').alias('doc_id'))
+    raise RuntimeError('planted failure')
+
+  t0 = time.monotonic()
+  with pytest.raises(RuntimeError, match='planted failure'):
+    run_extraction_job(spark, df, str(out), transform=transform, groups=2)
+  assert time.monotonic() - t0 < 25
+  assert not list((out / '_lineage').glob('group-*.json'))
+
+
+def test_run_extraction_job_task_shape(spark, tmp_path):
+  """Reading the split count runs no job, and an input that already
+  has a shuffle keeps its partitions.  Each group is one job of
+  ceil(splits / groups) tasks, under the caller's job group, and its
+  write is a root SQL execution of its own."""
+  inp = str(tmp_path / 'in')
+  _spans_df(spark, readme_corpus(16, seed=85)).repartition(4) \
+      .write.parquet(inp)
+  scan = spark.read.parquet(inp)
+  shuffled = scan.groupBy('doc_id').agg(F.first('spans').alias('spans'))
+  sc = spark.sparkContext
+  tracker = sc.statusTracker()
+  try:
+    sc.setJobGroup('split-count', 'split count')
+    assert pipeline._split_count(scan) == 4
+    assert pipeline._split_count(shuffled) is None
+    assert list(tracker.getJobIdsForGroup('split-count')) == []
+    sc.setJobGroup('task-shape', 'concurrent groups')
+    lineage = run_extraction_job(spark, scan, str(tmp_path / 'out'),
+                                 readme_blueprint(), groups=2)
+  finally:
+    sc._jsc.clearJobGroup()
+  assert [r['group'] for r in lineage] == [0, 1]
+  assert sum(r['metrics']['docs'] for r in lineage) == 16
+  jobs = list(tracker.getJobIdsForGroup('task-shape'))
+  stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+  assert [tracker.getStageInfo(s).numTasks for s in stages] == [2, 2]
+  executions = {}
+  it = spark._jsparkSession.sharedState().statusStore() \
+      .executionsList().iterator()
+  while it.hasNext():
+    e = it.next()
+    for j in jobs:
+      if e.jobs().contains(j):
+        executions[j] = (e.executionId(), e.rootExecutionId())
+  assert len(executions) == 2
+  assert len({e for e, _ in executions.values()}) == 2
+  assert all(e == root_id for e, root_id in executions.values())
+
+
+def test_run_extraction_job_iceberg_creates_before_overwrites(
+    spark, tmp_path, monkeypatch):
+  """Against an Iceberg table that does not exist yet, the first
+  group's write (the create) returns before any other group's write
+  starts; the other groups overwrite their partitions."""
+  events = []
+
+  def write(observed, table, create):
+    events.append(('start', create))
+    if create:
+      time.sleep(0.5)
+    observed.write.format('noop').mode('overwrite').save()
+    events.append(('end', create))
+
+  monkeypatch.setattr(pipeline, '_write_group_iceberg', write)
+  monkeypatch.setattr(spark.catalog, 'tableExists', lambda name: False)
+  lineage = run_extraction_job(
+      spark, _spans_df(spark, readme_corpus(12, seed=86)),
+      str(tmp_path / 'out'), readme_blueprint(), groups=3,
+      table_format='iceberg', iceberg_table='cat.db.extractions')
+  assert [r['group'] for r in lineage] == [0, 1, 2]
+  assert events[:2] == [('start', True), ('end', True)]
+  assert sorted(events[2:]) == [('end', False)] * 2 + [('start', False)] * 2
+
+
+_UNPINNED_RUN = r"""
+import json, sys
+from pyspark.sql import SparkSession
+from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
+from blueprint_oss_spark.spark.pipeline import run_extraction_job, spans_frame
+spark = (SparkSession.builder.master('local[2]')
+         .config('spark.ui.enabled', 'false').getOrCreate())
+lineage = run_extraction_job(
+    spark, spans_frame(spark, readme_corpus(8, seed=87)), sys.argv[1],
+    readme_blueprint(), groups=3)
+print(json.dumps([r['metrics']['docs'] for r in lineage]))
+spark.stop()
+"""
+
+
+def test_run_extraction_job_without_pinned_threads(tmp_path):
+  """With py4j's pinned-thread mode off (PYSPARK_PIN_THREAD=false), the
+  groups still run from driver threads."""
+  import subprocess
+
+  repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+  r = subprocess.run(
+      [sys.executable, '-c', _UNPINNED_RUN, str(tmp_path / 'out')],
+      capture_output=True, text=True, cwd=str(tmp_path), timeout=300,
+      env={**os.environ, 'PYSPARK_PIN_THREAD': 'false',
+           'PYTHONPATH': repo})
+  assert r.returncode == 0, r.stderr
+  assert sum(json.loads(r.stdout.splitlines()[-1])) == 8
 
 
 _ZIP_PROBE = r"""
