@@ -136,7 +136,6 @@ AMOUNT_SYMBOLS = '$:*,. '
 PAYOR_SYMBOLS = "':.,-/ "
 DATE_SYMBOLS = ':/-, '
 CHECK_NUMBER_SYMBOLS = '- '
-MICR_SYMBOLS = ':|'
 
 STREET_WORDS = ('STREET', 'ST', 'ST.', 'DRIVE', 'DR', 'DR.',
                 'ROAD', 'RD', 'RD.', 'BOX', 'BLVD', 'BLVD.')
@@ -213,16 +212,6 @@ is_check_number = all_hold(
         legal_chars=NUMBERS + CHECK_NUMBER_SYMBOLS,
         tolerance=0, taper=2),
     line_count_is({1: 1, 2: 0}))
-
-is_routing_number = text_properties_are(
-    length={'at_least': 9, 'at_most': 9},
-    legal_chars=NUMBERS + CHECK_NUMBER_SYMBOLS + MICR_SYMBOLS,
-    tolerance=1, taper=3)
-
-is_account_number = text_properties_are(
-    length={'at_least': 6, 'at_most': 12},
-    legal_chars=NUMBERS + CHECK_NUMBER_SYMBOLS + MICR_SYMBOLS,
-    tolerance=1, taper=3)
 
 is_payor = all_hold(
     is_entire_phrase,

@@ -122,13 +122,6 @@ def load_model(path: Path) -> Node:
 # Save (emit reference-loadable JSON for the registry subset).
 # ---------------------------------------------------------------------------
 
-_SAVABLE_KINDS = {
-    'text_equals', 'are_aligned', 'are_arranged', 'are_on_same_page',
-    'box_unimpinged', 'is_date', 'is_dollar_amount', 'is_address',
-    'is_person_name', 'is_entire_phrase',
-}
-
-
 def _dump_predicate(p: R.Predicate) -> Dict[str, Any]:
   u = str(uuid_mod.uuid4())
   if p.kind == 'text_equals':

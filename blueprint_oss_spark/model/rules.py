@@ -691,8 +691,6 @@ is_nonnegative = is_greater_than(0, strict=False)
 # ---------------------------------------------------------------------------
 
 LETTERS = 'ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz'
-IMPINGEMENT_SMALL_INSET = 0.25
-IMPINGEMENT_LARGE_INSET = 1.0
 
 
 def _unimpinged(region: str, direction: str, degree: int,

@@ -154,15 +154,17 @@ def decontaminate(spark: SparkSession, sf_dir: str, *,
 
 
 def _bloom_doc_grams(text: str, n: int):
-  """Distinct word n-grams of one document, Python-side — the Arrow-
-  stage twin of `_ngrams` with IDENTICAL token semantics: `_ngrams`
-  tokenizes as split(lower(trim(text)), r'\\s+') with empties dropped,
-  i.e. maximal runs of non-[ \\t\\n\\x0B\\f\\r] characters of the
-  lowercased text (Java regex \\s is the ASCII class; trim only strips
-  the separator ' ' so it cannot change the token stream).  ASCII-safe
-  by construction; full-unicode lower() edge cases would need the
-  JVM formulation back."""
-  toks = _BLOOM_TOKEN_RE.findall(text.lower())
+  """Distinct word n-grams of one ALREADY-LOWERED document, Python-side
+  — the Arrow-stage twin of `_ngrams` with IDENTICAL token semantics:
+  `_ngrams` tokenizes as split(lower(trim(text)), r'\\s+') with empties
+  dropped, i.e. maximal runs of non-[ \\t\\n\\x0B\\f\\r] characters
+  (Java regex \\s is the ASCII class; trim only strips the separator
+  ' ' so it cannot change the token stream).  The caller lowers on the
+  JVM (F.lower): Python's str.lower disagrees with it on some code
+  points (U+1C89, U+A7CB and U+10D50..U+10D65 among them on CPython
+  3.11 with Spark 4.1), and a gram lowered differently on the two
+  paths would be a false negative."""
+  toks = _BLOOM_TOKEN_RE.findall(text)
   if len(toks) < n:
     return ()
   return {' '.join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
@@ -231,15 +233,17 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
   from hashlib import md5 as _md5
 
   # spread the RAW text scan (single-split guard) BEFORE filtering:
-  # both the build and probe Arrow stages inherit the spread
+  # both the build and probe Arrow stages inherit the spread.  Both
+  # stages take JVM-lowered text (see _bloom_doc_grams).
+  lowered = F.lower('text').alias('text')
   base = _spread((docs if docs is not None else _docs(spark, sf_dir))
                  .select('doc_id', 'text'))
   if eval_texts is not None:
-    eval_side = eval_texts.select('text')
+    eval_side = eval_texts.select(lowered)
     train = base
   else:
     is_eval = F.col('doc_id') % eval_mod == 0
-    eval_side = base.filter(is_eval).select('text')
+    eval_side = base.filter(is_eval).select(lowered)
     train = base.filter(~is_eval)
 
   def _build_batches(batches):
@@ -311,7 +315,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
 
   return presented(
       train
-      .select('doc_id', 'text')
+      .select('doc_id', lowered)
       .mapInPandas(_probe_batches, 'doc_id long, n_flagged long'),
       'doc_id', sort=sort)
 

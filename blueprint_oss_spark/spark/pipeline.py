@@ -3,16 +3,14 @@
 Shape of the job (SURVEY.md §7):
 
     scan (doc_id, spans)            -- Iceberg/parquet; one row per doc
-      → [optional salted repartition by size bucket]   -- only for skew
       → mapInPandas(extract)        -- Arrow batches; entity-gen + CSP
       → write, one partition per group, with lineage   -- resumable
 
 Because the input is already one-row-per-document, the happy path has
 ZERO shuffles: Spark pipelines scan → Arrow batch → Python → write.
 Catalyst still provides column pruning / partition pruning on the scan;
-document skew is handled by (a) Arrow batch sizing, (b) the optional
-size-bucketed repartition for pathological span-count distributions,
-(c) per-document time/size budgets mirroring the reference's 45 s CLI
+document skew is handled by (a) Arrow batch sizing and (b)
+per-document time/size budgets mirroring the reference's 45 s CLI
 timeout (bp/cli/run_model.py:32) — a doc over budget produces an `error`
 row instead of stalling an executor core.
 
@@ -265,9 +263,7 @@ def _extraction_kernel(bc, value_col: str, solve,
 def extract_documents(df: DataFrame, root: Node, *,
                       ocr_format: Optional[str] = None,
                       doc_time_budget_s: float = 45.0,
-                      max_spans_per_doc: int = 200_000,
-                      size_bucketed_repartition: bool = False,
-                      num_partitions: Optional[int] = None) -> DataFrame:
+                      max_spans_per_doc: int = 200_000) -> DataFrame:
   """Bulk extraction: one OUTPUT_SCHEMA row per input document.
 
   Args:
@@ -278,33 +274,30 @@ def extract_documents(df: DataFrame, root: Node, *,
       sources.POOL_BUILDERS (google / ibocr / hocr / pdf / docjson).
     doc_time_budget_s: per-document wall budget (reference default 45 s).
     max_spans_per_doc: guard against pathological span documents.
-    size_bucketed_repartition: opt-in shuffle that spreads documents by
-      (log2 span count or file bytes, random salt) so heavy-tailed
-      corpora don't straggle single partitions.  Costs one shuffle —
-      leave off unless the input layout is known-skewed.
   """
   spark = df.sparkSession
   payload = compile_blueprint(root)
   bc = spark.sparkContext.broadcast(payload)
 
   if ocr_format is None:
-    value_col, size = 'spans', F.size('spans')
-    solve = _solve_spans(max_spans_per_doc)
+    value_col, solve = 'spans', _solve_spans(max_spans_per_doc)
   else:
-    value_col, size = 'content', F.length('content')
-    solve = _solve_file(ocr_format)
-
-  if size_bucketed_repartition:
-    n = num_partitions or spark.sparkContext.defaultParallelism * 4
-    df = (df
-          .withColumn('_sz', F.log2(size + F.lit(2)).cast('int'))
-          .withColumn('_salt', (F.rand(seed=42) * 1024).cast('int'))
-          .repartition(n, F.col('_sz'), F.col('_salt'))
-          .drop('_sz', '_salt'))
+    value_col, solve = 'content', _solve_file(ocr_format)
 
   return df.mapInPandas(
       _extraction_kernel(bc, value_col, solve, doc_time_budget_s),
       OUTPUT_SCHEMA)
+
+
+def job_transform(root: Optional[Node], transform, **extract_kwargs):
+  """The doc-level DataFrame → DataFrame pipeline of a job:
+  `transform` if given, else blueprint extraction with `root`
+  (extract_documents(part, root, **extract_kwargs))."""
+  if transform is not None:
+    return transform
+  if root is None:
+    raise ValueError('a job needs root= or transform=')
+  return lambda part: extract_documents(part, root, **extract_kwargs)
 
 
 def spans_from_documents(docs: DataFrame, words_per_line: int = 8,
@@ -512,11 +505,7 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   Group metrics adapt to the output schema (docs always;
   errors/score_sum/elapsed_ms when present).
   """
-  if transform is None:
-    if root is None:
-      raise ValueError('run_extraction_job needs root= or transform=')
-    def transform(part):  # noqa: E306 - default blueprint pipeline
-      return extract_documents(part, root, **extract_kwargs)
+  transform = job_transform(root, transform, **extract_kwargs)
   if table_format == 'iceberg' and not iceberg_table:
     raise ValueError("table_format='iceberg' requires iceberg_table "
                      "(e.g. 'catalog.db.extractions')")

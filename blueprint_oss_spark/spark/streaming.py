@@ -1,11 +1,23 @@
-"""Structured Streaming extraction: the same mapInPandas stage applied to
-a stream of (doc_id, spans) documents.
+"""Structured Streaming: the batch job's stages applied to file-source
+streams.
 
-The extraction map is stateless per document, so it composes with any
-streaming source (file source, Kafka) and sink; exactly-once comes from
-the sink's checkpointing.  The reference has no streaming path (its CLI
-loop is serial, bp/cli/run_model.py:123-147) — this is the Spark-native
-continuous-ingest surface for the same engine.
+One job shape.  Every stream reads parquet files landing in a directory
+(`_read_stream`, maxFilesPerTrigger-bounded micro-batches) and starts
+through one checkpointed sink (`_start`): a parquet path, or a
+foreachBatch function for sinks that need batch scope.  Restarting with
+the same checkpoint resumes exactly-once; `trigger_once` (availableNow)
+drains the current backlog and stops.
+
+  * start_extraction_stream — the doc-level transform of
+    run_extraction_job (blueprint extraction from `root=`, or any
+    `transform=` such as ops/html_extract.main_content_from_spans) over
+    a stream of (doc_id, spans) documents.  The transform is stateless
+    per document, so it composes with any streaming source and sink.
+    The reference has no streaming path (its CLI loop is serial,
+    bp/cli/run_model.py:123-147).
+  * start_incremental_dedup_stream, start_validation_stream,
+    start_rollup_stream — foreachBatch around the batch operators.
+  * start_attribution_join_stream — a watermarked stream-stream join.
 
 Stateful surface:
   * assemble_multipart_stream — documents whose parts (pages) land in
@@ -14,6 +26,7 @@ Stateful surface:
     span fragments until all n_parts arrived (emit assembled doc) or
     the event-time timeout fires (emit what arrived, flagged partial —
     a straggler page must not pin state forever).
+  * dedup_span_stream — content dedup within a watermark horizon.
   * windowed_extraction_metrics — event-time windowed quality metrics
     over the extraction output with a watermark so late rows update
     the right window and state is eventually evicted.
@@ -23,7 +36,7 @@ Stateful surface:
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Optional, Tuple
+from typing import Callable, Iterable, Iterator, Optional, Tuple, Union
 
 import pandas as pd
 
@@ -38,34 +51,63 @@ from pyspark.sql.types import (
 )
 
 from ..model.nodes import Node
-from .pipeline import SPAN_STRUCT, SPANS_SCHEMA, extract_documents
+from .pipeline import SPAN_STRUCT, SPANS_SCHEMA, job_transform
+
+
+def _read_stream(spark: SparkSession, schema: StructType, input_dir: str,
+                 max_files_per_trigger: int) -> DataFrame:
+  """File-source stream of the parquet files landing in input_dir."""
+  return (spark.readStream
+          .schema(schema)
+          .option('maxFilesPerTrigger', max_files_per_trigger)
+          .parquet(input_dir))
+
+
+def _start(stream: DataFrame,
+           sink: Union[str, Callable[[DataFrame, int], None]],
+           checkpoint_dir: str, trigger_once: bool) -> StreamingQuery:
+  """Start `stream` into `sink` — an append-mode parquet output
+  directory, or a foreachBatch function (batch_df, batch_id) for sinks
+  that need batch scope — checkpointed in checkpoint_dir."""
+  writer = (stream.writeStream
+            .option('checkpointLocation', checkpoint_dir)
+            .outputMode('append'))
+  if callable(sink):
+    writer = writer.foreachBatch(sink)
+  else:
+    writer = writer.format('parquet').option('path', sink)
+  if trigger_once:
+    writer = writer.trigger(availableNow=True)
+  return writer.start()
 
 
 def read_span_stream(spark: SparkSession, input_dir: str,
                      max_files_per_trigger: int = 16) -> DataFrame:
   """File-source stream of interleaved span documents (parquet files
   landing in input_dir)."""
-  return (spark.readStream
-          .schema(SPANS_SCHEMA)
-          .option('maxFilesPerTrigger', max_files_per_trigger)
-          .parquet(input_dir))
+  return _read_stream(spark, SPANS_SCHEMA, input_dir,
+                      max_files_per_trigger)
 
 
 def start_extraction_stream(spark: SparkSession, input_dir: str,
                             output_dir: str, checkpoint_dir: str,
-                            root: Node, *,
-                            trigger_once: bool = False) -> StreamingQuery:
-  """readStream → extract → writeStream(parquet) with checkpointing.
-  Restarting with the same checkpoint resumes exactly-once."""
-  out = extract_documents(read_span_stream(spark, input_dir), root)
-  writer = (out.writeStream
-            .format('parquet')
-            .option('path', output_dir)
-            .option('checkpointLocation', checkpoint_dir)
-            .outputMode('append'))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
+                            root: Optional[Node] = None, *,
+                            transform=None,
+                            trigger_once: bool = False,
+                            max_files_per_trigger: int = 16) \
+    -> StreamingQuery:
+  """File stream → transform → checkpointed parquet sink.
+
+  The transform is resolved as in run_extraction_job: `transform` if
+  given (e.g. main_content_from_spans, which strips boilerplate /
+  parses PDFs / reassembles span sequences), else blueprint extraction
+  with `root`.  Both are stateless Arrow-batched mapInPandas stages, so
+  each micro-batch is the batch job over the files that landed, and a
+  restart with the same checkpoint replays nothing already committed."""
+  transform = job_transform(root, transform)
+  stream = read_span_stream(spark, input_dir, max_files_per_trigger)
+  return _start(transform(stream), output_dir, checkpoint_dir,
+                trigger_once)
 
 
 # ---------------------------------------------------------------------------
@@ -108,78 +150,70 @@ def _assemble_doc(key: Tuple[str], pdfs: Iterable[pd.DataFrame],
                   timeout_ms: int = 3_600_000) \
     -> Iterator[pd.DataFrame]:
   """Stateful assembly for one doc_id (see assemble_multipart_stream)."""
-  doc_id = key[0]
   if state.hasTimedOut:
     (n_parts, _last_ev, part_nos, kinds, texts, media_refs, offsets,
-     span_part) = state.get
-    state.remove()
-    spans = sorted(zip(kinds, texts, media_refs, offsets),
-                   key=lambda s: s[3])
-    yield pd.DataFrame({
-        'doc_id': [doc_id],
-        'spans': [[{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                   for (k, t, m, o) in spans]],
-        'n_parts_seen': [len(set(part_nos))],
-        'n_parts_expected': [n_parts],
-        'complete': [False],
-    })
-    return
-
-  if state.exists:
-    (n_parts, last_ev_ms, part_nos, kinds, texts, media_refs, offsets,
-     span_part) = (list(v) if isinstance(v, (list, tuple)) else v
-                   for v in state.get)
+     _span_part) = state.get
+    complete = False
   else:
-    n_parts = 0
-    last_ev_ms = 0
-    part_nos, kinds, texts, media_refs, offsets, span_part = \
-        [], [], [], [], [], []
+    if state.exists:
+      (n_parts, last_ev_ms, part_nos, kinds, texts, media_refs, offsets,
+       span_part) = (list(v) if isinstance(v, (list, tuple)) else v
+                     for v in state.get)
+    else:
+      n_parts = 0
+      last_ev_ms = 0
+      part_nos, kinds, texts, media_refs, offsets, span_part = \
+          [], [], [], [], [], []
 
-  for pdf in pdfs:
-    for _, row in pdf.iterrows():
-      p = int(row['part_no'])
-      ts = row['ts']
-      if ts is not None and not pd.isna(ts):
-        # naive pandas timestamps are epoch-converted as UTC; run the
-        # session with spark.sql.session.timeZone=UTC (the default in
-        # this repo's entry points) so this agrees with the engine's
-        # watermark domain
-        last_ev_ms = max(last_ev_ms, int(ts.timestamp() * 1000))
-      if p in part_nos:
-        continue  # duplicate delivery — idempotent
-      part_nos.append(p)
-      n_parts = max(n_parts, int(row['n_parts']))
-      for s in row['spans']:
-        kinds.append(s['kind'])
-        texts.append(s['text'])
-        media_refs.append(s['media_ref'])
-        offsets.append(int(s['offset']))
-        span_part.append(p)
+    for pdf in pdfs:
+      for _, row in pdf.iterrows():
+        p = int(row['part_no'])
+        ts = row['ts']
+        if ts is not None and not pd.isna(ts):
+          # naive pandas timestamps are epoch-converted as UTC; run the
+          # session with spark.sql.session.timeZone=UTC (the default in
+          # this repo's entry points) so this agrees with the engine's
+          # watermark domain
+          last_ev_ms = max(last_ev_ms, int(ts.timestamp() * 1000))
+        if p in part_nos:
+          continue  # duplicate delivery — idempotent
+        part_nos.append(p)
+        n_parts = max(n_parts, int(row['n_parts']))
+        for s in row['spans']:
+          kinds.append(s['kind'])
+          texts.append(s['text'])
+          media_refs.append(s['media_ref'])
+          offsets.append(int(s['offset']))
+          span_part.append(p)
 
-  if n_parts and len(set(part_nos)) >= n_parts:
-    state.remove()
-    spans = sorted(zip(kinds, texts, media_refs, offsets),
-                   key=lambda s: s[3])
-    yield pd.DataFrame({
-        'doc_id': [doc_id],
-        'spans': [[{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                   for (k, t, m, o) in spans]],
-        'n_parts_seen': [len(set(part_nos))],
-        'n_parts_expected': [n_parts],
-        'complete': [True],
-    })
-  else:
-    state.update((n_parts, last_ev_ms, part_nos, kinds, texts,
-                  media_refs, offsets, span_part))
-    # Event-time timeout anchored to the NEWEST part's event time —
-    # fires once the stream watermark passes it.  Deterministic,
-    # replayable, and (unlike a processing-time timeout) it cannot make
-    # an availableNow query spin empty micro-batches forever waiting
-    # for wall-clock time.  The max() keeps the timestamp legal when
-    # the watermark has already overtaken a very late part.
-    state.setTimeoutTimestamp(
-        max(last_ev_ms + timeout_ms,
-            state.getCurrentWatermarkMs() + 1))
+    if not (n_parts and len(set(part_nos)) >= n_parts):
+      state.update((n_parts, last_ev_ms, part_nos, kinds, texts,
+                    media_refs, offsets, span_part))
+      # Event-time timeout anchored to the NEWEST part's event time —
+      # fires once the stream watermark passes it.  Deterministic,
+      # replayable, and (unlike a processing-time timeout) it cannot
+      # make an availableNow query spin empty micro-batches forever
+      # waiting for wall-clock time.  The max() keeps the timestamp
+      # legal when the watermark has already overtaken a very late
+      # part.
+      state.setTimeoutTimestamp(
+          max(last_ev_ms + timeout_ms,
+              state.getCurrentWatermarkMs() + 1))
+      return
+    complete = True
+
+  # emit exactly once: all parts arrived, or the timeout fired first
+  state.remove()
+  spans = sorted(zip(kinds, texts, media_refs, offsets),
+                 key=lambda s: s[3])
+  yield pd.DataFrame({
+      'doc_id': [key[0]],
+      'spans': [[{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
+                 for (k, t, m, o) in spans]],
+      'n_parts_seen': [len(set(part_nos))],
+      'n_parts_expected': [n_parts],
+      'complete': [complete],
+  })
 
 
 def assemble_multipart_stream(parts_stream: DataFrame, *,
@@ -214,145 +248,6 @@ def assemble_multipart_stream(parts_stream: DataFrame, *,
               stateStructType=_ASSEMBLY_STATE_SCHEMA,
               outputMode='append',
               timeoutConf=GroupStateTimeout.EventTimeTimeout))
-
-
-# State for the transformWithState twin: the applyInPandasWithState
-# fields plus the currently-registered timer timestamp, so stale timers
-# (one may be registered per batch) can be exact-match ignored.
-_TWS_STATE_SCHEMA = StructType(
-    _ASSEMBLY_STATE_SCHEMA.fields
-    + [StructField('timer_ms', LongType())])
-
-
-class _AssemblyProcessor:
-  """StatefulProcessor for assemble_multipart_stream_tws — the Spark 4
-  transformWithStateInPandas twin of _assemble_doc, with identical
-  emission semantics (exactly-once per doc: assembled+complete when all
-  parts arrive, partial when the event-time timer fires first).
-
-  Declared as a plain class and mixed with StatefulProcessor at call
-  time purely so this module stays importable if a future PySpark
-  moves the ABC; the methods implement the documented protocol."""
-
-  def __init__(self, timeout_ms: int = 3_600_000):
-    self._timeout_ms = timeout_ms
-
-  def init(self, handle) -> None:
-    self._handle = handle
-    self._frag = handle.getValueState('frag', _TWS_STATE_SCHEMA)
-
-  def _load(self):
-    if self._frag.exists():
-      (n_parts, last_ev_ms, part_nos, kinds, texts, media_refs,
-       offsets, span_part, timer_ms) = self._frag.get()
-      return (int(n_parts), int(last_ev_ms), list(part_nos),
-              list(kinds), list(texts), list(media_refs),
-              list(offsets), list(span_part),
-              int(timer_ms))
-    return 0, 0, [], [], [], [], [], [], 0
-
-  @staticmethod
-  def _emit(doc_id, part_nos, kinds, texts, media_refs, offsets,
-            n_parts, complete):
-    spans = sorted(zip(kinds, texts, media_refs, offsets),
-                   key=lambda s: s[3])
-    return pd.DataFrame({
-        'doc_id': [doc_id],
-        'spans': [[{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-                   for (k, t, m, o) in spans]],
-        'n_parts_seen': [len(set(part_nos))],
-        'n_parts_expected': [n_parts],
-        'complete': [complete],
-    })
-
-  def handleInputRows(self, key, rows, timerValues):
-    doc_id = key[0]
-    (n_parts, last_ev_ms, part_nos, kinds, texts, media_refs, offsets,
-     span_part, timer_ms) = self._load()
-
-    for pdf in rows:
-      for _, row in pdf.iterrows():
-        p = int(row['part_no'])
-        ts = row['ts']
-        if ts is not None and not pd.isna(ts):
-          last_ev_ms = max(last_ev_ms, int(ts.timestamp() * 1000))
-        if p in part_nos:
-          continue  # duplicate delivery — idempotent
-        part_nos.append(p)
-        n_parts = max(n_parts, int(row['n_parts']))
-        for s in row['spans']:
-          kinds.append(s['kind'])
-          texts.append(s['text'])
-          media_refs.append(s['media_ref'])
-          offsets.append(int(s['offset']))
-          span_part.append(p)
-
-    if n_parts and len(set(part_nos)) >= n_parts:
-      self._frag.clear()
-      if timer_ms:
-        self._handle.deleteTimer(timer_ms)
-      yield self._emit(doc_id, part_nos, kinds, texts, media_refs,
-                       offsets, n_parts, True)
-      return
-
-    # same timeout anchor as the applyInPandasWithState twin: newest
-    # part event time + timeout, clamped past the current watermark
-    new_timer = max(last_ev_ms + self._timeout_ms,
-                    timerValues.getCurrentWatermarkInMs() + 1)
-    if timer_ms and timer_ms != new_timer:
-      self._handle.deleteTimer(timer_ms)
-    self._handle.registerTimer(new_timer)
-    self._frag.update((n_parts, last_ev_ms, part_nos, kinds, texts,
-                       media_refs, offsets, span_part, new_timer))
-
-  def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-    if not self._frag.exists():
-      return  # doc already emitted; stale timer
-    (n_parts, last_ev_ms, part_nos, kinds, texts, media_refs, offsets,
-     span_part, timer_ms) = self._load()
-    if expiredTimerInfo.getExpiryTimeInMs() != timer_ms:
-      return  # superseded by a newer registration
-    self._frag.clear()
-    yield self._emit(key[0], part_nos, kinds, texts, media_refs,
-                     offsets, n_parts, False)
-
-  def handleInitialState(self, key, initialState, timerValues) -> None:
-    raise NotImplementedError('no initial state for assembly')
-
-  def close(self) -> None:
-    pass
-
-
-def assemble_multipart_stream_tws(parts_stream: DataFrame, *,
-                                  timeout_ms: int = 3_600_000,
-                                  watermark_delay: str = '10 minutes') \
-    -> DataFrame:
-  """assemble_multipart_stream re-expressed on Spark 4's
-  transformWithStateInPandas (the successor API to
-  applyInPandasWithState): ValueState holds the span fragments, an
-  event-time TIMER (not a GroupState timeout) surfaces partial
-  documents, and stale timers are exact-match ignored via the stored
-  registration timestamp.  Emission semantics are identical to the
-  applyInPandasWithState twin — the parity test drives both over the
-  same part stream and asserts equal output.
-
-  Requires the RocksDB state store
-  (spark.sql.streaming.stateStore.providerClass =
-  org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider),
-  which transformWithState mandates; set it on the session before
-  starting the query."""
-  from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-  proc_cls = type('AssemblyProcessor',
-                  (_AssemblyProcessor, StatefulProcessor), {})
-  return (parts_stream
-          .withWatermark('ts', watermark_delay)
-          .groupBy('doc_id')
-          .transformWithStateInPandas(
-              statefulProcessor=proc_cls(timeout_ms=timeout_ms),
-              outputStructType=ASSEMBLED_SCHEMA,
-              outputMode='append',
-              timeMode='eventTime'))
 
 
 def dedup_span_stream(stream_df: DataFrame, *,
@@ -445,10 +340,7 @@ def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
       StructField('doc_id', LongType()),
       StructField('text', StringType()),
   ])
-  stream = (spark.readStream
-            .schema(schema)
-            .option('maxFilesPerTrigger', max_files_per_trigger)
-            .parquet(input_dir))
+  stream = _read_stream(spark, schema, input_dir, max_files_per_trigger)
 
   def _classify(batch_df: DataFrame, batch_id: int) -> None:
     out = incremental_dedup(batch_df.sparkSession, '',
@@ -457,42 +349,7 @@ def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
     (out.withColumn('batch_id', F.lit(batch_id))
         .write.mode('append').parquet(output_dir))
 
-  writer = (stream.writeStream
-            .foreachBatch(_classify)
-            .option('checkpointLocation', checkpoint_dir))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
-
-
-def start_main_content_stream(spark: SparkSession, input_dir: str,
-                              output_dir: str, checkpoint_dir: str, *,
-                              trigger_once: bool = False,
-                              max_files_per_trigger: int = 16) \
-    -> StreamingQuery:
-  """Streaming twin of the north-rule main-content pipeline:
-  readStream over interleaved span parquet landing in `input_dir` →
-  `main_content_from_spans` (a stateless Arrow-batched mapInPandas —
-  streaming-safe for the same reason extraction is) → checkpointed
-  parquet sink.  Restarting with the same checkpoint resumes
-  exactly-once, which is the continuous-crawl shape of the bulk
-  `run_main_content` CLI job: files land, each micro-batch strips
-  boilerplate / parses PDFs / reassembles span sequences, and a
-  killed job replays nothing already committed.
-
-  `trigger_once` (availableNow) drains the current backlog and stops
-  — the batch-job-with-streaming-checkpoints operating mode."""
-  from ..ops.html_extract import main_content_from_spans
-  out = main_content_from_spans(
-      read_span_stream(spark, input_dir, max_files_per_trigger))
-  writer = (out.writeStream
-            .format('parquet')
-            .option('path', output_dir)
-            .option('checkpointLocation', checkpoint_dir)
-            .outputMode('append'))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
+  return _start(stream, _classify, checkpoint_dir, trigger_once)
 
 
 def start_validation_stream(spark: SparkSession, input_dir: str,
@@ -534,12 +391,7 @@ def start_validation_stream(spark: SparkSession, input_dir: str,
     finally:
       judged.unpersist()
 
-  writer = (src.writeStream
-            .foreachBatch(_split)
-            .option('checkpointLocation', checkpoint_dir))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
+  return _start(src, _split, checkpoint_dir, trigger_once)
 
 
 EVENTS_SCHEMA = StructType([
@@ -618,10 +470,8 @@ def start_rollup_stream(spark: SparkSession, input_dir: str,
   (`read_rollup_state`)."""
   from ..ops.relational import merge_rollups, rollup_events
 
-  stream = (spark.readStream
-            .schema(EVENTS_SCHEMA)
-            .option('maxFilesPerTrigger', max_files_per_trigger)
-            .parquet(input_dir))
+  stream = _read_stream(spark, EVENTS_SCHEMA, input_dir,
+                        max_files_per_trigger)
 
   def _update(batch_df: DataFrame, batch_id: int) -> None:
     sp = batch_df.sparkSession
@@ -634,12 +484,7 @@ def start_rollup_stream(spark: SparkSession, input_dir: str,
     state.write.mode('overwrite') \
         .parquet(f'{state_dir}/v{batch_id:09d}')
 
-  writer = (stream.writeStream
-            .foreachBatch(_update)
-            .option('checkpointLocation', checkpoint_dir))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
+  return _start(stream, _update, checkpoint_dir, trigger_once)
 
 
 def start_attribution_join_stream(spark: SparkSession,
@@ -672,20 +517,16 @@ def start_attribution_join_stream(spark: SparkSession,
   production topology (clicks and purchases land from different
   pipelines); both use the events-table schema with the type filter
   applied inside."""
-  clicks = (spark.readStream
-            .schema(EVENTS_SCHEMA)
-            .option('maxFilesPerTrigger', max_files_per_trigger)
-            .parquet(clicks_dir)
+  clicks = (_read_stream(spark, EVENTS_SCHEMA, clicks_dir,
+                         max_files_per_trigger)
             .where(F.col('event_type') == 'click')
             .select(F.col('event_id').alias('click_id'),
                     F.col('ts').alias('click_ts'),
                     F.col('user_id'),
                     F.col('value').alias('click_value'))
             .withWatermark('click_ts', watermark))
-  purchases = (spark.readStream
-               .schema(EVENTS_SCHEMA)
-               .option('maxFilesPerTrigger', max_files_per_trigger)
-               .parquet(purchases_dir)
+  purchases = (_read_stream(spark, EVENTS_SCHEMA, purchases_dir,
+                            max_files_per_trigger)
                .where(F.col('event_type') == 'purchase')
                .select(F.col('event_id').alias('purchase_id'),
                        F.col('ts').alias('purchase_ts'),
@@ -699,11 +540,4 @@ def start_attribution_join_stream(spark: SparkSession,
       & (F.col('click_ts') >= F.col('purchase_ts')
          - F.expr(f'INTERVAL {attribution_window}')),
       'inner').drop('p_user_id')
-  writer = (joined.writeStream
-            .format('parquet')
-            .option('path', output_dir)
-            .option('checkpointLocation', checkpoint_dir)
-            .outputMode('append'))
-  if trigger_once:
-    writer = writer.trigger(availableNow=True)
-  return writer.start()
+  return _start(joined, output_dir, checkpoint_dir, trigger_once)

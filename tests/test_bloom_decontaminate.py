@@ -3,9 +3,9 @@
 `decontaminate` broadcasts the eval set's distinct n-grams as a string
 dimension; at real multi-benchmark scale (10^8 grams) that broadcast is
 GBs.  `bloom_decontaminate` compresses the eval side to an m-bit bitmap
-(collect bounded by m_bits DISTINCT positions) and probes it with ONE
-Arrow-batched mapInPandas stage over per-row JVM-computed positions —
-no shuffle, no join, no explode on the 100 TB training side.
+(collect bounded by m_bits/64 bitmap words) and probes it with ONE
+Arrow-batched mapInPandas stage over JVM-lowered text — no shuffle, no
+join, no explode on the 100 TB training side.
 
 Checks here:
   1. Bit-exact equality with a from-scratch DuckDB recomputation
@@ -15,7 +15,8 @@ Checks here:
   2. The Bloom guarantee: no false negatives vs exact `decontaminate`,
      with n_flagged >= n_shared per doc; a deliberately tiny filter
      (m_bits=2^12) must produce false positives (otherwise the test is
-     vacuous) yet still never miss a true contamination.
+     vacuous) yet still never miss a true contamination — including a
+     gram whose text Python and the JVM lowercase differently.
   3. Explicit eval_texts path (the production shape).
   4. Plan audit: exactly one ArrowEval/mapInPandas stage in the probe
      plan and no Exchange upstream of it.
@@ -131,3 +132,21 @@ def test_probe_plan_single_arrow_stage_no_shuffle(spark):
   ex_lines = [ln for ln in probe_part.splitlines() if 'Exchange' in ln]
   assert len(ex_lines) <= 1, probe_part
   assert all('roundrobin' in ln.lower() for ln in ex_lines), probe_part
+
+
+def test_jvm_lowering_no_false_negative(spark):
+  # Spark's lower and CPython's str.lower disagree on a few code
+  # points: U+A7CB lowers to U+0264 on the JVM only.  Both Arrow stages
+  # take the JVM-lowered text, the same tokens `decontaminate` builds,
+  # so a gram it finds is never missed.
+  words = ' alpha beta gamma delta epsilon zeta eta'
+  eval_texts = spark.createDataFrame([('ɤ' + words,)], 'text string')
+  docs = spark.createDataFrame(
+      [(1, 'Ɤ' + words), (2, 'one two three four five six seven')],
+      'doc_id long, text string')
+  exact = {r['doc_id'] for r in C.decontaminate(
+      spark, '', eval_texts=eval_texts, docs=docs).collect()}
+  bloom = {r['doc_id'] for r in C.bloom_decontaminate(
+      spark, '', eval_texts=eval_texts, docs=docs).collect()}
+  assert exact == {1}
+  assert bloom == exact

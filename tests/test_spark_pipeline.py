@@ -597,37 +597,3 @@ def test_run_job_with_main_content_transform(spark, tmp_path):
       groups=2)
   assert [r['group'] for r in redo] == [1]
   assert spark.read.parquet(out_path).count() == 120
-
-
-def test_size_bucketed_repartition_same_results(spark):
-  """The opt-in skew shuffle (salted repartition by log2 span count)
-  must not change any result — same rows, same scores — and must add
-  exactly one Exchange to the otherwise shuffle-free plan."""
-  from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
-  from blueprint_oss_spark.spark.pipeline import (
-      SPANS_SCHEMA, extract_documents,
-  )
-
-  docs = readme_corpus(24, seed=11)
-  rows = [(d, [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-               for (k, t, m, o) in s]) for d, s in docs]
-  df = spark.createDataFrame(rows, SPANS_SCHEMA)
-  root = readme_blueprint()
-
-  plain = {(r['doc_id'], r['score'], tuple(sorted((r['fields'] or {})
-                                                  .items())))
-           for r in extract_documents(df, root).collect()}
-  salted_df = extract_documents(df, root,
-                                size_bucketed_repartition=True,
-                                num_partitions=8)
-  salted = {(r['doc_id'], r['score'], tuple(sorted((r['fields'] or {})
-                                                   .items())))
-            for r in salted_df.collect()}
-  assert salted == plain
-  plan = salted_df._jdf.queryExecution().executedPlan().toString()
-  # exactly one shuffle boundary (AQE may render the materialized
-  # stage plus the exchange node; count distinct partitionings)
-  n_shuffles = len({ln.split('[plan_id')[0].strip()
-                    for ln in plan.splitlines()
-                    if 'Exchange hashpartitioning' in ln})
-  assert n_shuffles == 1, plan

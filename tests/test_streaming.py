@@ -4,8 +4,6 @@ new files."""
 
 import os
 
-import pytest
-
 from blueprint_oss_spark.engine.runner import run_doc
 from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
 from blueprint_oss_spark.spark.pipeline import SPANS_SCHEMA
@@ -32,7 +30,7 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
   _write_batch(spark, docs[:4], in_dir)
   q = start_extraction_stream(spark, in_dir, out_dir, ckpt, root,
                               trigger_once=True)
-  q.awaitTermination(300)
+  assert q.awaitTermination(300)
   got1 = {r['doc_id'] for r in spark.read.parquet(out_dir).collect()}
   assert got1 == {d for d, _ in docs[:4]}
 
@@ -40,7 +38,7 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
   _write_batch(spark, docs[4:], in_dir)
   q = start_extraction_stream(spark, in_dir, out_dir, ckpt, root,
                               trigger_once=True)
-  q.awaitTermination(300)
+  assert q.awaitTermination(300)
   rows = spark.read.parquet(out_dir).collect()
   assert len(rows) == 8  # no duplicates from reprocessing
   by_id = {r['doc_id']: r for r in rows}
@@ -220,7 +218,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
          .writeStream.format('parquet')
          .option('path', out_dir).option('checkpointLocation', ckpt)
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
 
   # batch 1: doc A twice (same content), doc B once
   write([('A', spans_for('a'), base),
@@ -237,43 +235,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
   run_once()
   got = [r['doc_id'] for r in spark.read.parquet(out_dir).collect()]
   assert sorted(got) == ['A', 'B', 'C']
-
-
-def test_streaming_main_content_matches_batch(spark, tmp_path):
-  """The main-content pipeline as a continuous job: file-source stream
-  -> stateless mapInPandas -> checkpointed sink equals the batch run,
-  and a second availableNow trigger with the same checkpoint emits
-  nothing new (exactly-once resume)."""
-  from blueprint_oss_spark.ops.html_extract import (
-      interleaved_html_table, main_content_from_spans,
-  )
-  from blueprint_oss_spark.spark.streaming import start_main_content_stream
-
-  inp = tmp_path / 'in'
-  out = tmp_path / 'out'
-  ckpt = tmp_path / 'ckpt'
-  src = interleaved_html_table(spark, '/root/testdata/sf0.001') \
-      .limit(40).cache()
-  src.write.parquet(str(inp))
-
-  q = start_main_content_stream(spark, str(inp), str(out), str(ckpt),
-                                trigger_once=True)
-  q.awaitTermination(120)
-
-  def norm(rows):
-    return {r['doc_id']: [(s['kind'], s['text'], s['media_ref'],
-                           s['order']) for s in r['out_spans']]
-            for r in rows}
-
-  got = norm(spark.read.parquet(str(out)).collect())
-  want = norm(main_content_from_spans(src).collect())
-  assert got == want and len(got) == 40
-
-  q2 = start_main_content_stream(spark, str(inp), str(out), str(ckpt),
-                                 trigger_once=True)
-  q2.awaitTermination(120)
-  assert len(spark.read.parquet(str(out)).collect()) == 40
-  src.unpersist()
 
 
 def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
@@ -306,7 +267,7 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
   q = start_incremental_dedup_stream(spark, in_dir, corpus, out_dir,
                                      ckpt, trigger_once=True,
                                      threshold=0.3)
-  q.awaitTermination(300)
+  assert q.awaitTermination(300)
   got1 = spark.read.parquet(out_dir).collect()
   assert {r['doc_id'] for r in got1} == {1, 2, 3}
 
@@ -315,7 +276,7 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
   q = start_incremental_dedup_stream(spark, in_dir, corpus, out_dir,
                                      ckpt, trigger_once=True,
                                      threshold=0.3)
-  q.awaitTermination(300)
+  assert q.awaitTermination(300)
   rows = spark.read.parquet(out_dir).collect()
   assert len(rows) == 5  # restart did not reprocess increment 1
   by_id = {r['doc_id']: r for r in rows}
@@ -336,124 +297,12 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
   corpus.unpersist()
 
 
-def test_multipart_assembly_transformwithstate_parity(spark, tmp_path):
-  """Spark-4 transformWithStateInPandas twin of the multipart
-  assembler: same part stream (out-of-order, duplicate delivery,
-  one straggler doc), same emissions — complete docs assembled in
-  offset order exactly once, the straggler surfaced as partial when
-  the event-time TIMER fires.  Output compared row-for-row against
-  the applyInPandasWithState operator.
-
-  ENVIRONMENT-GATED: transformWithState's Python↔JVM state protocol
-  needs google.protobuf (pyspark's transform_with_state_driver_worker
-  imports StateMessage_pb2), which this container does not ship — the
-  same class of block as the Iceberg runtime jar.  The test runs
-  wherever protobuf is installed; the applyInPandasWithState twin is
-  the fully-tested live path here."""
-  pytest.importorskip(
-      'google.protobuf',
-      reason='transformWithState needs protobuf (not shipped here); '
-             'the applyInPandasWithState twin covers the semantics')
-  import datetime
-
-  from blueprint_oss_spark.spark.streaming import (
-      MULTIPART_SCHEMA, assemble_multipart_stream,
-      assemble_multipart_stream_tws)
-
-  # transformWithState mandates the RocksDB state store
-  prev = spark.conf.get('spark.sql.streaming.stateStore.providerClass',
-                        None)
-  spark.conf.set(
-      'spark.sql.streaming.stateStore.providerClass',
-      'org.apache.spark.sql.execution.streaming.state.'
-      'RocksDBStateStoreProvider')
-  try:
-    docs = readme_corpus(6, seed=511, with_media=False)
-    T0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-    def span_dicts(sp):
-      return [{'kind': k, 'text': t, 'media_ref': m, 'offset': o}
-              for (k, t, m, o) in sp]
-
-    rows = []
-    for doc_id, spans in docs[:5]:
-      half = len(spans) // 2
-      # part 1 first (out of order), part 0 second, part 1 duplicated
-      rows.append((doc_id, 1, 2, span_dicts(spans[half:]), T0))
-      rows.append((doc_id, 1, 2, span_dicts(spans[half:]), T0))
-      rows.append((doc_id, 0, 2, span_dicts(spans[:half]), T0))
-    straggler_id, straggler_spans = docs[5]
-    rows.append((straggler_id, 0, 2,
-                 span_dicts(straggler_spans[:3]), T0))
-    # watermark pushers: advance the watermark past the straggler's
-    # timeout, then give the timer a batch to fire in
-    push1 = ('wm-pusher', 0, 9, [], T0 + datetime.timedelta(hours=3))
-    push2 = ('wm-pusher', 1, 9, [], T0 + datetime.timedelta(hours=4))
-
-    def drive(assemble_fn, tag):
-      in_dir = str(tmp_path / f'{tag}_in')
-      out_dir = str(tmp_path / f'{tag}_out')
-      ckpt = str(tmp_path / f'{tag}_ckpt')
-      os.makedirs(in_dir, exist_ok=True)
-
-      def run_once():
-        stream = (spark.readStream.schema(MULTIPART_SCHEMA)
-                  .parquet(in_dir))
-        q = (assemble_fn(stream, timeout_ms=3_600_000,
-                         watermark_delay='1 hour')
-             .writeStream.format('parquet')
-             .option('path', out_dir)
-             .option('checkpointLocation', ckpt)
-             .outputMode('append')
-             .trigger(availableNow=True).start())
-        assert q.awaitTermination(300)
-
-      def append(batch):
-        spark.createDataFrame(batch, MULTIPART_SCHEMA).coalesce(1) \
-            .write.mode('append').parquet(in_dir)
-
-      append(rows)
-      run_once()
-      append([push1])
-      run_once()
-      append([push2])
-      run_once()
-      out = [r for r in spark.read.parquet(out_dir).collect()
-             if r['doc_id'] != 'wm-pusher']
-      return {r['doc_id']: r for r in out}
-
-    a = drive(assemble_multipart_stream, 'apis')
-    b = drive(assemble_multipart_stream_tws, 'tws')
-
-    assert set(a) == set(b) == {d for d, _ in docs}
-    for did in a:
-      ra, rb = a[did], b[did]
-      assert ra['complete'] == rb['complete'], did
-      assert ra['n_parts_seen'] == rb['n_parts_seen'], did
-      assert ra['n_parts_expected'] == rb['n_parts_expected'], did
-      assert [tuple(s) for s in ra['spans']] \
-          == [tuple(s) for s in rb['spans']], did
-    assert a[straggler_id]['complete'] is False
-    assert a[docs[0][0]]['complete'] is True
-    # spans restored to offset order despite out-of-order parts
-    offs = [s['offset'] for s in b[docs[0][0]]['spans']]
-    assert offs == sorted(offs)
-  finally:
-    if prev is None:
-      spark.conf.unset('spark.sql.streaming.stateStore.providerClass')
-    else:
-      spark.conf.set(
-          'spark.sql.streaming.stateStore.providerClass', prev)
-
-
 def test_streaming_main_content_matches_batch(spark, tmp_path):
   """North-rule streaming twin: interleaved span files land, the
   stream strips boilerplate / parses / reassembles exactly like the
   batch operator; checkpoint restart processes only new files."""
   from blueprint_oss_spark.ops.html_extract import (
       interleaved_html_table, main_content_from_spans)
-  from blueprint_oss_spark.spark.streaming import \
-      start_main_content_stream
 
   in_dir = str(tmp_path / 'in')
   out_dir = str(tmp_path / 'out')
@@ -465,16 +314,18 @@ def test_streaming_main_content_matches_batch(spark, tmp_path):
   second = src.where('doc_id % 2 = 1')
   first.coalesce(1).write.mode('append').parquet(in_dir)
 
-  q = start_main_content_stream(spark, in_dir, out_dir, ckpt,
-                                trigger_once=True)
-  q.awaitTermination(300)
+  q = start_extraction_stream(spark, in_dir, out_dir, ckpt,
+                              transform=main_content_from_spans,
+                              trigger_once=True)
+  assert q.awaitTermination(300)
   got1 = spark.read.parquet(out_dir)
   assert got1.count() == first.count()
 
   second.coalesce(1).write.mode('append').parquet(in_dir)
-  q = start_main_content_stream(spark, in_dir, out_dir, ckpt,
-                                trigger_once=True)
-  q.awaitTermination(300)
+  q = start_extraction_stream(spark, in_dir, out_dir, ckpt,
+                              transform=main_content_from_spans,
+                              trigger_once=True)
+  assert q.awaitTermination(300)
   got = spark.read.parquet(out_dir)
   assert got.count() == src.count()  # no reprocessing duplicates
 
