@@ -16,6 +16,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from blueprint_oss_spark.ops.common import (
+    normalized_words, presented, py_normalized_words, py_word_ngrams,
+    spread_small_scan as _spread, word_ngrams, words,
+)
+
 # Patterns valid and identical in Java regex (Spark) and RE2 (DuckDB):
 # no backreferences, no lookaround, \b + \d + classes only.
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -83,27 +88,10 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ngrams(col, n: int):
-  """Distinct word n-grams of a text column, built per-row JVM-side:
-  split → slice windows via transform(sequence(...)) — zero shuffles,
-  no explode of the fact side until after the (broadcast) semi-join."""
-  toks = F.filter(F.split(F.lower(F.trim(col)), r'\s+'),
-                  lambda x: F.length(x) > 0)
-  return F.when(
-      F.size(toks) >= n,
-      F.array_distinct(
-          F.transform(
-              F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-              lambda i: F.array_join(F.slice(toks, i, n), ' '))
-      )).otherwise(F.array().cast('array<string>'))
-
-
-#: Single-split scan guard — shared implementation, see
-#: ops/common.spread_small_scan (round 4 measured
-#: bloom_decontaminate's whole probe scan single-core without it, and
-#: the CAUTION there about spreading BEFORE the gram projection was
-#: learned here).
-from blueprint_oss_spark.ops.common import \
-    presented, spread_small_scan as _spread  # noqa: E402
+  """Distinct normalized word n-grams of a text column, built per-row
+  JVM-side — zero shuffles, no explode of the fact side until after
+  the (broadcast) semi-join."""
+  return F.array_distinct(word_ngrams(normalized_words(col), n))
 
 
 def decontaminate(spark: SparkSession, sf_dir: str, *,
@@ -153,24 +141,14 @@ def decontaminate(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def _bloom_doc_grams(text: str, n: int):
-  """Distinct word n-grams of one ALREADY-LOWERED document, Python-side
-  — the Arrow-stage twin of `_ngrams` with IDENTICAL token semantics:
-  `_ngrams` tokenizes as split(lower(trim(text)), r'\\s+') with empties
-  dropped, i.e. maximal runs of non-[ \\t\\n\\x0B\\f\\r] characters
-  (Java regex \\s is the ASCII class; trim only strips the separator
-  ' ' so it cannot change the token stream).  The caller lowers on the
-  JVM (F.lower): Python's str.lower disagrees with it on some code
-  points (U+1C89, U+A7CB and U+10D50..U+10D65 among them on CPython
-  3.11 with Spark 4.1), and a gram lowered differently on the two
-  paths would be a false negative."""
-  toks = _BLOOM_TOKEN_RE.findall(text)
-  if len(toks) < n:
-    return ()
-  return {' '.join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
-
-
-_BLOOM_TOKEN_RE = __import__('re').compile('[^ \t\n\x0b\f\r]+')
+def _bloom_doc_grams(lowered: str | None, n: int) -> set[str]:
+  """Distinct normalized word n-grams of one document lowered on the
+  JVM (F.lower) — the Arrow-stage twin of `_ngrams`.  Python's
+  str.lower disagrees with Spark's lower on some code points (U+1C89,
+  U+A7CB and U+10D50..U+10D65 among them on CPython 3.11 with Spark
+  4.1), and a gram lowered differently on the two paths would be a
+  false negative."""
+  return set(py_word_ngrams(py_normalized_words(lowered), n))
 
 
 def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
@@ -252,7 +230,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
     for pdf in batches:
       ws: dict = {}
       for text in pdf['text']:
-        for g in _bloom_doc_grams(text or '', n):
+        for g in _bloom_doc_grams(text, n):
           d = _md5(b'bloom:' + g.encode('utf-8')).digest()
           h1 = int.from_bytes(d[:4], 'big')
           h2 = int.from_bytes(d[4:8], 'big') * 2 + 1
@@ -296,7 +274,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
       ids, counts = [], []
       for doc_id, text in zip(pdf['doc_id'], pdf['text']):
         cnt = 0
-        for g in _bloom_doc_grams(text or '', n):
+        for g in _bloom_doc_grams(text, n):
           d = _md5(b'bloom:' + g.encode('utf-8')).digest()
           h1 = int.from_bytes(d[:4], 'big')
           h2 = int.from_bytes(d[4:8], 'big') * 2 + 1
@@ -413,15 +391,12 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
 
-  def _toks(c):
-    return F.filter(F.split(c, ' '), lambda x: F.length(x) > 0)
-
   bkt = lambda w: F.pmod(
       F.conv(F.substring(F.md5(F.concat(F.lit('qc:'), w)), 1, 8),
              16, 10).cast('long'),
       F.lit(n_buckets))
 
-  tok = (d.select('doc_id', F.posexplode(_toks(F.col('text')))
+  tok = (d.select('doc_id', F.posexplode(words('text'))
                   .alias('pos', 'w'))
          .select('doc_id', 'pos', bkt(F.col('w')).alias('bkt')))
 
@@ -436,7 +411,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
     # stopword filter per token row (O(tokens²·|stopwords|) per doc,
     # measured 3× slower at sf0.1)
     lab = quality_keep_expr(F.col('text'))
-    ts = _toks(F.col('text'))
+    ts = words('text')
     train = (d.select(F.explode(F.arrays_zip(
                  F.transform(ts, lambda w: bkt(w)).alias('bkt'),
                  F.array_repeat(lab, F.size(ts)).alias('label')))
@@ -618,9 +593,8 @@ def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
                            F.col('doc_id').cast('string'))), 1, 8),
         16, 10).cast('long')
 
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   base = d.select(
-      'doc_id', 'source', F.size(toks).cast('long').alias('n_tokens'),
+      'doc_id', 'source', F.size(words('text')).cast('long').alias('n_tokens'),
       h('split').alias('split_h'), h('shard').alias('shard_h'),
       h('order').alias('order_key'))
   base = base.withColumn('bucket', F.shiftright('order_key', 24))
@@ -682,9 +656,8 @@ def temperature_mix(spark: SparkSession, sf_dir: str, *,
                            F.col('doc_id').cast('string'))), 1, 8),
         16, 10).cast('long')
 
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   base = (d.select('doc_id', 'source',
-                   F.size(toks).cast('long').alias('n_tokens'),
+                   F.size(words('text')).cast('long').alias('n_tokens'),
                    h('order').alias('order_key'))
           .withColumn('bucket', F.shiftright('order_key', 24)))
 
@@ -758,9 +731,8 @@ def unimax_mix(spark: SparkSession, sf_dir: str, *,
                            F.col('doc_id').cast('string'))), 1, 8),
         16, 10).cast('long')
 
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   base = (d.select('doc_id', 'source',
-                   F.size(toks).cast('long').alias('n_tokens'),
+                   F.size(words('text')).cast('long').alias('n_tokens'),
                    h('order').alias('order_key'))
           .withColumn('bucket', F.shiftright('order_key', 24)))
 
@@ -824,15 +796,9 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
   1-row cross join."""
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'lang', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  sz = F.size('w')
-  bigrams = F.when(sz >= 2, F.zip_with(
-      F.slice('w', 1, sz - 1), F.slice('w', 2, sz - 1),
-      lambda a, b: F.concat(a, F.lit(' '), b))) \
-      .otherwise(F.array().cast('array<string>'))
-  feats = d.select('doc_id', 'lang', toks.alias('w')) \
+  feats = d.select('doc_id', 'lang', words('text').alias('w')) \
       .select('doc_id', 'lang',
-              F.concat(F.col('w'), bigrams).alias('feats'))
+              F.concat(F.col('w'), word_ngrams('w', 2)).alias('feats'))
 
   rolling = F.aggregate(
       F.split(F.col('feat'), ''),
@@ -845,15 +811,8 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
                  F.pmod(rolling, F.lit(m).cast('long')).alias('bucket')))
 
   if target_docs is not None:
-    t_toks = F.filter(F.split(F.col('text'), ' '),
-                      lambda x: F.length(x) > 0)
-    t_sz = F.size('w')
-    t_big = F.when(t_sz >= 2, F.zip_with(
-        F.slice('w', 1, t_sz - 1), F.slice('w', 2, t_sz - 1),
-        lambda a, b: F.concat(a, F.lit(' '), b))) \
-        .otherwise(F.array().cast('array<string>'))
-    t_occ = (target_docs.select(t_toks.alias('w'))
-             .select(F.explode(F.concat(F.col('w'), t_big))
+    t_occ = (target_docs.select(words('text').alias('w'))
+             .select(F.explode(F.concat(F.col('w'), word_ngrams('w', 2)))
                      .alias('feat'))
              .select(F.pmod(rolling, F.lit(m).cast('long'))
                      .alias('bucket'))
@@ -931,8 +890,10 @@ def c4_line_clean(spark: SparkSession, sf_dir: str, *,
   w = words_per_line
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  # one synthesized line per words_per_line-word chunk; suffix order:
-  # core + javascript-noise + page-poison + terminal punctuation
+  # one synthesized line per words_per_line-slot chunk of the RAW
+  # split (not `words`: the oracle re-synthesizes from raw slots);
+  # suffix order: core + javascript-noise + page-poison + terminal
+  # punctuation
   lines_expr = F.expr(f"""
     transform(
       sequence(0, cast(ceil(size(split(text, ' ')) / {w}.0) as int) - 1),
@@ -950,6 +911,7 @@ def c4_line_clean(spark: SparkSession, sf_dir: str, *,
   """)
 
   def line_kept(line):
+    # the C4 rule counts raw split slots, not `words`
     return (line.rlike(r'[.!?]$')
             & (F.size(F.split(line, ' ')) >= 3)
             & ~line.contains('javascript'))
@@ -1587,12 +1549,11 @@ def domain_quality_rollup(spark: SparkSession, sf_dir: str, *,
       .select('doc_id', 'text')
   u = (urls if urls is not None
        else url_curation(spark, sf_dir).select('doc_id', 'domain'))
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   # stage the token array ONCE, then thread it through the toks= seam
   # (the data_card pattern): interpreted HOFs get no CSE, so the
   # default inline tokenization inside quality_keep_expr would re-run
   # the split+filter three times per row on the corpus scan
-  staged = d.select('doc_id', 'text', toks.alias('toks'))
+  staged = d.select('doc_id', 'text', words('text').alias('toks'))
   per_doc = staged.select(
       'doc_id', F.size('toks').alias('n_toks'),
       F.length('text').alias('n_chars'),

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from blueprint_oss_spark.ops.common import words
+
 MEDIA_SCHEMA = StructType([
     StructField('media_ref', StringType()),
     StructField('kind', StringType()),        # image | audio | video
@@ -818,6 +820,8 @@ def caption_pairs(content: DataFrame, *,
             try_element_at(filter(_texts, t -> t.order > m.order), 1)
               AS a))
       """).alias('_pairs'))
+  # caption windows count raw \s+ slots of the trimmed text (NULL
+  # text -> NULL caption), not `normalized_words`
   ex = (pairs
         .select('doc_id', F.explode('_pairs').alias('p'))
         .select('doc_id',
@@ -1441,9 +1445,8 @@ def caption_image_alignment(spark: SparkSession, sf_dir: str, *,
         F.md5(F.concat(F.lit(salt), w)), 1, 8), 16, 10).cast('long')
 
   caption = F.concat_ws(' ', 'caption_before', 'caption_after')
-  toks = F.filter(F.split(caption, ' '), lambda x: F.length(x) > 0)
   # per-token (bucket, sign) staged as ONE transform pass (no-CSE rule)
-  tok_h = F.transform(toks, lambda w: F.struct(
+  tok_h = F.transform(words(caption), lambda w: F.struct(
       F.pmod(_h('cia:', w), F.lit(dim)).cast('int').alias('j'),
       (1 - 2 * F.pmod(_h('cias:', w), F.lit(2))).cast('long')
       .alias('s')))

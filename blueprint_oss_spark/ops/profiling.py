@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from blueprint_oss_spark.ops.common import words
+
 #: Per-language keep-rate expressed as an md5-hex threshold string:
 #: md5(doc_id) is uniform over [0, 16^32), so keeping rows with
 #: md5(doc_id) < T keeps ~int(T,16)/16^32 of each stratum.  String
@@ -207,9 +209,7 @@ def data_card(spark: SparkSession, sf_dir: str, *,
   # review caught n_toks + every keep sub-verdict each re-tokenizing)
   d = (docs if docs is not None else
        spark.read.parquet(f'{sf_dir}/documents.parquet')) \
-      .select('lang', 'source', 'text',
-              F.filter(F.split(F.col('text'), ' '),
-                       lambda x: F.length(x) > 0).alias('toks'))
+      .select('lang', 'source', 'text', words('text').alias('toks'))
   base = d.select(
       'lang', 'source', 'text',
       F.size('toks').cast('long').alias('n_toks'),
@@ -276,10 +276,9 @@ def shard_manifests(spark: SparkSession, sf_dir: str, *,
                           1, 15), 16, 10).cast('decimal(38,0)')
   shard = F.pmod(F.conv(F.substring(F.md5(did), 1, 8), 16, 10)
                  .cast('long'), F.lit(buckets))
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   return (d.select(shard.alias('shard'), 'doc_id',
                    fp.alias('fp'),
-                   F.size(toks).cast('long').alias('n_toks'),
+                   F.size(words('text')).cast('long').alias('n_toks'),
                    F.length('text').cast('long').alias('n_chars'),
                    F.octet_length('text').cast('long').alias('n_bytes'),
                    'text')

@@ -11,7 +11,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from blueprint_oss_spark.ops.common import presented, spread_small_scan
+from blueprint_oss_spark.ops.common import (
+    bind_once, presented, py_words, spread_small_scan, word_ngrams, words,
+)
 
 STOPWORDS_EN = ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it', 'for',
                 'on', 'with', 'as', 'at', 'by')
@@ -32,7 +34,7 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Token counts per document (exact ints): whitespace words plus a
   BPE-ish regex token count (letter/digit/symbol runs)."""
   d = _docs(spark, sf_dir)
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   return (d.select(
       'doc_id',
       F.size(toks).alias('n_tokens'),
@@ -46,7 +48,6 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Quality-scoring signals: char-class counts + stopword hits (ints)."""
   d = _docs(spark, sf_dir)
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
   return (d.select(
       'doc_id',
@@ -56,7 +57,7 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
       F.length(F.regexp_replace('text', '[^0-9]', '')).alias('n_digit'),
       F.length(F.regexp_replace('text', r'[^.,;:!?]', ''))
       .alias('n_punct'),
-      F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
+      F.size(F.filter(words('text'), lambda x: F.array_contains(stop_arr, x)))
       .alias('n_stopwords'))
       .orderBy('doc_id'))
 
@@ -80,7 +81,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
   incremental-update fingerprint family; computed fold-style JVM-side,
   byte-identically recomputable in DuckDB."""
   d = _docs(spark, sf_dir)
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   # acc·31 + code stays < 2^36 before each mod, so int64 never overflows
   rolling = F.aggregate(
       F.split(F.col('text'), ''),
@@ -100,7 +101,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
   stopword-list hit rates per candidate language; returns the argmax list
   hits (ints, deterministic)."""
   d = _docs(spark, sf_dir)
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   lists = {
       'en': STOPWORDS_EN,
       'es': ('el', 'la', 'de', 'y', 'que', 'en', 'un', 'por', 'con'),
@@ -326,14 +327,10 @@ def _minhash_features(d: DataFrame, n_hashes: int,
   signature is identical to the exploded+distinct formulation while
   deferring the FIRST shuffle to whatever the caller does next.
   (Guard: docs shorter than the shingle width have no signature and
-  are dropped, same as explode-of-empty before.)"""
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  shingles = F.when(
-      F.size(toks) >= shingle,
-      F.transform(
-          F.sequence(F.lit(0), F.size(toks) - shingle),
-          lambda i: F.concat_ws(' ', F.slice(toks, i + 1, shingle)))
-  ).otherwise(F.array().cast('array<string>'))
+  are dropped, same as explode-of-empty before.  The guard counts
+  words, not shingles: Catalyst pushes the filter below the projection
+  by substitution, so a filter on `sh` would build every window twice.)"""
+  toks = words('text')
 
   def min_hash(s):
     # NB: the inner lambda must stay unary — transform() passes the
@@ -342,8 +339,8 @@ def _minhash_features(d: DataFrame, n_hashes: int,
     return F.array_min(
         F.transform(F.col('sh'), lambda x: F.xxhash64(x, F.lit(s))))
 
-  return (d.select('doc_id', shingles.alias('sh'))
-          .where(F.size('sh') > 0)
+  return (d.where(F.size(toks) >= shingle)
+          .select('doc_id', word_ngrams(toks, shingle).alias('sh'))
           .select('doc_id', 'sh',
                   *[min_hash(s).alias(f'm{s}')
                     for s in range(1, n_hashes + 1)]))
@@ -490,7 +487,7 @@ def quality_keep_expr(text_col, *,
   the default inline tokenization would otherwise re-run per
   consuming expression."""
   if toks is None:
-    toks = F.filter(F.split(text_col, ' '), lambda x: F.length(x) > 0)
+    toks = words(text_col)
   n = F.size(toks)
   sum_len = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
   n_chars = F.length(text_col)
@@ -523,7 +520,7 @@ def quality_filter(spark: SparkSession, sf_dir: str, *,
   every expensive operator, which is the point — at 100 TB, quality
   filtering is the first pass that pays for itself."""
   d = docs if docs is not None else _docs(spark, sf_dir)
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   d = d.select(
       'doc_id',
       F.size(toks).alias('n'),
@@ -721,9 +718,8 @@ def _simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
   map-side signature pass feeds simhash_near_dup_pairs without a
   rangepartitioning exchange."""
   d = _docs(spark, sf_dir).select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   votes = F.aggregate(
-      toks,
+      words('text'),
       F.expr('array_repeat(0L, 64)'),
       lambda acc, t: F.zip_with(
           acc,
@@ -846,8 +842,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, *,
   """
   d = _docs(spark, sf_dir).select('doc_id', 'text')
   n_docs = d.count()
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  terms = d.select('doc_id', F.explode(toks).alias('term'))
+  terms = d.select('doc_id', F.explode(words('text')).alias('term'))
   tf = terms.groupBy('doc_id', 'term').agg(
       F.count(F.lit(1)).alias('tf'))
   df_ = tf.groupBy('term').agg(F.count(F.lit(1)).alias('df'))
@@ -895,13 +890,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, *,
   bridge two dedup groups."""
   d = (docs if docs is not None
        else _docs(spark, sf_dir)).select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   sh = d.select(
       'doc_id',
-      F.explode(F.array_distinct(F.transform(
-          F.sequence(F.lit(0), F.size(toks) - shingle),
-          lambda i: F.concat_ws(' ', F.slice(toks, i + 1, shingle)))))
-      .alias('shingle'))
+      F.explode(F.array_distinct(
+          word_ngrams(words('text'), shingle))).alias('shingle'))
   sizes = sh.groupBy('doc_id').agg(F.count(F.lit(1)).alias('n'))
   join_side = sh
   if max_shingle_df > 0:
@@ -963,7 +955,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
   groups = dedup_groups(spark, sf_dir, docs=kept)
   keepers = groups.where(F.col('doc_id') == F.col('group_id'))
 
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   members_n = groups.join(
       kept.select('doc_id', F.size(toks).cast('long').alias('n_toks')),
       'doc_id')
@@ -1010,10 +1002,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
 
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   sized = d.select(
       'doc_id',
-      F.size(toks).alias('n_tokens'),
+      F.size(words('text')).alias('n_tokens'),
       F.pmod(F.col('doc_id'), F.lit(shards)).alias('shard'))
   w = (Window.partitionBy('shard').orderBy('doc_id')
        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1144,11 +1135,9 @@ def pack_interleaved_sequences(spark: SparkSession, sf_dir: str, *,
         interleaved_html_table, main_content_from_spans)
     spans = main_content_from_spans(
         interleaved_html_table(spark, sf_dir))
-  toks = F.filter(F.split(F.col('s.text'), ' '),
-                  lambda x: F.length(x) > 0)
   cost = (F.when(F.col('s.kind') == 'media',
                  F.lit(int(media_token_cost)))
-          .otherwise(F.size(toks))).cast('long')
+          .otherwise(F.size(words('s.text')))).cast('long')
   shard = F.pmod(
       F.conv(F.substring(F.md5(F.concat(F.lit('shard:'), 'doc_id')),
                          1, 8), 16, 10).cast('long'),
@@ -1212,7 +1201,6 @@ def count_min_terms(spark: SparkSession, sf_dir: str, *,
   from-scratch DuckDB oracle reproduces every cell and estimate."""
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
 
   def h(j: int, c):
     return F.pmod(
@@ -1220,7 +1208,7 @@ def count_min_terms(spark: SparkSession, sf_dir: str, *,
                            1, 8), 16, 10).cast('long'),
         F.lit(width))
 
-  occ = d.select(F.explode(toks).alias('tok'))
+  occ = d.select(F.explode(words('text')).alias('tok'))
   cells = (occ.select(F.explode(F.array(*[
               F.struct(F.lit(j).alias('j'), h(j, F.col('tok'))
                        .alias('pos')) for j in range(depth)]))
@@ -1287,7 +1275,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str, *,
   """
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
 
   def local_cands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from collections import Counter
@@ -1295,7 +1283,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str, *,
       cnt: Counter = Counter()
       total = 0
       for t in pdf['text']:
-        ws = str(t).split()
+        ws = py_words(t)
         cnt.update(ws)
         total += len(ws)
       yield pd.DataFrame({'term': [w for w, c in cnt.items()
@@ -1365,7 +1353,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *,
 
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
 
   # corpus constants from ONE exact-integer aggregate (bounded collect)
   tot = d.select(F.count(F.lit(1)).alias('n'),
@@ -1458,8 +1446,7 @@ def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
          else build_postings(spark, sf_dir, docs=docs))
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  dls = d.select('doc_id', F.size(toks).cast('bigint').alias('dl'))
+  dls = d.select('doc_id', F.size(words('text')).cast('bigint').alias('dl'))
   tot = dls.agg(F.count(F.lit(1)).alias('n'),
                 F.sum('dl').alias('sum_dl')).collect()[0]
   n_docs, sum_dl = int(tot['n']), int(tot['sum_dl'] or 0)
@@ -1530,22 +1517,26 @@ def chunk_documents(spark: SparkSession, sf_dir: str, *,
   step = chunk_tokens - overlap
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  n = F.size(toks)
-  # number of chunk starts: 1 + ceil(max(0, n - chunk_tokens) / step),
-  # in exact integer arithmetic (no doubles near the boundary)
-  n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
-      1 + F.floor((F.greatest(n - chunk_tokens, F.lit(0)) + step - 1)
-                  / step).cast('int'))
-  chunks = F.transform(
-      F.sequence(F.lit(0), n_chunks - 1),
-      lambda i: F.struct(
-          (i * step).alias('start_tok'),
-          F.least(n - i * step, F.lit(chunk_tokens)).alias('n_tokens'),
-          F.array_join(F.slice(toks, i * step + 1, chunk_tokens), ' ')
-          .alias('chunk_text')))
-  return (d.where(n > 0)
-          .select('doc_id', F.posexplode(chunks).alias('chunk_no', 'c'))
+  toks = words('text')
+
+  def chunks(t):
+    n = F.size(t)
+    # number of chunk starts: 1 + ceil(max(0, n - chunk_tokens) / step),
+    # in exact integer arithmetic (no doubles near the boundary)
+    n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
+        1 + F.floor((F.greatest(n - chunk_tokens, F.lit(0)) + step - 1)
+                    / step).cast('int'))
+    return F.transform(
+        F.sequence(F.lit(0), n_chunks - 1),
+        lambda i: F.struct(
+            (i * step).alias('start_tok'),
+            F.least(n - i * step, F.lit(chunk_tokens)).alias('n_tokens'),
+            F.array_join(F.slice(t, i * step + 1, chunk_tokens), ' ')
+            .alias('chunk_text')))
+  return (d.where(F.size(toks) > 0)
+          .select('doc_id',
+                  F.posexplode(bind_once(toks, chunks))
+                  .alias('chunk_no', 'c'))
           .select('doc_id', 'chunk_no', 'c.start_tok', 'c.n_tokens',
                   'c.chunk_text')
           .orderBy('doc_id', 'chunk_no'))
@@ -1585,20 +1576,12 @@ def repetition_stats(spark: SparkSession, sf_dir: str, *,
   # n-gram construction is the map-heavy stage and a one-split corpus
   # would run it on one core
   d = spread_small_scan(d)
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   base = d.select('doc_id',
                   F.length('text').cast('long').alias('n_chars'),
-                  toks.alias('w'))
+                  words('text').alias('w'))
 
-  n = F.size('w')
-  bigrams = F.when(n >= 2, F.zip_with(
-      F.slice('w', 1, n - 1), F.slice('w', 2, n - 1),
-      lambda a, b: F.concat(a, F.lit(' '), b))) \
-      .otherwise(F.array().cast('array<string>'))
-  fivegrams = F.when(n >= 5, F.transform(
-      F.sequence(F.lit(1), n - 4),
-      lambda i: F.array_join(F.slice('w', i, 5), ' '))) \
-      .otherwise(F.array().cast('array<string>'))
+  bigrams = word_ngrams('w', 2)
+  fivegrams = word_ngrams('w', 5)
 
   b_counts = (base.select('doc_id', F.explode(bigrams).alias('g'))
               .groupBy('doc_id', 'g').count())
@@ -1705,19 +1688,9 @@ def gram_occurrences(d: DataFrame, n: int):
   """(base, occ) for covered-token removal: base = (doc_id, w:tokens),
   occ = one row per n-gram occurrence (doc_id, pos, gram) with 0-based
   start positions — map-side array arithmetic, no shuffle."""
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  base = d.select('doc_id', toks.alias('w'))
-  sz = F.size('w')
-  grams = F.when(sz >= n, F.transform(
-      F.sequence(F.lit(0), sz - n),
-      lambda i: F.struct(i.alias('pos'),
-                         F.array_join(F.slice('w', i + 1, n), ' ')
-                         .alias('gram')))) \
-      .otherwise(F.array().cast(
-          'array<struct<pos:int,gram:string>>'))
-  occ = (base.select('doc_id', F.explode(grams).alias('o'))
-         .select('doc_id', F.col('o.pos').alias('pos'),
-                 F.col('o.gram').alias('gram')))
+  base = d.select('doc_id', words('text').alias('w'))
+  occ = base.select('doc_id',
+                    F.posexplode(word_ngrams('w', n)).alias('pos', 'gram'))
   return base, occ
 
 
@@ -1808,14 +1781,13 @@ def bpe_train(spark: SparkSession, sf_dir: str, *,
   checkpoints)."""
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  word_rows = d.select(F.explode(toks).alias('word'))
+  word_rows = d.select(F.explode(words('text')).alias('word'))
   if special_tokens:
     # special tokens (e.g. render_interleaved's media sentinel) are
     # atomic vocabulary entries: they never contribute pair counts,
     # exactly like production tokenizers exclude reserved tokens
     word_rows = word_rows.where(~F.col('word').isin(*special_tokens))
-  words = (word_rows
+  vocab = (word_rows
            .groupBy('word').agg(F.count(F.lit(1)).alias('cnt'))
            .select(F.split('word', '').alias('syms'), 'cnt')
            .localCheckpoint(eager=True))
@@ -1827,8 +1799,8 @@ def bpe_train(spark: SparkSession, sf_dir: str, *,
   # data irrecoverably), so the predecessor is only dropped once a
   # NEWER checkpoint exists, by which point rounds in between have
   # materialized the one before it.
-  live = [words]
-  cur = words
+  live = [vocab]
+  cur = vocab
   try:
     for rank in range(n_merges):
       sz = F.size('syms')
@@ -1927,9 +1899,8 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
   merge_list = [(r['left'], r['right'], r['merged'])
                 for r in merges.orderBy('rank').collect()]
 
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
   doc_words = d.select(
-      'doc_id', F.posexplode(toks).alias('pos', 'word'))
+      'doc_id', F.posexplode(words('text')).alias('pos', 'word'))
 
   enc_expr = F.split('word', '')
   for left, right, merged in merge_list:
@@ -2007,11 +1978,10 @@ def build_postings(spark: SparkSession, sf_dir: str, *,
     raise ValueError('doc_bucket must be positive')
   d = (docs if docs is not None
        else _docs(spark, sf_dir)).select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  words = d.select('doc_id', F.explode(toks).alias('term'))
+  occ = d.select('doc_id', F.explode(words('text')).alias('term'))
   if terms is not None:
-    words = words.where(F.col('term').isin(*terms))
-  tf = (words.groupBy('term', 'doc_id')
+    occ = occ.where(F.col('term').isin(*terms))
+  tf = (occ.groupBy('term', 'doc_id')
         .agg(F.count(F.lit(1)).cast('long').alias('tf')))
   plist = (tf.withColumn(
       'bucket', F.expr(f'doc_id DIV {int(doc_bucket)}').cast('long'))
@@ -2126,14 +2096,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str, *,
            .groupBy('doc_id').agg(F.min('cid').alias('match_id')))
 
   def _sh(frame: DataFrame, idcol: str) -> DataFrame:
-    toks = F.filter(F.split(F.col('text'), ' '),
-                    lambda x: F.length(x) > 0)
-    grams = F.when(
-        F.size(toks) >= shingle,
-        F.array_distinct(F.transform(
-            F.sequence(F.lit(0), F.size(toks) - shingle),
-            lambda i: F.concat_ws(' ', F.slice(toks, i + 1, shingle))))
-    ).otherwise(F.array().cast('array<string>'))
+    grams = F.array_distinct(word_ngrams(words('text'), shingle))
     return frame.select(idcol, F.explode(grams).alias('shingle'))
 
   # shingle ALL batch docs (not just non-exact ones): exact dups are
@@ -2221,24 +2184,17 @@ def lm_score(spark: SparkSession, sf_dir: str, *,
       .select('doc_id', 'text')
   tr = d if train_docs is None else train_docs.select('text')
 
-  def _toks(c):
-    return F.filter(F.split(c, ' '), lambda x: F.length(x) > 0)
-
-  tr_base = tr.select(_toks(F.col('text')).alias('t')) \
+  tr_base = tr.select(words('text').alias('t')) \
       .where(F.size('t') > 0)
   uni = (tr_base.select(F.explode('t').alias('w'))
          .groupBy('w').agg(F.count(F.lit(1)).alias('c1')))
-  bi_grams = F.when(
-      F.size('t') >= 2,
-      F.transform(F.sequence(F.lit(0), F.size('t') - 2),
-                  lambda i: F.concat_ws(' ', F.slice('t', i + 1, 2)))
-  ).otherwise(F.array().cast('array<string>'))
+  bi_grams = word_ngrams('t', 2)
   bi = (tr_base.select(F.explode(bi_grams).alias('g'))
         .groupBy('g').agg(F.count(F.lit(1)).alias('c2')))
   tv = uni.agg(F.count(F.lit(1)).alias('v_size'),
                F.sum('c1').alias('t_total'))
 
-  base = d.select('doc_id', _toks(F.col('text')).alias('t')) \
+  base = d.select('doc_id', words('text').alias('t')) \
       .where(F.size('t') > 0)
   bg = base.select(
       'doc_id', F.posexplode(bi_grams).alias('pos', 'g'))
@@ -2379,24 +2335,21 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
   blist = ', '.join(f"'{b}'" for b in BOILERPLATE_PARAS)
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  # empty-filtered tokens (the gram_occurrences convention, and what
-  # the gate oracle's shared `t` CTE uses) — raw split(text, ' ')
-  # would count '' tokens on irregular whitespace via the docs= seam
-  # and diverge from the oracle's paragraph texts
+  # words (what the gate oracle's shared `t` CTE uses), staged as a
+  # projected column so the per-paragraph transform tokenizes once —
+  # raw split(text, ' ') would count '' tokens on irregular whitespace
+  # via the docs= seam and diverge from the oracle's paragraph texts
   paras_expr = F.expr(f"""
     transform(
-      sequence(0, cast(ceil(size(filter(split(text, ' '),
-                                        x -> length(x) > 0))
-                            / {w}.0) as int) - 1),
+      sequence(0, cast(ceil(size(w) / {w}.0) as int) - 1),
       j -> CASE WHEN (doc_id * 13 + j * 7) % 9 = 0
                 THEN element_at(array({blist}),
                                 cast(doc_id % 3 as int) + 1)
-                ELSE array_join(slice(filter(split(text, ' '),
-                                             x -> length(x) > 0),
-                                      j * {w} + 1, {w}), ' ')
+                ELSE array_join(slice(w, j * {w} + 1, {w}), ' ')
            END)
   """)
-  base = d.select('doc_id', paras_expr.alias('paras'))
+  base = d.select('doc_id', words('text').alias('w')) \
+      .select('doc_id', paras_expr.alias('paras'))
   occ = (base.select('doc_id', F.posexplode('paras').alias('pos', 'para'))
          .withColumn('h', F.md5('para')))
   firsts = (occ.groupBy('h')
@@ -2463,13 +2416,11 @@ def dedup_doc_lines(spark: SparkSession, sf_dir: str, *,
   blist = ', '.join(f"'{b}'" for b in BOILERPLATE_PARAS)
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  # stage the empty-filtered token array as a projected column:
-  # interpreted higher-order functions get no common-subexpression
-  # elimination, so inlining the filter(split(...)) inside the
-  # per-line transform would re-tokenize the document once per line
-  words = d.select(
-      'doc_id',
-      F.expr("filter(split(text, ' '), x -> length(x) > 0)").alias('w'))
+  # stage the words as a projected column: interpreted higher-order
+  # functions get no common-subexpression elimination, so inlining
+  # them inside the per-line transform would re-tokenize the document
+  # once per line
+  tokenized = d.select('doc_id', words('text').alias('w'))
   lines_expr = F.expr(f"""
     CASE WHEN size(w) = 0 THEN array()
          ELSE transform(
@@ -2481,8 +2432,8 @@ def dedup_doc_lines(spark: SparkSession, sf_dir: str, *,
                 END)
     END
   """)
-  lined = words.select('doc_id',
-                       lines_expr.cast('array<string>').alias('lines'))
+  lined = tokenized.select(
+      'doc_id', lines_expr.cast('array<string>').alias('lines'))
   # keep line j iff its first in-doc occurrence is at j (1-based
   # array_position); both consumers (size + join) read the staged
   # `kept` column so the quadratic scan runs once per row
@@ -2538,9 +2489,7 @@ def topic_tagging(spark: SparkSession, sf_dir: str, *,
   # _bloom_flat_positions lesson), so embedding split+filter into each
   # hit_count column re-tokenizes every row once per lexicon
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id',
-              F.filter(F.split(F.col('text'), ' '),
-                       lambda x: F.length(x) > 0).alias('toks'))
+      .select('doc_id', words('text').alias('toks'))
 
   def hit_count(ws):
     # factory closure, NOT a `ws=ws` default arg: a default makes the
@@ -2615,24 +2564,21 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
   triples = ', '.join(
       "array(%s)" % ', '.join(f"'{s}'" for s in t)
       for t in BOILERPLATE_SENTS)
-  # empty-filtered tokens — same oracle-consistency rule as
-  # dedup_paragraphs' paras_expr
+  # staged words — same oracle-consistency rule as dedup_paragraphs'
+  # paras_expr
   sents_expr = F.expr(f"""
     transform(
-      sequence(0, cast(ceil(size(filter(split(text, ' '),
-                                        x -> length(x) > 0))
-                            / {w}.0) as int) - 1),
+      sequence(0, cast(ceil(size(w) / {w}.0) as int) - 1),
       j -> CASE WHEN (doc_id * 13 + div(j, 3) * 7) % 9 = 0
                 THEN element_at(
                        element_at(array({triples}),
                                   cast(doc_id % 3 as int) + 1),
                        cast(j % 3 as int) + 1)
-                ELSE array_join(slice(filter(split(text, ' '),
-                                             x -> length(x) > 0),
-                                      j * {w} + 1, {w}), ' ')
+                ELSE array_join(slice(w, j * {w} + 1, {w}), ' ')
            END)
   """)
-  base = d.select('doc_id', sents_expr.alias('sents'))
+  base = d.select('doc_id', words('text').alias('w')) \
+      .select('doc_id', sents_expr.alias('sents'))
   n_s = F.size('sents')
   spans = F.when(n_s >= 3, F.expr("""
       transform(sequence(0, size(sents) - 3),
@@ -2768,8 +2714,7 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
   from pyspark.sql import Window
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  n = F.size(toks)
+  n = F.size(words('text'))
   bucket = F.lit(len(bin_edges))
   for i in range(len(bin_edges) - 1, -1, -1):
     bucket = F.when(n <= bin_edges[i], F.lit(i)).otherwise(bucket)
@@ -2835,7 +2780,7 @@ def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
   from pyspark.sql import Window
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   tok_rows = d.select(
       'doc_id', F.size(toks).alias('n'),
       F.posexplode(toks).alias('pos', 'token'))

@@ -61,6 +61,7 @@ from typing import Iterator, List, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from blueprint_oss_spark.ops.common import words
 from blueprint_oss_spark.ops.textops import _docs
 
 MICRO = 1_000_000
@@ -70,8 +71,7 @@ def _word_counts(spark: SparkSession, sf_dir: str,
                  docs: DataFrame,
                  special_tokens: tuple = ()) -> DataFrame:
   d = (docs if docs is not None else _docs(spark, sf_dir)).select('text')
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
-  word_rows = d.select(F.explode(toks).alias('word'))
+  word_rows = d.select(F.explode(words('text')).alias('word'))
   if special_tokens:
     # reserved tokens (e.g. render_interleaved's media sentinel) are
     # atomic vocabulary entries: they never contribute substring or
@@ -291,7 +291,7 @@ def unigram_encode(spark: SparkSession, sf_dir: str, *,
   mpl = max_piece_len
   specials = frozenset(special_tokens)
 
-  toks = F.filter(F.split(F.col('text'), ' '), lambda x: F.length(x) > 0)
+  toks = words('text')
   doc_words = d.select('doc_id', F.posexplode(toks).alias('pos', 'word'))
 
   def seg(batches: Iterator[pd.DataFrame],

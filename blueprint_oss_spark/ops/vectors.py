@@ -403,7 +403,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, *,
 #: Single-split scan guard — shared implementation, see
 #: ops/common.spread_small_scan for the full story.
 from blueprint_oss_spark.ops.common import \
-    spread_small_scan as _spread_small_scan  # noqa: E402
+    spread_small_scan as _spread_small_scan, words  # noqa: E402
 
 
 def _planted(e: DataFrame, n_planted: int, plant_eps: float) -> DataFrame:
@@ -1315,9 +1315,9 @@ def cluster_topics(spark: SparkSession, sf_dir: str, *,
        else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
       .select('doc_id', 'text')
   toks = F.filter(
-      F.split(F.col('text'), ' '),
-      lambda x: (F.length(x) > 0)
-      & ~F.array_contains(F.array(*[F.lit(s) for s in STOPWORDS_EN]), x))
+      words('text'),
+      lambda x: ~F.array_contains(
+          F.array(*[F.lit(s) for s in STOPWORDS_EN]), x))
   tc = (d.join(a, 'doc_id')
         .select('cell', F.explode(toks).alias('term'))
         .groupBy('cell', 'term')

@@ -319,6 +319,7 @@ def spans_from_documents(docs: DataFrame, words_per_line: int = 8,
   col_width = 16
   line_shift = 256
   page_shift = 2 ** 20
+  # raw split, not ops.common.words: grid positions count raw slots
   toks = (docs
           .select(F.col('doc_id').cast('string').alias('doc_id'),
                   F.posexplode(F.split(F.col('text'), ' '))

@@ -81,6 +81,20 @@ def _start(stream: DataFrame,
   return writer.start()
 
 
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+  """Idempotent foreachBatch sink: the batch's rows land in
+  `path/batch_id=<id>/` and replace that partition only (dynamic
+  overwrite, the run_extraction_job idiom).  foreachBatch is
+  at-least-once — a crash between a batch's write and its checkpoint
+  commit replays the batch — so an append would land its rows twice.
+  A sink that has received no rows yet holds no parquet file."""
+  (df.withColumn('batch_id', F.lit(batch_id))
+   .write.mode('overwrite')
+   .option('partitionOverwriteMode', 'dynamic')
+   .partitionBy('batch_id')
+   .parquet(path))
+
+
 def read_span_stream(spark: SparkSession, input_dir: str,
                      max_files_per_trigger: int = 16) -> DataFrame:
   """File-source stream of interleaved span documents (parquet files
@@ -326,14 +340,14 @@ def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
 
   The micro-batch IS the increment, so this is foreachBatch around
   the already-oracled batch operator: the same verified code path
-  runs continuously, each batch's verdicts appended with its batch_id.
-  foreachBatch + checkpoint gives exactly-once per micro-batch for an
-  idempotent sink; the near pass's groupBy runs INSIDE the batch scope
-  so no streaming aggregation state accumulates — state cost is zero,
-  unlike a watermarked streaming join formulation.  The corpus side is
-  re-read per batch only if the caller passes a lazy view; pass a
-  cached/bucketed table (spark/storage.py) so each increment pays only
-  the probe, never a corpus shuffle."""
+  runs continuously, each batch's verdicts written to output_dir's
+  `batch_id=<id>` partition — exactly-once per micro-batch, replays
+  included (`_write_batch`).  The near pass's groupBy runs INSIDE the
+  batch scope, so no streaming aggregation state accumulates — state
+  cost is zero, unlike a watermarked streaming join formulation.  The
+  corpus side is re-read per batch only if the caller passes a lazy
+  view; pass a cached/bucketed table (spark/storage.py) so each
+  increment pays only the probe, never a corpus shuffle."""
   from ..ops.textops import incremental_dedup
 
   schema = StructType([
@@ -346,8 +360,7 @@ def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
     out = incremental_dedup(batch_df.sparkSession, '',
                             batch=batch_df, corpus=corpus,
                             **dedup_kwargs)
-    (out.withColumn('batch_id', F.lit(batch_id))
-        .write.mode('append').parquet(output_dir))
+    _write_batch(out, batch_id, output_dir)
 
   return _start(stream, _classify, checkpoint_dir, trigger_once)
 
@@ -362,12 +375,13 @@ def start_validation_stream(spark: SparkSession, input_dir: str,
   continuous crawl: every arriving interleaved-spans file is
   contract-checked with ops/ingest's first-failure taxonomy evaluated
   INLINE on the batch frame (validation_reason_expr — one projection,
-  no verdict join), clean rows stream to `clean_dir` with their full
-  spans payload intact, violating rows' verdicts to `quarantine_dir`
-  as (doc_id, n_spans, reason, batch_id) — the auditable reject log.
+  no verdict join), clean rows stream to `clean_dir` as (doc_id, spans)
+  with their full spans payload intact, violating rows' verdicts to
+  `quarantine_dir` as (doc_id, n_spans, reason) — the auditable reject
+  log — each sink partitioned by batch_id.
 
-  foreachBatch + checkpoint = exactly-once per micro-batch for the
-  idempotent parquet sinks (two sinks need foreachBatch; a plain
+  foreachBatch + checkpoint + `_write_batch` = exactly-once per
+  micro-batch, replays included (two sinks need foreachBatch; a plain
   writeStream has one path).  The verdict is stateless, so no
   streaming state accumulates; the micro-batch is persisted for the
   two consumers and unpersisted after both writes (each batch is
@@ -379,15 +393,13 @@ def start_validation_stream(spark: SparkSession, input_dir: str,
     judged = batch_df.withColumn('reason', validation_reason_expr()) \
         .persist()
     try:
-      (judged.where(F.col('reason').isNull())
-       .select('doc_id', 'spans')
-       .write.mode('append').parquet(clean_dir))
-      (judged.where(F.col('reason').isNotNull())
-       .select('doc_id',
-               F.coalesce(F.size('spans'), F.lit(0)).cast('int')
-               .alias('n_spans'),
-               'reason', F.lit(batch_id).alias('batch_id'))
-       .write.mode('append').parquet(quarantine_dir))
+      _write_batch(judged.where(F.col('reason').isNull())
+                   .select('doc_id', 'spans'), batch_id, clean_dir)
+      _write_batch(judged.where(F.col('reason').isNotNull())
+                   .select('doc_id',
+                           F.coalesce(F.size('spans'), F.lit(0))
+                           .cast('int').alias('n_spans'),
+                           'reason'), batch_id, quarantine_dir)
     finally:
       judged.unpersist()
 

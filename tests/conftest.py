@@ -1,3 +1,5 @@
+import pathlib
+
 import pytest
 
 
@@ -15,3 +17,17 @@ def spark():
        .getOrCreate())
   yield s
   s.stop()
+
+
+@pytest.fixture
+def uncommit_last_batch():
+  """Simulate a crash after a micro-batch's sink write and before its
+  checkpoint commit: delete the checkpoint's last commits/<n> file, so
+  that a restart replays batch n.  Returns n."""
+  def uncommit(checkpoint_dir: str) -> int:
+    commits = pathlib.Path(checkpoint_dir) / 'commits'
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f'.{last}.crc').unlink(missing_ok=True)
+    return last
+  return uncommit

@@ -13,6 +13,7 @@ broadcast-verify plan pin.
 from __future__ import annotations
 
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,6 +81,27 @@ def test_threshold_is_inclusive_cross_multiplied(spark):
          T.heavy_hitters(spark, '', docs=docs, phi_num=1,
                          phi_den=2).collect()}
   assert got == {'a': 2}
+
+
+def test_words_keep_non_space_whitespace_and_skip_null_text(spark,
+                                                           tmp_path):
+  # words split on ' ' only: 'a\nb', 'd\te' and 'g\xa0h' are single
+  # words in the verify pass and the oracle, so the candidate pass must
+  # not split them (str.split() did, and missed all three) nor count a
+  # NULL text as the word 'None'
+  rows = ([(i, 'a\nb a\nb c') for i in range(4)]
+          + [(10 + i, 'd\te d\te f') for i in range(4)]
+          + [(20 + i, 'g\xa0h g\xa0h') for i in range(4)]
+          + [(30 + i, None) for i in range(3)])
+  pd.DataFrame(rows, columns=['doc_id', 'text']) \
+      .to_parquet(tmp_path / 'documents.parquet', index=False)
+  docs = spark.read.parquet(str(tmp_path / 'documents.parquet')) \
+      .repartition(3)
+  got = [(r['term'], r['count'], r['n_total']) for r in
+         T.heavy_hitters(spark, '', docs=docs, phi_num=1,
+                         phi_den=5).collect()]
+  assert got == _oracle(str(tmp_path), 1, 5)
+  assert got == [('a\nb', 8, 32), ('d\te', 8, 32), ('g\xa0h', 8, 32)]
 
 
 def test_verify_pass_is_candidate_broadcast(spark):

@@ -143,11 +143,14 @@ def test_verdict_plan_is_shuffle_free_and_python_free(spark):
   assert 'EvalPython' not in plan2
 
 
-def test_streaming_validation_matches_batch(spark, tmp_path):
+def test_streaming_validation_matches_batch(spark, tmp_path,
+                                           uncommit_last_batch):
   """The validation front door as a continuous job: file-source stream
   -> inline verdict projection -> clean + quarantine sinks equals the
-  batch operator, and a second availableNow trigger with the same
-  checkpoint emits nothing new (exactly-once resume)."""
+  batch operator, a second availableNow trigger with the same
+  checkpoint emits nothing new (exactly-once resume), and a batch
+  replayed after a crash before its commit rewrites its rows instead
+  of appending them again."""
   from blueprint_oss_spark.ops.html_extract import interleaved_html_table
   from blueprint_oss_spark.spark.streaming import start_validation_stream
 
@@ -159,7 +162,7 @@ def test_streaming_validation_matches_batch(spark, tmp_path):
 
   q = start_validation_stream(spark, inp, clean, quar, ckpt,
                               trigger_once=True)
-  q.awaitTermination(120)
+  assert q.awaitTermination(120)
 
   batch = validate_interleaved(spark, SF1, spans=src).toPandas()
   got_clean = spark.read.parquet(clean).toPandas()
@@ -177,7 +180,15 @@ def test_streaming_validation_matches_batch(spark, tmp_path):
 
   q2 = start_validation_stream(spark, inp, clean, quar, ckpt,
                                trigger_once=True)
-  q2.awaitTermination(120)
+  assert q2.awaitTermination(120)
   assert len(spark.read.parquet(clean).collect()) == len(got_clean)
   assert len(spark.read.parquet(quar).collect()) == len(got_quar)
+
+  uncommit_last_batch(ckpt)
+  q3 = start_validation_stream(spark, inp, clean, quar, ckpt,
+                               trigger_once=True)
+  assert q3.awaitTermination(120)
+  for path, before in ((clean, got_clean), (quar, got_quar)):
+    after = spark.read.parquet(path).toPandas()
+    assert sorted(after.doc_id) == sorted(before.doc_id), path
   src.unpersist()
