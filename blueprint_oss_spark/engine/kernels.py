@@ -380,11 +380,13 @@ def _score_box_unimpinged(pred: Predicate, doc: DocPool,
 # Main dispatch.
 # ---------------------------------------------------------------------------
 
-# Per-predicate text-score memo: every textual kind whose score is a
-# pure function of the entity TEXT (text_equals, text_has_substring,
-# text_matches_pattern) caches raw-text → score in a dict stored on the
-# predicate instance ('_tm'), which Predicate.__getstate__ strips from
-# pickles so unpickled copies can never alias stale entries.
+# Text-score memo: the four textual kinds below score a pure function of
+# the entity TEXT, which repeats heavily (sub-phrases across documents,
+# label words).  Each caches raw text → score in one dict stored on the
+# predicate instance ('_tm', see _text_memo): keyed by the raw text only,
+# no tuple allocation or predicate hash in the hottest scalar loop.
+# Predicate.__getstate__ strips it from pickles, so unpickled copies can
+# never alias stale entries.
 
 
 def _text_equals_compiled(pred: Predicate):
@@ -404,20 +406,6 @@ def _text_equals_compiled(pred: Predicate):
 
 
 def _text_equals_score(pred: Predicate, raw: str) -> float:
-  # The score depends only on the entity TEXT, which repeats heavily
-  # (sub-phrases across documents, label words) — memoize per predicate
-  # INSTANCE in a dict stored on it (raw-text key only: no tuple
-  # allocation, no predicate hash, in the hottest scalar loop).  The
-  # dict is per-process state, stripped from pickles alongside the
-  # other caches (Predicate.__getstate__), so unpickled copies can
-  # never alias stale entries.
-  memo = pred.__dict__.get('_tm')
-  if memo is None:
-    memo = {}
-    object.__setattr__(pred, '_tm', memo)
-  got = memo.get(raw)
-  if got is not None:
-    return got
   mtexts, flags, tol, tap, cutoff = _text_equals_compiled(pred)
   if not mtexts:
     return 1.0
@@ -437,96 +425,58 @@ def _text_equals_score(pred: Predicate, raw: str) -> float:
     if best == 1:
       best = 1.0
       break
-  best = best or 0.0
-  if len(memo) > 200_000:
-    memo.clear()
-  memo[raw] = best
-  return best
+  return best or 0.0
 
 
 def _substring_score(pred: Predicate, raw: str) -> float:
-  """text_has_substring score for one raw text — pure in (predicate,
-  text), memoized per predicate instance like text_equals (substring DP
-  dominates label-heavy models: the checks model scans 57 state + 12
-  street + 9 stop words per candidate)."""
-  memo = pred.__dict__.get('_tm')
-  if memo is None:
-    memo = {}
-    object.__setattr__(pred, '_tm', memo)
-  got = memo.get(raw)
-  if got is None:
-    flags = pred.p('flags')
-    t = massage(flags, pred.p('text'))
-    et = massage(flags, raw)
-    tol = pred.p('tolerance')
-    tap = pred.p('taper')
-    if t in et:
-      # distance 0 without the DP (C-speed find); exact same score
-      got = taper_error_int(0, tol, tap)
-    else:
-      # character-multiset lower bound: every needle-char occurrence
-      # missing from the haystack costs >= 1 edit, and score is
-      # EXACTLY 0.0 whenever distance > tolerance + taper
-      # (taper_error_int), so far strings skip the O(|s||t|) DP —
-      # the text_does_not_contain_substring sugar (tol=taper=0) makes
-      # this the checks model's hot case: 78 stop/street/state scans
-      # per candidate, almost all far
-      need = pred.__dict__.get('_tneed')
-      if need is None:
-        from collections import Counter
-        need = tuple(Counter(t).items())
-        object.__setattr__(pred, '_tneed', need)
-      cutoff = tol + tap
-      lb = 0
-      for c, k in need:
-        have = et.count(c)
-        if have < k:
-          lb += k - have
-          if lb > cutoff:
-            break
+  """text_has_substring score for one raw text (substring DP dominates
+  label-heavy models: the checks model scans 57 state + 12 street + 9
+  stop words per candidate)."""
+  flags = pred.p('flags')
+  t = massage(flags, pred.p('text'))
+  et = massage(flags, raw)
+  tol = pred.p('tolerance')
+  tap = pred.p('taper')
+  if t in et:
+    # distance 0 without the DP (C-speed find); exact same score
+    return taper_error_int(0, tol, tap)
+  # character-multiset lower bound: every needle-char occurrence
+  # missing from the haystack costs >= 1 edit, and score is
+  # EXACTLY 0.0 whenever distance > tolerance + taper
+  # (taper_error_int), so far strings skip the O(|s||t|) DP —
+  # the text_does_not_contain_substring sugar (tol=taper=0) makes
+  # this the checks model's hot case: 78 stop/street/state scans
+  # per candidate, almost all far
+  need = pred.__dict__.get('_tneed')
+  if need is None:
+    from collections import Counter
+    need = tuple(Counter(t).items())
+    object.__setattr__(pred, '_tneed', need)
+  cutoff = tol + tap
+  lb = 0
+  for c, k in need:
+    have = et.count(c)
+    if have < k:
+      lb += k - have
       if lb > cutoff:
-        got = 0.0
-      else:
-        got = taper_error_int(substring_edit_distance(et, t), tol, tap)
-    if len(memo) > 200_000:
-      memo.clear()
-    memo[raw] = got
-  return got
+        return 0.0
+  return taper_error_int(substring_edit_distance(et, t), tol, tap)
 
 
 def _pattern_score(pred: Predicate, raw: str) -> float:
-  """text_matches_pattern score for one raw text, memoized as above."""
-  memo = pred.__dict__.get('_tm')
-  if memo is None:
-    memo = {}
-    object.__setattr__(pred, '_tm', memo)
-  got = memo.get(raw)
-  if got is None:
-    pattern = pred.p('pattern')
-    taper = pred.p('taper')
-    if taper is None:
-      taper = max(len(raw), len(pattern)) // 2
-    sf = dict(pred.p('stands_for') or ())
-    got = taper_error_int(
-        pattern_edit_distance(raw, pattern, sf),
-        pred.p('tolerance'), taper)
-    if len(memo) > 200_000:
-      memo.clear()
-    memo[raw] = got
-  return got
+  """text_matches_pattern score for one raw text."""
+  pattern = pred.p('pattern')
+  taper = pred.p('taper')
+  if taper is None:
+    taper = max(len(raw), len(pattern)) // 2
+  sf = dict(pred.p('stands_for') or ())
+  return taper_error_int(
+      pattern_edit_distance(raw, pattern, sf),
+      pred.p('tolerance'), taper)
 
 
 def _text_properties_score(pred: Predicate, s: str) -> float:
-  """text_properties_are score for one raw text — pure in (predicate,
-  text), memoized per predicate instance like the other textual
-  kinds."""
-  memo = pred.__dict__.get('_tm')
-  if memo is None:
-    memo = {}
-    object.__setattr__(pred, '_tm', memo)
-  got = memo.get(s)
-  if got is not None:
-    return got
+  """text_properties_are score for one raw text."""
   taper = pred.p('taper')
   if taper is None:
     taper = len(s) // 2
@@ -564,10 +514,33 @@ def _text_properties_score(pred: Predicate, s: str) -> float:
           error += max(0, d['count'] - cnt)
         else:
           error += max(0, cnt - d['count'])
-  got = taper_error_int(error, pred.p('tolerance'), taper)
+  return taper_error_int(error, pred.p('tolerance'), taper)
+
+
+#: kind → (raw-text scorer, text_only): a text_only kind scores 0 on an
+#: entity that is not of type Text; text_equals scores any entity's text.
+_TEXT_SCORERS = {
+    'text_equals': (_text_equals_score, False),
+    'text_has_substring': (_substring_score, True),
+    'text_matches_pattern': (_pattern_score, True),
+    'text_properties_are': (_text_properties_score, True),
+}
+
+
+def _text_memo(pred: Predicate) -> Dict[str, float]:
+  memo = pred.__dict__.get('_tm')
+  if memo is None:
+    memo = {}
+    object.__setattr__(pred, '_tm', memo)
+  return memo
+
+
+def _memo_miss(pred: Predicate, scorer, memo: Dict[str, float],
+               raw: str) -> float:
+  got = scorer(pred, raw)
   if len(memo) > 200_000:
     memo.clear()
-  memo[s] = got
+  memo[raw] = got
   return got
 
 
@@ -668,27 +641,16 @@ def score_predicate(pred: Predicate, doc: DocPool,
     return taper_error_float(error, pred.p('tolerance'),
                              pred.p('taper') + 1)
 
-  if k == 'text_equals':
+  text_scorer = _TEXT_SCORERS.get(k)
+  if text_scorer is not None:
     (e,) = eids
-    return _text_equals_score(pred, doc.etext[e])
-
-  if k == 'text_has_substring':
-    (e,) = eids
-    if doc.etype[e] != TYPE_TEXT:
+    scorer, text_only = text_scorer
+    if text_only and doc.etype[e] != TYPE_TEXT:
       return 0.0
-    return _substring_score(pred, doc.etext[e])
-
-  if k == 'text_matches_pattern':
-    (e,) = eids
-    if doc.etype[e] != TYPE_TEXT:
-      return 0.0
-    return _pattern_score(pred, doc.etext[e])
-
-  if k == 'text_properties_are':
-    (e,) = eids
-    if doc.etype[e] != TYPE_TEXT:
-      return 0.0
-    return _text_properties_score(pred, doc.etext[e])
+    raw = doc.etext[e]
+    memo = _text_memo(pred)
+    got = memo.get(raw)
+    return got if got is not None else _memo_miss(pred, scorer, memo, raw)
 
   if k == 'line_count_is':
     # Our pool has no Cluster/Address entities → line count is 1
@@ -945,50 +907,26 @@ def score_predicate_batch(pred: Predicate, doc: DocPool,
       out = out * contains_pct_vec(la, lb, doc.ey0[ents], doc.ey1[ents])
     return out
 
-  if k == 'text_equals':
-    mtexts = _text_equals_compiled(pred)[0]
-    if not mtexts:
-      return np.ones(n)
-    etext = doc.etext
-    return np.fromiter(
-        (_text_equals_score(pred, etext[int(e)]) for e in ents),
-        np.float64, n)
-
-  if k == 'text_has_substring':
-    # tight loop with the memo dict hoisted: the memo-hit path is one
-    # dict get per element instead of a function call + attribute
-    # lookups (identical values — _substring_score owns the misses)
+  text_scorer = _TEXT_SCORERS.get(k)
+  if text_scorer is not None:
+    # memo lookup hoisted out of the loop: a hit is one dict get per
+    # element, the scorer runs only on a miss
+    scorer, text_only = text_scorer
     etext, etype = doc.etext, doc.etype
-    memo = pred.__dict__.get('_tm')
-    if memo is None:
-      memo = {}
-      object.__setattr__(pred, '_tm', memo)
+    memo = _text_memo(pred)
     mget = memo.get
     out = np.empty(n)
     for i in range(n):
       e = int(ents[i])
-      if etype[e] != TYPE_TEXT:
+      if text_only and etype[e] != TYPE_TEXT:
         out[i] = 0.0
         continue
-      v = mget(etext[e])
+      raw = etext[e]
+      v = mget(raw)
       if v is None:
-        v = _substring_score(pred, etext[e])
+        v = _memo_miss(pred, scorer, memo, raw)
       out[i] = v
     return out
-
-  if k == 'text_matches_pattern':
-    etext, etype = doc.etext, doc.etype
-    return np.fromiter(
-        (0.0 if etype[int(e)] != TYPE_TEXT
-         else _pattern_score(pred, etext[int(e)]) for e in ents),
-        np.float64, n)
-
-  if k == 'text_properties_are':
-    etext, etype = doc.etext, doc.etype
-    return np.fromiter(
-        (0.0 if etype[int(e)] != TYPE_TEXT
-         else _text_properties_score(pred, etext[int(e)]) for e in ents),
-        np.float64, n)
 
   # fallback: scalar kernel per entity — correct for every kind
   return np.fromiter(

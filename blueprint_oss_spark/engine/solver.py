@@ -22,7 +22,6 @@ Replicated reference quirks (intentional, for output parity):
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
 from typing import Dict, FrozenSet, List, Optional, Sequence, Tuple
@@ -157,94 +156,13 @@ def _rule_score(rule: Rule, assign: Dict[Field, int],
   return s
 
 
-def _upper_bound(rule: Rule, akeys, cache: Dict[int, float]) -> float:
-  """reference: bp/scoring.py:267-284.  All decidable atoms were already
-  cached by the merge atom pass, so no predicate evaluation happens here —
-  non-decidable atoms bound to 1."""
-  got = cache.get(rule.rid)
-  if got is not None:
-    return got
-  if isinstance(rule, Atom):
-    return 1.0  # decidable atoms are always in the cache
-  if isinstance(rule, Disjunction):
-    subs = [_upper_bound(r, akeys, cache) for r in rule.rules]
-    return max(subs) if subs else 1.0
-  s = 1.0
-  for r in rule.rules:
-    s *= _upper_bound(r, akeys, cache)
-  return s
-
-
-def merge_fast(ses: Sequence[SE], meta: Sequence[_RuleMeta], mass: int,
-               sc: _ScoreCache) -> SE:
-  """Exact replica of bp/scoring.py:217-264 over precomputed rule
-  metadata."""
-  if len(ses) == 2:
-    a, b = ses
-    assign = {**a.assign, **b.assign}
-    rule_scores = {**a.rule_scores, **b.rule_scores}
-    field_scores = {**a.field_scores, **b.field_scores}
-  else:
-    assign = {}
-    field_scores = {}
-    rule_scores = {}
-    for se in ses:
-      assign.update(se.assign)
-      rule_scores.update(se.rule_scores)
-      field_scores.update(se.field_scores)
-  akeys = frozenset(assign)
-
-  # Cache all decidable atoms of all rules (bp/scoring.py:234-237).
-  for m in meta:
-    for atom, afields in m.atoms:
-      if afields <= akeys and atom.rid not in rule_scores:
-        rule_scores[atom.rid] = sc.atom_score(
-            atom, tuple(assign[f] for f in atom.fields))
-
-  decidable = []
-  early_exits = []
-  for m in meta:
-    if m.fields <= akeys:
-      decidable.append(m)
-    elif not m.is_atom:
-      # Early exits BEFORE multiplication (bp/scoring.py:249-251); a
-      # non-decidable Atom always has upper bound 1, so only
-      # connectives can early-exit.
-      if _upper_bound(m.rule, akeys, rule_scores) == 0:
-        early_exits.append(m)
-
-  for m in decidable:
-    rid = m.rule.rid
-    s = rule_scores[rid] if rid in rule_scores \
-        else _rule_score(m.rule, assign, sc)
-    for f in m.rule.fields:
-      if f in assign:
-        field_scores[f] *= s
-    rule_scores[rid] = s
-
-  for m in early_exits:
-    for f in m.rule.fields:
-      if f in assign:
-        field_scores[f] = 0.0
-
-  score = sum(field_scores.values()) / mass
-  return SE(assign, field_scores, rule_scores, mass, score)
-
-
-def merge(ses: Sequence[SE], rules: Sequence[Rule], mass: int,
-          doc: DocPool) -> SE:
-  """Back-compat wrapper building metadata on the fly."""
-  return merge_fast(ses, [_RuleMeta(r) for r in rules], mass,
-                    _ScoreCache(doc))
-
-
 # ---------------------------------------------------------------------------
 # Leaf candidate generation (bp/tree.py:68-96, 228-262).
 # ---------------------------------------------------------------------------
 
 def leaf_candidates(doc: DocPool, etype: str,
                     atom_rules: Sequence[Atom],
-                    memo: Dict, count_only: bool = False) \
+                    memo: Dict) \
     -> List[Tuple[int, float, Dict[int, float]]]:
   """Scored (entity, field_score, atom_scores) candidates of one leaf,
   sorted by score descending (stable), validity-cutoff applied.
@@ -391,34 +309,28 @@ def _continue_bind(node: Node, doc: DocPool, memo: Dict,
     return bind_node(combine(*node.children), doc, memo, need_all)
 
   if isinstance(node, PickBestNode):
-    if not need_all and not node.rules:
-      # Only the best is needed and there are no node rules (rule
-      # pushdown always empties PickBest rules, bp/tree.py:854-858):
-      # renormalization sum(fs)/mass is order-preserving within each
-      # (sorted) child list, so the argmax over children's heads is the
-      # argmax over the whole union — and each child therefore only
-      # needs its own best (need=1 propagates).
-      children = [bind_node(c, doc, memo, need_all=False)
-                  for c in node.children]
-      mass = max(c.mass for c in children)
-      legal = frozenset().union(*(c.legal_fields for c in children))
-      meta = _rule_meta(node.rules, memo)
-      out = []
-      for c in children:
-        if c.cands:
-          out.append(merge_fast([c.cands[0]], meta, mass, sc))
-      out.sort(key=lambda s: -s.score)
-      return Bound(legal, mass, out)
-    children = [bind_node(c, doc, memo) for c in node.children]
+    if node.rules:
+      # Rule pushdown always empties PickBest rules (bp/tree.py:854-858);
+      # the rescoring below has no rule pass, so rules left here would
+      # be dropped silently.
+      raise ValueError('PickBest node has rules at bind time; solve the '
+                       'tree after optimize_rule_distribution')
+    children = [bind_node(c, doc, memo, need_all) for c in node.children]
     mass = max(c.mass for c in children)
     legal = frozenset().union(*(c.legal_fields for c in children))
-    meta = _rule_meta(node.rules, memo)
-    out = []
-    for c in children:
-      for se in c.cands:
-        m = merge_fast([se], meta, mass, sc)
-        if m.valid():
-          out.append(m)
+    if need_all:
+      out = []
+      for c in children:
+        for se in c.cands:
+          m = _renormalized(se, mass)
+          if m.valid():
+            out.append(m)
+    else:
+      # Renormalization sum(fs)/mass is order-preserving within each
+      # (sorted) child list, so the argmax over the children's heads is
+      # the argmax over the whole union, and each child only needs its
+      # own best (need=1 propagates).
+      out = [_renormalized(c.cands[0], mass) for c in children if c.cands]
     out.sort(key=lambda s: -s.score)
     return Bound(legal, mass, out)
 
@@ -428,18 +340,25 @@ def _continue_bind(node: Node, doc: DocPool, memo: Dict,
   raise TypeError(f'unknown node type {type(node)}')
 
 
+def _renormalized(se: SE, mass: int) -> SE:
+  """`se` rescored over a PickBest node's mass: the reference's merge
+  (bp/scoring.py:217-264) of one extraction under no node rules."""
+  field_scores = dict(se.field_scores)
+  return SE(dict(se.assign), field_scores, dict(se.rule_scores), mass,
+            sum(field_scores.values()) / mass)
+
+
 def _merge_plan(meta: Sequence[_RuleMeta], akeys: FrozenSet[Field],
                 bkeys: FrozenSet[Field]) -> List[tuple]:
   """Precompute, for one (assigned-fields-of-a, assigned-fields-of-b)
-  bucket, exactly the work _merge_pair does per pair: which rules are
-  decidable, which side supplies each atom field, which undecidable
+  bucket, the pair-invariant work of _merge_pair_planned: which rules
+  are decidable, which side supplies each atom field, which undecidable
   connectives get their decidable atoms cached + an upper-bound check.
   Candidate lists contain only a handful of distinct assigned-field sets
   (full or empty under all_or_nothing), so this hoists the per-pair
-  field-membership scans out of the O(|a|·|b|) loop.  Semantics are
-  byte-identical to the original fused merge (bp/scoring.py:217-264):
-  ops execute in meta order, preserving the extra-atom-cache
-  accumulation the upper bound sees."""
+  field-membership scans out of the O(|a|·|b|) loop.  Ops keep meta
+  order, preserving the extra-atom-cache accumulation the upper bound
+  sees (bp/scoring.py:234-261)."""
   union = akeys | bkeys
   plan: List[tuple] = []
   for m in meta:
@@ -459,17 +378,22 @@ def _merge_plan(meta: Sequence[_RuleMeta], akeys: FrozenSet[Field],
 
 def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
                         sc: _ScoreCache) -> Optional[SE]:
-  """_merge_pair with the bucket-invariant work precomputed by
-  _merge_plan.  See _merge_pair for the semantics contract."""
+  """The 2-way merge of a and b under node rules, with the
+  bucket-invariant work precomputed by _merge_plan; the output dicts are
+  built only when the pair survives.  Exactly bp/scoring.py:217-264 for
+  pairs that survive; pairs returning None are exactly the ones the
+  reference's merge would produce as invalid (a decidable rule scored
+  0, a 0-upper-bound early exit touched an assigned field, or a field
+  score fell to <= 0.1).  Decidable connectives are recomputed from
+  their atoms, as the reference does (bp/scoring.py:243-247)."""
   a_assign = a.assign
   b_assign = b.assign
   a_rs = a.rule_scores
   b_rs = b.rule_scores
 
   decidable: List = []
-  # incremental dict (insertion-ordered like the former pair list);
-  # _bound_fast only READS it, so sharing one growing dict across ops
-  # is behavior-identical to rebuilding dict(pairs) per op
+  # one growing dict across ops: _bound_fast only reads it, and each
+  # upper bound sees the atoms cached by the ops before it
   extra_atom_scores: Dict[int, float] = {}
 
   for op in plan:
@@ -516,101 +440,6 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
 
   rule_scores = {**a_rs, **b_rs}
   for rid, s in extra_atom_scores.items():
-    if rid not in rule_scores:
-      rule_scores[rid] = s
-  for (m, s) in decidable:
-    rule_scores[m.rule.rid] = s
-
-  score = sum(field_scores.values()) / mass
-  return SE(assign, field_scores, rule_scores, mass, score)
-
-
-def _merge_pair(a: SE, b: SE, meta: Sequence[_RuleMeta], mass: int,
-                sc: _ScoreCache) -> Optional[SE]:
-  """Fused 2-way merge: one metadata scan; the output dicts are built
-  only when the pair survives.  Exactly bp/scoring.py:217-264 for pairs
-  that survive; pairs returning None are exactly the ones merge would
-  produce as invalid (a decidable rule scored 0, a 0-upper-bound early
-  exit touched an assigned field, or a field score fell to ≤ 0.1)."""
-  a_assign = a.assign
-  b_assign = b.assign
-  a_rs = a.rule_scores
-  b_rs = b.rule_scores
-
-  decidable: List = []       # (_RuleMeta, score)
-  early_exit_meta: List = []
-  extra_atom_scores: List = []  # (rid, score) cached-atom pass results
-
-  for m in meta:
-    decid = True
-    for f in m.rule.fields:
-      if f not in a_assign and f not in b_assign:
-        decid = False
-        break
-    if decid:
-      rid = m.rule.rid
-      s = a_rs.get(rid)
-      if s is None:
-        s = b_rs.get(rid)
-      if s is None:
-        if m.is_atom:
-          atom = m.rule
-          s = sc.atom_score(atom, tuple(
-              a_assign[f] if f in a_assign else b_assign[f]
-              for f in atom.fields))
-          extra_atom_scores.append((rid, s))
-        else:
-          # connective: recompute from atoms (reference recomputes too,
-          # bp/scoring.py:243-247 TODO note)
-          s = _connective_score(m.rule, a_assign, b_assign, sc)
-          extra_atom_scores.append((rid, s))
-      if s == 0.0:
-        return None  # zeroes an assigned field → invalid
-      decidable.append((m, s))
-    else:
-      if not m.is_atom:
-        # early exit check (bp/scoring.py:249-261); cache decidable
-        # atoms of this rule first, as the reference's atom pass does
-        bound = 1.0
-        for atom, afields in m.atoms:
-          ok = True
-          for f in atom.fields:
-            if f not in a_assign and f not in b_assign:
-              ok = False
-              break
-          if ok:
-            rid = atom.rid
-            s = a_rs.get(rid)
-            if s is None:
-              s = b_rs.get(rid)
-            if s is None:
-              s = sc.atom_score(atom, tuple(
-                  a_assign[f] if f in a_assign else b_assign[f]
-                  for f in atom.fields))
-            extra_atom_scores.append((rid, s))
-        bound = _bound_fast(m.rule, a_assign, b_assign, a_rs, b_rs,
-                            dict(extra_atom_scores))
-        if bound == 0.0:
-          touches = any(f in a_assign or f in b_assign
-                        for f in m.rule.fields)
-          if touches:
-            return None
-          early_exit_meta.append(m)
-
-  field_scores = {**a.field_scores, **b.field_scores}
-  for (m, s) in decidable:
-    if s != 1.0:
-      for f in m.rule.fields:
-        if f in a_assign or f in b_assign:
-          field_scores[f] *= s
-
-  assign = {**a_assign, **b_assign}
-  for f in assign:
-    if not field_scores[f] > MINIMUM_FIELD_SCORE:
-      return None
-
-  rule_scores = {**a_rs, **b_rs}
-  for rid, s in extra_atom_scores:
     if rid not in rule_scores:
       rule_scores[rid] = s
   for (m, s) in decidable:

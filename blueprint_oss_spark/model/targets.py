@@ -1,8 +1,8 @@
 """Blueprint targets files: ground-truth labels for accuracy scoring.
 
 Parity surface: bp/targets.py (the JSON format + validation, 1:1 field
-names so files round-trip byte-compatibly through the reference's
-`load_targets_from_json` / `save_targets`) and
+names so files round-trip through the reference's
+`load_targets_from_json`) and
 bp/synthesis/targets.py:26-70 (`generate_target_extraction` — locate the
 labeled entity for each field in a document's entity pool).
 
@@ -15,7 +15,6 @@ be unassigned.  `accuracy_dataframe` runs the comparison distributed
 
 from __future__ import annotations
 
-import json
 from dataclasses import asdict, dataclass, field as dc_field
 from typing import Any, Dict, List, Optional, Tuple
 
@@ -220,12 +219,6 @@ def validate(targets: Targets, silent: bool = True) -> Targets:
             f'unrecognized doc tag {tag} in output config slice '
             f'{slice_name}')
   return targets
-
-
-def save_targets(targets: Targets, path: str) -> None:
-  with open(path, 'w') as f:
-    f.write(json.dumps(targets_to_json(targets), indent=2,
-                       sort_keys=True) + '\n')
 
 
 # ---------------------------------------------------------------------------

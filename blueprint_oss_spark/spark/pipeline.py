@@ -454,7 +454,6 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
                        output_path: str, root: Optional[Node] = None, *,
                        groups: int = 4,
                        resume: bool = True,
-                       table_format: str = 'parquet',
                        iceberg_table: Optional[str] = None,
                        transform=None,
                        **extract_kwargs) -> List[dict]:
@@ -483,9 +482,9 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   Returns the lineage rows (one per group processed this run), in
   group order.
 
-  Sinks: `table_format='parquet'` (default) writes dynamic-overwrite
-  partitioned parquet under `output_path`.  `table_format='iceberg'`
-  writes each checkpoint group to `iceberg_table` through the
+  Sink: without `iceberg_table` (the default), dynamic-overwrite
+  partitioned parquet under `output_path`.  With `iceberg_table` set,
+  each checkpoint group is written to that table through the
   DataFrameWriterV2 (`writeTo`): if the table does not exist, the first
   group runs alone and creates it partitioned by part_bucket, then the
   rest `overwritePartitions()` concurrently — each group is one ATOMIC
@@ -507,9 +506,6 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   errors/score_sum/elapsed_ms when present).
   """
   transform = job_transform(root, transform, **extract_kwargs)
-  if table_format == 'iceberg' and not iceberg_table:
-    raise ValueError("table_format='iceberg' requires iceberg_table "
-                     "(e.g. 'catalog.db.extractions')")
 
   # Lineage I/O goes through the Hadoop FileSystem API (via the JVM),
   # not the local os module, so checkpoint/resume works unchanged when
@@ -601,7 +597,7 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
     # partially-written group (crash between data write and lineage
     # write) cannot leave duplicate rows behind.  Each write stages
     # under its own directory, so concurrent groups do not collide.
-    if table_format == 'iceberg':
+    if iceberg_table:
       _write_group_iceberg(observed, iceberg_table, create)
     else:
       (observed.write.mode('overwrite')
@@ -622,7 +618,7 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
 
   pending = [g for g in range(groups) if g not in done_groups]
   lineage_rows = []
-  if pending and table_format == 'iceberg':
+  if pending and iceberg_table:
     with _iceberg_errors(iceberg_table):
       exists = spark.catalog.tableExists(iceberg_table)
     if not exists:  # the creating commit runs before any overwrite

@@ -65,6 +65,24 @@ from blueprint_oss_spark.spark.pipeline import extract_documents, \
 # overhead stays noise) while giving the scheduler room to rebalance.
 n_parts = int(os.environ.get('BOS_SCALE_PARTS', '0')) or want_cores * 6
 
+
+def salted_replicas(src, rep):
+    """`rep` copies of a (doc_id, text) frame: copy r shifts doc_id by
+    r * 1000000 and suffixes each of its words with '_<r>', so copies
+    share no word (and no shingle or n-gram) and each has as many words
+    as its source."""
+    from blueprint_oss_spark.ops.common import words
+    reps = spark.range(rep).select(F.col('id').alias('rep'))
+    return (src.crossJoin(reps)
+            .select((F.col('doc_id') + F.col('rep') * 1000000)
+                    .alias('doc_id'),
+                    F.concat_ws(' ', F.transform(
+                        words(F.col('text')),
+                        lambda t: F.concat(
+                            t, F.lit('_'), F.col('rep').cast('string'))))
+                    .alias('text')))
+
+
 if model == 'main_content':
     # the north-rule pipeline itself: interleaved HTML+media spans ->
     # boilerplate strip -> reassembled span sequence; checksum is an
@@ -138,16 +156,7 @@ elif model == 'minhash':
     # linearly, no artificial near-dup quadratic blowup).
     rep = int(os.environ.get('BOS_SCALE_REPLICATE', '8'))
     if rep > 1:
-        reps = spark.range(rep).select(F.col('id').alias('rep'))
-        src = (src.crossJoin(reps)
-               .select((F.col('doc_id') + F.col('rep') * 1000000)
-                       .alias('doc_id'),
-                       F.concat_ws(' ', F.transform(
-                           F.split('text', ' '),
-                           lambda t: F.concat(
-                               t, F.lit('_'),
-                               F.col('rep').cast('string'))))
-                       .alias('text')))
+        src = salted_replicas(src, rep)
     df = src.repartition(n_parts).cache()
     n_in = df.count()
     def run_pass():
@@ -217,16 +226,7 @@ elif model == 'paragraphs':
         src = src.limit(n_docs)
     rep = int(os.environ.get('BOS_SCALE_REPLICATE', '32'))
     if rep > 1:
-        reps = spark.range(rep).select(F.col('id').alias('rep'))
-        src = (src.crossJoin(reps)
-               .select((F.col('doc_id') + F.col('rep') * 1000000)
-                       .alias('doc_id'),
-                       F.concat_ws(' ', F.transform(
-                           F.split('text', ' '),
-                           lambda t: F.concat(
-                               t, F.lit('_'),
-                               F.col('rep').cast('string'))))
-                       .alias('text')))
+        src = salted_replicas(src, rep)
     df = src.repartition(n_parts).cache()
     n_in = df.count()
     def run_pass():
@@ -455,16 +455,7 @@ elif model == 'bloom':
         src = src.limit(n_docs)
     rep = int(os.environ.get('BOS_SCALE_REPLICATE', '4'))
     if rep > 1:
-        reps = spark.range(rep).select(F.col('id').alias('rep'))
-        src = (src.crossJoin(reps)
-               .select((F.col('doc_id') + F.col('rep') * 1000000)
-                       .alias('doc_id'),
-                       F.concat_ws(' ', F.transform(
-                           F.split('text', ' '),
-                           lambda t: F.concat(
-                               t, F.lit('_'),
-                               F.col('rep').cast('string'))))
-                       .alias('text')))
+        src = salted_replicas(src, rep)
     df = src.repartition(n_parts).cache()
     n_in = df.count()
     def run_pass():

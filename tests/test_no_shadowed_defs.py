@@ -53,20 +53,37 @@ def test_no_top_level_name_defined_twice():
   assert not dupes, dupes
 
 
+def _docstring_spans(tree):
+  """(start, end) positions of the module, class and function
+  docstrings."""
+  for node in ast.walk(tree):
+    if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                         ast.AsyncFunctionDef)) and node.body:
+      first = node.body[0]
+      if isinstance(first, ast.Expr) \
+          and isinstance(first.value, ast.Constant) \
+          and isinstance(first.value.value, str):
+        yield ((first.lineno, first.col_offset),
+               (first.end_lineno, first.end_col_offset))
+
+
 def test_no_unreferenced_top_level_definition():
   # A reference is any occurrence of the name as a code identifier or
   # inside a string literal (getattr / registry lookups) in any of the
-  # repo's .py files; comments do not count.
+  # repo's .py files; comments and docstrings do not count.
   uses = collections.Counter()
   for path in ROOT.rglob('*.py'):
     rel = path.relative_to(ROOT).parts
     if any(p.startswith('.') or p == 'spark-warehouse' for p in rel):
       continue
-    for tok in tokenize.generate_tokens(
-        io.StringIO(path.read_text()).readline):
+    source = path.read_text()
+    docstrings = list(_docstring_spans(ast.parse(source)))
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
       if tok.type == tokenize.NAME:
         uses[tok.string] += 1
-      elif tok.type == tokenize.STRING:
+      elif tok.type == tokenize.STRING and not any(
+          start <= tok.start and tok.end <= end
+          for start, end in docstrings):
         uses.update(_IDENT.findall(tok.string))
   defs = collections.defaultdict(list)
   for path in _program():

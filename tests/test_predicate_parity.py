@@ -214,59 +214,3 @@ def test_predicate_scores_match_reference():
         checked += 1
   assert checked > 2000
 
-
-def test_leaf_batch_scoring_equals_scalar_bruteforce():
-  """The vectorized leaf path (score_predicate_batch + progressive
-  cutoff in leaf_candidates) must reproduce the scalar definition
-  bit-for-bit: per entity, the product of per-atom scalar
-  score_predicate calls in atom order, strict 0.1 cutoff, stable
-  score-descending sort."""
-  from blueprint_oss_spark.engine.entity_gen import build_doc_pool
-  from blueprint_oss_spark.engine.kernels import score_predicate
-  from blueprint_oss_spark.engine.runner import spans_to_pages
-  from blueprint_oss_spark.engine.solver import (
-      MINIMUM_FIELD_SCORE, leaf_candidates)
-  from blueprint_oss_spark.fixtures import (
-      labelvalue_corpus, readme_corpus, table_corpus)
-  from blueprint_oss_spark.model.rules import (
-      is_date, is_dollar_amount, is_entire_phrase, is_in_doc_region,
-      is_one_line, non_fatal, penalize, text_equals,
-      text_has_substring, text_properties_are, any_holds)
-
-  leaf_specs = [
-      ('Text', (text_equals('Total due'), is_entire_phrase)),
-      ('Text', (any_holds(text_equals('Issue date'),
-                          text_equals('Name:')),
-                is_in_doc_region((0.0, 0.8), (0.0, 1.0)))),
-      ('Text', (non_fatal(text_has_substring('tot'), 0.4),
-                is_one_line,
-                text_properties_are(length={'at_least': 2}))),
-      ('Date', (is_date, penalize(is_in_doc_region((0, 1), (0, 0.7)),
-                                  0.9))),
-      ('DollarAmount', (is_dollar_amount,)),
-      ('Text', ()),  # empty atom set: every entity at score 1.0
-  ]
-  docs = readme_corpus(4, seed=71) + labelvalue_corpus(4, seed=72) \
-      + table_corpus(4, seed=73)
-  checked = 0
-  for doc_id, spans in docs:
-    pool = build_doc_pool(doc_id, spans_to_pages(spans))
-    for etype, preds in leaf_specs:
-      atoms = tuple(p(f'f{i}') for i, p in enumerate(preds))
-      got = leaf_candidates(pool, etype, atoms, {})
-      expect = []
-      for e in pool.entities_of_type(etype):
-        e = int(e)
-        score = 1.0
-        scores = {}
-        for a in atoms:
-          s = score_predicate(a.predicate, pool, (e,))
-          scores[a.rid] = s
-          score *= s
-        if score > MINIMUM_FIELD_SCORE:
-          expect.append((e, score, scores))
-      expect.sort(key=lambda c: -c[1])
-      assert got == expect, (doc_id, etype,
-                             [p.name for p in preds])
-      checked += len(expect)
-  assert checked > 200

@@ -321,7 +321,7 @@ def test_run_extraction_job_iceberg_creates_before_overwrites(
   lineage = run_extraction_job(
       spark, _spans_df(spark, readme_corpus(12, seed=86)),
       str(tmp_path / 'out'), readme_blueprint(), groups=3,
-      table_format='iceberg', iceberg_table='cat.db.extractions')
+      iceberg_table='cat.db.extractions')
   assert [r['group'] for r in lineage] == [0, 1, 2]
   assert events[:2] == [('start', True), ('end', True)]
   assert sorted(events[2:]) == [('end', False)] * 2 + [('start', False)] * 2
@@ -495,10 +495,10 @@ def test_pin_spark_zip_importers_in_spark_task(spark):
 
 
 def test_run_extraction_job_iceberg_contract(spark, tmp_path):
-  """The Iceberg sink branch: missing table name is a ValueError; with a
-  name but no Iceberg catalog on the session (this container ships no
-  Iceberg jars) the failure is a RuntimeError that names the required
-  spark-submit setup — not a raw py4j traceback."""
+  """The Iceberg sink branch: with a table name but no Iceberg catalog
+  on the session (the test session loads no Iceberg jars) the failure
+  is a RuntimeError that names the required spark-submit setup — not a
+  raw py4j traceback."""
   import pytest
 
   from blueprint_oss_spark.fixtures import readme_blueprint, readme_corpus
@@ -509,14 +509,9 @@ def test_run_extraction_job_iceberg_contract(spark, tmp_path):
   df = spark.createDataFrame(rows, SPANS_SCHEMA)
   root = readme_blueprint()
 
-  with pytest.raises(ValueError, match='iceberg_table'):
-    run_extraction_job(spark, df, str(tmp_path / 'o1'), root,
-                       groups=1, table_format='iceberg')
-
   with pytest.raises(RuntimeError, match='Iceberg catalog'):
     run_extraction_job(spark, df, str(tmp_path / 'o2'), root,
-                       groups=1, table_format='iceberg',
-                       iceberg_table='nosuchcat.db.extractions')
+                       groups=1, iceberg_table='nosuchcat.db.extractions')
 
 
 def test_dedup_spans_keeps_min_doc_per_content(spark):
