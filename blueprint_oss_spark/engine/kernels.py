@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import re
 from bisect import bisect
+from collections import Counter
 from functools import lru_cache
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from ..model.rules import Predicate
+from ..model.rules import Predicate, derived
 from .docmodel import DocPool, TYPE_DATE, TYPE_DOLLAR, TYPE_TEXT
 from .entity_gen import edit_distance_capped as _edit_distance_capped_raw
 
@@ -382,31 +383,26 @@ def _score_box_unimpinged(pred: Predicate, doc: DocPool,
 
 # Text-score memo: the four textual kinds below score a pure function of
 # the entity TEXT, which repeats heavily (sub-phrases across documents,
-# label words).  Each caches raw text → score in one dict stored on the
-# predicate instance ('_tm', see _text_memo): keyed by the raw text only,
-# no tuple allocation or predicate hash in the hottest scalar loop.
-# Predicate.__getstate__ strips it from pickles, so unpickled copies can
-# never alias stale entries.
+# label words).  Each caches raw text → score in one dict derived on the
+# predicate ('_tm'): keyed by the raw text only, no tuple allocation or
+# predicate hash in the hottest scalar loop.  Like every derived value
+# it stays out of pickles, so unpickled copies never alias stale entries.
 
 
 def _text_equals_compiled(pred: Predicate):
-  # Per-predicate compiled form, cached on the instance: the massaged
-  # vocabulary and constants never change, and text_equals dominates
-  # the call profile (label vocabularies scored per entity).
-  te = pred.__dict__.get('_te')
-  if te is None:
-    texts = pred.p('texts')
-    flags = pred.p('flags')
-    tol, tap = pred.p('tolerance'), pred.p('taper')
-    mtexts = tuple((massage(flags, t), len(massage(flags, t)))
-                   for t in texts or ())
-    te = (mtexts, flags, tol, tap, tol + tap)
-    object.__setattr__(pred, '_te', te)
-  return te
+  # The massaged vocabulary and constants never change, and text_equals
+  # dominates the call profile (label vocabularies scored per entity).
+  texts = pred.p('texts')
+  flags = pred.p('flags')
+  tol, tap = pred.p('tolerance'), pred.p('taper')
+  mtexts = tuple((massage(flags, t), len(massage(flags, t)))
+                 for t in texts or ())
+  return (mtexts, flags, tol, tap, tol + tap)
 
 
 def _text_equals_score(pred: Predicate, raw: str) -> float:
-  mtexts, flags, tol, tap, cutoff = _text_equals_compiled(pred)
+  mtexts, flags, tol, tap, cutoff = derived(
+      pred, '_te', lambda: _text_equals_compiled(pred))
   if not mtexts:
     return 1.0
   etext = massage(flags, raw)
@@ -447,11 +443,7 @@ def _substring_score(pred: Predicate, raw: str) -> float:
   # the text_does_not_contain_substring sugar (tol=taper=0) makes
   # this the checks model's hot case: 78 stop/street/state scans
   # per candidate, almost all far
-  need = pred.__dict__.get('_tneed')
-  if need is None:
-    from collections import Counter
-    need = tuple(Counter(t).items())
-    object.__setattr__(pred, '_tneed', need)
+  need = derived(pred, '_tneed', lambda: tuple(Counter(t).items()))
   cutoff = tol + tap
   lb = 0
   for c, k in need:
@@ -525,14 +517,6 @@ _TEXT_SCORERS = {
     'text_matches_pattern': (_pattern_score, True),
     'text_properties_are': (_text_properties_score, True),
 }
-
-
-def _text_memo(pred: Predicate) -> Dict[str, float]:
-  memo = pred.__dict__.get('_tm')
-  if memo is None:
-    memo = {}
-    object.__setattr__(pred, '_tm', memo)
-  return memo
 
 
 def _memo_miss(pred: Predicate, scorer, memo: Dict[str, float],
@@ -648,7 +632,7 @@ def score_predicate(pred: Predicate, doc: DocPool,
     if text_only and doc.etype[e] != TYPE_TEXT:
       return 0.0
     raw = doc.etext[e]
-    memo = _text_memo(pred)
+    memo = derived(pred, '_tm', dict)
     got = memo.get(raw)
     return got if got is not None else _memo_miss(pred, scorer, memo, raw)
 
@@ -770,6 +754,24 @@ def predicate_scores_bounded_01(pred: Predicate) -> bool:
   return True
 
 
+def _none_contains_fused(pred: Predicate):
+  """An all_hold predicate's subs split for the fused none-contains scan:
+  ((flags, massaged words) per flags value, the other subs, and an empty
+  raw text → 0/1 memo)."""
+  words_by_flags: Dict[int, list] = {}
+  others = []
+  for sub in pred.p('predicates'):
+    inner = sub.p('predicate') if sub.kind == 'negate' else None
+    if (inner is not None and inner.kind == 'text_has_substring'
+        and inner.p('tolerance') == 0 and inner.p('taper') == 0):
+      words_by_flags.setdefault(inner.p('flags'), []).append(
+          massage(inner.p('flags'), inner.p('text')))
+    else:
+      others.append(sub)
+  return (tuple((f, tuple(ws)) for f, ws in words_by_flags.items()),
+          tuple(others), {})
+
+
 def score_predicate_batch(pred: Predicate, doc: DocPool,
                           ents: np.ndarray) -> np.ndarray:
   """Vectorized score_predicate over a HOMOGENEOUS-type entity-id array
@@ -814,23 +816,8 @@ def score_predicate_batch(pred: Predicate, doc: DocPool,
     # multiplication, so hoisting them after the other subs is
     # bit-identical.  The checks model's 57-stop-word scan is the
     # motivating case (measured 16% of the whole solve).
-    fused = pred.__dict__.get('_fused_nc')
-    if fused is None:
-      words_by_flags: Dict[int, list] = {}
-      others = []
-      for sub in pred.p('predicates'):
-        inner = sub.p('predicate') if sub.kind == 'negate' else None
-        if (inner is not None and inner.kind == 'text_has_substring'
-            and inner.p('tolerance') == 0 and inner.p('taper') == 0):
-          words_by_flags.setdefault(inner.p('flags'), []).append(
-              massage(inner.p('flags'), inner.p('text')))
-        else:
-          others.append(sub)
-      fused = (tuple((f, tuple(ws))
-                     for f, ws in words_by_flags.items()),
-               tuple(others), {})
-      object.__setattr__(pred, '_fused_nc', fused)
-    groups, others, fmemo = fused
+    groups, others, fmemo = derived(
+        pred, '_fused_nc', lambda: _none_contains_fused(pred))
     if not groups:
       score = np.ones(n)
       for sub in others:
@@ -913,7 +900,7 @@ def score_predicate_batch(pred: Predicate, doc: DocPool,
     # element, the scorer runs only on a miss
     scorer, text_only = text_scorer
     etext, etype = doc.etext, doc.etype
-    memo = _text_memo(pred)
+    memo = derived(pred, '_tm', dict)
     mget = memo.get
     out = np.empty(n)
     for i in range(n):

@@ -30,16 +30,11 @@ from ..model.nodes import (
     CombineNode, EmptyNode, LeafNode, MergeNode, Node, PatternNode,
     PickBestNode, combine, optimize_rule_distribution,
 )
-from ..model.rules import (
-    Atom, Conjunction, Connective, Disjunction, Field, Rule, get_atoms,
-)
+from ..model.rules import Atom, Disjunction, Field, Rule, derived
 from .docmodel import DocPool
 from .kernels import score_predicate
 
 MINIMUM_FIELD_SCORE = 0.1  # strict lower bound (bp/scoring.py:196-200)
-
-# (pattern id, candidate-count signature) → per-doc ordered combine tree.
-_ORDERED_TREE_CACHE: Dict = {}
 
 # Safety valve for candidate-list materialization (the reference has a 45 s
 # per-doc SIGALRM instead, bp/cli/run_model.py:32).
@@ -124,19 +119,6 @@ class _ScoreCache:
       got = score_predicate(atom.predicate, self.doc, eids)
       self.memo[key] = got
     return got
-
-
-class _RuleMeta:
-  """Bind-time metadata for one rule at one node."""
-
-  __slots__ = ('rule', 'fields', 'is_atom', 'atoms')
-
-  def __init__(self, rule: Rule):
-    self.rule = rule
-    self.fields = rule.fieldset
-    self.is_atom = isinstance(rule, Atom)
-    # (atom, fields_frozenset) pairs for the atom-cache pass
-    self.atoms = tuple((a, a.fieldset) for a in get_atoms(rule))
 
 
 def _rule_score(rule: Rule, assign: Dict[Field, int],
@@ -250,28 +232,6 @@ def _score_cache(doc: DocPool, memo: Dict) -> _ScoreCache:
   return sc
 
 
-#: rid-keyed process-global _RuleMeta cache: rules are immutable and
-#: rids are process-unique (re-drawn at unpickle), so metadata survives
-#: across documents instead of being rebuilt per (doc, node) bind.
-_RULE_META_CACHE: Dict[int, _RuleMeta] = {}
-
-
-def _rule_meta(rules: Sequence[Rule], memo: Dict) -> List[_RuleMeta]:
-  key = ('_meta', tuple(id(r) for r in rules))
-  got = memo.get(key)
-  if got is None:
-    got = []
-    for r in rules:
-      m = _RULE_META_CACHE.get(r.rid)
-      if m is None or m.rule is not r:
-        m = _RuleMeta(r)
-        if len(_RULE_META_CACHE) < 65536:
-          _RULE_META_CACHE[r.rid] = m
-      got.append(m)
-    memo[key] = got
-  return got
-
-
 def _continue_bind(node: Node, doc: DocPool, memo: Dict,
                    need_all: bool = True) -> Bound:
   sc = _score_cache(doc, memo)
@@ -298,10 +258,9 @@ def _continue_bind(node: Node, doc: DocPool, memo: Dict,
   if isinstance(node, CombineNode):
     b1 = bind_node(node.node1, doc, memo)
     b2 = bind_node(node.node2, doc, memo)
-    meta = _rule_meta(node.rules, memo)
     if not need_all:
-      return _bind_combine_best(b1, b2, meta, node.all_or_nothing, sc)
-    return _bind_combine(b1, b2, meta, node.all_or_nothing, sc)
+      return _bind_combine_best(b1, b2, node.rules, node.all_or_nothing, sc)
+    return _bind_combine(b1, b2, node.rules, node.all_or_nothing, sc)
 
   if isinstance(node, MergeNode):
     # MergeNode executes as a fresh combine chain; its own spanning rules
@@ -348,7 +307,7 @@ def _renormalized(se: SE, mass: int) -> SE:
             sum(field_scores.values()) / mass)
 
 
-def _merge_plan(meta: Sequence[_RuleMeta], akeys: FrozenSet[Field],
+def _merge_plan(rules: Sequence[Rule], akeys: FrozenSet[Field],
                 bkeys: FrozenSet[Field]) -> List[tuple]:
   """Precompute, for one (assigned-fields-of-a, assigned-fields-of-b)
   bucket, the pair-invariant work of _merge_pair_planned: which rules
@@ -356,23 +315,23 @@ def _merge_plan(meta: Sequence[_RuleMeta], akeys: FrozenSet[Field],
   connectives get their decidable atoms cached + an upper-bound check.
   Candidate lists contain only a handful of distinct assigned-field sets
   (full or empty under all_or_nothing), so this hoists the per-pair
-  field-membership scans out of the O(|a|·|b|) loop.  Ops keep meta
+  field-membership scans out of the O(|a|·|b|) loop.  Ops keep rule
   order, preserving the extra-atom-cache accumulation the upper bound
   sees (bp/scoring.py:234-261)."""
   union = akeys | bkeys
   plan: List[tuple] = []
-  for m in meta:
-    if m.fields <= union:
-      rule = m.rule
-      src = tuple((f in akeys, f) for f in rule.fields) if m.is_atom \
+  for rule in rules:
+    is_atom = isinstance(rule, Atom)
+    if rule.fieldset <= union:
+      src = tuple((f in akeys, f) for f in rule.fields) if is_atom \
           else None
-      plan.append(('d', m, rule.rid, m.is_atom, rule, src))
-    elif not m.is_atom:
+      plan.append(('d', rule, rule.rid, is_atom, src))
+    elif not is_atom:
       cached_atoms = tuple(
           (atom, atom.rid, tuple((f in akeys, f) for f in atom.fields))
-          for (atom, afields) in m.atoms if afields <= union)
-      touches = bool(m.fields & union)
-      plan.append(('p', m, cached_atoms, touches))
+          for atom in rule.atoms if atom.fieldset <= union)
+      touches = bool(rule.fieldset & union)
+      plan.append(('p', rule, cached_atoms, touches))
   return plan
 
 
@@ -398,7 +357,7 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
 
   for op in plan:
     if op[0] == 'd':
-      _, m, rid, is_atom, rule, src = op
+      _, rule, rid, is_atom, src = op
       s = a_rs.get(rid)
       if s is None:
         s = b_rs.get(rid)
@@ -411,9 +370,9 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
         extra_atom_scores[rid] = s
       if s == 0.0:
         return None
-      decidable.append((m, s))
+      decidable.append((rule, s))
     else:
-      _, m, cached_atoms, touches = op
+      _, rule, cached_atoms, touches = op
       for (atom, rid, src) in cached_atoms:
         s = a_rs.get(rid)
         if s is None:
@@ -422,15 +381,15 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
           s = sc.atom_score(atom, tuple(
               a_assign[f] if fa else b_assign[f] for fa, f in src))
         extra_atom_scores[rid] = s
-      bound = _bound_fast(m.rule, a_assign, b_assign, a_rs, b_rs,
+      bound = _bound_fast(rule, a_assign, b_assign, a_rs, b_rs,
                           extra_atom_scores)
       if bound == 0.0 and touches:
         return None
 
   field_scores = {**a.field_scores, **b.field_scores}
-  for (m, s) in decidable:
+  for (rule, s) in decidable:
     if s != 1.0:
-      for f in m.rule.fields:
+      for f in rule.fields:
         field_scores[f] *= s
 
   assign = {**a_assign, **b_assign}
@@ -442,8 +401,8 @@ def _merge_pair_planned(a: SE, b: SE, plan: Sequence[tuple], mass: int,
   for rid, s in extra_atom_scores.items():
     if rid not in rule_scores:
       rule_scores[rid] = s
-  for (m, s) in decidable:
-    rule_scores[m.rule.rid] = s
+  for (rule, s) in decidable:
+    rule_scores[rule.rid] = s
 
   score = sum(field_scores.values()) / mass
   return SE(assign, field_scores, rule_scores, mass, score)
@@ -489,7 +448,7 @@ def _bound_fast(rule: Rule, a_assign, b_assign, a_rs, b_rs,
   return s
 
 
-def _bind_combine_best(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
+def _bind_combine_best(b1: Bound, b2: Bound, rules: Sequence[Rule],
                        all_or_nothing: bool, sc: _ScoreCache) -> Bound:
   """Exact best-only combine via branch-and-bound over the sorted child
   lists.  The merged score is bounded by
@@ -529,7 +488,7 @@ def _bind_combine_best(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
       pkey = (akeys, bkeys_of[j])
       plan = plans.get(pkey)
       if plan is None:
-        plan = _merge_plan(meta, akeys, bkeys_of[j])
+        plan = _merge_plan(rules, akeys, bkeys_of[j])
         plans[pkey] = plan
       m = _merge_pair_planned(a, b, plan, mass, sc)
       if m is None:
@@ -542,7 +501,7 @@ def _bind_combine_best(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
   return Bound(legal, mass, [best] if best is not None else [])
 
 
-def _bind_combine(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
+def _bind_combine(b1: Bound, b2: Bound, rules: Sequence[Rule],
                   all_or_nothing: bool, sc: _ScoreCache) -> Bound:
   legal = b1.legal_fields | b2.legal_fields
   mass = b1.mass + b2.mass
@@ -570,7 +529,7 @@ def _bind_combine(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
       pkey = (akeys, bkeys_of[j])
       plan = plans.get(pkey)
       if plan is None:
-        plan = _merge_plan(meta, akeys, bkeys_of[j])
+        plan = _merge_plan(rules, akeys, bkeys_of[j])
         plans[pkey] = plan
       m = _merge_pair_planned(a, b, plan, mass, sc)
       if m is None:
@@ -589,13 +548,7 @@ def _bind_combine(b1: Bound, b2: Bound, meta: Sequence[_RuleMeta],
 
 def _flatten_rules(rules: Sequence[Rule]) -> List[Atom]:
   """Connectives → their atoms (bp/tree.py:340-341)."""
-  out: List[Atom] = []
-  for r in rules:
-    if isinstance(r, Connective):
-      out.extend(r.atoms)
-    else:
-      out.append(r)
-  return out
+  return [a for r in rules for a in r.atoms]
 
 
 def _components(atoms: Sequence[Atom]) -> List[FrozenSet[Field]]:
@@ -672,16 +625,13 @@ def bind_pattern(node: PatternNode, doc: DocPool, memo: Dict) -> Bound:
   graphs.sort(key=lambda g: (estimated_valid(*g), tuple(sorted(g[0]))))
 
   # The ordered tree depends on the pattern and the per-field candidate
-  # counts only; documents with identical counts share it (worker-global
-  # cache — the tree objects are immutable).
-  cache_key = (id(node), tuple(sorted(counts.items())))
-  entry = _ORDERED_TREE_CACHE.get(cache_key)
-  # The entry pins `node` so its id() cannot be recycled by a later
-  # unpickle; the identity check guards against a stale entry whose node
-  # address was freed before this cache was last cleared.
-  if entry is not None and entry[0] is node:
-    child = bind_node(entry[1], doc, memo)
-    return _pattern_public(node, child)
+  # counts only; documents with identical counts share it (a per-process
+  # cache derived on the pattern node — the tree objects are immutable).
+  ordered_trees = derived(node, '_ordered_trees', dict)
+  counts_key = ('counts', tuple(sorted(counts.items())))
+  root = ordered_trees.get(counts_key)
+  if root is not None:
+    return _pattern_public(node, bind_node(root, doc, memo))
 
   def plan_tree(comp: FrozenSet[Field],
                 edges: Dict[Tuple[Field, Field], List[float]]) \
@@ -744,12 +694,10 @@ def bind_pattern(node: PatternNode, doc: DocPool, memo: Dict) -> Bound:
   # Second-level cache: counts differ across documents far more often
   # than the pairing they induce does, so the realized + rule-pushed
   # tree is keyed by the merge-step signature.
-  sig_key = (id(node), tuple((tuple(sorted(comp)), steps)
-                             for comp, steps in plans))
-  entry = _ORDERED_TREE_CACHE.get(sig_key)
-  if entry is not None and entry[0] is node:
-    root = entry[1]
-  else:
+  steps_key = ('steps', tuple((tuple(sorted(comp)), steps)
+                              for comp, steps in plans))
+  root = ordered_trees.get(steps_key)
+  if root is None:
     def realize(comp: FrozenSet[Field],
                 steps: Tuple[Tuple[Field, Field], ...]) -> Node:
       nodes: Dict[Field, Node] = {
@@ -762,16 +710,15 @@ def bind_pattern(node: PatternNode, doc: DocPool, memo: Dict) -> Bound:
     trees = [realize(comp, steps) for comp, steps in plans]
     root = reduce(lambda a, b: combine(a, b, all_or_nothing=True), trees)
     root = optimize_rule_distribution(root, tuple(flat))
-    if len(_ORDERED_TREE_CACHE) > 4096:
-      _ORDERED_TREE_CACHE.clear()
-    _ORDERED_TREE_CACHE[sig_key] = (node, root)
-  # The sig_key-hit path inserts here too, so the cap must also guard
+    if len(ordered_trees) > 4096:
+      ordered_trees.clear()
+    ordered_trees[steps_key] = root
+  # The steps_key-hit path inserts here too, so the cap must also guard
   # this insert — many distinct count profiles can map to few pairings.
-  if len(_ORDERED_TREE_CACHE) > 4096:
-    _ORDERED_TREE_CACHE.clear()
-  _ORDERED_TREE_CACHE[cache_key] = (node, root)
-  child = bind_node(root, doc, memo)
-  return _pattern_public(node, child)
+  if len(ordered_trees) > 4096:
+    ordered_trees.clear()
+  ordered_trees[counts_key] = root
+  return _pattern_public(node, bind_node(root, doc, memo))
 
 
 def _pattern_public(node: PatternNode, child: Bound) -> Bound:

@@ -11,29 +11,22 @@ from __future__ import annotations
 import dataclasses
 import itertools
 from dataclasses import dataclass, field as dc_field
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Dict, FrozenSet, Iterable, Optional, Tuple, Union
 
-from .rules import (
-    Atom, Conjunction, Connective, Disjunction, Field, Rule, are_disjoint,
-    get_atoms,
-)
+from .rules import Atom, Field, Rule, Spec, are_disjoint
 
 
 @dataclass(frozen=True)
-class Node:
+class Node(Spec):
   rules: Tuple[Rule, ...] = tuple()
   name: Optional[str] = None
 
-  @property
+  @cached_property
   def legal_fields(self) -> FrozenSet[Field]:
-    """Cached per instance — recomputed recursively otherwise, and the
-    per-doc planner calls this in hot loops."""
-    got = self.__dict__.get('_legal_fields')
-    if got is None:
-      got = self._legal_fields_impl()
-      object.__setattr__(self, '_legal_fields', got)
-    return got
+    """Cached — recomputed recursively otherwise, and the per-doc planner
+    calls this in hot loops."""
+    return self._legal_fields_impl()
 
   def _legal_fields_impl(self) -> FrozenSet[Field]:
     raise NotImplementedError
@@ -239,7 +232,7 @@ def optimize_rule_distribution(node: Node,
 
   def remake_child(child: Node) -> Node:
     def has_decidable_atom(rule: Rule) -> bool:
-      return any(child.is_decidable(a) for a in get_atoms(rule))
+      return any(child.is_decidable(a) for a in rule.atoms)
     child_rules = tuple(r for r in rules if has_decidable_atom(r))
     return optimize_rule_distribution(child, child_rules)
 

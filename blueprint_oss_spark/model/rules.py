@@ -28,7 +28,10 @@ from __future__ import annotations
 import dataclasses
 import itertools
 from dataclasses import dataclass, field as dc_field
-from typing import Any, Dict, FrozenSet, Iterable, Optional, Tuple, Union
+from functools import cached_property
+from typing import (
+    Any, Callable, Dict, FrozenSet, Iterable, Optional, Tuple, TypeVar, Union,
+)
 
 Field = str
 
@@ -57,6 +60,57 @@ _LENIENCY_BY_KIND = {
 }
 
 
+_rule_counter = itertools.count(1)
+
+
+def _next_rule_id() -> int:
+  return next(_rule_counter)
+
+
+class Spec:
+  """Base of the frozen spec dataclasses: predicates, rules and nodes.
+
+  A spec caches values derived from its fields in its instance dict:
+  the model's as `functools.cached_property`, the engine's through
+  `derived`.  Every such value is per-process and never pickled: cached
+  hashes depend on PYTHONHASHSEED, and so does frozenset iteration
+  order (which feeds e.g. `Connective.fields`), so an unpickled value
+  would disagree with the same value built in the receiving process —
+  breaking the hash/eq contract for value-keyed containers.  Pickles
+  therefore carry the dataclass fields only, and unpickled specs
+  rebuild their derived values lazily.
+  """
+
+  def __getstate__(self) -> Dict[str, Any]:
+    return {f.name: self.__dict__[f.name]
+            for f in dataclasses.fields(self)}
+
+  def __setstate__(self, state: Dict[str, Any]) -> None:
+    if 'rid' in state:
+      # Rule ids must be unique within a PROCESS, not within a pickle:
+      # rules created after unpickling (e.g. AreDisjoint atoms injected
+      # during per-document binding) draw from this process's counter,
+      # which restarts at 1 in a fresh executor — colliding rids
+      # cross-wire the rid-keyed rule-score caches and mis-score
+      # extractions.  Intra-pickle sharing is preserved because pickle
+      # memoizes shared objects.
+      state = {**state, 'rid': _next_rule_id()}
+    self.__dict__.update(state)
+
+
+T = TypeVar('T')
+
+
+def derived(spec: Spec, key: str, build: Callable[[], T]) -> T:
+  """The engine-side derived value `key` of `spec`: built by `build()`
+  on first use in this process, then kept on the spec (and, like every
+  derived value, left out of its pickles)."""
+  got = spec.__dict__.get(key)
+  if got is None:
+    got = spec.__dict__[key] = build()
+  return got
+
+
 def _freeze(v: Any) -> Any:
   """Make a parameter value hashable (dicts → sorted item tuples)."""
   if isinstance(v, dict):
@@ -69,7 +123,7 @@ def _freeze(v: Any) -> Any:
 
 
 @dataclass(frozen=True)
-class Predicate:
+class Predicate(Spec):
   """A scoring function spec over `degree` entities → [0, 1].
 
   kind: dispatch key for the scoring kernel.
@@ -81,18 +135,14 @@ class Predicate:
   params: Tuple[Tuple[str, Any], ...] = tuple()
   name: str = ''
 
-  def p(self, key: str, default: Any = None) -> Any:
-    # params-dict cached on the instance: p() runs in the solver's
-    # hottest loops (hundreds of thousands of calls per document batch)
-    d = self.__dict__.get('_pd')
-    if d is None:
-      d = dict(self.params)
-      object.__setattr__(self, '_pd', d)
-    return d.get(key, default)
-
-  @property
-  def pdict(self) -> Dict[str, Any]:
+  @cached_property
+  def _pd(self) -> Dict[str, Any]:
+    # p() runs in the solver's hottest loops (hundreds of thousands of
+    # calls per document batch)
     return dict(self.params)
+
+  def p(self, key: str, default: Any = None) -> Any:
+    return self._pd.get(key, default)
 
   def leniency(self) -> float:
     """Reference parity: bp/rule.py:140-147,176-190 and per-kind overrides."""
@@ -111,25 +161,14 @@ class Predicate:
           f'predicate {self.kind}')
     return Atom(fields=tuple(fields), predicate=self)
 
-  def __hash__(self) -> int:
-    # value hash, computed once (params tuples can be large — e.g.
-    # text_equals vocabularies — and predicates are hashed in hot loops)
-    h = self.__dict__.get('_hash')
-    if h is None:
-      h = hash((self.kind, self.degree, self.params))
-      object.__setattr__(self, '_hash', h)
-    return h
+  @cached_property
+  def _hash(self) -> int:
+    # params tuples can be large (e.g. text_equals vocabularies), and
+    # predicates are hashed in hot loops
+    return hash((self.kind, self.degree, self.params))
 
-  def __getstate__(self) -> Dict[str, Any]:
-    # Per-process caches must not ship in pickles: _hash depends on
-    # PYTHONHASHSEED, so an unpickled value would disagree with hash()
-    # of an equal predicate built in the receiving process, breaking the
-    # hash/eq contract for value-keyed containers; _pd/_te rebuild
-    # lazily.
-    state = dict(self.__dict__)
-    for k in ('_hash', '_pd', '_te', '_tm'):
-      state.pop(k, None)
-    return state
+  def __hash__(self) -> int:
+    return self._hash
 
   def __str__(self) -> str:
     return self.name or self.kind
@@ -147,119 +186,60 @@ def _pred(kind: str, degree: Union[int, str], name: str = '',
 # Rules: Atom / Conjunction / Disjunction.
 # ---------------------------------------------------------------------------
 
-_rule_counter = itertools.count(1)
-
-
-def _next_rule_id() -> int:
-  return next(_rule_counter)
-
-
 @dataclass(frozen=True)
-class Atom:
+class Atom(Spec):
   """A predicate applied to fields (reference: bp/rule.py:202-267)."""
   fields: Tuple[Field, ...]
   predicate: Predicate
   rid: int = dc_field(default_factory=_next_rule_id)
 
-  def __setstate__(self, state) -> None:
-    # rids must be unique within a PROCESS, not within a pickle: rules
-    # created after unpickling (e.g. AreDisjoint atoms injected during
-    # per-document binding) draw from this process's counter, which
-    # restarts at 1 in a fresh executor — colliding rids cross-wire the
-    # rid-keyed rule-score caches and mis-score extractions.  Re-draw the
-    # rid at unpickle time; intra-pickle sharing is preserved because
-    # pickle memoizes shared objects.
-    if isinstance(state, tuple):  # (dict_state, slots_state)
-      state = {**(state[0] or {}), **(state[1] or {})}
-    for k, v in state.items():
-      object.__setattr__(self, k, v)
-    object.__setattr__(self, 'rid', _next_rule_id())
+  @cached_property
+  def _ah(self) -> int:
+    # atoms key the solver's score caches and are hashed millions of
+    # times per document batch
+    return hash((self.fields, self.predicate))
 
   def __hash__(self) -> int:
-    # value hash, computed once — atoms key the solver's score caches
-    # and are hashed millions of times per document batch
-    h = self.__dict__.get('_ah')
-    if h is None:
-      h = hash((self.fields, self.predicate))
-      object.__setattr__(self, '_ah', h)
-    return h
-
-  def __getstate__(self) -> Dict[str, Any]:
-    # _ah depends on PYTHONHASHSEED and _fset's iteration order does
-    # too — strip per-process caches so unpickled atoms rebuild them
-    # (same contract as Predicate.__getstate__)
-    state = dict(self.__dict__)
-    for k in ('_ah', '_fset'):
-      state.pop(k, None)
-    return state
+    return self._ah
 
   def __eq__(self, other: Any) -> bool:
     if not isinstance(other, Atom):
       return False
     return (self.fields, self.predicate) == (other.fields, other.predicate)
 
-  @property
+  @cached_property
   def fieldset(self) -> FrozenSet[Field]:
-    """frozenset(self.fields), cached — decidability checks build this
-    in per-document hot loops."""
-    fs = self.__dict__.get('_fset')
-    if fs is None:
-      fs = frozenset(self.fields)
-      object.__setattr__(self, '_fset', fs)
-    return fs
+    """frozenset(self.fields) — decidability checks build this in
+    per-document hot loops."""
+    return frozenset(self.fields)
+
+  @property
+  def atoms(self) -> Tuple['Atom', ...]:
+    return (self,)
 
   def __str__(self) -> str:
     return '[{}] {}'.format(', '.join(self.fields), self.predicate)
 
 
 @dataclass(frozen=True)
-class Connective:
+class Connective(Spec):
   rules: Tuple['Rule', ...]
   name: Optional[str] = None
   rid: int = dc_field(default_factory=_next_rule_id)
 
-  def __setstate__(self, state) -> None:
-    # See Atom.__setstate__ — rids are process-unique, not pickle-unique.
-    if isinstance(state, tuple):  # (dict_state, slots_state)
-      state = {**(state[0] or {}), **(state[1] or {})}
-    for k, v in state.items():
-      object.__setattr__(self, k, v)
-    object.__setattr__(self, 'rid', _next_rule_id())
-
-  @property
+  @cached_property
   def fieldset(self) -> FrozenSet[Field]:
-    """Union of sub-rule fields, cached (hot in decidability checks)."""
-    fs = self.__dict__.get('_fset')
-    if fs is None:
-      fs = frozenset(
-          itertools.chain.from_iterable(r.fields for r in self.rules))
-      object.__setattr__(self, '_fset', fs)
-    return fs
-
-  def __getstate__(self) -> Dict[str, Any]:
-    # _fset's iteration order is PYTHONHASHSEED-dependent and feeds the
-    # `fields` tuple ordering — rebuild per process
-    state = dict(self.__dict__)
-    state.pop('_fset', None)
-    return state
+    """Union of sub-rule fields (hot in decidability checks)."""
+    return frozenset(
+        itertools.chain.from_iterable(r.fields for r in self.rules))
 
   @property
   def fields(self) -> Tuple[Field, ...]:
     return tuple(self.fieldset)
 
-  @property
+  @cached_property
   def atoms(self) -> Tuple[Atom, ...]:
-    got = self.__dict__.get('_atoms')
-    if got is None:
-      out = []
-      for r in self.rules:
-        if isinstance(r, Atom):
-          out.append(r)
-        else:
-          out.extend(r.atoms)
-      got = tuple(out)
-      object.__setattr__(self, '_atoms', got)
-    return got
+    return tuple(itertools.chain.from_iterable(r.atoms for r in self.rules))
 
 
 @dataclass(frozen=True)
@@ -275,12 +255,6 @@ class Disjunction(Connective):
 
 
 Rule = Union[Atom, Conjunction, Disjunction]
-
-
-def get_atoms(rule: Rule) -> Tuple[Atom, ...]:
-  if isinstance(rule, Atom):
-    return (rule,)
-  return rule.atoms
 
 
 def all_rules_hold(*rules: Rule) -> Rule:

@@ -1858,8 +1858,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
                n_merges: int = 24, merges: DataFrame = None,
                docs: DataFrame = None,
                return_tokens: bool = False,
-               special_tokens: tuple = (),
-               prereduce_words: bool = False) -> DataFrame:
+               special_tokens: tuple = ()) -> DataFrame:
   """Distributed BPE tokenization: apply a learned merge table (from
   `bpe_train`, or trained inline) to every document.
 
@@ -1887,10 +1886,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
   resident doc count — measured ~40% faster than first reducing to
   (doc_id, word) counts, whose shuffle carries every distinct
   doc x word pair across the wire for nothing when the vocabulary is
-  broadcastable.  `prereduce_words=True` restores the pre-reduction
-  for the regime where the vocabulary is too large to broadcast (the
-  word-keyed join then shuffles the corpus side, and pre-reducing
-  cuts that shuffle by the in-doc repetition factor)."""
+  broadcastable."""
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
   if merges is None:
@@ -1923,14 +1919,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
                           F.size('tokens').alias('n_tokens'))
 
   vt = vocab.select('word', F.size('syms').alias('word_tokens'))
-  if prereduce_words:
-    wc = (doc_words.groupBy('doc_id', 'word')
-          .agg(F.count(F.lit(1)).alias('cnt')))
-    return (wc.join(vt, 'word')
-            .groupBy('doc_id')
-            .agg(F.sum('cnt').alias('n_words'),
-                 F.sum(F.col('cnt') * F.col('word_tokens'))
-                 .alias('n_tokens')))
   return (doc_words.join(vt, 'word')
           .groupBy('doc_id')
           .agg(F.count(F.lit(1)).alias('n_words'),

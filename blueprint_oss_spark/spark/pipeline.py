@@ -115,8 +115,9 @@ def compile_blueprint(root: Node) -> bytes:
 
 # payload digest → unpickled tree, per worker process.  mapInPandas
 # invokes the batch fn once per PARTITION; unpickling there yields a new
-# tree object each time, which leaves every id()-keyed solver cache
-# (ordered-tree realizations per pattern) cold for each partition.  One
+# tree each time, and pickles carry no derived values (model.rules.Spec),
+# so its per-spec caches (ordered-tree realizations per pattern node,
+# text memos per predicate) would start cold for each partition.  One
 # shared tree per worker keeps those caches warm across partitions.
 _TREE_BY_DIGEST: dict = {}
 

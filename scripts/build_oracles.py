@@ -51,9 +51,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, '/root/repo')
-sys.path.insert(0, '/root/repo/scripts')
+_SCRIPTS = Path(__file__).resolve().parent
+sys.path.insert(0, str(_SCRIPTS.parent))
+sys.path.insert(0, str(_SCRIPTS))
 
 import numpy as np
 import pandas as pd

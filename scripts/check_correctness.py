@@ -13,8 +13,9 @@ import argparse
 import json
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = ('region', 'nation', 'customer', 'supplier', 'part', 'orders',
           'lineitem', 'events', 'documents', 'embeddings')

@@ -2,8 +2,9 @@
 """Regenerate the raw .explain('formatted') dumps behind PLANS.md."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import SparkSession
 

@@ -2,6 +2,10 @@ import pathlib
 
 import pytest
 
+#: root of the checkout these tests run from: subprocesses and script
+#: imports use it, so a copy of the repository tests its own package
+REPO_ROOT = pathlib.Path(__file__).resolve().parent.parent
+
 
 @pytest.fixture(scope='session')
 def spark():

@@ -13,7 +13,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, '/root/repo/scripts')
+from tests.conftest import REPO_ROOT
+
+sys.path.insert(0, str(REPO_ROOT / 'scripts'))
 
 from blueprint_oss_spark.ops import vectors as V  # noqa: E402
 

@@ -5,6 +5,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 GOOGLE_OCR = '/root/reference/examples/paystubs/ocr/sample_paystub_1.jpg.json'
 
 
@@ -13,7 +15,7 @@ def test_gen_bp_doc_roundtrips_through_reference(tmp_path):
   r = subprocess.run(
       [sys.executable, '-m', 'blueprint_oss_spark', 'gen_bp_doc',
        '-g', GOOGLE_OCR, '-o', str(out)],
-      capture_output=True, text=True, cwd='/root/repo', timeout=300)
+      capture_output=True, text=True, cwd=REPO_ROOT, timeout=300)
   assert r.returncode == 0, r.stderr
   info = json.loads(r.stdout.strip().splitlines()[-1])
   assert info['docs'] == 1
@@ -38,7 +40,7 @@ def test_gen_bp_doc_glob(tmp_path):
       [sys.executable, '-m', 'blueprint_oss_spark', 'gen_bp_doc',
        '--input', '/root/reference/examples/paystubs/ocr/*.json',
        '-o', str(outdir)],
-      capture_output=True, text=True, cwd='/root/repo', timeout=300)
+      capture_output=True, text=True, cwd=REPO_ROOT, timeout=300)
   assert r.returncode == 0, r.stderr
   info = json.loads(r.stdout.strip().splitlines()[-1])
   assert info['docs'] == 2

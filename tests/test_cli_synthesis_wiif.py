@@ -7,6 +7,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 
 def _fixture_files(tmp_path):
   from blueprint_oss_spark.engine.doc_json import (
@@ -45,7 +47,7 @@ def _fixture_files(tmp_path):
 def _run(args):
   r = subprocess.run(
       [sys.executable, '-m', 'blueprint_oss_spark', *args],
-      capture_output=True, text=True, cwd='/root/repo', timeout=300)
+      capture_output=True, text=True, cwd=REPO_ROOT, timeout=300)
   assert r.returncode == 0, r.stderr
   return json.loads(r.stdout.strip().splitlines()[-1])
 

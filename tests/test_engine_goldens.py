@@ -14,9 +14,12 @@ the engine still produces those reference-equal outputs bit for bit.
     arithmetic of the text kernels and the pair merge;
   * the paystubs top-20 extraction lists (the materializing,
     non-pruned solve path);
-  * the vectorized leaf path against the scalar kernel.
+  * the vectorized leaf path against the scalar kernel;
+  * the pickle contract: solving leaves a blueprint's compiled payload
+    unchanged.
 """
 
+import dataclasses
 import hashlib
 import pickle
 import random
@@ -39,6 +42,7 @@ from blueprint_oss_spark.model.rules import (
     any_holds, is_date, is_dollar_amount, is_entire_phrase,
     is_in_doc_region, is_one_line, non_fatal, penalize, text_equals,
     text_has_substring, text_matches_pattern, text_properties_are)
+from blueprint_oss_spark.spark.pipeline import compile_blueprint
 
 # sha256 prefix per document set, recorded at b7f8d90
 _RUN_DOC_DIGESTS = {
@@ -177,3 +181,41 @@ def test_pick_best_rules_must_be_pushed_down():
   with pytest.raises(ValueError, match='PickBest'):
     best_extraction(unpushed, pool, pre_optimized=True)
   assert best_extraction(unpushed, pool)[2] > 0
+
+
+def _specs(obj, seen):
+  """Every spec reachable from `obj` through dataclass fields, tuples,
+  lists and dicts (predicate params nest predicates)."""
+  if id(obj) in seen:
+    return
+  seen.add(id(obj))
+  if dataclasses.is_dataclass(obj):
+    yield obj
+    children = [getattr(obj, f.name) for f in dataclasses.fields(obj)]
+  elif isinstance(obj, (tuple, list)):
+    children = obj
+  elif isinstance(obj, dict):
+    children = obj.values()
+  else:
+    return
+  for child in children:
+    yield from _specs(child, seen)
+
+
+def test_solving_leaves_the_compiled_blueprint_unchanged():
+  """Values derived from a spec (cached hashes and field sets, text
+  memos, ordered trees) are per-process: solving documents must not
+  change what a blueprint pickles to, and every spec of an unpickled
+  tree holds its dataclass fields only."""
+  for root, docs in ((checks.root, check_corpus(12)),
+                     (paystubs.root, paystub_corpus(12))):
+    before = compile_blueprint(root)
+    for doc_id, spans in docs:
+      run_doc(doc_id, spans, root)
+    after = compile_blueprint(root)
+    assert after == before, (len(before), len(after))
+    specs = list(_specs(pickle.loads(after), set()))
+    assert len(specs) > 100
+    for spec in specs:
+      fields = {f.name for f in dataclasses.fields(spec)}
+      assert vars(spec).keys() == fields, (spec, vars(spec).keys() - fields)

@@ -8,6 +8,7 @@ import pyarrow.parquet as pq
 
 from blueprint_oss_spark.ops.html_extract import (
     extract_main_content, html_main_content, wrap_in_boilerplate)
+from tests.conftest import REPO_ROOT
 
 
 def test_wrapped_corpus_recovers_exactly():
@@ -157,8 +158,8 @@ def test_cli_run_main_content(spark, tmp_path):
       [sys.executable, '-m', 'blueprint_oss_spark', 'run_main_content',
        '--input', inp, '--output', out, '--master', 'local[2]',
        '--groups', '2'],
-      capture_output=True, text=True, cwd='/root/repo', timeout=300,
-      env={**__import__('os').environ, 'PYTHONPATH': '/root/repo'})
+      capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
+      env={**__import__('os').environ, 'PYTHONPATH': str(REPO_ROOT)})
   assert r.returncode == 0, r.stderr
   info = json.loads(r.stdout.strip().splitlines()[-1])
   assert info['groups_processed'] == 2

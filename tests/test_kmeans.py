@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from blueprint_oss_spark.ops import vectors as V
+from tests.conftest import REPO_ROOT
 
 SF1 = '/root/testdata/sf0.001'
 D = 64
@@ -41,7 +42,7 @@ def _python_kmeans(sf_dir, n_cells, iters):
   """From-scratch sequential Lloyd with the identical arithmetic
   contract: xxhash64-spread init, left-to-right folds, micro-unit
   truncation, empty cells keep their centroid."""
-  sys.path.insert(0, '/root/repo/scripts')
+  sys.path.insert(0, str(REPO_ROOT / 'scripts'))
   from spark_xxhash64 import spark_xxhash64
   tb = pq.read_table(f'{sf_dir}/embeddings.parquet').to_pandas()
   rows = [(int(r.vec_id), [float(x) for x in r.embedding],

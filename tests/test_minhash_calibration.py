@@ -11,7 +11,9 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, '/root/repo/scripts')
+from tests.conftest import REPO_ROOT
+
+sys.path.insert(0, str(REPO_ROOT / 'scripts'))
 
 from blueprint_oss_spark.ops import textops as T
 

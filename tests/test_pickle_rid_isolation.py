@@ -17,11 +17,13 @@ import subprocess
 import sys
 import textwrap
 
+from tests.conftest import REPO_ROOT
+
 
 def _run(code: str) -> str:
   out = subprocess.run(
       [sys.executable, '-c', textwrap.dedent(code)],
-      capture_output=True, text=True, timeout=300, cwd='/root/repo')
+      capture_output=True, text=True, timeout=300, cwd=REPO_ROOT)
   assert out.returncode == 0, out.stderr
   return out.stdout.strip()
 

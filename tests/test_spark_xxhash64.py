@@ -7,9 +7,11 @@ import random
 import string
 import sys
 
-sys.path.insert(0, '/root/repo/scripts')
-
 from pyspark.sql import functions as F
+
+from tests.conftest import REPO_ROOT
+
+sys.path.insert(0, str(REPO_ROOT / 'scripts'))
 
 from spark_xxhash64 import spark_xxhash64  # noqa: E402
 
