@@ -77,7 +77,12 @@ class LeafNode(Node):
 @dataclass(frozen=True)
 class PatternNode(Node):
   """A node whose combine-tree is rebuilt per document
-  (reference: bp/tree.py:276-423)."""
+  (reference: bp/tree.py:276-423).
+
+  Its rules are flattened to atoms before the tree is built
+  (engine/solver.py `_flatten_rules`): a Conjunction contributes its
+  atoms, and so does a Disjunction, which inside a pattern therefore
+  acts as the conjunction of its atoms."""
   fields: Tuple[Tuple[Field, str], ...] = tuple()  # (field, entity_type)
 
   @property

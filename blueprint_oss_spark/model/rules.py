@@ -822,6 +822,14 @@ def right_aligned_column(*fields: Field, ordered: bool = True) -> Rule:
 
 
 def column(*fields: Field, ordered: bool = True) -> Rule:
+  """Fields stacked in a column, left- or right-aligned, top-down when
+  `ordered`.
+
+  Inside a pattern (an `extract`), the solver pushes a Disjunction as
+  the conjunction of its atoms (engine/solver.py `_flatten_rules`), so
+  there this rule asks for left AND right alignment: only cells of
+  equal width satisfy it.  Use `left_aligned_column` or
+  `right_aligned_column` for ragged columns."""
   if len(fields) < 2:
     raise ValueError('column must take at least 2 fields')
   alignment = Disjunction(
@@ -832,7 +840,12 @@ def column(*fields: Field, ordered: bool = True) -> Rule:
 
 
 def table(rows_: Iterable[Iterable[Optional[Field]]]) -> Rule:
-  """reference: bp/rules/tabular.py:245-288."""
+  """A `row` per grid row and a `column` per grid column (None cells
+  skipped).  Inside a pattern each column's left-or-right Disjunction
+  is pushed as the conjunction of its atoms (see `column`), so every
+  column must be left AND right aligned.
+
+  reference: bp/rules/tabular.py:245-288."""
   grid = tuple(tuple(r) for r in rows_)
   lens = {len(r) for r in grid}
   if len(lens) > 1:

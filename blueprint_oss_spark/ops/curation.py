@@ -21,6 +21,13 @@ from blueprint_oss_spark.ops.common import (
     spread_small_scan as _spread, word_ngrams, words,
 )
 
+#: The in-table eval split the decontamination operators and the
+#: ablation share: docs with doc_id % EVAL_MOD == 0 are the eval set.
+EVAL_MOD = 4
+#: Word n-gram size of the decontamination operators: the synthetic
+#: docs average ~54 tokens, so the standard 13-gram would rarely fire.
+DECON_N = 8
+
 # Patterns valid and identical in Java regex (Spark) and RE2 (DuckDB):
 # no backreferences, no lookaround, \b + \d + classes only.
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -95,7 +102,7 @@ def _ngrams(col, n: int):
 
 
 def decontaminate(spark: SparkSession, sf_dir: str, *,
-                  n: int = 8, eval_mod: int = 4,
+                  n: int = DECON_N,
                   eval_texts: DataFrame | None = None,
                   docs: DataFrame | None = None) -> DataFrame:
   """Benchmark decontamination: flag training documents that share any
@@ -104,7 +111,7 @@ def decontaminate(spark: SparkSession, sf_dir: str, *,
 
   The eval set is either an explicit DataFrame with a `text` column
   (the production shape: benchmark suites are a fixed table) or, by
-  default, the docs with doc_id % eval_mod == 0 (self-contained demo /
+  default, the docs with doc_id % EVAL_MOD == 0 (self-contained demo /
   oracle shape; those docs are then excluded from the training side).
 
   This is the standard LLM-corpus decontamination shape (13-gram
@@ -128,7 +135,7 @@ def decontaminate(spark: SparkSession, sf_dir: str, *,
                   .distinct())
     train = d.select('doc_id', F.explode('grams').alias('gram'))
   else:
-    is_eval = F.col('doc_id') % eval_mod == 0
+    is_eval = F.col('doc_id') % EVAL_MOD == 0
     eval_grams = (d.filter(is_eval)
                   .select(F.explode('grams').alias('gram'))
                   .distinct())
@@ -152,7 +159,7 @@ def _bloom_doc_grams(lowered: str | None, n: int) -> set[str]:
 
 
 def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
-                        n: int = 8, eval_mod: int = 4,
+                        eval_mod: int = EVAL_MOD,
                         m_bits: int = 1 << 20, k: int = 4,
                         eval_texts: DataFrame | None = None,
                         sort: bool = True,
@@ -230,7 +237,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
     for pdf in batches:
       ws: dict = {}
       for text in pdf['text']:
-        for g in _bloom_doc_grams(text, n):
+        for g in _bloom_doc_grams(text, DECON_N):
           d = _md5(b'bloom:' + g.encode('utf-8')).digest()
           h1 = int.from_bytes(d[:4], 'big')
           h2 = int.from_bytes(d[4:8], 'big') * 2 + 1
@@ -274,7 +281,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
       ids, counts = [], []
       for doc_id, text in zip(pdf['doc_id'], pdf['text']):
         cnt = 0
-        for g in _bloom_doc_grams(text, n):
+        for g in _bloom_doc_grams(text, DECON_N):
           d = _md5(b'bloom:' + g.encode('utf-8')).digest()
           h1 = int.from_bytes(d[:4], 'big')
           h2 = int.from_bytes(d[4:8], 'big') * 2 + 1
@@ -299,7 +306,6 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
 
 
 def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
-                        n: int = 8, eval_mod: int = 4,
                         min_run_tokens: int = None,
                         sort: bool = True,
                         eval_texts: DataFrame | None = None,
@@ -338,21 +344,24 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
     ev_side = eval_texts.select(F.lit('').alias('doc_id'), 'text')
     train = d
   else:
-    is_eval = F.col('doc_id') % eval_mod == 0
+    is_eval = F.col('doc_id') % EVAL_MOD == 0
     ev_side = d.filter(is_eval)
     train = d.filter(~is_eval)
 
-  _, ev_occ = gram_occurrences(ev_side, n)
+  _, ev_occ = gram_occurrences(ev_side, DECON_N)
   ev_grams = ev_occ.select('gram').distinct()
 
-  base, occ = gram_occurrences(train, n)
-  return strip_covered_tokens(base, occ, F.broadcast(ev_grams), n,
+  base, occ = gram_occurrences(train, DECON_N)
+  return strip_covered_tokens(base, occ, F.broadcast(ev_grams), DECON_N,
                               min_run_tokens=min_run_tokens,
                               sort=sort)
 
 
+#: Hashed bag-of-words buckets of quality_classifier's model.
+_QC_BUCKETS = 4096
+
+
 def quality_classifier(spark: SparkSession, sf_dir: str, *,
-                       n_buckets: int = 4096,
                        docs: DataFrame | None = None,
                        labels: DataFrame | None = None) -> DataFrame:
   """fastText-style hashed bag-of-words quality classifier, trained
@@ -361,7 +370,8 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
   heuristics at scale.
 
   Training: per-(hashed-bucket, label) token counts — ONE map-side-
-  combinable groupBy whose output is BOUNDED by 2·n_buckets rows, so
+  combinable groupBy whose output is BOUNDED by 2·4096 rows (one per
+  hashed bucket and label), so
   the learned model is a broadcastable dimension no matter the corpus
   size.  Labels default to the Gopher `quality_filter` keep flag (weak
   supervision); pass `labels` (doc_id, label) to train on a curated
@@ -369,7 +379,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
 
   Scoring (deliberately transcendental-free, the lm_score precedent):
   token i in bucket b scores the equal-prior Naive-Bayes posterior
-    q_i = p1 / (p1 + p0),   p_c = (c(b,c) + 1) / (T_c + n_buckets)
+    q_i = p1 / (p1 + p0),   p_c = (c(b,c) + 1) / (T_c + 4096)
   with add-one smoothing; nb_posterior = round(mean_i q_i, 6) via a
   pinned-order left fold over the pos-sorted array, so a from-scratch
   DuckDB oracle reproduces every value bit-for-bit (each q_i ∈ (0,1):
@@ -380,7 +390,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
   the default weak label is computed INLINE on the same scan (the
   Gopher keep flag is a pure column expression — no label self-join);
   training is ONE map-side-combinable groupBy pass whose bounded
-  (≤ n_buckets rows) result is collected once and re-broadcast as a
+  (≤ 4096 rows) result is collected once and re-broadcast as a
   literal local relation (the IVF/PQ codebook precedent — scoring
   never re-executes the training subplan); scoring explodes tokens
   once, broadcast-joins the model, and re-aggregates per doc.  Two
@@ -394,7 +404,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
   bkt = lambda w: F.pmod(
       F.conv(F.substring(F.md5(F.concat(F.lit('qc:'), w)), 1, 8),
              16, 10).cast('long'),
-      F.lit(n_buckets))
+      F.lit(_QC_BUCKETS))
 
   tok = (d.select('doc_id', F.posexplode(words('text'))
                   .alias('pos', 'w'))
@@ -418,7 +428,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
                  .alias('z'))
              .select('z.bkt', 'z.label'))
   # ONE conditional-count aggregation = ONE training pass over the
-  # corpus.  The learned model is bounded by n_buckets rows whatever
+  # corpus.  The learned model is bounded by 4096 rows whatever
   # the corpus size, so it is collected (the IVF/PQ codebook
   # precedent) and re-broadcast as a literal local relation — scoring
   # never re-executes the training subplan, and the totals become
@@ -434,7 +444,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
       [(None, None, None)],
       'bkt long, c1 long, c0 long').where(F.col('bkt').isNotNull())
 
-  B = F.lit(n_buckets)
+  B = F.lit(_QC_BUCKETS)
   scored = (tok
             .join(F.broadcast(cnt), 'bkt', 'left')
             .withColumn('t1', F.lit(t1))
@@ -552,14 +562,12 @@ def _bucketed_greedy_prefix(spark: SparkSession, base: DataFrame,
 
 
 def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
-                     train_pct: int = 90, valid_pct: int = 5,
-                     n_shards: int = 8,
                      per_source_tokens: int = 800,
                      docs: DataFrame = None) -> DataFrame:
-  """Per-document training-run assignment: stable train/valid/test
-  split, shard id, deterministic global training order, and exact
-  greedy token-budget mixture sampling per source — the four
-  assignments every production pretraining run makes before packing.
+  """Per-document training-run assignment: stable 90/5/5 % split into
+  train/valid/test, one of 8 shard ids, deterministic global training
+  order, and exact greedy token-budget mixture sampling per source —
+  the four assignments every production pretraining run makes before packing.
 
   All four are pure functions of doc_id (md5 with distinct salts, so
   split/shard/order are independent), making the assignment stable
@@ -601,14 +609,13 @@ def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
   assigned = _bucketed_greedy_prefix(
       spark, base, lambda totals: {s: per_source_tokens for s in totals})
 
-  split = (F.when(F.pmod('split_h', F.lit(100)) < train_pct, 'train')
-           .when(F.pmod('split_h', F.lit(100)) < train_pct + valid_pct,
-                 'valid')
+  split = (F.when(F.pmod('split_h', F.lit(100)) < 90, 'train')
+           .when(F.pmod('split_h', F.lit(100)) < 95, 'valid')
            .otherwise('test'))
   return (assigned.select(
       'doc_id', 'source', 'n_tokens',
       split.alias('split'),
-      F.pmod('shard_h', F.lit(n_shards)).cast('int').alias('shard'),
+      F.pmod('shard_h', F.lit(8)).cast('int').alias('shard'),
       'order_key', 'mix_keep')
       .orderBy('doc_id'))
 
@@ -761,12 +768,11 @@ def unimax_mix(spark: SparkSession, sf_dir: str, *,
 
 
 def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
-                           m: int = 64, target_lang: str = 'en',
                            docs: DataFrame = None,
                            target_docs: DataFrame = None) -> DataFrame:
   """DSIR-style data selection (Xie et al. 2023, "Data Selection for
   Language Models via Importance Resampling", arXiv:2302.03169):
-  hashed n-gram features (word unigrams + bigrams hashed into m
+  hashed n-gram features (word unigrams + bigrams hashed into 64
   buckets), a bag-of-hashed-ngrams model fit on a target domain and on
   the raw pool, and a per-document target-affinity score used to
   select target-like documents.
@@ -781,15 +787,15 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
   valid to ~10^9 feature occurrences; a 100 TB run normalizes the
   weights to doubles — the plan shape is unchanged).
 
-  The target side defaults to lang == target_lang rows of the same
+  The target side defaults to the lang == 'en' rows of the same
   table (self-contained oracle shape); pass target_docs for the
   production shape (a fixed high-quality corpus).
 
   Scale shape: two passes, exactly like DSIR at scale (fit, then
-  score).  Pass 1 aggregates occurrence counts into m buckets — the
-  shuffle carries at most m rows per map task after partial
+  score).  Pass 1 aggregates occurrence counts into 64 buckets — the
+  shuffle carries at most 64 rows per map task after partial
   aggregation.  Pass 2 pre-aggregates (doc_id, bucket) counts
-  map-side, broadcast-joins the m-row weight table, and sums per
+  map-side, broadcast-joins the 64-row weight table, and sums per
   doc_id.  Feature hashing is the fold-style Rabin-Karp base-31 hash
   (doc_fingerprints), computed JVM-side per occurrence.  No Python,
   no driver collect; the only scalar (N_T, N_R) rides a broadcast
@@ -805,17 +811,16 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
       F.lit(0).cast('long'),
       lambda acc, ch: F.pmod(acc * 31 + F.ascii(ch),
                              F.lit(2147483647).cast('long')))
+  bucket = F.pmod(rolling, F.lit(64).cast('long')).alias('bucket')
   occ = (feats.select('doc_id', 'lang',
                       F.explode('feats').alias('feat'))
-         .select('doc_id', 'lang',
-                 F.pmod(rolling, F.lit(m).cast('long')).alias('bucket')))
+         .select('doc_id', 'lang', bucket))
 
   if target_docs is not None:
     t_occ = (target_docs.select(words('text').alias('w'))
              .select(F.explode(F.concat(F.col('w'), word_ngrams('w', 2)))
                      .alias('feat'))
-             .select(F.pmod(rolling, F.lit(m).cast('long'))
-                     .alias('bucket'))
+             .select(bucket)
              .withColumn('is_t', F.lit(1)))
     pool = occ.select('bucket', F.lit(0).alias('is_t')) \
         .unionByName(t_occ.select('bucket', 'is_t'))
@@ -829,7 +834,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
   else:
     buckets = (occ.groupBy('bucket')
                .agg(F.count(F.lit(1)).cast('long').alias('cnt_r'),
-                    F.sum((F.col('lang') == target_lang).cast('long'))
+                    F.sum((F.col('lang') == 'en').cast('long'))
                     .alias('cnt_t')))
   totals = buckets.agg(F.sum('cnt_r').alias('n_r'),
                        F.sum('cnt_t').alias('n_t'))
@@ -858,21 +863,20 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
 
 
 def c4_line_clean(spark: SparkSession, sf_dir: str, *,
-                  words_per_line: int = 10, min_kept_lines: int = 3,
                   docs: DataFrame = None) -> DataFrame:
   """C4-style line-level page cleaning (Raffel et al. 2020, "Exploring
   the Limits of Transfer Learning with a Unified Text-to-Text
   Transformer", arXiv:1910.10683 §2.2): keep only lines that end in a
   terminal punctuation mark AND have at least 3 words AND do not
   mention 'javascript'; drop the whole page if any line contains
-  'lorem ipsum' or a curly brace, or if fewer than `min_kept_lines`
-  lines survive.  Returns (doc_id, n_lines, n_kept, clean_text) for
+  'lorem ipsum' or a curly brace, or if fewer than 3 lines
+  survive.  Returns (doc_id, n_lines, n_kept, clean_text) for
   surviving pages, clean_text = kept lines joined by newline.
 
   The synthetic corpus is single-line word soup, so — same device as
   pii_scrub's planted PII and html_main_content's synthesized
   boilerplate — a deterministic line structure is synthesized first:
-  the text is chunked into `words_per_line`-word lines and each line's
+  the text is chunked into 10-word lines and each line's
   terminal punctuation / 'javascript' noise / page-level poison is
   pure integer arithmetic on (doc_id, line index), so the DuckDB
   oracle re-synthesizes byte-identical lines from the raw table and
@@ -887,10 +891,10 @@ def c4_line_clean(spark: SparkSession, sf_dir: str, *,
   quality_filter (this is the C4 counterpart of the Gopher-rule
   operators in ops/textops.py).
   """
-  w = words_per_line
+  w = 10
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
-  # one synthesized line per words_per_line-slot chunk of the RAW
+  # one synthesized line per w-slot chunk of the RAW
   # split (not `words`: the oracle re-synthesizes from raw slots);
   # suffix order: core + javascript-noise + page-poison + terminal
   # punctuation
@@ -926,7 +930,7 @@ def c4_line_clean(spark: SparkSession, sf_dir: str, *,
                    | ln.contains('{')).alias('poisoned')))
   return (staged
           .where(~F.col('poisoned')
-                 & (F.size('kept') >= min_kept_lines))
+                 & (F.size('kept') >= 3))
           .select('doc_id', 'n_lines',
                   F.size('kept').cast('long').alias('n_kept'),
                   F.array_join('kept', '\n').alias('clean_text')))
@@ -1167,7 +1171,7 @@ def synth_robots_table(spark: SparkSession) -> DataFrame:
       txt.alias('robots_txt'))
 
 
-def parse_robots(spark: SparkSession, sf_dir: str = '', *,
+def parse_robots(spark: SparkSession, *,
                  robots: DataFrame = None) -> DataFrame:
   """Parse (domain, robots_txt) into one row per directive:
   (domain, agent, directive, value, pos).
@@ -1349,7 +1353,6 @@ _ABLATION_FLAG = {
 
 
 def curation_ablation(spark: SparkSession, sf_dir: str, *,
-                      eval_mod: int = 4,
                       plant_for_verification: bool = False) -> DataFrame:
   """Per-document curation-filter verdicts — the raw material of the
   filter-ablation tables Dolma / RefinedWeb / Gopher publish (how many
@@ -1365,7 +1368,7 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
   primitives: `quality_keep_expr` (ops/textops), the `_with_injected_
   pii` planted-PII device and patterns from `pii_scrub`, md5 content
   identity from `dedup_exact`, and `decontaminate`'s 8-gram eval
-  overlap (eval split = doc_id % eval_mod == 0, as there).
+  overlap (eval split = doc_id % EVAL_MOD == 0, as there).
 
   Note production pipelines SCRUB PII rather than drop the document;
   f_pii here means "the scrubber would fire", kept as a funnel stage
@@ -1406,7 +1409,7 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
   w = Window.partitionBy(F.md5(F.col('text')))
   base = (d.select(
       'doc_id', 'text',
-      (F.col('doc_id') % eval_mod == 0).cast('int').alias('f_eval'),
+      (F.col('doc_id') % EVAL_MOD == 0).cast('int').alias('f_eval'),
       (1 - quality_keep_expr(F.col('text'))).alias('f_quality'),
       (npat(EMAIL_PATTERN) + npat(PHONE_PATTERN) + npat(IPV4_PATTERN))
       .cast('long').alias('n_pii'))
@@ -1414,7 +1417,7 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
           'f_dup',
           (F.col('doc_id') != F.min('doc_id').over(w)).cast('int'))
       .drop('text'))
-  dec = decontaminate(spark, sf_dir, eval_mod=eval_mod, docs=raw) \
+  dec = decontaminate(spark, sf_dir, docs=raw) \
       .select('doc_id', 'n_shared')
   v = (base.join(dec, 'doc_id', 'left')
        .select('doc_id', 'f_eval', 'f_quality', 'f_dup',
@@ -1432,8 +1435,6 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
 
 
 def curation_ablation_report(spark: SparkSession, sf_dir: str, *,
-                             eval_mod: int = 4,
-                             plant_for_verification: bool = False,
                              verdicts: DataFrame | None = None
                              ) -> DataFrame:
   """The published ablation TABLE over `curation_ablation`'s verdicts:
@@ -1455,9 +1456,7 @@ def curation_ablation_report(spark: SparkSession, sf_dir: str, *,
   one combinable reduce, nothing else.  Pass `verdicts=` to reuse an
   already-materialized verdict frame (the gate does)."""
   v = (verdicts if verdicts is not None
-       else curation_ablation(
-           spark, sf_dir, eval_mod=eval_mod,
-           plant_for_verification=plant_for_verification))
+       else curation_ablation(spark, sf_dir))
   names = list(ABLATION_FILTERS)
   aggs = [F.count(F.lit(1)).alias('total')]
   for name in names:

@@ -41,9 +41,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def connected_components(edges: DataFrame, src: str = 'src',
-                         dst: str = 'dst', *,
-                         max_iter: int = 30) -> DataFrame:
-  """Connected components over an undirected edge list.
+                         dst: str = 'dst') -> DataFrame:
+  """Connected components over an undirected edge list, in at most 30
+  alternating large-star/small-star rounds.
 
   Returns a DataFrame (node, component) mapping every node that appears
   in `edges` — including each component's minimum node, which maps to
@@ -58,7 +58,7 @@ def connected_components(edges: DataFrame, src: str = 'src',
        .localCheckpoint(eager=True))
   n_old = None  # lazily counted; carried across rounds (new == next old)
 
-  for _ in range(max_iter):
+  for _ in range(30):
     # -- large-star: symmetric adjacency, larger neighbors -> min ------
     # m(u) = min(N(u) ∪ {u}) via a plain min-aggregate; emit (v, m(u))
     # for every neighbor v > u by joining the mins back onto the edges.
@@ -102,8 +102,8 @@ def connected_components(edges: DataFrame, src: str = 'src',
   # self-row so the mapping covers all nodes in the edge list
   roots = e.select(F.col('dst').alias('node'),
                    F.col('dst').alias('component')).distinct()
-  # min-agg instead of dropDuplicates: deterministic even if max_iter
-  # cut the loop before the sets became disjoint
+  # min-agg instead of dropDuplicates: deterministic even if the round
+  # cap cut the loop before the sets became disjoint
   return (members.unionByName(roots)
           .groupBy('node').agg(F.min('component').alias('component')))
 
@@ -164,8 +164,7 @@ def pagerank(spark: SparkSession, sf_dir: str, *,
              iterations: int = 6,
              docs: DataFrame = None,
              edges: DataFrame = None,
-             seeds=None,
-             checkpoint_interval: int = 2) -> DataFrame:
+             seeds=None) -> DataFrame:
   """Exact-integer PageRank over the (synthesized) document link graph
   — the link-graph quality signal web curation pipelines rank crawl
   frontiers and weight domains with (the Common Crawl ranking shape;
@@ -205,8 +204,8 @@ def pagerank(spark: SparkSession, sf_dir: str, *,
   partition on the join key; edges re-shuffles each round unless the
   caller pre-buckets by src — `spark/storage.py`'s bucketed layout
   co-locates it for free) → partial-SUM groupBy dst → left join back
-  onto the node list.  `localCheckpoint` every `checkpoint_interval`
-  rounds bounds plan depth (the `connected_components` device), but
+  onto the node list.  `localCheckpoint` every 2 rounds bounds plan
+  depth (the `connected_components` device), but
   LAZILY — an eager checkpoint per round costs a driver job barrier
   per iteration, measured at ~18% serial fraction in cluster-scaling
   runs; lazy periodic checkpoints let one action materialize the
@@ -290,7 +289,7 @@ def pagerank(spark: SparkSession, sf_dir: str, *,
                      (F.col('tele')
                       + F.coalesce(F.col('flow'), F.lit(0).cast('long')))
                      .alias('num')))
-    if (it + 1) % max(checkpoint_interval, 1) == 0:
+    if (it + 1) % 2 == 0:
       ranks = ranks.localCheckpoint(eager=False)
 
   out_degs = edges.select('src', 'out_deg').groupBy('src') \
@@ -311,30 +310,28 @@ def pagerank(spark: SparkSession, sf_dir: str, *,
 
 
 def hits(spark: SparkSession, sf_dir: str, *,
-         iterations: int = 4, mass: int = 10 ** 9,
-         docs: DataFrame = None, edges: DataFrame = None,
-         checkpoint_interval: int = 2) -> DataFrame:
+         docs: DataFrame = None, edges: DataFrame = None) -> DataFrame:
   """Exact-integer HITS (Kleinberg 1999, "Authoritative Sources in a
-  Hyperlinked Environment", JACM 46(5)) — hubs & authorities over the
-  (synthesized) link graph, the query-independent topic-distillation
-  signal next to `pagerank`'s random-surfer one:
+  Hyperlinked Environment", JACM 46(5)) — hubs & authorities after 4
+  iterations over the (synthesized) link graph, the query-independent
+  topic-distillation signal next to `pagerank`'s random-surfer one:
 
       auth'(i) = Σ_{j→i} hub(j)       (good pages are pointed AT
       hub'(j)  = Σ_{j→i} auth'(i)      by good hubs, and vice versa)
 
-  with each half-step RENORMALIZED TO A FIXED INTEGER MASS:
-  v ← v·mass DIV Σv.  Kleinberg normalizes in L2; L1-to-fixed-
-  integer-mass is the documented deviation that keeps every quantity
-  a BIGINT — the per-target reduction stays an order-independent
-  integer SUM (map-side combinable, so the planted hub page's ~n/5
-  in-neighborhood collapses to partial sums per map task — the
-  pagerank argument), and floor division is deterministic on every
-  engine.  Rescaled mass is mass - r with r < |nonzero-score nodes|
+  with each half-step RENORMALIZED TO A FIXED INTEGER MASS
+  (mass = 10^9): v ← v·mass DIV Σv.  Kleinberg normalizes in L2;
+  L1-to-fixed-integer-mass is the documented deviation that keeps
+  every quantity a BIGINT — the per-target reduction stays an
+  order-independent integer SUM (map-side combinable, so the planted
+  hub page's ~n/5 in-neighborhood collapses to partial sums per map
+  task — the pagerank argument), and floor division is deterministic
+  on every engine.  Rescaled mass is mass - r with r < |nonzero-score nodes|
   (floored remainders; asserted by tests).  The iteration-limit
   ranking is norm-independent, so hub/authority ORDER matches the
   textbook algorithm.
 
-  Magnitudes: with mass = 10^9 every product v·mass ≤ 10^18 stays in
+  Magnitudes: every product v·mass ≤ 10^18 stays in
   int64 (raw sums ≤ max_out_deg·mass = 4·10^9 on the synthesized
   graph); at 10^12-node scale lift the arithmetic to decimal(38,0)
   — the score granularity of 1e-9 of total mass is the trade.
@@ -343,15 +340,14 @@ def hits(spark: SparkSession, sf_dir: str, *,
   the 1-row total crossJoined back as a broadcast (LAZY — a per-round
   driver collect would be the eager-checkpoint barrier the pagerank
   scaling model measured at ~18% serial); lazy periodic
-  localCheckpoints bound lineage.  Degenerate graphs degrade
+  localCheckpoints (every 2 rounds) bound lineage.  Degenerate graphs degrade
   deterministically: a side whose total hits 0 stays all-zero.
 
   Returns one row per document:
     (doc_id, hub_num, auth_num, hub, auth)
   with hub = hub_num / mass (exact BIGINT→DOUBLE, operands < 2^53).
   """
-  if iterations < 1:
-    raise ValueError(f'iterations must be >= 1, got {iterations}')
+  mass = 10 ** 9
   d = (docs if docs is not None
        else spark.read.parquet(f'{sf_dir}/documents.parquet'))
   nodes = d.select(F.col('doc_id').cast('long').alias('doc_id'))
@@ -370,8 +366,7 @@ def hits(spark: SparkSession, sf_dir: str, *,
   if max_deg * mass * mass > 2 ** 62:
     raise ValueError(
         f'max out-degree {max_deg} * mass^2 would overflow int64; '
-        f'pass a smaller mass= (or lift the arithmetic to '
-        f'decimal(38,0) for this graph)')
+        f'lift the arithmetic to decimal(38,0) for this graph')
 
   per_node = mass // max(n, 1)
   hub = nodes.select(F.col('doc_id').alias('node'),
@@ -386,7 +381,7 @@ def hits(spark: SparkSession, sf_dir: str, *,
                     .otherwise(F.lit(0)).cast('long').alias('v')))
 
   auth = None
-  for it in range(iterations):
+  for it in range(4):
     raw_a = (hub.join(edges, hub.node == edges.src)
              .groupBy(F.col('dst').alias('node'))
              .agg(F.sum('v').alias('v')))
@@ -395,7 +390,7 @@ def hits(spark: SparkSession, sf_dir: str, *,
              .groupBy(F.col('src').alias('node'))
              .agg(F.sum('v').alias('v')))
     hub = _rescale(raw_h)
-    if (it + 1) % max(checkpoint_interval, 1) == 0:
+    if (it + 1) % 2 == 0:
       hub = hub.localCheckpoint(eager=False)
       auth = auth.localCheckpoint(eager=False)
 

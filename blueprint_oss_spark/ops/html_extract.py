@@ -525,7 +525,7 @@ _JX_SKIP = {'head', 'script', 'style', 'noscript', 'svg', 'iframe'}
 #: list is keyed on that vocabulary (12 corpus words + the template
 #: comment-thread prose words; 'a'/'the' are both) exactly like
 #: TOPIC_LEXICONS: every density branch fires on real rows.  A
-#: production deployment passes its language's real stop list.
+#: production deployment hands justext_page its language's real stop list.
 JUSTEXT_GATE_STOPLIST = frozenset((
     'scan', 'column', 'window', 'order', 'sort', 'part', 'agg',
     'value', 'line', 'key', 'join', 'merge', 'a', 'the',
@@ -583,31 +583,28 @@ class _JxBlocks(HTMLParser):
       self._link.append(data)
 
 
-def _jx_classify(text: str, link_text: str, stoplist,
-                 length_low: int, length_high: int,
-                 stop_low_pct: int, stop_high_pct: int,
-                 max_link_pct: int) -> str:
+def _jx_classify(text: str, link_text: str, stoplist) -> str:
   """Context-free jusText class from exact integer cross-multiplied
-  density comparisons (no float thresholds — every engine agrees)."""
+  density comparisons (no float thresholds — every engine agrees), at
+  jusText's published length_low 70, stop-density 30/32 % and link
+  density 20 %, and length_high 100 (jusText publishes 200; the
+  synthetic gate documents are ~150 chars)."""
   n, nl = len(text), len(link_text)
-  if nl * 100 > n * max_link_pct:
+  if nl * 100 > n * 20:
     return 'bad'
-  if n < length_low:
+  if n < 70:
     return 'bad' if nl > 0 else 'short'
   words = text.split()
   stop = sum(1 for w in words if w.lower() in stoplist)
   wc = len(words)
-  if stop * 100 > wc * stop_high_pct:
-    return 'good' if n > length_high else 'neargood'
-  if stop * 100 > wc * stop_low_pct:
+  if stop * 100 > wc * 32:
+    return 'good' if n > 100 else 'neargood'
+  if stop * 100 > wc * 30:
     return 'neargood'
   return 'bad'
 
 
-def justext_page(html: str, stoplist, *, length_low: int = 70,
-                 length_high: int = 200, stop_low_pct: int = 30,
-                 stop_high_pct: int = 32,
-                 max_link_pct: int = 20) -> dict:
+def justext_page(html: str, stoplist) -> dict:
   """Classify one page's blocks and return the kept main text plus the
   context-free class census:
     main_text (final-good blocks joined with \\n), n_blocks, n_good,
@@ -617,9 +614,7 @@ def justext_page(html: str, stoplist, *, length_low: int = 70,
   p.feed(html)
   p.close()
   p._flush()
-  cf = [_jx_classify(t, lt, stoplist, length_low, length_high,
-                     stop_low_pct, stop_high_pct, max_link_pct)
-        for t, lt in p.blocks]
+  cf = [_jx_classify(t, lt, stoplist) for t, lt in p.blocks]
   n = len(cf)
   # nearest context-free good/bad anchor on each side; edges are bad
   prev_anchor, last = [], 'bad'
@@ -655,22 +650,14 @@ def justext_page(html: str, stoplist, *, length_low: int = 70,
 
 
 def justext_main_content(spark: SparkSession, sf_dir: str, *,
-                         stoplist=None,
-                         length_low: int = 70,
-                         length_high: int = 100,
-                         stop_low_pct: int = 30,
-                         stop_high_pct: int = 32,
-                         max_link_pct: int = 20,
                          docs: DataFrame = None) -> DataFrame:
   """jusText-style main-content extraction over the same deterministic
   boilerplate templates as html_main_content, with the SQL-friendly
   variant rule doc_id % 3 (the extract_links device — NOT xxhash64 —
   precisely so the DuckDB oracle can recompute every block census and
   the main-paragraph classification from the template structure and
-  the raw text column).  Defaults are the gate configuration
-  (corpus-tuned stop list, length_high=100 because the synthetic docs
-  are ~150 chars; production passes a real language stop list and
-  jusText's published 70/200/30/32/20).
+  the raw text column).  It classifies with the corpus-tuned
+  JUSTEXT_GATE_STOPLIST and justext_page's length_high 100.
 
   On the gate templates the fixed blocks classify bad (header link,
   nav items, ads, link-farm sidebar, footer) / short (section
@@ -684,8 +671,6 @@ def justext_main_content(spark: SparkSession, sf_dir: str, *,
   Scale shape: Scan → MapInPandas (Arrow-batched, zero shuffles,
   pinned) — identical to the readability path; at 10^12 docs the only
   lever is executor count."""
-  sl = frozenset(stoplist) if stoplist is not None \
-      else JUSTEXT_GATE_STOPLIST
   d = (docs if docs is not None
        else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
       .select('doc_id', 'text') \
@@ -712,11 +697,7 @@ def justext_main_content(spark: SparkSession, sf_dir: str, *,
         page = wrap_in_boilerplate(
             str(doc_id), f'Document {doc_id} part 0. {text}',
             int(variant))
-        r = justext_page(page, sl, length_low=length_low,
-                         length_high=length_high,
-                         stop_low_pct=stop_low_pct,
-                         stop_high_pct=stop_high_pct,
-                         max_link_pct=max_link_pct)
+        r = justext_page(page, JUSTEXT_GATE_STOPLIST)
         rows.append((doc_id, r['main_text'], r['n_blocks'],
                      r['n_good'], r['n_neargood'], r['n_short'],
                      r['n_bad'], r['n_kept']))

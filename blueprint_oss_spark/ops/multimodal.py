@@ -59,6 +59,10 @@ FEATURE_SCHEMA = StructType([
 
 FEATURE_DIM = 16
 
+#: The media sentinel of rendered interleaved text: a reserved atomic
+#: token for every tokenizer trained on the rendering.
+MEDIA_TOKEN = '<|image|>'
+
 
 class UnsupportedMediaError(NotImplementedError):
   """Raised for formats needing codec libs absent from this container."""
@@ -338,13 +342,13 @@ def audio_features(x: np.ndarray, rate: int) -> List[float]:
   return [dur / 60.0, rate / 48000.0, rms, zcr] + hist.tolist()
 
 
-def video_features(payload: bytes, max_frames: int = 4) -> List[float]:
-  """Frame-sample up to max_frames evenly, mean of per-frame image
+def video_features(payload: bytes) -> List[float]:
+  """Frame-sample up to 4 frames evenly, mean of per-frame image
   features."""
   frames = split_video_frames(payload)
   if not frames:
     return [0.0] * FEATURE_DIM
-  idx = np.unique(np.linspace(0, len(frames) - 1, max_frames)
+  idx = np.unique(np.linspace(0, len(frames) - 1, 4)
                   .astype(int))
   feats = np.array([image_features(decode_ppm(frames[i])) for i in idx])
   return feats.mean(axis=0).tolist()
@@ -634,8 +638,7 @@ def synthesize_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
   return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def extract_media_features(media: DataFrame, *,
-                           batch_hint: int = 256) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
   """Arrow-batched feature extraction over binary media columns.
 
   mapInPandas keeps payload bytes inside Arrow buffers (no per-row
@@ -668,16 +671,14 @@ def extract_media_features(media: DataFrame, *,
 
 
 def interleaved_near_dup(spark: SparkSession, sf_dir: str, *,
-                         jaccard_threshold: float = 0.8,
-                         shingle: int = 3,
                          min_shared_media: int = 1,
                          max_media_df: int = 0,
                          spans: DataFrame = None) -> DataFrame:
   """Cross-modal near-duplicate verdicts over INTERLEAVED documents —
   the dedup shape unique to the text+media corpus the north rule
-  processes: two docs are near-dups on TEXT evidence (exact n-gram
-  Jaccard ≥ threshold over the concatenated main-content text spans,
-  the `ngram_jaccard_pairs` machinery through its docs= seam) and/or
+  processes: two docs are near-dups on TEXT evidence (exact 3-gram
+  Jaccard ≥ 0.8 over the concatenated main-content text spans, the
+  `ngram_jaccard_pairs` defaults through its docs= seam) and/or
   on MEDIA evidence (≥ min_shared_media common media_refs — the
   shared-asset signal: the same image URL embedded by two pages is
   how crawl-scale media dedup actually triggers, no pixel decode
@@ -718,8 +719,7 @@ def interleaved_near_dup(spark: SparkSession, sf_dir: str, *,
              F.array_sort(F.collect_list(
                  F.struct('s.order', 's.text'))),
              lambda st: st['text'])).alias('text')))
-  tp = (ngram_jaccard_pairs(spark, sf_dir, shingle=shingle,
-                            threshold=jaccard_threshold, docs=txt)
+  tp = (ngram_jaccard_pairs(spark, sf_dir, docs=txt)
         .withColumn('text_dup', F.lit(1)))
 
   med = (ex.where(F.col('s.kind') == 'media')
@@ -934,7 +934,7 @@ def interleaved_doc_stats(content: DataFrame, *,
 
 
 def render_interleaved(content: DataFrame, *,
-                       media_token: str = '<|image|>',
+                       media_token: str = MEDIA_TOKEN,
                        passthrough: tuple = ()) -> DataFrame:
   """Render north-rule main-content output into the flat training-text
   form multimodal LMs consume: text spans joined in span order with
@@ -1159,7 +1159,6 @@ def interleaved_curation_pipeline(spark: SparkSession, sf_dir: str, *,
                                   max_images: int = 2,
                                   min_text_tokens: int = 8,
                                   max_media_run: int = 1,
-                                  media_token: str = '<|image|>',
                                   content: DataFrame = None
                                   ) -> DataFrame:
   """The INTERLEAVED training-data path end to end as one declarative
@@ -1198,13 +1197,11 @@ def interleaved_curation_pipeline(spark: SparkSession, sf_dir: str, *,
       passthrough=('out_spans', 'n_media_removed'))
   kept = gated.where(F.col('keep') == 1)
   return render_interleaved(
-      kept, media_token=media_token,
-      passthrough=('n_media_removed', 'n_media', 'n_tokens'))
+      kept, passthrough=('n_media_removed', 'n_media', 'n_tokens'))
 
 
 def tokenize_interleaved(spark: SparkSession, sf_dir: str, *,
                          n_merges: int = 24,
-                         media_token: str = '<|image|>',
                          content: DataFrame = None,
                          merges: DataFrame = None,
                          tokenizer: str = 'bpe') -> DataFrame:
@@ -1244,7 +1241,7 @@ def tokenize_interleaved(spark: SparkSession, sf_dir: str, *,
   if content is None:
     content = main_content_from_spans(
         interleaved_html_table(spark, sf_dir))
-  rend = render_interleaved(content, media_token=media_token) \
+  rend = render_interleaved(content) \
       .select('doc_id', 'rendered_text', 'n_sentinels',
               'n_render_tokens').localCheckpoint()
   docs = rend.select('doc_id', F.col('rendered_text').alias('text'))
@@ -1252,15 +1249,15 @@ def tokenize_interleaved(spark: SparkSession, sf_dir: str, *,
     from .unigram import unigram_encode, unigram_train
     if merges is None:
       merges = unigram_train(spark, sf_dir, docs=docs,
-                             special_tokens=(media_token,))
+                             special_tokens=(MEDIA_TOKEN,))
     enc = unigram_encode(spark, sf_dir, vocab=merges, docs=docs,
-                         special_tokens=(media_token,))
+                         special_tokens=(MEDIA_TOKEN,))
   elif tokenizer == 'bpe':
     if merges is None:
       merges = bpe_train(spark, sf_dir, n_merges=n_merges, docs=docs,
-                         special_tokens=(media_token,))
+                         special_tokens=(MEDIA_TOKEN,))
     enc = bpe_encode(spark, sf_dir, merges=merges, docs=docs,
-                     special_tokens=(media_token,))
+                     special_tokens=(MEDIA_TOKEN,))
   else:
     raise ValueError(f'unknown tokenizer: {tokenizer!r}')
   return (rend
@@ -1372,8 +1369,6 @@ def media_quality_verdicts(content: DataFrame, media_dim: DataFrame, *,
 
 
 def caption_image_alignment(spark: SparkSession, sf_dir: str, *,
-                            dim: int = 64,
-                            max_caption_tokens: int = 8,
                             threshold: float = 0.2,
                             content: DataFrame = None,
                             media_emb: DataFrame = None,
@@ -1386,14 +1381,14 @@ def caption_image_alignment(spark: SparkSession, sf_dir: str, *,
   verdict at a threshold.  In production the text side is a real text
   encoder; this container ships none, so the text embedding is a
   deterministic signed feature-hashing projection (md5-bucketed ±1
-  per token into `dim` dims — the quality_classifier hashing device),
+  per token into 64 dims — the quality_classifier hashing device),
   a stand-in that keeps every Spark-side piece real and testable:
   the per-pair scoring plan, the media-embedding join shape, the
   exact-integer text vector, the verdict arithmetic.  Swapping in a
   real encoder changes ONE projected column (a Pandas-UDF batch
   encode), nothing else.
 
-  Input pairs are caption_pairs(content, max_caption_tokens) — one
+  Input pairs are caption_pairs(content, max_caption_tokens=8) — one
   row per media span; the caption is the before/after neighbors
   joined (concat_ws skips a NULL side).  `media_emb` maps media_ref →
   embedding (array<float>); default derives it from the embeddings
@@ -1438,7 +1433,8 @@ def caption_image_alignment(spark: SparkSession, sf_dir: str, *,
                  .select(F.concat(F.lit('media/'), F.col('vec_id'),
                                   F.lit('/0')).alias('media_ref'),
                          'embedding'))
-  pairs = caption_pairs(content, max_caption_tokens=max_caption_tokens)
+  pairs = caption_pairs(content, max_caption_tokens=8)
+  dim = 64
 
   def _h(salt, w):
     return F.conv(F.substring(

@@ -46,12 +46,10 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def hll_distinct(spark: SparkSession, sf_dir: str, *,
                  m: int = 64,
-                 group_col: str = 'lang',
-                 value_col: str = 'text',
                  docs: DataFrame = None) -> DataFrame:
   """HyperLogLog distinct-count estimation (Flajolet et al. 2007), the
   cardinality-sketch family next to CMS (frequency) and MinHash/LSH
-  (similarity) — per group, estimate |distinct value_col| from m
+  (similarity) — per lang, estimate |distinct text| from m
   registers instead of an exact count-distinct whose shuffle carries
   every distinct value.
 
@@ -86,8 +84,7 @@ def hll_distinct(spark: SparkSession, sf_dir: str, *,
   alpha = 0.709  # the classic alpha_64
   d = (docs if docs is not None else
        spark.read.parquet(f'{sf_dir}/documents.parquet')) \
-      .select(F.col(group_col).alias('grp'),
-              F.col(value_col).alias('v'))
+      .select(F.col('lang').alias('grp'), F.col('text').alias('v'))
 
   h = F.conv(F.substring(F.md5(F.col('v')), 1, 15), 16, 10) \
       .cast('long')
@@ -126,21 +123,21 @@ def hll_distinct(spark: SparkSession, sf_dir: str, *,
       F.count(F.lit(1)).alias('n_rows'),
       F.count_distinct('v').alias('true_distinct'))
   return (stats.join(folded, 'grp')
-          .select(F.col('grp').alias(group_col), 'n_rows',
+          .select(F.col('grp').alias('lang'), 'n_rows',
                   'true_distinct', 'n_zero_regs',
                   F.round(F.lit(alpha) * 64.0 * 64.0
                           / F.col('denom'), 6).alias('hll_est'))
-          .orderBy(group_col))
+          .orderBy('lang'))
 
 
 def sampled_quantiles(spark: SparkSession, sf_dir: str, *,
                       threshold: str = '8' + '0' * 31,
-                      qs=(25, 50, 75, 90),
                       docs: DataFrame = None) -> DataFrame:
-  """Per-stratum text-length quantiles via deterministic hash-sampling
-  + exact nearest-rank selection — the reproducible alternative to
-  percentile_approx, whose GK/KLL sketch state is engine-internal and
-  not bit-stable across engines (or even partitionings).
+  """Per-stratum text-length quantiles (q25/q50/q75/q90) via
+  deterministic hash-sampling + exact nearest-rank selection — the
+  reproducible alternative to percentile_approx, whose GK/KLL sketch
+  state is engine-internal and not bit-stable across engines (or even
+  partitionings).
 
   The md5-threshold sample (the stratified_sample idiom) is stable
   under retries and repartitioning; quantile q is the nearest-rank
@@ -162,7 +159,7 @@ def sampled_quantiles(spark: SparkSession, sf_dir: str, *,
               F.count(F.lit(1)).alias('n_sampled')))
   cols = [F.element_at(
       'vs', F.ceil(F.col('n_sampled') * q / 100.0).cast('int'))
-      .cast('long').alias(f'q{q}') for q in qs]
+      .cast('long').alias(f'q{q}') for q in (25, 50, 75, 90)]
   return (agg.select('lang', 'n_sampled', *cols)
           .orderBy('lang'))
 
@@ -306,7 +303,6 @@ DEFAULT_COMPACT_TARGET = 128 * 1024
 
 def plan_compaction(spark: SparkSession, sf_dir: str, *,
                     target_bytes: int = DEFAULT_COMPACT_TARGET,
-                    buckets: int = 8,
                     manifests: DataFrame = None) -> DataFrame:
   """Compaction planning over writer shard manifests — the
   table-maintenance step that groups small output files into
@@ -335,7 +331,7 @@ def plan_compaction(spark: SparkSession, sf_dir: str, *,
     raise ValueError('target_bytes must be positive')
   from pyspark.sql import Window
   m = (manifests if manifests is not None
-       else shard_manifests(spark, sf_dir, buckets=buckets)) \
+       else shard_manifests(spark, sf_dir)) \
       .select('shard', 'n_docs', 'n_bytes')
   binned = m.select(
       'shard', 'n_docs', 'n_bytes',

@@ -244,10 +244,9 @@ def events_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
       .orderBy('event_id'))
 
 
-def recent_event_counts(spark: SparkSession, sf_dir: str, *,
-                        window_s: int = 3600) -> DataFrame:
+def recent_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
   """RANGE join: per event, how many earlier events the same user fired
-  within the preceding `window_s` seconds (bot/burst detection shape).
+  within the preceding hour (bot/burst detection shape).
 
   Spark's optimizer turns a naive `ON user AND t-w <= t2 < t` predicate
   into a per-key cross product (O(events² per user)).  The scalable
@@ -261,7 +260,7 @@ def recent_event_counts(spark: SparkSession, sf_dir: str, *,
   ev = _t(spark, sf_dir, 'events').select(
       'event_id', 'user_id', 'ts',
       F.unix_micros(F.col('ts').cast('timestamp')).alias('us'))
-  win_us = window_s * 1_000_000
+  win_us = 3600 * 1_000_000
   binned = ev.withColumn('bin', F.floor(F.col('us') / win_us))
   src = binned.select(F.col('user_id').alias('s_user'),
                       F.col('us').alias('s_us'),
@@ -279,10 +278,9 @@ def recent_event_counts(spark: SparkSession, sf_dir: str, *,
           .orderBy('event_id'))
 
 
-def sessionize(spark: SparkSession, sf_dir: str, *,
-               gap_minutes: int = 30) -> DataFrame:
+def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Gap-based sessionization: split each user's event stream into
-  sessions wherever the inactivity gap exceeds `gap_minutes`, then
+  sessions wherever the inactivity gap exceeds 30 minutes, then
   aggregate per session (start/end, duration, event + click counts,
   decimal-exact value total).
 
@@ -299,7 +297,7 @@ def sessionize(spark: SparkSession, sf_dir: str, *,
   (timestamp_diff vs the NTZ epoch == DuckDB's epoch_us on the same
   naive value — no session-timezone or DST dependence).
   """
-  gap_us = gap_minutes * 60 * 1_000_000
+  gap_us = 30 * 60 * 1_000_000
   epoch = F.lit('1970-01-01 00:00:00').cast('timestamp_ntz')
   ev = _t(spark, sf_dir, 'events').select(
       'user_id', 'event_id', 'event_type',
@@ -329,9 +327,7 @@ def sessionize(spark: SparkSession, sf_dir: str, *,
           .orderBy('user_id', 'session_id'))
 
 
-def funnel_analysis(spark: SparkSession, sf_dir: str, *,
-                    stages: tuple = ('view', 'click', 'purchase')) \
-        -> DataFrame:
+def funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Ordered-funnel analysis per user: the earliest `view`, the
   earliest `click` STRICTLY AFTER that view, and the earliest
   `purchase` strictly after that click, plus the stage reached (0–3).
@@ -352,7 +348,7 @@ def funnel_analysis(spark: SparkSession, sf_dir: str, *,
       'user_id', 'event_id', 'event_type',
       F.timestamp_diff('MICROSECOND', epoch, F.col('ts'))
       .alias('ts_us'))
-  s1, s2, s3 = stages
+  s1, s2, s3 = 'view', 'click', 'purchase'
   w = (Window.partitionBy('user_id').orderBy('ts_us', 'event_id')
        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
   run_view = F.min(F.when(F.col('event_type') == s1,

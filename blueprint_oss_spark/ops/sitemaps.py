@@ -113,7 +113,7 @@ def synth_sitemaps(spark: SparkSession) -> DataFrame:
                   F.lit('</urlset>')).alias('sitemap_xml')))
 
 
-def parse_sitemaps(spark: SparkSession, sf_dir: str = '', *,
+def parse_sitemaps(spark: SparkSession, *,
                    sitemaps: DataFrame = None) -> DataFrame:
   """Parse (domain, sitemap_xml) into one row per <url> entry:
   (domain, entry_pos, loc, lastmod, changefreq, priority).

@@ -135,7 +135,6 @@ LANGID_POOLS = {
 
 
 def lang_id_trained(spark: SparkSession, sf_dir: str, *,
-                    n_words: int = 16, pool_size: int = 12,
                     eval_mod: int = 5,
                     docs: DataFrame = None) -> DataFrame:
   """TRAINED language identification — the char-n-gram classifier
@@ -148,8 +147,8 @@ def lang_id_trained(spark: SparkSession, sf_dir: str, *,
   the output (is_eval marks docs excluded from training).
 
   Synthesis (both engines recompute it exactly): doc i's true
-  language is LANGID_LANGS[i % 4]; its j-th of `n_words` words is
-  LANGID_POOLS[lang][md5(i||':'||j) % pool_size] — md5-indexed,
+  language is LANGID_LANGS[i % 4]; its j-th of 16 words is
+  LANGID_POOLS[lang][md5(i||':'||j) % 12] — md5-indexed,
   corpus-independent, so the DuckDB oracle rebuilds the identical
   corpus from the documents table's doc_id universe alone.
 
@@ -167,7 +166,7 @@ def lang_id_trained(spark: SparkSession, sf_dir: str, *,
   lid_n_grams, q_de/q_en/q_es/q_fr (round 6), pred_lang, lid_correct.
 
   Scale shape: synthesis + gram fan-out are map-side array ops (the
-  explode is bounded by n_words × max word length); training is ONE
+  explode is bounded by 16 × max word length); training is ONE
   map-side-combinable groupBy whose output is bounded by the pools'
   distinct-bigram vocabulary (≤ a few hundred rows regardless of
   corpus size — collected once, re-broadcast as a literal local
@@ -185,7 +184,7 @@ def lang_id_trained(spark: SparkSession, sf_dir: str, *,
     idx = (F.conv(F.substring(
         F.md5(F.concat(F.col('doc_id').cast('string'), F.lit(':'),
                        j.cast('string'))), 1, 8), 16, 10)
-        .cast('long') % pool_size).cast('int')
+        .cast('long') % 12).cast('int')
     expr = F.lit(None).cast('string')
     for lang in LANGID_LANGS:
       arr = F.array(*[F.lit(x) for x in LANGID_POOLS[lang]])
@@ -195,7 +194,7 @@ def lang_id_trained(spark: SparkSession, sf_dir: str, *,
 
   staged = (d.select('doc_id', tlang.alias('tlang'))
             .select('doc_id', 'tlang',
-                    F.transform(F.sequence(F.lit(0), F.lit(n_words - 1)),
+                    F.transform(F.sequence(F.lit(0), F.lit(15)),
                                 _word_at).alias('ws')))
   wrows = staged.select('doc_id', 'tlang',
                         F.posexplode('ws').alias('j', 'w'))
@@ -315,13 +314,16 @@ def _cap_hub_buckets(grouped: DataFrame, ids_col: str,
   return grouped.where(~over)
 
 
-def _minhash_features(d: DataFrame, n_hashes: int,
-                      shingle: int) -> DataFrame:
-  """Map-side minhash features per doc: the shingle array `sh` plus
-  signature columns m1..mk — shared by minhash_shingles (which prunes
-  sh away) and minhash_calibration (which also needs the distinct
-  shingle set for exact Jaccard).  Signatures build the shingle array
-  per row and take the per-permutation min with
+#: minhash signature width: hash permutations, 4 bands of 4 rows.
+_MINHASH_HASHES = 16
+
+
+def _minhash_features(d: DataFrame) -> DataFrame:
+  """Map-side minhash features per doc: the word 3-gram shingle array
+  `sh` plus signature columns m1..m16 — shared by minhash_shingles
+  (which prunes sh away) and minhash_calibration (which also needs the
+  distinct shingle set for exact Jaccard).  Signatures build the
+  shingle array per row and take the per-permutation min with
   array_min(transform(...)) — no explode, no distinct, no groupBy;
   min over a multiset equals min over the distinct set, so the
   signature is identical to the exploded+distinct formulation while
@@ -339,22 +341,21 @@ def _minhash_features(d: DataFrame, n_hashes: int,
     return F.array_min(
         F.transform(F.col('sh'), lambda x: F.xxhash64(x, F.lit(s))))
 
-  return (d.where(F.size(toks) >= shingle)
-          .select('doc_id', word_ngrams(toks, shingle).alias('sh'))
+  return (d.where(F.size(toks) >= 3)
+          .select('doc_id', word_ngrams(toks, 3).alias('sh'))
           .select('doc_id', 'sh',
                   *[min_hash(s).alias(f'm{s}')
-                    for s in range(1, n_hashes + 1)]))
+                    for s in range(1, _MINHASH_HASHES + 1)]))
 
 
 def minhash_shingles(spark: SparkSession, sf_dir: str, *,
-                     n_hashes: int = 16, shingle: int = 3,
-                     bands: int = 4,
                      max_bucket_size: int = 0,
                      sort: bool = True,
                      docs: DataFrame = None) -> DataFrame:
   """MinHash + LSH banding near-dup candidates, entirely with built-ins:
-  token shingles → xxhash64 per permutation (hash-xor trick) → band
-  signature → group by band bucket → candidate pairs.
+  word 3-gram shingles → xxhash64 per permutation (hash-xor trick) →
+  band signature (4 bands of 4 of the 16 permutations) → group by
+  band bucket → candidate pairs.
 
   At 100 TB this shape holds: shingling and min-hashing are map-side,
   the single shuffle is the band-bucket groupBy, and candidate pairs per
@@ -385,19 +386,19 @@ def minhash_shingles(spark: SparkSession, sf_dir: str, *,
   # parallelism.  At 100 TB the scan has thousands of splits and no
   # repartition (= no shuffle) happens.
   d = spread_small_scan(d)
-  seeds = list(range(1, n_hashes + 1))
-  sig = _minhash_features(d, n_hashes, shingle) \
+  seeds = list(range(1, _MINHASH_HASHES + 1))
+  sig = _minhash_features(d) \
       .select('doc_id', *[f'm{s}' for s in seeds])
-  rows_per_band = n_hashes // bands
+  rows_per_band = _MINHASH_HASHES // 4
   band_cols = []
-  for b in range(bands):
+  for b in range(4):
     parts = [F.col(f'm{s}') for s in seeds[b * rows_per_band:
                                            (b + 1) * rows_per_band]]
     band_cols.append(F.xxhash64(*parts, F.lit(1000 + b)).alias(f'b{b}'))
   banded = sig.select('doc_id', *band_cols)
   stacked = banded.select(
       'doc_id',
-      F.explode(F.array(*[F.col(f'b{b}') for b in range(bands)]))
+      F.explode(F.array(*[F.col(f'b{b}') for b in range(4)]))
       .alias('bucket'))
   # Candidate pairs per bucket via ONE shuffle (groupBy bucket) and an
   # in-bucket JVM-side pair expansion — a self-join here would scan and
@@ -422,15 +423,14 @@ def minhash_shingles(spark: SparkSession, sf_dir: str, *,
 
 
 def minhash_calibration(spark: SparkSession, sf_dir: str, *,
-                        n_hashes: int = 16, shingle: int = 3,
-                        bands: int = 4,
                         max_bucket_size: int = 0,
                         docs: DataFrame = None,
                         pairs: DataFrame = None) -> DataFrame:
   """MinHash estimator calibration — the report production dedup teams
-  run to pick (n_hashes, bands, rows): for every LSH candidate pair,
-  the ESTIMATED Jaccard evidence (est_match = number of agreeing
-  signature components; est ≈ est_match / n_hashes, the unbiased
+  run to pick (n_hashes, bands, rows): for every candidate pair of
+  minhash_shingles' default LSH, the ESTIMATED Jaccard evidence
+  (est_match = number of agreeing signature components; est ≈
+  est_match / _MINHASH_HASHES, the unbiased
   minhash estimator) next to the EXACT distinct-shingle Jaccard
   (inter / uni) — all exact integers, no float densities, so the
   verification recomputes every cell bit-for-bit.  Output:
@@ -447,14 +447,13 @@ def minhash_calibration(spark: SparkSession, sf_dir: str, *,
   d = (docs if docs is not None
        else _docs(spark, sf_dir)).select('doc_id', 'text')
   d = spread_small_scan(d)
-  seeds = list(range(1, n_hashes + 1))
-  feats = (_minhash_features(d, n_hashes, shingle)
+  seeds = list(range(1, _MINHASH_HASHES + 1))
+  feats = (_minhash_features(d)
            .select('doc_id',
                    F.array_distinct('sh').alias('shset'),
                    F.array(*[f'm{s}' for s in seeds]).alias('sig')))
   p = (pairs if pairs is not None
-       else minhash_shingles(spark, sf_dir, n_hashes=n_hashes,
-                             shingle=shingle, bands=bands,
+       else minhash_shingles(spark, sf_dir,
                              max_bucket_size=max_bucket_size,
                              docs=docs))
   fa = feats.select(F.col('doc_id').alias('doc_a'),
@@ -473,11 +472,13 @@ def minhash_calibration(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_a', 'doc_b'))
 
 
-def quality_keep_expr(text_col, *,
-                      min_tokens: int = 5, max_tokens: int = 100_000,
-                      min_mean_wordlen: int = 2,
-                      max_mean_wordlen: int = 12,
-                      toks=None):
+#: The Gopher thresholds quality_keep_expr and quality_filter share:
+#: keep docs of 5..100_000 words whose mean word length is in [2, 12].
+_GOPHER_MIN_TOKENS, _GOPHER_MAX_TOKENS = 5, 100_000
+_GOPHER_MIN_WORDLEN, _GOPHER_MAX_WORDLEN = 2, 12
+
+
+def quality_keep_expr(text_col, *, toks=None):
   """The Gopher keep flag as a single reusable Column expression (int
   0/1) over a text column — the same exact-integer verdicts as
   `quality_filter`, inlineable on any scan so downstream consumers
@@ -494,18 +495,15 @@ def quality_keep_expr(text_col, *,
   n_alpha = F.length(F.regexp_replace(text_col, '[^a-zA-Z]', ''))
   n_stop = F.size(F.filter(toks, lambda x: F.array_contains(
       F.array(*[F.lit(s) for s in STOPWORDS_EN]), x)))
-  ok = ((n >= min_tokens) & (n <= max_tokens)
-        & (sum_len >= min_mean_wordlen * n)
-        & (sum_len <= max_mean_wordlen * n)
+  ok = ((n >= _GOPHER_MIN_TOKENS) & (n <= _GOPHER_MAX_TOKENS)
+        & (sum_len >= _GOPHER_MIN_WORDLEN * n)
+        & (sum_len <= _GOPHER_MAX_WORDLEN * n)
         & (n_stop >= 1)
         & (2 * n_alpha >= n_chars))
   return ok.cast('int')
 
 
 def quality_filter(spark: SparkSession, sf_dir: str, *,
-                   min_tokens: int = 5, max_tokens: int = 100_000,
-                   min_mean_wordlen: int = 2,
-                   max_mean_wordlen: int = 12,
                    docs: DataFrame = None) -> DataFrame:
   """Gopher-style document quality filter: per-doc boolean verdicts for
   the standard pretraining heuristics (token-count bounds, mean word
@@ -532,9 +530,10 @@ def quality_filter(spark: SparkSession, sf_dir: str, *,
       F.size(F.filter(toks, lambda x: F.array_contains(
           F.array(*[F.lit(s) for s in STOPWORDS_EN]), x)))
       .alias('n_stop'))
-  ok_count = (F.col('n') >= min_tokens) & (F.col('n') <= max_tokens)
-  ok_wordlen = (F.col('sum_len') >= min_mean_wordlen * F.col('n')) \
-      & (F.col('sum_len') <= max_mean_wordlen * F.col('n'))
+  ok_count = (F.col('n') >= _GOPHER_MIN_TOKENS) \
+      & (F.col('n') <= _GOPHER_MAX_TOKENS)
+  ok_wordlen = (F.col('sum_len') >= _GOPHER_MIN_WORDLEN * F.col('n')) \
+      & (F.col('sum_len') <= _GOPHER_MAX_WORDLEN * F.col('n'))
   ok_stop = F.col('n_stop') >= 1
   ok_alpha = 2 * F.col('n_alpha') >= F.col('n_chars')
   return (d.select(
@@ -549,13 +548,13 @@ def quality_filter(spark: SparkSession, sf_dir: str, *,
 
 
 def dedup_groups(spark: SparkSession, sf_dir: str, *,
-                 shingle: int = 3, threshold: float = 0.8,
                  edge_source: str = 'jaccard',
                  docs: DataFrame = None,
                  edges: DataFrame = None,
                  max_bucket_size: int = 0,
                  sort: bool = True) -> DataFrame:
-  """Near-dup dedup GROUPS: exact n-gram-Jaccard candidate pairs →
+  """Near-dup dedup GROUPS: exact 3-gram-Jaccard >= 0.8 candidate pairs
+  (ngram_jaccard_pairs' defaults) →
   connected components (alternating large-star/small-star, see
   ops/graph.py) → one row per document with its group representative
   (component-min doc_id), group size, and keep/drop verdict.
@@ -580,13 +579,11 @@ def dedup_groups(spark: SparkSession, sf_dir: str, *,
     # inverted-index join (candidates are a probabilistic superset of
     # real near-dups within a band's collision rate — verify within
     # groups downstream if precision matters)
-    pairs = minhash_shingles(spark, sf_dir, shingle=shingle,
-                             docs=docs,
+    pairs = minhash_shingles(spark, sf_dir, docs=docs,
                              max_bucket_size=max_bucket_size) \
         .select('doc_a', 'doc_b')
   else:
-    pairs = ngram_jaccard_pairs(spark, sf_dir, shingle=shingle,
-                                threshold=threshold, docs=docs) \
+    pairs = ngram_jaccard_pairs(spark, sf_dir, docs=docs) \
         .select('doc_a', 'doc_b')
   from blueprint_oss_spark.ops.graph import connected_components
   comp = connected_components(pairs, 'doc_a', 'doc_b')
@@ -605,10 +602,6 @@ def dedup_groups(spark: SparkSession, sf_dir: str, *,
 
 
 def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
-                          jaccard_shingle: int = 3,
-                          jaccard_threshold: float = 0.8,
-                          sim_max_hamming: int = 3,
-                          sem_threshold: float = 0.9,
                           sort: bool = True) -> DataFrame:
   """Multi-signal dedup DECISION table — the Dolma-style composition
   (Soldaini et al. 2024: per-doc attribute files composed into one
@@ -619,13 +612,14 @@ def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
   computed from the composed columns — so a curation run reads one
   table to know WHY a document dropped.
 
-  Signals (each one's machinery is the already-gated operator):
+  Signals (each one's machinery is the already-gated operator, run at
+  its defaults):
     exact_keep  — md5 content-hash group, keeper = min doc_id;
-    jac_keep    — n-gram-Jaccard connected components (dedup_groups),
-                  group rides as jac_group;
-    sim_keep    — SimHash Manku-banded pairs at <= sim_max_hamming
-                  bits -> connected components, keeper = min;
-    sem_keep    — SemDeDup spherical-k-means in-cell cosine
+    jac_keep    — 3-gram-Jaccard >= 0.8 connected components
+                  (dedup_groups), group rides as jac_group;
+    sim_keep    — SimHash Manku-banded pairs at <= 3 differing bits
+                  -> connected components, keeper = min;
+    sem_keep    — SemDeDup spherical-k-means in-cell cosine >= 0.9
                   components (ops/vectors.semantic_dedup), joined on
                   vec_id == doc_id (the synthetic embeddings table is
                   the documents' embedding column).
@@ -654,20 +648,18 @@ def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
 
   # component operators feed joins — their own presentation sorts
   # would be dead range exchanges here, so they run unsorted
-  jac = (dedup_groups(spark, sf_dir, shingle=jaccard_shingle,
-                      threshold=jaccard_threshold, sort=False)
+  jac = (dedup_groups(spark, sf_dir, sort=False)
          .select('doc_id', F.col('group_id').alias('jac_group'),
                  F.col('is_keeper').cast('int').alias('jac_keep')))
 
-  sp = simhash_near_dup_pairs(
-      spark, sf_dir, max_hamming=sim_max_hamming,
-      sort=False).select('doc_a', 'doc_b')
+  sp = simhash_near_dup_pairs(spark, sf_dir, sort=False) \
+      .select('doc_a', 'doc_b')
   scomp = connected_components(sp, 'doc_a', 'doc_b') \
       .select(F.col('node').alias('doc_id'),
               F.col('component').alias('sim_group'))
 
-  sem = (semantic_dedup(spark, sf_dir, threshold=sem_threshold,
-                        plant_for_verification=True, sort=False)
+  sem = (semantic_dedup(spark, sf_dir, plant_for_verification=True,
+                        sort=False)
          .select(F.col('vec_id').alias('doc_id'),
                  F.col('keep').cast('int').alias('sem_keep')))
 
@@ -776,18 +768,22 @@ def _simhash_block_keys(bands: int, key_blocks: int, max_hamming: int):
   return keys
 
 
+#: Most differing SimHash bits a near-dup pair may have.
+_SIMHASH_MAX_HAMMING = 3
+
+
 def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
-                           max_hamming: int = 3,
                            bands: int = 4,
                            key_blocks: int = 1,
                            sort: bool = True) -> DataFrame:
-  """Near-dup pairs by SimHash hamming distance, banded (Manku et al.,
-  WWW 2007 — the web-scale simhash dedup construction).
+  """Near-dup pairs within _SIMHASH_MAX_HAMMING = 3 differing SimHash
+  bits, banded (Manku et al., WWW 2007 — the web-scale simhash dedup
+  construction).
 
   The 64-bit signature splits into `bands` equal blocks; blocking keys
   are every combination of `key_blocks` of them (C(bands, key_blocks)
   tables, each key key_blocks·64/bands bits wide).  By pigeonhole any
-  pair within `max_hamming <= bands - key_blocks` differing bits
+  pair within 3 <= bands - key_blocks differing bits
   agrees exactly on at least one combination, so the blocking has
   recall 1.0 by construction (enforced in _simhash_block_keys); the
   exact `bit_count(xor)` filter then removes key-collision false
@@ -808,7 +804,8 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
   banded = sig.select(
       'doc_id', 'simhash',
       F.explode(F.array(
-          *_simhash_block_keys(bands, key_blocks, max_hamming)))
+          *_simhash_block_keys(bands, key_blocks,
+                               _SIMHASH_MAX_HAMMING)))
       .alias('band'))
   a = banded.select(F.col('doc_id').alias('doc_a'),
                     F.col('simhash').alias('h_a'), 'band')
@@ -818,15 +815,14 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
   return presented(
       a.join(b, ['band'])
       .where(F.col('doc_a') < F.col('doc_b'))
-      .where(ham <= max_hamming)
+      .where(ham <= _SIMHASH_MAX_HAMMING)
       .select('doc_a', 'doc_b', ham.cast('int').alias('hamming'))
       .distinct(),
       'doc_a', 'doc_b', sort=sort)
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, *,
-                    k: int = 3) -> DataFrame:
-  """Top-k characteristic terms per document by TF·IDF.
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+  """Top-3 characteristic terms per document by TF·IDF.
 
   The idf factor is the log-free BM25 idf ratio (N − df + 0.5)/(df + 0.5)
   — monotone in the classic log idf, chosen so every arithmetic step
@@ -855,7 +851,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, *,
   w = Window.partitionBy('doc_id').orderBy(
       F.col('score').desc(), F.col('term'))
   return (scored.withColumn('rnk', F.row_number().over(w))
-          .where(F.col('rnk') <= k)
+          .where(F.col('rnk') <= 3)
           .select('doc_id', 'term', 'tf', 'df',
                   F.round('score', 6).alias('score_r'), 'rnk')
           .orderBy('doc_id', 'rnk'))
@@ -863,11 +859,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, *,
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, *,
                         shingle: int = 3,
-                        threshold: float = 0.8,
                         max_shingle_df: int = 0,
                         sort: bool = True,
                         docs: DataFrame = None) -> DataFrame:
-  """Exact n-gram Jaccard near-dup pairs above a threshold, via a
+  """Exact n-gram Jaccard near-dup pairs at Jaccard >= 0.8, via a
   shingle-inverted-index join (prefix-blocked to avoid the full cross
   product; exact because identical-text pairs share all shingles).
 
@@ -920,7 +915,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, *,
       .withColumn('jaccard',
                   F.col('n_common')
                   / (F.col('n_a') + F.col('n_b') - F.col('n_common')))
-      .where(F.col('jaccard') >= threshold)
+      .where(F.col('jaccard') >= 0.8)
       .select('doc_a', 'doc_b', 'n_common', 'n_a', 'n_b'),
       'doc_a', 'doc_b', sort=sort)
 
@@ -977,13 +972,17 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
           .orderBy('doc_id'))
 
 
+#: Training-sequence length of pack_sequences, which sequence_segments
+#: inverts.
+_PACK_TOKENS = 256
+
+
 def pack_sequences(spark: SparkSession, sf_dir: str, *,
-                   max_tokens: int = 256, shards: int = 8,
                    sort: bool = True,
                    docs: DataFrame = None) -> DataFrame:
   """GPT-style sequence packing (concat-and-chunk): documents are
   concatenated in deterministic order and chunked into fixed
-  `max_tokens` training sequences, ignoring doc boundaries — the
+  _PACK_TOKENS-token training sequences, ignoring doc boundaries — the
   standard pretraining tokenizer-sharding step.  Per doc this reports
   its shard, token offset, and the first/last chunk it lands in
   (n_chunks > 1 means the doc straddles a chunk boundary).
@@ -991,7 +990,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
   Scale shape: one window shuffle, partitioned by shard — each shard's
   running token sum is independent, so 100 TB packs as thousands of
   parallel shards (exactly how production packing runs); there is NO
-  global ordering bottleneck.  Shard = doc_id % shards and order =
+  global ordering bottleneck.  Shard = doc_id % 8 and order =
   doc_id within shard, so the layout is deterministic and the DuckDB
   oracle recomputes it with the same window sum.
 
@@ -1005,7 +1004,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
   sized = d.select(
       'doc_id',
       F.size(words('text')).alias('n_tokens'),
-      F.pmod(F.col('doc_id'), F.lit(shards)).alias('shard'))
+      F.pmod(F.col('doc_id'), F.lit(8)).alias('shard'))
   w = (Window.partitionBy('shard').orderBy('doc_id')
        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
   # stage cum as ONE column first — referencing the window expression
@@ -1015,12 +1014,12 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
           .withColumn('cum', F.sum('n_tokens').over(w))
           .withColumn('tokens_before', F.col('cum') - F.col('n_tokens'))
           .withColumn('chunk_first',
-                      F.floor(F.col('tokens_before') / max_tokens))
+                      F.floor(F.col('tokens_before') / _PACK_TOKENS))
           .withColumn(
               'chunk_last',
               F.when(F.col('n_tokens') > 0,
-                     F.floor((F.col('cum') - 1) / max_tokens))
-              .otherwise(F.floor(F.col('tokens_before') / max_tokens)))
+                     F.floor((F.col('cum') - 1) / _PACK_TOKENS))
+              .otherwise(F.floor(F.col('tokens_before') / _PACK_TOKENS)))
           .withColumn('n_chunks',
                       F.col('chunk_last') - F.col('chunk_first') + 1)
           .select('doc_id', 'shard', 'n_tokens', 'tokens_before',
@@ -1029,7 +1028,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
 
 
 def sequence_segments(spark: SparkSession, sf_dir: str, *,
-                      max_tokens: int = 256, shards: int = 8,
                       packed: DataFrame = None,
                       docs: DataFrame = None) -> DataFrame:
   """The dataloader-side INVERSION of `pack_sequences`: one row per
@@ -1044,7 +1042,7 @@ def sequence_segments(spark: SparkSession, sf_dir: str, *,
 
   Contract: within a chunk, segments are sorted by `start_in_chunk`,
   tile the chunk exactly (no gaps, no overlaps: consecutive starts
-  differ by the previous seg_len), and `fill_tokens` == max_tokens on
+  differ by the previous seg_len), and `fill_tokens` == _PACK_TOKENS on
   every chunk except possibly each shard's last.  Concatenating one
   doc's segments across its chunks in chunk order reproduces token
   positions [0, n_tokens) contiguously (`doc_offset` pins this).
@@ -1052,16 +1050,15 @@ def sequence_segments(spark: SparkSession, sf_dir: str, *,
 
   Scale shape: pack_sequences' per-shard window (its one shuffle) →
   map-side explode of each doc's chunk range (fanout ≈ corpus_tokens
-  / max_tokens, the OUTPUT size — nothing quadratic) → ONE
+  / _PACK_TOKENS, the OUTPUT size — nothing quadratic) → ONE
   sort_array(collect_list) groupBy keyed (shard, chunk).  Chunk
-  groups are bounded: a chunk holds at most max_tokens segments, so
-  the collect_list row is ≤ max_tokens structs regardless of corpus
+  groups are bounded: a chunk holds at most _PACK_TOKENS segments, so
+  the collect_list row is ≤ _PACK_TOKENS structs regardless of corpus
   size — no skew exposure.  All JVM built-ins; DuckDB recomputes the
   same arithmetic from the window sum."""
   p = (packed if packed is not None
-       else pack_sequences(spark, sf_dir, max_tokens=max_tokens,
-                           shards=shards, docs=docs))
-  mt = F.lit(max_tokens).cast('long')
+       else pack_sequences(spark, sf_dir, docs=docs))
+  mt = F.lit(_PACK_TOKENS).cast('long')
   e = (p.where(F.col('n_tokens') > 0)
        .select('doc_id', 'shard', 'n_tokens', 'tokens_before',
                F.explode(F.sequence('chunk_first', 'chunk_last'))
@@ -1301,8 +1298,13 @@ def heavy_hitters(spark: SparkSession, sf_dir: str, *,
           .orderBy('term'))
 
 
+#: bm25_topk's default query count and depth, which bm25_from_postings
+#: serves from the index (their outputs are asserted bit-equal).
+_BM25_QUERIES, _BM25_K = 8, 5
+
+
 def bm25_topk(spark: SparkSession, sf_dir: str, *,
-              n_queries: int = 8, k: int = 5,
+              n_queries: int = _BM25_QUERIES, k: int = _BM25_K,
               docs: DataFrame = None) -> DataFrame:
   """BM25 ranked retrieval (Robertson & Walker 1994, the Okapi
   formula): top-k documents per query by the classic saturating-tf
@@ -1417,7 +1419,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *,
 
 
 def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
-                       n_queries: int = 8, k: int = 5,
                        postings: DataFrame = None,
                        docs: DataFrame = None) -> DataFrame:
   """BM25 served FROM the materialized postings index — the
@@ -1459,7 +1460,7 @@ def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
   term_stats = (idx.groupBy('term')
                 .agg(F.first('df').alias('df'), F.first('cf').alias('cf')))
   top_terms = (term_stats.orderBy(F.col('cf').desc(), 'term')
-               .limit(2 * n_queries).collect())
+               .limit(2 * _BM25_QUERIES).collect())
   qrows = [(i // 2, str(r['term'])) for i, r in enumerate(top_terms)]
   if not qrows:
     return spark.createDataFrame([], empty_schema)
@@ -1488,7 +1489,7 @@ def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
   w = Window.partitionBy('query_id').orderBy(
       F.col('score').desc(), 'doc_id')
   return (scored.withColumn('rnk', F.row_number().over(w))
-          .where(F.col('rnk') <= k)
+          .where(F.col('rnk') <= _BM25_K)
           .join(F.broadcast(qnames), 'query_id')
           .select('query_id', 'query', 'doc_id', 'dl',
                   F.round('score', 6).alias('score_r'), 'rnk')
@@ -1624,14 +1625,14 @@ def repetition_stats(spark: SparkSession, sf_dir: str, *,
 
 
 def remove_duplicated_spans(spark: SparkSession, sf_dir: str, *,
-                            n: int = 10, min_count: int = 2,
+                            n: int = 10,
                             min_run_tokens: int = None,
                             sort: bool = True,
                             docs: DataFrame = None) -> DataFrame:
   """Exact substring deduplication (Lee et al. 2022, "Deduplicating
   Training Data Makes Language Models Better", arXiv:2107.06499 §3.1
   ExactSubstr): any word n-gram whose occurrence count across the
-  WHOLE corpus (within-doc repeats included) reaches `min_count` marks
+  WHOLE corpus (within-doc repeats included) reaches 2 marks
   every token position it covers, and covered tokens are removed from
   the document; the surviving tokens are re-joined in order.  The
   paper's suffix-array match is replaced by the shuffle-friendly
@@ -1676,7 +1677,7 @@ def remove_duplicated_spans(spark: SparkSession, sf_dir: str, *,
   base, occ = gram_occurrences(d, n)
 
   dup = (occ.groupBy('gram').count()
-         .where(F.col('count') >= min_count)
+         .where(F.col('count') >= 2)
          .select('gram'))
 
   return strip_covered_tokens(base, occ, dup, n,
@@ -1751,8 +1752,7 @@ def strip_covered_tokens(base: DataFrame, occ: DataFrame,
 
 def bpe_train(spark: SparkSession, sf_dir: str, *,
               n_merges: int = 24, docs: DataFrame = None,
-              special_tokens: tuple = (),
-              checkpoint_interval: int = 4) -> DataFrame:
+              special_tokens: tuple = ()) -> DataFrame:
   """Distributed BPE vocabulary training (Sennrich et al. 2016,
   arXiv:1508.07909): learn the top `n_merges` byte-pair merges from
   corpus word frequencies.  Returns one row per learned merge:
@@ -1773,7 +1773,7 @@ def bpe_train(spark: SparkSession, sf_dir: str, *,
   as the IVF/PQ codebook training), and a map-side fold applying the
   merge.  The argmax collect is the round's ONLY driver job: merge
   application stays lazy and `localCheckpoint(eager=False)` every
-  `checkpoint_interval` rounds truncates lineage while the NEXT
+  4 rounds truncates lineage while the NEXT
   round's argmax materializes it for free — an eager checkpoint per
   round costs a second full job barrier per round, the serial
   fraction the bpe cluster-scaling model measured directly (same
@@ -1825,7 +1825,7 @@ def bpe_train(spark: SparkSession, sf_dir: str, *,
       cur = cur.select(
           _bpe_fold(F.col('syms'), left, right, merged).alias('syms'),
           'cnt')
-      if (rank + 1) % max(checkpoint_interval, 1) == 0:
+      if (rank + 1) % 4 == 0:
         cur = cur.localCheckpoint(eager=False)
         live.append(cur)
         while len(live) > 2:
@@ -1991,7 +1991,6 @@ def build_postings(spark: SparkSession, sf_dir: str, *,
 
 
 def tokenizer_fertility(spark: SparkSession, sf_dir: str, *,
-                        n_merges: int = 24,
                         merges: DataFrame = None,
                         docs: DataFrame = None) -> DataFrame:
   """Per-language tokenizer fertility audit — the multilingual
@@ -2013,7 +2012,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str, *,
   d = (docs if docs is not None
        else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
       .select('doc_id', 'text', 'lang')
-  enc = bpe_encode(spark, sf_dir, n_merges=n_merges, merges=merges,
+  enc = bpe_encode(spark, sf_dir, merges=merges,
                    docs=d.select('doc_id', 'text'))
   dim = d.select('doc_id', 'lang',
                  F.length('text').cast('long').alias('chars'),
@@ -2031,8 +2030,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str, *,
 
 
 def incremental_dedup(spark: SparkSession, sf_dir: str, *,
-                      shingle: int = 3, threshold: float = 0.5,
-                      batch_mod: int = 10,
+                      threshold: float = 0.5,
                       max_shingle_df: int = 0,
                       batch: DataFrame = None,
                       corpus: DataFrame = None) -> DataFrame:
@@ -2044,7 +2042,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str, *,
 
     * ``exact`` — a corpus doc has byte-identical text (match_id =
       lowest such corpus doc_id),
-    * ``near``  — best corpus doc by exact ``shingle``-gram Jaccard ≥
+    * ``near``  — best corpus doc by exact word 3-gram Jaccard ≥
       ``threshold`` (ties broken by lowest corpus doc_id; jac_r =
       jaccard rounded to 4 dp),
     * ``new``   — neither.
@@ -2068,14 +2066,14 @@ def incremental_dedup(spark: SparkSession, sf_dir: str, *,
   0 keeps the operator exact, which is what the oracle verifies.
 
   ``batch``/``corpus`` override the default deterministic split of the
-  documents table (batch = doc_id % batch_mod == 0) — real callers
+  documents table (batch = doc_id % 10 == 0) — real callers
   pass the new increment and the signature store."""
   if (batch is None) != (corpus is None):
     raise ValueError('pass both batch= and corpus=, or neither')
   if batch is None:
     d = _docs(spark, sf_dir).select('doc_id', 'text')
-    batch = d.where(F.pmod('doc_id', F.lit(batch_mod)) == 0)
-    corpus = d.where(F.pmod('doc_id', F.lit(batch_mod)) != 0)
+    batch = d.where(F.pmod('doc_id', F.lit(10)) == 0)
+    corpus = d.where(F.pmod('doc_id', F.lit(10)) != 0)
   batch = batch.select('doc_id', 'text')
   corpus = corpus.select(F.col('doc_id').alias('cid'), 'text')
 
@@ -2084,7 +2082,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str, *,
            .groupBy('doc_id').agg(F.min('cid').alias('match_id')))
 
   def _sh(frame: DataFrame, idcol: str) -> DataFrame:
-    grams = F.array_distinct(word_ngrams(words('text'), shingle))
+    grams = F.array_distinct(word_ngrams(words('text'), 3))
     return frame.select(idcol, F.explode(grams).alias('shingle'))
 
   # shingle ALL batch docs (not just non-exact ones): exact dups are
@@ -2285,7 +2283,6 @@ BOILERPLATE_PARAS = (
 
 
 def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
-                     words_per_para: int = 10,
                      docs: DataFrame = None) -> DataFrame:
   """Paragraph-level exact deduplication (the Dolma / Gopher repeated-
   passage rule: Soldaini et al. 2024, "Dolma", arXiv:2402.00159 §2.3
@@ -2302,7 +2299,7 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
 
   Paragraph structure is synthesized deterministically from the flat
   word-soup corpus (same device as c4_line_clean's lines): the text is
-  chunked into `words_per_para`-word paragraphs and boilerplate
+  chunked into 10-word paragraphs and boilerplate
   paragraph d % 3 of BOILERPLATE_PARAS replaces chunk j of doc d
   whenever (d*13 + j*7) % 9 == 0 (the variant must NOT be keyed on
   (d + j) % 3: the injection condition forces d + j ≡ 0 mod 3, which
@@ -2319,7 +2316,7 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
   same key, both map-side-combinable; the rebuild is one per-doc
   aggregation over bounded paragraph arrays.  No Python, no driver
   collect, no window over the whole corpus."""
-  w = words_per_para
+  w = 10
   blist = ', '.join(f"'{b}'" for b in BOILERPLATE_PARAS)
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
@@ -2439,8 +2436,8 @@ def dedup_doc_lines(spark: SparkSession, sf_dir: str, *,
 
 #: Topic lexicons for domain tagging — keyed on the synthetic corpus
 #: vocabulary so every topic fires on real rows (the judge-visible
-#: non-vacuity rule); a production deployment swaps its own lexicons
-#: via the `topics=` argument.
+#: non-vacuity rule); a production deployment swaps in its own
+#: lexicons here.
 TOPIC_LEXICONS = {
     'db': ('table', 'query', 'join', 'sort', 'merge', 'filter',
            'group', 'agg'),
@@ -2451,7 +2448,6 @@ TOPIC_LEXICONS = {
 
 
 def topic_tagging(spark: SparkSession, sf_dir: str, *,
-                  topics: dict = None,
                   docs: DataFrame = None) -> DataFrame:
   """Lexicon-based topic/domain tagging — the cheap domain classifier
   data-mix pipelines run before allocating per-domain budgets (the
@@ -2467,11 +2463,10 @@ def topic_tagging(spark: SparkSession, sf_dir: str, *,
   Scale shape: the lexicons are literal broadcast arrays inside ONE
   codegen projection — no join, no shuffle (presentation sort aside),
   no Python; at 100 TB this is a free rider on any existing scan, and
-  the `topics=` dict swaps in real lexicons without touching the
+  real lexicons swap in for TOPIC_LEXICONS without touching the
   plan.  array_position on the counts array gives the deterministic
   first-max argmax (the _assign_cells device)."""
-  tl = topics if topics is not None else TOPIC_LEXICONS
-  names = list(tl)
+  names = list(TOPIC_LEXICONS)
   # stage the token array as its own projected column: interpreted
   # higher-order lambdas get no common-subexpression elimination (the
   # _bloom_flat_positions lesson), so embedding split+filter into each
@@ -2488,7 +2483,8 @@ def topic_tagging(spark: SparkSession, sf_dir: str, *,
     return F.size(F.filter('toks',
                            lambda x: F.array_contains(arr, x)))
 
-  counts = [hit_count(ws).alias(f'n_{name}') for name, ws in tl.items()]
+  counts = [hit_count(ws).alias(f'n_{name}')
+            for name, ws in TOPIC_LEXICONS.items()]
   staged = d.select('doc_id', *counts) \
       .withColumn('carr', F.array(*[F.col(f'n_{n}') for n in names]))
   best = F.array_max('carr')
@@ -2520,7 +2516,6 @@ BOILERPLATE_SENTS = (
 
 
 def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
-                  words_per_sent: int = 8,
                   docs: DataFrame = None) -> DataFrame:
   """C4's exact deduplication unit (Raffel et al. 2020 §2.2: "we
   discarded all but one of any three-sentence span occurring more than
@@ -2531,7 +2526,7 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
     doc_id, n_sents, n_kept, n_removed, clean_text.
 
   Sentence structure is synthesized deterministically (the
-  c4_line_clean/dedup_paragraphs device): `words_per_sent`-word
+  c4_line_clean/dedup_paragraphs device): 8-word
   chunks, and sentence block b (= positions 3b..3b+2) of doc d is
   replaced by boilerplate TRIPLE d % 3 of BOILERPLATE_SENTS whenever
   (d*13 + b*7) % 9 == 0 — a run of three identical consecutive
@@ -2546,7 +2541,7 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
   md5(span) + join-back; coverage is a bounded 3-fold explode keyed
   (doc_id, sentence pos) and the rebuild one per-doc aggregation.
   No Python, no windows over the corpus, no driver collect."""
-  w = words_per_sent
+  w = 8
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
   triples = ', '.join(
@@ -2618,8 +2613,6 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
 
 
 def corpus_diff(spark: SparkSession, sf_dir: str, *,
-                removed_mod: int = 13, changed_mod: int = 11,
-                added_mod: int = 17,
                 old: DataFrame = None,
                 new: DataFrame = None) -> DataFrame:
   """Snapshot diff between two corpus versions — the audit step of
@@ -2632,9 +2625,9 @@ def corpus_diff(spark: SparkSession, sf_dir: str, *,
 
   Default synthesis (the planted-PII device — pure doc_id arithmetic
   the DuckDB oracle replays): old = the documents table; new = old
-  minus every doc_id % removed_mod == 0, with ' updated v2' appended
-  to every surviving doc_id % changed_mod == 0, plus re-entries of
-  every doc_id % added_mod == 0 as doc_id + 10_000_000 with ' added'
+  minus every doc_id % 13 == 0, with ' updated v2' appended
+  to every surviving doc_id % 11 == 0, plus re-entries of
+  every doc_id % 17 == 0 as doc_id + 10_000_000 with ' added'
   appended.  A real deployment passes its two snapshot tables via
   `old=` / `new=`.
 
@@ -2647,12 +2640,12 @@ def corpus_diff(spark: SparkSession, sf_dir: str, *,
       .select('doc_id', 'text')
   if new is None:
     did = F.col('doc_id')
-    survivors = (base.where(did % removed_mod != 0)
+    survivors = (base.where(did % 13 != 0)
                  .select('doc_id',
-                         F.when(did % changed_mod == 0,
+                         F.when(did % 11 == 0,
                                 F.concat('text', F.lit(' updated v2')))
                          .otherwise(F.col('text')).alias('text')))
-    added = (base.where(did % added_mod == 0)
+    added = (base.where(did % 17 == 0)
              .select((did + 10_000_000).alias('doc_id'),
                      F.concat('text', F.lit(' added')).alias('text')))
     new = survivors.unionByName(added)
@@ -2670,7 +2663,6 @@ def corpus_diff(spark: SparkSession, sf_dir: str, *,
 
 
 def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
-                          bin_edges: tuple = (32, 64, 128),
                           batch_size: int = 8, n_shards: int = 8,
                           docs: DataFrame = None) -> DataFrame:
   """Sorted-by-length bucketed batching with padding-waste accounting
@@ -2681,7 +2673,8 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
   (pad_waste is exactly the token budget packing would recover).
 
   Assignment contract (deterministic, engine-replicable): bucket =
-  index of the first bin edge >= n_tokens (last bucket open-ended);
+  index of the first bin edge of (32, 64, 128) >= n_tokens (last
+  bucket open-ended);
   within each (shard, bucket), docs order by (n_tokens, doc_id) —
   ascending length is the padding-minimizing order — and fill batches
   of `batch_size` (the trailing partial batch is kept, its waste
@@ -2703,6 +2696,7 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
   d = (docs if docs is not None else _docs(spark, sf_dir)) \
       .select('doc_id', 'text')
   n = F.size(words('text'))
+  bin_edges = (32, 64, 128)
   bucket = F.lit(len(bin_edges))
   for i in range(len(bin_edges) - 1, -1, -1):
     bucket = F.when(n <= bin_edges[i], F.lit(i)).otherwise(bucket)
@@ -2735,8 +2729,6 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
 
 
 def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
-                       noise_num: int = 3, noise_den: int = 20,
-                       span_len: int = 3,
                        docs: DataFrame = None) -> DataFrame:
   """T5 span-corruption data prep (Raffel et al. 2020, §3.1.4 of
   "Exploring the Limits of Transfer Learning..."): mask a fraction of
@@ -2746,9 +2738,9 @@ def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
   the denoising-objective example builder.
 
   Deterministic deviations (documented; T5 samples both): the span
-  COUNT is exact arithmetic — n_spans = max(1, n·noise_num DIV
-  (noise_den·span_len)), i.e. ~15% of tokens at the default 3/20 in
-  spans of FIXED length `span_len` (T5's mean-3 geometric sampling
+  COUNT is exact arithmetic — n_spans = max(1, n·3 DIV (20·3)), i.e.
+  ~15% (3/20) of tokens in spans of FIXED length 3 (T5's mean-3
+  geometric sampling
   replaced by the constant mean) — and span starts are the n_spans
   positions with the smallest md5(doc:pos) hashes (engine-replicable
   hash spread instead of an RNG).  Overlapping/adjacent spans merge
@@ -2774,14 +2766,14 @@ def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
       F.posexplode(toks).alias('pos', 'token'))
 
   # INTEGER division, stated explicitly on both sides: the contract is
-  # n_spans = max(1, (n*noise_num) DIV (noise_den*span_len)) and the
+  # n_spans = max(1, (n*3) DIV (20*3)) and the
   # DuckDB oracle uses true integer // — `div` keeps the whole
   # computation in exact BIGINT arithmetic (floor-of-double was
   # equivalent for realistic n but violated the oracle-shared-
   # arithmetic discipline; length_bucket_batches precedent)
   n_spans = F.greatest(
       F.lit(1).cast('long'),
-      F.expr(f'(n * {noise_num}) div {noise_den * span_len}'))
+      F.expr('(n * 3) div 60'))
   h = F.md5(F.concat(F.col('doc_id').cast('string'), F.lit(':'),
                      F.col('pos').cast('string')))
   wrank = Window.partitionBy('doc_id').orderBy(h, 'pos')
@@ -2791,7 +2783,7 @@ def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
       (F.row_number().over(wrank) <= n_spans).cast('int')
       .alias('is_start'))
   masked = F.max('is_start').over(
-      wpos.rowsBetween(-(span_len - 1), 0))
+      wpos.rowsBetween(-2, 0))
   st2 = staged.select('doc_id', 'n', 'pos', 'token', 'is_start',
                       masked.alias('masked'))
   run_start = ((F.col('masked') == 1)

@@ -264,12 +264,11 @@ def viterbi_segment(word: str, vocab: dict, total: int,
 
 def unigram_encode(spark: SparkSession, sf_dir: str, *,
                    vocab: DataFrame = None, docs: DataFrame = None,
-                   max_piece_len: int = 4,
                    return_tokens: bool = False,
-                   special_tokens: tuple = (),
-                   **train_kw) -> DataFrame:
+                   special_tokens: tuple = ()) -> DataFrame:
   """Tokenize every document with a trained unigram vocabulary (from
-  `unigram_train`, or trained inline with `**train_kw`).
+  `unigram_train`, or trained inline with its defaults), segmenting
+  into pieces no longer than the vocabulary's longest.
 
   Default output is per-doc accounting (doc_id, n_words, n_tokens);
   `return_tokens=True` returns (doc_id, tokens, n_tokens) with corpus
@@ -283,12 +282,12 @@ def unigram_encode(spark: SparkSession, sf_dir: str, *,
       .select('doc_id', 'text')
   if vocab is None:
     vocab = unigram_train(spark, sf_dir, docs=docs,
-                          max_piece_len=max_piece_len,
-                          special_tokens=special_tokens, **train_kw)
+                          special_tokens=special_tokens)
   vrows = vocab.collect()
   vmap = {r['piece']: int(r['em_micro']) for r in vrows}
   total = int(vrows[0]['total_micro']) if vrows else 1
-  mpl = max_piece_len
+  # no longer substring can be a piece, so the DP tries none
+  mpl = max(map(len, vmap), default=1)
   specials = frozenset(special_tokens)
 
   toks = words('text')

@@ -11,6 +11,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 
+#: Rows of the driver-side sample every centroid/codebook trainer reads
+#: (a bounded .limit() scan at any corpus size).
+_TRAIN_LIMIT = 10_000
+#: IVF cells of the operators that share the spherical k-means quantizer.
+_N_CELLS = 16
+#: Vectors the verification planting re-enters as near-dups (the
+#: oracles recompute the same count).
+_N_PLANTED = 40
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
   return spark.read.parquet(f'{sf_dir}/embeddings.parquet')
 
@@ -93,19 +103,17 @@ def _banded_bucket_cols(vec, n_planes: int, bands: int):
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
                              threshold: float = 0.9,
-                             n_planes: int = 12, bands: int = 3,
                              max_bucket_size: int = 0,
                              plant_for_verification: bool = False,
-                             n_planted: int = 40,
-                             plant_eps: float = 0.01) -> DataFrame:
+                             n_planted: int = _N_PLANTED) -> DataFrame:
   """Embedding-cosine near-dup pairs above a threshold, banded-sign-LSH
-  blocked: candidate pairs share at least one of `bands` bucket ids
-  (n_planes/bands sign bits each), exact cosine inside the block.
+  blocked: candidate pairs share at least one of 3 bucket ids (4 sign
+  bits each, of 12 planes), exact cosine inside the block.
 
   Banding (vs a single bucket id) is the multi-probe recall fix: a
   near-dup pair straddling one hyperplane still collides on the other
   band.  The bucket id is the shuffle key — one groupBy instead of a
-  cross join; per-band bucket count 2^(n_planes/bands) bounds the
+  cross join; per-band bucket count 2^4 bounds the
   within-bucket O(n²/buckets) pair work at scale.
 
   On real data the operator reports exactly the pairs present in the
@@ -113,7 +121,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
   gate/test entry points pass `plant_for_verification=True`, which
   PLANTS deterministic near-dups derived from the table itself: the
   first `n_planted` vectors re-enter as vec_id+1_000_000 with
-  `plant_eps` added to every component (cosine ≥ 0.99 to their
+  0.01 added to every component (cosine ≥ 0.99 to their
   originals, ≤ 0.52 to everything else).  The planting is plain
   arithmetic, so the DuckDB oracle recomputes the exact brute-force
   O(n²) pair set independently — the LSH-blocked output must equal it
@@ -137,10 +145,10 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
       F.transform(F.col('embedding'),
                   lambda x: x.cast('double')).alias('e'))
   e = _spread_small_scan(raw, e)
-  u = e.unionByName(_planted(e, n_planted, plant_eps)) \
+  u = e.unionByName(_planted(e, n_planted)) \
       if plant_for_verification else e
 
-  band_cols = _banded_bucket_cols(F.col('e'), n_planes, bands)
+  band_cols = _banded_bucket_cols(F.col('e'), 12, 3)
   stacked = u.select(
       'vec_id', F.explode(F.array(*band_cols)).alias('bucket'))
   grouped = (stacked
@@ -174,18 +182,17 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
 
 
 def ann_topk_lsh(spark: SparkSession, sf_dir: str, *,
-                 query_vec_id: int = 0, k: int = 10,
-                 n_planes: int = 8, bands: int = 2) -> DataFrame:
+                 query_vec_id: int = 0, k: int = 10) -> DataFrame:
   """ANN top-k: probe only the buckets the query lands in (one per
-  band), exact cosine within the probed set.  Banding widens recall —
-  a neighbour straddling one hyperplane still shares the other band's
-  bucket — while each band's 2^(n_planes/bands) buckets keep the probed
-  candidate set ~bands/buckets of the corpus.  Falls back to fewer than
-  k results when the probed buckets are small (the recall/speed
-  tradeoff is the point of the operator)."""
+  band, 2 bands of 4 of 8 sign planes), exact cosine within the probed
+  set.  Banding widens recall — a neighbour straddling one hyperplane
+  still shares the other band's bucket — while each band's 2^4 buckets
+  keep the probed candidate set ~2/16 of the corpus.  Falls back to
+  fewer than k results when the probed buckets are small (the
+  recall/speed tradeoff is the point of the operator)."""
   e = _emb(spark, sf_dir)
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
-  band_cols = _banded_bucket_cols(vec, n_planes, bands)
+  band_cols = _banded_bucket_cols(vec, 8, 2)
   stacked = e.select(
       'vec_id', F.explode(F.array(*band_cols)).alias('bucket'))
   qb = stacked.where(F.col('vec_id') == query_vec_id) \
@@ -211,16 +218,15 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str, *,
 # IVF (inverted-file) ANN — the coarse-quantizer alternative to sign-LSH.
 # ---------------------------------------------------------------------------
 
-def train_ivf_centroids(sample: 'np.ndarray', n_cells: int,
-                        iters: int = 10, seed: int = 7):
+def train_ivf_centroids(sample: 'np.ndarray', n_cells: int):
   """Deterministic spherical k-means on a driver-side sample: seeded
-  init, fixed Lloyd iterations, unit-normalized centroids.  numpy only
+  init, 10 Lloyd iterations, unit-normalized centroids.  numpy only
   — the centroid table is tiny and broadcasts as literals."""
   import numpy as np
   X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-  rng = np.random.default_rng(seed)
+  rng = np.random.default_rng(7)
   C = X[rng.permutation(len(X))[:n_cells]].copy()
-  for _ in range(iters):
+  for _ in range(10):
     assign = np.argmax(X @ C.T, axis=1)
     for c in range(n_cells):
       members = X[assign == c]
@@ -232,27 +238,23 @@ def train_ivf_centroids(sample: 'np.ndarray', n_cells: int,
   return C
 
 
-def ivf_topk(spark: SparkSession, sf_dir: str, *,
-             query_vec_id: int = 0, k: int = 10,
-             n_cells: int = 16, nprobe: int = 4,
-             train_limit: int = 10_000) -> DataFrame:
-  """IVF ANN top-k: a coarse quantizer (spherical k-means over a
-  driver-side sample, deterministic) partitions vectors into n_cells
-  inverted lists; a query probes only its `nprobe` nearest cells and
-  computes exact cosine inside them.
+def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+  """IVF ANN top-k of vec 0: a coarse quantizer (spherical k-means over
+  a driver-side sample, deterministic) partitions vectors into 16
+  inverted lists; the query probes only its 4 nearest cells and
+  computes exact cosine inside them, keeping the top 10.
 
-  Scale shape: training touches a bounded sample (`train_limit` rows —
+  Scale shape: training touches a bounded sample (_TRAIN_LIMIT rows —
   at 100 TB that is a .limit() scan, not a full pass); the per-row cell
   assignment is map-side JVM arithmetic against broadcast centroid
   literals; `cell` is the storage bucketing / shuffle key, and queries
-  read ~nprobe/n_cells of the corpus.  The recall/speed dial is
-  (n_cells, nprobe) — the IVF twin of the LSH (n_planes, bands) dial."""
+  read ~4/16 of the corpus."""
   import numpy as np
   e = _emb(spark, sf_dir)
   sample = np.array(
       [np.asarray(r['embedding'], dtype=np.float64)
-       for r in e.select('embedding').limit(train_limit).collect()])
-  C = train_ivf_centroids(sample, n_cells)
+       for r in e.select('embedding').limit(_TRAIN_LIMIT).collect()])
+  C = train_ivf_centroids(sample, _N_CELLS)
 
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
   nvec = F.transform(vec, lambda x: x / _norm(vec))
@@ -262,13 +264,13 @@ def ivf_topk(spark: SparkSession, sf_dir: str, *,
   assigned = e.select('vec_id', cell.alias('cell'))
 
   q_emb = np.asarray(
-      e.where(F.col('vec_id') == query_vec_id)
+      e.where(F.col('vec_id') == 0)
       .select('embedding').head()['embedding'], dtype=np.float64)
   qn = q_emb / np.linalg.norm(q_emb)
-  probe = [int(c) + 1 for c in np.argsort(-(C @ qn))[:nprobe]]
+  probe = [int(c) + 1 for c in np.argsort(-(C @ qn))[:4]]
 
   cand = assigned.where(F.col('cell').isin(probe)).select('vec_id')
-  q = (e.where(F.col('vec_id') == query_vec_id)
+  q = (e.where(F.col('vec_id') == 0)
        .select(F.col('vec_id').alias('q_id'), vec.alias('q')))
   scored = (e.join(cand, 'vec_id')
             .crossJoin(F.broadcast(q))
@@ -278,7 +280,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str, *,
                      / (_norm(vec) * _norm(F.col('q'))))
                     .alias('cosine')))
   return (scored.orderBy(F.desc(F.round('cosine', 6)), 'vec_id')
-          .limit(k)
+          .limit(10)
           .select('vec_id', F.round('cosine', 4).alias('cosine_r')))
 
 
@@ -286,12 +288,11 @@ def ivf_topk(spark: SparkSession, sf_dir: str, *,
 # Product quantization (PQ) ANN — the memory-bounded scale path.
 # ---------------------------------------------------------------------------
 
-def train_pq_codebooks(sample: 'np.ndarray', m: int = 8, ksub: int = 16,
-                       iters: int = 10, seed: int = 11):
+def train_pq_codebooks(sample: 'np.ndarray', m: int = 8, ksub: int = 16):
   """Deterministic per-subspace Euclidean k-means over a driver-side
   sample of unit-normalized vectors: the d-dim space splits into m
   contiguous subspaces of d/m dims, each learning its own ksub-centroid
-  codebook (seeded init, fixed Lloyd iterations).  Returns an
+  codebook (seeded init, 10 Lloyd iterations).  Returns an
   (m, ksub, d/m) array — tiny, broadcasts as literals."""
   import numpy as np
   X = sample / np.linalg.norm(sample, axis=1, keepdims=True)
@@ -299,9 +300,9 @@ def train_pq_codebooks(sample: 'np.ndarray', m: int = 8, ksub: int = 16,
   books = []
   for j in range(m):
     Xs = X[:, j * dsub:(j + 1) * dsub]
-    rng = np.random.default_rng(seed + j)
+    rng = np.random.default_rng(11 + j)
     C = Xs[rng.permutation(len(Xs))[:ksub]].copy()
-    for _ in range(iters):
+    for _ in range(10):
       d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(-1)
       assign = np.argmin(d2, axis=1)
       for c in range(ksub):
@@ -312,13 +313,10 @@ def train_pq_codebooks(sample: 'np.ndarray', m: int = 8, ksub: int = 16,
   return np.stack(books)
 
 
-def pq_topk(spark: SparkSession, sf_dir: str, *,
-            query_vec_id: int = 0, k: int = 10, m: int = 8,
-            ksub: int = 16, shortlist: int = 40,
-            train_limit: int = 10_000) -> DataFrame:
-  """PQ ANN top-k with asymmetric distance computation (ADC) and an
-  exact-cosine refine, per the public product-quantization literature
-  (Jegou et al., PAMI 2011).
+def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+  """PQ ANN top-10 of vec 0 with asymmetric distance computation (ADC)
+  and an exact-cosine refine, per the public product-quantization
+  literature (Jegou et al., PAMI 2011).
 
   Each unit-normalized vector compresses to m small codes (one byte
   each at ksub<=256) by per-subspace nearest-centroid assignment; a
@@ -331,15 +329,14 @@ def pq_topk(spark: SparkSession, sf_dir: str, *,
   code column is what you'd persist — 32x smaller than 64 x float32, it
   fits in memory at corpus sizes where raw embeddings cannot); query
   scoring is a scan of the code table with JVM-side lookups plus an
-  exact re-rank that reads only `shortlist` full vectors.  The
-  recall/speed dial is (m, ksub, shortlist)."""
+  exact re-rank that reads only a 40-row shortlist of full vectors."""
   import numpy as np
   e = _emb(spark, sf_dir)
   sample = np.array(
       [np.asarray(r['embedding'], dtype=np.float64)
-       for r in e.select('embedding').limit(train_limit).collect()])
-  B = train_pq_codebooks(sample, m=m, ksub=ksub)
-  dsub = B.shape[2]
+       for r in e.select('embedding').limit(_TRAIN_LIMIT).collect()])
+  B = train_pq_codebooks(sample)
+  m, ksub, dsub = B.shape
 
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
   # staged projections: norm, then the normalized vector, then the
@@ -366,7 +363,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, *,
   coded = base.select('vec_id', F.array(*codes).alias('codes'))
 
   q_emb = np.asarray(
-      e.where(F.col('vec_id') == query_vec_id)
+      e.where(F.col('vec_id') == 0)
       .select('embedding').head()['embedding'], dtype=np.float64)
   qn = q_emb / np.linalg.norm(q_emb)
   lut = [[sum((float(qn[j * dsub + i]) - float(B[j, c, i])) ** 2
@@ -377,12 +374,12 @@ def pq_topk(spark: SparkSession, sf_dir: str, *,
       F.zip_with(F.col('codes'), lut_col,
                  lambda c, row: F.element_at(row, c + 1)),
       F.lit(0.0), lambda acc, v: acc + v)
-  short = (coded.where(F.col('vec_id') != query_vec_id)
+  short = (coded.where(F.col('vec_id') != 0)
            .select('vec_id', F.round(adc, 6).alias('adc_r'))
            .orderBy('adc_r', 'vec_id')
-           .limit(shortlist))
+           .limit(40))
 
-  q = (e.where(F.col('vec_id') == query_vec_id)
+  q = (e.where(F.col('vec_id') == 0)
        .select(F.col('vec_id').alias('q_id'), vec.alias('q')))
   scored = (e.join(short, 'vec_id')
             .crossJoin(F.broadcast(q))
@@ -392,7 +389,7 @@ def pq_topk(spark: SparkSession, sf_dir: str, *,
                      / (_norm(vec) * _norm(F.col('q'))))
                     .alias('cosine')))
   return (scored.orderBy(F.desc(F.round('cosine', 6)), 'vec_id')
-          .limit(k)
+          .limit(10)
           .select('vec_id', F.round('cosine', 4).alias('cosine_r')))
 
 
@@ -406,23 +403,20 @@ from blueprint_oss_spark.ops.common import \
     spread_small_scan as _spread_small_scan, words  # noqa: E402
 
 
-def _planted(e: DataFrame, n_planted: int, plant_eps: float) -> DataFrame:
+def _planted(e: DataFrame, n_planted: int = _N_PLANTED) -> DataFrame:
   """Deterministic near-dup planting shared by the embedding dedup
   operators: the first `n_planted` vectors re-enter as vec_id+1_000_000
-  with `plant_eps` added to every component (cosine >= 0.99 to their
+  with 0.01 added to every component (cosine >= 0.99 to their
   originals on this corpus, <= ~0.52 to everything else)."""
   return e.where(F.col('vec_id') < n_planted).select(
       (F.col('vec_id') + 1_000_000).alias('vec_id'),
-      F.transform(F.col('e'), lambda v: v + plant_eps).alias('e'))
+      F.transform(F.col('e'), lambda v: v + 0.01).alias('e'))
 
 
 def semantic_dedup(spark: SparkSession, sf_dir: str, *,
-                   threshold: float = 0.9, n_cells: int = 16,
-                   train_limit: int = 10_000,
+                   threshold: float = 0.9, n_cells: int = _N_CELLS,
                    max_bucket_size: int = 0,
                    plant_for_verification: bool = False,
-                   n_planted: int = 40,
-                   plant_eps: float = 0.01,
                    sort: bool = True) -> DataFrame:
   """SemDeDup-style semantic deduplication (Abbas et al. 2023,
   arXiv:2303.09540): spherical k-means clusters the embedding space,
@@ -436,7 +430,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str, *,
   step the SemDeDup paper applies before pretraining.
 
   Scale shape: centroid training touches a bounded `.limit()` sample
-  (driver-side numpy on <=train_limit rows — at 100 TB a .limit()
+  (driver-side numpy on <=_TRAIN_LIMIT rows — at 100 TB a .limit()
   scan, not a full pass); per-row cell assignment is map-side JVM
   arithmetic against broadcast centroid literals; the ONE substantive
   shuffle keys on `cell`, and the quadratic pair work is bounded per
@@ -466,12 +460,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str, *,
       F.transform(F.col('embedding'),
                   lambda x: x.cast('double')).alias('e'))
   e = _spread_small_scan(raw, e)
-  u = e.unionByName(_planted(e, n_planted, plant_eps)) \
-      if plant_for_verification else e
+  u = e.unionByName(_planted(e)) if plant_for_verification else e
 
   sample = np.array(
       [np.asarray(r['embedding'], dtype=np.float64)
-       for r in raw.select('embedding').limit(train_limit).collect()])
+       for r in raw.select('embedding').limit(_TRAIN_LIMIT).collect()])
   C = train_ivf_centroids(sample, n_cells)
 
   assigned = _assign_cells(u, C).select('vec_id', 'cell')
@@ -515,13 +508,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str, *,
 
 
 def semantic_decontaminate(spark: SparkSession, sf_dir: str, *,
-                           threshold: float = 0.9,
-                           n_planes: int = 12, bands: int = 3,
-                           eval_mod: int = 10,
                            max_bucket_size: int = 0,
-                           plant_for_verification: bool = False,
-                           n_planted: int = 40,
-                           plant_eps: float = 0.01) -> DataFrame:
+                           plant_for_verification: bool = False
+                           ) -> DataFrame:
   """Embedding-level eval-set decontamination — the semantic complement
   of the n-gram `decontaminate` operator (the modern LLM-pipeline rule:
   drop training documents whose embedding is too close to ANY eval-set
@@ -529,12 +518,12 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str, *,
   misses; e.g. the cosine-similarity decontamination described for
   phi/Llama-style data pipelines).
 
-  The eval dimension is the `vec_id % eval_mod == 0` slice of the
+  The eval dimension is the `vec_id % 10 == 0` slice of the
   embeddings table (an in-table split, same device as
-  bloom_decontaminate's eval_mod — a real deployment passes its eval
+  bloom_decontaminate's eval split — a real deployment passes its eval
   embeddings as the second table; the seam is the WHERE clause).
   Every TRAIN vector gets one verdict row:
-    vec_id, contaminated (1 iff round(cos, 6) >= threshold for some
+    vec_id, contaminated (1 iff round(cos, 6) >= 0.9 for some
     eval vector), best_eval_id / best_cos_r (the highest-cosine
     contaminating eval vector, min eval_id on ties; NULL when not
     contaminated).  Best-match is only reported for contaminated rows
@@ -545,8 +534,8 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str, *,
     colliding best the global best.
 
   Scale shape: candidate generation is banded sign-LSH (the
-  embedding_near_dup_pairs machinery — `bands` buckets of
-  n_planes/bands sign bits, recall fixed by multi-probe banding), so
+  embedding_near_dup_pairs machinery — 3 buckets of 4 sign bits,
+  recall fixed by multi-probe banding), so
   the train side NEVER cross-joins the eval side: the eval dimension
   is grouped per bucket (one substantive shuffle over the eval slice —
   the SMALL side), train rows probe it with a per-bucket equi-join,
@@ -558,8 +547,8 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str, *,
   otherwise fans every colliding train row out k ways.
 
   Verification planting mirrors embedding_near_dup_pairs (default OFF):
-  `plant_for_verification=True` re-enters the first `n_planted`
-  vectors as eval-side near-copies (vec_id+1_000_000, +plant_eps per
+  `plant_for_verification=True` re-enters the first 40
+  vectors as eval-side near-copies (vec_id+1_000_000, +0.01 per
   component), so planted originals that are NOT themselves eval rows
   must come back contaminated — and the DuckDB oracle recomputes the
   exact brute-force train x eval cosine matrix independently, proving
@@ -570,14 +559,14 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str, *,
       F.transform(F.col('embedding'),
                   lambda x: x.cast('double')).alias('e'))
   e = _spread_small_scan(raw, e)
-  is_eval = F.pmod(F.col('vec_id'), F.lit(eval_mod)) == 0
+  is_eval = F.pmod(F.col('vec_id'), F.lit(10)) == 0
   ev = e.where(is_eval)
   if plant_for_verification:
-    ev = ev.unionByName(_planted(e, n_planted, plant_eps))
+    ev = ev.unionByName(_planted(e))
   tr = e.where(~is_eval)
 
   def stacked(side, id_name):
-    band_cols = _banded_bucket_cols(F.col('e'), n_planes, bands)
+    band_cols = _banded_bucket_cols(F.col('e'), 12, 3)
     return side.select(
         F.col('vec_id').alias(id_name),
         F.explode(F.array(*band_cols)).alias('bucket'))
@@ -620,7 +609,7 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str, *,
                               F.col('cos4')))
                .alias('b')))
   contaminated = F.coalesce(
-      (F.col('b.cos6') >= threshold).cast('int'), F.lit(0))
+      (F.col('b.cos6') >= 0.9).cast('int'), F.lit(0))
   return (tr.select(F.col('vec_id'))
           .join(best, tr['vec_id'] == best['train_id'], 'left')
           .select('vec_id',
@@ -660,8 +649,7 @@ def _assign_cells(u: DataFrame, C) -> DataFrame:
 
 
 def cluster_balanced_select(spark: SparkSession, sf_dir: str, *,
-                            n_cells: int = 16, per_cell: int = 20,
-                            train_limit: int = 10_000) -> DataFrame:
+                            per_cell: int = 20) -> DataFrame:
   """Prototype-based cluster-balanced data selection (Sorscher et al.
   2022, "Beyond neural scaling laws: beating power law scaling via
   data pruning", arXiv:2206.14486: cluster the embedding space, score
@@ -677,7 +665,7 @@ def cluster_balanced_select(spark: SparkSession, sf_dir: str, *,
   IVF/SemDeDup operators already use; per-row assignment is map-side
   JVM arithmetic against broadcast centroid literals; the ONE shuffle
   is the per-cell ranking window, partitioned by cell — at 100 TB
-  n_cells is tens of thousands (the paper's regime), so cells vastly
+  the cell count is tens of thousands (the paper's regime), so cells vastly
   outnumber executors and the window parallelizes; no per-cell
   collect, no quadratic work anywhere (this is the selection
   complement of semantic_dedup: same cells, linear scoring instead of
@@ -697,8 +685,8 @@ def cluster_balanced_select(spark: SparkSession, sf_dir: str, *,
   e = _spread_small_scan(raw, e)
   sample = np.array(
       [np.asarray(r['embedding'], dtype=np.float64)
-       for r in raw.select('embedding').limit(train_limit).collect()])
-  C = train_ivf_centroids(sample, n_cells)
+       for r in raw.select('embedding').limit(_TRAIN_LIMIT).collect()])
+  C = train_ivf_centroids(sample, _N_CELLS)
 
   w = Window.partitionBy('cell').orderBy(F.asc('cos_c'), F.asc('vec_id'))
   return (_assign_cells(e, C)
@@ -709,13 +697,13 @@ def cluster_balanced_select(spark: SparkSession, sf_dir: str, *,
 
 
 def hard_negative_mining(spark: SparkSession, sf_dir: str, *,
-                         k: int = 3, anchor_mod: int = 50) -> DataFrame:
+                         k: int = 3) -> DataFrame:
   """Hard-negative mining for contrastive / metric-learning training
   data (the in-batch-negatives upgrade used by dense-retriever
   pipelines, e.g. Xiong et al. 2021 ANCE, arXiv:2007.00808: the most
   informative negatives for an anchor are the highest-similarity
   examples of a DIFFERENT label).  For every anchor (the deterministic
-  `vec_id % anchor_mod == 0` slice — a real deployment passes its
+  `vec_id % 50 == 0` slice — a real deployment passes its
   anchor/query table; the seam is the WHERE clause), report the top-k
   highest-cosine vectors whose label differs:
     anchor_id, anchor_label, rnk (1 = hardest), neg_id, neg_label,
@@ -739,7 +727,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str, *,
   from scratch."""
   e = _emb(spark, sf_dir)
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
-  anchors = (e.where(F.pmod(F.col('vec_id'), F.lit(anchor_mod)) == 0)
+  anchors = (e.where(F.pmod(F.col('vec_id'), F.lit(50)) == 0)
              .select(F.col('vec_id').alias('anchor_id'),
                      F.col('label').alias('anchor_label'),
                      vec.alias('a')))
@@ -775,7 +763,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str, *,
 
 
 def bitext_mine(spark: SparkSession, sf_dir: str, *,
-                k: int = 4, src_mod: int = 5,
+                k: int = 4,
                 threshold_num: int = 21,
                 threshold_den: int = 20,
                 emb: DataFrame = None) -> DataFrame:
@@ -792,7 +780,7 @@ def bitext_mine(spark: SparkSession, sf_dir: str, *,
   normalization that suppresses hubness (a y that is close to
   EVERYTHING scores high raw cosine against every x; dividing by its
   neighborhood average cancels that).  The two sides are the
-  deterministic `vec_id % src_mod == 1` split of the embeddings table
+  deterministic `vec_id % 5 == 1` split of the embeddings table
   (source = matches, target = the rest; a real deployment passes the
   two languages' embedding tables — the seam is the WHERE clause).
 
@@ -838,7 +826,7 @@ def bitext_mine(spark: SparkSession, sf_dir: str, *,
   the seam synthetic-hubness tests use."""
   raw = emb if emb is not None else _emb(spark, sf_dir)
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
-  is_src = F.pmod(F.col('vec_id'), F.lit(src_mod)) == 1
+  is_src = F.pmod(F.col('vec_id'), F.lit(5)) == 1
   src = (raw.where(is_src)
          .select(F.col('vec_id').alias('src_id'), vec.alias('s')))
   tgt = _spread_small_scan(
@@ -1120,7 +1108,6 @@ def kmeans_train(spark: SparkSession, sf_dir: str, *,
 
 
 def kmeans_assign(spark: SparkSession, sf_dir: str, *,
-                  n_cells: int = 16, iters: int = 4,
                   model=None,
                   embeddings: DataFrame = None) -> DataFrame:
   """Final-model cell assignment for every vector: (vec_id, label,
@@ -1128,10 +1115,10 @@ def kmeans_assign(spark: SparkSession, sf_dir: str, *,
   and cos_r the round-6 cosine to it (vectors are unit-normalized, so
   the pinned dot fold IS the cosine).  One codegen projection over the
   scan — zero shuffle, zero Python (pinned by test); the k×d model is
-  literal-baked exactly like pca_project."""
+  literal-baked exactly like pca_project.  Without a `model`, trains
+  kmeans_train's default model first."""
   if model is None:
-    model, _ = kmeans_train(spark, sf_dir, n_cells=n_cells,
-                            iters=iters, embeddings=embeddings)
+    model, _ = kmeans_train(spark, sf_dir, embeddings=embeddings)
   e = (embeddings if embeddings is not None
        else _emb(spark, sf_dir))
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
@@ -1158,8 +1145,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str, *,
 
 
 def ann_eval(spark: SparkSession, sf_dir: str, *,
-             query_mod: int = 29, k: int = 10,
-             n_planes: int = 8, bands: int = 2,
+             bands: int = 2,
              embeddings: DataFrame = None,
              materialize: bool = True) -> DataFrame:
   """Retrieval-quality evaluation of the banded sign-LSH index against
@@ -1170,7 +1156,8 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
   (ann_topk_lsh's machinery, multi-query), and the metrics are their
   per-query set overlap.
 
-  Query sample = `vec_id % query_mod == 0` (a real deployment passes
+  k = 10 and the 8 sign planes of ann_topk_lsh, in `bands` bands.
+  Query sample = `vec_id % 29 == 0` (a real deployment passes
   its held-out query table; the seam is the WHERE clause).  Ground
   truth over a SAMPLED query set is exactly how production ANN eval
   works at corpus scale — the exact top-k is per-query brute force,
@@ -1210,7 +1197,7 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
   probe = _spread_small_scan(
       e, e.select('vec_id', vec.alias('v')))
-  qs = (e.where(F.pmod(F.col('vec_id'), F.lit(query_mod)) == 0)
+  qs = (e.where(F.pmod(F.col('vec_id'), F.lit(29)) == 0)
         .select(F.col('vec_id').alias('q_id'), vec.alias('q')))
 
   # ground truth: exact cosine per (row, query), per-query top-k —
@@ -1226,7 +1213,7 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
             .select('q_id', 'vec_id', cos6.alias('cos6')))
   w = Window.partitionBy('q_id').orderBy(F.desc('cos6'), 'vec_id')
   gt = (scored.withColumn('rnk', F.row_number().over(w))
-        .where(F.col('rnk') <= k))
+        .where(F.col('rnk') <= 10))
   if materialize:
     gt = gt.localCheckpoint(eager=True)
 
@@ -1236,7 +1223,7 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
   # cost, never the brute-force product (that is the point of the
   # index; joining candidates onto the pre-scored cross join would
   # silently re-pay it)
-  band_cols = _banded_bucket_cols(F.col('v'), n_planes, bands)
+  band_cols = _banded_bucket_cols(F.col('v'), 8, bands)
   stacked = probe.select(
       'vec_id', 'v', F.explode(F.array(*band_cols)).alias('bucket'))
   qb = (stacked.join(F.broadcast(qs.select('q_id')),
@@ -1255,7 +1242,7 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
          .groupBy('q_id', 'vec_id')
          .agg(F.max('cos6').alias('cos6'))
          .withColumn('ann_rnk', F.row_number().over(w))
-         .where(F.col('ann_rnk') <= k))
+         .where(F.col('ann_rnk') <= 10))
   if materialize:
     ann = ann.localCheckpoint(eager=True)
 
@@ -1280,13 +1267,12 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
 
 
 def cluster_topics(spark: SparkSession, sf_dir: str, *,
-                   k_terms: int = 5,
                    assignments: DataFrame = None,
                    docs: DataFrame = None) -> DataFrame:
   """Cluster labeling — the inspection report every embedding-cluster
   pipeline (SemDeDup, Dolma's quality clusters, topic-balanced
   sampling) produces before trusting its cells: for each k-means cell,
-  the top `k_terms` most frequent non-stopword terms of its member
+  the top 5 most frequent non-stopword terms of its member
   documents, with global context per term (corpus-wide count and how
   many cells surface it — a term appearing in every cell is corpus
   boilerplate, not a topic).
@@ -1299,7 +1285,7 @@ def cluster_topics(spark: SparkSession, sf_dir: str, *,
   Scale shape: one doc_id equi-join, one map-side-combinable groupBy
   keyed (cell, term) — the word-count shape, hot terms absorbed in
   partial aggregation — then the per-cell top-k is a rank window
-  whose rnk <= k_terms filter pushes down as WindowGroupLimit on both
+  whose rnk <= 5 filter pushes down as WindowGroupLimit on both
   exchange sides.  The global-context rollup reads the (cell, term)
   frame, NOT the corpus (localCheckpointed first: two aggregation
   trees over one subtree otherwise re-run the corpus scan twice — the
@@ -1325,7 +1311,7 @@ def cluster_topics(spark: SparkSession, sf_dir: str, *,
         .localCheckpoint(eager=True))
   w = Window.partitionBy('cell').orderBy(F.desc('n_in_cell'), 'term')
   top = (tc.withColumn('rnk', F.row_number().over(w))
-         .where(F.col('rnk') <= k_terms))
+         .where(F.col('rnk') <= 5))
   ctx = (tc.groupBy('term')
          .agg(F.sum('n_in_cell').cast('long').alias('n_global'),
               F.count(F.lit(1)).cast('long').alias('n_cells_with')))

@@ -301,15 +301,14 @@ def job_transform(root: Optional[Node], transform, **extract_kwargs):
   return lambda part: extract_documents(part, root, **extract_kwargs)
 
 
-def spans_from_documents(docs: DataFrame, words_per_line: int = 8,
-                         page_lines: int = 64) -> DataFrame:
+def spans_from_documents(docs: DataFrame) -> DataFrame:
   """Synthesize an interleaved spans table from a raw text corpus
   (e.g. the driver's `documents` table) with pure Catalyst transforms —
   tokenize, lay out on a fixed grid, pack offsets.
 
   This is the bulk path for turning 100 TB of raw text into the engine's
   input format: split → posexplode → window-free arithmetic layout (word
-  k goes to line k//words_per_line, column (k%words_per_line)*16), then
+  k goes to line k//8, column (k%8)*16, 64 lines a page), then
   collect back per doc.  One shuffle (the groupBy doc_id).
 
   Words longer than a grid cell are TRUNCATED to col_width-1 chars, not
@@ -317,6 +316,8 @@ def spans_from_documents(docs: DataFrame, words_per_line: int = 8,
   at 100 TB scale.  Every nonempty input token round-trips to exactly
   one span.
   """
+  words_per_line = 8
+  lines_per_page = 64
   col_width = 16
   line_shift = 256
   page_shift = 2 ** 20
@@ -327,7 +328,6 @@ def spans_from_documents(docs: DataFrame, words_per_line: int = 8,
                   .alias('pos', 'word'))
           .where(F.length('word') > 0)
           .withColumn('word', F.substring('word', 1, col_width - 1)))
-  lines_per_page = page_lines
   toks = toks.select(
       'doc_id',
       F.struct(

@@ -31,17 +31,16 @@ date/source partitions first and bucket WITHIN partitions.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, name: str, *,
                    bucket_by: str, n_buckets: int,
-                   sort_by: Optional[Sequence[str]] = None,
-                   path: Optional[str] = None,
-                   mode: str = 'overwrite') -> None:
-  """Persist `df` as a bucketed (and optionally sorted) catalog table.
+                   path: Optional[str] = None) -> None:
+  """Persist `df` as a bucketed catalog table, each bucket sorted on
+  the bucket key (an existing table is overwritten).
 
   `path` makes it an external table (tests point this at tmp dirs; a
   production deployment points it at the object-store prefix).  The
@@ -56,16 +55,16 @@ def write_bucketed(df: DataFrame, name: str, *,
   # write task holds exactly one bucket.  This is the write-side
   # shuffle the layout trades for all the read-side ones.
   df = df.repartition(n_buckets, bucket_by)
-  w = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-  w = w.sortBy(*(sort_by or [bucket_by]))
+  w = df.write.mode('overwrite').bucketBy(n_buckets, bucket_by) \
+      .sortBy(bucket_by)
   if path is not None:
     w = w.option('path', path)
   w.saveAsTable(name)
 
 
 def co_located_join(spark: SparkSession, left: str, right: str,
-                    on: str, how: str = 'inner') -> DataFrame:
-  """Join two co-bucketed catalog tables on their bucket key.
+                    on: str) -> DataFrame:
+  """Inner-join two co-bucketed catalog tables on their bucket key.
 
   This is a plain DataFrame join — the zero-shuffle plan comes from
   the tables' layout, not from hints.  Callers should assert the plan
@@ -80,15 +79,14 @@ def co_located_join(spark: SparkSession, left: str, right: str,
   sorted file, which write_bucketed guarantees."""
   lt = spark.table(left)
   rt = spark.table(right)
-  return lt.join(rt, on, how)
+  return lt.join(rt, on)
 
 
 def write_time_partitioned(df: DataFrame, path: str, *,
-                           ts_col: str = 'ts',
-                           granularity: str = 'day',
-                           partition_col: str = 'part_date',
-                           mode: str = 'overwrite') -> None:
+                           granularity: str = 'day') -> None:
   """Time-partitioned layout: the directory structure IS the index.
+  The `ts` column, formatted per `granularity`, becomes the partition
+  column `part_date`.
 
   The second layout rule for the 10^12-doc store (next to
   `write_bucketed`'s join co-location): partition the fact table by
@@ -121,16 +119,16 @@ def write_time_partitioned(df: DataFrame, path: str, *,
          'hour': 'yyyy-MM-dd-HH'}.get(granularity)
   if fmt is None:
     raise ValueError(f'unknown granularity: {granularity!r}')
-  # DYNAMIC partition overwrite: mode='overwrite' replaces only the
+  # DYNAMIC partition overwrite: the overwrite replaces only the
   # partitions present in `df` — the incremental-ingest contract the
   # docstring advertises (re-land yesterday's crawl, history
   # untouched).  Spark's default STATIC overwrite would delete the
   # whole table root first, silently destroying every prior day;
   # pinned by test (re-landing one day leaves the other 29 intact).
-  (df.withColumn(partition_col, F.date_format(F.col(ts_col), fmt))
-     .write.mode(mode)
+  (df.withColumn('part_date', F.date_format(F.col('ts'), fmt))
+     .write.mode('overwrite')
      .option('partitionOverwriteMode', 'dynamic')
-     .partitionBy(partition_col).parquet(path))
+     .partitionBy('part_date').parquet(path))
 
 
 def read_time_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -143,8 +141,7 @@ def read_time_partitioned(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_sorted(df: DataFrame, path: str, *,
-                 sort_col: str, n_files: int = 8,
-                 mode: str = 'overwrite') -> None:
+                 sort_col: str, n_files: int = 8) -> None:
   """Range-sorted layout: the third layout rule (after bucketing for
   join co-location and date partitioning for time pruning) — global
   range-partition + within-file sort on the dominant range-filter key,
@@ -153,7 +150,8 @@ def write_sorted(df: DataFrame, path: str, *,
   the backfill / resume / point-lookup shape) then skips every file
   and row group whose [min, max] misses the range — parquet readers
   (Spark's pushed filters, and any engine reading the same files)
-  prune from footer stats without touching data pages.  This is
+  prune from footer stats without touching data pages (an existing
+  `path` is overwritten).  This is
   single-key Z-ordering; for two concurrent range keys, interleave
   bits into a computed column and sort on that.
 
@@ -165,4 +163,4 @@ def write_sorted(df: DataFrame, path: str, *,
     raise ValueError(f'n_files must be positive, got {n_files}')
   (df.repartitionByRange(n_files, sort_col)
      .sortWithinPartitions(sort_col)
-     .write.mode(mode).parquet(path))
+     .write.mode('overwrite').parquet(path))

@@ -265,7 +265,6 @@ def assemble_multipart_stream(parts_stream: DataFrame, *,
 
 
 def dedup_span_stream(stream_df: DataFrame, *,
-                      ts_col: str = 'ts',
                       watermark: str = '10 minutes') -> DataFrame:
   """Streaming exact dedup for at-least-once sources: duplicate
   deliveries of the same document content (producer retries, replayed
@@ -275,7 +274,7 @@ def dedup_span_stream(stream_df: DataFrame, *,
   Why this shape at 100 TB: plain `dropDuplicates` on a stream keeps
   one state row per key FOREVER — unbounded state on a continuous
   ingest.  The watermark variant evicts a key's state once event time
-  passes `watermark`, bounding state to the duplicate-delivery horizon
+  (`ts`) passes `watermark`, bounding state to the duplicate-delivery horizon
   (retries arrive within minutes, not days).  The content hash is
   computed map-side from the canonical JSON of the span array, so the
   stateful operator shuffles only (hash, row) — the same
@@ -286,22 +285,22 @@ def dedup_span_stream(stream_df: DataFrame, *,
       F.md5(F.concat_ws('\x00', F.col('doc_id').cast('string'),
                         F.to_json(F.col('spans')))))
   return (hashed
-          .withWatermark(ts_col, watermark)
+          .withWatermark('ts', watermark)
           .dropDuplicatesWithinWatermark(['content_hash']))
 
 
 def windowed_extraction_metrics(out_stream: DataFrame, *,
-                                ts_col: str = 'ts',
-                                watermark: str = '30 seconds',
-                                window: str = '1 minute') -> DataFrame:
-  """Event-time windowed extraction-quality metrics with a watermark:
-  docs, error count, mean per-doc latency per window.  Late rows inside
+                                watermark: str = '30 seconds'
+                                ) -> DataFrame:
+  """Event-time (`ts`) windowed extraction-quality metrics with a
+  watermark: docs, error count, mean per-doc latency per 1-minute
+  tumbling window.  Late rows inside
   the watermark update their (correct) window; state for closed windows
   is evicted — the standard late-data pattern for a 100 TB ingest
   pipeline's health dashboard."""
   return (out_stream
-          .withWatermark(ts_col, watermark)
-          .groupBy(F.window(F.col(ts_col), window))
+          .withWatermark('ts', watermark)
+          .groupBy(F.window(F.col('ts'), '1 minute'))
           .agg(F.count(F.lit(1)).alias('docs'),
                F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
                .alias('errors'),
@@ -309,18 +308,16 @@ def windowed_extraction_metrics(out_stream: DataFrame, *,
 
 
 def sessionized_doc_activity(out_stream: DataFrame, *,
-                             ts_col: str = 'ts',
-                             gap: str = '5 minutes',
                              watermark: str = '30 seconds') -> DataFrame:
   """Session-window aggregation over the extraction output: activity
-  bursts separated by more than `gap` become separate sessions (dynamic
-  windows, vs the fixed tumbling windows of
+  bursts (by `ts`) separated by more than 5 minutes become separate
+  sessions (dynamic windows, vs the fixed tumbling windows of
   windowed_extraction_metrics).  The watermark closes sessions once no
   in-order row can extend them — the state-eviction contract that keeps
   a continuous 100 TB ingest's session state bounded."""
   return (out_stream
-          .withWatermark(ts_col, watermark)
-          .groupBy(F.session_window(F.col(ts_col), gap))
+          .withWatermark('ts', watermark)
+          .groupBy(F.session_window(F.col('ts'), '5 minutes'))
           .agg(F.count(F.lit(1)).alias('docs'),
                F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
                .alias('errors')))

@@ -3,6 +3,8 @@
 entry on Spark AND its oracle_sql() in DuckDB over the same sf dir,
 then compare rows / column names / exact values (rows and columns
 sorted, like the driver's value-hash).  Exit nonzero on any mismatch.
+Each status line carries a digest of the sorted Spark rows, so two
+checkouts compare bit for bit with one diff of their outputs.
 
 Usage: python scripts/check_correctness.py [--sf-dir /root/testdata/sf0.01]
 """
@@ -10,6 +12,7 @@ Usage: python scripts/check_correctness.py [--sf-dir /root/testdata/sf0.01]
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import math
 import sys
@@ -76,6 +79,9 @@ def main() -> None:
       s_cols = sdf.columns
       s_rows = [tuple(r) for r in sdf.collect()]
       rec['spark_rows'] = len(s_rows)
+      sk_cols, sk = frame_key(s_cols, s_rows)
+      rec['digest'] = hashlib.sha256(
+          repr((sk_cols, sk)).encode()).hexdigest()[:16]
       sql = oracles.get(name)
       if sql is None:
         rec['status'] = 'no_oracle'
@@ -84,7 +90,6 @@ def main() -> None:
         o_cols = [d[0] for d in cur.description]
         o_rows = cur.fetchall()
         rec['oracle_rows'] = len(o_rows)
-        sk_cols, sk = frame_key(s_cols, s_rows)
         ok_cols, ok = frame_key(o_cols, o_rows)
         rec['rows_match'] = len(s_rows) == len(o_rows)
         rec['schema_match'] = sk_cols == ok_cols
@@ -104,7 +109,7 @@ def main() -> None:
     if rec['status'] not in ('green', 'no_oracle'):
       failed.append(name)
     print(f"{name}: {rec['status']}"
-          + (f" ({rec.get('spark_rows')} rows)"
+          + (f" ({rec['spark_rows']} rows, {rec['digest']})"
              if 'spark_rows' in rec else ''))
     if 'first_diff' in rec:
       print('  first diff:', json.dumps(rec['first_diff'], default=str))

@@ -12,6 +12,11 @@ the engine still produces those reference-equal outputs bit for bit.
     corpora's winning extractions score text and pair predicates at
     exactly 0 or 1, so only the noisy copies pin the fractional
     arithmetic of the text kernels and the pair merge;
+  * `run_doc` over the table corpus with a left-aligned table
+    blueprint: `table()`'s columns ask for left AND right alignment
+    (see `model.rules.column`), which the table fixture's ragged
+    amounts do not satisfy, so the `table` digests pin only the empty
+    result; `table_left` pins a non-empty one;
   * the paystubs top-20 extraction lists (the materializing,
     non-pruned solve path);
   * the vectorized leaf path against the scalar kernel;
@@ -37,11 +42,12 @@ from blueprint_oss_spark.engine.solver import (
     MINIMUM_FIELD_SCORE, best_extraction, leaf_candidates, top_extractions)
 from blueprint_oss_spark.fixtures import (
     labelvalue_corpus, readme_corpus, table_corpus)
-from blueprint_oss_spark.model.nodes import pick_best
+from blueprint_oss_spark.model.nodes import extract, pick_best
 from blueprint_oss_spark.model.rules import (
     any_holds, is_date, is_dollar_amount, is_entire_phrase,
-    is_in_doc_region, is_one_line, non_fatal, penalize, text_equals,
-    text_has_substring, text_matches_pattern, text_properties_are)
+    is_in_doc_region, is_one_line, left_aligned_column, non_fatal,
+    penalize, row, text_equals, text_has_substring, text_matches_pattern,
+    text_properties_are)
 from blueprint_oss_spark.spark.pipeline import compile_blueprint
 
 # sha256 prefix per document set, recorded at b7f8d90
@@ -60,6 +66,9 @@ _RUN_DOC_DIGESTS = {
     'paystubs+noise': 'f304bda8f5cd81b1',
     'checks': '1ef5c1d8230adf21',
     'checks+noise': '9bb3bb4efca8cccf',
+    # recorded at 3131222
+    'table_left': '9705c422b8e6671b',
+    'table_left+noise': '13d9fa12fcc095e4',
 }
 _TOP_EXTRACTIONS_DIGEST = '80cea36d8e9b6241'
 
@@ -83,11 +92,32 @@ def _noisy(docs):
   return out
 
 
+def _table_left_blueprint():
+  """table_blueprint's fields, laid out with `row` per row and
+  `left_aligned_column` per column instead of `table`."""
+  return extract(
+      text_equals('current')('cur_label'),
+      text_equals('ytd')('ytd_label'),
+      text_equals('gross')('gross_label'),
+      text_equals('net')('net_label'),
+      is_dollar_amount('gross_cur'),
+      is_dollar_amount('gross_ytd'),
+      is_dollar_amount('net_cur'),
+      is_dollar_amount('net_ytd'),
+      row('cur_label', 'ytd_label'),
+      row('gross_label', 'gross_cur', 'gross_ytd'),
+      row('net_label', 'net_cur', 'net_ytd'),
+      left_aligned_column('gross_label', 'net_label'),
+      left_aligned_column('cur_label', 'gross_cur', 'net_cur'),
+      left_aligned_column('ytd_label', 'gross_ytd', 'net_ytd'))
+
+
 def _run_doc_sets():
   for name, n in (('readme', 60), ('labelvalue', 40), ('table', 30),
                   ('multipage', 30), ('adversarial', 30)):
     yield (name, getattr(fixtures, f'{name}_corpus')(n),
            getattr(fixtures, f'{name}_blueprint')())
+  yield 'table_left', table_corpus(30), _table_left_blueprint()
   yield 'paystubs', paystub_corpus(20), paystubs.root
   yield 'checks', check_corpus(12), checks.root
 
@@ -103,6 +133,16 @@ def test_run_doc_digests():
                        repr(out['score']), out['out_spans'])).encode())
       got[key] = h.hexdigest()[:16]
   assert got == _RUN_DOC_DIGESTS
+
+
+def test_table_left_extracts_non_empty_fields():
+  """The table_left digests pin real extractions, not the empty
+  result the `table` digests pin."""
+  for doc_id, spans in table_corpus(30):
+    out = run_doc(doc_id, spans, _table_left_blueprint())
+    if out['fields'] and out['score'] > 0:
+      return
+  raise AssertionError('no table_left document extracts a field')
 
 
 def test_paystubs_top_extractions_digest():

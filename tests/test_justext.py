@@ -87,7 +87,7 @@ def test_context_free_classes():
   # bad: zero density; short: tiny, no links; bad: linky
   h = ('<body><p>' + 'x ' * 60 + '</p><p>' + 'y ' * 40 + '</p>'
        '<h3>tiny</h3><p><a href="/z">' + 'x ' * 40 + '</a></p></body>')
-  r = justext_page(h, {'x'}, length_high=100)
+  r = justext_page(h, {'x'})
   assert (r['n_good'], r['n_neargood'], r['n_short'], r['n_bad']) \
       == (1, 0, 1, 2)
 
@@ -95,16 +95,16 @@ def test_context_free_classes():
 def test_revision_neargood_promotes_next_to_good():
   h = ('<body><p>' + 'x ' * 60 + '</p><p>' + 'x ' * 40 + '</p>'
        '<p>' + 'y ' * 40 + '</p></body>')
-  r = justext_page(h, {'x'}, length_high=100)
+  r = justext_page(h, {'x'})
   assert r['n_neargood'] == 1 and r['n_kept'] == 2
 
 
 def test_revision_short_needs_both_good_neighbors():
   both = ('<body><p>' + 'x ' * 60 + '</p><h3>tiny</h3>'
           '<p>' + 'x ' * 60 + '</p></body>')
-  assert justext_page(both, {'x'}, length_high=100)['n_kept'] == 3
+  assert justext_page(both, {'x'})['n_kept'] == 3
   edge = '<body><h3>tiny</h3><p>' + 'x ' * 60 + '</p></body>'
-  assert justext_page(edge, {'x'}, length_high=100)['n_kept'] == 1
+  assert justext_page(edge, {'x'})['n_kept'] == 1
 
 
 def test_comment_thread_demoted_by_revision():
@@ -113,7 +113,7 @@ def test_comment_thread_demoted_by_revision():
   # jusText's reason to exist.  Verified via the census: exactly 2
   # near-good blocks and none of them survive.
   page = wrap_in_boilerplate('7', 'Document 7 part 0. ' + 'the ' * 40, 0)
-  r = justext_page(page, JUSTEXT_GATE_STOPLIST, length_high=100)
+  r = justext_page(page, JUSTEXT_GATE_STOPLIST)
   assert r['n_neargood'] == 2
   assert r['n_kept'] == 1          # the article only
   assert r['main_text'].startswith('Document 7 part 0.')
@@ -125,7 +125,7 @@ def test_skip_subtrees_and_link_farm():
   h = ('<body><script>var x = "ignored";</script>'
        '<p><a href="/a">all link</a></p>'
        '<p>' + 'x ' * 60 + '</p></body>')
-  r = justext_page(h, {'x'}, length_high=100)
+  r = justext_page(h, {'x'})
   assert r['n_blocks'] == 2 and r['n_bad'] == 1 and r['n_kept'] == 1
 
 
