@@ -1,8 +1,9 @@
 """HTML main-content extraction: boilerplate stripping via DOM
 heuristics (north rule: "HTML boilerplate strip, ... DOM heuristics").
 
-A readability-lite block scorer over the stdlib HTML parser — no
-external libs:
+A readability-lite block scorer over the package's one HTML tokenizer
+(ops/html_events: html.parser's event stream, event for event, at a
+fraction of its per-document CPU) — no external libs:
 
   * the DOM is segmented into BLOCKS at block-level container
     boundaries (div/article/section/main/p/td/li/...);
@@ -28,7 +29,6 @@ wrap→parse→strip loop.
 from __future__ import annotations
 
 import html as html_mod
-from html.parser import HTMLParser
 from typing import Iterator, List
 
 import pandas as pd
@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, StringType, StructField, StructType,
 )
+
+from .html_events import DATA, ENDTAG, STARTTAG, html_events
 
 _SKIP_SUBTREE = {'script', 'style', 'nav', 'header', 'footer', 'aside',
                  'form', 'noscript', 'iframe', 'button', 'svg',
@@ -61,98 +63,81 @@ _POS_HINT = _re.compile(
 _NEG_WEIGHT, _POS_WEIGHT = 0.1, 2.0
 
 
-class _Blocks(HTMLParser):
-  """Accumulate (container_id, text, link_text) per block."""
-
-  def __init__(self):
-    super().__init__(convert_charrefs=True)
-    self._skip = 0
-    self._link = 0
-    self._stack: List[int] = []   # ids of open block containers
-    self._next_id = 0
-    self.parent_of = {}           # block container id -> parent id
-    self.weight = {}              # container id -> score multiplier
-    self.blocks: List[List] = []  # [container_id, [text], [link_text]]
-    self._open_block()
-
-  def _open_block(self, tag: str = '', attrs=()):
-    cid = self._next_id
-    self._next_id += 1
-    parent = self._stack[-1] if self._stack else None
-    self.parent_of[cid] = parent
-    hints = ' '.join([tag] + [v for k, v in attrs
-                              if k in ('class', 'id') and v])
-    if (parent is not None
-        and self.weight.get(parent, 1.0) == _NEG_WEIGHT):
-      w = _NEG_WEIGHT                   # penalties propagate down
-    elif _NEG_HINT.search(hints):
-      w = _NEG_WEIGHT
-    elif _POS_HINT.search(hints):
-      w = _POS_WEIGHT                   # boosts apply at the node only
-    else:
-      w = 1.0
-    self.weight[cid] = w
-    self._stack.append(cid)
-    self.blocks.append([cid, [], []])
-    return cid
-
-  def handle_starttag(self, tag, attrs):
-    if tag in _SKIP_SUBTREE:
-      self._skip += 1
-      return
-    if self._skip:
-      return
-    if tag == 'a':
-      self._link += 1
-    elif tag in _BLOCK_TAGS:
-      self._open_block(tag, attrs)
-
-  def handle_endtag(self, tag):
-    if tag in _SKIP_SUBTREE:
-      self._skip = max(0, self._skip - 1)
-      return
-    if self._skip:
-      return
-    if tag == 'a':
-      self._link = max(0, self._link - 1)
-    elif tag in _BLOCK_TAGS and len(self._stack) > 1:
-      self._stack.pop()
-      # text after a closed child belongs to a fresh block of the parent
-      parent = self._stack[-1]
-      self.blocks.append([parent, [], []])
-
-  def handle_data(self, data):
-    if self._skip or not data.strip():
-      return
-    cid = self._stack[-1]
-    self.blocks[-1][0] = cid
-    self.blocks[-1][1].append(data)
-    if self._link:
-      self.blocks[-1][2].append(data)
+def _hint_weight(tag: str, attrs, parent_weight: float) -> float:
+  """A block container's score multiplier from its tag and class/id."""
+  if parent_weight == _NEG_WEIGHT:
+    return _NEG_WEIGHT                  # penalties propagate down
+  hints = ' '.join([tag] + [v for k, v in attrs
+                            if k in ('class', 'id') and v])
+  if _NEG_HINT.search(hints):
+    return _NEG_WEIGHT
+  if _POS_HINT.search(hints):
+    return _POS_WEIGHT                  # boosts apply at the node only
+  return 1.0
 
 
 def extract_main_content(html: str) -> str:
   """Boilerplate-stripped main text of an HTML page (DOM-heuristic
-  block scoring; deterministic, stdlib-only)."""
-  p = _Blocks()
-  p.feed(html)
-  p.close()
+  block scoring; deterministic, stdlib-only).
+
+  Reads the page through ops/html_events, whose events equal, event for
+  event, the running interpreter's `html.parser`
+  (HTMLParser(convert_charrefs=True), a self-closing tag read as its
+  start and end tag).  A page that html.parser cannot tokenize (an
+  unknown `<![` marked section) yields ''."""
+  skip = link = 0
+  stack = [(0, 1.0)]   # open block containers: (id, weight)
+  next_id = 1
+  block = None         # [container id, weight, texts, link texts] of the
+  blocks = []          # current run of text; all runs in page order
+  try:
+    for kind, tag, attrs in html_events(html, _BLOCK_TAGS):
+      if kind == DATA:
+        if skip or not tag.strip():
+          continue
+        if block is None:
+          block = [*stack[-1], [], []]
+          blocks.append(block)
+        block[2].append(tag)
+        if link:
+          block[3].append(tag)
+      # a self-closing tag acts as its start tag then its end tag,
+      # which nets out to a block boundary or to nothing
+      elif tag in _SKIP_SUBTREE:
+        if kind == STARTTAG:
+          skip += 1
+        elif kind == ENDTAG:
+          skip = max(0, skip - 1)
+      elif skip:
+        continue
+      elif tag == 'a':
+        if kind == STARTTAG:
+          link += 1
+        elif kind == ENDTAG:
+          link = max(0, link - 1)
+      elif tag in _BLOCK_TAGS:
+        if kind == STARTTAG:
+          stack.append((next_id, _hint_weight(tag, attrs, stack[-1][1])))
+          next_id += 1
+        elif kind == ENDTAG:
+          if len(stack) == 1:
+            continue
+          stack.pop()
+        # text after a block boundary starts a fresh run of the
+        # container then open
+        block = None
+  except AssertionError:  # html.parser's verdict on an unknown `<![`
+    return ''
   best_cid, best_score = None, -1.0
   per_container: dict = {}
-  for cid, texts, links in p.blocks:
-    if not texts:
-      continue
+  for cid, weight, texts, links in blocks:
     t = ''.join(texts)
-    lt = ''.join(links)
-    entry = per_container.setdefault(cid, [0, 0, []])
+    entry = per_container.setdefault(cid, [0, 0, [], weight])
     entry[0] += len(t.strip())
-    entry[1] += len(lt.strip())
+    entry[1] += len(''.join(links).strip())
     entry[2].append(t)
-  for cid, (n, nl, texts) in per_container.items():
-    if n == 0:
-      continue
-    link_density = nl / n
-    score = n * (1.0 - link_density) ** 2 * p.weight.get(cid, 1.0)
+  for cid, (n, nl, _, weight) in per_container.items():
+    score = n * (1.0 - nl / n) ** 2 * weight
     if score > best_score:
       best_score, best_cid = score, cid
   if best_cid is None:
@@ -533,54 +518,44 @@ JUSTEXT_GATE_STOPLIST = frozenset((
 ))
 
 
-class _JxBlocks(HTMLParser):
+def _jx_blocks(html: str) -> List[tuple]:
   """Paragraph segmentation: text runs delimited by block-level tag
   boundaries; inline tags (<a>, <b>, ...) do not break blocks; skip
-  subtrees contribute nothing.  Yields (normalized_text,
+  subtrees contribute nothing.  Returns (normalized_text,
   normalized_link_text) per non-empty block."""
-
-  def __init__(self):
-    super().__init__()
-    self.blocks: List[tuple] = []
-    self._text: List[str] = []
-    self._link: List[str] = []
-    self._skip = 0
-    self._a = 0
-
-  def _flush(self):
-    t = ' '.join(''.join(self._text).split())
-    if t:
-      self.blocks.append((t, ' '.join(''.join(self._link).split())))
-    self._text, self._link = [], []
-
-  def handle_starttag(self, tag, attrs):
-    if tag in _JX_SKIP:
-      self._skip += 1
-      return
-    if self._skip:
-      return
-    if tag in _JX_BLOCK_TAGS:
-      self._flush()
+  blocks: List[tuple] = []
+  text: List[str] = []
+  link: List[str] = []
+  skip = a = 0
+  for kind, tag, _ in html_events(html, ()):
+    if kind == DATA:
+      if not skip:
+        text.append(tag)
+        if a:
+          link.append(tag)
+    # a self-closing tag acts as its start tag then its end tag, which
+    # nets out to a block boundary or to nothing
+    elif tag in _JX_SKIP:
+      if kind == STARTTAG:
+        skip += 1
+      elif kind == ENDTAG:
+        skip = max(0, skip - 1)
+    elif skip:
+      continue
+    elif tag in _JX_BLOCK_TAGS:
+      t = ' '.join(''.join(text).split())
+      if t:
+        blocks.append((t, ' '.join(''.join(link).split())))
+      text, link = [], []
     elif tag == 'a':
-      self._a += 1
-
-  def handle_endtag(self, tag):
-    if tag in _JX_SKIP:
-      self._skip = max(0, self._skip - 1)
-      return
-    if self._skip:
-      return
-    if tag in _JX_BLOCK_TAGS:
-      self._flush()
-    elif tag == 'a':
-      self._a = max(0, self._a - 1)
-
-  def handle_data(self, data):
-    if self._skip:
-      return
-    self._text.append(data)
-    if self._a:
-      self._link.append(data)
+      if kind == STARTTAG:
+        a += 1
+      elif kind == ENDTAG:
+        a = max(0, a - 1)
+  t = ' '.join(''.join(text).split())
+  if t:
+    blocks.append((t, ' '.join(''.join(link).split())))
+  return blocks
 
 
 def _jx_classify(text: str, link_text: str, stoplist) -> str:
@@ -609,12 +584,15 @@ def justext_page(html: str, stoplist) -> dict:
   context-free class census:
     main_text (final-good blocks joined with \\n), n_blocks, n_good,
     n_neargood, n_short, n_bad (context-free counts), n_kept (final
-    good count after the revision pass)."""
-  p = _JxBlocks()
-  p.feed(html)
-  p.close()
-  p._flush()
-  cf = [_jx_classify(t, lt, stoplist) for t, lt in p.blocks]
+    good count after the revision pass).
+
+  Reads the page through ops/html_events, whose events equal, event for
+  event, the running interpreter's `html.parser`
+  (HTMLParser(convert_charrefs=True), a self-closing tag read as its
+  start and end tag); a page html.parser cannot tokenize raises its
+  AssertionError."""
+  blocks = _jx_blocks(html)
+  cf = [_jx_classify(t, lt, stoplist) for t, lt in blocks]
   n = len(cf)
   # nearest context-free good/bad anchor on each side; edges are bad
   prev_anchor, last = [], 'bad'
@@ -637,7 +615,7 @@ def justext_page(html: str, stoplist) -> dict:
                    == ('good', 'good') else 'bad')
     else:
       final.append(c)
-  kept = [p.blocks[i][0] for i in range(n) if final[i] == 'good']
+  kept = [blocks[i][0] for i in range(n) if final[i] == 'good']
   return {
       'main_text': '\n'.join(kept),
       'n_blocks': n,

@@ -44,12 +44,16 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
           .orderBy('doc_id'))
 
 
+# hll_distinct's register count m and what is specialized to it: the
+# bucket bits log2(m) and the classic alpha_64
+_HLL_M, _HLL_BUCKET_BITS, _HLL_ALPHA = 64, 6, 0.709
+
+
 def hll_distinct(spark: SparkSession, sf_dir: str, *,
-                 m: int = 64,
                  docs: DataFrame = None) -> DataFrame:
   """HyperLogLog distinct-count estimation (Flajolet et al. 2007), the
   cardinality-sketch family next to CMS (frequency) and MinHash/LSH
-  (similarity) — per lang, estimate |distinct text| from m
+  (similarity) — per lang, estimate |distinct text| from m = 64
   registers instead of an exact count-distinct whose shuffle carries
   every distinct value.
 
@@ -58,11 +62,11 @@ def hll_distinct(spark: SparkSession, sf_dir: str, *,
   deliberately transcendental-free and cross-engine EXACT:
 
     h      = 60-bit md5 prefix of the value
-    bucket = h % m,  rest = h >> log2(m)... (h >> 6 for m=64)
+    bucket = h % 64,  rest = h >> 6
     rho    = (54 - bitlength(rest)) + 1, bitlength via length(bin(x))
              (rest = 0 → rho = 55)
     register[bucket] = max rho            -- integer ops only
-    raw_est = alpha_m · m² / Σ_b 2^(-register[b])
+    raw_est = alpha_64 · 64² / Σ_b 2^(-register[b])
 
   2^(-r) is computed as 1.0 / (1 << r) — a power of two, exactly
   representable — and the sum is a pinned-order fold over buckets, so
@@ -72,31 +76,27 @@ def hll_distinct(spark: SparkSession, sf_dir: str, *,
   at 100 TB cardinalities the raw estimate is the operative one.
 
   Scale shape: one map-side-combinable groupBy whose shuffle carries
-  ≤ m rows per (group, map task) whatever the corpus size; the
-  register→estimate fold runs on the bounded m-row-per-group frame.
+  ≤ 64 rows per (group, map task) whatever the corpus size; the
+  register→estimate fold runs on the bounded 64-row-per-group frame.
 
   Output: (group, n_rows, true_distinct, n_zero_regs, hll_est) —
   true_distinct is the exact count for verification at gate scale
   (drop it at 100 TB; it is the cost HLL avoids)."""
-  if m != 64:
-    raise ValueError('m=64 is the pinned register count (alpha and '
-                     'the bit split are specialized); got %r' % m)
-  alpha = 0.709  # the classic alpha_64
   d = (docs if docs is not None else
        spark.read.parquet(f'{sf_dir}/documents.parquet')) \
       .select(F.col('lang').alias('grp'), F.col('text').alias('v'))
 
   h = F.conv(F.substring(F.md5(F.col('v')), 1, 15), 16, 10) \
       .cast('long')
-  rest = F.shiftright(h, 6)
+  rest = F.shiftright(h, _HLL_BUCKET_BITS)
   rho = F.when(rest == 0, F.lit(55)) \
       .otherwise(55 - F.length(F.bin(rest)))
-  hashed = d.select('grp', F.pmod(h, F.lit(64)).alias('bucket'),
+  hashed = d.select('grp', F.pmod(h, F.lit(_HLL_M)).alias('bucket'),
                     rho.alias('rho'))
 
   regs = (hashed.groupBy('grp', 'bucket')
           .agg(F.max('rho').alias('r')))
-  buckets = spark.range(64).select(F.col('id').cast('long')
+  buckets = spark.range(_HLL_M).select(F.col('id').cast('long')
                                    .alias('bucket'))
   groups = d.select('grp').distinct()
   full = (groups.crossJoin(F.broadcast(buckets))
@@ -125,7 +125,7 @@ def hll_distinct(spark: SparkSession, sf_dir: str, *,
   return (stats.join(folded, 'grp')
           .select(F.col('grp').alias('lang'), 'n_rows',
                   'true_distinct', 'n_zero_regs',
-                  F.round(F.lit(alpha) * 64.0 * 64.0
+                  F.round(F.lit(_HLL_ALPHA) * _HLL_M * _HLL_M
                           / F.col('denom'), 6).alias('hll_est'))
           .orderBy('lang'))
 

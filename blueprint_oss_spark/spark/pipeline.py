@@ -42,10 +42,11 @@ import sys
 import time
 import uuid
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
-from typing import Iterable, Iterator, List, Optional
+from typing import Iterable, Iterator, List, Optional, Union
 
 import pandas as pd
 
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, LongType, MapType, StringType,
@@ -261,7 +262,7 @@ def _extraction_kernel(bc, value_col: str, solve,
   return run_batches
 
 
-def extract_documents(df: DataFrame, root: Node, *,
+def extract_documents(df: DataFrame, root: Union[Node, Broadcast], *,
                       ocr_format: Optional[str] = None,
                       doc_time_budget_s: float = 45.0,
                       max_spans_per_doc: int = 200_000) -> DataFrame:
@@ -270,15 +271,16 @@ def extract_documents(df: DataFrame, root: Node, *,
   Args:
     df: DataFrame with SPANS_SCHEMA columns, or with (doc_id, content)
       file rows (sources.read_files) when `ocr_format` is set.
-    root: blueprint tree (un-optimized; compiled here and broadcast).
+    root: blueprint tree (un-optimized; compiled here and broadcast),
+      or the broadcast of its compile_blueprint payload (a job compiles
+      once and hands every group the same broadcast; job_transform).
     ocr_format: None for spans input; else the files' format, one of
       sources.POOL_BUILDERS (google / ibocr / hocr / pdf / docjson).
     doc_time_budget_s: per-document wall budget (reference default 45 s).
     max_spans_per_doc: guard against pathological span documents.
   """
-  spark = df.sparkSession
-  payload = compile_blueprint(root)
-  bc = spark.sparkContext.broadcast(payload)
+  bc = root if isinstance(root, Broadcast) else \
+      df.sparkSession.sparkContext.broadcast(compile_blueprint(root))
 
   if ocr_format is None:
     value_col, solve = 'spans', _solve_spans(max_spans_per_doc)
@@ -290,15 +292,21 @@ def extract_documents(df: DataFrame, root: Node, *,
       OUTPUT_SCHEMA)
 
 
-def job_transform(root: Optional[Node], transform, **extract_kwargs):
-  """The doc-level DataFrame → DataFrame pipeline of a job:
-  `transform` if given, else blueprint extraction with `root`
-  (extract_documents(part, root, **extract_kwargs))."""
+def job_transform(spark: SparkSession, root: Optional[Node], transform,
+                  **extract_kwargs) -> tuple:
+  """The doc-level DataFrame → DataFrame pipeline of a job, and the
+  broadcast it reads: (`transform`, None) if a transform is given, else
+  blueprint extraction with `root`, compiled and broadcast here once
+  for all the groups or micro-batches the job runs
+  (extract_documents(part, broadcast, **extract_kwargs)).  The caller
+  destroys the broadcast when the job is over."""
   if transform is not None:
-    return transform
+    return transform, None
   if root is None:
     raise ValueError('a job needs root= or transform=')
-  return lambda part: extract_documents(part, root, **extract_kwargs)
+  blueprint = spark.sparkContext.broadcast(compile_blueprint(root))
+  return (lambda part: extract_documents(part, blueprint, **extract_kwargs),
+          blueprint)
 
 
 def spans_from_documents(docs: DataFrame) -> DataFrame:
@@ -502,12 +510,26 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   DataFrame → DataFrame doc-level pipeline (e.g. the main-content
   spans pipeline, ops/html_extract.main_content_from_spans) rides the
   same checkpoint groups / lineage / atomic-overwrite machinery as
-  blueprint extraction; the default is extract_documents(part, root).
-  Group metrics adapt to the output schema (docs always;
-  errors/score_sum/elapsed_ms when present).
+  blueprint extraction.  The default is extract_documents over `root`,
+  compiled and broadcast once per call and destroyed when the groups
+  return, on success and on failure.  Group metrics adapt to the
+  output schema (docs always; errors/score_sum/elapsed_ms when
+  present).
   """
-  transform = job_transform(root, transform, **extract_kwargs)
+  transform, blueprint = job_transform(spark, root, transform,
+                                       **extract_kwargs)
+  try:
+    return _run_job(spark, input_df, output_path, transform, groups,
+                    resume, iceberg_table)
+  finally:
+    if blueprint is not None:
+      blueprint.destroy()
 
+
+def _run_job(spark: SparkSession, input_df: DataFrame, output_path: str,
+             transform, groups: int, resume: bool,
+             iceberg_table: Optional[str]) -> List[dict]:
+  """run_extraction_job's body, for a resolved doc-level transform."""
   # Lineage I/O goes through the Hadoop FileSystem API (via the JVM),
   # not the local os module, so checkpoint/resume works unchanged when
   # output_path is s3a://... or hdfs://... on a real cluster.

@@ -9,7 +9,8 @@ Semantics mirror the reference loaders:
   IBOCR          bp/ibocr_file.py:16-57 (first blob's lines + metadata
                  layouts)
   hOCR           bp/hocr_file.py (via the hocr_parser lib there; here a
-                 minimal stdlib parser of ocr_page / ocrx_word nodes)
+                 minimal parser of ocr_page / ocrx_word nodes over the
+                 ops/html_events stream)
 
 Pages are emitted with page-local word coordinates; vertical stacking
 happens in the engine (bp/build_document.py:49-69 semantics).
@@ -25,6 +26,7 @@ from typing import Any, Dict, List, Optional
 from ..engine.doc_json import pool_from_doc_json
 from ..engine.docmodel import DocPool
 from ..engine.entity_gen import build_doc_pool
+from ..ops.html_events import DATA, STARTENDTAG, STARTTAG, html_events
 
 
 def parse_google_ocr(raw: Dict[str, Any]) -> List[dict]:
@@ -81,82 +83,66 @@ def parse_hocr(text: str) -> List[dict]:
     * arbitrary block nesting (ocr_carea / ocr_par / ocr_line wrappers
       are transparent — only pages and words carry geometry we need);
     * markup INSIDE a word (`<span class=ocrx_word>a<strong>b</strong>
-      c</span>` → one word "abc", tracked by tag depth);
-    * text split across parser chunks / entity references;
+      c</span>` → one word "abc", tracked by tag depth); a self-closing
+      tag there does not close the word, and `<br/>` is one space;
+    * entity references;
     * a word with no bbox in its title is skipped (the reference
       raises; for a bulk 100 TB ingest a malformed word must not kill
       the file);
     * a page with no bbox gets its extent from its words' hull.
+
+  Reads the file through ops/html_events, whose events equal, event for
+  event, the running interpreter's `html.parser`
+  (HTMLParser(convert_charrefs=True)); a file html.parser cannot
+  tokenize raises its AssertionError.
   """
-  from html.parser import HTMLParser
-
-  class P(HTMLParser):
-    def __init__(self):
-      super().__init__(convert_charrefs=True)
-      self.pages: List[dict] = []
-      self._word_bbox: Optional[tuple] = None
-      self._word_parts: List[str] = []
-      self._depth = 0
-
-    def _finish_word(self):
-      textv = ' '.join(''.join(self._word_parts).split())
-      if textv and self._word_bbox is not None:
-        x0, y0, x1, y1 = self._word_bbox
-        self.pages[-1]['words'].append(
-            (textv, float(x0), float(x1), float(y0), float(y1)))
-      self._word_bbox = None
-      self._word_parts = []
-      self._depth = 0
-
-    def handle_starttag(self, tag, attrs):
+  pages: List[dict] = []
+  word_bbox: Optional[tuple] = None   # the open ocrx_word's bbox
+  parts: List[str] = []               # and its text so far
+  depth = 0                           # tags open inside that word
+  for kind, tag, attrs in html_events(text):
+    if word_bbox is not None:
+      if kind == DATA:
+        parts.append(tag)
+      elif kind == STARTENDTAG:
+        if tag == 'br':
+          parts.append(' ')
+      elif kind == STARTTAG:
+        depth += 1
+      elif depth:
+        depth -= 1
+      else:
+        _add_hocr_word(pages[-1], word_bbox, parts)
+        word_bbox, parts = None, []
+    elif kind == STARTTAG:
       a = dict(attrs)
       classes = (a.get('class') or '').split()
-      if self._word_bbox is not None:
-        self._depth += 1  # markup nested inside the word
-        return
       m = _HOCR_BBOX.search(a.get('title') or '')
       if 'ocr_page' in classes:
         bbox = tuple(map(int, m.groups())) if m else None
-        self.pages.append({
-            'page_number': len(self.pages) + 1,
+        pages.append({
+            'page_number': len(pages) + 1,
             'width': float(bbox[2] - bbox[0]) if bbox else 0.0,
             'height': float(bbox[3] - bbox[1]) if bbox else 0.0,
             'words': []})
-      elif 'ocrx_word' in classes and m and self.pages:
-        self._word_bbox = tuple(map(int, m.groups()))
-        self._word_parts = []
-        self._depth = 0
+      elif 'ocrx_word' in classes and m and pages:
+        word_bbox, parts, depth = tuple(map(int, m.groups())), [], 0
+  if word_bbox is not None:
+    _add_hocr_word(pages[-1], word_bbox, parts)  # truncated file
+  for pg in pages:
+    if (pg['width'] == 0.0 or pg['height'] == 0.0) and pg['words']:
+      pg['width'] = max(w[2] for w in pg['words'])
+      pg['height'] = max(w[4] for w in pg['words'])
+  return pages
 
-    def handle_startendtag(self, tag, attrs):
-      # self-closing tags inside a word must not pop the word; a <br/>
-      # is itself a word-internal break → one space
-      if tag == 'br' and self._word_bbox is not None:
-        self._word_parts.append(' ')
 
-    def handle_data(self, data):
-      if self._word_bbox is not None:
-        self._word_parts.append(data)
-
-    def handle_endtag(self, tag):
-      if self._word_bbox is not None:
-        if self._depth:
-          self._depth -= 1
-        else:
-          self._finish_word()
-
-    def close(self):
-      super().close()
-      if self._word_bbox is not None and self.pages:
-        self._finish_word()  # truncated file: flush the open word
-      for pg in self.pages:
-        if (pg['width'] == 0.0 or pg['height'] == 0.0) and pg['words']:
-          pg['width'] = max(w[2] for w in pg['words'])
-          pg['height'] = max(w[4] for w in pg['words'])
-
-  p = P()
-  p.feed(text)
-  p.close()
-  return p.pages
+def _add_hocr_word(page: dict, bbox: tuple, parts: List[str]) -> None:
+  """Append an hOCR word with a non-blank text to `page`."""
+  textv = ' '.join(''.join(parts).split())
+  if textv:
+    x0, y0, x1, y1 = bbox
+    page['words'].append((textv, float(x0), float(x1), float(y0),
+                          float(y1)))
 
 
 def _parse_pdf_bytes(b: bytes):

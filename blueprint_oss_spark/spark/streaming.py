@@ -118,7 +118,8 @@ def start_extraction_stream(spark: SparkSession, input_dir: str,
   with `root`.  Both are stateless Arrow-batched mapInPandas stages, so
   each micro-batch is the batch job over the files that landed, and a
   restart with the same checkpoint replays nothing already committed."""
-  transform = job_transform(root, transform)
+  # the blueprint's broadcast lives as long as the stream
+  transform, _ = job_transform(spark, root, transform)
   stream = read_span_stream(spark, input_dir, max_files_per_trigger)
   return _start(transform(stream), output_dir, checkpoint_dir,
                 trigger_once)

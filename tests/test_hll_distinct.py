@@ -83,11 +83,6 @@ def test_accuracy_large_cardinality(spark):
   assert rel < 0.4, (out['hll_est'], rel)
 
 
-def test_m_is_pinned(spark):
-  with pytest.raises(ValueError):
-    P.hll_distinct(spark, SF1, m=128)
-
-
 def test_register_shuffle_is_bounded(spark):
   # the registers aggregation partials map-side: per (group, map task)
   # at most 64 rows reach the exchange

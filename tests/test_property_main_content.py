@@ -16,6 +16,7 @@ from blueprint_oss_spark.ops.html_extract import (
     extract_main_content, main_content_doc,
 )
 from blueprint_oss_spark.spark.pdf import parse_pdf
+from tests.html_grammar import html_documents
 
 _SETTINGS = dict(max_examples=200, deadline=None)
 
@@ -59,6 +60,15 @@ def test_interleave_contract(spans):
 @given(st.text(max_size=2000))
 def test_extract_main_content_total(html):
   # never raises, output is whitespace-normalized
+  got = extract_main_content(html)
+  assert got == ' '.join(got.split())
+
+
+@settings(**_SETTINGS)
+@given(html_documents())
+def test_extract_main_content_total_on_tag_dense_html(html):
+  # the same totality on input full of tags, which st.text almost
+  # never forms
   got = extract_main_content(html)
   assert got == ' '.join(got.split())
 

@@ -262,6 +262,46 @@ def test_run_extraction_job_failure_cancels_groups_in_flight(spark,
   assert not list((out / '_lineage').glob('group-*.json'))
 
 
+def test_run_extraction_job_compiles_and_broadcasts_once(spark, tmp_path,
+                                                        monkeypatch):
+  """A 4-group job compiles and broadcasts its blueprint once, hands
+  every group that one broadcast, and destroys it when the groups
+  return, on success and on failure."""
+  df = _spans_df(spark, readme_corpus(16, seed=86))
+  root = readme_blueprint()
+  compiles, seen, fail = [], [], []
+  compile_blueprint = pipeline.compile_blueprint
+  extract_documents = pipeline.extract_documents
+
+  def counted_compile(r):
+    compiles.append(r)
+    return compile_blueprint(r)
+
+  def recorded_extract(part, blueprint, **kw):
+    seen.append(blueprint)
+    if fail:
+      raise RuntimeError('planted failure')
+    return extract_documents(part, blueprint, **kw)
+
+  monkeypatch.setattr(pipeline, 'compile_blueprint', counted_compile)
+  monkeypatch.setattr(pipeline, 'extract_documents', recorded_extract)
+  lineage = run_extraction_job(spark, df, str(tmp_path / 'ok'), root,
+                               groups=4)
+  assert sum(r['metrics']['docs'] for r in lineage) == 16
+  assert len(compiles) == 1
+  assert len(seen) == 4 and all(b is seen[0] for b in seen)
+  assert not os.path.exists(seen[0]._path)  # destroyed
+
+  compiles.clear()
+  seen.clear()
+  fail.append(True)
+  with pytest.raises(RuntimeError, match='planted failure'):
+    run_extraction_job(spark, df, str(tmp_path / 'failed'), root, groups=4)
+  assert len(compiles) == 1
+  assert seen and all(b is seen[0] for b in seen)
+  assert not os.path.exists(seen[0]._path)
+
+
 def test_run_extraction_job_task_shape(spark, tmp_path):
   """Reading the split count runs no job, and an input that already
   has a shuffle keeps its partitions.  Each group is one job of
