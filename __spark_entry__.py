@@ -9,10 +9,19 @@ oracle_sql()   — DuckDB equivalents for the SQL-expressible subset; the
                  take the rows-only check (their real correctness gate is
                  tests/test_extraction_parity.py against the reference
                  engine itself).
+
+A gate row that carries several operators is one row-set of
+method-tagged sections: each section selects its operator's columns
+(renamed onto the row's shared names where a column rides another's)
+plus a `method` tag, and `_tagged_union` joins the sections, so a
+column a section lacks is NULL there.  A section never restates
+another section's columns; it casts a column only where the row's
+type differs from its operator's.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -35,6 +44,15 @@ def _n_docs_for(sf_dir: str, base: int = 400) -> int:
   except ValueError:
     sf = 0.01
   return max(40, int(base * sf / 0.01))
+
+
+def _tagged_union(*sections: DataFrame) -> DataFrame:
+  """The sections' rows as one row-set, columns matched by name.  A
+  column a section lacks is NULL in its rows, of the type the other
+  sections give it; where sections type a column differently the
+  union widens it (int and bigint give bigint)."""
+  return functools.reduce(
+      lambda a, b: a.unionByName(b, allowMissingColumns=True), sections)
 
 
 def _bp_extract(corpus: str):
@@ -70,7 +88,7 @@ def entry(spark: SparkSession) -> DataFrame:
       top_down('kw_spark', 'kw_table'))
   doc_out = extract_documents(spans, kw_root)
 
-  return (fix_out.unionByName(doc_out)
+  return (_tagged_union(fix_out, doc_out)
           .select('doc_id', F.to_json('fields').alias('fields_json'),
                   'score', 'n_entities', 'n_words', 'error'))
 
@@ -334,24 +352,14 @@ def _ann_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
   — every cell recomputed from scratch by the oracle, including the
   exact-integer margin inequality."""
   from blueprint_oss_spark.ops import vectors as V
-  nul_i = F.lit(None).cast('int')
-  nul_d = F.lit(None).cast('double')
-  nul_l = F.lit(None).cast('long')
-  no_anchor = [nul_l.alias('anchor_id'), nul_l.alias('anchor_label'),
-               nul_i.alias('rnk')]
-  no_bitext = [nul_d.alias('margin_r'), nul_i.alias('mined'),
-               nul_i.alias('mutual')]
   brute = (V.cosine_topk_bruteforce(spark, sf_dir)
            .join(V.embedding_norms(spark, sf_dir), 'vec_id')
            .select(F.lit('brute').alias('method'), 'vec_id', 'cosine_r',
-                   'label', 'norm_sq', *no_anchor, *no_bitext))
-  lsh = V.ann_topk_lsh(spark, sf_dir).withColumn('method', F.lit('lsh'))
-  ivf = V.ivf_topk(spark, sf_dir).withColumn('method', F.lit('ivf'))
-  pqa = V.pq_topk(spark, sf_dir).withColumn('method', F.lit('pq'))
-  ann = (lsh.unionByName(ivf).unionByName(pqa)
-         .select('method', 'vec_id', 'cosine_r',
-                 nul_i.alias('label'), nul_d.alias('norm_sq'),
-                 *no_anchor, *no_bitext))
+                   'label', 'norm_sq'))
+  ann = [op(spark, sf_dir).select(F.lit(method).alias('method'), 'vec_id',
+                                  'cosine_r')
+         for method, op in (('lsh', V.ann_topk_lsh), ('ivf', V.ivf_topk),
+                            ('pq', V.pq_topk))]
   # hard-negative mining section (from-scratch SQL oracle): neg_id
   # rides vec_id, neg_label rides label, plus its own anchor columns
   hn = (V.hard_negative_mining(spark, sf_dir)
@@ -359,19 +367,15 @@ def _ann_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col('neg_id').alias('vec_id'),
                 F.col('cos_r').alias('cosine_r'),
                 F.col('neg_label').cast('int').alias('label'),
-                nul_d.alias('norm_sq'),
                 F.col('anchor_id').cast('long').alias('anchor_id'),
                 F.col('anchor_label').cast('long')
                 .alias('anchor_label'),
-                F.col('rnk').cast('int').alias('rnk'),
-                *no_bitext))
+                F.col('rnk').cast('int').alias('rnk')))
   bt = (V.bitext_mine(spark, sf_dir)
         .select(F.lit('bitext').alias('method'),
                 F.col('src_id').alias('vec_id'),
                 F.col('cos_r').alias('cosine_r'),
-                nul_i.alias('label'), nul_d.alias('norm_sq'),
                 F.col('tgt_id').cast('long').alias('anchor_id'),
-                nul_l.alias('anchor_label'), nul_i.alias('rnk'),
                 'margin_r',
                 F.col('mined').cast('int').alias('mined'),
                 F.col('mutual').cast('int').alias('mutual')))
@@ -387,9 +391,7 @@ def _ann_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.lit('pca').alias('method'), 'vec_id',
                  F.round('val', 6).alias('cosine_r'),
                  F.col('label').cast('int').alias('label'),
-                 nul_d.alias('norm_sq'), nul_l.alias('anchor_id'),
-                 nul_l.alias('anchor_label'),
-                 F.col('rnk').cast('int').alias('rnk'), *no_bitext))
+                 F.col('rnk').cast('int').alias('rnk')))
   # method='kmeans': distributed FULL-corpus Lloyd (vectors.
   # kmeans_train — per iteration one map-side-combinable (cell, dim)
   # groupBy over exact-integer micro-units, k·d bounded model rows,
@@ -401,9 +403,7 @@ def _ann_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit('kmeans').alias('method'), 'vec_id',
                 F.col('cos_r').alias('cosine_r'),
                 F.col('label').cast('int').alias('label'),
-                nul_d.alias('norm_sq'), nul_l.alias('anchor_id'),
-                nul_l.alias('anchor_label'),
-                F.col('cell').cast('int').alias('rnk'), *no_bitext))
+                F.col('cell').cast('int').alias('rnk')))
   # method='anneval': retrieval-quality eval of the LSH index vs the
   # exact ground truth (vectors.ann_eval — per-query recall@k /
   # NN-rank integers).  vec_id carries q_id, label n_hit, anchor_id
@@ -413,15 +413,11 @@ def _ann_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
   ae = (V.ann_eval(spark, sf_dir)
         .select(F.lit('anneval').alias('method'),
                 F.col('q_id').alias('vec_id'),
-                nul_d.alias('cosine_r'),
                 F.col('n_hit').cast('int').alias('label'),
-                nul_d.alias('norm_sq'),
                 F.col('n_gt').alias('anchor_id'),
                 F.col('n_ann').alias('anchor_label'),
-                F.col('nn_rank').cast('int').alias('rnk'),
-                *no_bitext))
-  return (brute.unionByName(ann).unionByName(hn).unionByName(bt)
-          .unionByName(pca).unionByName(km).unionByName(ae)
+                F.col('nn_rank').cast('int').alias('rnk')))
+  return (_tagged_union(brute, *ann, hn, bt, pca, km, ae)
           .orderBy('method', 'anchor_id', 'rnk',
                    F.desc('cosine_r'), 'vec_id'))
 
@@ -447,29 +443,20 @@ def _events_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
   path — so the streaming maintenance is certified end-to-end against
   the identical oracle rows."""
   from blueprint_oss_spark.ops import relational as R
-  nul_s = F.lit(None).cast('string')
-  nul_i = F.lit(None).cast('int')
-  nul_l = F.lit(None).cast('long')
-  nul_d = F.lit(None).cast('double')
   cube = R.events_cube(spark, sf_dir).select(
-      F.lit('cube').alias('method'), 'event_type', 'dow',
-      nul_s.alias('day'), 'n_events', 'n_users', 'total_value',
-      nul_l.alias('value_micro'), nul_l.alias('n_zero_regs'),
-      nul_l.alias('reg_checksum'), nul_d.alias('hll_est'))
+      F.lit('cube').alias('method'), 'event_type', 'dow', 'n_events',
+      'n_users', 'total_value')
 
   def tag(df, method):
     return df.select(
-        F.lit(method).alias('method'), 'event_type', nul_i.alias('dow'),
-        'day', 'n_events', nul_l.alias('n_users'),
-        nul_d.alias('total_value'), 'value_micro', 'n_zero_regs',
-        'reg_checksum', 'hll_est')
+        F.lit(method).alias('method'), 'event_type', 'day', 'n_events',
+        'value_micro', 'n_zero_regs', 'reg_checksum', 'hll_est')
 
   full = tag(R.rollup_report(R.rollup_events(spark, sf_dir)),
              'rollup_full')
   merged = tag(R.incremental_rollup(spark, sf_dir), 'rollup_merged')
   streamed = tag(_streaming_rollup(spark, sf_dir), 'rollup_stream')
-  return (cube.unionByName(full).unionByName(merged)
-          .unionByName(streamed)
+  return (_tagged_union(cube, full, merged, streamed)
           .orderBy('method', F.col('event_type').asc_nulls_first(),
                    F.col('dow').asc_nulls_first(), 'day'))
 
@@ -625,8 +612,9 @@ def _bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
       .alias('right'),
       F.col('piece').alias('merged'),
       F.col('em_micro').alias('pair_count'))
-  bpe_rows = merges.withColumn('method', F.lit('bpe'))
-  return (bpe_rows.unionByName(ug_rows, allowMissingColumns=False)
+  bpe_rows = merges.select('rank', 'left', 'right', 'merged', 'pair_count',
+                          F.lit('bpe').alias('method'))
+  return (_tagged_union(bpe_rows, ug_rows)
           .crossJoin(F.broadcast(totals))
           .crossJoin(F.broadcast(it))
           .crossJoin(F.broadcast(f1))
@@ -735,30 +723,20 @@ def _dedup_groups_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
   the verified semantic_dedup snapshot, then recomputes the whole
   composition."""
   from blueprint_oss_spark.ops import textops as T
-  nul_l = F.lit(None).cast('long')
-  nul_i = F.lit(None).cast('int')
-  nul_s = F.lit(None).cast('string')
-  jac = (T.dedup_groups(spark, sf_dir)
-         .withColumn('method', F.lit('jaccard')))
-  mh = (T.dedup_groups(spark, sf_dir, edge_source='minhash')
-        .withColumn('method', F.lit('minhash')))
-  both = (jac.unionByName(mh)
-          .select('method', 'doc_id', 'group_id', 'group_size',
-                  'is_keeper',
-                  nul_i.alias('planted'), nul_i.alias('exact_keep'),
-                  nul_i.alias('jac_keep'), nul_i.alias('sim_keep'),
-                  nul_i.alias('sem_keep'),
-                  nul_i.alias('n_drop_signals'),
-                  nul_i.alias('keep_final'),
-                  nul_s.alias('drop_reason')))
+
+  def groups(method, **kw):
+    return (T.dedup_groups(spark, sf_dir, **kw)
+            .select(F.lit(method).alias('method'), 'doc_id', 'group_id',
+                    'group_size', 'is_keeper'))
+
   dec = (T.dedup_decision_report(spark, sf_dir)
          .select(F.lit('decision').alias('method'), 'doc_id',
                  F.col('jac_group').alias('group_id'),
-                 nul_l.alias('group_size'), nul_i.alias('is_keeper'),
                  'planted', 'exact_keep', 'jac_keep', 'sim_keep',
                  'sem_keep', 'n_drop_signals', 'keep_final',
                  'drop_reason'))
-  return (both.unionByName(dec)
+  return (_tagged_union(groups('jaccard'),
+                        groups('minhash', edge_source='minhash'), dec)
           .orderBy('method', 'doc_id'))
 
 
@@ -769,16 +747,12 @@ def _simhash_sigs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
   operators stays value-checked."""
   from blueprint_oss_spark.ops import textops as T
   sig = T.simhash64(spark, sf_dir).select(
-      F.lit('sig').alias('section'), 'doc_id', 'simhash',
-      F.lit(None).cast('long').alias('doc_b'),
-      F.lit(None).cast('int').alias('hamming'))
+      F.lit('sig').alias('section'), 'doc_id', 'simhash')
   pairs = T.simhash_near_dup_pairs(
       spark, sf_dir, bands=8, key_blocks=5).select(
       F.lit('pair').alias('section'),
-      F.col('doc_a').alias('doc_id'),
-      F.lit(None).cast('long').alias('simhash'),
-      'doc_b', 'hamming')
-  return sig.unionByName(pairs).orderBy('section', 'doc_id', 'doc_b')
+      F.col('doc_a').alias('doc_id'), 'doc_b', 'hamming')
+  return _tagged_union(sig, pairs).orderBy('section', 'doc_id', 'doc_b')
 
 
 def _table_profile_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -794,8 +768,6 @@ def _table_profile_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
   n_distinct_texts are REAL columns on both sections, value-checked
   at both granularities)."""
   from blueprint_oss_spark.ops import profiling as P
-  nul_l = F.lit(None).cast('long')
-  nul_d = F.lit(None).cast('double')
   hll = P.hll_distinct(spark, sf_dir) \
       .select('lang', 'n_zero_regs', 'hll_est')
   qs = P.sampled_quantiles(spark, sf_dir)
@@ -803,85 +775,37 @@ def _table_profile_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
           .join(hll, 'lang')
           .join(qs, 'lang')
           .select(F.lit('profile').alias('method'), 'lang',
-                  F.lit(None).cast('string').alias('source'),
-                  'n_docs', 'n_distinct_texts', 'n_empty', 'min_len',
-                  'max_len', 'total_len', 'first_doc_id',
-                  'last_doc_id', 'n_zero_regs', 'hll_est', 'n_sampled',
-                  'q25', 'q50', 'q75', 'q90',
-                  nul_l.alias('n_tokens'), nul_l.alias('n_chars'),
-                  nul_l.alias('n_quality_keep'),
-                  nul_l.alias('n_dup_docs')))
+                  'n_docs', 'n_distinct_texts', 'n_empty',
+                  F.col('min_len').cast('long').alias('min_len'),
+                  F.col('max_len').cast('long').alias('max_len'),
+                  'total_len', 'first_doc_id', 'last_doc_id',
+                  'n_zero_regs', 'hll_est', 'n_sampled',
+                  'q25', 'q50', 'q75', 'q90'))
   card = (P.data_card(spark, sf_dir)
           .select(F.lit('card').alias('method'), 'lang', 'source',
-                  'n_docs', 'n_distinct_texts',
-                  nul_l.alias('n_empty'), nul_l.alias('min_len'),
-                  nul_l.alias('max_len'), nul_l.alias('total_len'),
-                  nul_l.alias('first_doc_id'),
-                  nul_l.alias('last_doc_id'),
-                  nul_l.alias('n_zero_regs'), nul_d.alias('hll_est'),
-                  nul_l.alias('n_sampled'),
-                  nul_l.alias('q25'), nul_l.alias('q50'),
-                  nul_l.alias('q75'), nul_l.alias('q90'),
-                  'n_tokens', 'n_chars', 'n_quality_keep',
-                  'n_dup_docs',
-                  nul_l.alias('n_bytes'), nul_l.alias('checksum')))
-  prof = prof.withColumn('n_bytes', nul_l) \
-      .withColumn('checksum', nul_l)
+                  'n_docs', 'n_distinct_texts', 'n_tokens', 'n_chars',
+                  'n_quality_keep', 'n_dup_docs'))
   # method='shard': per-output-shard writer manifests — the shard id
   # rides `lang` as 'shard-N'; the order-independent modular content
   # checksum and byte totals are value-checked against the oracle's
   # from-scratch recomputation
+  shard_id = F.concat(F.lit('shard-'), F.col('shard')).alias('lang')
   shard = (P.shard_manifests(spark, sf_dir)
-           .select(F.lit('shard').alias('method'),
-                   F.concat(F.lit('shard-'), F.col('shard'))
-                   .alias('lang'),
-                   F.lit(None).cast('string').alias('source'),
+           .select(F.lit('shard').alias('method'), shard_id,
                    'n_docs', 'n_distinct_texts',
-                   nul_l.alias('n_empty'), nul_l.alias('min_len'),
-                   nul_l.alias('max_len'), nul_l.alias('total_len'),
                    'first_doc_id', 'last_doc_id',
-                   nul_l.alias('n_zero_regs'), nul_d.alias('hll_est'),
-                   nul_l.alias('n_sampled'),
-                   nul_l.alias('q25'), nul_l.alias('q50'),
-                   nul_l.alias('q75'), nul_l.alias('q90'),
-                   'n_tokens', 'n_chars',
-                   nul_l.alias('n_quality_keep'),
-                   nul_l.alias('n_dup_docs'),
-                   'n_bytes', 'checksum'))
+                   'n_tokens', 'n_chars', 'n_bytes', 'checksum'))
   # method='compact': the table-maintenance binpack plan over the SAME
   # manifests (plan_compaction) — order-preserving cumulative-byte
   # binning, exact integer division; bin_id/bin_pos/bin_n_shards/
   # bin_bytes are value-checked per shard (NULL on other sections),
   # n_docs and n_bytes ride their real columns
   compact = (P.plan_compaction(spark, sf_dir)
-             .select(F.lit('compact').alias('method'),
-                     F.concat(F.lit('shard-'), F.col('shard'))
-                     .alias('lang'),
-                     F.lit(None).cast('string').alias('source'),
-                     'n_docs',
-                     nul_l.alias('n_distinct_texts'),
-                     nul_l.alias('n_empty'), nul_l.alias('min_len'),
-                     nul_l.alias('max_len'), nul_l.alias('total_len'),
-                     nul_l.alias('first_doc_id'),
-                     nul_l.alias('last_doc_id'),
-                     nul_l.alias('n_zero_regs'), nul_d.alias('hll_est'),
-                     nul_l.alias('n_sampled'),
-                     nul_l.alias('q25'), nul_l.alias('q50'),
-                     nul_l.alias('q75'), nul_l.alias('q90'),
-                     nul_l.alias('n_tokens'), nul_l.alias('n_chars'),
-                     nul_l.alias('n_quality_keep'),
-                     nul_l.alias('n_dup_docs'),
-                     'n_bytes', nul_l.alias('checksum'),
-                     'bin_id', F.col('bin_pos').cast('long')
-                     .alias('bin_pos'),
+             .select(F.lit('compact').alias('method'), shard_id,
+                     'n_docs', 'n_bytes', 'bin_id',
+                     F.col('bin_pos').cast('long').alias('bin_pos'),
                      'bin_n_shards', 'bin_bytes'))
-  bin_pads = ('bin_id', 'bin_pos', 'bin_n_shards', 'bin_bytes')
-  for c in bin_pads:
-    prof = prof.withColumn(c, nul_l)
-    card = card.withColumn(c, nul_l)
-    shard = shard.withColumn(c, nul_l)
-  return (prof.unionByName(card).unionByName(shard)
-          .unionByName(compact)
+  return (_tagged_union(prof, card, shard, compact)
           .orderBy('method', 'lang', 'source'))
 
 
@@ -902,8 +826,6 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
   score from scratch), score_r/rnk carry the rounded score and the
   per-query rank."""
   from blueprint_oss_spark.ops import textops as T
-  nul_l = F.lit(None).cast('bigint')
-  nul_i = F.lit(None).cast('int')
   cms = (T.count_min_terms(spark, sf_dir)
          .select('term', 'cms_est',
                  F.col('overcount').alias('cms_overcount')))
@@ -922,10 +844,7 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
   bm = (T.bm25_topk(spark, sf_dir)
         .select(F.lit('bm25').alias('method'), 'doc_id',
                 F.col('query').alias('term'),
-                F.col('dl').alias('tf'), nul_l.alias('df'),
-                'score_r', 'rnk', nul_l.alias('cms_est'),
-                nul_l.alias('cms_overcount'), nul_i.alias('hh_heavy'),
-                nul_l.alias('hh_count'), nul_l.alias('hh_n_total')))
+                F.col('dl').alias('tf'), 'score_r', 'rnk'))
   # inverted-index postings build (method='postings', doc_bucket=100
   # so the gate corpus spans 5 buckets): posexploded so the driver
   # value-checks IN-BUCKET POSTING ORDER via rnk (the
@@ -936,11 +855,7 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit('postings').alias('method'),
                 F.col('p.doc_id').alias('doc_id'), 'term',
                 F.col('p.tf').alias('tf'), 'df',
-                F.lit(None).cast('double').alias('score_r'),
                 F.col('pos').cast('int').alias('rnk'),
-                nul_l.alias('cms_est'), nul_l.alias('cms_overcount'),
-                nul_i.alias('hh_heavy'), nul_l.alias('hh_count'),
-                nul_l.alias('hh_n_total'),
                 'bucket', 'df_bucket', 'cf'))
   # cluster labeling (method='ctopics'): top terms per cell — cell
   # rides doc_id, n_in_cell rides tf, n_cells_with rides df.  The
@@ -959,18 +874,8 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col('cell').cast('long').alias('doc_id'), 'term',
                 F.col('n_in_cell').alias('tf'),
                 F.col('n_cells_with').alias('df'),
-                F.lit(None).cast('double').alias('score_r'),
-                F.col('rnk').cast('int').alias('rnk'),
-                nul_l.alias('cms_est'), nul_l.alias('cms_overcount'),
-                nul_i.alias('hh_heavy'), nul_l.alias('hh_count'),
-                nul_l.alias('hh_n_total'), 'n_global'))
-  for c in ('bucket', 'df_bucket', 'cf'):
-    tft = tft.withColumn(c, nul_l)
-    bm = bm.withColumn(c, nul_l)
-    ct = ct.withColumn(c, nul_l)
-  tft, bm, po = (x.withColumn('n_global', nul_l)
-                 for x in (tft, bm, po))
-  return (tft.unionByName(bm).unionByName(po).unionByName(ct)
+                F.col('rnk').cast('int').alias('rnk'), 'n_global'))
+  return (_tagged_union(tft, bm, po, ct)
           .orderBy('method', 'doc_id', 'rnk', 'term'))
 
 
@@ -991,14 +896,12 @@ def _ngram_with_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops.html_extract import (
       interleaved_html_table, main_content_from_spans)
   from blueprint_oss_spark.ops.multimodal import interleaved_near_dup
-  nul_i = F.lit(None).cast('int')
   text = (T.ngram_jaccard_pairs(spark, sf_dir)
           .select(F.lit('text').alias('method'),
                   F.col('doc_a').cast('string').alias('doc_a'),
                   F.col('doc_b').cast('string').alias('doc_b'),
-                  F.lit(1).alias('text_dup'), nul_i.alias('media_dup'),
-                  'n_common', 'n_a', 'n_b',
-                  F.lit(None).cast('bigint').alias('shared_media')))
+                  F.lit(1).alias('text_dup'),
+                  'n_common', 'n_a', 'n_b'))
   spans = main_content_from_spans(interleaved_html_table(spark, sf_dir))
   did = F.col('doc_id').cast('bigint')
   shared = F.concat(F.lit('media/shared'),
@@ -1015,7 +918,7 @@ def _ngram_with_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.lit('interleaved').alias('method'),
                    'doc_a', 'doc_b', 'text_dup', 'media_dup',
                    'n_common', 'n_a', 'n_b', 'shared_media'))
-  return (text.unionByName(inter)
+  return (_tagged_union(text, inter)
           .orderBy('method', 'doc_a', 'doc_b'))
 
 
@@ -1038,9 +941,6 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
   every column of its operator value-checked; columns not belonging
   to a section are typed NULLs."""
   from blueprint_oss_spark.ops import textops as T
-  nul_l = F.lit(None).cast('long')
-  nul_i = F.lit(None).cast('int')
-  nul_s = F.lit(None).cast('string')
   il = (T.pack_interleaved_sequences(spark, sf_dir)
         .select(F.lit('interleaved').alias('method'),
                 F.col('doc_id').cast('long').alias('doc_id'),
@@ -1049,11 +949,9 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 'tokens_before', 'chunk_first', 'chunk_last',
                 'n_chunks',
                 F.col('order').cast('int').alias('chunk_no'),
-                nul_i.alias('start_tok'),
                 F.concat(F.col('kind'), F.lit(':'),
                          F.coalesce('media_ref', F.lit('')))
-                 .alias('chunk_text'),
-                nul_l.alias('fill_tokens')))
+                 .alias('chunk_text')))
   seg = (T.sequence_segments(spark, sf_dir)
          .select('shard', 'chunk', 'n_docs', 'fill_tokens',
                  F.posexplode('segments').alias('pos', 's'))
@@ -1064,12 +962,10 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col('s.doc_offset').cast('long')
                  .alias('tokens_before'),
                  F.col('chunk').cast('long').alias('chunk_first'),
-                 nul_l.alias('chunk_last'),
                  F.col('n_docs').cast('long').alias('n_chunks'),
                  F.col('pos').cast('int').alias('chunk_no'),
                  F.col('s.start_in_chunk').cast('int')
                  .alias('start_tok'),
-                 nul_s.alias('chunk_text'),
                  F.col('fill_tokens').cast('long')
                  .alias('fill_tokens')))
   pack = (T.pack_sequences(spark, sf_dir)
@@ -1077,19 +973,11 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.col('shard').cast('long').alias('shard'),
                   F.col('n_tokens').cast('int').alias('n_tokens'),
                   'tokens_before', 'chunk_first', 'chunk_last',
-                  'n_chunks',
-                  nul_i.alias('chunk_no'), nul_i.alias('start_tok'),
-                  nul_s.alias('chunk_text'),
-                  nul_l.alias('fill_tokens')))
+                  'n_chunks'))
   chunk = (T.chunk_documents(spark, sf_dir)
            .select(F.lit('chunk').alias('method'), 'doc_id',
-                   nul_l.alias('shard'),
                    F.col('n_tokens').cast('int').alias('n_tokens'),
-                   nul_l.alias('tokens_before'),
-                   nul_l.alias('chunk_first'),
-                   nul_l.alias('chunk_last'), nul_l.alias('n_chunks'),
-                   'chunk_no', 'start_tok', 'chunk_text',
-                   nul_l.alias('fill_tokens')))
+                   'chunk_no', 'start_tok', 'chunk_text'))
   # method='lenbucket': sorted-by-length varlen batching with
   # padding-waste accounting (length_bucket_batches — the
   # non-packing loader policy next to pack_sequences).  bucket rides
@@ -1106,10 +994,8 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col('batch_id').cast('long').alias('chunk_last'),
                 F.col('batch_docs').cast('long').alias('n_chunks'),
                 F.col('pos_in_batch').cast('int').alias('chunk_no'),
-                nul_i.alias('start_tok'), nul_s.alias('chunk_text'),
                 F.col('pad_waste').cast('long').alias('fill_tokens')))
-  return (pack.unionByName(chunk).unionByName(il).unionByName(seg)
-          .unionByName(lb)
+  return (_tagged_union(pack, chunk, il, seg, lb)
           .orderBy('method', 'doc_id', 'chunk_no', 'chunk_first'))
 
 
@@ -1128,10 +1014,6 @@ def _curation_pipeline_ablation(spark: SparkSession,
   products from the raw documents table."""
   from blueprint_oss_spark.ops import curation as C
   from blueprint_oss_spark.ops import textops as T
-  nl = F.lit(None).cast('long')
-  ni = F.lit(None).cast('int')
-  ns = F.lit(None).cast('string')
-
   pipe = (T.curation_pipeline(spark, sf_dir)
           .select(F.lit('pipeline').alias('method'),
                   F.col('doc_id').cast('long').alias('doc_id'),
@@ -1140,39 +1022,19 @@ def _curation_pipeline_ablation(spark: SparkSession,
                   F.col('group_size').cast('long').alias('group_size'),
                   F.col('best_id').cast('long').alias('best_id'),
                   F.col('best_n_tokens').cast('long')
-                  .alias('best_n_tokens'),
-                  ni.alias('f_eval'), ni.alias('f_quality'),
-                  ni.alias('f_dup'), ni.alias('f_pii'),
-                  ni.alias('f_decon'), nl.alias('n_pii'),
-                  nl.alias('n_shared'), ns.alias('first_fail'),
-                  ni.alias('stage'), ns.alias('filter_a'),
-                  ns.alias('filter_b'), nl.alias('n_marginal'),
-                  nl.alias('n_attributed'), nl.alias('n_remaining'),
-                  nl.alias('n_both')))
+                  .alias('best_n_tokens')))
   verd_frame = C.curation_ablation(spark, sf_dir,
                                    plant_for_verification=True)
   verd = verd_frame.select(
       F.lit('verdict').alias('method'),
       F.col('doc_id').cast('long').alias('doc_id'),
-      ns.alias('lang'), nl.alias('group_id'), nl.alias('group_size'),
-      nl.alias('best_id'), nl.alias('best_n_tokens'),
       'f_eval', 'f_quality', 'f_dup', 'f_pii', 'f_decon',
-      'n_pii', 'n_shared', 'first_fail',
-      ni.alias('stage'), ns.alias('filter_a'), ns.alias('filter_b'),
-      nl.alias('n_marginal'), nl.alias('n_attributed'),
-      nl.alias('n_remaining'), nl.alias('n_both'))
+      'n_pii', 'n_shared', 'first_fail')
   rep = (C.curation_ablation_report(spark, sf_dir, verdicts=verd_frame)
          .select(F.col('section').alias('method'),
-                 nl.alias('doc_id'), ns.alias('lang'),
-                 nl.alias('group_id'), nl.alias('group_size'),
-                 nl.alias('best_id'), nl.alias('best_n_tokens'),
-                 ni.alias('f_eval'), ni.alias('f_quality'),
-                 ni.alias('f_dup'), ni.alias('f_pii'),
-                 ni.alias('f_decon'), nl.alias('n_pii'),
-                 nl.alias('n_shared'), ns.alias('first_fail'),
                  'stage', 'filter_a', 'filter_b', 'n_marginal',
                  'n_attributed', 'n_remaining', 'n_both'))
-  return (pipe.unionByName(verd).unionByName(rep)
+  return (_tagged_union(pipe, verd, rep)
           .orderBy('method', 'doc_id', 'stage', 'filter_a',
                    'filter_b'))
 
@@ -1203,14 +1065,14 @@ def _embedding_pairs_decon(spark: SparkSession, sf_dir: str) -> DataFrame:
   pairs = (V.embedding_near_dup_pairs(spark, sf_dir,
                                       plant_for_verification=True)
            .select(F.lit('pairs').alias('method'), 'vec_a', 'vec_b',
-                   'cos_r', F.lit(None).cast('int').alias('contaminated')))
+                   'cos_r'))
   decon = (V.semantic_decontaminate(spark, sf_dir,
                                     plant_for_verification=True)
            .select(F.lit('decon').alias('method'),
                    F.col('vec_id').alias('vec_a'),
                    F.col('best_eval_id').alias('vec_b'),
                    F.col('best_cos_r').alias('cos_r'), 'contaminated'))
-  return pairs.unionByName(decon).orderBy('method', 'vec_a', 'vec_b')
+  return _tagged_union(pairs, decon).orderBy('method', 'vec_a', 'vec_b')
 
 
 def _incremental_and_diff(spark: SparkSession,
@@ -1224,18 +1086,13 @@ def _incremental_and_diff(spark: SparkSession,
   operators stays value-checked; columns not belonging to a section
   are typed NULLs."""
   from blueprint_oss_spark.ops import textops as T
-  nul_l = F.lit(None).cast('long')
-  nul_d = F.lit(None).cast('double')
-  nul_s = F.lit(None).cast('string')
   inc = (T.incremental_dedup(spark, sf_dir)
          .select(F.lit('incremental').alias('method'), 'doc_id',
-                 'verdict', 'match_id', 'jac_r',
-                 nul_s.alias('old_hash'), nul_s.alias('new_hash')))
+                 'verdict', 'match_id', 'jac_r'))
   dif = (T.corpus_diff(spark, sf_dir)
          .select(F.lit('diff').alias('method'), 'doc_id', 'verdict',
-                 nul_l.alias('match_id'), nul_d.alias('jac_r'),
                  'old_hash', 'new_hash'))
-  return inc.unionByName(dif).orderBy('method', 'doc_id')
+  return _tagged_union(inc, dif).orderBy('method', 'doc_id')
 
 
 def _substring_paragraph_dedup(spark: SparkSession,
@@ -1255,7 +1112,7 @@ def _substring_paragraph_dedup(spark: SparkSession,
   es = (T.remove_duplicated_spans(spark, sf_dir)
         .select(F.lit('exactsubstr').alias('method'), 'doc_id',
                 'clean_text', F.col('n_tokens').alias('n_units'),
-                'n_removed', F.lit(None).cast('long').alias('n_kept')))
+                'n_removed'))
   # method='exactsubstr50': the paper-faithful length-threshold mode
   # (Lee et al. §3.1 removes duplicated substrings >= 50 tokens only;
   # covered runs shorter than 50 survive).  At gate scale the covered
@@ -1263,7 +1120,7 @@ def _substring_paragraph_dedup(spark: SparkSession,
   e50 = (T.remove_duplicated_spans(spark, sf_dir, min_run_tokens=50)
          .select(F.lit('exactsubstr50').alias('method'), 'doc_id',
                  'clean_text', F.col('n_tokens').alias('n_units'),
-                 'n_removed', F.lit(None).cast('long').alias('n_kept')))
+                 'n_removed'))
   pp = (T.dedup_paragraphs(spark, sf_dir)
         .select(F.lit('paragraph').alias('method'), 'doc_id',
                 'clean_text', F.col('n_paras').alias('n_units'),
@@ -1280,7 +1137,7 @@ def _substring_paragraph_dedup(spark: SparkSession,
   # deterministic variant) — the denoising-objective span surgeon
   # next to the dedup surgeons; input_text rides clean_text, n_tokens
   # n_units, n_masked n_removed, n_runs n_kept, and target_text is
-  # value-checked through its own padded column.
+  # value-checked through its own column.
   t5 = (T.t5_span_corruption(spark, sf_dir)
         .select(F.lit('t5span').alias('method'), 'doc_id',
                 F.col('input_text').alias('clean_text'),
@@ -1288,11 +1145,7 @@ def _substring_paragraph_dedup(spark: SparkSession,
                 F.col('n_masked').alias('n_removed'),
                 F.col('n_runs').alias('n_kept'),
                 'target_text'))
-  nul_s = F.lit(None).cast('string')
-  es, e50, pp, c4, dl = (x.withColumn('target_text', nul_s)
-                         for x in (es, e50, pp, c4, dl))
-  return (es.unionByName(e50).unionByName(pp).unionByName(c4)
-          .unionByName(dl).unionByName(t5)
+  return (_tagged_union(es, e50, pp, c4, dl, t5)
           .orderBy('method', 'doc_id'))
 
 
@@ -1396,64 +1249,24 @@ def _html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                     html_main_content,
                                                     justext_main_content)
   from blueprint_oss_spark.ops.warc import parse_warc_records
-  nul_s = F.lit(None).cast('string')
-  nul_i = F.lit(None).cast('int')
-  nul_l = F.lit(None).cast('long')
-  anc_nulls = [nul_l.alias('n_links'), nul_l.alias('n_docs'),
-               nul_s.alias('top_anchor'), nul_l.alias('top_anchor_n')]
   dom = (html_main_content(spark, sf_dir)
-         .select(F.lit('dom').alias('method'), 'doc_id', 'main_text',
-                 nul_s.alias('target_uri'), nul_i.alias('status'),
-                 nul_s.alias('content_type'),
-                 nul_l.alias('declared_len'), nul_l.alias('body_len'),
-                 nul_i.alias('length_ok'), nul_i.alias('link_pos'),
-                 nul_s.alias('href'), nul_s.alias('anchor_text'),
-                 *anc_nulls))
+         .select(F.lit('dom').alias('method'), 'doc_id', 'main_text'))
   wrc = (parse_warc_records(spark, sf_dir)
          .select(F.lit('warc').alias('method'), 'doc_id', 'main_text',
                  'target_uri', 'status', 'content_type',
-                 'declared_len', 'body_len', 'length_ok',
-                 nul_i.alias('link_pos'), nul_s.alias('href'),
-                 nul_s.alias('anchor_text'), *anc_nulls))
+                 'declared_len', 'body_len', 'length_ok'))
   lnk = (extract_links(spark, sf_dir)
          .select(F.lit('links').alias('method'), 'doc_id',
-                 nul_s.alias('main_text'), nul_s.alias('target_uri'),
-                 nul_i.alias('status'), nul_s.alias('content_type'),
-                 nul_l.alias('declared_len'), nul_l.alias('body_len'),
-                 nul_i.alias('length_ok'), 'link_pos', 'href',
-                 'anchor_text', *anc_nulls))
+                 'link_pos', 'href', 'anchor_text'))
   anc = (anchor_stats(spark, sf_dir)
-         .select(F.lit('anchors').alias('method'),
-                 nul_l.alias('doc_id'), nul_s.alias('main_text'),
-                 nul_s.alias('target_uri'), nul_i.alias('status'),
-                 nul_s.alias('content_type'),
-                 nul_l.alias('declared_len'), nul_l.alias('body_len'),
-                 nul_i.alias('length_ok'), nul_i.alias('link_pos'),
-                 'href', nul_s.alias('anchor_text'),
+         .select(F.lit('anchors').alias('method'), 'href',
                  'n_links', 'n_docs', 'top_anchor', 'top_anchor_n'))
   jx = (justext_main_content(spark, sf_dir)
         .select(F.lit('justext').alias('method'), 'doc_id',
-                'main_text', nul_s.alias('target_uri'),
-                nul_i.alias('status'), nul_s.alias('content_type'),
-                nul_l.alias('declared_len'), nul_l.alias('body_len'),
-                nul_i.alias('length_ok'), nul_i.alias('link_pos'),
-                nul_s.alias('href'), nul_s.alias('anchor_text'),
-                *anc_nulls,
-                'n_blocks', 'n_good', 'n_neargood', 'n_short',
-                'n_bad', 'n_kept'))
-  jx_pads = ('n_blocks', 'n_good', 'n_neargood', 'n_short', 'n_bad',
-             'n_kept')
-  dom, wrc, lnk, anc = (
-      _with_null_ints(df_, jx_pads) for df_ in (dom, wrc, lnk, anc))
-  return (dom.unionByName(wrc).unionByName(lnk).unionByName(anc)
-          .unionByName(jx)
+                'main_text', 'n_blocks', 'n_good', 'n_neargood',
+                'n_short', 'n_bad', 'n_kept'))
+  return (_tagged_union(dom, wrc, lnk, anc, jx)
           .orderBy('method', 'doc_id', 'link_pos', 'href'))
-
-
-def _with_null_ints(df_: DataFrame, cols) -> DataFrame:
-  for c in cols:
-    df_ = df_.withColumn(c, F.lit(None).cast('int'))
-  return df_
 
 
 def _plant_site_assets(content: DataFrame) -> DataFrame:
@@ -1495,15 +1308,9 @@ def _web_curation_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops.multimodal import (
       interleaved_curation_pipeline,
   )
-  ns = F.lit(None).cast('string')
-  ni = F.lit(None).cast('int')
   web = (C.web_curation_pipeline(spark, sf_dir)
          .select(F.lit('web').alias('method'), 'doc_id', 'lang',
-                 'group_id', 'group_size', ns.alias('rendered_text'),
-                 ns.alias('manifest'), ni.alias('n_sentinels'),
-                 ni.alias('n_render_tokens'),
-                 ni.alias('n_media_removed'), ni.alias('n_media'),
-                 ni.alias('n_tokens')))
+                 'group_id', 'group_size'))
   # checkpoint: dedup_media_spans references the content frame in two
   # subtrees (hot-set build + rewrite) — un-checkpointed, the Arrow
   # synthesis+strip stage would run twice
@@ -1512,14 +1319,12 @@ def _web_curation_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
   inter = (interleaved_curation_pipeline(spark, sf_dir,
                                          content=planted)
            .select(F.lit('interleaved').alias('method'), 'doc_id',
-                   ns.alias('lang'), ns.alias('group_id'),
-                   F.lit(None).cast('bigint').alias('group_size'),
                    'rendered_text',
                    F.array_join('media_manifest', ',')
                    .alias('manifest'),
                    'n_sentinels', 'n_render_tokens',
                    'n_media_removed', 'n_media', 'n_tokens'))
-  return web.unionByName(inter).orderBy('method', 'doc_id')
+  return _tagged_union(web, inter).orderBy('method', 'doc_id')
 
 
 def _main_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1584,67 +1389,40 @@ def _main_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
   )
   df = interleaved_html_table(spark, sf_dir)
   out = main_content_from_spans(df).localCheckpoint()
-  ns = F.lit(None).cast('string')
-  ni = F.lit(None).cast('int')
-
-  def _pad(d):
-    cols = ('n_spans', 'n_text', 'n_media', 'n_tokens', 'media_run',
-            'lead_media', 'trail_media', 'keep', 'n_sentinels',
-            'n_render_tokens', 'n_media_removed', 'token_start',
-            'span_n_tokens', 'sentinel_idx', 'found', 'n_bytes',
-            'width', 'height', 'keep_media')
-    for c in cols:
-      if c not in d.columns:
-        d = d.withColumn(c, ni)
-    for c in ('manifest', 'mime', 'reject_reason'):
-      if c not in d.columns:
-        d = d.withColumn(c, ns)
-    if 'clip_r' not in d.columns:
-      d = d.withColumn('clip_r', F.lit(None).cast('double'))
-    return d
-
-  spans = _pad(span_token_offsets(out)
-               .select(F.lit('span').alias('method'), 'doc_id',
-                       'span_order', 'kind', 'text', 'media_ref',
-                       ns.alias('cap_before'), ns.alias('cap_after'),
-                       'token_start',
-                       F.col('n_tokens').alias('span_n_tokens')))
-  caps = _pad(caption_pairs(out, max_caption_tokens=8)
-              .select(F.lit('caption').alias('method'), 'doc_id',
-                      F.col('media_order').alias('span_order'),
-                      F.lit('media').alias('kind'), ns.alias('text'),
-                      'media_ref',
-                      F.col('caption_before').alias('cap_before'),
-                      F.col('caption_after').alias('cap_after')))
+  spans = (span_token_offsets(out)
+           .select(F.lit('span').alias('method'), 'doc_id',
+                   'span_order', 'kind', 'text', 'media_ref',
+                   'token_start',
+                   F.col('n_tokens').alias('span_n_tokens')))
+  caps = (caption_pairs(out, max_caption_tokens=8)
+          .select(F.lit('caption').alias('method'), 'doc_id',
+                  F.col('media_order').alias('span_order'),
+                  F.lit('media').alias('kind'), 'media_ref',
+                  F.col('caption_before').alias('cap_before'),
+                  F.col('caption_after').alias('cap_after')))
 
   planted = _plant_site_assets(out)
-  doc_cols = [F.lit(None).cast('int').alias('span_order'),
-              ns.alias('kind'), ns.alias('text'),
-              ns.alias('media_ref'), ns.alias('cap_before'),
-              ns.alias('cap_after')]
-  stats = _pad(interleaved_doc_stats(
+  stats = (interleaved_doc_stats(
       planted, min_images=1, max_images=4, min_text_tokens=8,
       max_media_run=3)
-      .select(F.lit('stats').alias('method'), 'doc_id', *doc_cols,
+      .select(F.lit('stats').alias('method'), 'doc_id',
               'n_spans', 'n_text', 'n_media', 'n_tokens', 'media_run',
               'lead_media', 'trail_media', 'keep'))
-  rend = _pad(render_interleaved(planted)
-              .select(F.lit('render').alias('method'), 'doc_id',
-                      *doc_cols[:2],
-                      F.col('rendered_text').alias('text'),
-                      *doc_cols[3:],
-                      F.array_join('media_manifest', ',')
-                      .alias('manifest'),
-                      'n_sentinels', 'n_render_tokens'))
-  mdd = _pad(dedup_media_spans(planted, max_media_df=20)
-             .select(F.lit('mediadedup').alias('method'), 'doc_id',
-                     *doc_cols,
-                     F.expr("array_join(transform(filter(out_spans, "
-                            "s -> s.kind = 'media'), s -> s.media_ref)"
-                            ", ',')").alias('manifest'),
-                     'n_media_removed'))
+  rend = (render_interleaved(planted)
+          .select(F.lit('render').alias('method'), 'doc_id',
+                  F.col('rendered_text').alias('text'),
+                  F.array_join('media_manifest', ',').alias('manifest'),
+                  'n_sentinels', 'n_render_tokens'))
+  mdd = (dedup_media_spans(planted, max_media_df=20)
+         .select(F.lit('mediadedup').alias('method'), 'doc_id',
+                 F.expr("array_join(transform(filter(out_spans, "
+                        "s -> s.kind = 'media'), s -> s.media_ref)"
+                        ", ',')").alias('manifest'),
+                 'n_media_removed'))
   docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
           .select(F.col('doc_id').cast('long').alias('did')))
+  # one schema, both frames listing it in the same order: a strict
+  # positional union, not a tagged one
   media_dim = (docs.where(F.pmod('did', F.lit(2)) == 0)
                .select(F.concat(F.lit('media/'), F.col('did'),
                                 F.lit('/0')).alias('media_ref'),
@@ -1655,15 +1433,14 @@ def _main_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias('width'),
                        ((F.pmod('did', F.lit(5)) + 1) * 10).cast('int')
                        .alias('height'))
-               .unionByName(spark.createDataFrame(
+               .union(spark.createDataFrame(
                    [('media/logo', 7, 'image/gif', 600, 60)],
                    'media_ref string, n_bytes int, mime string, '
                    'width int, height int')))
-  res = _pad(media_quality_verdicts(
+  res = (media_quality_verdicts(
       planted, media_dim, allowed_mime=('image/png',), min_bytes=100,
       min_width=20, max_aspect=3.0)
-      .select(F.lit('resolve').alias('method'), 'doc_id',
-              *doc_cols[:3], 'media_ref', *doc_cols[4:],
+      .select(F.lit('resolve').alias('method'), 'doc_id', 'media_ref',
               'sentinel_idx', 'found', 'n_bytes', 'mime',
               'width', 'height', 'keep_media', 'reject_reason'))
   # CLIP-score-style caption<->image alignment (method='clip'): the
@@ -1672,28 +1449,23 @@ def _main_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
   # every cosine/verdict recomputable in SQL from the synthesis
   # formulas + the embeddings view (n_cap_tokens rides n_tokens,
   # the verdict rides keep)
-  clip = _pad(caption_image_alignment(spark, sf_dir, content=out)
-              .select(F.lit('clip').alias('method'), 'doc_id',
-                      F.col('media_order').alias('span_order'),
-                      F.lit('media').alias('kind'), ns.alias('text'),
-                      'media_ref', ns.alias('cap_before'),
-                      ns.alias('cap_after'),
-                      F.col('n_cap_tokens').alias('n_tokens'),
-                      'found', 'keep', 'clip_r'))
+  clip = (caption_image_alignment(spark, sf_dir, content=out)
+          .select(F.lit('clip').alias('method'), 'doc_id',
+                  F.col('media_order').alias('span_order'),
+                  F.lit('media').alias('kind'), 'media_ref',
+                  F.col('n_cap_tokens').alias('n_tokens'),
+                  'found', 'keep', 'clip_r'))
   # ingest validation / quarantine (method='validate'): the front-door
   # contract check over the SAME synthesized table with deterministic
   # doc_id % 7 corruption planted, so every first-failure verdict and
   # post-corruption span count is recomputable by pure integer
   # arithmetic (keep rides valid, reject_reason rides reason)
   from blueprint_oss_spark.ops.ingest import validate_interleaved
-  val = _pad(validate_interleaved(spark, sf_dir, plant_corruptions=True)
-             .select(F.lit('validate').alias('method'), 'doc_id',
-                     *doc_cols, 'n_spans',
-                     F.col('valid').alias('keep'),
-                     F.col('reason').alias('reject_reason')))
-  return (spans.unionByName(caps).unionByName(stats)
-          .unionByName(rend).unionByName(mdd).unionByName(res)
-          .unionByName(clip).unionByName(val)
+  val = (validate_interleaved(spark, sf_dir, plant_corruptions=True)
+         .select(F.lit('validate').alias('method'), 'doc_id', 'n_spans',
+                 F.col('valid').alias('keep'),
+                 F.col('reason').alias('reject_reason')))
+  return (_tagged_union(spans, caps, stats, rend, mdd, res, clip, val)
           .orderBy('method', 'doc_id', 'span_order', 'sentinel_idx'))
 
 

@@ -308,8 +308,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
 def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
                         min_run_tokens: int = None,
                         sort: bool = True,
-                        eval_texts: DataFrame | None = None,
-                        docs: DataFrame | None = None) -> DataFrame:
+                        eval_texts: DataFrame | None = None) -> DataFrame:
   """Span-level decontamination — the surgical third option next to
   whole-doc flagging (`decontaminate`) and fixed-memory probing
   (`bloom_decontaminate`): remove exactly the token positions covered
@@ -338,8 +337,7 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
   `decontaminate`, whose flag-only semantics can afford it)."""
   from .textops import gram_occurrences, strip_covered_tokens
 
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   if eval_texts is not None:
     ev_side = eval_texts.select(F.lit('').alias('doc_id'), 'text')
     train = d
@@ -362,7 +360,6 @@ _QC_BUCKETS = 4096
 
 
 def quality_classifier(spark: SparkSession, sf_dir: str, *,
-                       docs: DataFrame | None = None,
                        labels: DataFrame | None = None) -> DataFrame:
   """fastText-style hashed bag-of-words quality classifier, trained
   in-job and applied corpus-wide — the GPT-3/CCNet/FineWeb pattern
@@ -398,8 +395,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
   produce no row."""
   from .textops import quality_keep_expr
 
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
 
   bkt = lambda w: F.pmod(
       F.conv(F.substring(F.md5(F.concat(F.lit('qc:'), w)), 1, 8),
@@ -768,7 +764,6 @@ def unimax_mix(spark: SparkSession, sf_dir: str, *,
 
 
 def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
-                           docs: DataFrame = None,
                            target_docs: DataFrame = None) -> DataFrame:
   """DSIR-style data selection (Xie et al. 2023, "Data Selection for
   Language Models via Importance Resampling", arXiv:2302.03169):
@@ -800,8 +795,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
   (doc_fingerprints), computed JVM-side per occurrence.  No Python,
   no driver collect; the only scalar (N_T, N_R) rides a broadcast
   1-row cross join."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'lang', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'lang', 'text')
   feats = d.select('doc_id', 'lang', words('text').alias('w')) \
       .select('doc_id', 'lang',
               F.concat(F.col('w'), word_ngrams('w', 2)).alias('feats'))

@@ -301,33 +301,47 @@ def main_content_from_spans(df: DataFrame) -> DataFrame:
   left-to-right), plain-text spans are whitespace-normalized, media
   spans pass through untouched, and the output preserves the
   interleave as (kind, text, media_ref, order) with order = rank in
-  the offset-sorted input sequence.  A PDF span that fails to parse
-  yields an empty text span (documented degradation — the pipeline
-  has no error column; tested).
+  the offset-sorted input sequence.  A PDF or HTML span that fails to
+  parse yields an empty text span (documented degradation; tested).
+  A document that breaks the span contract (spark/pipeline.check_spans:
+  null spans array, null span, null kind or offset), or that fails any
+  other way, yields out_spans=[], n_html=0 and its `error` in the
+  extraction kernel's classes (`malformed: …` / `error: <Type>: …`),
+  so one bad row never fails the task; NULL `error` on every other
+  document.
 
   Plan shape: Scan → MapInPandas — ZERO shuffles, embarrassingly
   parallel over doc_id like the blueprint extraction path (pinned by
   tests/test_html_extract.py); at 10^12 docs the only lever is
   executor count.  Arrow-batched; no per-row Python."""
-  from ..spark.pipeline import OUT_SPAN_STRUCT, pin_spark_zip_importers
+  from ..spark.pipeline import (
+      OUT_SPAN_STRUCT, check_spans, doc_error, pin_spark_zip_importers,
+  )
 
   out_schema = StructType([
       StructField('doc_id', df.schema['doc_id'].dataType),
       StructField('out_spans', ArrayType(OUT_SPAN_STRUCT)),
       StructField('n_html', IntegerType()),
+      StructField('error', StringType()),
   ])
 
   def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     pin_spark_zip_importers()
     for pdf in batches:
-      ids, outs, n_htmls = [], [], []
+      ids, outs, n_htmls, errors = [], [], [], []
       for doc_id, spans in zip(pdf['doc_id'], pdf['spans']):
-        out, n_html = main_content_doc(spans)
+        try:
+          check_spans(spans, None)
+          out, n_html = main_content_doc(spans)
+          error = None
+        except Exception as e:  # noqa: BLE001 — per-doc containment
+          out, n_html, error = [], 0, doc_error(e)
         ids.append(doc_id)
         outs.append(out)
         n_htmls.append(n_html)
+        errors.append(error)
       yield pd.DataFrame({'doc_id': ids, 'out_spans': outs,
-                          'n_html': n_htmls})
+                          'n_html': n_htmls, 'error': errors})
 
   return df.mapInPandas(run, out_schema)
 

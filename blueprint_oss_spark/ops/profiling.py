@@ -184,8 +184,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
           .orderBy('lang'))
 
 
-def data_card(spark: SparkSession, sf_dir: str, *,
-              docs: DataFrame = None) -> DataFrame:
+def data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Per-(lang, source) corpus data card — the composition report a
   dataset release ships (the Datasheets/Dolma-style summary: how much
   of which language from which source, how much survives quality
@@ -204,8 +203,7 @@ def data_card(spark: SparkSession, sf_dir: str, *,
   from blueprint_oss_spark.ops.textops import quality_keep_expr
   # stage the token array once (no CSE for interpreted HOFs — the
   # review caught n_toks + every keep sub-verdict each re-tokenizing)
-  d = (docs if docs is not None else
-       spark.read.parquet(f'{sf_dir}/documents.parquet')) \
+  d = spark.read.parquet(f'{sf_dir}/documents.parquet') \
       .select('lang', 'source', 'text', words('text').alias('toks'))
   base = d.select(
       'lang', 'source', 'text',

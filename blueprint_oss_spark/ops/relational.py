@@ -609,8 +609,7 @@ def rollup_report(state: DataFrame) -> DataFrame:
 
 
 def incremental_rollup(spark: SparkSession, sf_dir: str, *,
-                       split_day: str = '2024-01-21',
-                       events: DataFrame = None) -> DataFrame:
+                       split_day: str = '2024-01-21') -> DataFrame:
   """The incremental-maintenance harness: rebuild the rollup as
   merge(rollup(history), rollup(new batch)) with the event table
   split at `split_day` — the daily-crawl / late-arriving-facts shape
@@ -620,8 +619,7 @@ def incremental_rollup(spark: SparkSession, sf_dir: str, *,
   report; equality with the full-scan rollup is asserted bitwise in
   tests and by the gate (both sections hash against the same oracle
   rows)."""
-  ev = (events if events is not None
-        else _t(spark, sf_dir, 'events'))
+  ev = _t(spark, sf_dir, 'events')
   old = ev.where(F.date_format('ts', 'yyyy-MM-dd') < split_day)
   new = ev.where(F.date_format('ts', 'yyyy-MM-dd') >= split_day)
   merged = merge_rollups(rollup_events(spark, sf_dir, events=old),

@@ -150,8 +150,7 @@ def parse_sitemaps(spark: SparkSession, *,
 
 
 def sitemap_coverage(spark: SparkSession, sf_dir: str, *,
-                     urls: DataFrame = None,
-                     sitemaps: DataFrame = None) -> DataFrame:
+                     urls: DataFrame = None) -> DataFrame:
   """Per-document sitemap membership verdict over the curation
   frontier: does the site's published sitemap list this page, and
   with what recrawl metadata?
@@ -175,7 +174,7 @@ def sitemap_coverage(spark: SparkSession, sf_dir: str, *,
   u = (urls if urls is not None
        else url_curation(spark, sf_dir)
        .select('doc_id', 'norm_url', 'domain'))
-  sm = sitemaps if sitemaps is not None else synth_sitemaps(spark)
+  sm = synth_sitemaps(spark)
   pub = sm.select('domain').withColumn('has_sitemap', F.lit(1))
   entries = (parse_sitemaps(spark, sitemaps=sm)
              .select(F.col('loc').alias('norm_url'),

@@ -424,8 +424,7 @@ def minhash_shingles(spark: SparkSession, sf_dir: str, *,
 
 def minhash_calibration(spark: SparkSession, sf_dir: str, *,
                         max_bucket_size: int = 0,
-                        docs: DataFrame = None,
-                        pairs: DataFrame = None) -> DataFrame:
+                        docs: DataFrame = None) -> DataFrame:
   """MinHash estimator calibration — the report production dedup teams
   run to pick (n_hashes, bands, rows): for every candidate pair of
   minhash_shingles' default LSH, the ESTIMATED Jaccard evidence
@@ -452,10 +451,8 @@ def minhash_calibration(spark: SparkSession, sf_dir: str, *,
            .select('doc_id',
                    F.array_distinct('sh').alias('shset'),
                    F.array(*[f'm{s}' for s in seeds]).alias('sig')))
-  p = (pairs if pairs is not None
-       else minhash_shingles(spark, sf_dir,
-                             max_bucket_size=max_bucket_size,
-                             docs=docs))
+  p = minhash_shingles(spark, sf_dir, max_bucket_size=max_bucket_size,
+                       docs=docs)
   fa = feats.select(F.col('doc_id').alias('doc_a'),
                     F.col('shset').alias('sa'), F.col('sig').alias('ga'))
   fb = feats.select(F.col('doc_id').alias('doc_b'),
@@ -978,8 +975,7 @@ _PACK_TOKENS = 256
 
 
 def pack_sequences(spark: SparkSession, sf_dir: str, *,
-                   sort: bool = True,
-                   docs: DataFrame = None) -> DataFrame:
+                   sort: bool = True) -> DataFrame:
   """GPT-style sequence packing (concat-and-chunk): documents are
   concatenated in deterministic order and chunked into fixed
   _PACK_TOKENS-token training sequences, ignoring doc boundaries — the
@@ -999,8 +995,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
   is needed — swap the expression, the window shape is unchanged)."""
   from pyspark.sql import Window
 
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   sized = d.select(
       'doc_id',
       F.size(words('text')).alias('n_tokens'),
@@ -1028,8 +1023,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
 
 
 def sequence_segments(spark: SparkSession, sf_dir: str, *,
-                      packed: DataFrame = None,
-                      docs: DataFrame = None) -> DataFrame:
+                      packed: DataFrame = None) -> DataFrame:
   """The dataloader-side INVERSION of `pack_sequences`: one row per
   (shard, chunk) training sequence, carrying the ordered segment map a
   packed-pretraining loader needs to build attention masks and
@@ -1057,7 +1051,7 @@ def sequence_segments(spark: SparkSession, sf_dir: str, *,
   size — no skew exposure.  All JVM built-ins; DuckDB recomputes the
   same arithmetic from the window sum."""
   p = (packed if packed is not None
-       else pack_sequences(spark, sf_dir, docs=docs))
+       else pack_sequences(spark, sf_dir))
   mt = F.lit(_PACK_TOKENS).cast('long')
   e = (p.where(F.col('n_tokens') > 0)
        .select('doc_id', 'shard', 'n_tokens', 'tokens_before',
@@ -1172,7 +1166,6 @@ def pack_interleaved_sequences(spark: SparkSession, sf_dir: str, *,
 
 def count_min_terms(spark: SparkSession, sf_dir: str, *,
                     width: int = 256, depth: int = 4,
-                    docs: DataFrame = None,
                     terms: DataFrame = None) -> DataFrame:
   """Count-Min Sketch term frequencies (Cormode & Muthukrishnan 2005):
   estimate every queried term's corpus-wide occurrence count from a
@@ -1196,8 +1189,7 @@ def count_min_terms(spark: SparkSession, sf_dir: str, *,
   Output: (term, true_count, cms_est, overcount), term-sorted.  All
   hashing is md5 (cross-engine exact) and all counts integers, so a
   from-scratch DuckDB oracle reproduces every cell and estimate."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
 
   def h(j: int, c):
     return F.pmod(
@@ -1418,9 +1410,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *,
           .orderBy('query_id', 'rnk'))
 
 
-def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
-                       postings: DataFrame = None,
-                       docs: DataFrame = None) -> DataFrame:
+def bm25_from_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
   """BM25 served FROM the materialized postings index — the
   query-time path build_postings exists for, proving the index
   actually serves what the scan-based scorer computes: identical
@@ -1443,10 +1433,8 @@ def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
       FileScan when the index is materialized."""
   from pyspark.sql import Window
 
-  idx = (postings if postings is not None
-         else build_postings(spark, sf_dir, docs=docs))
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  idx = build_postings(spark, sf_dir)
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   dls = d.select('doc_id', F.size(words('text')).cast('bigint').alias('dl'))
   tot = dls.agg(F.count(F.lit(1)).alias('n'),
                 F.sum('dl').alias('sum_dl')).collect()[0]
@@ -1497,8 +1485,7 @@ def bm25_from_postings(spark: SparkSession, sf_dir: str, *,
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str, *,
-                    chunk_tokens: int = 64, overlap: int = 16,
-                    docs: DataFrame = None) -> DataFrame:
+                    chunk_tokens: int = 64, overlap: int = 16) -> DataFrame:
   """Overlapping fixed-size token windows per document — the
   RAG-indexing / eval-windowing twin of pack_sequences (which crosses
   doc boundaries; this one never does).  Chunk i covers tokens
@@ -1516,8 +1503,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str, *,
     raise ValueError(f'need 0 <= overlap < chunk_tokens, got '
                      f'{overlap} / {chunk_tokens}')
   step = chunk_tokens - overlap
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   toks = words('text')
 
   def chunks(t):
@@ -1627,8 +1613,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str, *,
 def remove_duplicated_spans(spark: SparkSession, sf_dir: str, *,
                             n: int = 10,
                             min_run_tokens: int = None,
-                            sort: bool = True,
-                            docs: DataFrame = None) -> DataFrame:
+                            sort: bool = True) -> DataFrame:
   """Exact substring deduplication (Lee et al. 2022, "Deduplicating
   Training Data Makes Language Models Better", arXiv:2107.06499 §3.1
   ExactSubstr): any word n-gram whose occurrence count across the
@@ -1669,8 +1654,7 @@ def remove_duplicated_spans(spark: SparkSession, sf_dir: str, *,
   doc_id — the covered frame is already (doc_id, pos)-shuffled, and
   run length is bounded by doc length, so the extra window adds one
   doc-keyed exchange over the (small) covered subset only."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   # spread a single-split scan before the map-heavy n-gram stage (same
   # metadata-only check as minhash_shingles)
   d = spread_small_scan(d)
@@ -1928,8 +1912,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
 def build_postings(spark: SparkSession, sf_dir: str, *,
                    doc_bucket: int = 1024,
                    terms: tuple = None,
-                   materialize: bool = True,
-                   docs: DataFrame = None) -> DataFrame:
+                   materialize: bool = True) -> DataFrame:
   """Inverted-index postings materialization — the bulk index-build
   product behind the IR family (tf·idf terms, CMS estimates, exact
   heavy hitters, BM25 ranking all SCORE; this operator builds the
@@ -1964,8 +1947,7 @@ def build_postings(spark: SparkSession, sf_dir: str, *,
   materialize=False to keep the plan fully lazy for composition."""
   if doc_bucket <= 0:
     raise ValueError('doc_bucket must be positive')
-  d = (docs if docs is not None
-       else _docs(spark, sf_dir)).select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   occ = d.select('doc_id', F.explode(words('text')).alias('term'))
   if terms is not None:
     occ = occ.where(F.col('term').isin(*terms))
@@ -2515,8 +2497,7 @@ BOILERPLATE_SENTS = (
 )
 
 
-def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
-                  docs: DataFrame = None) -> DataFrame:
+def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
   """C4's exact deduplication unit (Raffel et al. 2020 §2.2: "we
   discarded all but one of any three-sentence span occurring more than
   once in the data set"): every occurrence of a duplicated
@@ -2542,8 +2523,7 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str, *,
   (doc_id, sentence pos) and the rebuild one per-doc aggregation.
   No Python, no windows over the corpus, no driver collect."""
   w = 8
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   triples = ', '.join(
       "array(%s)" % ', '.join(f"'{s}'" for s in t)
       for t in BOILERPLATE_SENTS)

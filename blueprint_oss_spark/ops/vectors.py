@@ -889,8 +889,7 @@ def bitext_mine(spark: SparkSession, sf_dir: str, *,
 
 
 def pca_train(spark: SparkSession, sf_dir: str, *,
-              k: int = 8,
-              embeddings: DataFrame = None):
+              k: int = 8):
   """PCA basis training over the embedding table — the
   dimensionality-reduction step DataComp-style pipelines run in front
   of ANN / SemDeDup so distance computations pay k dims instead of d.
@@ -916,8 +915,7 @@ def pca_train(spark: SparkSession, sf_dir: str, *,
   means, components = k rows of float64 eigenvectors (descending
   eigenvalue), eigvals = their variances."""
   import numpy as np
-  e = (embeddings if embeddings is not None
-       else _emb(spark, sf_dir)).select('embedding')
+  e = _emb(spark, sf_dir).select('embedding')
   d = len(e.first()['embedding'])
   if not 0 < k <= d:
     raise ValueError(f'k must be in 1..{d}')
@@ -966,8 +964,7 @@ def pca_train(spark: SparkSession, sf_dir: str, *,
 
 def pca_project(spark: SparkSession, sf_dir: str, *,
                 k: int = 8,
-                model=None,
-                embeddings: DataFrame = None) -> DataFrame:
+                model=None) -> DataFrame:
   """Project every embedding onto the trained PCA basis:
   (vec_id, label, proj array<double> of length k) with
   proj[c] = Σ_i (x_i − mean_i)·v_c_i evaluated as a PINNED
@@ -980,10 +977,9 @@ def pca_project(spark: SparkSession, sf_dir: str, *,
   the quality_classifier broadcast-model device, d and k are model
   constants."""
   if model is None:
-    model = pca_train(spark, sf_dir, k=k, embeddings=embeddings)
+    model = pca_train(spark, sf_dir, k=k)
   means, comps, _ = model
-  e = (embeddings if embeddings is not None
-       else _emb(spark, sf_dir))
+  e = _emb(spark, sf_dir)
   d = len(means)
   mean_sql = ', '.join(repr(m) for m in means)
   projs = []
@@ -1108,8 +1104,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str, *,
 
 
 def kmeans_assign(spark: SparkSession, sf_dir: str, *,
-                  model=None,
-                  embeddings: DataFrame = None) -> DataFrame:
+                  model=None) -> DataFrame:
   """Final-model cell assignment for every vector: (vec_id, label,
   cell, cos_r) where cell is the first-argmax nearest trained centroid
   and cos_r the round-6 cosine to it (vectors are unit-normalized, so
@@ -1118,9 +1113,8 @@ def kmeans_assign(spark: SparkSession, sf_dir: str, *,
   literal-baked exactly like pca_project.  Without a `model`, trains
   kmeans_train's default model first."""
   if model is None:
-    model, _ = kmeans_train(spark, sf_dir, embeddings=embeddings)
-  e = (embeddings if embeddings is not None
-       else _emb(spark, sf_dir))
+    model, _ = kmeans_train(spark, sf_dir)
+  e = _emb(spark, sf_dir)
   vec = F.transform(F.col('embedding'), lambda x: x.cast('double'))
   base = (e.select('vec_id', 'label', vec.alias('v'))
           .select('vec_id', 'label', 'v',
@@ -1267,8 +1261,7 @@ def ann_eval(spark: SparkSession, sf_dir: str, *,
 
 
 def cluster_topics(spark: SparkSession, sf_dir: str, *,
-                   assignments: DataFrame = None,
-                   docs: DataFrame = None) -> DataFrame:
+                   assignments: DataFrame = None) -> DataFrame:
   """Cluster labeling — the inspection report every embedding-cluster
   pipeline (SemDeDup, Dolma's quality clusters, topic-balanced
   sampling) produces before trusting its cells: for each k-means cell,
@@ -1297,8 +1290,7 @@ def cluster_topics(spark: SparkSession, sf_dir: str, *,
   a = (assignments if assignments is not None
        else kmeans_assign(spark, sf_dir)) \
       .select(F.col('vec_id').alias('doc_id'), 'cell')
-  d = (docs if docs is not None
-       else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
+  d = spark.read.parquet(f'{sf_dir}/documents.parquet') \
       .select('doc_id', 'text')
   toks = F.filter(
       words('text'),

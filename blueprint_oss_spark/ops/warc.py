@@ -26,8 +26,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
   return spark.read.parquet(f'{sf_dir}/documents.parquet')
 
 
-def synth_warc_records(spark: SparkSession, sf_dir: str, *,
-                       docs: DataFrame = None) -> DataFrame:
+def synth_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Deterministic WARC/1.0 response records over the documents
   corpus (doc_id, record:string) — the same synthesis device as
   c4_line_clean's lines / url_curation's URLs, so the DuckDB oracle
@@ -45,8 +44,7 @@ def synth_warc_records(spark: SparkSession, sf_dir: str, *,
   Record = WARC header block + CRLFCRLF + HTTP block (status line,
   headers, CRLFCRLF, payload); Content-Length headers are computed
   with length() arithmetic on the SAME expressions, never hardcoded."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = _docs(spark, sf_dir).select('doc_id', 'text')
   did = F.col('doc_id')
   is404 = did % 29 == 0
   payload = F.when(
@@ -82,8 +80,7 @@ def synth_warc_records(spark: SparkSession, sf_dir: str, *,
   return d.select('doc_id', record.alias('record'))
 
 
-def parse_warc_records(spark: SparkSession, sf_dir: str, *,
-                       records: DataFrame = None) -> DataFrame:
+def parse_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
   """Parse WARC response records into structured rows:
     doc_id, target_uri, warc_type, status (int), content_type,
     declared_len (the HTTP Content-Length header), body_len (actual),
@@ -99,17 +96,15 @@ def parse_warc_records(spark: SparkSession, sf_dir: str, *,
   records degrade to length_ok = 0 rows instead of failing the task
   (the crawl-batch resilience contract).
 
-  `records=` seam: a real deployment points this at its WARC file
-  table; the default synthesizes the deterministic corpus
-  (synth_warc_records) the DuckDB oracle rebuilds from scratch."""
-  r = (records if records is not None
-       else synth_warc_records(spark, sf_dir))
+  Input: the deterministic corpus synth_warc_records synthesizes,
+  which the DuckDB oracle rebuilds from scratch."""
+  r = synth_warc_records(spark, sf_dir)
   # one regex split into the three blocks; limit=3 keeps any CRLFCRLF
   # inside a real-world payload intact (the synthesized corpus has
   # none, which is what lets the DuckDB oracle split without a limit)
   parts = F.split(F.col('record'), r'\r\n\r\n', 3)
   warc_hdrs = F.element_at(parts, 1)
-  # try_element_at: a garbage record via the seam may lack blocks, and
+  # try_element_at: a garbage record may lack blocks, and
   # Spark 4's ANSI mode makes plain element_at THROW on short arrays —
   # the resilience contract wants a length_ok=0 row, not a dead task
   http_hdrs = F.coalesce(F.try_element_at(parts, F.lit(2)), F.lit(''))

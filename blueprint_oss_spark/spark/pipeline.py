@@ -15,9 +15,11 @@ timeout (bp/cli/run_model.py:32) — a doc over budget produces an `error`
 row instead of stalling an executor core.
 
 One per-document kernel (`_extraction_kernel`) owns the broadcast tree,
-the deadline, the error classes and `elapsed_ms` for every input; two
-thin adapters turn an input row into an engine/runner result:
-  * `_solve_spans` — (doc_id, spans) rows: per-span validation, then
+the deadline, the error classes (`doc_error`) and `elapsed_ms` for
+every input; two thin adapters turn an input row into an engine/runner
+result:
+  * `_solve_spans` — (doc_id, spans) rows: the span contract
+    (`check_spans`, which main-content input shares), then
     runner.run_doc;
   * `_solve_file` — (doc_id, content) rows from sources.read_files
     (`ocr_format=` google / ibocr / hocr / pdf / docjson): the format's
@@ -36,6 +38,7 @@ flight and re-raises; the finished groups' lineage stands for resume.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import pickle
 import sys
@@ -103,6 +106,39 @@ OUTPUT_SCHEMA = StructType([
 class _MalformedDoc(ValueError):
   """A document row the input contract forbids (null doc_id / spans /
   span struct fields) — contained as a per-doc error row."""
+
+
+def check_spans(spans, max_spans: Optional[int]) -> None:
+  """The span contract of every spans input (extraction and main
+  content): a non-null array of non-null structs, each with a kind and
+  an offset; text and media_ref may be null.  Raises _MalformedDoc.
+  An array longer than `max_spans` (None: no limit) raises
+  SolverBudgetError before any span is looked at, so an oversized
+  document costs O(1)."""
+  # Malformed-row containment: at 10^12 docs a single null spans
+  # array / null struct field must yield an error ROW, never an
+  # executor task failure that kills the whole job.
+  if spans is None or isinstance(spans, float):
+    raise _MalformedDoc('null spans array')
+  if max_spans is not None and len(spans) > max_spans:
+    raise solver_mod.SolverBudgetError(
+        f'{len(spans)} spans exceeds max_spans_per_doc')
+  for s in spans:
+    if s is None or s['kind'] is None or s['offset'] is None:
+      raise _MalformedDoc(f'null span struct/kind/offset: {s}')
+
+
+def doc_error(e: Exception) -> str:
+  """The `error` column of a document whose processing raised `e`, in
+  one of four classes: `budget: …` / `timeout` / `malformed: …` /
+  `error: <Type>: …` (the classes _run_job's lineage counts)."""
+  if isinstance(e, solver_mod.SolverBudgetError):
+    return f'budget: {e}'
+  if isinstance(e, solver_mod.SolverTimeoutError):
+    return 'timeout'
+  if isinstance(e, _MalformedDoc):
+    return f'malformed: {e}'
+  return f'error: {type(e).__name__}: {e}'
 
 
 def compile_blueprint(root: Node) -> bytes:
@@ -175,22 +211,11 @@ def _keep_zip_directory() -> None:
 def _solve_spans(max_spans_per_doc: int):
   """Spans adapter: a (doc_id, spans) row → runner.run_doc."""
   def solve(doc_id: str, spans, tree: Node) -> dict:
-    # Malformed-row containment: at 10^12 docs a single null spans
-    # array / null struct field must yield an error ROW, never an
-    # executor task failure that kills the whole job.
-    if spans is None or isinstance(spans, float):
-      raise _MalformedDoc('null spans array')
-    if len(spans) > max_spans_per_doc:
-      raise solver_mod.SolverBudgetError(
-          f'{len(spans)} spans exceeds max_spans_per_doc')
-    span_rows = []
-    for s in spans:
-      if s is None or s['kind'] is None or s['offset'] is None:
-        raise _MalformedDoc(f'null span struct/kind/offset: {s}')
-      # null text / media_ref are normal at scale (media spans carry
-      # no text; text spans no media) — normalize to ''
-      span_rows.append((s['kind'], s['text'] or '',
-                        s['media_ref'] or '', int(s['offset'])))
+    check_spans(spans, max_spans_per_doc)
+    # null text / media_ref are normal at scale (media spans carry no
+    # text; text spans no media) — normalize to ''
+    span_rows = [(s['kind'], s['text'] or '', s['media_ref'] or '',
+                  int(s['offset'])) for s in spans]
     return run_doc(doc_id, span_rows, tree, pre_optimized=True)
   return solve
 
@@ -243,17 +268,10 @@ def _extraction_kernel(bc, value_col: str, solve,
                           'order': o} for (k, t, m, o) in r['out_spans']],
               fields=r['fields'], score=r['score'],
               n_entities=r['n_entities'], n_words=r['n_words'])
-        except solver_mod.SolverBudgetError as e:
-          row['error'] = f'budget: {e}'
-        except solver_mod.SolverTimeoutError:
-          row['error'] = 'timeout'
-        except _MalformedDoc as e:
-          row['error'] = f'malformed: {e}'
-        except Exception as e:  # noqa: BLE001 — last-resort containment
-          # Unknown per-doc failure: record and continue.  A 90-hour
-          # 1000-executor run must not die on doc 10^11's quirk; the
-          # error column is the triage surface.
-          row['error'] = f'error: {type(e).__name__}: {e}'
+        except Exception as e:  # noqa: BLE001 — per-doc containment
+          # A 90-hour 1000-executor run must not die on doc 10^11's
+          # quirk; the error column is the triage surface.
+          row['error'] = doc_error(e)
         finally:
           solver_mod.set_deadline(None)
         row['elapsed_ms'] = (time.monotonic() - t0) * 1000.0
@@ -514,7 +532,8 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   compiled and broadcast once per call and destroyed when the groups
   return, on success and on failure.  Group metrics adapt to the
   output schema (docs always; errors/score_sum/elapsed_ms when
-  present).
+  present); a group with errors reads its written rows back for their
+  split by class (`_error_split`).
   """
   transform, blueprint = job_transform(spark, root, transform,
                                        **extract_kwargs)
@@ -524,6 +543,55 @@ def run_extraction_job(spark: SparkSession, input_df: DataFrame,
   finally:
     if blueprint is not None:
       blueprint.destroy()
+
+
+def _lineage_metrics(cols: frozenset):
+  """The aggregates a group's lineage row observes over its output
+  rows, for the output columns `cols`, as one struct column.  Each F.*
+  call, and each column handed to `observe`, is a py4j round trip, so
+  _run_job builds the struct once per job and observes only it."""
+  metrics_exprs = [F.count(F.lit(1)).alias('docs')]
+  if 'error' in cols:
+    metrics_exprs.append(F.count('error').alias('errors'))
+  if 'score' in cols:
+    metrics_exprs.append(F.sum('score').alias('score_sum'))
+  if 'elapsed_ms' in cols:
+    metrics_exprs.append(F.sum('elapsed_ms').alias('elapsed_ms_sum'))
+  if 'doc_id' in cols:
+    # Order-independent doc-set checksum (modular sum of 60-bit md5
+    # fingerprints, mod 2^61-1 — see ops.profiling.CHECKSUM_MOD):
+    # a resumed or differently-parallelized re-run of this group
+    # must reproduce it bit-for-bit, turning "did the retry write
+    # the same documents" into a lineage-row equality check.
+    fp = F.conv(
+        F.substring(F.md5(F.col('doc_id').cast('string')), 1, 15),
+        16, 10).cast('decimal(38,0)')
+    metrics_exprs.append(
+        F.pmod(F.sum(fp),
+               F.lit(2305843009213693951).cast('decimal(38,0)'))
+        .cast('long').alias('doc_set_checksum'))
+  return F.struct(*metrics_exprs).alias('lineage')
+
+
+_ERROR_SPLIT = ('errors_budget', 'errors_timeout', 'errors_malformed',
+                'errors_other', 'errors_budget_pairs')
+
+
+def _error_split(rows: DataFrame) -> dict:
+  """The split of a group's `errors` by the kernel's four error classes
+  (the solver's pair-budget trips are also counted within `budget`),
+  over the group's written rows.  _run_job computes it only for a
+  group that has errors: as aggregates of the write's observation,
+  these cost every clean group a measurable share of its JVM CPU."""
+  err = F.col('error')
+  budget = err.startswith('budget:')
+  timeout = err == 'timeout'
+  malformed = err.startswith('malformed:')
+  pair_trip = err.rlike(f'^budget: {solver_mod.PAIR_BUDGET_MESSAGE}$')
+  return rows.where(err.isNotNull()).agg(
+      F.count_if(budget), F.count_if(timeout), F.count_if(malformed),
+      F.count_if(~(budget | timeout | malformed)),
+      F.count_if(pair_trip)).toDF(*_ERROR_SPLIT).first().asDict()
 
 
 def _run_job(spark: SparkSession, input_df: DataFrame, output_path: str,
@@ -570,6 +638,8 @@ def _run_job(spark: SparkSession, input_df: DataFrame, output_path: str,
   group_tasks = (None if n_splits is None
                  else -(-n_splits // groups))  # ceil(n_splits / groups)
 
+  metrics_of = functools.lru_cache(maxsize=None)(_lineage_metrics)
+
   def run_group(g: int, create: bool = False) -> dict:
     part = df.where(F.col('part_bucket') == g).drop('part_bucket')
     if group_tasks is not None and group_tasks < n_splits:
@@ -577,44 +647,7 @@ def _run_job(spark: SparkSession, input_df: DataFrame, output_path: str,
     out = transform(part)
     out = out.withColumn('part_bucket', F.lit(g).cast('long'))
     obs = Observation(f'bp_group_{g}')
-    cols = set(out.columns)
-    metrics_exprs = [F.count(F.lit(1)).alias('docs')]
-    if 'error' in cols:
-      # errors, and its split by the kernel's four error classes; the
-      # solver's pair-budget trips are also counted within `budget`
-      err = F.col('error')
-      error_class = (F.when(err.startswith('budget:'), 'budget')
-                     .when(err == 'timeout', 'timeout')
-                     .when(err.startswith('malformed:'), 'malformed')
-                     .when(err.isNotNull(), 'other'))
-      metrics_exprs.append(
-          F.sum(F.when(err.isNotNull(), 1).otherwise(0)).alias('errors'))
-      for c in ('budget', 'timeout', 'malformed', 'other'):
-        metrics_exprs.append(
-            F.sum(F.when(error_class == c, 1).otherwise(0))
-            .alias(f'errors_{c}'))
-      pair_trip = err.rlike(f'^budget: {solver_mod.PAIR_BUDGET_MESSAGE}$')
-      metrics_exprs.append(
-          F.sum(F.when(pair_trip, 1).otherwise(0))
-          .alias('errors_budget_pairs'))
-    if 'score' in cols:
-      metrics_exprs.append(F.sum('score').alias('score_sum'))
-    if 'elapsed_ms' in cols:
-      metrics_exprs.append(F.sum('elapsed_ms').alias('elapsed_ms_sum'))
-    if 'doc_id' in cols:
-      # Order-independent doc-set checksum (modular sum of 60-bit md5
-      # fingerprints, mod 2^61-1 — see ops.profiling.CHECKSUM_MOD):
-      # a resumed or differently-parallelized re-run of this group
-      # must reproduce it bit-for-bit, turning "did the retry write
-      # the same documents" into a lineage-row equality check.
-      fp = F.conv(
-          F.substring(F.md5(F.col('doc_id').cast('string')), 1, 15),
-          16, 10).cast('decimal(38,0)')
-      metrics_exprs.append(
-          F.pmod(F.sum(fp),
-                 F.lit(2305843009213693951).cast('decimal(38,0)'))
-          .cast('long').alias('doc_set_checksum'))
-    observed = out.observe(obs, *metrics_exprs)
+    observed = out.observe(obs, metrics_of(frozenset(out.columns)))
     # Dynamic partition overwrite: a re-run of this group replaces
     # exactly its own part_bucket partition, so resuming after a
     # partially-written group (crash between data write and lineage
@@ -631,7 +664,14 @@ def _run_job(spark: SparkSession, input_df: DataFrame, output_path: str,
     # round-trip would corrupt (2^61 > 2^53)
     metrics = {k: (None if v is None
                    else int(v) if isinstance(v, int) else float(v))
-               for k, v in obs.get.items()}
+               for k, v in obs.get['lineage'].asDict().items()}
+    if metrics.get('errors'):
+      metrics.update(_error_split(
+          spark.table(iceberg_table).where(F.col('part_bucket') == g)
+          if iceberg_table else
+          spark.read.parquet(f"{output_path.rstrip('/')}/part_bucket={g}")))
+    elif 'errors' in metrics:
+      metrics.update(dict.fromkeys(_ERROR_SPLIT, 0))
     row = {'group': g, 'groups': groups, 'ts': time.time(),
            'metrics': metrics}
     out_stream = fs.create(_hpath(f'{lineage_dir}/group-{g}.json'), True)

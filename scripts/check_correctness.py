@@ -3,8 +3,10 @@
 entry on Spark AND its oracle_sql() in DuckDB over the same sf dir,
 then compare rows / column names / exact values (rows and columns
 sorted, like the driver's value-hash).  Exit nonzero on any mismatch.
-Each status line carries a digest of the sorted Spark rows, so two
-checkouts compare bit for bit with one diff of their outputs.
+Each status line carries a digest of the sorted Spark rows and one of
+the sorted (column, type, nullable) schema, so two checkouts compare
+bit for bit, types included, with one diff of their outputs (the row
+digest alone cannot tell int from bigint: both collect as Python int).
 
 Usage: python scripts/check_correctness.py [--sf-dir /root/testdata/sf0.01]
 """
@@ -82,6 +84,9 @@ def main() -> None:
       sk_cols, sk = frame_key(s_cols, s_rows)
       rec['digest'] = hashlib.sha256(
           repr((sk_cols, sk)).encode()).hexdigest()[:16]
+      rec['schema_digest'] = hashlib.sha256(repr(sorted(
+          (f.name, f.dataType.json(), f.nullable)
+          for f in sdf.schema.fields)).encode()).hexdigest()[:16]
       sql = oracles.get(name)
       if sql is None:
         rec['status'] = 'no_oracle'
@@ -109,7 +114,8 @@ def main() -> None:
     if rec['status'] not in ('green', 'no_oracle'):
       failed.append(name)
     print(f"{name}: {rec['status']}"
-          + (f" ({rec['spark_rows']} rows, {rec['digest']})"
+          + (f" ({rec['spark_rows']} rows, {rec['digest']},"
+             f" schema {rec['schema_digest']})"
              if 'spark_rows' in rec else ''))
     if 'first_diff' in rec:
       print('  first diff:', json.dumps(rec['first_diff'], default=str))

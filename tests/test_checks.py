@@ -22,7 +22,6 @@ import random
 
 import pytest
 
-from blueprint_oss_spark.bp_examples.check_fixtures import check_corpus
 from blueprint_oss_spark.engine.entity_gen import build_doc_pool
 from blueprint_oss_spark.engine.kernels import score_predicate
 from blueprint_oss_spark.engine.runner import (
@@ -31,9 +30,8 @@ from blueprint_oss_spark.engine.solver import best_extraction
 
 from .refshim import (
     load_reference_example, reference_best_set, reference_doc_from_spans)
+from .test_checks_model import DOCS
 from .test_predicate_parity import _match_entities
-
-DOCS = check_corpus(6, seed=57)  # doc 3 is a tall page (>800 px)
 
 
 @pytest.fixture(scope='module')
@@ -112,13 +110,3 @@ def test_checks_full_root_vs_reference_production_config(ref_ns):
       assert canonical_out_spans(ours, spans) in ref_outs, (
           doc_id, ours, ref_fields)
 
-
-def test_checks_model_pickles_for_broadcast():
-  import pickle
-
-  from blueprint_oss_spark.bp_examples.checks import root
-  rt = pickle.loads(pickle.dumps(root))
-  doc_id, spans = DOCS[0]
-  a = run_doc(doc_id, spans, root)
-  b = run_doc(doc_id, spans, rt)
-  assert a['fields'] == b['fields'] and a['score'] == b['score']

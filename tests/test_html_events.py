@@ -362,7 +362,7 @@ class _Literals(ast.NodeVisitor):
 def test_html_literals_of_the_extractor_tests():
   v = _Literals()
   for name in ('test_html_extract.py', 'test_justext.py',
-               'test_ocr_sources.py'):
+               'test_hocr.py'):
     v.visit(ast.parse((TESTS / name).read_text()))
   assert len(v.found) > 30
   for doc in sorted(v.found):

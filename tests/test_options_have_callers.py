@@ -11,13 +11,15 @@ A call sets an option by keyword, by position, or by a `**NAME` splat
 of a module-level dict literal; a function that splats its own
 `**kwargs` into a call passes on every keyword its callers set, and a
 call through the variable of `for op in (f, g, ...)` calls each of
-f, g, ...
+f, g, ..., and a call through an import alias (`from m import f as g`)
+calls f.
 Calls are searched in the package, scripts/, tests/, perfbench/,
 __spark_entry__.py and bench.py — and in module-level strings of
 Python source there, like the job that scripts/cluster_scaling.py
 hands to spark-submit — and are matched to functions by name (a name
-shared by two functions counts a call for both).  DataFrame-typed
-parameters are input seams, not options, and are not checked here.
+shared by two functions counts a call for both).  A DataFrame-typed
+parameter (an input seam such as `docs=`) is held to the same rule: a
+seam no call passes is a second input path nothing exercises.
 An option kept on purpose without a caller is allowlisted below with
 its reason."""
 
@@ -62,8 +64,8 @@ ALLOWED = {
 
 def _options():
   """module.function.option -> (function name, positional index or
-  None) for every defaulted non-DataFrame parameter of a public
-  module-level function under ops/ and spark/."""
+  None) for every defaulted parameter of a public module-level
+  function under ops/ and spark/."""
   out = {}
   for d in OPERATOR_DIRS:
     for path in sorted(d.glob('*.py')):
@@ -79,9 +81,6 @@ def _options():
                       in zip(a.kwonlyargs, a.kw_defaults)
                       if dflt is not None]
         for p, idx in defaulted:
-          if p.annotation is not None and \
-              'DataFrame' in ast.unparse(p.annotation):
-            continue
           out[f'{path.stem}.{fn.name}.{p.arg}'] = (fn.name, idx)
   return out
 
@@ -128,6 +127,13 @@ def _callee(call):
       f.attr if isinstance(f, ast.Attribute) else None
 
 
+def _aliases(tree):
+  """alias -> imported name for every `from m import name as alias`."""
+  return {a.asname: a.name for node in ast.walk(tree)
+          if isinstance(node, ast.ImportFrom)
+          for a in node.names if a.asname}
+
+
 def _loop_callees(tree):
   """id(call) -> the functions a call through a loop variable reaches:
   in `for op in (f, g, ...): op(...)` each call to `op` calls f, g,
@@ -154,6 +160,7 @@ def _set_by_calls():
   for tree in _caller_trees():
     dicts = _module_dicts(tree)
     via_loop = _loop_callees(tree)
+    aliases = _aliases(tree)
     for node in ast.walk(tree):
       if isinstance(node, ast.FunctionDef) and node.args.kwarg:
         forwards += [
@@ -165,6 +172,7 @@ def _set_by_calls():
       if not isinstance(node, ast.Call) or _callee(node) is None:
         continue
       for fn in via_loop.get(id(node), [_callee(node)]):
+        fn = aliases.get(fn, fn)
         kws, npos = seen.setdefault(fn, (set(), [0]))
         for k in node.keywords:
           if k.arg is not None:

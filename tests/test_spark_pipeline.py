@@ -608,7 +608,7 @@ def test_run_job_with_main_content_transform(spark, tmp_path):
       groups=2)
   assert len(lineage) == 2
   assert sum(r['metrics']['docs'] for r in lineage) == 120
-  assert all('errors' not in r['metrics'] for r in lineage)
+  assert all(r['metrics']['errors'] == 0 for r in lineage)
 
   got = {r['doc_id']: [(s['kind'], s['text'], s['media_ref'],
                         s['order']) for s in r['out_spans']]
@@ -632,3 +632,63 @@ def test_run_job_with_main_content_transform(spark, tmp_path):
       groups=2)
   assert [r['group'] for r in redo] == [1]
   assert spark.read.parquet(out_path).count() == 120
+
+
+def test_main_content_job_contains_malformed_documents(spark, tmp_path):
+  """A null spans array, a null span and a null offset each become an
+  error row (out_spans=[], n_html=0, `malformed: …`) instead of failing
+  the task: the job over them and good documents finishes, the good
+  documents are untouched, and the lineage counts the three."""
+  from blueprint_oss_spark.ops.html_extract import (
+      main_content_doc, main_content_from_spans,
+  )
+  from blueprint_oss_spark.spark.pipeline import (
+      SPANS_SCHEMA, run_extraction_job,
+  )
+
+  def span(kind, text, offset, media_ref=None):
+    return {'kind': kind, 'text': text, 'media_ref': media_ref,
+            'offset': offset}
+
+  good = {
+      'good-0': [span('html', '<body><p>alpha beta gamma</p></body>', 0),
+                 span('media', None, 1, 'm/1')],
+      'good-1': [span('text', '  plain   text ', 0)],
+  }
+  bad = {
+      'null-spans': None,
+      'null-span': [span('text', 'x', 0), None],
+      'null-offset': [span('text', 'x', None)],
+  }
+  src = spark.createDataFrame(list({**good, **bad}.items()), SPANS_SCHEMA)
+  out_path = str(tmp_path / 'mc_bad')
+
+  lineage = run_extraction_job(spark, src, out_path,
+                               transform=main_content_from_spans, groups=2)
+  metrics = [r['metrics'] for r in lineage]
+  assert sum(m['docs'] for m in metrics) == 5
+  assert sum(m['errors_malformed'] for m in metrics) == 3
+  assert sum(m['errors'] for m in metrics) == 3
+
+  rows = {r['doc_id']: r for r in spark.read.parquet(out_path).collect()}
+  for doc_id in bad:
+    r = rows[doc_id]
+    assert r['out_spans'] == [] and r['n_html'] == 0
+    assert r['error'].startswith('malformed: '), r['error']
+  for doc_id, spans in good.items():
+    want_spans, want_html = main_content_doc(spans)
+    r = rows[doc_id]
+    assert r['error'] is None
+    assert r['n_html'] == want_html
+    assert [s.asDict() for s in r['out_spans']] == want_spans
+
+
+def test_span_budget_is_checked_before_the_spans():
+  """An array over the span budget is a budget trip before any span is
+  read, so an oversized document costs O(1) whatever its spans hold;
+  within the budget the per-span contract still holds."""
+  from blueprint_oss_spark.engine.solver import SolverBudgetError
+  with pytest.raises(SolverBudgetError):
+    pipeline.check_spans([None] * 3, 2)
+  with pytest.raises(ValueError, match='null span'):
+    pipeline.check_spans([None] * 2, 2)
