@@ -30,6 +30,7 @@ from blueprint_oss_spark.fixtures import ALL_CORPORA
 from blueprint_oss_spark.spark.pipeline import (
     extract_documents, spans_frame, spans_from_documents,
 )
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _fixture_spans_df(spark: SparkSession, corpus: str, n_docs: int):
@@ -203,7 +204,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       # bands/rows-tuning report, all exact integers, every cell
       # re-verified by the FULL pure-python xxhash64 recomputation in
       # scripts/build_oracles.py before the snapshot is written
-      'minhash_pairs': lambda s, d: T.minhash_calibration(s, d),
+      'minhash_pairs': lambda s, d: T.minhash_calibration(documents(s, d)),
       # one driver row covering the exact brute-force baseline AND all
       # three ANN index families (sign-LSH banding / IVF coarse
       # quantizer / PQ-ADC) — merged so semantic_dedup,
@@ -263,7 +264,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       'corpus_split_mix': _corpus_split_temperature_mix,
       'doc_fingerprint_lang': _doc_fingerprint_lang,
       'dsir_select':
-          lambda s, d: C.dsir_importance_select(s, d),
+          lambda s, d: C.dsir_importance_select(documents(s, d)),
       'pii_scrub_decontaminate': _pii_scrub_decontaminate,
       'exact_substring_dedup': _substring_paragraph_dedup,
       # --- similarity / near-dup ---
@@ -278,7 +279,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       # C4-style line-level page cleaning (Raffel et al. §2.2);
       # deterministic synthesized line structure, DuckDB re-synthesizes
       # and re-filters everything from the raw table
-      'c4_line_clean': lambda s, d: C.c4_line_clean(s, d),
+      'c4_line_clean': lambda s, d: C.c4_line_clean(documents(s, d)),
       'pack_sequences': _pack_and_chunk,
       'curation_pipeline': _curation_pipeline_ablation,
       'tfidf_top_terms': _tfidf_with_cms,
@@ -484,13 +485,13 @@ def _doc_token_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
   mean posterior) rides as n_scored/nb_posterior/nb_pred."""
   from blueprint_oss_spark.ops import curation as C
   from blueprint_oss_spark.ops import textops as T
-  rep = (T.repetition_stats(spark, sf_dir)
+  rep = (T.repetition_stats(documents(spark, sf_dir))
          .withColumnRenamed('keep', 'rep_keep').drop('n_chars'))
-  qc = (C.quality_classifier(spark, sf_dir)
+  qc = (C.quality_classifier(documents(spark, sf_dir))
         .withColumnRenamed('pred', 'nb_pred'))
-  return (T.doc_token_stats(spark, sf_dir)
-          .join(T.doc_quality(spark, sf_dir), 'doc_id')
-          .join(T.quality_filter(spark, sf_dir), 'doc_id')
+  return (T.doc_token_stats(documents(spark, sf_dir))
+          .join(T.doc_quality(documents(spark, sf_dir)), 'doc_id')
+          .join(T.quality_filter(documents(spark, sf_dir)), 'doc_id')
           .join(rep, 'doc_id')
           .join(qc, 'doc_id', 'left')
           .withColumn('n_scored',
@@ -519,18 +520,18 @@ def _doc_fingerprint_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
   synth_lang/lid_*/q_de..q_fr/pred_lang."""
   from pyspark.sql import functions as FF
   from blueprint_oss_spark.ops import textops as T
-  lm = T.lm_score(spark, sf_dir).localCheckpoint(eager=True)
-  lb = (T.lm_buckets(spark, sf_dir, scores=lm)
+  lm = T.lm_score(documents(spark, sf_dir)).localCheckpoint(eager=True)
+  lb = (T.lm_buckets(documents(spark, sf_dir), scores=lm)
         .select('doc_id', 'lm_t_lo', 'lm_t_hi', 'lm_bucket'))
-  return (T.doc_fingerprints(spark, sf_dir)
-          .join(T.lang_id_heuristic(spark, sf_dir), 'doc_id')
-          .join(T.dedup_exact(spark, sf_dir),
+  return (T.doc_fingerprints(documents(spark, sf_dir))
+          .join(T.lang_id_heuristic(documents(spark, sf_dir)), 'doc_id')
+          .join(T.dedup_exact(documents(spark, sf_dir)),
                 FF.col('fp_full') == FF.col('content_hash'))
           .drop('content_hash')
           .join(lm, 'doc_id', 'left')
           .join(lb, 'doc_id', 'left')
-          .join(T.topic_tagging(spark, sf_dir), 'doc_id')
-          .join(T.lang_id_trained(spark, sf_dir), 'doc_id')
+          .join(T.topic_tagging(documents(spark, sf_dir)), 'doc_id')
+          .join(T.lang_id_trained(documents(spark, sf_dir)), 'doc_id')
           .orderBy('doc_id'))
 
 
@@ -565,8 +566,8 @@ def _bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops import textops as T
   from blueprint_oss_spark.ops import unigram as U
   from blueprint_oss_spark.ops.multimodal import tokenize_interleaved
-  merges = T.bpe_train(spark, sf_dir)
-  totals = T.bpe_encode(spark, sf_dir, merges=merges).agg(
+  merges = T.bpe_train(documents(spark, sf_dir))
+  totals = T.bpe_encode(documents(spark, sf_dir), merges=merges).agg(
       F.sum('n_words').alias('corpus_words'),
       F.sum('n_tokens').alias('corpus_tokens'))
   from blueprint_oss_spark.ops.html_extract import (
@@ -593,14 +594,15 @@ def _bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
   # broadcast row: f_{lang}_{words,tokens,chars,bytes} — the XLM-R /
   # BLOOM-style multilingual tokenizer-quality table, every cell an
   # exact integer the sequential recomputation re-derives per language
-  fert = T.tokenizer_fertility(spark, sf_dir, merges=merges)
+  fert = T.tokenizer_fertility(documents(spark, sf_dir), merges=merges)
   fcols = [F.sum(F.when(F.col('lang') == lang, F.col(f'n_{m}')))
            .cast('long').alias(f'f_{lang}_{m}')
            for lang in ('en', 'es', 'de', 'fr')
            for m in ('words', 'tokens', 'chars', 'bytes')]
   f1 = fert.agg(*fcols)
-  uv = U.unigram_train(spark, sf_dir).localCheckpoint(eager=True)
-  ug_tot = (U.unigram_encode(spark, sf_dir, vocab=uv)
+  uv = U.unigram_train(documents(spark, sf_dir)) \
+      .localCheckpoint(eager=True)
+  ug_tot = (U.unigram_encode(documents(spark, sf_dir), vocab=uv)
             .agg(F.sum('n_words').alias('ug_words'),
                  F.sum('n_tokens').alias('ug_tokens'))
             .crossJoin(F.broadcast(
@@ -658,14 +660,14 @@ def _url_curation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
   # gate query pay it three times).  localCheckpoint materializes it
   # once: identical subtrees alone left 23 static Exchanges with no
   # ReusedExchange (measured)
-  uc = C.url_curation(spark, sf_dir).localCheckpoint(eager=True)
+  uc = C.url_curation(documents(spark, sf_dir)).localCheckpoint(eager=True)
   rb = (C.robots_verdicts(
-            spark, sf_dir,
-            urls=uc.select('doc_id', 'norm_url', 'domain'))
+            uc.select('doc_id', 'norm_url', 'domain'),
+            C.parse_robots(C.synth_robots_table(spark)))
         .select('doc_id', 'robots_blocked', 'robots_rule'))
   cs = (C.crawl_schedule(
-            spark, sf_dir,
-            urls=uc.where(F.col('kept') == 1).select('doc_id', 'domain'))
+            uc.where(F.col('kept') == 1).select('doc_id', 'domain'),
+            C.parse_robots(C.synth_robots_table(spark)))
         .select('doc_id', 'slot', 'crawl_delay', 'fetch_offset_s'))
   sc = (SM.sitemap_coverage(
             spark, sf_dir,
@@ -678,7 +680,7 @@ def _url_curation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
   # the oracle recomputes every Gopher verdict + exact totals + the
   # cross-multiplied domain verdict from scratch
   dq = (C.domain_quality_rollup(
-            spark, sf_dir, keep_num=1, keep_den=1,
+            documents(spark, sf_dir), keep_num=1, keep_den=1,
             urls=uc.select('doc_id', 'domain'))
         .select('domain', F.col('n_docs').alias('dq_docs'),
                 F.col('n_keep').alias('dq_keep'),
@@ -723,13 +725,17 @@ def _dedup_groups_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
   the verified semantic_dedup snapshot, then recomputes the whole
   composition."""
   from blueprint_oss_spark.ops import textops as T
+  from blueprint_oss_spark.ops.vectors import semantic_dedup
 
   def groups(method, **kw):
-    return (T.dedup_groups(spark, sf_dir, **kw)
+    return (T.dedup_groups(documents(spark, sf_dir), **kw)
             .select(F.lit(method).alias('method'), 'doc_id', 'group_id',
                     'group_size', 'is_keeper'))
 
-  dec = (T.dedup_decision_report(spark, sf_dir)
+  dec = (T.dedup_decision_report(
+             documents(spark, sf_dir),
+             semantic_dedup(spark, sf_dir, plant_for_verification=True,
+                            sort=False))
          .select(F.lit('decision').alias('method'), 'doc_id',
                  F.col('jac_group').alias('group_id'),
                  'planted', 'exact_keep', 'jac_keep', 'sim_keep',
@@ -746,10 +752,10 @@ def _simhash_sigs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
   rows carry (doc_id=doc_a, doc_b, hamming); every cell of both
   operators stays value-checked."""
   from blueprint_oss_spark.ops import textops as T
-  sig = T.simhash64(spark, sf_dir).select(
+  sig = T.simhash64(documents(spark, sf_dir)).select(
       F.lit('sig').alias('section'), 'doc_id', 'simhash')
   pairs = T.simhash_near_dup_pairs(
-      spark, sf_dir, bands=8, key_blocks=5).select(
+      documents(spark, sf_dir), bands=8, key_blocks=5).select(
       F.lit('pair').alias('section'),
       F.col('doc_a').alias('doc_id'), 'doc_b', 'hamming')
   return _tagged_union(sig, pairs).orderBy('section', 'doc_id', 'doc_b')
@@ -826,14 +832,14 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
   score from scratch), score_r/rnk carry the rounded score and the
   per-query rank."""
   from blueprint_oss_spark.ops import textops as T
-  cms = (T.count_min_terms(spark, sf_dir)
+  cms = (T.count_min_terms(documents(spark, sf_dir))
          .select('term', 'cms_est',
                  F.col('overcount').alias('cms_overcount')))
-  hh = (T.heavy_hitters(spark, sf_dir)
+  hh = (T.heavy_hitters(documents(spark, sf_dir))
         .select('term', F.lit(1).alias('hh_heavy'),
                 F.col('count').alias('hh_count'),
                 F.col('n_total').alias('hh_n_total')))
-  tft = (T.tfidf_top_terms(spark, sf_dir)
+  tft = (T.tfidf_top_terms(documents(spark, sf_dir))
          .join(cms, 'term')
          .join(hh, 'term', 'left')
          .select(F.lit('tfidf').alias('method'),
@@ -841,7 +847,7 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                  'cms_est', 'cms_overcount',
                  F.coalesce('hh_heavy', F.lit(0)).alias('hh_heavy'),
                  'hh_count', 'hh_n_total'))
-  bm = (T.bm25_topk(spark, sf_dir)
+  bm = (T.bm25_topk(documents(spark, sf_dir))
         .select(F.lit('bm25').alias('method'), 'doc_id',
                 F.col('query').alias('term'),
                 F.col('dl').alias('tf'), 'score_r', 'rnk'))
@@ -849,7 +855,7 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
   # so the gate corpus spans 5 buckets): posexploded so the driver
   # value-checks IN-BUCKET POSTING ORDER via rnk (the
   # sequence_segments device) plus df_bucket / df / cf rollups
-  po = (T.build_postings(spark, sf_dir, doc_bucket=100)
+  po = (T.build_postings(documents(spark, sf_dir), doc_bucket=100)
         .select('term', 'bucket', 'df_bucket',
                 F.posexplode('postings').alias('pos', 'p'), 'df', 'cf')
         .select(F.lit('postings').alias('method'),
@@ -865,7 +871,7 @@ def _tfidf_with_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
   # in tests/test_cluster_topics.py; wiring it here would pin the
   # whole row to the sf0.01 snapshot)
   from blueprint_oss_spark.ops.vectors import cluster_topics
-  syn_assign = (spark.read.parquet(f'{sf_dir}/documents.parquet')
+  syn_assign = (documents(spark, sf_dir)
                 .select(F.col('doc_id').alias('vec_id'),
                         (F.col('doc_id') % 16).cast('int')
                         .alias('cell')))
@@ -896,7 +902,7 @@ def _ngram_with_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops.html_extract import (
       interleaved_html_table, main_content_from_spans)
   from blueprint_oss_spark.ops.multimodal import interleaved_near_dup
-  text = (T.ngram_jaccard_pairs(spark, sf_dir)
+  text = (T.ngram_jaccard_pairs(documents(spark, sf_dir))
           .select(F.lit('text').alias('method'),
                   F.col('doc_a').cast('string').alias('doc_a'),
                   F.col('doc_b').cast('string').alias('doc_b'),
@@ -941,7 +947,10 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
   every column of its operator value-checked; columns not belonging
   to a section are typed NULLs."""
   from blueprint_oss_spark.ops import textops as T
-  il = (T.pack_interleaved_sequences(spark, sf_dir)
+  from blueprint_oss_spark.ops.html_extract import (
+      interleaved_html_table, main_content_from_spans)
+  il = (T.pack_interleaved_sequences(main_content_from_spans(
+            interleaved_html_table(spark, sf_dir)))
         .select(F.lit('interleaved').alias('method'),
                 F.col('doc_id').cast('long').alias('doc_id'),
                 F.col('shard').cast('long').alias('shard'),
@@ -952,7 +961,7 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.concat(F.col('kind'), F.lit(':'),
                          F.coalesce('media_ref', F.lit('')))
                  .alias('chunk_text')))
-  seg = (T.sequence_segments(spark, sf_dir)
+  seg = (T.sequence_segments(T.pack_sequences(documents(spark, sf_dir)))
          .select('shard', 'chunk', 'n_docs', 'fill_tokens',
                  F.posexplode('segments').alias('pos', 's'))
          .select(F.lit('segments').alias('method'),
@@ -968,13 +977,13 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias('start_tok'),
                  F.col('fill_tokens').cast('long')
                  .alias('fill_tokens')))
-  pack = (T.pack_sequences(spark, sf_dir)
+  pack = (T.pack_sequences(documents(spark, sf_dir))
           .select(F.lit('pack').alias('method'), 'doc_id',
                   F.col('shard').cast('long').alias('shard'),
                   F.col('n_tokens').cast('int').alias('n_tokens'),
                   'tokens_before', 'chunk_first', 'chunk_last',
                   'n_chunks'))
-  chunk = (T.chunk_documents(spark, sf_dir)
+  chunk = (T.chunk_documents(documents(spark, sf_dir))
            .select(F.lit('chunk').alias('method'), 'doc_id',
                    F.col('n_tokens').cast('int').alias('n_tokens'),
                    'chunk_no', 'start_tok', 'chunk_text'))
@@ -985,7 +994,7 @@ def _pack_and_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
   # pos_in_batch chunk_no, batch_max tokens_before, pad_waste
   # fill_tokens — every operator column stays value-checked against
   # the oracle's from-scratch recomputation.
-  lb = (T.length_bucket_batches(spark, sf_dir)
+  lb = (T.length_bucket_batches(documents(spark, sf_dir))
         .select(F.lit('lenbucket').alias('method'), 'doc_id',
                 F.col('shard').cast('long').alias('shard'),
                 F.col('n_tokens').cast('int').alias('n_tokens'),
@@ -1014,7 +1023,7 @@ def _curation_pipeline_ablation(spark: SparkSession,
   products from the raw documents table."""
   from blueprint_oss_spark.ops import curation as C
   from blueprint_oss_spark.ops import textops as T
-  pipe = (T.curation_pipeline(spark, sf_dir)
+  pipe = (T.curation_pipeline(documents(spark, sf_dir))
           .select(F.lit('pipeline').alias('method'),
                   F.col('doc_id').cast('long').alias('doc_id'),
                   'lang',
@@ -1023,14 +1032,14 @@ def _curation_pipeline_ablation(spark: SparkSession,
                   F.col('best_id').cast('long').alias('best_id'),
                   F.col('best_n_tokens').cast('long')
                   .alias('best_n_tokens')))
-  verd_frame = C.curation_ablation(spark, sf_dir,
+  verd_frame = C.curation_ablation(documents(spark, sf_dir),
                                    plant_for_verification=True)
   verd = verd_frame.select(
       F.lit('verdict').alias('method'),
       F.col('doc_id').cast('long').alias('doc_id'),
       'f_eval', 'f_quality', 'f_dup', 'f_pii', 'f_decon',
       'n_pii', 'n_shared', 'first_fail')
-  rep = (C.curation_ablation_report(spark, sf_dir, verdicts=verd_frame)
+  rep = (C.curation_ablation_report(verd_frame)
          .select(F.col('section').alias('method'),
                  'stage', 'filter_a', 'filter_b', 'n_marginal',
                  'n_attributed', 'n_remaining', 'n_both'))
@@ -1086,10 +1095,11 @@ def _incremental_and_diff(spark: SparkSession,
   operators stays value-checked; columns not belonging to a section
   are typed NULLs."""
   from blueprint_oss_spark.ops import textops as T
-  inc = (T.incremental_dedup(spark, sf_dir)
+  inc = (T.incremental_dedup(*T.increment_split(documents(spark, sf_dir)))
          .select(F.lit('incremental').alias('method'), 'doc_id',
                  'verdict', 'match_id', 'jac_r'))
-  dif = (T.corpus_diff(spark, sf_dir)
+  old = documents(spark, sf_dir)
+  dif = (T.corpus_diff(old, T.corpus_next_version(old))
          .select(F.lit('diff').alias('method'), 'doc_id', 'verdict',
                  'old_hash', 'new_hash'))
   return _tagged_union(inc, dif).orderBy('method', 'doc_id')
@@ -1109,7 +1119,7 @@ def _substring_paragraph_dedup(spark: SparkSession,
   granularity; n_units = synthesized 6-word lines) — every column of
   every operator stays value-checked."""
   from blueprint_oss_spark.ops import textops as T
-  es = (T.remove_duplicated_spans(spark, sf_dir)
+  es = (T.remove_duplicated_spans(documents(spark, sf_dir))
         .select(F.lit('exactsubstr').alias('method'), 'doc_id',
                 'clean_text', F.col('n_tokens').alias('n_units'),
                 'n_removed'))
@@ -1117,19 +1127,20 @@ def _substring_paragraph_dedup(spark: SparkSession,
   # (Lee et al. §3.1 removes duplicated substrings >= 50 tokens only;
   # covered runs shorter than 50 survive).  At gate scale the covered
   # runs span 11..93 tokens, so both branches are value-checked.
-  e50 = (T.remove_duplicated_spans(spark, sf_dir, min_run_tokens=50)
+  e50 = (T.remove_duplicated_spans(documents(spark, sf_dir),
+                                   min_run_tokens=50)
          .select(F.lit('exactsubstr50').alias('method'), 'doc_id',
                  'clean_text', F.col('n_tokens').alias('n_units'),
                  'n_removed'))
-  pp = (T.dedup_paragraphs(spark, sf_dir)
+  pp = (T.dedup_paragraphs(documents(spark, sf_dir))
         .select(F.lit('paragraph').alias('method'), 'doc_id',
                 'clean_text', F.col('n_paras').alias('n_units'),
                 'n_removed', 'n_kept'))
-  c4 = (T.c4_span_dedup(spark, sf_dir)
+  c4 = (T.c4_span_dedup(documents(spark, sf_dir))
         .select(F.lit('c4span').alias('method'), 'doc_id',
                 'clean_text', F.col('n_sents').alias('n_units'),
                 'n_removed', 'n_kept'))
-  dl = (T.dedup_doc_lines(spark, sf_dir)
+  dl = (T.dedup_doc_lines(documents(spark, sf_dir))
         .select(F.lit('docline').alias('method'), 'doc_id',
                 'clean_text', F.col('n_lines').alias('n_units'),
                 'n_removed', 'n_kept'))
@@ -1138,7 +1149,7 @@ def _substring_paragraph_dedup(spark: SparkSession,
   # next to the dedup surgeons; input_text rides clean_text, n_tokens
   # n_units, n_masked n_removed, n_runs n_kept, and target_text is
   # value-checked through its own column.
-  t5 = (T.t5_span_corruption(spark, sf_dir)
+  t5 = (T.t5_span_corruption(documents(spark, sf_dir))
         .select(F.lit('t5span').alias('method'), 'doc_id',
                 F.col('input_text').alias('clean_text'),
                 F.col('n_tokens').alias('n_units'),
@@ -1164,13 +1175,13 @@ def _corpus_split_temperature_mix(spark: SparkSession,
   independently exercised; the oracle recomputes the UniMax
   allocation with a recursive CTE over the ascending source order."""
   from blueprint_oss_spark.ops import curation as C
-  csm = C.corpus_split_mix(spark, sf_dir)
-  tm = (C.temperature_mix(spark, sf_dir)
+  csm = C.corpus_split_mix(documents(spark, sf_dir))
+  tm = (C.temperature_mix(documents(spark, sf_dir))
         .select('doc_id',
                 F.col('src_tokens').alias('tm_src_tokens'),
                 F.col('src_budget').alias('tm_budget'),
                 F.col('mix_keep').alias('tm_keep')))
-  um = (C.unimax_mix(spark, sf_dir)
+  um = (C.unimax_mix(documents(spark, sf_dir))
         .select('doc_id',
                 F.col('src_budget').alias('um_budget'),
                 F.col('mix_keep').alias('um_keep')))
@@ -1193,11 +1204,11 @@ def _pii_scrub_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
   n_shared = 0 on case-variant overlaps and vice versa; eval docs
   carry '' / 0 with is_eval = 1)."""
   from blueprint_oss_spark.ops import curation as C
-  scrub = C.pii_scrub(spark, sf_dir)
-  dec = C.decontaminate(spark, sf_dir)
-  bloom = C.bloom_decontaminate(spark, sf_dir) \
+  scrub = C.pii_scrub(documents(spark, sf_dir))
+  dec = C.decontaminate(documents(spark, sf_dir))
+  bloom = C.bloom_decontaminate(documents(spark, sf_dir)) \
       .withColumnRenamed('n_flagged', 'n_bloom')
-  spans = (C.decontaminate_spans(spark, sf_dir)
+  spans = (C.decontaminate_spans(documents(spark, sf_dir))
            .select('doc_id',
                    F.col('clean_text').alias('span_clean_text'),
                    F.col('n_removed').alias('n_span_removed')))
@@ -1248,10 +1259,11 @@ def _html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                     extract_links,
                                                     html_main_content,
                                                     justext_main_content)
-  from blueprint_oss_spark.ops.warc import parse_warc_records
+  from blueprint_oss_spark.ops.warc import (parse_warc_records,
+                                           synth_warc_records)
   dom = (html_main_content(spark, sf_dir)
          .select(F.lit('dom').alias('method'), 'doc_id', 'main_text'))
-  wrc = (parse_warc_records(spark, sf_dir)
+  wrc = (parse_warc_records(synth_warc_records(documents(spark, sf_dir)))
          .select(F.lit('warc').alias('method'), 'doc_id', 'main_text',
                  'target_uri', 'status', 'content_type',
                  'declared_len', 'body_len', 'length_ok'))
@@ -1308,7 +1320,8 @@ def _web_curation_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops.multimodal import (
       interleaved_curation_pipeline,
   )
-  web = (C.web_curation_pipeline(spark, sf_dir)
+  web = (C.web_curation_pipeline(interleaved_html_table(spark, sf_dir),
+                                 documents(spark, sf_dir))
          .select(F.lit('web').alias('method'), 'doc_id', 'lang',
                  'group_id', 'group_size'))
   # checkpoint: dedup_media_spans references the content frame in two
@@ -1419,7 +1432,7 @@ def _main_content_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "s -> s.kind = 'media'), s -> s.media_ref)"
                         ", ',')").alias('manifest'),
                  'n_media_removed'))
-  docs = (spark.read.parquet(f'{sf_dir}/documents.parquet')
+  docs = (documents(spark, sf_dir)
           .select(F.col('doc_id').cast('long').alias('did')))
   # one schema, both frames listing it in the same order: a strict
   # positional union, not a tagged one

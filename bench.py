@@ -66,6 +66,9 @@ def main() -> None:
   from blueprint_oss_spark.ops import vectors as V
   from blueprint_oss_spark.ops import warc as W
   from blueprint_oss_spark.ops import unigram as U
+  from blueprint_oss_spark.ops.html_extract import (
+      interleaved_html_table, main_content_from_spans)
+  from blueprint_oss_spark.spark.sources import documents
   from pyspark.sql import functions as FN
 
   timings: dict = {}
@@ -192,41 +195,44 @@ def main() -> None:
        lambda: R.q1_pricing_summary(spark, sf_dir).collect()),
       ('q3_shipping_priority',
        lambda: R.q3_shipping_priority(spark, sf_dir).collect()),
-      ('dedup_exact', lambda: T.dedup_exact(spark, sf_dir).count()),
-      ('doc_quality', lambda: T.doc_quality(spark, sf_dir).count()),
+      ('dedup_exact', lambda: T.dedup_exact(documents(spark, sf_dir)).count()),
+      ('doc_quality', lambda: T.doc_quality(documents(spark, sf_dir)).count()),
       ('minhash_pairs',
-       lambda: T.minhash_shingles(spark, sf_dir).count()),
+       lambda: T.minhash_shingles(documents(spark, sf_dir)).count()),
       ('cosine_topk',
        lambda: V.cosine_topk_bruteforce(spark, sf_dir).collect()),
       ('sessionize', lambda: R.sessionize(spark, sf_dir).count()),
       ('repetition_stats',
-       lambda: T.repetition_stats(spark, sf_dir).count()),
+       lambda: T.repetition_stats(documents(spark, sf_dir)).count()),
       # production default (no planting): k-means cells + in-cell
       # exact cosine + CC keep-one over the raw corpus
       ('semantic_dedup',
        lambda: V.semantic_dedup(spark, sf_dir).count()),
       # new-batch-vs-corpus verdicts (exact hash + inverted-index probe)
       ('incremental_dedup',
-       lambda: T.incremental_dedup(spark, sf_dir).count()),
+       lambda: T.incremental_dedup(
+           *T.increment_split(documents(spark, sf_dir))).count()),
       # bigram-LM train + score in one job (two gram-count shuffles)
-      ('lm_score', lambda: T.lm_score(spark, sf_dir).count()),
+      ('lm_score', lambda: T.lm_score(documents(spark, sf_dir)).count()),
       # C4 line cleaning: pure zero-shuffle codegen scan
-      ('c4_line_clean', lambda: C.c4_line_clean(spark, sf_dir).count()),
+      ('c4_line_clean',
+       lambda: C.c4_line_clean(documents(spark, sf_dir)).count()),
       # URL curation: codegen synthesis+normalization, broadcast
       # blocklist, two window shuffles
-      ('url_curation', lambda: C.url_curation(spark, sf_dir).count()),
+      ('url_curation',
+       lambda: C.url_curation(documents(spark, sf_dir)).count()),
       # in-job NB quality classifier: one bounded-model training pass
       # (collected + re-broadcast literal) + one scoring shuffle
       ('quality_classifier',
-       lambda: C.quality_classifier(spark, sf_dir).count()),
+       lambda: C.quality_classifier(documents(spark, sf_dir)).count()),
       # Bloom decontamination: bounded eval-bitmap build + map-only
       # Arrow probe (no joins/shuffles on the train side)
       ('bloom_decontaminate',
-       lambda: C.bloom_decontaminate(spark, sf_dir).count()),
+       lambda: C.bloom_decontaminate(documents(spark, sf_dir)).count()),
       # Dolma-style paragraph dedup: one word-count-shaped shuffle on
       # md5(para) + join-back + per-doc rebuild
       ('dedup_paragraphs',
-       lambda: T.dedup_paragraphs(spark, sf_dir).count()),
+       lambda: T.dedup_paragraphs(documents(spark, sf_dir)).count()),
       # semantic eval decontamination (production default, no
       # planting): eval-side bucket shuffle, train probes by equi-join
       ('semantic_decontaminate',
@@ -234,7 +240,8 @@ def main() -> None:
       # WARC ingest front door: record synthesis + 3-block parse +
       # tag strip in ONE codegen projection, zero shuffles
       ('warc_ingest',
-       lambda: W.parse_warc_records(spark, sf_dir).count()),
+       lambda: W.parse_warc_records(
+           W.synth_warc_records(documents(spark, sf_dir))).count()),
       # iterative join+agg shape: 6 exact-integer fixed-point rounds,
       # each ranks⋈edges + partial-SUM groupBy + join-back, lineage
       # truncated per round; includes link-graph synthesis
@@ -243,10 +250,12 @@ def main() -> None:
       # main-content strip + explode + ONE per-shard window (the
       # north-rule output feeding the tokenizer)
       ('pack_interleaved',
-       lambda: T.pack_interleaved_sequences(spark, sf_dir).count()),
+       lambda: T.pack_interleaved_sequences(main_content_from_spans(
+           interleaved_html_table(spark, sf_dir))).count()),
       # exact two-pass heavy hitters: Arrow-batch candidates + exact
       # verify of the broadcast candidate set (no vocab-sized shuffle)
-      ('heavy_hitters', lambda: T.heavy_hitters(spark, sf_dir).count()),
+      ('heavy_hitters',
+       lambda: T.heavy_hitters(documents(spark, sf_dir)).count()),
       # margin-based bitext mining: broadcast source dimension +
       # double WindowGroupLimit top-k + exact-integer margin verdicts
       ('bitext_mine', lambda: V.bitext_mine(spark, sf_dir).count()),
@@ -255,27 +264,27 @@ def main() -> None:
       # everything distinct-word-sized (Arrow EM passes + micro-unit
       # integer groupBys + the encode accounting join)
       ('unigram_tokenizer',
-       lambda: U.unigram_encode(spark, sf_dir).count()),
+       lambda: U.unigram_encode(documents(spark, sf_dir)).count()),
       # ANN retrieval eval: broadcast query dimension both sides,
       # double WindowGroupLimit top-k, exact-integer metrics
       ('ann_eval', lambda: V.ann_eval(spark, sf_dir).count()),
       # domain-granularity quality rollup: verdicts inlined on the
       # scan, one doc_id join + one map-side-combinable domain groupBy
       ('domain_rollup',
-       lambda: C.domain_quality_rollup(spark, sf_dir).count()),
+       lambda: C.domain_quality_rollup(documents(spark, sf_dir)).count()),
       # T5 span corruption: one doc_id-keyed exchange carries all the
       # windows + per-doc assembly
       ('t5_span_corruption',
-       lambda: T.t5_span_corruption(spark, sf_dir).count()),
+       lambda: T.t5_span_corruption(documents(spark, sf_dir)).count()),
       # varlen length-bucketed batching: two shard-bucket windows
       ('length_bucket_batches',
-       lambda: T.length_bucket_batches(spark, sf_dir).count()),
+       lambda: T.length_bucket_batches(documents(spark, sf_dir)).count()),
       # cluster labeling over the deterministic doc_id % 16 assignment
       # (times the labeling machinery; the kmeans trainer's own cost
       # is a model-build one-off, measured by its scaling evidence)
       ('cluster_topics', lambda: V.cluster_topics(
           spark, sf_dir,
-          assignments=spark.read.parquet(f'{sf_dir}/documents.parquet')
+          assignments=documents(spark, sf_dir)
           .select(FN.col('doc_id').alias('vec_id'),
                   (FN.col('doc_id') % 16).cast('int').alias('cell')))
           .count()),
@@ -293,11 +302,12 @@ def main() -> None:
   # timed: Spark's cache manager matches by canonicalized plan, so a
   # pre-existing cached edge set would silently serve the
   # minhash_pairs query and fake its number.
-  minhash_edges = T.minhash_shingles(spark, sf_dir).persist()
+  minhash_edges = T.minhash_shingles(documents(spark, sf_dir)).persist()
   minhash_edges.count()  # materialize outside the timed section
 
   def dedup_groups_run():
-    return T.dedup_groups(spark, sf_dir, edges=minhash_edges).count()
+    return T.dedup_groups(documents(spark, sf_dir),
+                          edges=minhash_edges).count()
 
   dedup_groups_run()  # warmup
   timed('dedup_groups', dedup_groups_run)

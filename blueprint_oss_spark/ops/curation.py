@@ -35,10 +35,6 @@ PHONE_PATTERN = r"\b\d{3}-\d{4}-\d{4}\b"
 IPV4_PATTERN = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-  return spark.read.parquet(f'{sf_dir}/documents.parquet')
-
-
 def _with_injected_pii(d: DataFrame) -> DataFrame:
   """Deterministically plant PII in a subset of documents.
 
@@ -67,7 +63,7 @@ def _with_injected_pii(d: DataFrame) -> DataFrame:
       'pii_text', F.concat(F.col('text'), email, phone, ip))
 
 
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
   """Scrub emails / phone numbers / IPv4 addresses from document text,
   reporting per-doc match counts alongside the redacted text.
 
@@ -77,7 +73,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
   text (patterns are mutually non-overlapping), then the three
   replacements are applied in a fixed order.
   """
-  d = _with_injected_pii(_docs(spark, sf_dir))
+  d = _with_injected_pii(docs)
   t = F.col('pii_text')
   n = lambda pat: F.size(F.regexp_extract_all(t, F.lit(pat), F.lit(0)))
   scrubbed = F.regexp_replace(
@@ -101,10 +97,9 @@ def _ngrams(col, n: int):
   return F.array_distinct(word_ngrams(normalized_words(col), n))
 
 
-def decontaminate(spark: SparkSession, sf_dir: str, *,
+def decontaminate(docs: DataFrame, *,
                   n: int = DECON_N,
-                  eval_texts: DataFrame | None = None,
-                  docs: DataFrame | None = None) -> DataFrame:
+                  eval_texts: DataFrame | None = None) -> DataFrame:
   """Benchmark decontamination: flag training documents that share any
   word n-gram with the held-out eval set, returning each contaminated
   doc_id with its count of distinct shared n-grams.
@@ -125,8 +120,7 @@ def decontaminate(spark: SparkSession, sf_dir: str, *,
   broadcast set; only matching (rare) rows reach the final groupBy, so
   the one shuffle moves contaminated grams only.
   """
-  d = _spread((docs if docs is not None else _docs(spark, sf_dir))
-              .select('doc_id', 'text')) \
+  d = _spread(docs.select('doc_id', 'text')) \
       .select('doc_id', _ngrams(F.col('text'), n).alias('grams'))
   if eval_texts is not None:
     eval_grams = (eval_texts
@@ -158,12 +152,11 @@ def _bloom_doc_grams(lowered: str | None, n: int) -> set[str]:
   return set(py_word_ngrams(py_normalized_words(lowered), n))
 
 
-def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
+def bloom_decontaminate(docs: DataFrame, *,
                         eval_mod: int = EVAL_MOD,
                         m_bits: int = 1 << 20, k: int = 4,
                         eval_texts: DataFrame | None = None,
-                        sort: bool = True,
-                        docs: DataFrame | None = None) -> DataFrame:
+                        sort: bool = True) -> DataFrame:
   """Benchmark decontamination via a Bloom filter — the fixed-memory
   scale path for when the eval side is too large to broadcast as a
   string dimension (`decontaminate` ships every distinct eval n-gram to
@@ -221,8 +214,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
   # both the build and probe Arrow stages inherit the spread.  Both
   # stages take JVM-lowered text (see _bloom_doc_grams).
   lowered = F.lower('text').alias('text')
-  base = _spread((docs if docs is not None else _docs(spark, sf_dir))
-                 .select('doc_id', 'text'))
+  base = _spread(docs.select('doc_id', 'text'))
   if eval_texts is not None:
     eval_side = eval_texts.select(lowered)
     train = base
@@ -271,7 +263,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
       words['bits'].to_numpy(dtype=np.int64).astype(np.uint64)
   # broadcast as bytes: python bytes indexing yields ints directly,
   # ~3x faster than numpy scalar indexing in the per-gram loop
-  bc = spark.sparkContext.broadcast(bytes(bitmap))
+  bc = docs.sparkSession.sparkContext.broadcast(bytes(bitmap))
 
   def _probe_batches(batches):
     # one Arrow stage computes n_flagged AND drops clean docs, so the
@@ -305,7 +297,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str, *,
       'doc_id', sort=sort)
 
 
-def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
+def decontaminate_spans(docs: DataFrame, *,
                         min_run_tokens: int = None,
                         sort: bool = True,
                         eval_texts: DataFrame | None = None) -> DataFrame:
@@ -337,7 +329,7 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
   `decontaminate`, whose flag-only semantics can afford it)."""
   from .textops import gram_occurrences, strip_covered_tokens
 
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   if eval_texts is not None:
     ev_side = eval_texts.select(F.lit('').alias('doc_id'), 'text')
     train = d
@@ -359,7 +351,7 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str, *,
 _QC_BUCKETS = 4096
 
 
-def quality_classifier(spark: SparkSession, sf_dir: str, *,
+def quality_classifier(docs: DataFrame, *,
                        labels: DataFrame | None = None) -> DataFrame:
   """fastText-style hashed bag-of-words quality classifier, trained
   in-job and applied corpus-wide — the GPT-3/CCNet/FineWeb pattern
@@ -395,7 +387,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
   produce no row."""
   from .textops import quality_keep_expr
 
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
 
   bkt = lambda w: F.pmod(
       F.conv(F.substring(F.md5(F.concat(F.lit('qc:'), w)), 1, 8),
@@ -435,7 +427,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
                 .collect())
   t1 = sum(r['c1'] for r in model_rows)
   t0 = sum(r['c0'] for r in model_rows)
-  cnt = spark.createDataFrame(
+  cnt = docs.sparkSession.createDataFrame(
       [(r['bkt'], r['c1'], r['c0']) for r in model_rows] or
       [(None, None, None)],
       'bkt long, c1 long, c0 long').where(F.col('bkt').isNotNull())
@@ -462,17 +454,19 @@ def quality_classifier(spark: SparkSession, sf_dir: str, *,
       .orderBy('doc_id'))
 
 
-def web_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def web_curation_pipeline(spans: DataFrame, docs: DataFrame) -> DataFrame:
   """The web-scale training-data path END TO END as one declarative
-  plan: interleaved HTML+PDF+media spans → main-content extraction
+  plan: interleaved HTML+PDF+media `spans` (interleaved_html_table's
+  shape) → main-content extraction
   (boilerplate strip / layout parse, ops/html_extract) → per-doc text
   reassembly → Gopher-style quality filter → exact-Jaccard dedup
   groups among the survivors → keep-one representative.
 
   This is the composition a real 100 TB web-corpus run executes: the
   extraction stage is the zero-shuffle mapInPandas pipeline, the
-  curation stages are the already-oracled JVM-side operators riding
-  their docs= seams, and the whole chain is ONE Catalyst plan.  The
+  curation stages are the already-oracled JVM-side operators over the
+  derived text, and the whole chain is ONE Catalyst plan.  `docs`
+  supplies each doc's `lang`.  The
   DuckDB oracle recomputes EVERYTHING from the raw documents table —
   the derived main-content text is a pure string formula
   (interleaved_html_table's recoverable-ground-truth design), feeding
@@ -480,33 +474,28 @@ def web_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
   curation_pipeline uses.  doc_ids are strings here (the input-hint
   schema), so group representatives are lexicographic minima in both
   engines."""
-  from .html_extract import (
-      interleaved_html_table, main_content_from_spans,
-  )
+  from .html_extract import main_content_from_spans
   from .textops import dedup_groups, quality_filter
 
-  spans = interleaved_html_table(spark, sf_dir)
   mc = main_content_from_spans(spans)
   text = F.concat_ws(' ', F.transform(
       F.filter('out_spans', lambda s: s['kind'] == F.lit('text')),
       lambda s: s['text']))
   derived = mc.select('doc_id', text.alias('text'))
 
-  lang = _docs(spark, sf_dir).select(
+  lang = docs.select(
       F.col('doc_id').cast('string').alias('doc_id'), 'lang')
 
-  q = quality_filter(spark, sf_dir, docs=derived) \
-      .where(F.col('keep') == 1).select('doc_id')
+  q = quality_filter(derived).where(F.col('keep') == 1).select('doc_id')
   kept = derived.join(q, 'doc_id')
-  groups = dedup_groups(spark, sf_dir, docs=kept)
+  groups = dedup_groups(kept)
   return (groups.where(F.col('doc_id') == F.col('group_id'))
           .join(lang, 'doc_id')
           .select('doc_id', 'lang', 'group_id', 'group_size')
           .orderBy('doc_id'))
 
 
-def _bucketed_greedy_prefix(spark: SparkSession, base: DataFrame,
-                            budget_fn) -> DataFrame:
+def _bucketed_greedy_prefix(base: DataFrame, budget_fn) -> DataFrame:
   """Shared bucket-accelerated greedy token-budget prefix: given `base`
   with (doc_id, source, n_tokens, order_key, bucket) and a
   `budget_fn(totals_by_source) -> budget_by_source`, mark mix_keep=1
@@ -536,7 +525,7 @@ def _bucketed_greedy_prefix(spark: SparkSession, base: DataFrame,
         break
       cum += bm[b]
     lim_rows.append((src, cb, rem))
-  lim = spark.createDataFrame(
+  lim = base.sparkSession.createDataFrame(
       lim_rows, 'source string, cb int, rem long')
 
   from pyspark.sql import Window
@@ -557,9 +546,8 @@ def _bucketed_greedy_prefix(spark: SparkSession, base: DataFrame,
   return before.unionByName(crossing).unionByName(after)
 
 
-def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
-                     per_source_tokens: int = 800,
-                     docs: DataFrame = None) -> DataFrame:
+def corpus_split_mix(docs: DataFrame, *,
+                     per_source_tokens: int = 800) -> DataFrame:
   """Per-document training-run assignment: stable 90/5/5 % split into
   train/valid/test, one of 8 shard ids, deterministic global training
   order, and exact greedy token-budget mixture sampling per source —
@@ -587,8 +575,7 @@ def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
   bucket pay a window.  Everything else is a broadcast-joined map
   pass.  Split/shard/order are shuffle-free column expressions.
   """
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'source', 'text')
+  d = docs.select('doc_id', 'source', 'text')
 
   def h(salt: str):
     return F.conv(
@@ -603,7 +590,7 @@ def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
       h('order').alias('order_key'))
   base = base.withColumn('bucket', F.shiftright('order_key', 24))
   assigned = _bucketed_greedy_prefix(
-      spark, base, lambda totals: {s: per_source_tokens for s in totals})
+      base, lambda totals: {s: per_source_tokens for s in totals})
 
   split = (F.when(F.pmod('split_h', F.lit(100)) < 90, 'train')
            .when(F.pmod('split_h', F.lit(100)) < 95, 'valid')
@@ -616,11 +603,10 @@ def corpus_split_mix(spark: SparkSession, sf_dir: str, *,
       .orderBy('doc_id'))
 
 
-def temperature_mix(spark: SparkSession, sf_dir: str, *,
+def temperature_mix(docs: DataFrame, *,
                     temperature: int = 2,
                     cap_tokens: int = 2000,
-                    total_budget_tokens: int = 3000,
-                    docs: DataFrame | None = None) -> DataFrame:
+                    total_budget_tokens: int = 3000) -> DataFrame:
   """T5-style examples-proportional mixture with limit + temperature
   (Raffel et al. 2020 §3.5.3): each source s with n_s corpus tokens
   gets sampling weight w_s = min(n_s, K)^(1/T); its token budget is
@@ -649,8 +635,7 @@ def temperature_mix(spark: SparkSession, sf_dir: str, *,
                      f'powers keep the oracle bit-exact); got '
                      f'{temperature}')
 
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'source', 'text')
+  d = docs.select('doc_id', 'source', 'text')
 
   def h(salt: str):
     return F.conv(
@@ -684,8 +669,8 @@ def temperature_mix(spark: SparkSession, sf_dir: str, *,
     budget_holder.update({s: (totals[s], out[s]) for s in totals})
     return out
 
-  assigned = _bucketed_greedy_prefix(spark, base, _budgets)
-  src_dim = spark.createDataFrame(
+  assigned = _bucketed_greedy_prefix(base, _budgets)
+  src_dim = docs.sparkSession.createDataFrame(
       [(s, t, b) for s, (t, b) in sorted(budget_holder.items())],
       'source string, src_tokens long, src_budget long')
   return (assigned
@@ -695,10 +680,9 @@ def temperature_mix(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def unimax_mix(spark: SparkSession, sf_dir: str, *,
+def unimax_mix(docs: DataFrame, *,
                epoch_cap: int = 1,
-               total_budget_tokens: int = 24000,
-               docs: DataFrame | None = None) -> DataFrame:
+               total_budget_tokens: int = 24000) -> DataFrame:
   """UniMax language/source sampling (Chung et al. 2023, "UniMax:
   Fairer and More Effective Language Sampling for Large-Scale
   Multilingual Pretraining"): distribute the token budget as uniformly
@@ -724,8 +708,7 @@ def unimax_mix(spark: SparkSession, sf_dir: str, *,
   Returns (doc_id, source, n_tokens, src_tokens, src_budget,
   mix_keep).
   """
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'source', 'text')
+  d = docs.select('doc_id', 'source', 'text')
 
   def h(salt: str):
     return F.conv(
@@ -752,8 +735,8 @@ def unimax_mix(spark: SparkSession, sf_dir: str, *,
     budget_holder.update({s: (totals[s], out[s]) for s in totals})
     return out
 
-  assigned = _bucketed_greedy_prefix(spark, base, _budgets)
-  src_dim = spark.createDataFrame(
+  assigned = _bucketed_greedy_prefix(base, _budgets)
+  src_dim = docs.sparkSession.createDataFrame(
       [(s, t, b) for s, (t, b) in sorted(budget_holder.items())],
       'source string, src_tokens long, src_budget long')
   return (assigned
@@ -763,7 +746,7 @@ def unimax_mix(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
+def dsir_importance_select(docs: DataFrame, *,
                            target_docs: DataFrame = None) -> DataFrame:
   """DSIR-style data selection (Xie et al. 2023, "Data Selection for
   Language Models via Importance Resampling", arXiv:2302.03169):
@@ -795,7 +778,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
   (doc_fingerprints), computed JVM-side per occurrence.  No Python,
   no driver collect; the only scalar (N_T, N_R) rides a broadcast
   1-row cross join."""
-  d = _docs(spark, sf_dir).select('doc_id', 'lang', 'text')
+  d = docs.select('doc_id', 'lang', 'text')
   feats = d.select('doc_id', 'lang', words('text').alias('w')) \
       .select('doc_id', 'lang',
               F.concat(F.col('w'), word_ngrams('w', 2)).alias('feats'))
@@ -856,8 +839,7 @@ def dsir_importance_select(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def c4_line_clean(spark: SparkSession, sf_dir: str, *,
-                  docs: DataFrame = None) -> DataFrame:
+def c4_line_clean(docs: DataFrame) -> DataFrame:
   """C4-style line-level page cleaning (Raffel et al. 2020, "Exploring
   the Limits of Transfer Learning with a Unified Text-to-Text
   Transformer", arXiv:1910.10683 §2.2): keep only lines that end in a
@@ -886,8 +868,7 @@ def c4_line_clean(spark: SparkSession, sf_dir: str, *,
   operators in ops/textops.py).
   """
   w = 10
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   # one synthesized line per w-slot chunk of the RAW
   # split (not `words`: the oracle re-synthesizes from raw slots);
   # suffix order: core + javascript-noise + page-poison + terminal
@@ -938,10 +919,9 @@ _URL_TLDS = ('.com', '.org', '.net', '.io', '.edu')
 _URL_BAD_WORDS = ('casino', 'poker')
 
 
-def url_curation(spark: SparkSession, sf_dir: str, *,
+def url_curation(docs: DataFrame, *,
                  domain_cap: int = 2, keep_only: bool = False,
                  sort: bool = True,
-                 docs: DataFrame = None,
                  opt_out_domains: DataFrame | None = None) -> DataFrame:
   """RefinedWeb-style URL-level curation (Penedo et al. 2023 §3.1,
   "The RefinedWeb Dataset for Falcon LLM", arXiv:2306.01116): URL
@@ -967,8 +947,8 @@ def url_curation(spark: SparkSession, sf_dir: str, *,
   so normalization provably converges colliding docs and the DuckDB
   oracle re-synthesizes byte-identical URLs and recomputes every
   verdict from scratch.  The curation logic itself reads ONLY the
-  `url` string — synthesis columns are dropped — so handing in a
-  real-URL frame via `docs=` (with a `url` column) works unchanged.
+  `url` string — synthesis columns are dropped — so a real-URL frame
+  (one with a `url` column) works unchanged.
 
   Scale shape: scan → project (synthesis + normalization, all
   whole-stage-codegen string ops) → two irreducible shuffles: the
@@ -989,8 +969,7 @@ def url_curation(spark: SparkSession, sf_dir: str, *,
   and set-equality with the full verdict surface.  The blocklist is a
   broadcast dimension, never shuffled.
   """
-  d = (docs if docs is not None else _docs(spark, sf_dir))
-  if 'url' not in d.columns:
+  if 'url' not in docs.columns:
     did = F.col('doc_id')
     url_key = did % 350
     site = url_key % 53
@@ -1023,9 +1002,9 @@ def url_curation(spark: SparkSession, sf_dir: str, *,
         F.when(did % 13 == 0,
                F.concat(F.lit('#s'), (did % 4).cast('string')))
          .otherwise(F.lit('')))
-    d = d.select('doc_id', url.alias('url'))
+    d = docs.select('doc_id', url.alias('url'))
   else:
-    d = d.select('doc_id', 'url')
+    d = docs.select('doc_id', 'url')
 
   # normalization: each step is a Java-regex ∩ RE2 pattern so the
   # DuckDB oracle applies the identical pipeline
@@ -1050,8 +1029,8 @@ def url_curation(spark: SparkSession, sf_dir: str, *,
   # honoring an opt-out list costs nothing beyond the existing join
   blocked_hosts = [f'site{s}{t}' for s in range(0, 53, 13)
                    for t in _URL_TLDS]
-  bl_df = spark.createDataFrame([(h,) for h in blocked_hosts],
-                                'domain string')
+  bl_df = docs.sparkSession.createDataFrame(
+      [(h,) for h in blocked_hosts], 'domain string')
   if opt_out_domains is not None:
     bl_df = bl_df.unionByName(
         opt_out_domains.select(F.lower(F.col('domain')).alias('domain'))
@@ -1165,10 +1144,10 @@ def synth_robots_table(spark: SparkSession) -> DataFrame:
       txt.alias('robots_txt'))
 
 
-def parse_robots(spark: SparkSession, *,
-                 robots: DataFrame = None) -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
   """Parse (domain, robots_txt) into one row per directive:
-  (domain, agent, directive, value, pos).
+  (domain, agent, directive, value, pos).  `synth_robots_table` is the
+  gate's input.
 
   Sectioning (each rule belongs to the most recent 'User-agent:'
   line) is a running last-non-null over line position — ONE window on
@@ -1182,10 +1161,9 @@ def parse_robots(spark: SparkSession, *,
   rules before any User-agent line are ignored (agent NULL).
   """
   from pyspark.sql import Window
-  r = robots if robots is not None else synth_robots_table(spark)
-  lines = r.select('domain',
-                   F.posexplode(F.split('robots_txt', '\n'))
-                   .alias('pos', 'line'))
+  lines = robots.select('domain',
+                        F.posexplode(F.split('robots_txt', '\n'))
+                        .alias('pos', 'line'))
   ag = F.regexp_extract('line', r'^User-agent:\s*(\S+)\s*$', 1)
   dr = F.regexp_extract('line',
                         r'^(Disallow|Allow|Crawl-delay):\s*(\S*)\s*$', 1)
@@ -1206,11 +1184,11 @@ def parse_robots(spark: SparkSession, *,
           .select('domain', 'agent', 'directive', 'value', 'pos'))
 
 
-def robots_verdicts(spark: SparkSession, sf_dir: str, *,
-                    agent: str = '*',
-                    urls: DataFrame = None,
-                    rules: DataFrame = None) -> DataFrame:
-  """Per-document crawl-permission verdict: Google-REP longest-match
+def robots_verdicts(urls: DataFrame, rules: DataFrame, *,
+                    agent: str = '*') -> DataFrame:
+  """Per-document crawl-permission verdict for `urls` (doc_id,
+  norm_url, domain — url_curation's columns) under `rules`
+  (parse_robots' rows): Google-REP longest-match
   semantics over the agent's Allow/Disallow prefixes (ties go to
   Allow — the least-restrictive rule), no match = allowed.  RFC 9309
   group selection: a domain's rules come from the group naming
@@ -1231,18 +1209,14 @@ def robots_verdicts(spark: SparkSession, sf_dir: str, *,
   robots_rule); robots_rule is the winning prefix (NULL if no rule
   matched).
   """
-  u = (urls if urls is not None
-       else url_curation(spark, sf_dir)
-       .select('doc_id', 'norm_url', 'domain'))
-  rl = rules if rules is not None else parse_robots(spark)
-  cand = rl.where(F.col('agent').isin(agent, '*')
-                  & F.col('directive').isin('Allow', 'Disallow')
-                  & (F.length('value') > 0))
+  cand = rules.where(F.col('agent').isin(agent, '*')
+                     & F.col('directive').isin('Allow', 'Disallow')
+                     & (F.length('value') > 0))
   # RFC 9309 group selection on the dimension side: domains with a
   # group naming `agent` use ONLY it; the rest fall back to '*'.
   # Group PRESENCE is judged over all the agent's directives (a group
   # holding only a Crawl-delay still replaces '*' entirely)
-  spec = (rl.where(F.col('agent') == F.lit(agent))
+  spec = (rules.where(F.col('agent') == F.lit(agent))
           .select('domain').distinct()
           .withColumn('has_spec', F.lit(1)))
   dim = (cand.join(spec, 'domain', 'left')
@@ -1254,7 +1228,7 @@ def robots_verdicts(spark: SparkSession, sf_dir: str, *,
                           F.col('value').alias('prefix')).alias('r'))
          .groupBy('domain').agg(F.collect_list('r').alias('rules')))
   path_raw = F.regexp_extract('norm_url', r'^https://[^/]+(/.*)$', 1)
-  staged = (u.join(F.broadcast(dim), 'domain', 'left')
+  staged = (urls.join(F.broadcast(dim), 'domain', 'left')
             .select('doc_id', 'norm_url', 'domain',
                     F.when(path_raw != '', path_raw).otherwise(F.lit('/'))
                      .alias('path'),
@@ -1277,12 +1251,11 @@ def robots_verdicts(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def crawl_schedule(spark: SparkSession, sf_dir: str, *,
-                   agent: str = '*', default_delay: int = 1,
-                   urls: DataFrame = None,
-                   rules: DataFrame = None) -> DataFrame:
-  """Politeness scheduling for the kept crawl frontier: per domain,
-  order the kept URLs and space fetches by the domain's parsed
+def crawl_schedule(urls: DataFrame, rules: DataFrame, *,
+                   agent: str = '*', default_delay: int = 1) -> DataFrame:
+  """Politeness scheduling for the kept crawl frontier `urls`
+  (doc_id, domain — url_curation's kept docs): per domain, order the
+  kept URLs and space fetches by the domain's parsed
   Crawl-delay — slot k fetches at offset k * delay seconds.  The step
   a distributed fetcher runs after url_curation + robots_verdicts so
   no domain is hammered regardless of how many of its URLs survived
@@ -1305,25 +1278,21 @@ def crawl_schedule(spark: SparkSession, sf_dir: str, *,
   strict group replacement for path rules).
   """
   from pyspark.sql import Window
-  u = (urls if urls is not None
-       else url_curation(spark, sf_dir, keep_only=True)
-       .select('doc_id', 'domain'))
-  rl = rules if rules is not None else parse_robots(spark)
-  # rlike guard, not just nonempty: through the rules= seam a
+  # rlike guard, not just nonempty: in a real rules table a
   # malformed 'Crawl-delay: fast' would THROW under ANSI cast.
   # RFC 9309 group fallback in one aggregate: min(struct(is_fallback,
   # delay)) prefers a group naming `agent` (0 sorts first) and takes
   # the smallest delay within the chosen tier
-  delays = (rl.where(F.col('agent').isin(agent, '*')
-                     & (F.col('directive') == 'Crawl-delay')
-                     & F.col('value').rlike('^[0-9]+$'))
+  delays = (rules.where(F.col('agent').isin(agent, '*')
+                        & (F.col('directive') == 'Crawl-delay')
+                        & F.col('value').rlike('^[0-9]+$'))
             .groupBy('domain')
             .agg(F.min(F.struct(
                 (F.col('agent') != agent).cast('int').alias('fb'),
                 F.col('value').cast('long').alias('d'))).alias('t'))
             .select('domain', F.col('t.d').alias('crawl_delay')))
   w = Window.partitionBy('domain').orderBy('doc_id')
-  return (u.join(F.broadcast(delays), 'domain', 'left')
+  return (urls.join(F.broadcast(delays), 'domain', 'left')
           .select('doc_id', 'domain',
                   (F.row_number().over(w) - 1).cast('long').alias('slot'),
                   F.coalesce('crawl_delay',
@@ -1346,7 +1315,7 @@ _ABLATION_FLAG = {
 }
 
 
-def curation_ablation(spark: SparkSession, sf_dir: str, *,
+def curation_ablation(docs: DataFrame, *,
                       plant_for_verification: bool = False) -> DataFrame:
   """Per-document curation-filter verdicts — the raw material of the
   filter-ablation tables Dolma / RefinedWeb / Gopher publish (how many
@@ -1381,7 +1350,7 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
 
   from .textops import quality_keep_expr
 
-  raw = _docs(spark, sf_dir).select('doc_id', 'text')
+  raw = docs.select('doc_id', 'text')
   if plant_for_verification:
     # The synthetic corpora have (almost) no exact duplicates, so the
     # dup verdict would be vacuously zero at the gate scale (the
@@ -1411,8 +1380,7 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
           'f_dup',
           (F.col('doc_id') != F.min('doc_id').over(w)).cast('int'))
       .drop('text'))
-  dec = decontaminate(spark, sf_dir, docs=raw) \
-      .select('doc_id', 'n_shared')
+  dec = decontaminate(raw).select('doc_id', 'n_shared')
   v = (base.join(dec, 'doc_id', 'left')
        .select('doc_id', 'f_eval', 'f_quality', 'f_dup',
                (F.col('n_pii') > 0).cast('int').alias('f_pii'),
@@ -1428,10 +1396,9 @@ def curation_ablation(spark: SparkSession, sf_dir: str, *,
   return v.withColumn('first_fail', first).orderBy('doc_id')
 
 
-def curation_ablation_report(spark: SparkSession, sf_dir: str, *,
-                             verdicts: DataFrame | None = None
-                             ) -> DataFrame:
-  """The published ablation TABLE over `curation_ablation`'s verdicts:
+def curation_ablation_report(verdicts: DataFrame) -> DataFrame:
+  """The published ablation TABLE over `curation_ablation`'s
+  `verdicts`:
 
   * section='funnel', one row per filter in `ABLATION_FILTERS` order:
     `n_marginal` (docs the filter rejects judged alone),
@@ -1447,10 +1414,7 @@ def curation_ablation_report(spark: SparkSession, sf_dir: str, *,
   aggregate of map-side-combinable sums (5 marginal + 5 attributed +
   10 pairwise products + a count → a single 21-column row), which is
   then `inline`d into the 16 report rows — at 100 TB the report costs
-  one combinable reduce, nothing else.  Pass `verdicts=` to reuse an
-  already-materialized verdict frame (the gate does)."""
-  v = (verdicts if verdicts is not None
-       else curation_ablation(spark, sf_dir))
+  one combinable reduce, nothing else."""
   names = list(ABLATION_FILTERS)
   aggs = [F.count(F.lit(1)).alias('total')]
   for name in names:
@@ -1463,7 +1427,7 @@ def curation_ablation_report(spark: SparkSession, sf_dir: str, *,
       aggs.append(F.sum(F.col(_ABLATION_FLAG[a])
                         * F.col(_ABLATION_FLAG[b]))
                   .alias(f'o_{a}__{b}'))
-  row = v.agg(*aggs)
+  row = verdicts.agg(*aggs)
 
   nul_l = F.lit(None).cast('long')
   nul_s = F.lit(None).cast('string')
@@ -1497,11 +1461,10 @@ def curation_ablation_report(spark: SparkSession, sf_dir: str, *,
           .orderBy('section', 'stage', 'filter_a', 'filter_b'))
 
 
-def domain_quality_rollup(spark: SparkSession, sf_dir: str, *,
+def domain_quality_rollup(docs: DataFrame, *,
                           keep_num: int = 1, keep_den: int = 2,
                           min_docs: int = 1,
-                          urls: DataFrame = None,
-                          docs: DataFrame = None) -> DataFrame:
+                          urls: DataFrame = None) -> DataFrame:
   """DOMAIN-granularity quality report — the aggregation RefinedWeb
   (Penedo et al. 2023) and Dolma make curation decisions at: a spam
   farm or template mill is visible in its domain's AGGREGATE keep
@@ -1525,9 +1488,9 @@ def domain_quality_rollup(spark: SparkSession, sf_dir: str, *,
   word-count shape).  Output is domain-count-sized.
 
   `urls=` takes any (doc_id, domain) frame (production passes its
-  real URL table); default synthesizes via url_curation's
-  deterministic URL grid so the DuckDB oracle can recompute every
-  cell from scratch.
+  real URL table); default is url_curation's deterministic URL grid
+  over `docs`, so the DuckDB oracle can recompute every cell from
+  scratch.
 
   `urls=` CONTRACT — exactly one row per doc_id: the verdict join is
   an inner equi-join, so (a) a doc_id appearing under multiple URLs
@@ -1538,10 +1501,9 @@ def domain_quality_rollup(spark: SparkSession, sf_dir: str, *,
   left: a doc with no known domain has no domain to roll into).
   Duplicate doc_ids raise at execution rather than double-count."""
   from .textops import quality_keep_expr
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
-  u = (urls if urls is not None
-       else url_curation(spark, sf_dir).select('doc_id', 'domain'))
+  d = docs.select('doc_id', 'text')
+  if urls is None:
+    urls = url_curation(docs).select('doc_id', 'domain')
   # stage the token array ONCE, then thread it through the toks= seam
   # (the data_card pattern): interpreted HOFs get no CSE, so the
   # default inline tokenization inside quality_keep_expr would re-run
@@ -1557,7 +1519,7 @@ def domain_quality_rollup(spark: SparkSession, sf_dir: str, *,
   # `domain` column (a separate asserted-then-dropped column would be
   # pruned away by Catalyst, silently disabling the check) and
   # raise_error's branch is only evaluated on offending rows
-  u = (u.groupBy('doc_id')
+  u = (urls.groupBy('doc_id')
        .agg(F.min('domain').alias('_dom'),
             F.count(F.lit(1)).alias('_n'))
        .select('doc_id',

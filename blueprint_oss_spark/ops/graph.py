@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from blueprint_oss_spark.spark.sources import documents
+
 
 def connected_components(edges: DataFrame, src: str = 'src',
                          dst: str = 'dst') -> DataFrame:
@@ -235,7 +237,7 @@ def pagerank(spark: SparkSession, sf_dir: str, *,
   broadcast dimension; the per-round plan shape is unchanged.
   """
   d = (docs if docs is not None
-       else spark.read.parquet(f'{sf_dir}/documents.parquet'))
+       else documents(spark, sf_dir))
   nodes = d.select(F.col('doc_id').cast('long').alias('doc_id'))
   n = nodes.count()
   if edges is None:
@@ -349,7 +351,7 @@ def hits(spark: SparkSession, sf_dir: str, *,
   """
   mass = 10 ** 9
   d = (docs if docs is not None
-       else spark.read.parquet(f'{sf_dir}/documents.parquet'))
+       else documents(spark, sf_dir))
   nodes = d.select(F.col('doc_id').cast('long').alias('doc_id'))
   n = nodes.count()
   if edges is None:

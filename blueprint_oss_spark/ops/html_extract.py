@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from .html_events import DATA, ENDTAG, STARTTAG, html_events
+from ..spark.sources import documents
 
 _SKIP_SUBTREE = {'script', 'style', 'nav', 'header', 'footer', 'aside',
                  'form', 'noscript', 'iframe', 'button', 'svg',
@@ -196,7 +197,7 @@ def html_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
   per doc) → DOM-heuristic strip back to main text.  Arrow-batched
   mapInPandas; ground truth is the original text column, so the DuckDB
   oracle recomputes the expected output engine-independently."""
-  docs = spark.read.parquet(f'{sf_dir}/documents.parquet') \
+  docs = documents(spark, sf_dir) \
       .select('doc_id', 'text') \
       .withColumn('variant',
                   F.pmod(F.xxhash64('doc_id'), F.lit(3)).cast('int'))
@@ -249,7 +250,7 @@ def interleaved_html_table(spark: SparkSession, sf_dir: str) -> DataFrame:
   from ..spark.pdf import CHAR_ADVANCE, write_simple_pdf
   from ..spark.pipeline import SPANS_SCHEMA
 
-  docs = spark.read.parquet(f'{sf_dir}/documents.parquet') \
+  docs = documents(spark, sf_dir) \
       .select(F.col('doc_id').cast('string').alias('doc_id'), 'text') \
       .withColumn('variant',
                   F.pmod(F.xxhash64('doc_id'), F.lit(3)).cast('int'))
@@ -425,7 +426,7 @@ def extract_links(spark: SparkSession, sf_dir: str, *,
   no rows (matching the SQL template-join oracle).
   """
   if docs is None:
-    base = spark.read.parquet(f'{sf_dir}/documents.parquet') \
+    base = documents(spark, sf_dir) \
         .select('doc_id', 'text') \
         .withColumn('variant', (F.col('doc_id') % 3).cast('int'))
     id_type = base.schema['doc_id'].dataType
@@ -664,7 +665,7 @@ def justext_main_content(spark: SparkSession, sf_dir: str, *,
   pinned) — identical to the readability path; at 10^12 docs the only
   lever is executor count."""
   d = (docs if docs is not None
-       else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
+       else documents(spark, sf_dir)) \
       .select('doc_id', 'text') \
       .withColumn('variant',
                   F.pmod(F.col('doc_id').cast('long'),

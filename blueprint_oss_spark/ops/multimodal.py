@@ -719,7 +719,7 @@ def interleaved_near_dup(spark: SparkSession, sf_dir: str, *,
              F.array_sort(F.collect_list(
                  F.struct('s.order', 's.text'))),
              lambda st: st['text'])).alias('text')))
-  tp = (ngram_jaccard_pairs(spark, sf_dir, docs=txt)
+  tp = (ngram_jaccard_pairs(txt)
         .withColumn('text_dup', F.lit(1)))
 
   med = (ex.where(F.col('s.kind') == 'media')
@@ -1248,15 +1248,14 @@ def tokenize_interleaved(spark: SparkSession, sf_dir: str, *,
   if tokenizer == 'unigram':
     from .unigram import unigram_encode, unigram_train
     if merges is None:
-      merges = unigram_train(spark, sf_dir, docs=docs,
-                             special_tokens=(MEDIA_TOKEN,))
-    enc = unigram_encode(spark, sf_dir, vocab=merges, docs=docs,
+      merges = unigram_train(docs, special_tokens=(MEDIA_TOKEN,))
+    enc = unigram_encode(docs, vocab=merges,
                          special_tokens=(MEDIA_TOKEN,))
   elif tokenizer == 'bpe':
     if merges is None:
-      merges = bpe_train(spark, sf_dir, n_merges=n_merges, docs=docs,
+      merges = bpe_train(docs, n_merges=n_merges,
                          special_tokens=(MEDIA_TOKEN,))
-    enc = bpe_encode(spark, sf_dir, merges=merges, docs=docs,
+    enc = bpe_encode(docs, merges=merges,
                      special_tokens=(MEDIA_TOKEN,))
   else:
     raise ValueError(f'unknown tokenizer: {tokenizer!r}')

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from blueprint_oss_spark.ops.common import words
+from blueprint_oss_spark.spark.sources import documents
 
 #: Per-language keep-rate expressed as an md5-hex threshold string:
 #: md5(doc_id) is uniform over [0, 16^32), so keeping rows with
@@ -32,7 +33,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
   is stable under retries/re-partitioning (a resumed job keeps the
   same sample), and pushes down to a scan + filter — no shuffle at
   all.  Rates per stratum come from STRATA_THRESHOLDS."""
-  d = spark.read.parquet(f'{sf_dir}/documents.parquet')
+  d = documents(spark, sf_dir)
   # doc_id is numeric in the testdata table; hash its decimal string
   # form (identical rendering in every engine)
   h = F.md5(F.col('doc_id').cast('string'))
@@ -83,7 +84,7 @@ def hll_distinct(spark: SparkSession, sf_dir: str, *,
   true_distinct is the exact count for verification at gate scale
   (drop it at 100 TB; it is the cost HLL avoids)."""
   d = (docs if docs is not None else
-       spark.read.parquet(f'{sf_dir}/documents.parquet')) \
+       documents(spark, sf_dir)) \
       .select(F.col('lang').alias('grp'), F.col('text').alias('v'))
 
   h = F.conv(F.substring(F.md5(F.col('v')), 1, 15), 16, 10) \
@@ -151,7 +152,7 @@ def sampled_quantiles(spark: SparkSession, sf_dir: str, *,
   then one bounded per-group aggregation.  Groups whose sample is
   empty produce no row (raise the rate, not the interpolation)."""
   d = (docs if docs is not None else
-       spark.read.parquet(f'{sf_dir}/documents.parquet')) \
+       documents(spark, sf_dir)) \
       .select('doc_id', 'lang', F.length('text').alias('v'))
   s = d.where(F.md5(F.col('doc_id').cast('string')) < F.lit(threshold))
   agg = (s.groupBy('lang')
@@ -170,7 +171,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
   ANALYZE-style summary a curation run logs per snapshot.  One
   map-side-combinable groupBy; every aggregate is exact (no approx
   sketches) so DuckDB recomputes it bit-for-bit."""
-  d = spark.read.parquet(f'{sf_dir}/documents.parquet')
+  d = documents(spark, sf_dir)
   return (d.groupBy('lang')
           .agg(F.count(F.lit(1)).alias('n_docs'),
                F.count_distinct(F.col('text')).alias('n_distinct_texts'),
@@ -203,7 +204,7 @@ def data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops.textops import quality_keep_expr
   # stage the token array once (no CSE for interpreted HOFs — the
   # review caught n_toks + every keep sub-verdict each re-tokenizing)
-  d = spark.read.parquet(f'{sf_dir}/documents.parquet') \
+  d = documents(spark, sf_dir) \
       .select('lang', 'source', 'text', words('text').alias('toks'))
   base = d.select(
       'lang', 'source', 'text',
@@ -264,7 +265,7 @@ def shard_manifests(spark: SparkSession, sf_dir: str, *,
   checksum sum rides decimal(38,0) (10^12 docs x 2^60 ≈ 10^30, far
   below overflow) and collapses to int64 with one pmod."""
   d = (docs if docs is not None
-       else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
+       else documents(spark, sf_dir)) \
       .select('doc_id', 'text')
   did = F.col('doc_id').cast('string')
   fp = F.conv(F.substring(F.md5(F.concat_ws(':', did, F.col('text'))),

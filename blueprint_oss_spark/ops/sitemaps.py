@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops.curation import (_URL_TLDS, _URL_WORDS,
                                               url_curation)
+from blueprint_oss_spark.spark.sources import documents
 
 _SM_HEADER = ('<?xml version="1.0" encoding="UTF-8"?>\n'
               '<urlset xmlns="http://www.sitemaps.org/schemas/'
@@ -172,7 +173,7 @@ def sitemap_coverage(spark: SparkSession, sf_dir: str, *,
   is tiny.  The frontier side adds no other shuffle.
   """
   u = (urls if urls is not None
-       else url_curation(spark, sf_dir)
+       else url_curation(documents(spark, sf_dir))
        .select('doc_id', 'norm_url', 'domain'))
   sm = synth_sitemaps(spark)
   pub = sm.select('domain').withColumn('has_sitemap', F.lit(1))

@@ -9,7 +9,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from blueprint_oss_spark.ops.common import (
     bind_once, presented, py_words, spread_small_scan, word_ngrams, words,
@@ -19,10 +19,6 @@ STOPWORDS_EN = ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it', 'for',
                 'on', 'with', 'as', 'at', 'by')
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-  return spark.read.parquet(f'{sf_dir}/documents.parquet')
-
-
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space
 # symbol — the GPT-2-style coarse split whose count tracks subword token
 # counts far better than whitespace words.  The pattern is valid (and
@@ -30,12 +26,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def doc_token_stats(docs: DataFrame) -> DataFrame:
   """Token counts per document (exact ints): whitespace words plus a
   BPE-ish regex token count (letter/digit/symbol runs)."""
-  d = _docs(spark, sf_dir)
   toks = words('text')
-  return (d.select(
+  return (docs.select(
       'doc_id',
       F.size(toks).alias('n_tokens'),
       F.size(F.array_distinct(toks)).alias('n_uniq_tokens'),
@@ -45,11 +40,10 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       .orderBy('doc_id'))
 
 
-def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+def doc_quality(docs: DataFrame) -> DataFrame:
   """Quality-scoring signals: char-class counts + stopword hits (ints)."""
-  d = _docs(spark, sf_dir)
   stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
-  return (d.select(
+  return (docs.select(
       'doc_id',
       F.length('text').alias('n_chars'),
       F.length(F.regexp_replace('text', '[^a-zA-Z]', ''))
@@ -62,25 +56,23 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
       .orderBy('doc_id'))
 
 
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
   """Exact dedup via content hash: keeper id + duplicate count per
   distinct text (hash-groupBy — the map-side-combinable exact-dedup
   baseline)."""
-  d = _docs(spark, sf_dir)
-  return (d
+  return (docs
           .groupBy(F.md5(F.col('text')).alias('content_hash'))
           .agg(F.min('doc_id').alias('keeper_doc_id'),
                F.count(F.lit(1)).alias('n_copies'))
           .orderBy('content_hash'))
 
 
-def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+def doc_fingerprints(docs: DataFrame) -> DataFrame:
   """Deterministic document fingerprints: md5 of full text, md5 of the
   first 8 tokens (prefix blocking), and a polynomial ROLLING hash
   (Rabin–Karp base-31 over character codes, mod 2^31-1) — the
   incremental-update fingerprint family; computed fold-style JVM-side,
   byte-identically recomputable in DuckDB."""
-  d = _docs(spark, sf_dir)
   toks = words('text')
   # acc·31 + code stays < 2^36 before each mod, so int64 never overflows
   rolling = F.aggregate(
@@ -88,7 +80,7 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
       F.lit(0).cast('long'),
       lambda acc, ch: F.pmod(acc * 31 + F.ascii(ch),
                              F.lit(2147483647).cast('long')))
-  return (d.select(
+  return (docs.select(
       'doc_id',
       F.md5('text').alias('fp_full'),
       F.md5(F.concat_ws(' ', F.slice(toks, 1, 8))).alias('fp_prefix8'),
@@ -96,11 +88,10 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
       .orderBy('doc_id'))
 
 
-def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lang_id_heuristic(docs: DataFrame) -> DataFrame:
   """N-gram-free language-ID heuristic over the synthetic corpus:
   stopword-list hit rates per candidate language; returns the argmax list
   hits (ints, deterministic)."""
-  d = _docs(spark, sf_dir)
   toks = words('text')
   lists = {
       'en': STOPWORDS_EN,
@@ -114,7 +105,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks, lambda x: F.array_contains(arr, x))).alias(f'hits_{lang}')
 
   cols = [hits_col(lang, ws) for lang, ws in lists.items()]
-  return d.select('doc_id', 'lang', *cols).orderBy('doc_id')
+  return docs.select('doc_id', 'lang', *cols).orderBy('doc_id')
 
 
 #: Pinned language order + per-language word pools for the trained
@@ -134,9 +125,7 @@ LANGID_POOLS = {
 }
 
 
-def lang_id_trained(spark: SparkSession, sf_dir: str, *,
-                    eval_mod: int = 5,
-                    docs: DataFrame = None) -> DataFrame:
+def lang_id_trained(docs: DataFrame, *, eval_mod: int = 5) -> DataFrame:
   """TRAINED language identification — the char-n-gram classifier
   CCNet (Wenzek et al. 2020) runs (fastText langid) before its LM
   quality buckets, completing the CCNet chain next to
@@ -173,9 +162,7 @@ def lang_id_trained(spark: SparkSession, sf_dir: str, *,
   relation, the IVF/PQ codebook precedent); scoring broadcast-joins
   the model and re-aggregates per doc.  Two substantive shuffles,
   zero Python."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id')
-  d = spread_small_scan(d)
+  d = spread_small_scan(docs.select('doc_id'))
   tlang = F.element_at(
       F.array(*[F.lit(l) for l in LANGID_LANGS]),
       (F.col('doc_id') % len(LANGID_LANGS)).cast('int') + 1)
@@ -217,7 +204,7 @@ def lang_id_trained(spark: SparkSession, sf_dir: str, *,
   totals = {lang: sum(r[f'c_{lang}'] for r in model_rows)
             for lang in LANGID_LANGS}
   v_grams = len(model_rows)
-  cnt = spark.createDataFrame(
+  cnt = docs.sparkSession.createDataFrame(
       [tuple([r['g']] + [r[f'c_{lang}'] for lang in LANGID_LANGS])
        for r in model_rows] or [tuple([None] * 5)],
       'g string, ' + ', '.join(f'c_{lang} long'
@@ -348,10 +335,9 @@ def _minhash_features(d: DataFrame) -> DataFrame:
                     for s in range(1, _MINHASH_HASHES + 1)]))
 
 
-def minhash_shingles(spark: SparkSession, sf_dir: str, *,
+def minhash_shingles(docs: DataFrame, *,
                      max_bucket_size: int = 0,
-                     sort: bool = True,
-                     docs: DataFrame = None) -> DataFrame:
+                     sort: bool = True) -> DataFrame:
   """MinHash + LSH banding near-dup candidates, entirely with built-ins:
   word 3-gram shingles → xxhash64 per permutation (hash-xor trick) →
   band signature (4 bands of 4 of the 16 permutations) → group by
@@ -370,13 +356,8 @@ def minhash_shingles(spark: SparkSession, sf_dir: str, *,
   near-identical by construction, so the right production follow-up
   is routing those ids to exact dedup, which is O(k) not O(k²)).
   The default (0) disables the cap, keeping the operator exact —
-  which is what the sf0.01/sf0.1 oracles verify.
-
-  `docs` overrides the table read (same seam as ngram_jaccard_pairs):
-  composed callers pass their pre-filtered frame so candidate pairs
-  are found among exactly the rows in play."""
-  d = (docs if docs is not None
-       else _docs(spark, sf_dir)).select('doc_id', 'text')
+  which is what the sf0.01/sf0.1 oracles verify."""
+  d = docs.select('doc_id', 'text')
   # A small corpus arrives as one parquet split, which would starve the
   # map side; spread it across cores first.  Metadata-only guard (no
   # DataFrame→RDD conversion — .rdd would force a full plan-to-RDD
@@ -422,9 +403,8 @@ def minhash_shingles(spark: SparkSession, sf_dir: str, *,
                    'doc_a', 'doc_b', sort=sort)
 
 
-def minhash_calibration(spark: SparkSession, sf_dir: str, *,
-                        max_bucket_size: int = 0,
-                        docs: DataFrame = None) -> DataFrame:
+def minhash_calibration(docs: DataFrame, *,
+                        max_bucket_size: int = 0) -> DataFrame:
   """MinHash estimator calibration — the report production dedup teams
   run to pick (n_hashes, bands, rows): for every candidate pair of
   minhash_shingles' default LSH, the ESTIMATED Jaccard evidence
@@ -443,16 +423,13 @@ def minhash_calibration(spark: SparkSession, sf_dir: str, *,
   (_minhash_features), and exact Jaccard is computed ONLY on
   candidates — never all-pairs (the all-pairs version is the test
   oracle, where it belongs)."""
-  d = (docs if docs is not None
-       else _docs(spark, sf_dir)).select('doc_id', 'text')
-  d = spread_small_scan(d)
+  d = spread_small_scan(docs.select('doc_id', 'text'))
   seeds = list(range(1, _MINHASH_HASHES + 1))
   feats = (_minhash_features(d)
            .select('doc_id',
                    F.array_distinct('sh').alias('shset'),
                    F.array(*[f'm{s}' for s in seeds]).alias('sig')))
-  p = minhash_shingles(spark, sf_dir, max_bucket_size=max_bucket_size,
-                       docs=docs)
+  p = minhash_shingles(docs, max_bucket_size=max_bucket_size)
   fa = feats.select(F.col('doc_id').alias('doc_a'),
                     F.col('shset').alias('sa'), F.col('sig').alias('ga'))
   fb = feats.select(F.col('doc_id').alias('doc_b'),
@@ -500,8 +477,7 @@ def quality_keep_expr(text_col, *, toks=None):
   return ok.cast('int')
 
 
-def quality_filter(spark: SparkSession, sf_dir: str, *,
-                   docs: DataFrame = None) -> DataFrame:
+def quality_filter(docs: DataFrame) -> DataFrame:
   """Gopher-style document quality filter: per-doc boolean verdicts for
   the standard pretraining heuristics (token-count bounds, mean word
   length bounds, ≥1 stopword hit, ≥50 % alphabetic chars) plus the
@@ -514,9 +490,8 @@ def quality_filter(spark: SparkSession, sf_dir: str, *,
   the filter column pattern composes with `.where(keep)` upstream of
   every expensive operator, which is the point — at 100 TB, quality
   filtering is the first pass that pays for itself."""
-  d = docs if docs is not None else _docs(spark, sf_dir)
   toks = words('text')
-  d = d.select(
+  d = docs.select(
       'doc_id',
       F.size(toks).alias('n'),
       F.aggregate(toks, F.lit(0),
@@ -544,9 +519,8 @@ def quality_filter(spark: SparkSession, sf_dir: str, *,
       .orderBy('doc_id'))
 
 
-def dedup_groups(spark: SparkSession, sf_dir: str, *,
+def dedup_groups(docs: DataFrame, *,
                  edge_source: str = 'jaccard',
-                 docs: DataFrame = None,
                  edges: DataFrame = None,
                  max_bucket_size: int = 0,
                  sort: bool = True) -> DataFrame:
@@ -565,7 +539,6 @@ def dedup_groups(spark: SparkSession, sf_dir: str, *,
   minhash/LSH candidate pairs (swap the edge source), which is the
   scale path — exact pair-finding is the oracle-friendly small-SF twin.
   """
-  base = docs if docs is not None else _docs(spark, sf_dir)
   if edges is not None:
     # precomputed candidate pairs (doc_a, doc_b) — a production run
     # computes the edge set once and feeds both pair reporting and
@@ -576,15 +549,13 @@ def dedup_groups(spark: SparkSession, sf_dir: str, *,
     # inverted-index join (candidates are a probabilistic superset of
     # real near-dups within a band's collision rate — verify within
     # groups downstream if precision matters)
-    pairs = minhash_shingles(spark, sf_dir, docs=docs,
-                             max_bucket_size=max_bucket_size) \
+    pairs = minhash_shingles(docs, max_bucket_size=max_bucket_size) \
         .select('doc_a', 'doc_b')
   else:
-    pairs = ngram_jaccard_pairs(spark, sf_dir, docs=docs) \
-        .select('doc_a', 'doc_b')
+    pairs = ngram_jaccard_pairs(docs).select('doc_a', 'doc_b')
   from blueprint_oss_spark.ops.graph import connected_components
   comp = connected_components(pairs, 'doc_a', 'doc_b')
-  d = base.select('doc_id')
+  d = docs.select('doc_id')
   labeled = (d.join(comp, d.doc_id == comp.node, 'left')
              .select('doc_id',
                      F.coalesce('component', 'doc_id').alias('group_id')))
@@ -598,7 +569,7 @@ def dedup_groups(spark: SparkSession, sf_dir: str, *,
       'doc_id', sort=sort)
 
 
-def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
+def dedup_decision_report(docs: DataFrame, semantic: DataFrame, *,
                           sort: bool = True) -> DataFrame:
   """Multi-signal dedup DECISION table — the Dolma-style composition
   (Soldaini et al. 2024: per-doc attribute files composed into one
@@ -616,13 +587,15 @@ def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
                   (dedup_groups), group rides as jac_group;
     sim_keep    — SimHash Manku-banded pairs at <= 3 differing bits
                   -> connected components, keeper = min;
-    sem_keep    — SemDeDup spherical-k-means in-cell cosine >= 0.9
-                  components (ops/vectors.semantic_dedup), joined on
+    sem_keep    — `semantic`: the (vec_id, keep) verdicts of
+                  ops/vectors.semantic_dedup (SemDeDup spherical-k-means
+                  in-cell cosine >= 0.9 components), joined on
                   vec_id == doc_id (the synthetic embeddings table is
                   the documents' embedding column).
 
-  Universe: documents ∪ the semantic operator's planted verification
-  vectors (vec_id >= 10^6, the _semantic_dedup_select gate precedent)
+  Universe: documents ∪ the vec_ids of `semantic` — the gate passes
+  semantic_dedup's run with planted verification vectors (vec_id >=
+  10^6, the _semantic_dedup_select gate precedent)
   — at gate scale no ORIGINAL doc is a semantic near-dup, so the
   planted rows are what keeps the semantic drop branch value-checked;
   they carry `planted` = 1 and default-keep for the text signals
@@ -634,8 +607,7 @@ def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
   verdict frames; no new quadratic or hub anywhere), one final
   map-side CASE for the decision columns."""
   from blueprint_oss_spark.ops.graph import connected_components
-  from blueprint_oss_spark.ops.vectors import semantic_dedup
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
 
   h = d.select('doc_id', F.md5('text').alias('h'))
   exk = h.groupBy('h').agg(F.min('doc_id').alias('k'))
@@ -645,20 +617,17 @@ def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
 
   # component operators feed joins — their own presentation sorts
   # would be dead range exchanges here, so they run unsorted
-  jac = (dedup_groups(spark, sf_dir, sort=False)
+  jac = (dedup_groups(docs, sort=False)
          .select('doc_id', F.col('group_id').alias('jac_group'),
                  F.col('is_keeper').cast('int').alias('jac_keep')))
 
-  sp = simhash_near_dup_pairs(spark, sf_dir, sort=False) \
-      .select('doc_a', 'doc_b')
+  sp = simhash_near_dup_pairs(docs, sort=False).select('doc_a', 'doc_b')
   scomp = connected_components(sp, 'doc_a', 'doc_b') \
       .select(F.col('node').alias('doc_id'),
               F.col('component').alias('sim_group'))
 
-  sem = (semantic_dedup(spark, sf_dir, plant_for_verification=True,
-                        sort=False)
-         .select(F.col('vec_id').alias('doc_id'),
-                 F.col('keep').cast('int').alias('sem_keep')))
+  sem = semantic.select(F.col('vec_id').alias('doc_id'),
+                        F.col('keep').cast('int').alias('sem_keep'))
 
   base = sem.select('doc_id').unionByName(d.select('doc_id')) \
       .distinct()
@@ -693,20 +662,20 @@ def dedup_decision_report(spark: SparkSession, sf_dir: str, *,
       'doc_id', sort=sort)
 
 
-def simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
+def simhash64(docs: DataFrame) -> DataFrame:
   """64-bit SimHash per document (presentation-sorted for the gate);
   see _simhash_sig for the computation."""
-  return _simhash_sig(spark, sf_dir).orderBy('doc_id')
+  return _simhash_sig(docs).orderBy('doc_id')
 
 
-def _simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _simhash_sig(docs: DataFrame) -> DataFrame:
   """64-bit SimHash per document, fully Catalyst-side: per-token
   xxhash64 → per-bit ±1 votes aggregated over tokens → packed sign
   bits.  Near-dups differ in few bits (hamming-ball blocking joins on
   bit-band prefixes, same shape as minhash banding).  Unsorted — the
   map-side signature pass feeds simhash_near_dup_pairs without a
   rangepartitioning exchange."""
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   votes = F.aggregate(
       words('text'),
       F.expr('array_repeat(0L, 64)'),
@@ -769,7 +738,7 @@ def _simhash_block_keys(bands: int, key_blocks: int, max_hamming: int):
 _SIMHASH_MAX_HAMMING = 3
 
 
-def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
+def simhash_near_dup_pairs(docs: DataFrame, *,
                            bands: int = 4,
                            key_blocks: int = 1,
                            sort: bool = True) -> DataFrame:
@@ -797,7 +766,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
   pass either way.  More tables cost shuffle volume (rows × C(bands,
   key_blocks)), which is the explicit price of the recall guarantee at
   scale."""
-  sig = _simhash_sig(spark, sf_dir)  # (doc_id, simhash), map-side
+  sig = _simhash_sig(docs)  # (doc_id, simhash), map-side
   banded = sig.select(
       'doc_id', 'simhash',
       F.explode(F.array(
@@ -818,7 +787,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str, *,
       'doc_a', 'doc_b', sort=sort)
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
   """Top-3 characteristic terms per document by TF·IDF.
 
   The idf factor is the log-free BM25 idf ratio (N − df + 0.5)/(df + 0.5)
@@ -833,7 +802,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
   smaller than the corpus, so AQE broadcasts it back), one window over
   doc_id for the top-k.  No Python anywhere.
   """
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   n_docs = d.count()
   terms = d.select('doc_id', F.explode(words('text')).alias('term'))
   tf = terms.groupBy('doc_id', 'term').agg(
@@ -854,11 +823,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
           .orderBy('doc_id', 'rnk'))
 
 
-def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, *,
+def ngram_jaccard_pairs(docs: DataFrame, *,
                         shingle: int = 3,
                         max_shingle_df: int = 0,
-                        sort: bool = True,
-                        docs: DataFrame = None) -> DataFrame:
+                        sort: bool = True) -> DataFrame:
   """Exact n-gram Jaccard near-dup pairs at Jaccard >= 0.8, via a
   shingle-inverted-index join (prefix-blocked to avoid the full cross
   product; exact because identical-text pairs share all shingles).
@@ -875,13 +843,11 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, *,
   this function builds.  The default (0) disables the cap, keeping the
   operator exact — which is what the sf0.01/sf0.1 oracles verify.
 
-  `docs` overrides the table read: callers composing this into a larger
-  plan (curation_pipeline's pairs-among-quality-survivors stage) pass
-  the pre-filtered frame so edges are computed over exactly the rows
-  the composition's semantics require — a filtered-out doc must not
-  bridge two dedup groups."""
-  d = (docs if docs is not None
-       else _docs(spark, sf_dir)).select('doc_id', 'text')
+  Composed callers (curation_pipeline's pairs-among-quality-survivors
+  stage) pass the pre-filtered frame, so edges are computed over
+  exactly the rows the composition's semantics require — a
+  filtered-out doc must not bridge two dedup groups."""
+  d = docs.select('doc_id', 'text')
   sh = d.select(
       'doc_id',
       F.explode(F.array_distinct(
@@ -917,7 +883,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, *,
       'doc_a', 'doc_b', sort=sort)
 
 
-def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def curation_pipeline(docs: DataFrame) -> DataFrame:
   """The end-to-end curation pass a training-data run actually executes,
   as ONE declarative plan: Gopher-style quality filter → exact-Jaccard
   dedup GROUPS computed among the survivors (sequential semantics: a
@@ -925,7 +891,8 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
   deterministic md5-threshold stratified sample of the keepers.
 
   Each stage reuses the already-oracled operator (quality_filter,
-  ngram_jaccard_pairs/connected_components via dedup_groups' docs seam,
+  ngram_jaccard_pairs/connected_components via dedup_groups over the
+  survivors,
   profiling's threshold table), and the DuckDB oracle recomputes the
   WHOLE chain from scratch — quality CTE feeding the shingle CTE
   feeding the recursive-reachability CTE feeding the sample filter —
@@ -940,11 +907,9 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
   from blueprint_oss_spark.ops.profiling import (
       DEFAULT_THRESHOLD, STRATA_THRESHOLDS,
   )
-  d = _docs(spark, sf_dir)
-  q = quality_filter(spark, sf_dir).where(F.col('keep') == 1) \
-      .select('doc_id')
-  kept = d.join(q, 'doc_id')
-  groups = dedup_groups(spark, sf_dir, docs=kept)
+  q = quality_filter(docs).where(F.col('keep') == 1).select('doc_id')
+  kept = docs.join(q, 'doc_id')
+  groups = dedup_groups(kept)
   keepers = groups.where(F.col('doc_id') == F.col('group_id'))
 
   toks = words('text')
@@ -974,8 +939,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_TOKENS = 256
 
 
-def pack_sequences(spark: SparkSession, sf_dir: str, *,
-                   sort: bool = True) -> DataFrame:
+def pack_sequences(docs: DataFrame, *, sort: bool = True) -> DataFrame:
   """GPT-style sequence packing (concat-and-chunk): documents are
   concatenated in deterministic order and chunked into fixed
   _PACK_TOKENS-token training sequences, ignoring doc boundaries — the
@@ -995,8 +959,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
   is needed — swap the expression, the window shape is unchanged)."""
   from pyspark.sql import Window
 
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
-  sized = d.select(
+  sized = docs.select(
       'doc_id',
       F.size(words('text')).alias('n_tokens'),
       F.pmod(F.col('doc_id'), F.lit(8)).alias('shard'))
@@ -1022,9 +985,9 @@ def pack_sequences(spark: SparkSession, sf_dir: str, *,
       'doc_id', sort=sort)
 
 
-def sequence_segments(spark: SparkSession, sf_dir: str, *,
-                      packed: DataFrame = None) -> DataFrame:
-  """The dataloader-side INVERSION of `pack_sequences`: one row per
+def sequence_segments(packed: DataFrame) -> DataFrame:
+  """The dataloader-side INVERSION of `pack_sequences` (`packed` is its
+  output): one row per
   (shard, chunk) training sequence, carrying the ordered segment map a
   packed-pretraining loader needs to build attention masks and
   position ids at document boundaries — for each segment its doc_id,
@@ -1050,10 +1013,8 @@ def sequence_segments(spark: SparkSession, sf_dir: str, *,
   the collect_list row is ≤ _PACK_TOKENS structs regardless of corpus
   size — no skew exposure.  All JVM built-ins; DuckDB recomputes the
   same arithmetic from the window sum."""
-  p = (packed if packed is not None
-       else pack_sequences(spark, sf_dir))
   mt = F.lit(_PACK_TOKENS).cast('long')
-  e = (p.where(F.col('n_tokens') > 0)
+  e = (packed.where(F.col('n_tokens') > 0)
        .select('doc_id', 'shard', 'n_tokens', 'tokens_before',
                F.explode(F.sequence('chunk_first', 'chunk_last'))
                .alias('chunk')))
@@ -1083,12 +1044,11 @@ def sequence_segments(spark: SparkSession, sf_dir: str, *,
           .orderBy('shard', 'chunk'))
 
 
-def pack_interleaved_sequences(spark: SparkSession, sf_dir: str, *,
+def pack_interleaved_sequences(spans: DataFrame, *,
                                max_tokens: int = 256,
                                media_token_cost: int = 64,
                                shards: int = 8,
-                               sort: bool = True,
-                               spans: DataFrame = None) -> DataFrame:
+                               sort: bool = True) -> DataFrame:
   """Multimodal sequence packing over the north-rule pipeline's
   interleaved output — pack_sequences' concat-and-chunk contract
   extended to SPAN granularity with heterogeneous costs, the packing
@@ -1115,17 +1075,12 @@ def pack_interleaved_sequences(spark: SparkSession, sf_dir: str, *,
   DuckDB for the ASCII ids both engines see.
 
   Returns (doc_id, order, kind, media_ref, n_tokens, shard,
-  tokens_before, chunk_first, chunk_last, n_chunks).  `spans=`
-  accepts any (doc_id, out_spans) frame with the OUT_SPAN_STRUCT
-  element type (e.g. a checkpointed main_content_from_spans result).
+  tokens_before, chunk_first, chunk_last, n_chunks).  `spans` is any
+  (doc_id, out_spans) frame with the OUT_SPAN_STRUCT element type: a
+  main_content_from_spans result, checkpointed or not.
   """
   from pyspark.sql import Window
 
-  if spans is None:
-    from blueprint_oss_spark.ops.html_extract import (
-        interleaved_html_table, main_content_from_spans)
-    spans = main_content_from_spans(
-        interleaved_html_table(spark, sf_dir))
   cost = (F.when(F.col('s.kind') == 'media',
                  F.lit(int(media_token_cost)))
           .otherwise(F.size(words('s.text')))).cast('long')
@@ -1164,7 +1119,7 @@ def pack_interleaved_sequences(spark: SparkSession, sf_dir: str, *,
       'doc_id', 'order', sort=sort)
 
 
-def count_min_terms(spark: SparkSession, sf_dir: str, *,
+def count_min_terms(docs: DataFrame, *,
                     width: int = 256, depth: int = 4,
                     terms: DataFrame = None) -> DataFrame:
   """Count-Min Sketch term frequencies (Cormode & Muthukrishnan 2005):
@@ -1189,7 +1144,7 @@ def count_min_terms(spark: SparkSession, sf_dir: str, *,
   Output: (term, true_count, cms_est, overcount), term-sorted.  All
   hashing is md5 (cross-engine exact) and all counts integers, so a
   from-scratch DuckDB oracle reproduces every cell and estimate."""
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
 
   def h(j: int, c):
     return F.pmod(
@@ -1228,9 +1183,8 @@ def count_min_terms(spark: SparkSession, sf_dir: str, *,
           .orderBy('term'))
 
 
-def heavy_hitters(spark: SparkSession, sf_dir: str, *,
-                  phi_num: int = 1, phi_den: int = 29,
-                  docs: DataFrame = None) -> DataFrame:
+def heavy_hitters(docs: DataFrame, *,
+                  phi_num: int = 1, phi_den: int = 29) -> DataFrame:
   """EXACT φ-frequent terms (count ≥ φ·N) in two bounded-memory
   passes — the candidates-then-verify pattern the streaming literature
   settles on for exact results (Cormode & Hadjieleftheriou 2008,
@@ -1262,8 +1216,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str, *,
 
   Returns (term, count, n_total), term-sorted, heavy terms only.
   """
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('text')
+  d = docs.select('text')
   toks = words('text')
 
   def local_cands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1290,14 +1243,8 @@ def heavy_hitters(spark: SparkSession, sf_dir: str, *,
           .orderBy('term'))
 
 
-#: bm25_topk's default query count and depth, which bm25_from_postings
-#: serves from the index (their outputs are asserted bit-equal).
-_BM25_QUERIES, _BM25_K = 8, 5
-
-
-def bm25_topk(spark: SparkSession, sf_dir: str, *,
-              n_queries: int = _BM25_QUERIES, k: int = _BM25_K,
-              docs: DataFrame = None) -> DataFrame:
+def bm25_topk(docs: DataFrame, *,
+              n_queries: int = 8, k: int = 5) -> DataFrame:
   """BM25 ranked retrieval (Robertson & Walker 1994, the Okapi
   formula): top-k documents per query by the classic saturating-tf
   scorer — the retrieval complement of `tfidf_top_terms`' per-doc
@@ -1345,8 +1292,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *,
   """
   from pyspark.sql import Window
 
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  spark = docs.sparkSession
+  d = docs.select('doc_id', 'text')
   toks = words('text')
 
   # corpus constants from ONE exact-integer aggregate (bounded collect)
@@ -1410,81 +1357,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str, *,
           .orderBy('query_id', 'rnk'))
 
 
-def bm25_from_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-  """BM25 served FROM the materialized postings index — the
-  query-time path build_postings exists for, proving the index
-  actually serves what the scan-based scorer computes: identical
-  arithmetic (same staged expressions, same parenthesization, same
-  single commutative addition per 2-term query), so the output is
-  asserted BIT-EQUAL to bm25_topk by test — the cross-operator
-  equality is this operator's oracle.
-
-  What changes vs bm25_topk is WHERE each quantity comes from:
-    * query synthesis reads per-term cf from the INDEX (term-level
-      rollup over bucket rows — no corpus scan, no vocabulary-shaped
-      shuffle at query time);
-    * candidate (doc_id, tf) pairs come from posexploding only the
-      query terms' posting buckets (broadcast the ≤2Q-term query
-      dimension into the index scan — term pushdown);
-    * df comes from the index rollup, not a window;
-    * only document lengths still read the corpus (ONE scan — the
-      dl table a production deployment stores next to the index,
-      bucketed-store co-locatable), pinned as the plan's single
-      FileScan when the index is materialized."""
-  from pyspark.sql import Window
-
-  idx = build_postings(spark, sf_dir)
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
-  dls = d.select('doc_id', F.size(words('text')).cast('bigint').alias('dl'))
-  tot = dls.agg(F.count(F.lit(1)).alias('n'),
-                F.sum('dl').alias('sum_dl')).collect()[0]
-  n_docs, sum_dl = int(tot['n']), int(tot['sum_dl'] or 0)
-  empty_schema = ('query_id int, query string, doc_id bigint, '
-                  'dl bigint, score_r double, rnk int')
-  if n_docs == 0:
-    return spark.createDataFrame([], empty_schema)
-  avgdl = sum_dl / n_docs
-
-  term_stats = (idx.groupBy('term')
-                .agg(F.first('df').alias('df'), F.first('cf').alias('cf')))
-  top_terms = (term_stats.orderBy(F.col('cf').desc(), 'term')
-               .limit(2 * _BM25_QUERIES).collect())
-  qrows = [(i // 2, str(r['term'])) for i, r in enumerate(top_terms)]
-  if not qrows:
-    return spark.createDataFrame([], empty_schema)
-  qterms = spark.createDataFrame(qrows, 'query_id int, term string')
-  qnames = (qterms.groupBy('query_id')
-            .agg(F.concat_ws(' ', F.array_sort(F.collect_list('term')))
-                 .alias('query')))
-
-  cand = (idx.join(F.broadcast(qterms), 'term')
-          .select('query_id', 'term', 'df',
-                  F.explode('postings').alias('p'))
-          .select('query_id', 'term', 'df',
-                  F.col('p.doc_id').alias('doc_id'),
-                  F.col('p.tf').alias('tf'))
-          .join(dls, 'doc_id'))
-  idf = ((F.lit(float(n_docs)) - F.col('df') + F.lit(0.5))
-         / (F.col('df') + F.lit(0.5)))
-  tf_d = F.col('tf').cast('double')
-  norm = F.lit(1.2) * (F.lit(0.25)
-                       + F.lit(0.75) * (F.col('dl').cast('double')
-                                        / F.lit(avgdl)))
-  contrib = idf * ((tf_d * F.lit(2.2)) / (tf_d + norm))
-  scored = (cand.groupBy('query_id', 'doc_id')
-            .agg(F.sum(contrib).alias('score'),
-                 F.first('dl').alias('dl')))
-  w = Window.partitionBy('query_id').orderBy(
-      F.col('score').desc(), 'doc_id')
-  return (scored.withColumn('rnk', F.row_number().over(w))
-          .where(F.col('rnk') <= _BM25_K)
-          .join(F.broadcast(qnames), 'query_id')
-          .select('query_id', 'query', 'doc_id', 'dl',
-                  F.round('score', 6).alias('score_r'), 'rnk')
-          .orderBy('query_id', 'rnk'))
-
-
-def chunk_documents(spark: SparkSession, sf_dir: str, *,
+def chunk_documents(docs: DataFrame, *,
                     chunk_tokens: int = 64, overlap: int = 16) -> DataFrame:
   """Overlapping fixed-size token windows per document — the
   RAG-indexing / eval-windowing twin of pack_sequences (which crosses
@@ -1503,7 +1376,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str, *,
     raise ValueError(f'need 0 <= overlap < chunk_tokens, got '
                      f'{overlap} / {chunk_tokens}')
   step = chunk_tokens - overlap
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   toks = words('text')
 
   def chunks(t):
@@ -1529,8 +1402,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id', 'chunk_no'))
 
 
-def repetition_stats(spark: SparkSession, sf_dir: str, *,
-                     docs: DataFrame = None) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
   """Gopher-style repetition filters (Rae et al. 2021, arXiv:2112.11446
   table A1): per-document top-2-gram character fraction and
   duplicate-5-gram character fraction, as EXACT integer stats plus
@@ -1554,11 +1426,10 @@ def repetition_stats(spark: SparkSession, sf_dir: str, *,
   key on (doc_id, gram), whose cardinality dominates any single key —
   the classic word-count shape with map-side partial aggregation.  The
   per-doc top-1 runs a window over doc_id (same key, second shuffle
-  reuses the first's partitioning).  Composes with quality_filter via
-  the docs= seam."""
+  reuses the first's partitioning).  Composes with quality_filter
+  over the same frame."""
   from pyspark.sql import Window
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   # same metadata-only small-scan spread as minhash_shingles: the
   # n-gram construction is the map-heavy stage and a one-split corpus
   # would run it on one core
@@ -1610,7 +1481,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str, *,
       .orderBy('doc_id'))
 
 
-def remove_duplicated_spans(spark: SparkSession, sf_dir: str, *,
+def remove_duplicated_spans(docs: DataFrame, *,
                             n: int = 10,
                             min_run_tokens: int = None,
                             sort: bool = True) -> DataFrame:
@@ -1654,7 +1525,7 @@ def remove_duplicated_spans(spark: SparkSession, sf_dir: str, *,
   doc_id — the covered frame is already (doc_id, pos)-shuffled, and
   run length is bounded by doc length, so the extra window adds one
   doc-keyed exchange over the (small) covered subset only."""
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   # spread a single-split scan before the map-heavy n-gram stage (same
   # metadata-only check as minhash_shingles)
   d = spread_small_scan(d)
@@ -1734,8 +1605,7 @@ def strip_covered_tokens(base: DataFrame, occ: DataFrame,
       'doc_id', sort=sort)
 
 
-def bpe_train(spark: SparkSession, sf_dir: str, *,
-              n_merges: int = 24, docs: DataFrame = None,
+def bpe_train(docs: DataFrame, *, n_merges: int = 24,
               special_tokens: tuple = ()) -> DataFrame:
   """Distributed BPE vocabulary training (Sennrich et al. 2016,
   arXiv:1508.07909): learn the top `n_merges` byte-pair merges from
@@ -1763,9 +1633,7 @@ def bpe_train(spark: SparkSession, sf_dir: str, *,
   fraction the bpe cluster-scaling model measured directly (same
   lesson, same fix as ops/graph.pagerank's lazy periodic
   checkpoints)."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('text')
-  word_rows = d.select(F.explode(words('text')).alias('word'))
+  word_rows = docs.select(F.explode(words('text')).alias('word'))
   if special_tokens:
     # special tokens (e.g. render_interleaved's media sentinel) are
     # atomic vocabulary entries: they never contribute pair counts,
@@ -1817,7 +1685,7 @@ def bpe_train(spark: SparkSession, sf_dir: str, *,
   finally:
     for f in live:
       f.unpersist()
-  return spark.createDataFrame(
+  return docs.sparkSession.createDataFrame(
       merges,
       'rank int, left string, right string, merged string, '
       'pair_count long')
@@ -1838,9 +1706,8 @@ def _bpe_fold(syms_col, left: str, right: str, merged: str):
       .otherwise(F.concat(acc, F.array(s))))
 
 
-def bpe_encode(spark: SparkSession, sf_dir: str, *,
+def bpe_encode(docs: DataFrame, *,
                n_merges: int = 24, merges: DataFrame = None,
-               docs: DataFrame = None,
                return_tokens: bool = False,
                special_tokens: tuple = ()) -> DataFrame:
   """Distributed BPE tokenization: apply a learned merge table (from
@@ -1871,10 +1738,9 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
   (doc_id, word) counts, whose shuffle carries every distinct
   doc x word pair across the wire for nothing when the vocabulary is
   broadcastable."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   if merges is None:
-    merges = bpe_train(spark, sf_dir, n_merges=n_merges, docs=docs,
+    merges = bpe_train(docs, n_merges=n_merges,
                        special_tokens=special_tokens)
   merge_list = [(r['left'], r['right'], r['merged'])
                 for r in merges.orderBy('rank').collect()]
@@ -1909,7 +1775,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str, *,
                F.sum('word_tokens').alias('n_tokens')))
 
 
-def build_postings(spark: SparkSession, sf_dir: str, *,
+def build_postings(docs: DataFrame, *,
                    doc_bucket: int = 1024,
                    terms: tuple = None,
                    materialize: bool = True) -> DataFrame:
@@ -1947,8 +1813,7 @@ def build_postings(spark: SparkSession, sf_dir: str, *,
   materialize=False to keep the plan fully lazy for composition."""
   if doc_bucket <= 0:
     raise ValueError('doc_bucket must be positive')
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
-  occ = d.select('doc_id', F.explode(words('text')).alias('term'))
+  occ = docs.select('doc_id', F.explode(words('text')).alias('term'))
   if terms is not None:
     occ = occ.where(F.col('term').isin(*terms))
   tf = (occ.groupBy('term', 'doc_id')
@@ -1972,9 +1837,8 @@ def build_postings(spark: SparkSession, sf_dir: str, *,
           .orderBy('term', 'bucket'))
 
 
-def tokenizer_fertility(spark: SparkSession, sf_dir: str, *,
-                        merges: DataFrame = None,
-                        docs: DataFrame = None) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame, *,
+                        merges: DataFrame = None) -> DataFrame:
   """Per-language tokenizer fertility audit — the multilingual
   tokenizer-quality table (XLM-R / BLOOM-style reports: tokens per
   word, chars and bytes per token, by language) that decides whether a
@@ -1991,11 +1855,8 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str, *,
   language dimension of the same table — co-located for free on the
   bucketed doc store (spark/storage.py), shuffled once otherwise —
   and a languages-sized groupBy that combines map-side."""
-  d = (docs if docs is not None
-       else spark.read.parquet(f'{sf_dir}/documents.parquet')) \
-      .select('doc_id', 'text', 'lang')
-  enc = bpe_encode(spark, sf_dir, merges=merges,
-                   docs=d.select('doc_id', 'text'))
+  d = docs.select('doc_id', 'text', 'lang')
+  enc = bpe_encode(d.select('doc_id', 'text'), merges=merges)
   dim = d.select('doc_id', 'lang',
                  F.length('text').cast('long').alias('chars'),
                  F.octet_length('text').cast('long').alias('bytes'))
@@ -2011,16 +1872,25 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str, *,
           .orderBy('lang'))
 
 
-def incremental_dedup(spark: SparkSession, sf_dir: str, *,
+def increment_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+  """(batch, corpus): the deterministic increment the gate's
+  incremental_dedup row runs on — batch = doc_id % 10 == 0, corpus =
+  the rest, both (doc_id, text)."""
+  d = docs.select('doc_id', 'text')
+  return (d.where(F.pmod('doc_id', F.lit(10)) == 0),
+          d.where(F.pmod('doc_id', F.lit(10)) != 0))
+
+
+def incremental_dedup(batch: DataFrame, corpus: DataFrame, *,
                       threshold: float = 0.5,
-                      max_shingle_df: int = 0,
-                      batch: DataFrame = None,
-                      corpus: DataFrame = None) -> DataFrame:
+                      max_shingle_df: int = 0) -> DataFrame:
   """Incremental (new-batch-vs-corpus) dedup: the daily-crawl shape.
 
   Production pipelines rarely re-dedup the whole corpus; they dedup
   each incoming increment AGAINST the already-curated store.  This
-  operator classifies every batch document as
+  operator classifies every `batch` document against `corpus` (both
+  (doc_id, text); `increment_split` cuts the gate's pair from one
+  documents table) as
 
     * ``exact`` — a corpus doc has byte-identical text (match_id =
       lowest such corpus doc_id),
@@ -2045,17 +1915,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str, *,
   cap are dropped from BOTH join sides while per-doc sizes keep full
   counts, so reported Jaccard only undercounts — the same
   precision-preserving approximation as ngram_jaccard_pairs.  Default
-  0 keeps the operator exact, which is what the oracle verifies.
-
-  ``batch``/``corpus`` override the default deterministic split of the
-  documents table (batch = doc_id % 10 == 0) — real callers
-  pass the new increment and the signature store."""
-  if (batch is None) != (corpus is None):
-    raise ValueError('pass both batch= and corpus=, or neither')
-  if batch is None:
-    d = _docs(spark, sf_dir).select('doc_id', 'text')
-    batch = d.where(F.pmod('doc_id', F.lit(10)) == 0)
-    corpus = d.where(F.pmod('doc_id', F.lit(10)) != 0)
+  0 keeps the operator exact, which is what the oracle verifies."""
   batch = batch.select('doc_id', 'text')
   corpus = corpus.select(F.col('doc_id').alias('cid'), 'text')
 
@@ -2119,8 +1979,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def lm_score(spark: SparkSession, sf_dir: str, *,
-             docs: DataFrame = None,
+def lm_score(docs: DataFrame, *,
              train_docs: DataFrame = None) -> DataFrame:
   """CCNet-style n-gram language-model quality scoring, distributed:
   train an add-one-smoothed bigram LM over a corpus (ONE word-count
@@ -2148,13 +2007,16 @@ def lm_score(spark: SparkSession, sf_dir: str, *,
   fans out.  The per-doc re-aggregation shuffles (doc_id, pos, p)
   once.  `train_docs` scores against a held-out clean corpus (the
   CCNet usage); default trains on the scored corpus itself."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   tr = d if train_docs is None else train_docs.select('text')
+  # a text has words iff it holds a non-space character.  A filter on
+  # size(t) — written, or inferred by Catalyst from explode(t) — is
+  # pushed below the projection by substitution and tokenizes every
+  # row again; explode_outer infers none, and t is never empty here
+  has_words = F.col('text').rlike('[^ ]')
 
-  tr_base = tr.select(words('text').alias('t')) \
-      .where(F.size('t') > 0)
-  uni = (tr_base.select(F.explode('t').alias('w'))
+  tr_base = tr.where(has_words).select(words('text').alias('t'))
+  uni = (tr_base.select(F.explode_outer('t').alias('w'))
          .groupBy('w').agg(F.count(F.lit(1)).alias('c1')))
   bi_grams = word_ngrams('t', 2)
   bi = (tr_base.select(F.explode(bi_grams).alias('g'))
@@ -2162,8 +2024,7 @@ def lm_score(spark: SparkSession, sf_dir: str, *,
   tv = uni.agg(F.count(F.lit(1)).alias('v_size'),
                F.sum('c1').alias('t_total'))
 
-  base = d.select('doc_id', words('text').alias('t')) \
-      .where(F.size('t') > 0)
+  base = d.where(has_words).select('doc_id', words('text').alias('t'))
   bg = base.select(
       'doc_id', F.posexplode(bi_grams).alias('pos', 'g'))
   bgp = (bg.join(bi, 'g', 'left')
@@ -2196,9 +2057,8 @@ def lm_score(spark: SparkSession, sf_dir: str, *,
                           / F.col('n_scored'), 6).alias('lm_score'))
           .orderBy('doc_id'))
 
-def lm_buckets(spark: SparkSession, sf_dir: str, *,
+def lm_buckets(docs: DataFrame, *,
                threshold: str = '8' + '0' * 31,
-               docs: DataFrame = None,
                scores: DataFrame = None) -> DataFrame:
   """CCNet head/middle/tail quality buckets (Wenzek et al. 2020 §4.3,
   "CCNet: Extracting High Quality Monolingual Datasets from Web Crawl
@@ -2227,10 +2087,8 @@ def lm_buckets(spark: SparkSession, sf_dir: str, *,
 
   Returns (doc_id, lang, lm_score, lm_t_lo, lm_t_hi, lm_bucket).
   """
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'lang')
-  sc = (scores if scores is not None
-        else lm_score(spark, sf_dir, docs=docs))
+  d = docs.select('doc_id', 'lang')
+  sc = scores if scores is not None else lm_score(docs)
   j = sc.select('doc_id', 'lm_score').join(d, 'doc_id')
   s = j.where(F.md5(F.col('doc_id').cast('string')) < F.lit(threshold))
   th = (s.groupBy('lang')
@@ -2264,8 +2122,7 @@ BOILERPLATE_PARAS = (
 )
 
 
-def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
-                     docs: DataFrame = None) -> DataFrame:
+def dedup_paragraphs(docs: DataFrame) -> DataFrame:
   """Paragraph-level exact deduplication (the Dolma / Gopher repeated-
   passage rule: Soldaini et al. 2024, "Dolma", arXiv:2402.00159 §2.3
   dedupes at paragraph granularity; Rae et al. 2021 Gopher A.1.1 drops
@@ -2300,12 +2157,11 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
   collect, no window over the whole corpus."""
   w = 10
   blist = ', '.join(f"'{b}'" for b in BOILERPLATE_PARAS)
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   # words (what the gate oracle's shared `t` CTE uses), staged as a
   # projected column so the per-paragraph transform tokenizes once —
   # raw split(text, ' ') would count '' tokens on irregular whitespace
-  # via the docs= seam and diverge from the oracle's paragraph texts
+  # and diverge from the oracle's paragraph texts
   paras_expr = F.expr(f"""
     transform(
       sequence(0, cast(ceil(size(w) / {w}.0) as int) - 1),
@@ -2346,9 +2202,8 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str, *,
           .orderBy('doc_id'))
 
 
-def dedup_doc_lines(spark: SparkSession, sf_dir: str, *,
-                    words_per_line: int = 6,
-                    docs: DataFrame = None) -> DataFrame:
+def dedup_doc_lines(docs: DataFrame, *,
+                    words_per_line: int = 6) -> DataFrame:
   """Within-document repeated-line removal — the IN-DOC granularity of
   the repeated-content family (Rae et al. 2021 Gopher A.1.1 computes
   its duplicate-line fraction per document; Dolma's dedupers run a
@@ -2381,8 +2236,7 @@ def dedup_doc_lines(spark: SparkSession, sf_dir: str, *,
     raise ValueError('words_per_line must be positive')
   w = words_per_line
   blist = ', '.join(f"'{b}'" for b in BOILERPLATE_PARAS)
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   # stage the words as a projected column: interpreted higher-order
   # functions get no common-subexpression elimination, so inlining
   # them inside the per-line transform would re-tokenize the document
@@ -2429,8 +2283,7 @@ TOPIC_LEXICONS = {
 }
 
 
-def topic_tagging(spark: SparkSession, sf_dir: str, *,
-                  docs: DataFrame = None) -> DataFrame:
+def topic_tagging(docs: DataFrame) -> DataFrame:
   """Lexicon-based topic/domain tagging — the cheap domain classifier
   data-mix pipelines run before allocating per-domain budgets (the
   keyword-lexicon stage of domain classification, e.g. the curated
@@ -2453,8 +2306,7 @@ def topic_tagging(spark: SparkSession, sf_dir: str, *,
   # higher-order lambdas get no common-subexpression elimination (the
   # _bloom_flat_positions lesson), so embedding split+filter into each
   # hit_count column re-tokenizes every row once per lexicon
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', words('text').alias('toks'))
+  d = docs.select('doc_id', words('text').alias('toks'))
 
   def hit_count(ws):
     # factory closure, NOT a `ws=ws` default arg: a default makes the
@@ -2497,7 +2349,7 @@ BOILERPLATE_SENTS = (
 )
 
 
-def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def c4_span_dedup(docs: DataFrame) -> DataFrame:
   """C4's exact deduplication unit (Raffel et al. 2020 §2.2: "we
   discarded all but one of any three-sentence span occurring more than
   once in the data set"): every occurrence of a duplicated
@@ -2523,7 +2375,7 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
   (doc_id, sentence pos) and the rebuild one per-doc aggregation.
   No Python, no windows over the corpus, no driver collect."""
   w = 8
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   triples = ', '.join(
       "array(%s)" % ', '.join(f"'{s}'" for s in t)
       for t in BOILERPLATE_SENTS)
@@ -2592,9 +2444,26 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
           .orderBy('doc_id'))
 
 
-def corpus_diff(spark: SparkSession, sf_dir: str, *,
-                old: DataFrame = None,
-                new: DataFrame = None) -> DataFrame:
+def corpus_next_version(old: DataFrame) -> DataFrame:
+  """The deterministic second corpus version the gate's corpus_diff
+  row compares `old` (doc_id, text) against — the planted-PII device,
+  pure doc_id arithmetic the DuckDB oracle replays: old minus every
+  doc_id % 13 == 0, with ' updated v2' appended to every surviving
+  doc_id % 11 == 0, plus re-entries of every doc_id % 17 == 0 as
+  doc_id + 10_000_000 with ' added' appended."""
+  did = F.col('doc_id')
+  survivors = (old.where(did % 13 != 0)
+               .select('doc_id',
+                       F.when(did % 11 == 0,
+                              F.concat('text', F.lit(' updated v2')))
+                       .otherwise(F.col('text')).alias('text')))
+  added = (old.where(did % 17 == 0)
+           .select((did + 10_000_000).alias('doc_id'),
+                   F.concat('text', F.lit(' added')).alias('text')))
+  return survivors.unionByName(added)
+
+
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
   """Snapshot diff between two corpus versions — the audit step of
   incremental operation (what changed between crawl N and crawl N+1
   before the store is overwritten; the complement of
@@ -2603,33 +2472,15 @@ def corpus_diff(spark: SparkSession, sf_dir: str, *,
     doc_id, verdict ('added' | 'removed' | 'changed' | 'unchanged'),
     old_hash / new_hash (md5 of each side's text, NULL when absent).
 
-  Default synthesis (the planted-PII device — pure doc_id arithmetic
-  the DuckDB oracle replays): old = the documents table; new = old
-  minus every doc_id % 13 == 0, with ' updated v2' appended
-  to every surviving doc_id % 11 == 0, plus re-entries of
-  every doc_id % 17 == 0 as doc_id + 10_000_000 with ' added'
-  appended.  A real deployment passes its two snapshot tables via
-  `old=` / `new=`.
+  A real deployment passes its two snapshot tables; the gate diffs the
+  documents table against `corpus_next_version` of it.
 
   Scale shape: two scans, map-side md5, ONE full-outer equi-join on
   doc_id — with both snapshots written through the bucketed doc store
   (spark/storage.py) the join is co-located and exchange-free; verdicts
   are a codegen CASE over the joined hashes.  No window, no Python,
   no skew surface (doc_id is unique per side)."""
-  base = (old if old is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
-  if new is None:
-    did = F.col('doc_id')
-    survivors = (base.where(did % 13 != 0)
-                 .select('doc_id',
-                         F.when(did % 11 == 0,
-                                F.concat('text', F.lit(' updated v2')))
-                         .otherwise(F.col('text')).alias('text')))
-    added = (base.where(did % 17 == 0)
-             .select((did + 10_000_000).alias('doc_id'),
-                     F.concat('text', F.lit(' added')).alias('text')))
-    new = survivors.unionByName(added)
-  o = base.select('doc_id', F.md5('text').alias('old_hash'))
+  o = old.select('doc_id', F.md5('text').alias('old_hash'))
   n = new.select('doc_id', F.md5('text').alias('new_hash'))
   j = o.join(n, 'doc_id', 'full_outer')
   return (j.select(
@@ -2642,9 +2493,9 @@ def corpus_diff(spark: SparkSession, sf_dir: str, *,
       .orderBy('doc_id'))
 
 
-def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
-                          batch_size: int = 8, n_shards: int = 8,
-                          docs: DataFrame = None) -> DataFrame:
+def length_bucket_batches(docs: DataFrame, *,
+                          batch_size: int = 8,
+                          n_shards: int = 8) -> DataFrame:
   """Sorted-by-length bucketed batching with padding-waste accounting
   — the varlen dataloader policy (bucket by length, batch within
   bucket, pad each batch to its own max) that Transformer training
@@ -2673,8 +2524,7 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
   Returns (doc_id, shard, n_tokens, bucket, batch_id, pos_in_batch,
   batch_docs, batch_max, pad_waste)."""
   from pyspark.sql import Window
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   n = F.size(words('text'))
   bin_edges = (32, 64, 128)
   bucket = F.lit(len(bin_edges))
@@ -2708,8 +2558,7 @@ def length_bucket_batches(spark: SparkSession, sf_dir: str, *,
       .orderBy('shard', 'bucket', 'batch_id', 'pos_in_batch'))
 
 
-def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
-                       docs: DataFrame = None) -> DataFrame:
+def t5_span_corruption(docs: DataFrame) -> DataFrame:
   """T5 span-corruption data prep (Raffel et al. 2020, §3.1.4 of
   "Exploring the Limits of Transfer Learning..."): mask a fraction of
   each document's tokens in multi-token spans, replace every masked
@@ -2738,8 +2587,7 @@ def t5_span_corruption(spark: SparkSession, sf_dir: str, *,
   Returns (doc_id, n_tokens, n_masked, n_runs, input_text,
   target_text)."""
   from pyspark.sql import Window
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   toks = words('text')
   tok_rows = d.select(
       'doc_id', F.size(toks).alias('n'),

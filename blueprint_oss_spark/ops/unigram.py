@@ -59,19 +59,15 @@ from __future__ import annotations
 from typing import Iterator, List, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from blueprint_oss_spark.ops.common import words
-from blueprint_oss_spark.ops.textops import _docs
 
 MICRO = 1_000_000
 
 
-def _word_counts(spark: SparkSession, sf_dir: str,
-                 docs: DataFrame,
-                 special_tokens: tuple = ()) -> DataFrame:
-  d = (docs if docs is not None else _docs(spark, sf_dir)).select('text')
-  word_rows = d.select(F.explode(words('text')).alias('word'))
+def _word_counts(docs: DataFrame, special_tokens: tuple) -> DataFrame:
+  word_rows = docs.select(F.explode(words('text')).alias('word'))
   if special_tokens:
     # reserved tokens (e.g. render_interleaved's media sentinel) are
     # atomic vocabulary entries: they never contribute substring or
@@ -148,10 +144,9 @@ def _expected_counts_word(word: str, probs: dict,
   return out
 
 
-def unigram_train(spark: SparkSession, sf_dir: str, *,
+def unigram_train(docs: DataFrame, *,
                   vocab_size: int = 48, seed_size: int = 96,
                   max_piece_len: int = 4, n_em: int = 3,
-                  docs: DataFrame = None,
                   special_tokens: tuple = ()) -> DataFrame:
   """Train a unigram-LM piece vocabulary (see module docstring).
 
@@ -162,8 +157,7 @@ def unigram_train(spark: SparkSession, sf_dir: str, *,
   predate EM rounds, i.e. when n_em=0), total_micro the sum over the
   retained vocabulary (so em_micro/total_micro is the piece
   probability the encoder uses)."""
-  words = _word_counts(spark, sf_dir, docs, special_tokens) \
-      .localCheckpoint(eager=True)
+  words = _word_counts(docs, special_tokens).localCheckpoint(eager=True)
   try:
     vocab = dict(_seed_vocab(words, seed_size, max_piece_len))
     # seed counts are plain corpus counts — scale to micro-units so
@@ -214,7 +208,7 @@ def unigram_train(spark: SparkSession, sf_dir: str, *,
   ranked = sorted(keep.items(), key=lambda kv: (-kv[1], kv[0]))
   rows = [(r, p, c, len(p) == 1, total_micro)
           for r, (p, c) in enumerate(ranked)]
-  return spark.createDataFrame(
+  return docs.sparkSession.createDataFrame(
       rows, 'rank int, piece string, em_micro long, is_char boolean, '
             'total_micro long')
 
@@ -232,8 +226,8 @@ def viterbi_segment(word: str, vocab: dict, total: int,
   SentencePiece contract — one visible unknown piece, never a silent
   zero-token drop, so n_tokens counts it).  Unreachable when the
   encode corpus equals the train corpus (training retains every
-  character), but the public vocab=/docs= seams allow cross-corpus
-  encoding."""
+  character), but unigram_encode may take a vocabulary trained on
+  another corpus."""
   n = len(word)
   # best[i] = (num bigint, k, path tuple) for word[:i]
   best: list = [None] * (n + 1)
@@ -262,8 +256,8 @@ def viterbi_segment(word: str, vocab: dict, total: int,
   return list(best[n][2])
 
 
-def unigram_encode(spark: SparkSession, sf_dir: str, *,
-                   vocab: DataFrame = None, docs: DataFrame = None,
+def unigram_encode(docs: DataFrame, *,
+                   vocab: DataFrame = None,
                    return_tokens: bool = False,
                    special_tokens: tuple = ()) -> DataFrame:
   """Tokenize every document with a trained unigram vocabulary (from
@@ -278,11 +272,9 @@ def unigram_encode(spark: SparkSession, sf_dir: str, *,
   corpus on the word key.  Words with characters outside the trained
   vocabulary encode to ['<unk>'] (see viterbi_segment) — visible in
   tokens and counted in n_tokens, never silently dropped."""
-  d = (docs if docs is not None else _docs(spark, sf_dir)) \
-      .select('doc_id', 'text')
+  d = docs.select('doc_id', 'text')
   if vocab is None:
-    vocab = unigram_train(spark, sf_dir, docs=docs,
-                          special_tokens=special_tokens)
+    vocab = unigram_train(docs, special_tokens=special_tokens)
   vrows = vocab.collect()
   vmap = {r['piece']: int(r['em_micro']) for r in vrows}
   total = int(vrows[0]['total_micro']) if vrows else 1

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from blueprint_oss_spark.spark.sources import documents
+
 
 #: Rows of the driver-side sample every centroid/codebook trainer reads
 #: (a bounded .limit() scan at any corpus size).
@@ -1290,7 +1292,7 @@ def cluster_topics(spark: SparkSession, sf_dir: str, *,
   a = (assignments if assignments is not None
        else kmeans_assign(spark, sf_dir)) \
       .select(F.col('vec_id').alias('doc_id'), 'cell')
-  d = spark.read.parquet(f'{sf_dir}/documents.parquet') \
+  d = documents(spark, sf_dir) \
       .select('doc_id', 'text')
   toks = F.filter(
       words('text'),

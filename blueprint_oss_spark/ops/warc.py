@@ -17,18 +17,14 @@ and re-parses them from scratch engine-independently.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 CRLF = '\r\n'
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-  return spark.read.parquet(f'{sf_dir}/documents.parquet')
-
-
-def synth_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
+def synth_warc_records(docs: DataFrame) -> DataFrame:
   """Deterministic WARC/1.0 response records over the documents
-  corpus (doc_id, record:string) — the same synthesis device as
+  corpus `docs` (doc_id, record:string) — the same synthesis device as
   c4_line_clean's lines / url_curation's URLs, so the DuckDB oracle
   rebuilds byte-identical records from the raw table:
 
@@ -44,7 +40,6 @@ def synth_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
   Record = WARC header block + CRLFCRLF + HTTP block (status line,
   headers, CRLFCRLF, payload); Content-Length headers are computed
   with length() arithmetic on the SAME expressions, never hardcoded."""
-  d = _docs(spark, sf_dir).select('doc_id', 'text')
   did = F.col('doc_id')
   is404 = did % 29 == 0
   payload = F.when(
@@ -77,11 +72,12 @@ def synth_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
   record = F.when(did % 37 == 0,
                   F.substring(record, 1, F.length(record) - F.lit(20))
                   ).otherwise(record)
-  return d.select('doc_id', record.alias('record'))
+  return docs.select('doc_id', record.alias('record'))
 
 
-def parse_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-  """Parse WARC response records into structured rows:
+def parse_warc_records(records: DataFrame) -> DataFrame:
+  """Parse WARC response `records` (doc_id, record) into structured
+  rows:
     doc_id, target_uri, warc_type, status (int), content_type,
     declared_len (the HTTP Content-Length header), body_len (actual),
     length_ok (1 iff they agree — truncated fetches fail this),
@@ -96,9 +92,8 @@ def parse_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
   records degrade to length_ok = 0 rows instead of failing the task
   (the crawl-batch resilience contract).
 
-  Input: the deterministic corpus synth_warc_records synthesizes,
-  which the DuckDB oracle rebuilds from scratch."""
-  r = synth_warc_records(spark, sf_dir)
+  The gate's input is the deterministic corpus synth_warc_records
+  synthesizes, which the DuckDB oracle rebuilds from scratch."""
   # one regex split into the three blocks; limit=3 keeps any CRLFCRLF
   # inside a real-world payload intact (the synthesized corpus has
   # none, which is what lets the DuckDB oracle split without a limit)
@@ -113,7 +108,7 @@ def parse_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
       F.regexp_replace(body, '<[^>]*>', ' '), r'\s+', ' '))
   declared = F.regexp_extract(http_hdrs,
                               r'Content-Length: ([0-9]+)', 1)
-  return (r.select(
+  return (records.select(
       'doc_id',
       F.regexp_extract(warc_hdrs, r'WARC-Target-URI: (\S+)', 1)
       .alias('target_uri'),

@@ -1,7 +1,8 @@
-"""OCR source loaders: Google Cloud Vision JSON, IBOCR JSON, hOCR → the
-engine's page/word structure, the file format → entity pool table
-(`POOL_BUILDERS`, adding PDF and reference doc JSON), and the
-binaryFile reader that turns a file collection into extraction input.
+"""Input readers: OCR source loaders (Google Cloud Vision JSON, IBOCR
+JSON, hOCR → the engine's page/word structure), the file format →
+entity pool table (`POOL_BUILDERS`, adding PDF and reference doc JSON),
+the binaryFile reader that turns a file collection into extraction
+input, and `documents`, the one reader of the training-data corpus.
 
 Semantics mirror the reference loaders:
   Google Vision  bp/google_ocr_file.py:16-59 (blocks→paragraphs→words,
@@ -175,6 +176,13 @@ def _pool_from_doc_json(doc_id: str, content: bytes) -> DocPool:
 POOL_BUILDERS = {fmt: _pool_from_pages(parse)
                  for fmt, parse in PARSERS.items()}
 POOL_BUILDERS['docjson'] = _pool_from_doc_json
+
+
+def documents(spark, sf_dir: str):
+  """The corpus: the `documents` table of a generated dataset directory
+  (doc_id, text, lang, source, ...), the input of the corpus
+  operators."""
+  return spark.read.parquet(f'{sf_dir}/documents.parquet')
 
 
 def read_files(spark, path_glob: str):

@@ -180,28 +180,30 @@ def _assemble_doc(key: Tuple[str], pdfs: Iterable[pd.DataFrame],
       part_nos, kinds, texts, media_refs, offsets, span_part = \
           [], [], [], [], [], []
 
+    seen = set(part_nos)
     for pdf in pdfs:
-      for _, row in pdf.iterrows():
-        p = int(row['part_no'])
-        ts = row['ts']
+      for p, ts, n, part_spans in zip(pdf['part_no'], pdf['ts'],
+                                      pdf['n_parts'], pdf['spans']):
+        p = int(p)
         if ts is not None and not pd.isna(ts):
           # naive pandas timestamps are epoch-converted as UTC; run the
           # session with spark.sql.session.timeZone=UTC (the default in
           # this repo's entry points) so this agrees with the engine's
           # watermark domain
           last_ev_ms = max(last_ev_ms, int(ts.timestamp() * 1000))
-        if p in part_nos:
+        if p in seen:
           continue  # duplicate delivery — idempotent
+        seen.add(p)
         part_nos.append(p)
-        n_parts = max(n_parts, int(row['n_parts']))
-        for s in row['spans']:
+        n_parts = max(n_parts, int(n))
+        for s in part_spans:
           kinds.append(s['kind'])
           texts.append(s['text'])
           media_refs.append(s['media_ref'])
           offsets.append(int(s['offset']))
           span_part.append(p)
 
-    if not (n_parts and len(set(part_nos)) >= n_parts):
+    if not (n_parts and len(seen) >= n_parts):
       state.update((n_parts, last_ev_ms, part_nos, kinds, texts,
                     media_refs, offsets, span_part))
       # Event-time timeout anchored to the NEWEST part's event time —
@@ -355,9 +357,7 @@ def start_incremental_dedup_stream(spark: SparkSession, input_dir: str,
   stream = _read_stream(spark, schema, input_dir, max_files_per_trigger)
 
   def _classify(batch_df: DataFrame, batch_id: int) -> None:
-    out = incremental_dedup(batch_df.sparkSession, '',
-                            batch=batch_df, corpus=corpus,
-                            **dedup_kwargs)
+    out = incremental_dedup(batch_df, corpus, **dedup_kwargs)
     _write_batch(out, batch_id, output_dir)
 
   return _start(stream, _classify, checkpoint_dir, trigger_once)

@@ -1299,7 +1299,8 @@ def main() -> None:
       # simhash_sigs_pairs) but its snapshot parquet is still the
       # verified signature table that query's SQL oracle reads
       from blueprint_oss_spark.ops.textops import simhash64
-      return simhash64(spark, sf_dir or args.sf_dir).toPandas()
+      from blueprint_oss_spark.spark.sources import documents
+      return simhash64(documents(spark, sf_dir or args.sf_dir)).toPandas()
     if name == 'ann_eval':
       # not a standalone gate query: the verified retrieval-eval table
       # the ann_topk_methods oracle's method='anneval' section reads

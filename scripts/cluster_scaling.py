@@ -57,6 +57,7 @@ for _ in range(120):
 cores = spark.sparkContext.defaultParallelism
 from blueprint_oss_spark.spark.pipeline import extract_documents, \
     spans_frame
+from blueprint_oss_spark.spark.sources import documents
 # Fixed fine-grained partition count at BOTH cluster sizes (not
 # cores*2): with only 2 waves of coarse tasks, cached-block locality
 # pins tasks to whichever executor won more blocks during
@@ -116,8 +117,7 @@ elif model == 'justext':
     # instead of task-dispatch noise.
     from blueprint_oss_spark.ops.html_extract import justext_main_content
     sf_dir = os.environ.get('BOS_SCALE_SF', '/root/testdata/sf0.1')
-    src = spark.read.parquet(f'{sf_dir}/documents.parquet') \
-        .select('doc_id', 'text')
+    src = documents(spark, sf_dir).select('doc_id', 'text')
     if n_docs:
         src = src.limit(n_docs)
     rep = int(os.environ.get('BOS_SCALE_REPLICATE', '4'))
@@ -144,8 +144,7 @@ elif model == 'minhash':
     # order-insensitive hash-sum of the emitted pair set.
     from blueprint_oss_spark.ops.textops import minhash_shingles
     sf_dir = os.environ.get('BOS_SCALE_SF', '/root/testdata/sf0.1')
-    src = spark.read.parquet(f'{sf_dir}/documents.parquet') \
-        .select('doc_id', 'text')
+    src = documents(spark, sf_dir).select('doc_id', 'text')
     if n_docs:
         src = src.limit(n_docs)
     # sf0.1 alone finishes in ~3 s on 4 cores — overhead-bound, which
@@ -163,7 +162,7 @@ elif model == 'minhash':
         # throughput is reported over INPUT docs (the scan the pair
         # pass consumes), keeping docs/sec comparable across models;
         # the checksum carries the pair-set hash AND the pair count
-        agg = minhash_shingles(spark, sf_dir, docs=df).agg(
+        agg = minhash_shingles(df).agg(
             F.count('*').alias('n'),
             F.sum(F.xxhash64('doc_a', 'doc_b')
                   .cast('decimal(38,0)')).alias('s')).collect()[0]
@@ -174,8 +173,8 @@ elif model == 'url_curation':
     # operator's built-in synthesis keys identity on doc_id%350 — fine
     # for oracle equality at gate scale but only ~350 window groups, a
     # synthesis artifact that would fake reducer skew at millions of
-    # rows.  For scaling, feed a realistic distribution through the
-    # docs= seam instead: ~n/3-sized dedup groups, 9973 domains, with
+    # rows.  For scaling, feed it a frame with a realistic `url`
+    # column instead: ~n/3-sized dedup groups, 9973 domains, with
     # per-doc tracking-param/port/fragment noise for the normalizer to
     # chew through.  Checksum = exact order-insensitive hash-sum of the
     # full verdict surface.
@@ -199,7 +198,7 @@ elif model == 'url_curation':
           .repartition(n_parts).cache())
     n_in = df.count()
     def run_pass():
-        agg = url_curation(spark, '', docs=df, domain_cap=64).agg(
+        agg = url_curation(df, domain_cap=64).agg(
             F.count('*').alias('n'),
             F.sum(F.xxhash64('doc_id', 'norm_url', 'url_rank',
                              F.coalesce('domain_rank', F.lit(-1)),
@@ -220,8 +219,7 @@ elif model == 'paragraphs':
     # rebuilt text).
     from blueprint_oss_spark.ops.textops import dedup_paragraphs
     sf_dir = os.environ.get('BOS_SCALE_SF', '/root/testdata/sf0.1')
-    src = spark.read.parquet(f'{sf_dir}/documents.parquet') \
-        .select('doc_id', 'text')
+    src = documents(spark, sf_dir).select('doc_id', 'text')
     if n_docs:
         src = src.limit(n_docs)
     rep = int(os.environ.get('BOS_SCALE_REPLICATE', '32'))
@@ -230,7 +228,7 @@ elif model == 'paragraphs':
     df = src.repartition(n_parts).cache()
     n_in = df.count()
     def run_pass():
-        agg = dedup_paragraphs(spark, sf_dir, docs=df).agg(
+        agg = dedup_paragraphs(df).agg(
             F.count('*').alias('n'),
             F.sum(F.xxhash64('doc_id', 'n_kept', 'n_removed',
                              'clean_text')
@@ -300,8 +298,7 @@ elif model == 'pack_interleaved':
     n_in = df.count()
     def run_pass():
         packed = pack_interleaved_sequences(
-            spark, sf_dir, shards=256,
-            spans=main_content_from_spans(df))
+            main_content_from_spans(df), shards=256)
         agg = packed.agg(
             F.count('*').alias('n'),
             F.sum(F.xxhash64('doc_id', 'order', 'kind', 'media_ref',
@@ -422,15 +419,14 @@ elif model == 'bpe':
     df = src.repartition(n_parts).cache()
     n_in = df.count()
     n_merges = int(os.environ.get('BOS_SCALE_MERGES', '6'))
-    merges = bpe_train(spark, sf_dir, n_merges=n_merges, docs=df,
+    merges = bpe_train(df, n_merges=n_merges,
                        special_tokens=(sent,)).localCheckpoint()
     mh = merges.agg(
         F.sum(F.xxhash64('rank', 'left', 'right', 'merged',
                          'pair_count')
               .cast('decimal(38,0)')).alias('m')).collect()[0]['m']
     def run_pass():
-        enc = bpe_encode(spark, sf_dir, merges=merges, docs=df,
-                         special_tokens=(sent,))
+        enc = bpe_encode(df, merges=merges, special_tokens=(sent,))
         agg = enc.agg(
             F.count('*').alias('n'),
             F.sum(F.xxhash64('doc_id', 'n_words', 'n_tokens')
@@ -449,8 +445,7 @@ elif model == 'bloom':
     # hash-sum of (doc_id, n_flagged).
     from blueprint_oss_spark.ops.curation import bloom_decontaminate
     sf_dir = os.environ.get('BOS_SCALE_SF', '/root/testdata/sf0.1')
-    src = spark.read.parquet(f'{sf_dir}/documents.parquet') \
-        .select('doc_id', 'text')
+    src = documents(spark, sf_dir).select('doc_id', 'text')
     if n_docs:
         src = src.limit(n_docs)
     rep = int(os.environ.get('BOS_SCALE_REPLICATE', '4'))
@@ -466,8 +461,7 @@ elif model == 'bloom':
         # production but timed EVERY pass here) dominate the short
         # high-level run; 1/16 is still far larger than any real
         # eval:corpus ratio
-        agg = bloom_decontaminate(spark, sf_dir, docs=df,
-                                  eval_mod=16).agg(
+        agg = bloom_decontaminate(df, eval_mod=16).agg(
             F.count('*').alias('n'),
             F.sum(F.xxhash64('doc_id', 'n_flagged')
                   .cast('decimal(38,0)')).alias('s')).collect()[0]

@@ -28,6 +28,7 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import curation as C
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -73,7 +74,8 @@ def test_bloom_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql(1 << 20, 4)).df()
-  got = C.bloom_decontaminate(spark, sf, m_bits=1 << 20, k=4).toPandas()
+  got = C.bloom_decontaminate(documents(spark, sf), m_bits=1 << 20,
+                              k=4).toPandas()
   assert list(got.columns) == ['doc_id', 'n_flagged']
   assert len(got) == len(oracle)
   assert got.reset_index(drop=True).equals(oracle.reset_index(drop=True))
@@ -82,10 +84,10 @@ def test_bloom_matches_duckdb_oracle(spark, sf):
 def test_no_false_negatives_and_fp_rate(spark):
   # tiny filter -> false positives guaranteed; false negatives never
   exact = {r['doc_id']: r['n_shared']
-           for r in C.decontaminate(spark, SF1).collect()}
+           for r in C.decontaminate(documents(spark, SF1)).collect()}
   bloom = {r['doc_id']: r['n_flagged']
-           for r in C.bloom_decontaminate(
-               spark, SF1, m_bits=1 << 12, k=2).collect()}
+           for r in C.bloom_decontaminate(documents(spark, SF1),
+                                          m_bits=1 << 12, k=2).collect()}
   assert set(exact) <= set(bloom), 'Bloom missed a true contamination'
   for did, n_shared in exact.items():
     assert bloom[did] >= n_shared
@@ -104,8 +106,8 @@ def test_no_false_negatives_and_fp_rate(spark):
 def test_explicit_eval_texts(spark):
   docs = spark.read.parquet(f'{SF1}/documents.parquet')
   eval_texts = docs.where('doc_id % 10 = 0').select('text')
-  out = C.bloom_decontaminate(
-      spark, SF1, eval_texts=eval_texts).toPandas()
+  out = C.bloom_decontaminate(documents(spark, SF1),
+                              eval_texts=eval_texts).toPandas()
   # every doc sharing its own text's grams with the eval slice flags
   # itself; the eval docs are part of the train side in this shape
   flagged = set(out['doc_id'])
@@ -119,7 +121,7 @@ def test_explicit_eval_texts(spark):
 
 
 def test_probe_plan_single_arrow_stage_no_shuffle(spark):
-  plan = C.bloom_decontaminate(spark, SF1)._jdf.queryExecution() \
+  plan = C.bloom_decontaminate(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   # exactly one Python/Arrow eval stage in the whole probe plan
   n_arrow = plan.count('MapInPandas')
@@ -145,8 +147,8 @@ def test_jvm_lowering_no_false_negative(spark):
       [(1, 'Ɤ' + words), (2, 'one two three four five six seven')],
       'doc_id long, text string')
   exact = {r['doc_id'] for r in C.decontaminate(
-      spark, '', eval_texts=eval_texts, docs=docs).collect()}
+      docs, eval_texts=eval_texts).collect()}
   bloom = {r['doc_id'] for r in C.bloom_decontaminate(
-      spark, '', eval_texts=eval_texts, docs=docs).collect()}
+      docs, eval_texts=eval_texts).collect()}
   assert exact == {1}
   assert bloom == exact

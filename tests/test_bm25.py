@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -89,7 +90,7 @@ def _rows(df):
 
 @pytest.mark.parametrize('sf', [SF1, SF2])
 def test_matches_duckdb_exactly(spark, sf):
-  got = _rows(T.bm25_topk(spark, sf))
+  got = _rows(T.bm25_topk(documents(spark, sf)))
   exp = [tuple(r) for r in _oracle(sf)]
   assert got == exp
   assert len(got) == 8 * 5
@@ -126,13 +127,13 @@ def test_python_recomputation(spark):
     ranked = sorted(scores.items(), key=lambda kv: (-kv[1][0], kv[0]))[:5]
     exp.extend((qid, ' '.join(sorted(qts)), did, dl, round(s, 6), r)
                for r, (did, (s, dl)) in enumerate(ranked, 1))
-  assert _rows(T.bm25_topk(spark, SF1)) == exp
+  assert _rows(T.bm25_topk(documents(spark, SF1))) == exp
 
 
 def test_repartition_determinism(spark):
-  base = _rows(T.bm25_topk(spark, SF1))
+  base = _rows(T.bm25_topk(documents(spark, SF1)))
   docs = spark.read.parquet(f'{SF1}/documents.parquet').repartition(64)
-  assert _rows(T.bm25_topk(spark, SF1, docs=docs)) == base
+  assert _rows(T.bm25_topk(docs)) == base
 
 
 def test_saturation_and_length_norm(spark):
@@ -143,7 +144,7 @@ def test_saturation_and_length_norm(spark):
           (2, 'apple banana w1 w2 w3 w4'),
           (3, ' '.join(['apple'] * 50) + ' banana')]
   docs = spark.createDataFrame(rows, 'doc_id int, text string')
-  out = T.bm25_topk(spark, 'unused', n_queries=1, k=3, docs=docs)
+  out = T.bm25_topk(docs, n_queries=1, k=3)
   got = {r['doc_id']: (r['rnk'], r['score_r']) for r in out.collect()}
   assert set(got) == {1, 2, 3}
   assert got[1][0] < got[2][0]  # shorter doc ranks above longer twin
@@ -156,14 +157,14 @@ def test_saturation_and_length_norm(spark):
 
 def test_empty_corpus(spark):
   docs = spark.createDataFrame([], 'doc_id int, text string')
-  out = T.bm25_topk(spark, 'unused', docs=docs)
+  out = T.bm25_topk(docs)
   assert out.count() == 0
   assert out.columns == ['query_id', 'query', 'doc_id', 'dl',
                          'score_r', 'rnk']
 
 
 def test_plan_shape(spark):
-  plan = T.bm25_topk(spark, SF1)._jdf.queryExecution() \
+  plan = T.bm25_topk(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   # the SCORING plan reads the corpus exactly once: dl and the
   # query-term hits ride the same staged tokenization (the query

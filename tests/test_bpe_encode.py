@@ -3,6 +3,7 @@ and full encoded sequences must equal a sequential pure-python encoder
 applying the same merge table in rank order, greedy left-to-right."""
 
 from collections import Counter
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _ref_merges(texts, n_merges):
@@ -69,7 +70,7 @@ def test_token_counts_match_python(spark, tmp_path):
   sf = _write(spark, tmp_path, texts)
   merges = _ref_merges(texts, 8)
   got = {r['doc_id']: (r['n_words'], r['n_tokens'])
-         for r in bpe_encode(spark, sf, n_merges=8).collect()}
+         for r in bpe_encode(documents(spark, sf), n_merges=8).collect()}
   for i, t in enumerate(texts):
     toks = _ref_encode_doc(t, merges)
     n_words = len([w for w in t.split(' ') if w])
@@ -82,7 +83,7 @@ def test_full_sequences_match_python(spark, tmp_path):
   sf = _write(spark, tmp_path, texts)
   merges = _ref_merges(texts, 6)
   got = {r['doc_id']: (list(r['tokens']), r['n_tokens'])
-         for r in bpe_encode(spark, sf, n_merges=6,
+         for r in bpe_encode(documents(spark, sf), n_merges=6,
                              return_tokens=True).collect()}
   for i, t in enumerate(texts):
     toks = _ref_encode_doc(t, merges)
@@ -97,10 +98,10 @@ def test_precomputed_merge_table_seam(spark, tmp_path):
   apply_texts = ['slowest winter', 'newer lows', 'unseen zebra']
   sf_a = _write(spark, tmp_path / 'a', train_texts)
   sf_b = _write(spark, tmp_path / 'b', apply_texts)
-  merges_df = bpe_train(spark, sf_a, n_merges=5)
+  merges_df = bpe_train(documents(spark, sf_a), n_merges=5)
   merges = _ref_merges(train_texts, 5)
   got = {r['doc_id']: list(r['tokens'])
-         for r in bpe_encode(spark, sf_b, merges=merges_df,
+         for r in bpe_encode(documents(spark, sf_b), merges=merges_df,
                              return_tokens=True).collect()}
   for i, t in enumerate(apply_texts):
     assert got[i] == _ref_encode_doc(t, merges), (i, t)
@@ -115,7 +116,7 @@ def test_sf0001_token_totals(spark):
   merges = _ref_merges(list(texts_by_id.values()), 12)
   from blueprint_oss_spark.ops.textops import bpe_encode
   got = {r['doc_id']: r['n_tokens']
-         for r in bpe_encode(spark, '/root/testdata/sf0.001',
+         for r in bpe_encode(documents(spark, '/root/testdata/sf0.001'),
                              n_merges=12).collect()}
   assert set(got) == set(texts_by_id)
   for i, t in texts_by_id.items():

@@ -5,6 +5,7 @@ full-corpus equality with a sequential pure-python trainer."""
 from collections import Counter
 
 import pytest
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _ref_bpe(texts, n_merges):
@@ -44,7 +45,8 @@ def _run(spark, tmp_path, texts, n_merges):
       .write.mode('overwrite') \
       .parquet(str(tmp_path / 'documents.parquet'))
   return [tuple(r) for r in
-          bpe_train(spark, str(tmp_path), n_merges=n_merges).collect()]
+          bpe_train(documents(spark, str(tmp_path)),
+                    n_merges=n_merges).collect()]
 
 
 def test_known_merge_sequence(spark, tmp_path):
@@ -88,6 +90,6 @@ def test_sf0001_matches_python(spark):
   ).fetchall()]
   from blueprint_oss_spark.ops.textops import bpe_train
   got = [tuple(r) for r in
-         bpe_train(spark, '/root/testdata/sf0.001',
+         bpe_train(documents(spark, '/root/testdata/sf0.001'),
                    n_merges=10).collect()]
   assert got == _ref_bpe(texts, 10)

@@ -15,6 +15,7 @@ from blueprint_oss_spark.ops.textops import doc_quality, doc_token_stats
 from blueprint_oss_spark.spark.storage import (
     co_located_join, write_bucketed,
 )
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.001'
 
@@ -39,8 +40,8 @@ def _no_broadcast(spark):
 
 @pytest.fixture()
 def bucketed_pair(spark, tmp_path):
-  q = doc_quality(spark, SF)
-  t = doc_token_stats(spark, SF).select('doc_id', 'n_tokens')
+  q = doc_quality(documents(spark, SF))
+  t = doc_token_stats(documents(spark, SF)).select('doc_id', 'n_tokens')
   write_bucketed(q, 'bq_quality', bucket_by='doc_id', n_buckets=4,
                  path=str(tmp_path / 'q'))
   write_bucketed(t, 'bq_tokens', bucket_by='doc_id', n_buckets=4,
@@ -59,8 +60,9 @@ def test_join_has_no_exchange(spark, bucketed_pair):
   assert 'Exchange' not in plan, plan
   assert 'SortMergeJoin' in plan, plan
   # and the result is the real join, not an artifact of the layout
-  exp = (doc_quality(spark, SF)
-         .join(doc_token_stats(spark, SF).select('doc_id', 'n_tokens'),
+  exp = (doc_quality(documents(spark, SF))
+         .join(doc_token_stats(documents(spark, SF))
+               .select('doc_id', 'n_tokens'),
                'doc_id').collect())
   assert sorted(map(tuple, rows)) == sorted(map(tuple, exp))
 
@@ -82,15 +84,15 @@ def test_sort_elided_with_ordering_flag(spark, bucketed_pair):
     spark.conf.set(flag, 'false')
   assert 'Exchange' not in plan, plan
   assert 'Sort ' not in plan.replace('SortMergeJoin', ''), plan
-  assert len(rows) == doc_quality(spark, SF).count()
+  assert len(rows) == doc_quality(documents(spark, SF)).count()
 
 
 def test_unbucketed_baseline_does_shuffle(spark):
   """Control: the same join over plain parquet pays two Exchanges —
   the cost the bucketed layout amortizes away."""
   with _no_broadcast(spark):
-    j = doc_quality(spark, SF).join(
-        doc_token_stats(spark, SF).select('doc_id', 'n_tokens'),
+    j = doc_quality(documents(spark, SF)).join(
+        doc_token_stats(documents(spark, SF)).select('doc_id', 'n_tokens'),
         'doc_id')
     plan = j._jdf.queryExecution().executedPlan().toString()
   assert 'Exchange' in plan
@@ -98,5 +100,5 @@ def test_unbucketed_baseline_does_shuffle(spark):
 
 def test_write_validation(spark):
   with pytest.raises(ValueError):
-    write_bucketed(doc_quality(spark, SF), 'nope',
+    write_bucketed(doc_quality(documents(spark, SF)), 'nope',
                    bucket_by='doc_id', n_buckets=0)

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -44,7 +45,7 @@ ORDER BY b.term, b.bucket, b.pos
 
 
 def _exploded(spark, sf, **kw):
-  return (T.build_postings(spark, sf, **kw)
+  return (T.build_postings(documents(spark, sf), **kw)
           .select('term', 'bucket', 'df_bucket',
                   F.posexplode('postings').alias('pos', 'p'),
                   'df', 'cf')
@@ -72,7 +73,7 @@ def test_matches_duckdb_oracle(spark, sf, bucket):
 def test_groups_bounded_regardless_of_hotness(spark):
   # 'scan' appears in ~half of all docs (hot); with doc_bucket=4 every
   # posting row still holds at most 4 entries
-  got = T.build_postings(spark, SF1, doc_bucket=4).toPandas()
+  got = T.build_postings(documents(spark, SF1), doc_bucket=4).toPandas()
   assert got.df_bucket.max() <= 4
   assert (got.postings.map(len) == got.df_bucket).all()
   hot = got[got.term == 'scan']
@@ -80,7 +81,7 @@ def test_groups_bounded_regardless_of_hotness(spark):
 
 
 def test_bucket_concatenation_restores_global_order(spark):
-  got = (T.build_postings(spark, SF1, doc_bucket=64,
+  got = (T.build_postings(documents(spark, SF1), doc_bucket=64,
                           terms=('scan',)).toPandas()
          .sort_values('bucket'))
   ids = [p['doc_id'] for _, row in got.iterrows()
@@ -90,8 +91,9 @@ def test_bucket_concatenation_restores_global_order(spark):
 
 
 def test_df_cf_conservation_and_terms_seam(spark):
-  full = T.build_postings(spark, SF1).toPandas()
-  sub = T.build_postings(spark, SF1, terms=('scan', 'the')).toPandas()
+  full = T.build_postings(documents(spark, SF1)).toPandas()
+  sub = T.build_postings(documents(spark, SF1),
+                         terms=('scan', 'the')).toPandas()
   assert set(sub.term) == {'scan', 'the'}
   for t in ('scan', 'the'):
     assert sub[sub.term == t].df.iloc[0] \
@@ -107,41 +109,19 @@ def test_rollup_reads_materialized_buckets_not_the_corpus(spark):
   # materialization the df/cf rollup branch re-runs the whole corpus
   # subtree (no exchange reuse).  With it, the final plan holds ONE
   # term-keyed rollup exchange over bucket rows and zero file scans.
-  plan = (T.build_postings(spark, SF1)
+  plan = (T.build_postings(documents(spark, SF1))
           ._jdf.queryExecution().executedPlan().toString())
   assert plan.count('FileScan') == 0
   assert plan.count('hashpartitioning') <= 1
   assert 'EvalPython' not in plan
   # the lazy composition path keeps the documented 3-shuffle-shape
   # per subtree (2 corpus aggregations + the term rollup)
-  lazy = (T.build_postings(spark, SF1, materialize=False)
+  lazy = (T.build_postings(documents(spark, SF1), materialize=False)
           ._jdf.queryExecution().executedPlan().toString())
   assert 'EvalPython' not in lazy
 
 
 def test_doc_bucket_must_be_positive(spark):
   with pytest.raises(ValueError):
-    T.build_postings(spark, SF1, doc_bucket=0)
+    T.build_postings(documents(spark, SF1), doc_bucket=0)
 
-
-@pytest.mark.parametrize('sf', [SF1, SF2])
-def test_bm25_served_from_index_is_bit_equal(spark, sf):
-  # the cross-operator oracle: the index-served scorer must reproduce
-  # the scan-based bm25_topk EXACTLY — same queries, same candidates,
-  # same double scores to the last bit, same ranks
-  scan = T.bm25_topk(spark, sf).toPandas()
-  idx = T.bm25_from_postings(spark, sf).toPandas()
-  assert list(idx.columns) == list(scan.columns)
-  for c in idx.columns:
-    scan[c] = scan[c].astype(idx[c].dtype)
-  assert idx.reset_index(drop=True).equals(scan.reset_index(drop=True))
-  assert len(idx) > 0
-
-
-def test_bm25_index_query_path_scans_corpus_once(spark):
-  # with the index materialized, the only FileScan left is the
-  # doc-length table — query synthesis and candidates come from the
-  # index, never a second corpus pass
-  plan = (T.bm25_from_postings(spark, SF1)
-          ._jdf.queryExecution().executedPlan().toString())
-  assert plan.count('FileScan') == 1

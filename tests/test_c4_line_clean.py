@@ -12,6 +12,7 @@ import re
 
 import duckdb
 import pytest
+from blueprint_oss_spark.spark.sources import documents
 
 SF_DIR = '/root/testdata/sf0.001'
 
@@ -51,7 +52,8 @@ def corpus():
 
 def test_matches_pure_python_recomputation(spark, corpus):
   from blueprint_oss_spark.ops.curation import c4_line_clean
-  got = sorted(tuple(r) for r in c4_line_clean(spark, SF_DIR).collect())
+  got = sorted(tuple(r)
+               for r in c4_line_clean(documents(spark, SF_DIR)).collect())
   want = sorted(row for row in
                 (_python_c4(d, t)[0] for d, t in corpus)
                 if row is not None)
@@ -95,12 +97,12 @@ def test_javascript_lines_end_in_punctuation(corpus):
 
 
 def test_docs_seam(spark):
-  """`docs=` seam: a handed-in frame is used instead of the sf table,
-  with the same verdicts (composability with upstream curation)."""
+  """A handed-in frame gives the same verdicts as the documents table
+  (composability with upstream curation)."""
   from blueprint_oss_spark.ops.curation import c4_line_clean
   d = spark.createDataFrame(
       [(1, ' '.join(['tok'] * 40))], 'doc_id long, text string')
-  out = c4_line_clean(spark, SF_DIR, docs=d).collect()
+  out = c4_line_clean(d).collect()
   want, _ = _python_c4(1, ' '.join(['tok'] * 40))
   got = [tuple(r) for r in out]
   assert got == ([want] if want is not None else [])

@@ -9,6 +9,7 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -82,7 +83,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(ORACLE).df()
-  got = T.c4_span_dedup(spark, sf).toPandas()
+  got = T.c4_span_dedup(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'n_sents', 'n_kept',
                                'n_removed', 'clean_text']
   for c in got.columns:
@@ -92,7 +93,7 @@ def test_matches_duckdb_oracle(spark, sf):
 
 
 def test_counts_reconcile(spark):
-  got = T.c4_span_dedup(spark, SF1).toPandas()
+  got = T.c4_span_dedup(documents(spark, SF1)).toPandas()
   assert (got.n_kept + got.n_removed == got.n_sents).all()
   # removals come in whole 3-sentence spans (possibly overlapping, so
   # any count >= 3 per affected doc) and some docs stay untouched
@@ -102,7 +103,7 @@ def test_counts_reconcile(spark):
 
 
 def test_triple_span_kept_exactly_once(spark):
-  got = T.c4_span_dedup(spark, SF1).toPandas()
+  got = T.c4_span_dedup(documents(spark, SF1)).toPandas()
   # the canonical first occurrence of each planted triple survives;
   # every other occurrence loses its three sentences
   all_text = ' '.join(got.clean_text)

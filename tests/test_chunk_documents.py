@@ -9,6 +9,7 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -45,7 +46,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql()).df()
-  got = T.chunk_documents(spark, sf).toPandas()
+  got = T.chunk_documents(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'chunk_no', 'start_tok',
                                'n_tokens', 'chunk_text']
   assert len(got) == len(oracle)
@@ -56,7 +57,7 @@ def test_coverage_and_overlap_properties(spark):
   chunk, overlap = 16, 4
   step = chunk - overlap
   docs = spark.read.parquet(f'{SF1}/documents.parquet')
-  out = T.chunk_documents(spark, SF1, chunk_tokens=chunk,
+  out = T.chunk_documents(documents(spark, SF1), chunk_tokens=chunk,
                           overlap=overlap).toPandas()
   texts = {r['doc_id']: r['text'] for r in docs.collect()}
   seen = set(out['doc_id'])
@@ -88,11 +89,11 @@ def test_coverage_and_overlap_properties(spark):
 
 def test_invalid_overlap_raises(spark):
   with pytest.raises(ValueError):
-    T.chunk_documents(spark, SF1, chunk_tokens=16, overlap=16)
+    T.chunk_documents(documents(spark, SF1), chunk_tokens=16, overlap=16)
 
 
 def test_plan_zero_shuffle_scan(spark):
-  plan = T.chunk_documents(spark, SF1)._jdf.queryExecution() \
+  plan = T.chunk_documents(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   # pure map: Generate over the scan; the only exchange is the
   # presentation orderBy's range partitioning

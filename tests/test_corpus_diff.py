@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -42,7 +43,8 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(ORACLE).df()
-  got = T.corpus_diff(spark, sf).toPandas()
+  old = documents(spark, sf)
+  got = T.corpus_diff(old, T.corpus_next_version(old)).toPandas()
   assert list(got.columns) == list(oracle.columns)
   assert len(got) == len(oracle)
   for c in got.columns:
@@ -53,7 +55,8 @@ def test_matches_duckdb_oracle(spark, sf):
 
 
 def test_verdict_semantics(spark):
-  got = T.corpus_diff(spark, SF1).toPandas()
+  old = documents(spark, SF1)
+  got = T.corpus_diff(old, T.corpus_next_version(old)).toPandas()
   by = dict(zip(got.doc_id, got.verdict))
   n = 500  # sf0.001 corpus size
   for d in range(n):
@@ -78,5 +81,5 @@ def test_explicit_snapshots_seam(spark):
   new = spark.createDataFrame(
       [(2, 'b'), (3, 'c2'), (4, 'd')], 'doc_id long, text string')
   out = {r['doc_id']: r['verdict'] for r in
-         T.corpus_diff(spark, '', old=old, new=new).collect()}
+         T.corpus_diff(old, new).collect()}
   assert out == {1: 'removed', 2: 'unchanged', 3: 'changed', 4: 'added'}

@@ -12,6 +12,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops.curation import corpus_split_mix
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.001'
 
@@ -50,7 +51,7 @@ def test_matches_sequential_python(spark):
   docs = [(r['doc_id'], r['source'], r['text']) for r in
           spark.read.parquet(f'{SF}/documents.parquet').collect()]
   exp = _ref(docs)
-  out = corpus_split_mix(spark, SF).collect()
+  out = corpus_split_mix(documents(spark, SF)).collect()
   assert len(out) == len(exp)
   for r in out:
     e = exp[r['doc_id']]
@@ -63,7 +64,7 @@ def test_greedy_budget_property(spark):
   """The crossing doc is included: per source, kept token mass is >=
   the budget whenever the source has enough supply, and dropping the
   LAST kept doc (by order) brings it back under budget (minimality)."""
-  out = corpus_split_mix(spark, SF).collect()
+  out = corpus_split_mix(documents(spark, SF)).collect()
   by_src: dict = {}
   for r in out:
     by_src.setdefault(r['source'], []).append(r)
@@ -96,7 +97,7 @@ def test_docs_seam_and_bucket_edges(spark):
     rows.append((3000 + i, 'many', ' '.join(['w'] * 10)))
   d = spark.createDataFrame(rows, 'doc_id long, source string, '
                                   'text string')
-  out = corpus_split_mix(spark, SF, per_source_tokens=35, docs=d) \
+  out = corpus_split_mix(d, per_source_tokens=35) \
       .collect()
   exp = _ref([tuple(r) for r in rows], budget=35)
   for r in out:
@@ -118,10 +119,11 @@ def test_split_stability_and_independence(spark):
   """Split assignment is a pure function of doc_id: unchanged when the
   corpus is subset (no doc migrates between train and test), and the
   three salted hashes are pairwise distinct (independent axes)."""
-  full = {r['doc_id']: r for r in corpus_split_mix(spark, SF).collect()}
+  full = {r['doc_id']: r
+          for r in corpus_split_mix(documents(spark, SF)).collect()}
   d = spark.read.parquet(f'{SF}/documents.parquet') \
       .where(F.col('doc_id') % 3 == 0)
-  sub = corpus_split_mix(spark, SF, docs=d).collect()
+  sub = corpus_split_mix(d).collect()
   assert sub and all(full[r['doc_id']]['split'] == r['split']
                      and full[r['doc_id']]['shard'] == r['shard']
                      and full[r['doc_id']]['order_key'] == r['order_key']
@@ -136,7 +138,7 @@ def test_plan_window_only_on_crossing_bucket(spark):
   selecting bucket == cb (the crossing bucket), i.e. the running sum
   never runs over a full source partition; all other branches are
   window-free map passes over the broadcast-joined base."""
-  plan = corpus_split_mix(spark, SF)._jdf.queryExecution() \
+  plan = corpus_split_mix(documents(spark, SF))._jdf.queryExecution() \
       .optimizedPlan().toString()
   assert plan.count('Window') == 1, plan
   win_at = plan.index('Window')
@@ -146,5 +148,5 @@ def test_plan_window_only_on_crossing_bucket(spark):
   import re
   assert re.search(r'bucket#\d+L? = (cast\()?cb#', after), plan
   # mixture limits ride a broadcast, never a shuffled join
-  assert 'SortMergeJoin' not in corpus_split_mix(spark, SF) \
+  assert 'SortMergeJoin' not in corpus_split_mix(documents(spark, SF)) \
       ._jdf.queryExecution().executedPlan().toString()

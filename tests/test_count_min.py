@@ -9,6 +9,7 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -47,7 +48,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql()).df()
-  got = T.count_min_terms(spark, sf).toPandas()
+  got = T.count_min_terms(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['term', 'true_count', 'cms_est',
                                'overcount']
   assert len(got) == len(oracle)
@@ -64,7 +65,7 @@ def test_collisions_overcount_never_undercount(spark, tmp_path):
       rows, 'doc_id long, text string, lang string, source string, '
             'n_chars long')
   df.write.parquet(str(tmp_path / 'documents.parquet'))
-  out = T.count_min_terms(spark, str(tmp_path), width=4,
+  out = T.count_min_terms(documents(spark, str(tmp_path)), width=4,
                           depth=2).toPandas()
   assert (out['overcount'] >= 0).all()          # never undercount
   assert (out['overcount'] > 0).any()           # collisions happened
@@ -75,7 +76,7 @@ def test_terms_seam_candidate_queries(spark):
   cand = spark.createDataFrame(
       [('the',), ('nonexistent-term',)], 'term string')
   out = {r['term']: r for r in
-         T.count_min_terms(spark, SF1, terms=cand).collect()}
+         T.count_min_terms(documents(spark, SF1), terms=cand).collect()}
   assert set(out) == {'the', 'nonexistent-term'}
   assert out['the']['cms_est'] > 0
   assert out['the']['true_count'] is None       # candidates: est only
@@ -86,7 +87,7 @@ def test_terms_seam_candidate_queries(spark):
 
 
 def test_build_shuffle_is_bounded(spark):
-  plan = T.count_min_terms(spark, SF1)._jdf.queryExecution() \
+  plan = T.count_min_terms(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   # map-side partial aggregation before the cells exchange: the
   # shuffle carries <= depth*width rows per map task

@@ -30,6 +30,7 @@ PHONE = re.compile(r'\b\d{3}-\d{4}-\d{4}\b')
 IPV4 = re.compile(r'\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')
 
 from blueprint_oss_spark.ops.textops import STOPWORDS_EN as STOP
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _load_docs():
@@ -121,13 +122,13 @@ def _check_verdicts(rows, planted):
 
 
 def test_verdicts_full_recomputation(spark):
-  rows = curation_ablation(spark, SF_DIR).collect()
+  rows = curation_ablation(documents(spark, SF_DIR)).collect()
   _check_verdicts(rows, planted=False)
 
 
 def test_verdicts_full_recomputation_planted(spark):
-  rows = curation_ablation(
-      spark, SF_DIR, plant_for_verification=True).collect()
+  rows = curation_ablation(documents(spark, SF_DIR),
+                           plant_for_verification=True).collect()
   _check_verdicts(rows, planted=True)
   # the plant actually creates dup swarms: every planted id except the
   # two swarm minima carries f_dup=1
@@ -143,8 +144,9 @@ def test_verdicts_full_recomputation_planted(spark):
 
 
 def test_report_accounting(spark):
-  v = curation_ablation(spark, SF_DIR, plant_for_verification=True)
-  rows = curation_ablation_report(spark, SF_DIR, verdicts=v).collect()
+  v = curation_ablation(documents(spark, SF_DIR),
+                        plant_for_verification=True)
+  rows = curation_ablation_report(v).collect()
   funnel = {r['filter_a']: r for r in rows if r['section'] == 'funnel'}
   overlap = {(r['filter_a'], r['filter_b']): r['n_both']
              for r in rows if r['section'] == 'overlap'}
@@ -173,7 +175,8 @@ def test_report_accounting(spark):
 
 def test_report_matches_python_recomputation(spark):
   exp = _expected(planted=False)
-  rows = curation_ablation_report(spark, SF_DIR).collect()
+  rows = curation_ablation_report(
+      curation_ablation(documents(spark, SF_DIR))).collect()
   funnel = {r['filter_a']: r for r in rows if r['section'] == 'funnel'}
   overlap = {(r['filter_a'], r['filter_b']): r['n_both']
              for r in rows if r['section'] == 'overlap'}
@@ -193,11 +196,11 @@ def test_plan_shape(spark):
   # ONE window exchange (the md5 dup partition) on the verdict side
   # and, for the report, one global aggregate on top — no Python
   # stages anywhere.
-  v = curation_ablation(spark, SF_DIR)
+  v = curation_ablation(documents(spark, SF_DIR))
   plan = v._jdf.queryExecution().executedPlan().toString()
   assert 'InMemoryTableScan' not in plan
   assert 'BatchEvalPython' not in plan and 'ArrowEval' not in plan
   assert plan.count('Window') == 1
-  r = curation_ablation_report(spark, SF_DIR)
+  r = curation_ablation_report(v)
   rplan = r._jdf.queryExecution().executedPlan().toString()
   assert 'BatchEvalPython' not in rplan and 'ArrowEval' not in rplan

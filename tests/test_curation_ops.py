@@ -14,6 +14,7 @@ import re
 import pytest
 
 from blueprint_oss_spark.ops import curation as C
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.001'
 
@@ -30,7 +31,7 @@ def _inject(doc_id: int, text: str) -> str:
 
 
 def test_pii_scrub_matches_python_re(spark):
-  out = {r['doc_id']: r for r in C.pii_scrub(spark, SF).collect()}
+  out = {r['doc_id']: r for r in C.pii_scrub(documents(spark, SF)).collect()}
   raw = {r['doc_id']: r['text']
          for r in spark.read.parquet(f'{SF}/documents.parquet').collect()}
   assert set(out) == set(raw)
@@ -54,8 +55,8 @@ def test_pii_scrub_matches_python_re(spark):
 
 
 def test_pii_scrub_plan_has_no_shuffle(spark):
-  plan = C.pii_scrub(spark, SF)._jdf.queryExecution().executedPlan() \
-      .toString()
+  plan = C.pii_scrub(documents(spark, SF))._jdf.queryExecution() \
+      .executedPlan().toString()
   body = plan.split('Sort', 1)[0]  # orderBy at the sink is fine
   assert 'Exchange' not in body
 
@@ -68,7 +69,7 @@ def _py_ngrams(text: str, n: int) -> set[str]:
 @pytest.mark.parametrize('n', [3, 8])
 def test_decontaminate_matches_python(spark, n):
   got = {r['doc_id']: r['n_shared']
-         for r in C.decontaminate(spark, SF, n=n).collect()}
+         for r in C.decontaminate(documents(spark, SF), n=n).collect()}
   docs = {r['doc_id']: r['text']
           for r in spark.read.parquet(f'{SF}/documents.parquet').collect()}
   ev = set()
@@ -87,7 +88,7 @@ def test_decontaminate_matches_python(spark, n):
 
 
 def test_decontaminate_broadcasts_eval_side(spark):
-  plan = C.decontaminate(spark, SF)._jdf.queryExecution() \
+  plan = C.decontaminate(documents(spark, SF))._jdf.queryExecution() \
       .executedPlan().toString()
   assert 'BroadcastHashJoin' in plan
   # allowed shuffles: the eval-side distinct (small, feeds the
@@ -104,7 +105,7 @@ def test_decontaminate_explicit_eval_table(spark):
   docs = spark.read.parquet(f'{SF}/documents.parquet')
   ev = docs.filter('doc_id % 10 = 0').select('text')
   got = {r['doc_id']: r['n_shared']
-         for r in C.decontaminate(spark, SF, n=8, eval_texts=ev)
+         for r in C.decontaminate(documents(spark, SF), n=8, eval_texts=ev)
          .collect()}
   raw = {r['doc_id']: r['text'] for r in docs.collect()}
   ev_grams = set()
@@ -169,7 +170,7 @@ def test_curation_pipeline_filtered_doc_cannot_bridge(spark, tmp_path):
   df.write.parquet(str(tmp_path / 'documents.parquet'))
 
   out = {r['doc_id']: r for r in
-         curation_pipeline(spark, str(tmp_path)).collect()}
+         curation_pipeline(documents(spark, str(tmp_path))).collect()}
   assert set(out) == {6, 9, 11}, sorted(out)
   for did in (6, 9, 11):
     assert out[did]['group_id'] == did
@@ -205,7 +206,7 @@ def test_curation_pipeline_keep_best_longest(spark, tmp_path):
   df.write.parquet(str(tmp_path / 'documents.parquet'))
 
   out = {r['doc_id']: r for r in
-         curation_pipeline(spark, str(tmp_path)).collect()}
+         curation_pipeline(documents(spark, str(tmp_path))).collect()}
   assert set(out) == {17, 30}, sorted(out)
   assert out[17]['group_size'] == 2
   assert out[17]['best_id'] == 19          # longest member, not id-min

@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import curation as C
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -64,7 +65,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql()).df()
-  got = C.decontaminate_spans(spark, sf).toPandas()
+  got = C.decontaminate_spans(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'clean_text', 'n_tokens',
                                'n_removed']
   assert len(got) == len(oracle)
@@ -88,7 +89,7 @@ def test_planted_contamination_surgical(spark, tmp_path):
             'n_chars long')
   df.write.parquet(str(tmp_path / 'documents.parquet'))
   out = {r['doc_id']: r for r in
-         C.decontaminate_spans(spark, str(tmp_path)).collect()}
+         C.decontaminate_spans(documents(spark, str(tmp_path))).collect()}
   assert set(out) == {1, 2, 3}
   assert out[1]['clean_text'] == 'xx yy zz ww'
   assert out[1]['n_removed'] == 8
@@ -100,7 +101,7 @@ def test_planted_contamination_surgical(spark, tmp_path):
 def test_explicit_eval_texts(spark):
   docs = spark.read.parquet(f'{SF1}/documents.parquet')
   ev = docs.where('doc_id % 10 = 0').select('text')
-  out = C.decontaminate_spans(spark, SF1, eval_texts=ev).toPandas()
+  out = C.decontaminate_spans(documents(spark, SF1), eval_texts=ev).toPandas()
   # all docs are train side in this shape; eval docs self-contaminate
   n_docs = docs.count()
   assert len(out) == n_docs
@@ -128,7 +129,7 @@ def test_min_run_tokens_threshold(spark, tmp_path):
             'n_chars long')
   df.write.parquet(str(tmp_path / 'documents.parquet'))
   out = {r['doc_id']: r for r in
-         C.decontaminate_spans(spark, str(tmp_path),
+         C.decontaminate_spans(documents(spark, str(tmp_path)),
                                min_run_tokens=10).collect()}
   # doc 1's 8-token covered run is UNDER the threshold -> kept whole
   assert out[1]['n_removed'] == 0
@@ -140,5 +141,5 @@ def test_min_run_tokens_threshold(spark, tmp_path):
   assert out[2]['clean_text'] == 'aa bb'
   # default (None) strips both, unchanged behavior
   out0 = {r['doc_id']: r for r in
-          C.decontaminate_spans(spark, str(tmp_path)).collect()}
+          C.decontaminate_spans(documents(spark, str(tmp_path))).collect()}
   assert out0[1]['n_removed'] == 8 and out0[2]['n_removed'] == 16

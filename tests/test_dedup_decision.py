@@ -10,8 +10,18 @@ from pyspark.sql import functions as F
 from blueprint_oss_spark.ops.textops import (
     dedup_decision_report, dedup_groups, simhash_near_dup_pairs,
 )
+from blueprint_oss_spark.ops.vectors import semantic_dedup
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
+
+
+def _report(spark, sf):
+  # the gate's composition: semantic verdicts over the planted
+  # verification universe
+  return dedup_decision_report(
+      documents(spark, sf),
+      semantic_dedup(spark, sf, plant_for_verification=True, sort=False))
 
 
 def _write_fixture(spark, tmp_path, docs):
@@ -39,7 +49,7 @@ def test_exact_branch_and_pinned_order(spark, tmp_path):
           (2, 'another unrelated text body nothing shared here today')]
   sf = _write_fixture(spark, tmp_path, docs)
   rows = {r['doc_id']: r for r in
-          dedup_decision_report(spark, sf).collect()
+          _report(spark, sf).collect()
           if r['planted'] == 0}
   assert rows[0]['exact_keep'] == 1 and rows[0]['keep_final'] == 1
   assert rows[5]['exact_keep'] == 0
@@ -50,9 +60,10 @@ def test_exact_branch_and_pinned_order(spark, tmp_path):
 
 
 def test_invariants_and_agreement_sf0001(spark):
-  rows = dedup_decision_report(spark, SF1).collect()
-  jac = {r['doc_id']: r for r in dedup_groups(spark, SF1).collect()}
-  sim_pairs = simhash_near_dup_pairs(spark, SF1).collect()
+  rows = _report(spark, SF1).collect()
+  jac = {r['doc_id']: r
+         for r in dedup_groups(documents(spark, SF1)).collect()}
+  sim_pairs = simhash_near_dup_pairs(documents(spark, SF1)).collect()
   sim_dropped = set()
   for p in sim_pairs:
     sim_dropped.add(max(p['doc_a'], p['doc_b']))

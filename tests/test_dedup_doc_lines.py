@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -71,7 +72,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(ORACLE).df()
-  got = (T.dedup_doc_lines(spark, sf).orderBy('doc_id')).toPandas()
+  got = (T.dedup_doc_lines(documents(spark, sf)).orderBy('doc_id')).toPandas()
   assert list(got.columns) == ['doc_id', 'n_lines', 'n_kept',
                                'n_removed', 'clean_text']
   for c in got.columns:
@@ -84,7 +85,7 @@ def test_matches_duckdb_oracle(spark, sf):
 def test_planted_in_doc_repeat_removed(spark):
   # doc_id % 3 == 0 plants the SAME boilerplate at j = 0 and j = 3,
   # so every such doc with >= 4 lines must lose at least one line
-  got = (T.dedup_doc_lines(spark, SF1)
+  got = (T.dedup_doc_lines(documents(spark, SF1))
          .where((F.col('doc_id') % 3 == 0) & (F.col('n_lines') >= 4))
          .toPandas())
   assert len(got) > 0
@@ -98,7 +99,7 @@ def test_first_occurrence_survives_in_order(spark):
   # doc 1: lines j=0..3; plants at (5 + j) % 3 == 0 -> j = 1 only.
   # natural lines: j0 = 'a b c d e f', j2 = 'x y z p q r',
   # j3 = 'a b c d e f' (repeat of j0 -> removed)
-  row = T.dedup_doc_lines(spark, SF1, docs=docs).collect()[0]
+  row = T.dedup_doc_lines(docs).collect()[0]
   assert row.n_lines == 4 and row.n_kept == 3 and row.n_removed == 1
   lines = row.clean_text.split('\n')
   assert lines[0] == 'a b c d e f'
@@ -115,7 +116,7 @@ def test_cross_document_duplicates_survive(spark):
   docs = spark.createDataFrame(
       [(1, 'q w e r t y'), (2, 'q w e r t y')],
       'doc_id long, text string')
-  got = T.dedup_doc_lines(spark, SF1, docs=docs).toPandas()
+  got = T.dedup_doc_lines(docs).toPandas()
   assert (got.n_removed == 0).all()
   assert (got.clean_text == 'q w e r t y').all()
 
@@ -124,7 +125,7 @@ def test_empty_and_whitespace_docs(spark):
   docs = spark.createDataFrame(
       [(1, ''), (2, '   '), (4, 'a  b   c  d  e  f')],
       'doc_id long, text string')
-  got = (T.dedup_doc_lines(spark, SF1, docs=docs)
+  got = (T.dedup_doc_lines(docs)
          .orderBy('doc_id').toPandas())
   assert got.n_lines.tolist()[:2] == [0, 0]
   assert got.clean_text.tolist()[:2] == ['', '']
@@ -134,7 +135,7 @@ def test_empty_and_whitespace_docs(spark):
 
 
 def test_plan_is_one_shuffle_free_scan(spark):
-  plan = (T.dedup_doc_lines(spark, SF1)
+  plan = (T.dedup_doc_lines(documents(spark, SF1))
           ._jdf.queryExecution().executedPlan().toString())
   assert 'Exchange' not in plan
   assert 'ArrowEvalPython' not in plan and 'BatchEvalPython' not in plan
@@ -142,4 +143,4 @@ def test_plan_is_one_shuffle_free_scan(spark):
 
 def test_words_per_line_must_be_positive(spark):
   with pytest.raises(ValueError):
-    T.dedup_doc_lines(spark, SF1, words_per_line=0)
+    T.dedup_doc_lines(documents(spark, SF1), words_per_line=0)

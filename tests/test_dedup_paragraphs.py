@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -66,7 +67,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(ORACLE).df()
-  got = T.dedup_paragraphs(spark, sf).toPandas()
+  got = T.dedup_paragraphs(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'n_paras', 'n_kept',
                                'n_removed', 'clean_text']
   for c in got.columns:
@@ -86,7 +87,7 @@ def test_canonical_first_occurrence_wins(spark):
   docs = spark.createDataFrame(
       [(101, text), (110, text)], 'doc_id long, text string')
   out = {r['doc_id']: r for r in
-         T.dedup_paragraphs(spark, '', docs=docs).collect()}
+         T.dedup_paragraphs(docs).collect()}
   assert out[101]['n_kept'] == out[101]['n_paras'] == 3
   assert out[101]['n_removed'] == 0
   assert out[110]['n_kept'] == 0
@@ -95,7 +96,7 @@ def test_canonical_first_occurrence_wins(spark):
 
 
 def test_counts_reconcile_and_kept_paragraph_count(spark):
-  got = T.dedup_paragraphs(spark, SF1).toPandas()
+  got = T.dedup_paragraphs(documents(spark, SF1)).toPandas()
   assert (got.n_kept + got.n_removed == got.n_paras).all()
   n_text_paras = got.clean_text.map(
       lambda t: len(t.split('\n')) if t else 0)
@@ -103,7 +104,7 @@ def test_counts_reconcile_and_kept_paragraph_count(spark):
 
 
 def test_boilerplate_kept_exactly_once_corpuswide(spark):
-  got = T.dedup_paragraphs(spark, SF1).toPandas()
+  got = T.dedup_paragraphs(documents(spark, SF1)).toPandas()
   all_kept = [p for t in got.clean_text for p in (t.split('\n') if t
                                                   else [])]
   for b in T.BOILERPLATE_PARAS:

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import curation as C
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -53,8 +54,8 @@ FROM k GROUP BY domain ORDER BY domain
                                          (SF2, 1, 2, 2)])
 def test_matches_duckdb_from_scratch(spark, sf, kn, kd, md):
   got = [tuple(r) for r in
-         C.domain_quality_rollup(spark, sf, keep_num=kn, keep_den=kd,
-                                 min_docs=md).collect()]
+         C.domain_quality_rollup(documents(spark, sf), keep_num=kn,
+                                 keep_den=kd, min_docs=md).collect()]
   exp = duckdb.sql(_ORACLE.format(sf=sf, kn=kn, kd=kd, md=md)).fetchall()
   assert got == exp
   if sf == SF2 and kn == kd:
@@ -64,11 +65,11 @@ def test_matches_duckdb_from_scratch(spark, sf, kn, kd, md):
 
 
 def test_urls_seam(spark):
-  docs = spark.read.parquet(f'{SF1}/documents.parquet')
+  docs = documents(spark, SF1)
   urls = docs.select('doc_id',
                      (F.col('doc_id') % 3).cast('string').alias('domain'))
   got = {r['domain']: r['n_docs'] for r in
-         C.domain_quality_rollup(spark, SF1, urls=urls).collect()}
+         C.domain_quality_rollup(docs, urls=urls).collect()}
   total = docs.count()
   assert sum(got.values()) == total
   assert set(got) == {'0', '1', '2'}
@@ -81,20 +82,20 @@ def test_verdict_edge_is_cross_multiplied(spark):
           (2, 'zz9 !!! ### $$$ %%% ^^^')]  # fail (alpha ratio)
   d = spark.createDataFrame(rows, 'doc_id long, text string')
   u = d.select('doc_id', F.lit('only.com').alias('domain'))
-  out = C.domain_quality_rollup(spark, SF1, docs=d, urls=u,
-                                keep_num=2, keep_den=3).collect()
+  out = C.domain_quality_rollup(d, urls=u, keep_num=2,
+                                keep_den=3).collect()
   assert len(out) == 1 and out[0]['n_keep'] == 2
   assert out[0]['domain_keep'] == 1
-  out2 = C.domain_quality_rollup(spark, SF1, docs=d, urls=u,
-                                 keep_num=3, keep_den=4).collect()
+  out2 = C.domain_quality_rollup(d, urls=u, keep_num=3,
+                                 keep_den=4).collect()
   assert out2[0]['domain_keep'] == 0
 
 
 def test_seam_plan_no_window_no_smj(spark):
-  docs = spark.read.parquet(f'{SF1}/documents.parquet')
+  docs = documents(spark, SF1)
   urls = docs.select('doc_id',
                      (F.col('doc_id') % 5).cast('string').alias('domain'))
-  plan = C.domain_quality_rollup(spark, SF1, urls=urls) \
+  plan = C.domain_quality_rollup(docs, urls=urls) \
       ._jdf.queryExecution().executedPlan().toString()
   assert 'Window' not in plan
   assert 'SortMergeJoin' not in plan  # AQE broadcasts the URL side
@@ -110,4 +111,4 @@ def test_duplicate_doc_id_in_urls_raises(spark):
       [(0, 'a.com'), (0, 'b.com'), (1, 'c.com')],
       'doc_id long, domain string')
   with pytest.raises(Exception, match='duplicate doc_id'):
-    C.domain_quality_rollup(spark, SF1, docs=d, urls=u).collect()
+    C.domain_quality_rollup(d, urls=u).collect()

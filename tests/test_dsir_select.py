@@ -5,6 +5,7 @@ sequential python recomputation at sf0.001, and the plan shape."""
 from collections import Counter
 
 import pytest
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _h(s, m=64):
@@ -57,7 +58,7 @@ def test_planted_target_vocabulary(spark, tmp_path):
   _write(spark, tmp_path, docs)
   from blueprint_oss_spark.ops.curation import dsir_importance_select
   got = [tuple(r) for r in
-         dsir_importance_select(spark, str(tmp_path)).collect()]
+         dsir_importance_select(documents(spark, str(tmp_path))).collect()]
   assert got == _ref(docs, {d for d, l, _ in docs if l == 'en'})
   assert all(sel == 1 for d, l, nf, sc, sel in got if l == 'en')
   assert all(sel == 0 for d, l, nf, sc, sel in got if l == 'de')
@@ -68,7 +69,7 @@ def test_empty_and_single_token_docs(spark, tmp_path):
   _write(spark, tmp_path, docs)
   from blueprint_oss_spark.ops.curation import dsir_importance_select
   got = [tuple(r) for r in
-         dsir_importance_select(spark, str(tmp_path)).collect()]
+         dsir_importance_select(documents(spark, str(tmp_path))).collect()]
   assert got == _ref(docs, {0, 1})
   assert got[0] == (0, 'en', 0, 0, 0)  # no features -> neutral
   assert got[1][2] == 1                # unigram only, no bigram
@@ -83,7 +84,7 @@ def test_target_docs_seam(spark, tmp_path):
   target = spark.createDataFrame([('alpha beta alpha beta',)],
                                  'text string')
   got = {r.doc_id: r for r in
-         dsir_importance_select(spark, str(tmp_path),
+         dsir_importance_select(documents(spark, str(tmp_path)),
                                 target_docs=target).collect()}
   # doc 0 shares the target's vocabulary, doc 1 shares nothing
   assert got[0].selected == 1 and got[0].score > 0
@@ -110,7 +111,7 @@ def test_sf0001_matches_python(spark):
   ).fetchall()
   from blueprint_oss_spark.ops.curation import dsir_importance_select
   got = [tuple(r) for r in
-         dsir_importance_select(spark, '/root/testdata/sf0.001')
+         dsir_importance_select(documents(spark, '/root/testdata/sf0.001'))
          .collect()]
   assert got == _ref(docs, {d for d, l, _ in docs if l == 'en'})
   # the selection must actually lean toward the target language
@@ -126,7 +127,7 @@ def test_sf0001_matches_python(spark):
 
 def test_plan_shape(spark):
   from blueprint_oss_spark.ops.curation import dsir_importance_select
-  df = dsir_importance_select(spark, '/root/testdata/sf0.001')
+  df = dsir_importance_select(documents(spark, '/root/testdata/sf0.001'))
   plan = df._jdf.queryExecution().executedPlan().toString()
   assert 'Python' not in plan
   # the m-row weight table broadcasts onto the per-doc bucket counts

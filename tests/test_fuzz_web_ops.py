@@ -89,7 +89,7 @@ def test_fuzz_robots_parse_verdicts_delays(spark):
   texts = {d: _gen_robots(rng) for d in doms}
   robots = spark.createDataFrame(list(texts.items()),
                                  'domain string, robots_txt string')
-  parsed = parse_robots(spark, robots=robots)
+  parsed = parse_robots(robots)
 
   # 1. parse parity, every row
   got_rows = {}
@@ -109,8 +109,8 @@ def test_fuzz_robots_parse_verdicts_delays(spark):
                                'doc_id long, norm_url string, '
                                'domain string')
   out = {r['doc_id']: (r['robots_blocked'], r['robots_rule'])
-         for r in robots_verdicts(spark, '', agent='mybot', urls=udf_,
-                                  rules=parsed).collect()}
+         for r in robots_verdicts(udf_, parsed,
+                                  agent='mybot').collect()}
   hit = 0
   for i, _, d, path in urls:
     expect = _py_verdict(path, _py_parse(texts[d]), 'mybot')
@@ -121,11 +121,9 @@ def test_fuzz_robots_parse_verdicts_delays(spark):
   # 3. delay parity (fallback preference + malformed filtering)
   sched = {r['domain']: r['crawl_delay']
            for r in crawl_schedule(
-               spark, '', agent='mybot', default_delay=9,
-               urls=spark.createDataFrame([(i, d) for i, d
-                                           in enumerate(doms)],
-                                          'doc_id long, domain string'),
-               rules=parsed).collect()}
+               spark.createDataFrame(list(enumerate(doms)),
+                                     'doc_id long, domain string'),
+               parsed, agent='mybot', default_delay=9).collect()}
   for d in doms:
     assert sched[d] == _py_delay(_py_parse(texts[d]), 'mybot', 9), d
 

@@ -7,6 +7,7 @@ star with a high id at the center, disjoint cliques, and random graphs.
 import random
 
 from pyspark.sql import functions as F
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _uf_components(edges):
@@ -84,7 +85,7 @@ def test_dedup_groups_partitions_docs(spark):
   # is the min doc_id of its group, keeper iff doc_id == group_id, and
   # group sizes sum to the doc count
   from blueprint_oss_spark.ops.textops import dedup_groups
-  out = dedup_groups(spark, '/root/testdata/sf0.001').collect()
+  out = dedup_groups(documents(spark, '/root/testdata/sf0.001')).collect()
   docs = [r['doc_id'] for r in out]
   assert len(docs) == len(set(docs))
   by_group = {}
@@ -111,7 +112,7 @@ def test_dedup_groups_minhash_edges_match_jaccard(spark):
   sf = '/root/testdata/sf0.01'
   by_source = {}
   for source in ('minhash', 'jaccard'):
-    rows = dedup_groups(spark, sf, edge_source=source).collect()
+    rows = dedup_groups(documents(spark, sf), edge_source=source).collect()
     by_source[source] = sorted(
         (r['doc_id'], r['group_id'], r['group_size'], r['is_keeper'])
         for r in rows)
@@ -139,13 +140,14 @@ def test_minhash_max_bucket_size_caps_hub_buckets(spark, tmp_path):
       .write.parquet(str(tmp_path / 'documents.parquet'))
 
   uncapped = {(r['doc_a'], r['doc_b'])
-              for r in minhash_shingles(spark, str(tmp_path)).collect()}
+              for r in minhash_shingles(
+                  documents(spark, str(tmp_path))).collect()}
   assert (100, 101) in uncapped
   assert len(uncapped) == 30 * 29 // 2 + 1
 
   capped = {(r['doc_a'], r['doc_b'])
-            for r in minhash_shingles(
-                spark, str(tmp_path), max_bucket_size=10).collect()}
+            for r in minhash_shingles(documents(spark, str(tmp_path)),
+                                      max_bucket_size=10).collect()}
   assert capped == {(100, 101)}
 
 
@@ -158,18 +160,19 @@ def test_dedup_groups_precomputed_edges_match(spark):
   )
 
   sf = '/root/testdata/sf0.001'
-  edges = minhash_shingles(spark, sf)
+  edges = minhash_shingles(documents(spark, sf))
   via_seam = sorted(
       (r['doc_id'], r['group_id'], r['group_size'], r['is_keeper'])
-      for r in dedup_groups(spark, sf, edges=edges).collect())
+      for r in dedup_groups(documents(spark, sf), edges=edges).collect())
   recomputed = sorted(
       (r['doc_id'], r['group_id'], r['group_size'], r['is_keeper'])
-      for r in dedup_groups(spark, sf, edge_source='minhash').collect())
+      for r in dedup_groups(documents(spark, sf),
+                            edge_source='minhash').collect())
   assert via_seam == recomputed
 
 
 def test_dedup_groups_minhash_respects_docs_seam(spark, tmp_path):
-  """edge_source='minhash' must find candidate pairs among the docs=
+  """edge_source='minhash' must find candidate pairs among the docs
   frame only — the same sequential-semantics guarantee the jaccard
   path got in round 3 (a filtered-out doc must not bridge groups)."""
   from blueprint_oss_spark.ops.textops import dedup_groups
@@ -190,8 +193,7 @@ def test_dedup_groups_minhash_respects_docs_seam(spark, tmp_path):
   subset = all_docs.where('doc_id != 1')
 
   got = {r['doc_id']: r['group_id'] for r in dedup_groups(
-      spark, str(tmp_path), edge_source='minhash',
-      docs=subset).collect()}
+      subset, edge_source='minhash').collect()}
   # doc 1 excluded: not in output, and 2/3 group together WITHOUT it
   assert 1 not in got
   assert got[2] == 2 and got[3] == 2 and got[9] == 9

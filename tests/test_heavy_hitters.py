@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -40,7 +41,7 @@ def _oracle(sf, phi_num=1, phi_den=29):
 @pytest.mark.parametrize('sf', [SF1, SF2])
 def test_matches_duckdb_exactly(spark, sf):
   got = [(r['term'], r['count'], r['n_total'])
-         for r in T.heavy_hitters(spark, sf).collect()]
+         for r in T.heavy_hitters(documents(spark, sf)).collect()]
   exp = _oracle(sf)
   assert got == exp
   assert 0 < len(got) < 31  # φ=1/29 splits the vocabulary
@@ -48,11 +49,11 @@ def test_matches_duckdb_exactly(spark, sf):
 
 def test_output_invariant_under_partitioning(spark):
   base = [(r['term'], r['count'])
-          for r in T.heavy_hitters(spark, SF2).collect()]
+          for r in T.heavy_hitters(documents(spark, SF2)).collect()]
   docs = spark.read.parquet(f'{SF2}/documents.parquet') \
       .repartition(64)  # many tiny batches -> different candidate set
   re = [(r['term'], r['count'])
-        for r in T.heavy_hitters(spark, SF2, docs=docs).collect()]
+        for r in T.heavy_hitters(docs).collect()]
   assert re == base
 
 
@@ -64,12 +65,10 @@ def test_thin_spread_hot_term_is_never_missed(spark):
   docs = spark.createDataFrame(rows, 'doc_id long, text string') \
       .repartition(32)
   heavy = {r['term'] for r in
-           T.heavy_hitters(spark, '', docs=docs, phi_num=1,
-                           phi_den=11).collect()}
+           T.heavy_hitters(docs, phi_num=1, phi_den=11).collect()}
   assert 'hot' in heavy and len(heavy) == 1
   not_heavy = {r['term'] for r in
-               T.heavy_hitters(spark, '', docs=docs, phi_num=1,
-                               phi_den=5).collect()}
+               T.heavy_hitters(docs, phi_num=1, phi_den=5).collect()}
   assert not_heavy == set()
 
 
@@ -78,8 +77,7 @@ def test_threshold_is_inclusive_cross_multiplied(spark):
   docs = spark.createDataFrame([(0, 'a a b c')],
                                'doc_id long, text string')
   got = {r['term']: r['count'] for r in
-         T.heavy_hitters(spark, '', docs=docs, phi_num=1,
-                         phi_den=2).collect()}
+         T.heavy_hitters(docs, phi_num=1, phi_den=2).collect()}
   assert got == {'a': 2}
 
 
@@ -98,13 +96,12 @@ def test_words_keep_non_space_whitespace_and_skip_null_text(spark,
   docs = spark.read.parquet(str(tmp_path / 'documents.parquet')) \
       .repartition(3)
   got = [(r['term'], r['count'], r['n_total']) for r in
-         T.heavy_hitters(spark, '', docs=docs, phi_num=1,
-                         phi_den=5).collect()]
+         T.heavy_hitters(docs, phi_num=1, phi_den=5).collect()]
   assert got == _oracle(str(tmp_path), 1, 5)
   assert got == [('a\nb', 8, 32), ('d\te', 8, 32), ('g\xa0h', 8, 32)]
 
 
 def test_verify_pass_is_candidate_broadcast(spark):
-  plan = T.heavy_hitters(spark, SF1)._jdf.queryExecution() \
+  plan = T.heavy_hitters(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   assert 'BroadcastHashJoin' in plan

@@ -1,13 +1,15 @@
 """incremental_dedup: new-batch-vs-corpus dedup verdicts cross-checked
 against a sequential pure-Python recomputation (hash set + exact
 shingle-Jaccard scan), plus hand-built verdict/tie-break cases via the
-batch=/corpus= seams and the max_shingle_df corpus posting-list cap."""
+batch/corpus frames and the max_shingle_df corpus posting-list cap."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from blueprint_oss_spark.ops.textops import incremental_dedup
+from blueprint_oss_spark.ops.textops import (increment_split,
+                                             incremental_dedup)
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.001'
 
@@ -45,12 +47,12 @@ def _ref(batch, corpus, *, threshold=0.5, k=3):
 
 
 def test_matches_sequential_python(spark):
-  rows = spark.read.parquet(f'{SF}/documents.parquet') \
-      .select('doc_id', 'text').collect()
+  rows = documents(spark, SF).select('doc_id', 'text').collect()
   batch = [(r['doc_id'], r['text']) for r in rows if r['doc_id'] % 10 == 0]
   corpus = [(r['doc_id'], r['text']) for r in rows if r['doc_id'] % 10 != 0]
   exp = _ref(batch, corpus)
-  out = incremental_dedup(spark, SF).collect()
+  out = incremental_dedup(
+      *increment_split(documents(spark, SF))).collect()
   assert len(out) == len(exp) == len(batch)
   assert {r['verdict'] for r in out} >= {'near', 'new'}  # real signal
   for r in out:
@@ -75,8 +77,7 @@ def test_verdicts_and_tie_break(spark):
   b = spark.createDataFrame(batch, 'doc_id long, text string')
   c = spark.createDataFrame(corpus, 'doc_id long, text string')
   out = {r['doc_id']: r for r in
-         incremental_dedup(spark, SF, batch=b, corpus=c,
-                           threshold=0.3).collect()}
+         incremental_dedup(b, c, threshold=0.3).collect()}
   assert (out[1]['verdict'], out[1]['match_id']) == ('exact', 50)
   assert (out[2]['verdict'], out[2]['match_id']) == ('near', 200)
   exp = _ref(batch, corpus, threshold=0.3)
@@ -97,10 +98,9 @@ def test_max_shingle_df_caps_hot_postings(spark):
   b = spark.createDataFrame(batch, 'doc_id long, text string')
   c = spark.createDataFrame(corpus, 'doc_id long, text string')
   exact = {r['doc_id']: r for r in incremental_dedup(
-      spark, SF, batch=b, corpus=c, threshold=0.3).collect()}
+      b, c, threshold=0.3).collect()}
   capped = {r['doc_id']: r for r in incremental_dedup(
-      spark, SF, batch=b, corpus=c, threshold=0.3,
-      max_shingle_df=5).collect()}
+      b, c, threshold=0.3, max_shingle_df=5).collect()}
   assert exact[1]['verdict'] == 'near' and exact[1]['match_id'] == 7
   assert capped[1]['verdict'] == 'near' and capped[1]['match_id'] == 7
   assert capped[1]['jac_r'] <= exact[1]['jac_r']  # undercount only
@@ -108,12 +108,11 @@ def test_max_shingle_df_caps_hot_postings(spark):
 
 def test_seam_validation_and_plan_shape(spark):
   import pytest
-  with pytest.raises(ValueError):
-    incremental_dedup(spark, SF, batch=None,
-                      corpus=spark.range(1).selectExpr(
-                          'id AS doc_id', "'x' AS text"))
+  batch, corpus = increment_split(documents(spark, SF))
+  with pytest.raises(TypeError):  # the corpus is not optional
+    incremental_dedup(batch)
   # scale pin: no cartesian product anywhere; every join is keyed
-  plan = incremental_dedup(spark, SF)._jdf.queryExecution() \
+  plan = incremental_dedup(batch, corpus)._jdf.queryExecution() \
       .executedPlan().toString()
   assert 'CartesianProduct' not in plan
   assert 'BroadcastNestedLoopJoin' not in plan
@@ -148,8 +147,7 @@ def test_fuzz_corpus_vs_sequential(spark):
   corpus = [(i, t) for i, t in rows if i % 4 != 0]
   b = spark.createDataFrame(batch, 'doc_id long, text string')
   c = spark.createDataFrame(corpus, 'doc_id long, text string')
-  out = incremental_dedup(spark, SF, batch=b, corpus=c,
-                          threshold=0.4).collect()
+  out = incremental_dedup(b, c, threshold=0.4).collect()
   exp = _ref(batch, corpus, threshold=0.4)
   assert len(out) == len(batch)
   for r in out:

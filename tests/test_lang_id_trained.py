@@ -9,6 +9,7 @@ from decimal import ROUND_HALF_UP, Decimal
 from blueprint_oss_spark.ops.textops import (
     LANGID_LANGS, LANGID_POOLS, lang_id_trained,
 )
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 
@@ -72,12 +73,12 @@ def test_matches_sequential_replica_bit_exact(spark):
   import duckdb
   ids = [r[0] for r in duckdb.sql(
       f"SELECT doc_id FROM '{SF1}/documents.parquet'").fetchall()]
-  got = [tuple(r) for r in lang_id_trained(spark, SF1).collect()]
+  got = [tuple(r) for r in lang_id_trained(documents(spark, SF1)).collect()]
   assert got == _replica(ids)
 
 
 def test_heldout_accuracy_and_both_splits(spark):
-  rows = lang_id_trained(spark, SF1).collect()
+  rows = lang_id_trained(documents(spark, SF1)).collect()
   ev = [r for r in rows if r['lid_is_eval'] == 1]
   tr = [r for r in rows if r['lid_is_eval'] == 0]
   assert ev and tr
@@ -89,20 +90,20 @@ def test_heldout_accuracy_and_both_splits(spark):
 
 
 def test_posteriors_normalized(spark):
-  for r in lang_id_trained(spark, SF1).collect():
+  for r in lang_id_trained(documents(spark, SF1)).collect():
     tot = r['q_de'] + r['q_en'] + r['q_es'] + r['q_fr']
     assert abs(tot - 1.0) < 1e-4  # rounded to 6dp, 4 terms
 
 
 def test_docs_seam_and_eval_mod(spark):
   d = spark.range(40).withColumnRenamed('id', 'doc_id')
-  rows = lang_id_trained(spark, SF1, docs=d, eval_mod=4).collect()
+  rows = lang_id_trained(d, eval_mod=4).collect()
   assert len(rows) == 40
   assert sum(r['lid_is_eval'] for r in rows) == 10
 
 
 def test_plan_shape(spark):
-  plan = lang_id_trained(spark, SF1) \
+  plan = lang_id_trained(documents(spark, SF1)) \
       ._jdf.queryExecution().executedPlan().toString()
   assert 'Python' not in plan
   assert 'BroadcastHashJoin' in plan   # model join is broadcast

@@ -2,7 +2,7 @@
 (md5 shard, edge-inclusive bucket rule, (n_tokens, doc_id) fill order,
 per-batch max/waste) at two scales; padding-accounting invariants;
 ascending-fill beats a shuffled fill on waste (the reason for the
-sort); partial trailing batches; docs= seam; two-window plan shape.
+sort); partial trailing batches; handed-in docs frames; two-window plan shape.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -53,13 +54,13 @@ ORDER BY shard, bucket, batch_id, pos_in_batch
 @pytest.mark.parametrize('sf', [SF1, SF2])
 def test_matches_duckdb_from_scratch(spark, sf):
   got = [tuple(r) for r in
-         T.length_bucket_batches(spark, sf).collect()]
+         T.length_bucket_batches(documents(spark, sf)).collect()]
   exp = duckdb.sql(_ORACLE.format(sf=sf, ns=8, bs=8)).fetchall()
   assert got == exp
 
 
 def test_accounting_invariants(spark):
-  rows = T.length_bucket_batches(spark, SF1).collect()
+  rows = T.length_bucket_batches(documents(spark, SF1)).collect()
   assert sum(1 for _ in rows) == 500
   by_batch = {}
   for r in rows:
@@ -119,8 +120,7 @@ def test_docs_seam_and_plan(spark):
   d = spark.createDataFrame(
       [(i, ' '.join(['w'] * (5 + i))) for i in range(40)],
       'doc_id long, text string')
-  out = T.length_bucket_batches(spark, SF1, docs=d, n_shards=2,
-                                batch_size=4)
+  out = T.length_bucket_batches(d, n_shards=2, batch_size=4)
   rows = out.collect()
   assert len(rows) == 40
   plan = out._jdf.queryExecution().executedPlan().toString()

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -50,7 +51,7 @@ def _py_labels(rows, threshold):
 @pytest.mark.parametrize('sf,threshold', [(SF1, FULL), (SF1, HALF),
                                           (SF2, HALF)])
 def test_matches_python_recomputation(spark, sf, threshold):
-  got = T.lm_buckets(spark, sf, threshold=threshold).collect()
+  got = T.lm_buckets(documents(spark, sf), threshold=threshold).collect()
   exp = _py_labels([(r['doc_id'], r['lang'], r['lm_score'])
                     for r in got], threshold)
   assert len(got) == spark.read.parquet(f'{sf}/documents.parquet') \
@@ -61,7 +62,7 @@ def test_matches_python_recomputation(spark, sf, threshold):
 
 
 def test_terciles_are_balanced_and_ordered(spark):
-  out = T.lm_buckets(spark, SF2, threshold=FULL).toPandas()
+  out = T.lm_buckets(documents(spark, SF2), threshold=FULL).toPandas()
   for lang, g in out.groupby('lang'):
     counts = g['lm_bucket'].value_counts()
     n = len(g)
@@ -81,23 +82,23 @@ def test_terciles_are_balanced_and_ordered(spark):
 
 
 def test_lang_absent_from_sample_gets_null(spark):
-  out = T.lm_buckets(spark, SF1, threshold='0' * 32).toPandas()
+  out = T.lm_buckets(documents(spark, SF1), threshold='0' * 32).toPandas()
   assert len(out) > 0
   assert out['lm_bucket'].isna().all()
   assert out['lm_t_lo'].isna().all()
 
 
 def test_stable_under_repartition(spark):
-  base = T.lm_buckets(spark, SF1).toPandas()
+  base = T.lm_buckets(documents(spark, SF1)).toPandas()
   docs = spark.read.parquet(f'{SF1}/documents.parquet') \
       .repartition(13, 'doc_id')
-  re = T.lm_buckets(spark, SF1, docs=docs).toPandas() \
+  re = T.lm_buckets(docs).toPandas() \
       .sort_values('doc_id').reset_index(drop=True)
   assert re.equals(base.sort_values('doc_id').reset_index(drop=True))
 
 
 def test_cut_points_ride_a_broadcast(spark):
-  plan = T.lm_buckets(spark, SF1)._jdf.queryExecution() \
+  plan = T.lm_buckets(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   assert 'BroadcastHashJoin' in plan
   # assignment adds no window / global sort over the corpus

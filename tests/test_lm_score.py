@@ -6,6 +6,7 @@ train_docs seam and short-doc edges."""
 from __future__ import annotations
 
 from blueprint_oss_spark.ops.textops import lm_score
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.001'
 
@@ -42,7 +43,7 @@ def test_matches_sequential_python(spark):
           spark.read.parquet(f'{SF}/documents.parquet')
           .select('doc_id', 'text').collect()]
   exp = _ref(docs, docs)
-  out = lm_score(spark, SF).collect()
+  out = lm_score(documents(spark, SF)).collect()
   assert len(out) == len(exp)
   for r in out:
     n, score = exp[r['doc_id']]
@@ -63,7 +64,7 @@ def test_train_seam_and_oov(spark):
        (3, 'a')],          # single token: p0 only
       'doc_id long, text string')
   out = {r['doc_id']: r for r in
-         lm_score(spark, SF, docs=score, train_docs=train).collect()}
+         lm_score(score, train_docs=train).collect()}
   # model: uni a=2 b=2 c=1 (V=3, T=5); bi 'a b'=2 'b a'=1 'b c'=1
   p1 = ((2 + 1) / (5 + 3) + (2 + 1) / (2 + 3) + (1 + 1) / (2 + 3)) / 3
   p2 = ((0 + 1) / (5 + 3) + (0 + 1) / (0 + 3)) / 2
@@ -78,8 +79,8 @@ def test_train_seam_and_oov(spark):
 def test_tokenless_docs_absent_and_no_cartesian(spark):
   d = spark.createDataFrame(
       [(1, 'a b'), (2, ''), (3, '   ')], 'doc_id long, text string')
-  out = lm_score(spark, SF, docs=d, train_docs=d).collect()
+  out = lm_score(d, train_docs=d).collect()
   assert [r['doc_id'] for r in out] == [1]
-  plan = lm_score(spark, SF)._jdf.queryExecution() \
+  plan = lm_score(documents(spark, SF))._jdf.queryExecution() \
       .executedPlan().toString()
   assert 'CartesianProduct' not in plan

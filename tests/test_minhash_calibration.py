@@ -16,6 +16,7 @@ from tests.conftest import REPO_ROOT
 sys.path.insert(0, str(REPO_ROOT / 'scripts'))
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 
@@ -57,7 +58,7 @@ def test_full_python_recomputation(spark):
   docs = pq.read_table(f'{SF1}/documents.parquet') \
       .select(['doc_id', 'text']).to_pandas()
   expect = _python_calibration(dict(zip(docs.doc_id, docs.text)))
-  got = T.minhash_calibration(spark, SF1).toPandas()
+  got = T.minhash_calibration(documents(spark, SF1)).toPandas()
   assert len(got) == len(expect) > 0
   for r in got.itertuples():
     assert expect[(r.doc_a, r.doc_b)] == (r.est_match, r.inter, r.uni), \
@@ -70,7 +71,7 @@ def test_exact_dup_pair_is_perfectly_calibrated(spark):
       [(1, base), (2, base), (3, 'completely different words here '
                                  'about nothing shared at all ' * 3)],
       'doc_id long, text string')
-  got = T.minhash_calibration(spark, SF1, docs=docs).toPandas()
+  got = T.minhash_calibration(docs).toPandas()
   dup = got[(got.doc_a == 1) & (got.doc_b == 2)]
   assert len(dup) == 1
   r = dup.iloc[0]
@@ -78,8 +79,8 @@ def test_exact_dup_pair_is_perfectly_calibrated(spark):
 
 
 def test_estimator_bounds_and_pair_set_matches_lsh(spark):
-  got = T.minhash_calibration(spark, SF1).toPandas()
-  pairs = T.minhash_shingles(spark, SF1).toPandas()
+  got = T.minhash_calibration(documents(spark, SF1)).toPandas()
+  pairs = T.minhash_shingles(documents(spark, SF1)).toPandas()
   assert list(zip(got.doc_a, got.doc_b)) \
       == list(zip(pairs.doc_a, pairs.doc_b))
   assert ((got.est_match >= 0) & (got.est_match <= 16)).all()
@@ -90,6 +91,6 @@ def test_estimator_bounds_and_pair_set_matches_lsh(spark):
 
 
 def test_corpus_side_never_sort_merge_joins(spark):
-  plan = (T.minhash_calibration(spark, SF1)
+  plan = (T.minhash_calibration(documents(spark, SF1))
           ._jdf.queryExecution().executedPlan().toString())
   assert 'SortMergeJoin' not in plan

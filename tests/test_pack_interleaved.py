@@ -4,7 +4,7 @@ tokens, media = fixed budget) over the north-rule main-content output.
 
 Verification: full python recomputation of shards, running offsets and
 chunk spans from the collected span sequences; media-straddle
-accounting; interleave preservation; the spans= seam with overridden
+accounting; interleave preservation; hand-built spans with overridden
 costs; single-window plan pin.
 """
 
@@ -20,6 +20,11 @@ from blueprint_oss_spark.ops.html_extract import (interleaved_html_table,
                                                   main_content_from_spans)
 
 SF1 = '/root/testdata/sf0.001'
+
+
+def _gate_packed(spark):
+  return T.pack_interleaved_sequences(
+      main_content_from_spans(interleaved_html_table(spark, SF1)))
 
 
 def _shard(doc_id: str, shards: int = 8) -> int:
@@ -52,7 +57,7 @@ def test_matches_python_recomputation(spark):
                 s['media_ref'])
                for r in mc.collect() for s in r['out_spans']]
   exp = _py_pack(span_rows)
-  got = T.pack_interleaved_sequences(spark, SF1).collect()
+  got = _gate_packed(spark).collect()
   assert len(got) == len(exp)
   for r in got:
     n, sh, before, cf, cl = exp[(r['doc_id'], r['order'])]
@@ -62,7 +67,7 @@ def test_matches_python_recomputation(spark):
 
 
 def test_media_straddle_is_accounted(spark):
-  out = T.pack_interleaved_sequences(spark, SF1).toPandas()
+  out = _gate_packed(spark).toPandas()
   media = out[out['kind'] == 'media']
   assert (media['n_tokens'] == 64).all()
   straddling = media[media['n_chunks'] > 1]
@@ -75,7 +80,7 @@ def test_media_straddle_is_accounted(spark):
 
 
 def test_interleave_preserved_per_doc(spark):
-  out = T.pack_interleaved_sequences(spark, SF1).toPandas()
+  out = _gate_packed(spark).toPandas()
   for did, g in out.groupby('doc_id'):
     g = g.sort_values('order')
     assert list(g['order']) == list(range(len(g)))
@@ -104,8 +109,7 @@ def test_spans_seam_and_cost_overrides(spark):
   df = spark.createDataFrame(rows, schema)
   out = {r['order']: r for r in
          T.pack_interleaved_sequences(
-             spark, '', spans=df, max_tokens=4,
-             media_token_cost=3).collect()}
+             df, max_tokens=4, media_token_cost=3).collect()}
   assert out[0]['n_tokens'] == 3 and out[0]['chunk_first'] == 0
   assert out[1]['n_tokens'] == 3
   assert (out[1]['chunk_first'], out[1]['chunk_last']) == (0, 1)
@@ -115,6 +119,6 @@ def test_spans_seam_and_cost_overrides(spark):
 
 
 def test_single_window_plan(spark):
-  plan = T.pack_interleaved_sequences(spark, SF1)._jdf \
+  plan = _gate_packed(spark)._jdf \
       .queryExecution().executedPlan().toString()
   assert plan.count('Window') == 1, plan

@@ -5,12 +5,14 @@ pin (one window shuffle, partitioned by shard)."""
 from __future__ import annotations
 
 from blueprint_oss_spark.ops.textops import pack_sequences
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.001'
 
 
 def test_matches_sequential_python(spark):
-  out = {r['doc_id']: r for r in pack_sequences(spark, SF).collect()}
+  out = {r['doc_id']: r
+         for r in pack_sequences(documents(spark, SF)).collect()}
   docs = sorted(
       (r['doc_id'], r['text']) for r in
       spark.read.parquet(f'{SF}/documents.parquet').collect())
@@ -37,7 +39,7 @@ def test_matches_sequential_python(spark):
 
 
 def test_plan_one_window_shuffle(spark):
-  plan = pack_sequences(spark, SF)._jdf.queryExecution() \
+  plan = pack_sequences(documents(spark, SF))._jdf.queryExecution() \
       .executedPlan().toString()
   # exactly one hash shuffle: the per-shard window (the trailing
   # orderBy renders as a range Exchange at the sink, which is

@@ -7,6 +7,7 @@ needed, no Python in the plan) and the determinism/rate properties.
 import collections
 
 import pandas as pd
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.01'
 
@@ -57,7 +58,7 @@ def test_table_profile_matches_pandas(spark):
 
 def test_tfidf_no_python_in_plan_and_top1_is_argmax(spark):
   from blueprint_oss_spark.ops.textops import tfidf_top_terms
-  out = tfidf_top_terms(spark, SF)
+  out = tfidf_top_terms(documents(spark, SF))
   plan = out._jdf.queryExecution().executedPlan().toString()
   assert 'Python' not in plan and 'mapInPandas' not in plan
   rows = out.collect()

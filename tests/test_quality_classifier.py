@@ -27,6 +27,7 @@ from blueprint_oss_spark.ops import curation as C
 from blueprint_oss_spark.ops.textops import (
     STOPWORDS_EN, quality_filter, quality_keep_expr,
 )
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -89,7 +90,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql()).df()
-  got = C.quality_classifier(spark, sf).toPandas()
+  got = C.quality_classifier(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'n_scored', 'nb_posterior',
                                'pred']
   assert len(got) == len(oracle)
@@ -101,7 +102,7 @@ def test_pred_agrees_with_weak_labels(spark):
   lab = {r['doc_id']: r['k'] for r in d.select(
       'doc_id', quality_keep_expr(F.col('text')).alias('k')).collect()}
   pred = {r['doc_id']: r['pred']
-          for r in C.quality_classifier(spark, SF1).collect()}
+          for r in C.quality_classifier(documents(spark, SF1)).collect()}
   agree = sum(1 for did, p in pred.items() if p == lab[did])
   assert agree / len(pred) > 0.7, (
       f'classifier failed to fit its own training labels: '
@@ -112,7 +113,7 @@ def test_explicit_labels_seed_set(spark):
   d = spark.read.parquet(f'{SF1}/documents.parquet')
   seed = d.where('doc_id % 2 = 0').select(
       'doc_id', (F.col('doc_id') % 4 == 0).cast('int').alias('label'))
-  out = C.quality_classifier(spark, SF1, labels=seed).toPandas()
+  out = C.quality_classifier(documents(spark, SF1), labels=seed).toPandas()
   # every doc with tokens is scored, trained only on the seed half
   n_docs = d.where(
       "size(filter(split(text, ' '), x -> length(x) > 0)) > 0").count()
@@ -126,7 +127,7 @@ def test_keep_expr_equals_quality_filter(spark):
   d = spark.read.parquet(f'{SF2}/documents.parquet')
   a = d.select('doc_id', quality_keep_expr(F.col('text')).alias('k')) \
       .toPandas().set_index('doc_id')['k'].sort_index()
-  b = quality_filter(spark, SF2).toPandas() \
+  b = quality_filter(documents(spark, SF2)).toPandas() \
       .set_index('doc_id')['keep'].sort_index()
   assert (a == b).all()
 
@@ -135,7 +136,7 @@ def test_plan_no_train_join_one_scoring_shuffle(spark):
   # the returned plan is the SCORING side only (training ran once at
   # model collect time): broadcast model join + per-doc re-agg; the
   # sole hash exchange is the doc_id re-aggregation
-  plan = C.quality_classifier(spark, SF1)._jdf.queryExecution() \
+  plan = C.quality_classifier(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   assert 'SortMergeJoin' not in plan, plan
   assert 'BroadcastHashJoin' in plan, plan

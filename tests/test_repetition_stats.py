@@ -5,6 +5,7 @@ curation operator; definitions follow Rae et al. 2021 table A1 adapted
 to exact integers)."""
 
 from collections import Counter
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _rep_python(doc_id, text):
@@ -30,7 +31,8 @@ def test_repetition_stats_vs_python_sf001(spark):
           for r in spark.read.parquet(
               '/root/testdata/sf0.001/documents.parquet').collect()}
   got = [tuple(r) for r in
-         repetition_stats(spark, '/root/testdata/sf0.001').collect()]
+         repetition_stats(
+             documents(spark, '/root/testdata/sf0.001')).collect()]
   expect = [_rep_python(d, docs[d]) for d in sorted(docs)]
   assert got == expect
   # the stats are non-degenerate on this corpus: verdicts both ways
@@ -51,7 +53,7 @@ def test_repetition_stats_crafted_docs(spark, tmp_path):
   spark.createDataFrame(docs, 'doc_id long, text string') \
       .write.parquet(str(tmp_path / 'documents.parquet'))
   got = [tuple(r) for r in
-         repetition_stats(spark, str(tmp_path)).collect()]
+         repetition_stats(documents(spark, str(tmp_path))).collect()]
   expect = [_rep_python(d, t) for d, t in docs]
   assert got == expect
   by_id = {r[0]: r for r in got}
@@ -62,12 +64,12 @@ def test_repetition_stats_crafted_docs(spark, tmp_path):
 
 
 def test_repetition_stats_docs_seam(spark):
-  """The docs= seam composes with upstream filtering (same contract as
+  """A handed-in docs frame composes with upstream filtering (same contract as
   quality_filter / ngram_jaccard_pairs)."""
   from blueprint_oss_spark.ops.textops import repetition_stats
   d = spark.read.parquet('/root/testdata/sf0.001/documents.parquet') \
       .where('doc_id < 10')
-  out = repetition_stats(spark, '/root/testdata/sf0.001', docs=d).collect()
+  out = repetition_stats(d).collect()
   assert [r['doc_id'] for r in out] == list(range(10))
 
 
@@ -78,7 +80,7 @@ def test_repetition_stats_plan_shape(spark):
   doc_id); no Python in the plan (all built-ins)."""
   import re
   from blueprint_oss_spark.ops.textops import repetition_stats
-  plan = repetition_stats(spark, '/root/testdata/sf0.001') \
+  plan = repetition_stats(documents(spark, '/root/testdata/sf0.001')) \
       ._jdf.queryExecution().executedPlan().toString()
   hashes = re.findall(r'Exchange hashpartitioning\((\w+)#', plan)
   assert hashes and set(hashes) == {'doc_id'}, hashes
@@ -117,6 +119,6 @@ def test_repetition_stats_fuzz_corpus(spark, tmp_path):
       .write.parquet(str(tmp_path / 'documents.parquet'))
   from blueprint_oss_spark.ops.textops import repetition_stats
   got = [tuple(r) for r in
-         repetition_stats(spark, str(tmp_path)).collect()]
+         repetition_stats(documents(spark, str(tmp_path))).collect()]
   expect = [_rep_python(d, t) for d, t in docs]
   assert got == expect

@@ -15,8 +15,18 @@ from blueprint_oss_spark.ops.curation import (_URL_TLDS, _URL_WORDS,
                                               robots_verdicts,
                                               synth_robots_table,
                                               url_curation)
+from blueprint_oss_spark.spark.sources import documents
 
 SF_DIR = '/root/testdata/sf0.001'
+
+
+def _gate_verdicts(spark, **kw):
+  """robots_verdicts over the gate's inputs: the synthesized URL grid
+  and robots.txt table."""
+  urls = url_curation(documents(spark, SF_DIR)) \
+      .select('doc_id', 'norm_url', 'domain')
+  return robots_verdicts(
+      urls, parse_robots(synth_robots_table(spark)), **kw)
 
 
 def _py_rules(s: int):
@@ -50,8 +60,8 @@ def _py_verdict(doc_id: int):
 
 
 def test_matches_python_recomputation(spark):
-  rows = robots_verdicts(spark, SF_DIR).collect()
-  n = spark.read.parquet(f'{SF_DIR}/documents.parquet').count()
+  rows = _gate_verdicts(spark).collect()
+  n = documents(spark, SF_DIR).count()
   assert len(rows) == n
   hit_block = hit_allow_override = 0
   for r in rows:
@@ -79,7 +89,7 @@ def test_parser_sectioning_and_grammar(spark):
   r = spark.createDataFrame([('d.com', txt)],
                             'domain string, robots_txt string')
   got = {(x['agent'], x['directive'], x['value'])
-         for x in parse_robots(spark, robots=r).collect()}
+         for x in parse_robots(r).collect()}
   assert got == {('*', 'Disallow', '/a/'),
                  ('*', 'Crawl-delay', '7'),
                  ('botty', 'Allow', '/a/b'),
@@ -105,17 +115,16 @@ def test_longest_match_and_allow_tie(spark):
        (6, 'https://f.com/w', 'f.com')],    # no rules at all
       'doc_id long, norm_url string, domain string')
   got = {r['doc_id']: (r['robots_blocked'], r['robots_rule'])
-         for r in robots_verdicts(spark, '', urls=urls,
-                                  rules=rules).collect()}
+         for r in robots_verdicts(urls, rules).collect()}
   assert got == {1: (1, '/x/'), 2: (0, '/x/y'), 3: (1, '/t/a'),
                  4: (0, None), 5: (0, '/z/'), 6: (0, None)}
 
 
 def test_badbot_blocked_everywhere(spark):
-  urls = url_curation(spark, SF_DIR) \
+  urls = url_curation(documents(spark, SF_DIR)) \
       .select('doc_id', 'norm_url', 'domain').limit(50)
-  out = robots_verdicts(spark, SF_DIR, agent='badbot',
-                        urls=urls).collect()
+  out = robots_verdicts(urls, parse_robots(synth_robots_table(spark)),
+                        agent='badbot').collect()
   assert len(out) == 50
   assert all(r['robots_blocked'] == 1 and r['robots_rule'] == '/'
              for r in out)
@@ -125,7 +134,7 @@ def test_corpus_side_shuffle_free(spark):
   urls = spark.createDataFrame(
       [(1, 'https://site0.com/news/p0', 'site0.com')],
       'doc_id long, norm_url string, domain string')
-  plan = robots_verdicts(spark, '', urls=urls) \
+  plan = robots_verdicts(urls, parse_robots(synth_robots_table(spark))) \
       ._jdf.queryExecution().executedPlan().toString()
   # the corpus side must not shuffle: rules ride a broadcast join,
   # the only hashpartitioning is the dimension-sized rule aggregation
@@ -142,7 +151,7 @@ def test_synth_covers_grid(spark):
 
 def test_crawl_schedule_matches_python(spark):
   from blueprint_oss_spark.ops.curation import crawl_schedule
-  kept = url_curation(spark, SF_DIR, keep_only=True) \
+  kept = url_curation(documents(spark, SF_DIR), keep_only=True) \
       .select('doc_id', 'domain').collect()
   by_dom = {}
   for r in kept:
@@ -155,7 +164,9 @@ def test_crawl_schedule_matches_python(spark):
       expect[did] = (dom, slot, delay, slot * delay)
   got = {int(r['doc_id']): (r['domain'], r['slot'], r['crawl_delay'],
                             r['fetch_offset_s'])
-         for r in crawl_schedule(spark, SF_DIR).collect()}
+         for r in crawl_schedule(
+             url_curation(documents(spark, SF_DIR), keep_only=True),
+             parse_robots(synth_robots_table(spark))).collect()}
   assert got == expect
   assert len(got) == len(kept)
 
@@ -174,7 +185,7 @@ def test_crawl_schedule_seams_and_malformed_delay(spark):
       'pos int')
   got = {int(r['doc_id']): (r['slot'], r['crawl_delay'],
                             r['fetch_offset_s'])
-         for r in crawl_schedule(spark, '', urls=urls, rules=rules,
+         for r in crawl_schedule(urls, rules,
                                  default_delay=2).collect()}
   assert got == {1: (0, 10, 0), 2: (1, 10, 10), 3: (2, 10, 20),
                  9: (0, 2, 0), 5: (0, 2, 0)}
@@ -190,9 +201,7 @@ def test_empty_disallow_is_allow_all(spark):
       [(1, 'https://d.com/ok', 'd.com'), (2, 'https://d.com/x/q', 'd.com')],
       'doc_id long, norm_url string, domain string')
   got = {r2['doc_id']: r2['robots_blocked']
-         for r2 in robots_verdicts(spark, '', urls=urls,
-                                   rules=parse_robots(spark, robots=r))
-         .collect()}
+         for r2 in robots_verdicts(urls, parse_robots(r)).collect()}
   assert got == {1: 0, 2: 1}
 
 
@@ -200,10 +209,9 @@ def test_agent_fallback_to_star(spark):
   # an agent with no named group anywhere gets the '*' group (RFC
   # 9309 group selection), so verdicts equal the '*' run
   base = {(r['doc_id'], r['robots_blocked'], r['robots_rule'])
-          for r in robots_verdicts(spark, SF_DIR).collect()}
+          for r in _gate_verdicts(spark).collect()}
   other = {(r['doc_id'], r['robots_blocked'], r['robots_rule'])
-           for r in robots_verdicts(spark, SF_DIR,
-                                    agent='somebot').collect()}
+           for r in _gate_verdicts(spark, agent='somebot').collect()}
   assert base == other
 
 
@@ -218,8 +226,7 @@ def test_specific_group_replaces_star_entirely(spark):
   urls = spark.createDataFrame([(1, 'https://d.com/x/q', 'd.com')],
                                'doc_id long, norm_url string, '
                                'domain string')
-  got = robots_verdicts(spark, '', agent='mybot', urls=urls,
-                        rules=rules).collect()
+  got = robots_verdicts(urls, rules, agent='mybot').collect()
   assert got[0]['robots_blocked'] == 0 and got[0]['robots_rule'] is None
 
 
@@ -234,8 +241,7 @@ def test_crawl_schedule_agent_fallback_and_override(spark):
       'domain string, agent string, directive string, value string, '
       'pos int')
   got = {int(r['doc_id']): r['crawl_delay']
-         for r in crawl_schedule(spark, '', agent='mybot', urls=urls,
-                                 rules=rules).collect()}
+         for r in crawl_schedule(urls, rules, agent='mybot').collect()}
   # a.com: no mybot delay -> inherits '*' (conservative politeness);
   # b.com: mybot's own delay wins over '*'
   assert got == {1: 3, 2: 7}
@@ -249,7 +255,7 @@ def test_crawl_schedule_one_corpus_shuffle(spark):
       [('a.com', '*', 'Crawl-delay', '3', 1)],
       'domain string, agent string, directive string, value string, '
       'pos int')
-  plan = crawl_schedule(spark, '', urls=urls, rules=rules) \
+  plan = crawl_schedule(urls, rules) \
       ._jdf.queryExecution().executedPlan().toString()
   # the url side pays exactly the one window shuffle on domain; the
   # delay dimension rides a broadcast join

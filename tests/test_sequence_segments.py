@@ -17,6 +17,7 @@ from blueprint_oss_spark.ops.textops import (
     pack_sequences,
     sequence_segments,
 )
+from blueprint_oss_spark.spark.sources import documents
 
 SF_DIR = '/root/testdata/sf0.001'
 MAX_TOKENS = 256
@@ -47,7 +48,7 @@ def _expected():
 
 def test_full_python_recomputation(spark):
   exp = _expected()
-  rows = sequence_segments(spark, SF_DIR).collect()
+  rows = sequence_segments(pack_sequences(documents(spark, SF_DIR))).collect()
   assert len(rows) == len(exp)
   for r in rows:
     want = exp[(r['shard'], r['chunk'])]
@@ -59,7 +60,7 @@ def test_full_python_recomputation(spark):
 
 
 def test_tiling_invariants(spark):
-  rows = sequence_segments(spark, SF_DIR).collect()
+  rows = sequence_segments(pack_sequences(documents(spark, SF_DIR))).collect()
   last_chunk = {}
   for r in rows:
     last_chunk[r['shard']] = max(last_chunk.get(r['shard'], -1),
@@ -79,10 +80,10 @@ def test_tiling_invariants(spark):
 
 
 def test_document_reconstruction(spark):
-  packed = {r['doc_id']: r for r in
-            pack_sequences(spark, SF_DIR).collect()}
+  frame = pack_sequences(documents(spark, SF_DIR))
+  packed = {r['doc_id']: r for r in frame.collect()}
   by_doc = {}
-  for r in sequence_segments(spark, SF_DIR).collect():
+  for r in sequence_segments(frame).collect():
     for s in r['segments']:
       by_doc.setdefault(s['doc_id'], []).append(
           (r['chunk'], s['doc_offset'], s['seg_len']))
@@ -102,13 +103,13 @@ def test_document_reconstruction(spark):
 
 
 def test_packed_seam_and_plan(spark):
-  # the packed= seam accepts a precomputed frame and yields the same
-  # result as the self-computing path
-  p = pack_sequences(spark, SF_DIR)
-  a = sequence_segments(spark, SF_DIR, packed=p).collect()
-  b = sequence_segments(spark, SF_DIR).collect()
+  # a materialized packed frame yields the same result as the lazy
+  # composition
+  p = pack_sequences(documents(spark, SF_DIR))
+  a = sequence_segments(p.localCheckpoint()).collect()
+  b = sequence_segments(p).collect()
   assert a == b
-  plan = sequence_segments(spark, SF_DIR) \
+  plan = sequence_segments(p) \
       ._jdf.queryExecution().executedPlan().toString()
   assert 'BatchEvalPython' not in plan and 'ArrowEval' not in plan
   assert plan.count('Window') == 1

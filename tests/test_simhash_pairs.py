@@ -5,6 +5,7 @@ recall 1.0 vs a brute-force pandas recomputation from the signatures.
 """
 
 import re
+from blueprint_oss_spark.spark.sources import documents
 
 SF = '/root/testdata/sf0.01'
 
@@ -13,7 +14,7 @@ def test_simhash_pairs_match_bruteforce(spark):
   from blueprint_oss_spark.ops.textops import (
       simhash64, simhash_near_dup_pairs)
   sigs = {r['doc_id']: r['simhash']
-          for r in simhash64(spark, SF).collect()}
+          for r in simhash64(documents(spark, SF)).collect()}
   ids = sorted(sigs)
   expect = []
   for i, a in enumerate(ids):
@@ -22,7 +23,7 @@ def test_simhash_pairs_match_bruteforce(spark):
       if h <= 3:
         expect.append((a, b, h))
   got = [(r['doc_a'], r['doc_b'], r['hamming'])
-         for r in simhash_near_dup_pairs(spark, SF).collect()]
+         for r in simhash_near_dup_pairs(documents(spark, SF)).collect()]
   # recall 1.0 AND no false positives: banding is a pure blocking
   # step, the exact hamming filter decides membership
   assert got == sorted(expect), (got[:5], sorted(expect)[:5])
@@ -31,7 +32,7 @@ def test_simhash_pairs_match_bruteforce(spark):
 
 def test_simhash_pairs_plan_shape(spark):
   from blueprint_oss_spark.ops.textops import simhash_near_dup_pairs
-  plan = simhash_near_dup_pairs(spark, SF) \
+  plan = simhash_near_dup_pairs(documents(spark, SF)) \
       ._jdf.queryExecution().executedPlan().toString()
   assert 'Python' not in plan
   # the signature pass is map-side: nothing shuffles on doc_id (no
@@ -56,15 +57,15 @@ def test_simhash_pairs_wide_keys_match_bruteforce(spark):
   from blueprint_oss_spark.ops.textops import (
       simhash64, simhash_near_dup_pairs)
   sigs = {r['doc_id']: r['simhash']
-          for r in simhash64(spark, SF).collect()}
+          for r in simhash64(documents(spark, SF)).collect()}
   ids = sorted(sigs)
   expect = sorted(
       (a, b, bin((sigs[a] ^ sigs[b]) & 0xFFFFFFFFFFFFFFFF).count('1'))
       for i, a in enumerate(ids) for b in ids[i + 1:]
       if bin((sigs[a] ^ sigs[b]) & 0xFFFFFFFFFFFFFFFF).count('1') <= 3)
   got = [(r['doc_a'], r['doc_b'], r['hamming'])
-         for r in simhash_near_dup_pairs(
-             spark, SF, bands=8, key_blocks=5).collect()]
+         for r in simhash_near_dup_pairs(documents(spark, SF), bands=8,
+                                         key_blocks=5).collect()]
   assert got == expect
   assert len(got) > 0
 
@@ -81,7 +82,7 @@ def test_simhash_wide_keys_shrink_candidate_fanout(spark):
 
   from blueprint_oss_spark.ops.textops import simhash64
   sigs = {r['doc_id']: r['simhash']
-          for r in simhash64(spark, SF).collect()}
+          for r in simhash64(documents(spark, SF)).collect()}
 
   def candidates(bands, key_blocks):
     width = 64 // bands
@@ -115,6 +116,7 @@ def test_simhash_wide_keys_reject_recall_violation(spark):
   from blueprint_oss_spark.ops.textops import simhash_near_dup_pairs
   for bands, kb in ((4, 2), (8, 6), (4, 0)):
     with pytest.raises(ValueError):
-      simhash_near_dup_pairs(spark, SF, bands=bands, key_blocks=kb)
+      simhash_near_dup_pairs(documents(spark, SF), bands=bands, key_blocks=kb)
   with pytest.raises(ValueError):
-    simhash_near_dup_pairs(spark, SF, bands=5)  # 5 does not divide 64
+    simhash_near_dup_pairs(documents(spark, SF),
+                           bands=5)  # 5 does not divide 64

@@ -6,6 +6,8 @@ and every gate entry keeps the sorted default)."""
 
 from pyspark.sql import functions as F
 
+from blueprint_oss_spark.spark.sources import documents
+
 SF1 = '/root/testdata/sf0.001'
 
 
@@ -20,8 +22,9 @@ def test_sorted_and_unsorted_values_identical(spark):
   )
   for op in (remove_duplicated_spans, dedup_groups,
              ngram_jaccard_pairs, simhash_near_dup_pairs):
-    a = sorted(tuple(r) for r in op(spark, SF1).collect())
-    b = sorted(tuple(r) for r in op(spark, SF1, sort=False).collect())
+    docs = documents(spark, SF1)
+    a = sorted(tuple(r) for r in op(docs).collect())
+    b = sorted(tuple(r) for r in op(docs, sort=False).collect())
     assert a == b, op.__name__
 
 
@@ -35,18 +38,23 @@ def test_no_range_exchange_with_sort_false(spark):
   )
   for op in (remove_duplicated_spans, minhash_shingles,
              simhash_near_dup_pairs, bloom_decontaminate):
-    plan = _plan(op(spark, SF1, sort=False))
+    plan = _plan(op(documents(spark, SF1), sort=False))
     assert 'rangepartitioning' not in plan.lower(), op.__name__
-    sorted_plan = _plan(op(spark, SF1))
+    sorted_plan = _plan(op(documents(spark, SF1)))
     assert 'rangepartitioning' in sorted_plan.lower(), op.__name__
   # window operators legitimately sort WITHIN hash partitions; only
   # the global range exchange must disappear
   for op in (pack_sequences, url_curation):
-    plan = _plan(op(spark, SF1, sort=False))
+    plan = _plan(op(documents(spark, SF1), sort=False))
     assert 'rangepartitioning' not in plan.lower(), op.__name__
 
 
 def test_decision_report_sort_false(spark):
   from blueprint_oss_spark.ops.textops import dedup_decision_report
-  plan = _plan(dedup_decision_report(spark, SF1, sort=False))
+  from blueprint_oss_spark.ops.vectors import semantic_dedup
+  plan = _plan(dedup_decision_report(
+      documents(spark, SF1),
+      semantic_dedup(spark, SF1, plant_for_verification=True,
+                     sort=False),
+      sort=False))
   assert 'rangepartitioning' not in plan.lower()

@@ -290,7 +290,7 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path,
   for inc in (inc1, inc2):
     b = spark.createDataFrame(inc, 'doc_id long, text string')
     exp = {r['doc_id']: r for r in incremental_dedup(
-        spark, '', batch=b, corpus=corpus, threshold=0.3).collect()}
+        b, corpus, threshold=0.3).collect()}
     for doc_id, _ in inc:
       got, want = by_id[doc_id], exp[doc_id]
       assert (got['verdict'], got['match_id'], got['jac_r']) == \

@@ -5,6 +5,7 @@ and the plan shape (no Python, map-side partial aggregation)."""
 import random
 
 import pytest
+from blueprint_oss_spark.spark.sources import documents
 
 
 def _ref_remove(docs, n=10, min_count=2, min_run_tokens=None):
@@ -49,7 +50,8 @@ def _run(spark, tmp_path, docs, **kw):
       .write.mode('overwrite') \
       .parquet(str(tmp_path / 'documents.parquet'))
   return [tuple(r) for r in
-          remove_duplicated_spans(spark, str(tmp_path), **kw).collect()]
+          remove_duplicated_spans(documents(spark, str(tmp_path)),
+                                  **kw).collect()]
 
 
 def test_planted_cross_doc_span(spark, tmp_path):
@@ -152,14 +154,14 @@ def test_sf0001_oracle_equiv(spark):
       "'/root/testdata/sf0.001/documents.parquet'").fetchall()
   exp = _ref_remove(rows)
   got = [tuple(r) for r in
-         remove_duplicated_spans(spark, '/root/testdata/sf0.001')
+         remove_duplicated_spans(documents(spark, '/root/testdata/sf0.001'))
          .collect()]
   assert got == exp
 
 
 def test_plan_shape(spark):
   from blueprint_oss_spark.ops.textops import remove_duplicated_spans
-  plan = remove_duplicated_spans(spark, '/root/testdata/sf0.001') \
+  plan = remove_duplicated_spans(documents(spark, '/root/testdata/sf0.001')) \
       ._jdf.queryExecution().executedPlan().toString()
   assert 'Python' not in plan           # all JVM built-ins
   assert 'CartesianProduct' not in plan

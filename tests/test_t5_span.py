@@ -2,7 +2,7 @@
 md5 start-rank, run-merge and sentinel-numbering window arithmetic,
 full input/target strings) at two scales; reconstruction property
 (input with sentinels expanded by target == original text); masking
-accounting; single-exchange plan; docs= seam determinism.
+accounting; single-exchange plan; handed-in frame determinism.
 """
 
 from __future__ import annotations
@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -71,7 +72,8 @@ FROM pieces GROUP BY doc_id ORDER BY doc_id
 
 @pytest.mark.parametrize('sf', [SF1, SF2])
 def test_matches_duckdb_from_scratch(spark, sf):
-  got = [tuple(r) for r in T.t5_span_corruption(spark, sf).collect()]
+  got = [tuple(r)
+         for r in T.t5_span_corruption(documents(spark, sf)).collect()]
   exp = duckdb.sql(_ORACLE.format(sf=sf)).fetchall()
   assert got == exp
 
@@ -81,7 +83,7 @@ def test_reconstruction_property(spark):
   original token sequence exactly — the denoising objective's
   lossless-split contract."""
   import re
-  rows = T.t5_span_corruption(spark, SF1).collect()
+  rows = T.t5_span_corruption(documents(spark, SF1)).collect()
   texts = {r['doc_id']: r['text'] for r in
            spark.read.parquet(f'{SF1}/documents.parquet')
            .select('doc_id', 'text').collect()}
@@ -105,7 +107,7 @@ def test_reconstruction_property(spark):
 
 
 def test_masking_accounting(spark):
-  rows = T.t5_span_corruption(spark, SF1).collect()
+  rows = T.t5_span_corruption(documents(spark, SF1)).collect()
   assert len(rows) == 500
   for r in rows:
     n, m, runs = r['n_tokens'], r['n_masked'], r['n_runs']
@@ -118,12 +120,12 @@ def test_masking_accounting(spark):
 
 def test_plan_single_exchange_and_seam(spark):
   d = spark.read.parquet(f'{SF1}/documents.parquet').repartition(7)
-  out = T.t5_span_corruption(spark, SF1, docs=d)
+  out = T.t5_span_corruption(d)
   base = {r['doc_id']: r['input_text'] for r in
-          T.t5_span_corruption(spark, SF1).collect()}
+          T.t5_span_corruption(documents(spark, SF1)).collect()}
   got = {r['doc_id']: r['input_text'] for r in out.collect()}
   assert got == base  # partitioning-independent
-  plan = T.t5_span_corruption(spark, SF1)._jdf.queryExecution() \
+  plan = T.t5_span_corruption(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   # token rows cross the wire once: every window and the final
   # assembly share the doc_id partitioning

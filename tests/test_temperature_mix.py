@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import curation as C
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -61,7 +62,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql()).df()
-  got = C.temperature_mix(spark, sf).toPandas()
+  got = C.temperature_mix(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'source', 'n_tokens',
                                'src_tokens', 'src_budget', 'mix_keep']
   assert len(got) == len(oracle)
@@ -69,7 +70,7 @@ def test_matches_duckdb_oracle(spark, sf):
 
 
 def test_greedy_prefix_property(spark):
-  out = C.temperature_mix(spark, SF1).toPandas()
+  out = C.temperature_mix(documents(spark, SF1)).toPandas()
   for src, grp in out.groupby('source'):
     budget = grp['src_budget'].iloc[0]
     # recompute the prefix sequentially in stable order
@@ -94,14 +95,14 @@ def test_temperature_flattens_skewed_sources(spark):
           + [(1000 + i, 'B', 'tok ' * 50) for i in range(4)])
   docs = spark.createDataFrame(rows, 'doc_id long, source string, '
                                'text string')
-  b1 = C.temperature_mix(spark, SF1, docs=docs, temperature=1,
-                         cap_tokens=10**9, total_budget_tokens=1000) \
+  b1 = C.temperature_mix(docs, temperature=1, cap_tokens=10**9,
+                         total_budget_tokens=1000) \
       .where("source = 'B'").select('src_budget').first()['src_budget']
-  b2 = C.temperature_mix(spark, SF1, docs=docs, temperature=2,
-                         cap_tokens=10**9, total_budget_tokens=1000) \
+  b2 = C.temperature_mix(docs, temperature=2, cap_tokens=10**9,
+                         total_budget_tokens=1000) \
       .where("source = 'B'").select('src_budget').first()['src_budget']
-  b4 = C.temperature_mix(spark, SF1, docs=docs, temperature=4,
-                         cap_tokens=10**9, total_budget_tokens=1000) \
+  b4 = C.temperature_mix(docs, temperature=4, cap_tokens=10**9,
+                         total_budget_tokens=1000) \
       .where("source = 'B'").select('src_budget').first()['src_budget']
   assert b1 < b2 < b4, (b1, b2, b4)
 
@@ -113,8 +114,7 @@ def test_cap_limits_giant_sources(spark):
           + [(2000 + i, 'B', 'tok ' * 50) for i in range(400)])
   docs = spark.createDataFrame(rows, 'doc_id long, source string, '
                                'text string')
-  out = C.temperature_mix(spark, SF1, docs=docs, temperature=2,
-                          cap_tokens=100,
+  out = C.temperature_mix(docs, temperature=2, cap_tokens=100,
                           total_budget_tokens=900).toPandas()
   budgets = out.groupby('source')['src_budget'].first()
   assert budgets['A'] == budgets['C'] == budgets['B']
@@ -122,10 +122,10 @@ def test_cap_limits_giant_sources(spark):
 
 def test_invalid_temperature_raises(spark):
   with pytest.raises(ValueError):
-    C.temperature_mix(spark, SF1, temperature=3)
+    C.temperature_mix(documents(spark, SF1), temperature=3)
 
 
 def test_plan_window_only_on_crossing_bucket(spark):
-  plan = C.temperature_mix(spark, SF1)._jdf.queryExecution() \
+  plan = C.temperature_mix(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   assert plan.count('Window') == 1, plan

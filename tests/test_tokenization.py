@@ -21,6 +21,7 @@ from blueprint_oss_spark.ops.common import (
     normalized_words, py_normalized_words, py_word_ngrams, py_words,
     word_ngrams, words,
 )
+from blueprint_oss_spark.spark.sources import documents
 
 SPACES = [' ', '\t', '\n', '\x0b', '\x0c', '\r', '\x85', '\xa0',
           '\u1680', *map(chr, range(0x2000, 0x200b)), '\u2028',
@@ -84,7 +85,7 @@ def test_minhash_signature_projection_splits_text_once(spark):
   # interpreted lambdas get no CSE: an inline window over words(text)
   # re-split the text once per window, which shows as several split(
   # in the projection that builds the shingle array `sh`
-  plan = T.minhash_shingles(spark, '/root/testdata/sf0.001') \
+  plan = T.minhash_shingles(documents(spark, '/root/testdata/sf0.001')) \
       ._jdf.queryExecution().optimizedPlan().toString()
   proj = [line for line in plan.split('\n')
           if 'Project' in line and ' AS sh#' in line]
@@ -100,5 +101,5 @@ def test_ngram_jaccard_pairs_tolerates_short_documents(spark):
        (5, 'p q r s t u'), (6, 'p q r s t u')],
       'doc_id long, text string')
   got = [tuple(r) for r in
-         T.ngram_jaccard_pairs(spark, '', docs=docs, shingle=3).collect()]
+         T.ngram_jaccard_pairs(docs, shingle=3).collect()]
   assert got == [(5, 6, 4, 4, 4)]

@@ -23,6 +23,7 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 from blueprint_oss_spark.ops.multimodal import tokenize_interleaved
 from blueprint_oss_spark.ops.textops import bpe_encode, bpe_train
 from blueprint_oss_spark.spark.pipeline import OUT_SPAN_STRUCT
+from blueprint_oss_spark.spark.sources import documents
 
 SF_DIR = '/root/testdata/sf0.001'
 SENT = '<|image|>'
@@ -95,20 +96,21 @@ def test_special_token_excluded_from_training(spark, tmp_path):
   texts = [f'{SENT} low {SENT}'] * 6 + ['lower'] * 2
   sf = _write_docs(spark, tmp_path, texts)
   got = [tuple(r) for r in
-         bpe_train(spark, sf, n_merges=4,
+         bpe_train(documents(spark, sf), n_merges=4,
                    special_tokens=(SENT,)).collect()]
   assert got == _ref_bpe(texts, 4, special=(SENT,))
   for _, left, right, merged, _ in got:
     assert '<' not in merged and '|' not in merged
   # control: unrestricted training DOES learn sentinel-internal merges
-  free = [tuple(r) for r in bpe_train(spark, sf, n_merges=4).collect()]
+  free = [tuple(r) for r in bpe_train(documents(spark, sf),
+                                      n_merges=4).collect()]
   assert any('<' in m or '|' in m for _, _, _, m, _ in free)
 
 
 def test_special_token_atomic_in_encode(spark, tmp_path):
   texts = [f'{SENT} newest {SENT} widest', f'newest {SENT}']
   sf = _write_docs(spark, tmp_path, texts)
-  enc = bpe_encode(spark, sf, n_merges=3, return_tokens=True,
+  enc = bpe_encode(documents(spark, sf), n_merges=3, return_tokens=True,
                    special_tokens=(SENT,)).orderBy('doc_id').collect()
   merges = _ref_bpe(texts, 3, special=(SENT,))
   for row, text in zip(enc, texts):
@@ -202,7 +204,7 @@ def test_pretrained_merges_seam(spark, tmp_path):
   # merges trained elsewhere apply unchanged through the seam
   texts = ['aaa bbb', f'aaa {SENT}']
   sf = _write_docs(spark, tmp_path, texts)
-  merges = bpe_train(spark, sf, n_merges=2, special_tokens=(SENT,))
+  merges = bpe_train(documents(spark, sf), n_merges=2, special_tokens=(SENT,))
   content = spark.createDataFrame(
       [('0', [{'kind': 'text', 'text': 'aaa bbb', 'media_ref': None,
                'order': 0},

@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 
@@ -57,7 +58,7 @@ def _python_fertility(sf_dir, n_merges=24):
 
 def test_matches_full_python_recomputation(spark):
   exp = _python_fertility(SF1)
-  got = T.tokenizer_fertility(spark, SF1).toPandas()
+  got = T.tokenizer_fertility(documents(spark, SF1)).toPandas()
   assert set(got.lang) == set(exp)
   for r in got.itertuples():
     assert [r.n_docs, r.n_words, r.n_tokens, r.n_chars, r.n_bytes] \
@@ -71,7 +72,7 @@ def test_tokenless_docs_still_counted(spark):
   docs = spark.createDataFrame(
       [(1, 'scan merge join', 'xx'), (2, '   ', 'xx'), (3, '', 'yy')],
       'doc_id long, text string, lang string')
-  got = (T.tokenizer_fertility(spark, SF1, docs=docs)
+  got = (T.tokenizer_fertility(docs)
          .orderBy('lang').toPandas())
   xx = got[got.lang == 'xx'].iloc[0]
   assert xx.n_docs == 2 and xx.n_words == 3 and xx.n_chars == 18
@@ -80,7 +81,7 @@ def test_tokenless_docs_still_counted(spark):
 
 
 def test_conserves_corpus_totals(spark):
-  fert = T.tokenizer_fertility(spark, SF1).toPandas()
-  enc = T.bpe_encode(spark, SF1).toPandas()
+  fert = T.tokenizer_fertility(documents(spark, SF1)).toPandas()
+  enc = T.bpe_encode(documents(spark, SF1)).toPandas()
   assert fert.n_words.sum() == enc.n_words.sum()
   assert fert.n_tokens.sum() == enc.n_tokens.sum()

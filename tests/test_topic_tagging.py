@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import textops as T
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -52,7 +53,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(ORACLE).df()
-  got = T.topic_tagging(spark, sf).toPandas()
+  got = T.topic_tagging(documents(spark, sf)).toPandas()
   assert list(got.columns) == list(oracle.columns)
   for c in got.columns:
     oracle[c] = oracle[c].astype(got[c].dtype)
@@ -68,14 +69,14 @@ def test_tie_break_and_none(spark):
        (3, 'spark spark table')], # infra=2 > db=1
       'doc_id long, text string')
   out = {r['doc_id']: r for r in
-         T.topic_tagging(spark, '', docs=docs).collect()}
+         T.topic_tagging(docs).collect()}
   assert out[1]['topic'] == 'db'
   assert out[2]['topic'] == 'none' and out[2]['n_topic_hits'] == 0
   assert out[3]['topic'] == 'infra' and out[3]['n_topic_hits'] == 2
 
 
 def test_zero_shuffle_zero_python_plan(spark):
-  df = T.topic_tagging(spark, SF1)
+  df = T.topic_tagging(documents(spark, SF1))
   plan = df._jdf.queryExecution().explainString(
       spark._jvm.org.apache.spark.sql.execution.ExplainMode
       .fromString('simple'))

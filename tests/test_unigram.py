@@ -12,6 +12,7 @@ from fractions import Fraction
 import pytest
 
 from blueprint_oss_spark.ops import unigram as U
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 
@@ -125,7 +126,7 @@ def _replica_viterbi(word, vocab, total, mpl):
 
 @pytest.fixture(scope='module')
 def trained(spark):
-  v = U.unigram_train(spark, SF1, **KW)
+  v = U.unigram_train(documents(spark, SF1), **KW)
   rows = v.orderBy('rank').collect()
   return v, rows
 
@@ -164,7 +165,7 @@ def test_total_is_sum_of_counts(spark, trained):
 def test_train_repartition_invariant(spark, trained):
   _, rows = trained
   docs = spark.read.parquet(f'{SF1}/documents.parquet').repartition(13)
-  v2 = U.unigram_train(spark, SF1, docs=docs, **KW).orderBy('rank')
+  v2 = U.unigram_train(docs, **KW).orderBy('rank')
   got = [tuple(r) for r in v2.collect()]
   assert got == [tuple(r) for r in rows]
 
@@ -235,7 +236,7 @@ def test_encode_totals_match_replica(spark, trained):
     nt = sum(len(U.viterbi_segment(w, vocab, total, mpl)) for w in ws)
     exp[did] = (len(ws), nt)
   got = {r['doc_id']: (r['n_words'], r['n_tokens'])
-         for r in U.unigram_encode(spark, SF1, vocab=v).collect()}
+         for r in U.unigram_encode(documents(spark, SF1), vocab=v).collect()}
   assert got == exp
 
 
@@ -248,13 +249,13 @@ def test_special_tokens_atomic(spark):
   rows = [(0, f'hello world {sent} hello again'),
           (1, f'{sent} {sent} world world world')]
   d = spark.createDataFrame(rows, 'doc_id long, text string')
-  v = U.unigram_train(spark, SF1, docs=d, special_tokens=(sent,),
-                      vocab_size=20, seed_size=30, n_em=1)
+  v = U.unigram_train(d, special_tokens=(sent,), vocab_size=20, seed_size=30,
+                      n_em=1)
   pieces = {r['piece'] for r in v.collect()}
   assert sent not in pieces
   assert '<' not in pieces and '|' not in pieces  # chars never counted
-  enc = U.unigram_encode(spark, SF1, docs=d, vocab=v,
-                         special_tokens=(sent,), return_tokens=True)
+  enc = U.unigram_encode(d, vocab=v, special_tokens=(sent,),
+                         return_tokens=True)
   toks = {r['doc_id']: r['tokens'] for r in enc.collect()}
   assert toks[0].count(sent) == 1
   assert toks[1].count(sent) == 2
@@ -263,7 +264,7 @@ def test_special_tokens_atomic(spark):
 
 def test_encode_tokens_reconstruct_corpus(spark, trained):
   v, _ = trained
-  enc = U.unigram_encode(spark, SF1, vocab=v, return_tokens=True)
+  enc = U.unigram_encode(documents(spark, SF1), vocab=v, return_tokens=True)
   sample = {r['doc_id']: r['tokens']
             for r in enc.orderBy('doc_id').limit(20).collect()}
   import pyarrow.parquet as pq
@@ -291,8 +292,7 @@ def test_unseen_char_word_encodes_to_unk(spark, trained):
   known = next(p for p in vocab if len(p) == 1)
   docs = spark.createDataFrame(
       [(0, f'{known} straße')], 'doc_id long, text string')
-  out = U.unigram_encode(spark, SF1, vocab=v, docs=docs,
-                         return_tokens=True).collect()
+  out = U.unigram_encode(docs, vocab=v, return_tokens=True).collect()
   [r] = out
   assert '<unk>' in r['tokens']
   assert r['n_tokens'] == len(r['tokens']) >= 2

@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops import curation as C
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
@@ -86,7 +87,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(_oracle_sql()).df()
-  got = C.unimax_mix(spark, sf).toPandas()
+  got = C.unimax_mix(documents(spark, sf)).toPandas()
   assert list(got.columns) == ['doc_id', 'source', 'n_tokens',
                                'src_tokens', 'src_budget', 'mix_keep']
   assert len(got) == len(oracle)
@@ -94,7 +95,7 @@ def test_matches_duckdb_oracle(spark, sf):
 
 
 def test_budgets_match_python_walk(spark):
-  out = C.unimax_mix(spark, SF2).toPandas()
+  out = C.unimax_mix(documents(spark, SF2)).toPandas()
   totals = out.groupby('source')['src_tokens'].first().to_dict()
   exp = _py_budgets(totals, 1, 24000)
   got = out.groupby('source')['src_budget'].first().to_dict()
@@ -117,8 +118,7 @@ def test_cap_redistributes_to_large_sources(spark):
           + [(2000, 'tiny', 'tok ' * 10)])
   docs = spark.createDataFrame(rows, 'doc_id long, source string, '
                                'text string')
-  out = C.unimax_mix(spark, SF1, docs=docs, epoch_cap=1,
-                     total_budget_tokens=3000).toPandas()
+  out = C.unimax_mix(docs, epoch_cap=1, total_budget_tokens=3000).toPandas()
   budgets = out.groupby('source')['src_budget'].first()
   assert budgets['tiny'] == 10            # capped at 1 epoch
   assert budgets['big_a'] == budgets['big_b'] == (3000 - 10) // 2
@@ -130,7 +130,7 @@ def test_epoch_cap_scales_tiny_allocation(spark):
   docs = spark.createDataFrame(rows, 'doc_id long, source string, '
                                'text string')
   for cap in (1, 2, 4):
-    out = C.unimax_mix(spark, SF1, docs=docs, epoch_cap=cap,
+    out = C.unimax_mix(docs, epoch_cap=cap,
                        total_budget_tokens=2000).toPandas()
     budgets = out.groupby('source')['src_budget'].first()
     assert budgets['tiny'] == 10 * cap
@@ -138,7 +138,7 @@ def test_epoch_cap_scales_tiny_allocation(spark):
 
 
 def test_greedy_prefix_property(spark):
-  out = C.unimax_mix(spark, SF1).toPandas()
+  out = C.unimax_mix(documents(spark, SF1)).toPandas()
   for src, grp in out.groupby('source'):
     budget = grp['src_budget'].iloc[0]
     g = grp.copy()
@@ -153,15 +153,15 @@ def test_greedy_prefix_property(spark):
 
 
 def test_stable_under_repartition(spark):
-  base = C.unimax_mix(spark, SF1).toPandas()
+  base = C.unimax_mix(documents(spark, SF1)).toPandas()
   docs = spark.read.parquet(f'{SF1}/documents.parquet') \
       .repartition(13, 'doc_id')
-  re = C.unimax_mix(spark, SF1, docs=docs).toPandas() \
+  re = C.unimax_mix(docs).toPandas() \
       .sort_values('doc_id').reset_index(drop=True)
   assert re.equals(base.sort_values('doc_id').reset_index(drop=True))
 
 
 def test_plan_window_only_on_crossing_bucket(spark):
-  plan = C.unimax_mix(spark, SF1)._jdf.queryExecution() \
+  plan = C.unimax_mix(documents(spark, SF1))._jdf.queryExecution() \
       .executedPlan().toString()
   assert plan.count('Window') == 1, plan

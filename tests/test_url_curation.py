@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blueprint_oss_spark.ops.curation import url_curation
+from blueprint_oss_spark.spark.sources import documents
 
 # sf0.01 (500 docs, the driver's gate scale): the smallest scale at
 # which every rule fires — at sf0.001's 60 docs no domain accumulates
@@ -100,7 +101,7 @@ def _python_verdicts(doc_ids):
 
 @pytest.fixture(scope='module')
 def result(spark):
-  return [r.asDict() for r in url_curation(spark, SF_DIR).collect()]
+  return [r.asDict() for r in url_curation(documents(spark, SF_DIR)).collect()]
 
 
 def test_matches_pure_python_recomputation(spark, result):
@@ -140,7 +141,7 @@ def test_keep_only_window_group_limit_path(spark, result):
   each map task pre-prunes to the group limit before the shuffle — and
   (b) it returns exactly the kept==1 docs of the full verdict surface
   (legal because block verdicts are constant within a norm_url group)."""
-  fast = url_curation(spark, SF_DIR, keep_only=True)
+  fast = url_curation(documents(spark, SF_DIR), keep_only=True)
   plan = fast._jdf.queryExecution().executedPlan().toString()
   wgl = [ln for ln in plan.splitlines() if 'WindowGroupLimit' in ln]
   assert sum('Partial' in ln for ln in wgl) == 2, plan
@@ -160,7 +161,7 @@ def test_docs_seam_real_url_column(spark):
        (4, 'https://site13.org/news/p1')],
       'doc_id long, url string')
   rows = {r['doc_id']: r.asDict()
-          for r in url_curation(spark, SF_DIR, docs=d).collect()}
+          for r in url_curation(d).collect()}
   # 1 and 2 normalize to the same canonical url; 1 wins the dedup
   assert rows[1]['norm_url'] == rows[2]['norm_url'] \
       == 'https://example.com/a/p1?q=2'
@@ -184,13 +185,12 @@ def test_opt_out_domains_seam(spark):
   docs = spark.createDataFrame(rows, 'doc_id long, url string')
   opt = spark.createDataFrame([('optout.org',)], 'domain string')
   out = {r['doc_id']: r for r in
-         url_curation(spark, '', docs=docs,
-                      opt_out_domains=opt).collect()}
+         url_curation(docs, opt_out_domains=opt).collect()}
   assert out[2]['blocked_domain'] == 1 and out[2]['kept'] == 0
   assert out[3]['blocked_domain'] == 1 and out[3]['kept'] == 0
   assert out[1]['blocked_domain'] == 0 and out[1]['kept'] == 1
   assert out[4]['blocked_domain'] == 0 and out[4]['kept'] == 1
   # without the seam the same frame passes
   base = {r['doc_id']: r for r in
-          url_curation(spark, '', docs=docs).collect()}
+          url_curation(docs).collect()}
   assert base[2]['kept'] == 1

@@ -9,9 +9,14 @@ import duckdb
 import pytest
 
 from blueprint_oss_spark.ops import warc as W
+from blueprint_oss_spark.spark.sources import documents
 
 SF1 = '/root/testdata/sf0.001'
 SF2 = '/root/testdata/sf0.01'
+
+
+def _records(spark, sf):
+  return W.parse_warc_records(W.synth_warc_records(documents(spark, sf)))
 
 ORACLE = r"""
 WITH w AS (
@@ -87,7 +92,7 @@ def test_matches_duckdb_oracle(spark, sf):
   con.execute(f"CREATE VIEW documents AS SELECT * FROM "
               f"read_parquet('{sf}/documents.parquet')")
   oracle = con.execute(ORACLE).df()
-  got = W.parse_warc_records(spark, sf).toPandas()
+  got = _records(spark, sf).toPandas()
   assert list(got.columns) == list(oracle.columns)
   for c in got.columns:
     a = got[c].reset_index(drop=True)
@@ -97,7 +102,7 @@ def test_matches_duckdb_oracle(spark, sf):
 
 
 def test_parse_semantics(spark):
-  got = W.parse_warc_records(spark, SF1).toPandas()
+  got = _records(spark, SF1).toPandas()
   ok = got[(got.doc_id % 29 != 0) & (got.doc_id % 37 != 0)]
   # clean 200s: declared length matches, main_text recovers the
   # original text (whitespace-normalized == original: no extra ws)
@@ -122,7 +127,7 @@ def test_parse_semantics(spark):
 
 
 def test_zero_shuffle_zero_python_plan(spark):
-  df = W.parse_warc_records(spark, SF1)
+  df = _records(spark, SF1)
   plan = df._jdf.queryExecution().explainString(
       spark._jvm.org.apache.spark.sql.execution.ExplainMode
       .fromString('simple'))
